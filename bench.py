@@ -35,9 +35,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.tracer import Tracer  # noqa: E402
 from sqlondataframesr_spark import registry  # noqa: E402
 from sqlondataframesr_spark.materialize import release_all  # noqa: E402
-from sqlondataframesr_spark.session import get_spark  # noqa: E402
+from sqlondataframesr_spark.session import PROFILES, get_spark  # noqa: E402
 
 #: reference protocol is microbenchmark(times=5); the headline six are
 #: sub-second, so host jitter moves a 5-run median by +-15% between
@@ -59,60 +60,93 @@ EXT_HEAVY_RUNS = 7
 EXT_HEAVY_CUTOFF_S = 1.2
 
 
-def _stage_shuffle_stats(spark, floor_id: int) -> tuple[int, int, int, int]:
-    """(max_stage_id, shuffle_read_bytes, shuffle_write_bytes,
-    executor_cpu_ns) summed over completed stages with stageId >
-    floor_id, via the JVM AppStatusStore (the UI's own data — no
-    listener, no REST server).
+def time_runs(fn, n: int) -> list[float]:
+    """Wall seconds of ``n`` calls of ``fn``, the bench's one timing loop.
 
-    executorCpuTime (VERDICT r11 item 3) is the second machine-
-    independent-ish channel: wall time moves ±35% with host contention
-    (r11: 2.15 s idle vs 2.89 s contended, identical bytes), but CPU
-    time per query moves far less — a contended round shows wall >>
-    cpu growth, a real plan regression grows BOTH. Recorded per
-    headline query as cpu_s so the artifact self-diagnoses.
+    Pinned branches are released after EVERY call, outside the timed
+    span: persist() entries are deduped by logical plan in Spark's
+    CacheManager, so without the release a repeat run would read the
+    previous run's materialized cache and time cache reads, not the
+    operator."""
+    samples = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        fn()
+        samples.append(time.perf_counter() - t0)
+        release_all()
+    return samples
 
-    Machine-independent observability (VERDICT r10 item 6): wall time
-    moves with host contention, but BYTES MOVED by a plan is a pure
-    function of the plan + data, so a plan regression shows as a
-    shuffle_mb jump even on a noisy host. The floor-id guard makes the
-    delta robust to the status store evicting OLD stages mid-window
-    (spark.ui.retainedStages); only stages newer than the snapshot are
-    summed, and a bench query's ~15 runs create far fewer stages than
-    the retention limit.
 
-    Only COMPLETE stages are summed (ADVICE r11): a failed stage
-    attempt plus its retry would otherwise double-count the retried
-    bytes and inflate the published shuffle_mb — the one channel whose
-    whole point is machine-independence. The floor id still advances
-    over EVERY status so a stage running at snapshot time can't leak
-    into the next window."""
-    ss = spark.sparkContext._jsc.sc().statusStore()
-    jvm = spark.sparkContext._jvm
-    gw = spark.sparkContext._gateway
-    stages = ss.stageList(
-        jvm.java.util.ArrayList(),  # all statuses
-        False,
-        False,
-        gw.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),
-    )
-    max_id, read_b, write_b, cpu_ns = floor_id, 0, 0, 0
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        sid = s.stageId()
-        max_id = max(max_id, sid)
-        if sid > floor_id and str(s.status()) == "COMPLETE":
-            read_b += s.shuffleReadBytes()
-            write_b += s.shuffleWriteBytes()
-            cpu_ns += s.executorCpuTime()
-    return max_id, read_b, write_b, cpu_ns
+def warm_median(fn, n: int) -> float:
+    """Median of ``n`` timed calls after one untimed warm-up call."""
+    time_runs(fn, 1)
+    return statistics.median(time_runs(fn, n))
+
+
+class BenchTracer(Tracer):
+    """perfbench's Tracer, with a group widened to its whole window.
+
+    A job group is a thread-local property, so work a query hands to a
+    thread that sets its own group escapes it: Structured Streaming
+    runs each micro-batch under the stream's run id. Job ids are dense
+    and the bench runs one window at a time, so ``jobs_of`` also claims
+    every job id started between ``group`` and the stats read that no
+    earlier call attributed. The py4j counter is taken off at once:
+    the bench never reads it, and the timed calls keep the plain
+    gateway path."""
+
+    def __init__(self, spark, workload: str) -> None:
+        super().__init__(spark, workload)
+        self.py4j.close()
+        self._next_job = 0
+
+    def _job_ids_from(self, start: int) -> int:
+        """First job id at or after ``start`` the tracker does not know."""
+        while self._status.getJobInfo(start) is not None:
+            start += 1
+        return start
+
+    def group(self, query: str, phase: str) -> str:
+        # jobs run since the last window are ungrouped; start past them
+        ungrouped = self._status.getJobIdsForGroup(None)
+        start = max([self._next_job, *(j + 1 for j in ungrouped)])
+        self._window = self._next_job = self._job_ids_from(start)
+        return super().group(query, phase)
+
+    def jobs_of(self, group: str) -> list[int]:
+        own = super().jobs_of(group)
+        self._next_job = self._job_ids_from(self._window)
+        rest = [j for j in range(self._window, self._next_job) if j not in self._seen_jobs]
+        self._seen_jobs.update(rest)
+        return sorted(own + rest)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     spark = get_spark(app_name="bench")
+    tracer = BenchTracer(spark, "bench")
+
+    def measured(name: str, phase: str, run, n: int):
+        """``time_runs(run, n)`` under the job group ``bench:<name>:<phase>``;
+        returns the samples, the shuffle [read, write] MB per run and
+        the executor CPU seconds per run of the group's completed stages.
+
+        Bytes moved are a pure function of plan + data, so a plan
+        regression shows as a shuffle_mb jump even on a noisy host; and
+        a contended host moves wall time while CPU time per query stays
+        flat, where a real plan regression grows both. Attribution is by
+        job group and window (``BenchTracer``), so only this query's
+        jobs count, streamed micro-batches included."""
+        group = tracer.group(name, phase)
+        samples = time_runs(run, n)
+        tracer.clear()
+        st = tracer.stage_stats(group)
+        return (
+            samples,
+            [round(st["shuffle_read_mb"] / n, 3), round(st["shuffle_write_mb"] / n, 3)],
+            round(st["cpu_s"] / n, 3),
+        )
 
     # like-for-like vs BASELINE.md = the SIX transposed reference tasks
     ref_names = {
@@ -192,8 +226,9 @@ def main() -> None:
     # single-row-group) scan, timed under the session defaults. The
     # headline six cannot express core scaling on this data layout
     # (one parquet row group = one decode task; partitions follow data
-    # granularity — see ref_confs note), so the driver's 8-vs-32-core
-    # comparison kept flagging `suspect_cpus_ignored` on the conf pin.
+    # granularity — see session.PROFILES["ref"]), so the driver's
+    # 8-vs-32-core comparison kept flagging `suspect_cpus_ignored` on
+    # the conf pin.
     # This row rides the one-line `queries` dict (additions are
     # allowed; `value` still sums ONLY the six reference queries) so
     # the scaling check has a query whose ratio moves with the cores.
@@ -236,83 +271,27 @@ def main() -> None:
     # once untimed (plus their per-query warm-up below) so every timed
     # run executes against a hot JVM — the BASELINE.md protocol times
     # warm engines too (microbenchmark reuses loaded R sessions).
-    # r13: warm under the SAME ref_confs the six are timed under
-    # (declared measurement fix, OPTIMIZATION_r13.md): the conf set
-    # changes the physical plans, so a default-conf warm-up compiled
-    # the WRONG codegen classes and timed run 1 still hit cold code —
-    # the r12 first-pass medians read up to 3.5x the settled pass on
-    # exactly this (q1 3.64 s first vs 1.04 s settled in the r13
-    # baseline run). Warm-up count is unchanged. (ref_confs is defined
-    # just below with its measurement rationale; the session defaults
-    # are snapshotted before anything is set.)
-    # r14 (VERDICT r13 item 2a): scaling the pinned partition count
-    # with the granted cores (max(8, cpus)) was A/B'd at 32 cores and
-    # REJECTED — six-query sum 2.32 s (8 partitions) vs 2.74 s (32),
-    # worst on q4/q6: this family is latency-bound, so partitions
-    # follow DATA granularity, not cores (guide §2.2 sizes partitions
-    # by bytes; at 100 TB the session defaults + AQE govern, not this
-    # toy-scale pin). The driver's cpu-scaling contract is served
-    # honestly by the default-conf `scaling_probe_cpu` row below
-    # (VERDICT's alternative), which really does scale with the grant.
+    # r13: warm under the SAME conf profile the six are timed under
+    # (OPTIMIZATION_r13.md): the profile changes the physical plans, so
+    # a default-conf warm-up compiled the WRONG codegen classes and
+    # timed run 1 still hit cold code. The per-family conf profiles and
+    # their measurements live in session.PROFILES: the six run under
+    # "ref", the literal SE tasks under "se", everything else under the
+    # session defaults (snapshotted here before anything is set). The
+    # driver's cpu-scaling contract is served by the default-conf
+    # `scaling_probe_cpu` row, which really does scale with the grant.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    ref_confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "8",
-        "spark.sql.files.maxPartitionBytes": "1m",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "1048576",
-    }
+    ref_confs, se_confs = PROFILES["ref"], PROFILES["se"]
     default_confs = {k: spark.conf.get(k) for k in ref_confs}
-    for k, v in ref_confs.items():
-        spark.conf.set(k, v)
+
+    def set_confs(confs: dict[str, str]) -> None:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+
+    set_confs(ref_confs)
     for name, fn in queries:
         if is_ref(name):
             fn(spark, sf_dir).toPandas()
-
-    # Per-family runtime tuning (what a real deployment does per
-    # workload): the six relational headline queries are stage-latency
-    # bound at this SF — sub-second queries on sub-100 MB inputs. AQE's
-    # per-stage re-planning barrier and 32-way shuffles cost more than
-    # they save there, so the six run with AQE off and 8 shuffle
-    # partitions (back-to-back A/B, round 4: headline total 3.72s ->
-    # ~2.4s; every one of the six improved). The compute-dense
-    # extension operators (minhash/jaccard pair joins) NEED the
-    # parallelism and AQE's skew handling, so defaults are restored
-    # before timing them. At 100 TB neither override applies: stages
-    # carry real bytes, AQE's runtime statistics and skew-splits are
-    # exactly what you want — this is toy-scale latency tuning, and
-    # labeled as such.
-    # r13 re-measurement (OPTIMIZATION_r13.md §headline): the testdata
-    # parquet files are ONE row group each, so a parquet scan can never
-    # parallelize below file granularity — exactly one split gets the
-    # row-group midpoint and decodes everything; sub-file splits only
-    # add empty-task dispatch. 256k splits (42 tasks on lineitem, 41
-    # empty) cost ~0.15 s/query in dispatch vs 1m (11 tasks); 128m
-    # (1 task) loses the overlap of the handful of non-empty tasks
-    # across the query's scans. Counterbalanced A/B at sf0.1 (7-run
-    # medians, alternating legs x2): six-query sum 256k 2.98/2.70,
-    # 1m 2.16/2.16 — 1m wins every leg. The join conf pair steers the
-    # orders-side joins from driver-built-and-shipped broadcast
-    # relations (150k rows collected + hashed on the driver EVERY run)
-    # to shuffled-hash joins whose build rides the 8 reduce tasks
-    # (guide §3.1; §9 recommends preferSortMergeJoin=false as
-    # baseline): q3 0.545 -> 0.359, q4 0.65 -> 0.53 in direct A/B.
-    # Toy-scale-only, like AQE-off: at 100 TB the session defaults
-    # (AQE on, 10 MB threshold, 128 MB splits) stay in force and AQE
-    # picks the strategy from runtime sizes. (ref_confs itself is
-    # defined above, before the global warm-up that uses it.)
-    # The literal SE tasks read byte-splittable CSV (real sub-file
-    # parallelism, honest size estimates), where the r8 256k-split +
-    # broadcast-join tuning still wins (r13 A/B: task3 0.23 vs 0.33,
-    # task4 0.34 vs 0.46 under the parquet-tuned confs) — so the two
-    # latency families carry separate conf sets.
-    se_confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": "8",
-        "spark.sql.files.maxPartitionBytes": "256k",
-        "spark.sql.join.preferSortMergeJoin": "true",
-        "spark.sql.autoBroadcastJoinThreshold": "10485760",
-    }
 
     timings: dict[str, float] = {}
     #: per-query min/median/max over the timed runs — the reference's
@@ -320,43 +299,31 @@ def main() -> None:
     #: (RDataFramesSQL.Rmd:139-152), and cross-round drift (e.g.
     #: minhash 7.6s->13.5s r1->r2) is only diagnosable with spread.
     spreads: dict[str, dict[str, float]] = {}
-    #: per-query plan observability for EVERY timed query (VERDICT r11
-    #: item 4 widened from the headline six): shuffle [read, write] MB
-    #: and executor CPU seconds per run — so the next plan regression
-    #: in the heavy tail (ann_recall_report ... er_entity_clusters) is
-    #: bytes-visible too, not just wall-visible. Written to
-    #: BENCH_DETAILS as per_query_stats.
+    #: per-query shuffle [read, write] MB and executor CPU seconds per
+    #: run for EVERY timed query (VERDICT r11 item 4), so a plan
+    #: regression in the heavy tail is bytes-visible too, not just
+    #: wall-visible. Written to BENCH_DETAILS as per_query_stats.
     per_query_stats: dict[str, dict[str, object]] = {}
     for name, fn in queries:
         # progress marker (stderr; stdout stays the one-line contract)
         # — without it a stalled query is undiagnosable from outside
         print(f"[bench] {name}", file=sys.stderr, flush=True)
         if is_ref(name):
-            fam_confs = ref_confs
+            set_confs(ref_confs)
         elif name in se_names:
-            fam_confs = se_confs
+            set_confs(se_confs)
         else:
-            fam_confs = default_confs
-        for k, v in fam_confs.items():
-            spark.conf.set(k, v)
-        # Per-query warm-up: JIT, parquet footer cache, AQE stats.
+            set_confs(default_confs)
         # Materialization is Arrow-batched toPandas — columnar
         # transfer, the engine's real full-result path (per-Row
         # collect() would time Python object construction, not the
-        # engine). The warm-up is also TIMED (not recorded) to pick
-        # the run count: expensive extensions get EXT_HEAVY_RUNS so
-        # one GC pause can't masquerade as a regression.
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).toPandas()
-        warm_s = time.perf_counter() - t0
-        # Release pinned branches between EVERY run, not just between
-        # queries: persist() entries are deduped by logical plan in
-        # Spark's CacheManager, so without this a repeat run would
-        # read the previous run's materialized cache and the timing
-        # would measure cache reads, not the operator. (The unpersist
-        # happens outside the timed window.)
-        release_all()
-        samples = []
+        # engine).
+        run = lambda fn=fn: fn(spark, sf_dir).toPandas()  # noqa: E731
+        # Per-query warm-up (JIT, parquet footer cache): also TIMED
+        # (not recorded) to pick the run count — expensive extensions
+        # get EXT_HEAVY_RUNS so one GC pause can't masquerade as a
+        # regression.
+        warm_s = time_runs(run, 1)[0]
         if is_latency(name):
             n_runs = REF_RUNS
         elif name in se_stress_names:
@@ -367,20 +334,8 @@ def main() -> None:
             n_runs = EXT_HEAVY_RUNS
         else:
             n_runs = EXT_RUNS
-        floor_sid, _, _, _ = _stage_shuffle_stats(spark, -1)
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).toPandas()
-            samples.append(time.perf_counter() - t0)
-            release_all()
-        _, rd_b, wr_b, cpu = _stage_shuffle_stats(spark, floor_sid)
-        per_query_stats[name] = {
-            "shuffle_mb": [
-                round(rd_b / n_runs / 1e6, 3),
-                round(wr_b / n_runs / 1e6, 3),
-            ],
-            "cpu_s": round(cpu / n_runs / 1e9, 3),
-        }
+        samples, mb, cpu = measured(name, "first", run, n_runs)
+        per_query_stats[name] = {"shuffle_mb": mb, "cpu_s": cpu}
         timings[name] = round(statistics.median(samples), 4)
         spreads[name] = {
             "min": round(min(samples), 4),
@@ -390,44 +345,27 @@ def main() -> None:
         }
 
     # Settled second pass over the headline six (r10). The six are
-    # timed FIRST (fresh JVM, heap clean of extension state) — but the
-    # r10 bench caught the mirror-image artifact: EARLY-session
-    # medians can read 2x high while the same plans, same confs, same
-    # session measure fine later (the six's spark_sql twins, timed at
-    # the END of the run, and the frozen ab_headline protocol both
-    # said ~0.5 s while the first pass said ~1.2 s — residual JIT
+    # timed FIRST (fresh JVM, heap clean of extension state) — but
+    # EARLY-session medians can also read 2x high while the same plans,
+    # same confs, same session measure fine later (residual JIT
     # compilation, not plans). So the six are re-timed after the full
     # loop under the same confs and the HEADLINE takes the per-query
     # MIN of the two medians — the steady-state estimate; both passes
     # are published (spreads = first pass, settled_pass = second) so
-    # nothing hides. The reference's protocol times warm engines too.
+    # nothing hides.
     settled: dict[str, dict[str, float]] = {}
-    #: per-headline-query shuffle bytes moved per run, MB (read, write)
-    #: — machine-independent plan observability (VERDICT r10 item 6)
+    #: per-headline-query shuffle [read, write] MB and executor CPU
+    #: seconds per run, from the settled pass (VERDICT r10/r11)
     shuffle_mb: dict[str, list[float]] = {}
-    #: per-headline-query executor CPU seconds per run (VERDICT r11
-    #: item 3): the contended-host discriminator — wall up with cpu
-    #: flat = host noise; both up = charge the plan.
     cpu_s: dict[str, float] = {}
-    for k, v in ref_confs.items():
-        spark.conf.set(k, v)
+    set_confs(ref_confs)
     for name in sorted(ref_names):
         fn = registry.queries()[name]
-        fn(spark, sf_dir).toPandas()
-        release_all()
-        floor_id, _, _, _ = _stage_shuffle_stats(spark, -1)
-        samples = []
-        for _ in range(REF_RUNS):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).toPandas()
-            samples.append(time.perf_counter() - t0)
-            release_all()
-        _, read_b, write_b, cpu_ns = _stage_shuffle_stats(spark, floor_id)
-        shuffle_mb[name] = [
-            round(read_b / REF_RUNS / 1e6, 3),
-            round(write_b / REF_RUNS / 1e6, 3),
-        ]
-        cpu_s[name] = round(cpu_ns / REF_RUNS / 1e9, 3)
+        run = lambda fn=fn: fn(spark, sf_dir).toPandas()  # noqa: E731
+        time_runs(run, 1)
+        samples, shuffle_mb[name], cpu_s[name] = measured(
+            name, "settled", run, REF_RUNS
+        )
         med = round(statistics.median(samples), 4)
         settled[name] = {
             "first_pass_median": timings[name],
@@ -445,20 +383,15 @@ def main() -> None:
     # analysis contextualizes any per-query ratio vs BASELINE.md:
     # ratio_adj strips the floor from our side (the baseline's
     # in-process engines have no comparable scheduling floor).
-    def _floor(fn, n=5):
-        fn()
-        s = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            fn()
-            s.append(time.perf_counter() - t0)
-        return round(statistics.median(s), 4)
-
     from sqlondataframesr_spark.catalog import load_table
 
-    floor_noop = _floor(lambda: spark.range(1).toPandas())
-    floor_scan = _floor(
-        lambda: load_table(spark, sf_dir, "lineitem").select("l_orderkey").count()
+    floor_noop = round(warm_median(lambda: spark.range(1).toPandas(), 5), 4)
+    floor_scan = round(
+        warm_median(
+            lambda: load_table(spark, sf_dir, "lineitem").select("l_orderkey").count(),
+            5,
+        ),
+        4,
     )
 
     # N-version engine table (the reference's own format: each task
@@ -472,20 +405,13 @@ def main() -> None:
     # Reported in BENCH_DETAILS only; the headline contract stays the
     # six fluent medians vs BASELINE.md.
     from sqlondataframesr_spark.catalog import register_views
+    from sqlondataframesr_spark.check import duckdb_connect
 
     register_views(spark, sf_dir)
-    for k, v in ref_confs.items():
-        spark.conf.set(k, v)
+    set_confs(ref_confs)
     sql_forms = registry.spark_sql()
     oracle_forms = registry.oracles()
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_connect(sf_dir)
     nversion: dict[str, dict[str, float]] = {}
     for name in sorted(ref_names):
         row = {"fluent": timings[name]}
@@ -493,23 +419,11 @@ def main() -> None:
             # runner contract (registry.sql_prereqs, ADVICE r7): fixture
             # prereqs run once, OUTSIDE the timed region (setup, not query)
             registry.sql_prereqs().get(name, lambda: None)()
-            fn = lambda: spark.sql(sql_forms[name]).toPandas()  # noqa: E731
-            fn()
-            s = []
-            for _ in range(REF_RUNS):
-                t0 = time.perf_counter()
-                fn()
-                s.append(time.perf_counter() - t0)
-            row["spark_sql"] = round(statistics.median(s), 4)
+            row["spark_sql"] = round(warm_median(
+                lambda: spark.sql(sql_forms[name]).toPandas(), REF_RUNS), 4)
         if name in oracle_forms:
-            dfn = lambda: con.execute(oracle_forms[name]).fetchall()  # noqa: E731
-            dfn()
-            s = []
-            for _ in range(REF_RUNS):
-                t0 = time.perf_counter()
-                dfn()
-                s.append(time.perf_counter() - t0)
-            row["duckdb"] = round(statistics.median(s), 4)
+            row["duckdb"] = round(warm_median(
+                lambda: con.execute(oracle_forms[name]).fetchall(), REF_RUNS), 4)
         nversion[name] = row
     # 4th engine — pandas (the single-machine dataframe-library rung,
     # completing the reference's sqldf/base/dplyr/DT 4-engine format;
@@ -526,13 +440,7 @@ def main() -> None:
     for name in sorted(ref_names):
         tabs, pfn = PANDAS_QUERIES[name]
         sub = {k: pd_tables[k] for k in tabs}
-        pfn(sub)
-        s = []
-        for _ in range(REF_RUNS):
-            t0 = time.perf_counter()
-            pfn(sub)
-            s.append(time.perf_counter() - t0)
-        nversion[name]["pandas"] = round(statistics.median(s), 4)
+        nversion[name]["pandas"] = round(warm_median(lambda: pfn(sub), REF_RUNS), 4)
     del pd_tables
     con.close()
 
@@ -626,22 +534,14 @@ def main() -> None:
                 flush=True,
             )
             sf_points = []
-        for k, v in default_confs.items():
-            spark.conf.set(k, v)
+        set_confs(default_confs)
         for name in SCALING_FAMILIES if sf_points else []:
             print(f"[bench] scaling:{name}", file=sys.stderr, flush=True)
             fn = registry.queries()[name]
-            meds = []
-            for d, _s in sf_points:
-                fn(spark, d).toPandas()
-                release_all()
-                ss = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    fn(spark, d).toPandas()
-                    ss.append(time.perf_counter() - t0)
-                    release_all()
-                meds.append(statistics.median(ss))
+            meds = [
+                warm_median(lambda d=d: fn(spark, d).toPandas(), 3)
+                for d, _s in sf_points
+            ]
             xs = [math.log10(s) for _, s in sf_points]
             ys = [math.log10(t) for t in meds]
             n = len(xs)
@@ -771,6 +671,7 @@ def main() -> None:
         )
     )
     print(json.dumps(headline))
+    tracer.close()
     spark.stop()
 
 

@@ -97,7 +97,7 @@ def force_concurrently(frames: list[DataFrame], max_workers: int = 4) -> None:
     frame: building the InMemoryRelation computes every column of the
     cached plan regardless of the downstream projection, so unlike on
     an unpersisted plan it cannot under-compute — which is also why
-    every frame MUST already be persisted (asserted below, ADVICE r13):
+    every frame MUST already be persisted (checked below, ADVICE r13):
     on an unpersisted frame the count would column-prune, build no
     cache, and silently lose the sharing this helper exists for.
 
@@ -115,15 +115,18 @@ def force_concurrently(frames: list[DataFrame], max_workers: int = 4) -> None:
     if not frames:
         return
     for df in frames:
-        assert df.storageLevel != _SL.NONE, (
-            "force_concurrently: frame is not persisted — pin it with"
-            " materialize() first or the count builds no cache"
-        )
+        if df.storageLevel == _SL.NONE:
+            raise ValueError(
+                "force_concurrently: frame is not persisted — pin it with"
+                " materialize() first or the count builds no cache"
+            )
     if len(frames) == 1:
         frames[0].count()
         return
-    session = frames[0].sparkSession
-    run = inheritable_thread_target(session)(lambda df: df.count())
+    # with PYSPARK_PIN_THREAD=false, inheritable_thread_target returns
+    # its argument (here the session) instead of a decorator
+    wrap = inheritable_thread_target(frames[0].sparkSession)
+    run = wrap(DataFrame.count) if callable(wrap) else DataFrame.count
     with ThreadPoolExecutor(max_workers=min(max_workers, len(frames))) as pool:
         list(pool.map(run, frames))
 

@@ -78,6 +78,52 @@ SQL_CONFS = {
 }
 
 
+#: Per-family conf profiles for the two toy-scale latency families, set
+#: on a live session by bench.py and ``scripts/query_profile.py --profile``.
+#: ``get_spark`` and ``configure`` never apply them: every other query,
+#: and any session at real scale, runs under SQL_CONFS above — the
+#: compute-dense extension operators NEED the parallelism and AQE's
+#: skew handling, and at 100 TB stages carry real bytes, so AQE's
+#: runtime statistics pick partitions and join strategies.
+#:
+#: - ``ref``: the six transposed reference queries over parquet. They
+#:   are stage-latency bound at test SFs, so AQE's per-stage re-planning
+#:   barrier and wide shuffles cost more than they save (round 4 A/B:
+#:   headline total 3.72 s -> ~2.4 s, every one of the six improved).
+#:   The testdata parquet files are ONE row group each, so a scan never
+#:   parallelizes below file granularity: 256k splits (42 tasks on
+#:   lineitem, 41 empty) cost ~0.15 s/query in dispatch vs 1m (11
+#:   tasks), and 128m (1 task) loses the overlap across the query's
+#:   scans (r13 counterbalanced A/B at sf0.1: six-query sum 256k
+#:   2.98/2.70, 1m 2.16/2.16). The join pair steers the orders-side
+#:   joins from a driver-built broadcast (150k rows collected and hashed
+#:   every run) to shuffled-hash joins built on the 8 reduce tasks
+#:   (q3 0.545 -> 0.359, q4 0.65 -> 0.53 in direct A/B). Scaling the
+#:   partition count with the cores was A/B'd at 32 cores and rejected
+#:   (sum 2.32 s at 8 vs 2.74 s at 32): partitions follow data
+#:   granularity here, not cores.
+#: - ``se``: the literal StackExchange tasks read byte-splittable CSV
+#:   (real sub-file parallelism, honest size estimates), where 256k
+#:   splits and broadcast joins still win (r13 A/B: task3 0.23 vs 0.33,
+#:   task4 0.34 vs 0.46 under the ``ref`` profile).
+PROFILES = {
+    "ref": {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "1048576",
+    },
+    "se": {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.files.maxPartitionBytes": "256k",
+        "spark.sql.join.preferSortMergeJoin": "true",
+        "spark.sql.autoBroadcastJoinThreshold": "10485760",
+    },
+}
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
 

@@ -31,6 +31,16 @@ def test_readme_counts_match_registry():
     m = re.search(r"(\d+) queries additionally ship a Spark-SQL", text)
     assert m, "README.md lost its SPARK_SQL-count sentence"
     assert int(m.group(1)) == len(s), (m.group(1), len(s))
+    # the EXACT-gate sentence: its count tracks the oracle set, and the
+    # logs it names are committed at all three scales
+    m = re.search(
+        r"committed as `(DRIVER_SIM_r\d+)_sf\*\.txt` — \*\*(\d+)/(\d+) EXACT",
+        text,
+    )
+    assert m, "README.md lost its DRIVER_SIM gate sentence"
+    assert int(m.group(2)) == int(m.group(3)) == len(o), (m.groups(), len(o))
+    for sf in ("0.001", "0.01", "0.1"):
+        assert os.path.exists(os.path.join(ROOT, f"{m.group(1)}_sf{sf}.txt")), sf
 
 
 def test_coverage_dual_counts_match_registry():

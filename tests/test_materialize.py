@@ -62,9 +62,28 @@ def test_force_concurrently_rejects_unpersisted_frame(spark):
     from sqlondataframesr_spark.materialize import force_concurrently
 
     bare = spark.range(10).selectExpr("id", "id * 3 as v")
-    with pytest.raises(AssertionError, match="not persisted"):
+    with pytest.raises(ValueError, match="not persisted"):
         force_concurrently([bare, materialize(spark.range(5))])
     release_all()
+
+
+def test_force_concurrently_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target``
+    returns its argument (the session, not a decorator); the helper
+    must fall back to plain pool threads and still build every cache."""
+    import pyspark.util
+
+    from sqlondataframesr_spark.materialize import force_concurrently
+
+    monkeypatch.setattr(pyspark.util, "inheritable_thread_target", lambda f=None: f)
+    frames = [materialize(spark.range(10 * (i + 1))) for i in range(2)]
+    try:
+        force_concurrently(frames)
+        for df in frames:
+            rel = df._jdf.queryExecution().optimizedPlan()
+            assert rel.cacheBuilder().isCachedColumnBuffersLoaded()
+    finally:
+        release_all()
 
 
 def test_force_concurrently_handles_empty_and_single(spark):
