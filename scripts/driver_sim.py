@@ -1,19 +1,16 @@
 """Simulate the driver's correctness gate: plain SparkSession (none of
-our confs), every queries() entry vs oracle_sql() via DuckDB at sf0.01.
-Run from a neutral cwd: python /root/repo/scripts/driver_sim.py
+our confs), every queries() entry vs oracle_sql() via DuckDB at sf0.01,
+compared by check.compare_rows, the driver's EXACT value rule.
+Run it from a cwd outside the checkout, as the driver does:
+  cd /tmp && python <repo>/scripts/driver_sim.py
 
 Flags / args:
-  EXACT=1   env var — replicate the driver's value-HASH semantics:
-            strict equality per cell (no isclose); floats compared by
-            repr after a 1e-9 quantization like the driver's hasher.
-            Queries that pass isclose but fail EXACT=1 are the ones a
-            driver resample can surprise (VERDICT r3 item 4).
+  SF_DIR    env var — the parquet tree to run on (default sf0.01)
   argv      prefix filters, e.g. python driver_sim.py kmeans emb_"""
-import math
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[8]").appName("driver-sim")
@@ -22,58 +19,35 @@ spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
 
 print("entry rows:", len(e.entry(spark).collect()))
-import duckdb
+from sqlondataframesr_spark.check import (compare_rows, duckdb_connect, duckdb_rows,
+                                          oracle_type_violations, spark_rows)
 
 SF = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+con = duckdb_connect(SF)
 qs, osql = e.queries(), e.oracle_sql()
 # optional argv filter: python driver_sim.py q14 q15  (prefix match)
 if len(sys.argv) > 1:
     qs = {n: f for n, f in qs.items() if any(n.startswith(p) for p in sys.argv[1:])}
-from sqlondataframesr_spark.check import oracle_type_violations
 
 fails = 0
 for name, fn in sorted(qs.items()):
-    sdf = fn(spark, SF)
-    scols = sorted(sdf.columns)
-    srows = sorted(tuple(r[c] for c in scols) for r in sdf.collect())
+    cols, rows = spark_rows(fn(spark, SF))
     if name not in osql:
-        print(name, "rows-only:", len(srows))
+        print(name, "rows-only:", len(rows))
         continue
     # Type-exactness preflight (VERDICT r4 item 2): the driver's hasher
     # folds the oracle value's declared type/format in, so a DuckDB
     # HUGEINT (bare SUM of INTEGER) or DECIMAL hashes differently from
-    # Spark's BIGINT/DOUBLE even when the numbers are equal — and this
-    # sim's repr-compare can't see it. Reject exotic output types at
+    # Spark's BIGINT/DOUBLE even when the numbers are equal — and the
+    # value compare can't see it. Reject exotic output types at
     # registration time instead of letting the driver find them.
     bad = oracle_type_violations(con, osql[name])
     if bad:
         fails += 1
         print(name, "ORACLE-TYPE-FAIL:", bad)
         continue
-    cur = con.execute(osql[name])
-    dcols = [d[0] for d in cur.description]
-    order = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    drows = sorted(tuple(r[i] for i in order) for r in cur.fetchall())
-
-    EXACT = os.environ.get("EXACT") == "1"
-
-    def close(a, b):
-        if isinstance(a, float) and isinstance(b, float):
-            if EXACT:
-                # the driver hashes a string form of the value; two
-                # floats hash alike only when bit-identical (modulo
-                # its tiny quantization) — emulate with repr equality
-                return repr(round(a, 12)) == repr(round(b, 12))
-            return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
-        return a == b
-
-    ok = len(srows) == len(drows) and all(
-        all(close(x, y) for x, y in zip(a, b)) for a, b in zip(srows, drows))
+    ok = not compare_rows(cols, rows, *duckdb_rows(con, osql[name]))
     if not ok:
         fails += 1
-    print(name, len(srows), "match" if ok else "MISMATCH")
+    print(name, len(rows), "match" if ok else "MISMATCH")
 sys.exit(1 if fails else 0)

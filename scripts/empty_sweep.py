@@ -51,19 +51,10 @@ SCHEMAS = {
 }
 
 
-def main() -> int:
-    from sqlondataframesr_spark.session import get_spark
-
-    spark = get_spark(app_name="empty-sweep", cpus=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-
+def empty_tables(spark) -> dict:
+    """A zero-row DataFrame for every table, keyed by table name."""
     import duckdb
 
-    import sqlondataframesr_spark.catalog as C
-    from sqlondataframesr_spark import registry
-    from sqlondataframesr_spark.materialize import release_all
-
-    app = spark.sparkContext.applicationId
     fake = {n: spark.createDataFrame([], s) for n, s in SCHEMAS.items()}
     # orders/lineitem schemas are wide: derive them from the real files
     con = duckdb.connect()
@@ -75,7 +66,21 @@ def main() -> int:
         ).fetchall()
         schema = ", ".join(f"{c[0]} {tmap.get(c[1], c[1].lower())}" for c in cols)
         fake[t] = spark.createDataFrame([], schema)
-    for name, df in fake.items():
+    return fake
+
+
+def main() -> int:
+    from sqlondataframesr_spark.session import get_spark
+
+    spark = get_spark(app_name="empty-sweep", cpus=8, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+
+    import sqlondataframesr_spark.catalog as C
+    from sqlondataframesr_spark import registry
+    from sqlondataframesr_spark.materialize import release_all
+
+    app = spark.sparkContext.applicationId
+    for name, df in empty_tables(spark).items():
         C._table_cache[(app, EMPTY, name)] = df
 
     qs = registry.queries()

@@ -20,7 +20,7 @@ Then:
 
     SF_DIR=/tmp/sqlondataframesr_testdata_seed2/sf0.01 \
     SPARK_GRAFT_MM_EXPECTED_SFS=/root/testdata/sf0.001:/tmp/sqlondataframesr_testdata_seed2/sf0.01 \
-    EXACT=1 python scripts/driver_sim.py
+    python scripts/driver_sim.py
 """
 
 from __future__ import annotations

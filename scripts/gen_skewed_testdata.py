@@ -19,7 +19,7 @@ its cap binds):
 
     SF_DIR=/tmp/sqlondataframesr_testdata_skew/sf0.01 \
     SPARK_GRAFT_MM_EXPECTED_SFS=/root/testdata/sf0.001:/tmp/sqlondataframesr_testdata_skew/sf0.01 \
-    EXACT=1 python scripts/driver_sim.py
+    python scripts/driver_sim.py
 
 tests/test_skew_caps.py regenerates this tree (it is fast — numpy
 only) and asserts every cap report BINDS on it.

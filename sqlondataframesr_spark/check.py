@@ -3,19 +3,19 @@
 The reference's correctness methodology is N-version testing: every
 query's sqldf/SQLite result is the oracle and each alternative
 implementation is compared with ``dplyr::all_equal(..,
-ignore_row_order=TRUE)`` (RDataFramesSQL.Rmd:40-53, 154-169). We keep
-the same discipline with two comparators:
+ignore_row_order=TRUE)`` (RDataFramesSQL.Rmd:40-53, 154-169). Here
+every comparison goes through :func:`compare_rows`, under the one value
+rule the driver's hash applies: a float is its ``repr(round(v, 12))``,
+and every other value keeps its Python type, so an int never equals a
+float. Rows compare as sorted multisets; column names compare
+case-insensitively after sorting.
 
-- :func:`compare_spark_duckdb` — Spark result vs an ANSI-SQL oracle
-  executed by DuckDB on the same parquet files (what the driver's
-  correctness gate does).
-- :func:`compare_frames` — Spark-vs-Spark (fluent form vs SQL form of
-  the same query), recreating the reference's internal N-version
-  structure before the external oracle ever sees either.
-
-Comparison is order-insensitive (canonical sort on all columns) unless
-the query had an ORDER BY, mirroring the reference's explicit
-``ignore_row_order=TRUE`` for its unordered tasks.
+- :func:`compare_spark_duckdb` — a Spark result vs an ANSI-SQL oracle
+  executed by DuckDB on the same parquet files.
+- :func:`compare_frames` — Spark vs Spark, e.g. a streaming or
+  rewritten plan vs its batch twin.
+- :func:`spark_rows`, :func:`duckdb_rows` and :func:`duckdb_connect`
+  give scripts and tests the same row extraction and views.
 """
 
 from __future__ import annotations
@@ -41,15 +41,16 @@ def duckdb_connect(sf_dir: str):
     return con
 
 
-def _canonical(rows: list[tuple], float_tol: float) -> list[tuple]:
+def _canonical(rows: list[tuple]) -> list[tuple]:
     def norm(v: Any):
         if v is None:
             return ("\x00null",)
         if isinstance(v, float):
             if math.isnan(v):
                 return ("f", "nan")
-            # quantize so engine-order float noise below tol compares equal
-            return ("f", round(v / float_tol) if float_tol else v)
+            # the driver hashes a string form: floats agree only when
+            # their repr agrees after a 1e-12 quantization
+            return ("f", repr(round(v, 12)))
         if isinstance(v, (list, tuple)):
             return ("l", tuple(norm(x) for x in v))
         return (type(v).__name__, v)
@@ -57,10 +58,18 @@ def _canonical(rows: list[tuple], float_tol: float) -> list[tuple]:
     return sorted((tuple(norm(v) for v in row) for row in rows))
 
 
-def _spark_rows(df: DataFrame) -> tuple[list[str], list[tuple]]:
+def spark_rows(df: DataFrame) -> tuple[list[str], list[tuple]]:
+    """Sorted column names and collected rows of a Spark DataFrame."""
     cols = sorted(df.columns)
-    rows = df.select(cols).collect()
-    return cols, [tuple(r[c] for c in cols) for r in rows]
+    return cols, [tuple(r) for r in df.select(cols).collect()]
+
+
+def duckdb_rows(con, sql: str) -> tuple[list[str], list[tuple]]:
+    """Sorted column names and rows of a DuckDB query."""
+    cur = con.execute(sql)
+    names = [d[0] for d in cur.description]
+    order = sorted(range(len(names)), key=names.__getitem__)
+    return [names[i] for i in order], [tuple(r[i] for i in order) for r in cur.fetchall()]
 
 
 def compare_rows(
@@ -68,7 +77,6 @@ def compare_rows(
     left_rows: list[tuple],
     right_cols: list[str],
     right_rows: list[tuple],
-    float_tol: float = 1e-6,
 ) -> list[str]:
     """Return a list of human-readable mismatch descriptions (empty = equal)."""
     problems: list[str] = []
@@ -77,8 +85,8 @@ def compare_rows(
         return problems
     if len(left_rows) != len(right_rows):
         problems.append(f"row count: {len(left_rows)} vs {len(right_rows)}")
-    lc = _canonical(left_rows, float_tol)
-    rc = _canonical(right_rows, float_tol)
+    lc = _canonical(left_rows)
+    rc = _canonical(right_rows)
     if lc != rc:
         diff_l = [r for r in lc if r not in rc][:3]
         diff_r = [r for r in rc if r not in lc][:3]
@@ -86,27 +94,17 @@ def compare_rows(
     return problems
 
 
-def compare_spark_duckdb(
-    df: DataFrame, oracle_sql: str, sf_dir: str, float_tol: float = 1e-6
-) -> list[str]:
+def compare_spark_duckdb(df: DataFrame, oracle_sql: str, sf_dir: str) -> list[str]:
     con = duckdb_connect(sf_dir)
     try:
-        cur = con.execute(oracle_sql)
-        right_cols = [d[0] for d in cur.description]
-        right_rows = [tuple(r) for r in cur.fetchall()]
+        oracle = duckdb_rows(con, oracle_sql)
     finally:
         con.close()
-    order = sorted(range(len(right_cols)), key=lambda i: right_cols[i])
-    right_cols = [right_cols[i] for i in order]
-    right_rows = [tuple(r[i] for i in order) for r in right_rows]
-    left_cols, left_rows = _spark_rows(df)
-    return compare_rows(left_cols, left_rows, right_cols, right_rows, float_tol)
+    return compare_rows(*spark_rows(df), *oracle)
 
 
-def compare_frames(a: DataFrame, b: DataFrame, float_tol: float = 1e-6) -> list[str]:
-    la, ra = _spark_rows(a)
-    lb, rb = _spark_rows(b)
-    return compare_rows(la, ra, lb, rb, float_tol)
+def compare_frames(a: DataFrame, b: DataFrame) -> list[str]:
+    return compare_rows(*spark_rows(a), *spark_rows(b))
 
 
 #: DuckDB output types whose driver-side hash is known to agree with

@@ -26,3 +26,8 @@ def _release_pinned():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf_dir_mid():
+    return SF_DIR_MID

@@ -12,32 +12,12 @@ pass."""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+
 import pytest
 
-
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
-EVT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string,"
-    " value double, props string"
-)
-STAR_SCHEMAS = {
-    "region": "r_regionkey long, r_name string, r_comment string",
-    "nation": "n_nationkey long, n_name string, n_regionkey long, n_comment string",
-    "customer": (
-        "c_custkey long, c_name string, c_address string, c_nationkey long,"
-        " c_phone string, c_acctbal double, c_mktsegment string, c_comment string"
-    ),
-    "supplier": (
-        "s_suppkey long, s_name string, s_address string, s_nationkey long,"
-        " s_phone string, s_acctbal double, s_comment string"
-    ),
-    "part": (
-        "p_partkey long, p_name string, p_mfgr string, p_brand string,"
-        " p_type string, p_size int, p_container string, p_retailprice double,"
-        " p_comment string"
-    ),
-}
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: representative op per family (all read only documents/embeddings/events)
 BATTERY = [
@@ -99,26 +79,14 @@ def empty_loader(spark):
     is leak-prone across modules imported mid-battery)."""
     import sqlondataframesr_spark.catalog as C
 
+    spec = importlib.util.spec_from_file_location(
+        "empty_sweep", os.path.join(ROOT, "scripts", "empty_sweep.py")
+    )
+    empty_sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(empty_sweep)
     app = spark.sparkContext.applicationId
-    fake = {
-        "documents": spark.createDataFrame([], DOC_SCHEMA),
-        "embeddings": spark.createDataFrame([], EMB_SCHEMA),
-        "events": spark.createDataFrame([], EVT_SCHEMA),
-        **{n: spark.createDataFrame([], s) for n, s in STAR_SCHEMAS.items()},
-    }
-    import duckdb
-
-    con = duckdb.connect()
-    tmap = {"BIGINT": "long", "VARCHAR": "string", "DOUBLE": "double",
-            "INTEGER": "int", "TIMESTAMP": "timestamp", "DATE": "date"}
-    for t in ("orders", "lineitem"):
-        cols = con.execute(
-            f"DESCRIBE SELECT * FROM read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        ).fetchall()
-        schema = ", ".join(f"{c[0]} {tmap.get(c[1], c[1].lower())}" for c in cols)
-        fake[t] = spark.createDataFrame([], schema)
     keys = []
-    for name, df in fake.items():
+    for name, df in empty_sweep.empty_tables(spark).items():
         k = (app, EMPTY_SF, name)
         C._table_cache[k] = df
         keys.append(k)

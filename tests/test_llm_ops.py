@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sqlondataframesr_spark.llm import dedup, text
-from sqlondataframesr_spark.check import compare_spark_duckdb
 
 
 def test_dedup_ngram_finds_planted_near_dups(spark, sf_dir):
@@ -992,7 +991,7 @@ def test_matryoshka_zero_prefix_agrees_across_engines(spark, tmp_path):
 
     import duckdb
 
-    from sqlondataframesr_spark.check import compare_rows
+    from sqlondataframesr_spark.check import compare_rows, duckdb_rows, spark_rows
     from sqlondataframesr_spark.llm import similarity as S
 
     # Designed so query 0's TRUE top-1 neighbor ("X", id 39) sits at
@@ -1027,9 +1026,7 @@ def test_matryoshka_zero_prefix_agrees_across_engines(spark, tmp_path):
     orig = S.load_table
     try:
         S.load_table = lambda sp, sf, name: spark.read.parquet(pq)
-        got = S.ann_matryoshka_topk(spark, "_planted")
-        cols = sorted(got.columns)
-        lrows = [tuple(r[c] for c in cols) for r in got.select(cols).collect()]
+        cols, lrows = spark_rows(S.ann_matryoshka_topk(spark, "_planted"))
     finally:
         S.load_table = orig
 
@@ -1038,15 +1035,10 @@ def test_matryoshka_zero_prefix_agrees_across_engines(spark, tmp_path):
         con.execute(
             f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{pq}/*.parquet')"
         )
-        cur = con.execute(S.ANN_MATRYOSHKA_TOPK_ORACLE)
-        dcols = [d[0] for d in cur.description]
-        drows = [tuple(r) for r in cur.fetchall()]
+        oracle = duckdb_rows(con, S.ANN_MATRYOSHKA_TOPK_ORACLE)
     finally:
         con.close()
-    order = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    dcols = [dcols[i] for i in order]
-    drows = [tuple(r[i] for i in order) for r in drows]
-    problems = compare_rows(cols, lrows, dcols, drows)
+    problems = compare_rows(cols, lrows, *oracle)
     assert not problems, problems
     assert len(lrows) == S.N_QUERIES * S.TOP_K
 

@@ -7,52 +7,36 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
 
 from sqlondataframesr_spark import registry
+from sqlondataframesr_spark.check import compare_rows, duckdb_connect, duckdb_rows
 from sqlondataframesr_spark.nversion_pandas import PANDAS_QUERIES, load_tables
-
-SF = "/root/testdata/sf0.01"
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events",
-]
 
 
 @pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in _TABLES:
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-    return c
-
-
-def _close(a, b):
-    if a is None and b is None:
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        if math.isnan(a) and math.isnan(b):
-            return True
-        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
-    return a == b
+def con(sf_dir_mid):
+    c = duckdb_connect(sf_dir_mid)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("name", sorted(PANDAS_QUERIES))
-def test_pandas_matches_duckdb_oracle(con, name):
+def test_pandas_matches_duckdb_oracle(con, sf_dir_mid, name):
     tables, fn = PANDAS_QUERIES[name]
-    pdf = fn(load_tables(SF, tables))
-    cur = con.execute(registry.oracles()[name])
-    dcols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    assert list(pdf.columns) == dcols
+    pdf = fn(load_tables(sf_dir_mid, tables))
+    oracle = registry.oracles()[name]
+    assert list(pdf.columns) == con.sql(oracle).columns
+    cols = sorted(pdf.columns)
     # pandas NaN stands in for SQL NULL (finished_spend)
-    prows = [
+    rows = [
         tuple(None if isinstance(v, float) and math.isnan(v) else v for v in r)
-        for r in pdf.itertuples(index=False, name=None)
+        for r in pdf[cols].itertuples(index=False, name=None)
     ]
-    drows = [tuple(r) for r in drows]
-    assert len(prows) == len(drows), (len(prows), len(drows))
-    for pr, dr in zip(prows, drows):
-        assert len(pr) == len(dr)
-        assert all(_close(x, y) for x, y in zip(pr, dr)), (name, pr, dr)
+    cols_o, drows = duckdb_rows(con, oracle)
+    problems = compare_rows(cols, rows, cols_o, drows)
+    assert not problems, (name, problems)
+    # the final sort is part of each N-version: rows must also come out
+    # in the oracle's ORDER BY order
+    for pr, dr in zip(rows, drows):
+        assert not compare_rows(cols, [pr], cols_o, [dr]), (name, pr, dr)

@@ -17,15 +17,11 @@ from __future__ import annotations
 import importlib.util
 import os
 
-import duckdb
 import pytest
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from sqlondataframesr_spark.check import compare_spark_duckdb
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -40,23 +36,6 @@ def skew_dir(tmp_path_factory):
     mod.generate(out, seed=11, skew=True)
     return out
 
-
-def _oracle(skew_dir: str, sql: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{skew_dir}/{t}.parquet')"
-        )
-    cur = con.execute(sql)
-    cols = [d[0] for d in cur.description]
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(r[i] for i in order) for r in cur.fetchall())
-
-
-def _spark_rows(df):
-    cols = sorted(df.columns)
-    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
 def test_user_event_caps_bind_on_the_bot(spark, skew_dir):
@@ -76,9 +55,7 @@ def test_user_event_caps_bind_on_the_bot(spark, skew_dir):
         assert r.cap_binds, name
         assert r.n_users_dropped >= 1, name
         assert r.max_user_events >= 900, name  # the bot
-        assert _spark_rows(q[name](spark, skew_dir)) == _oracle(
-            skew_dir, o[name]
-        ), name
+        assert not compare_spark_duckdb(q[name](spark, skew_dir), o[name], skew_dir), name
 
 
 def test_basket_cap_binds_on_the_mega_basket(spark, skew_dir):
@@ -89,8 +66,8 @@ def test_basket_cap_binds_on_the_mega_basket(spark, skew_dir):
     assert r.cap_binds and r.n_baskets_dropped >= 1
     assert r.max_basket_size >= 250  # the planted ~300-part basket
     # and the capped operator itself stays oracle-EXACT while binding
-    assert _spark_rows(q["basket_top_pairs_capped"](spark, skew_dir)) == _oracle(
-        skew_dir, o["basket_top_pairs_capped"]
+    assert not compare_spark_duckdb(
+        q["basket_top_pairs_capped"](spark, skew_dir), o["basket_top_pairs_capped"], skew_dir
     )
 
 
@@ -100,12 +77,12 @@ def test_gram_df_caps_bind_on_the_hot_phrase(spark, skew_dir):
     q, o = registry.queries(), registry.oracles()
     r = q["dedup_substring_cap_report"](spark, skew_dir).collect()[0]
     assert r.cap_binds and r.max_gram_df >= 100  # 100 docs share it
-    assert _spark_rows(
-        q["dedup_substring_13gram_capped"](spark, skew_dir)
-    ) == _oracle(skew_dir, o["dedup_substring_13gram_capped"])
+    assert not compare_spark_duckdb(
+        q["dedup_substring_13gram_capped"](spark, skew_dir), o["dedup_substring_13gram_capped"], skew_dir
+    )
     # the word-3-shingle DF cap binds too (same phrase, 14 shingles)
-    assert _spark_rows(q["dedup_ngram_jaccard_capped"](spark, skew_dir)) == _oracle(
-        skew_dir, o["dedup_ngram_jaccard_capped"]
+    assert not compare_spark_duckdb(
+        q["dedup_ngram_jaccard_capped"](spark, skew_dir), o["dedup_ngram_jaccard_capped"], skew_dir
     )
 
 
@@ -120,9 +97,7 @@ def test_capped_user_ops_stay_oracle_exact_while_binding(spark, skew_dir):
         "cdc_scd2_summary_capped",
         "evt_linear_attribution_capped",
     ):
-        assert _spark_rows(q[name](spark, skew_dir)) == _oracle(
-            skew_dir, o[name]
-        ), name
+        assert not compare_spark_duckdb(q[name](spark, skew_dir), o[name], skew_dir), name
 
 
 def test_dense_cluster_and_pair_cap(spark, skew_dir):

@@ -10,32 +10,20 @@ test fails the moment a registry change breaks that."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import sqlondataframesr_spark.registry as registry
-
-_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from sqlondataframesr_spark.check import duckdb_connect, duckdb_rows
 
 
 @pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    sf = "/root/testdata/sf0.01"
-    for t in _TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-    return c
+def con(sf_dir_mid):
+    c = duckdb_connect(sf_dir_mid)
+    yield c
+    c.close()
 
 
 @pytest.mark.parametrize("name", sorted(registry.oracles()))
 def test_oracle_rows_are_tuple_sortable(con, name):
-    cur = con.execute(registry.oracles()[name])
-    cols = [d[0] for d in cur.description]
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = [tuple(r[i] for i in order) for r in cur.fetchall()]
+    _, rows = duckdb_rows(con, registry.oracles()[name])
     sorted(rows)  # TypeError here = the driver compare would crash

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from sqlondataframesr_spark.check import compare_rows
+from sqlondataframesr_spark.check import compare_rows, duckdb_rows, spark_rows
 from sqlondataframesr_spark.queries import stackexchange as se
 
 
@@ -27,23 +27,16 @@ def _duckdb_rows(sql: str, data_dir: str):
             con.execute(
                 f"CREATE VIEW {name} AS SELECT * FROM read_csv_auto('{data_dir}/{name}.csv', header=true)"
             )
-        cur = con.execute(sql)
-        cols = [d[0] for d in cur.description]
-        rows = [tuple(r) for r in cur.fetchall()]
+        return duckdb_rows(con, sql)
     finally:
         con.close()
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return [cols[i] for i in order], [tuple(r[i] for i in order) for r in rows]
 
 
 @pytest.mark.parametrize("name", sorted(se.TASKS))
 def test_task_matches_duckdb(spark, se_dir, name):
     fn, oracle = se.TASKS[name]
-    df = fn(spark, se_dir)
-    cols = sorted(df.columns)
-    rows = [tuple(r[c] for c in cols) for r in df.select(cols).collect()]
-    dcols, drows = _duckdb_rows(oracle, se_dir)
-    problems = compare_rows(cols, rows, dcols, drows)
+    cols, rows = spark_rows(fn(spark, se_dir))
+    problems = compare_rows(cols, rows, *_duckdb_rows(oracle, se_dir))
     assert not problems, f"{name}: {problems}"
     assert rows, f"{name}: empty result — fixture exercises nothing"
 
@@ -63,11 +56,8 @@ def test_task_matches_duckdb_perturbed_seed(spark, se_dir_seed7, name):
     only correct because seed-42 happens to avoid an edge fails
     here (the parquet-side twin is scripts/gen_perturbed_testdata.py)."""
     fn, oracle = se.TASKS[name]
-    df = fn(spark, se_dir_seed7)
-    cols = sorted(df.columns)
-    rows = [tuple(r[c] for c in cols) for r in df.select(cols).collect()]
-    dcols, drows = _duckdb_rows(oracle, se_dir_seed7)
-    problems = compare_rows(cols, rows, dcols, drows)
+    cols, rows = spark_rows(fn(spark, se_dir_seed7))
+    problems = compare_rows(cols, rows, *_duckdb_rows(oracle, se_dir_seed7))
     assert not problems, f"{name}: {problems}"
     assert rows, f"{name}: empty result — perturbed fixture exercises nothing"
 

@@ -1,22 +1,27 @@
-"""One measurement path: the bench and the scripts must compile under
-names that shadow no stdlib module, and the status-store reader and
-the conf profiles must each live in one place (perfbench/ and
-session.PROFILES), so a second copy cannot drift from what the bench
-times."""
+"""One measurement path and one comparator: the bench and the scripts
+must compile under names that shadow no stdlib module, and the
+status-store reader, the conf profiles, the float rule and the DuckDB
+star views must each live in one place (perfbench/, session.PROFILES
+and check.py), so a second copy cannot drift from what the bench times
+or from what the driver's value hash accepts."""
 
 from __future__ import annotations
 
 import glob
 import importlib.util
 import os
+import re
 import sys
 import threading
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: spelled in pieces so this file does not match its own search
-STATUS_STORE_CALL = "statusStore" + "()"
-JOIN_PROFILE_CONF = "spark.sql.join." + "preferSortMergeJoin"
+#: regexes, spelled in pieces so this file does not match its own search
+STATUS_STORE_CALL = re.escape("statusStore" + "()")
+JOIN_PROFILE_CONF = re.escape("spark.sql.join." + "preferSortMergeJoin")
+FLOAT_TOLERANCE = re.escape("math." + "isclose")
+EXACT_ENV_READ = r"""(environ\.get\(|environ\[|getenv\()\s*["']EXACT["']"""
+DUCKDB_VIEW = r"(?i)CREATE\s+(OR\s+REPLACE\s+)?VIEW\b"
 
 
 def _py_files() -> list[str]:
@@ -38,7 +43,7 @@ def _sites(needle: str, allowed) -> list[str]:
         if rel.startswith("perfbench" + os.sep) or rel in allowed:
             continue
         with open(path, encoding="utf-8") as fh:
-            if needle in fh.read():
+            if re.search(needle, fh.read()):
                 sites.append(rel)
     return sites
 
@@ -65,6 +70,30 @@ def test_status_store_read_only_in_perfbench():
 def test_join_conf_profiles_only_in_session():
     allowed = {os.path.join("sqlondataframesr_spark", "session.py")}
     assert _sites(JOIN_PROFILE_CONF, allowed) == []
+
+
+def test_no_second_float_rule():
+    sites = _sites(FLOAT_TOLERANCE, ())
+    assert [s for s in sites if s.startswith(("tests" + os.sep, "scripts" + os.sep))] == []
+    assert _sites(EXACT_ENV_READ, ()) == []
+
+
+def test_duckdb_views_only_in_check():
+    # besides check.py, a view may read only one of the two fixtures that
+    # are not the parquet star: the Stack-Exchange CSVs and the planted
+    # embedding vectors
+    fixture_reads = {
+        os.path.join("tests", "test_stackexchange.py"): "read_csv_auto(",
+        os.path.join("tests", "test_llm_ops.py"): "read_parquet('{pq}/",
+    }
+    sites = []
+    for rel in _sites(DUCKDB_VIEW, {os.path.join("sqlondataframesr_spark", "check.py")}):
+        fixture = fixture_reads.get(rel)
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
+            for n, line in enumerate(fh, 1):
+                if re.search(DUCKDB_VIEW, line) and not (fixture and fixture in line):
+                    sites.append(f"{rel}:{n}")
+    assert sites == []
 
 
 def test_bench_tracer_counts_jobs_run_under_another_group(spark):
