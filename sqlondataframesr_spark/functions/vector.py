@@ -8,24 +8,26 @@ SQL-text builders (not Column objects) so they compose into both
 
 from __future__ import annotations
 
+from .dialect import Dialect
+from .rounding import r6_sql
+
 
 def to_double(col: str = "embedding") -> str:
     """Cast array<float> → array<double> once, before any arithmetic."""
     return f"transform({col}, x -> cast(x as double))"
 
 
-def dot(a: str, b: str) -> str:
-    """Dot product via zip_with + fold (stays in whole-stage codegen)."""
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (a, x) -> a + x)"
-
-
 def l2_norm(v: str) -> str:
     return f"sqrt(aggregate({v}, 0D, (a, x) -> a + x * x))"
 
 
-def cosine(a: str, b: str, na: str, nb: str, decimals: int = 6) -> str:
-    """Cosine from precomputed norms, rounded for cross-engine
-    comparability (see llm/similarity.py determinism notes).
+def cosine(d: Dialect, a: str, b: str, na: str, nb: str, dim: int) -> str:
+    """Cosine of two ``dim``-long lists from precomputed norms, rounded
+    for cross-engine comparability (see llm/similarity.py determinism
+    notes). The dot product is an indexed left-to-right sum in DuckDB
+    and a ``zip_with`` fold in Spark (:meth:`Dialect.zip_sum`: same
+    order, so the same double); ``F.expr`` call sites take the
+    ``SPARK`` rendering.
 
     The norm product is NULLIF-guarded: a zero-norm vector (possible
     for sliced prefixes, e.g. the Matryoshka 16-dim head) must yield
@@ -39,14 +41,7 @@ def cosine(a: str, b: str, na: str, nb: str, decimals: int = 6) -> str:
     decimal representation (BigDecimal HALF_UP) while DuckDB scales in
     float, and the skew tree's dense cluster produced 58 cosines where
     the two differ in the 6th decimal (0.995578 vs 0.995577). The
-    ``floor(x * 1e6 + 0.5) / 1e6`` spelling uses only IEEE-754
+    :func:`~.rounding.r6_sql` spelling uses only IEEE-754
     multiply/add/floor/divide — each correctly rounded and therefore
     bit-identical on both engines for every input."""
-    # CAST(... AS DOUBLE) literals: Spark parses a bare 1000000.0 as
-    # DECIMAL, which would silently change the output type; the CAST
-    # spelling is double on both engines.
-    scale = f"CAST({10 ** decimals}.0 AS DOUBLE)"
-    return (
-        f"(floor(({dot(a, b)} / nullif({na} * {nb}, 0))"
-        f" * {scale} + CAST(0.5 AS DOUBLE)) / {scale})"
-    )
+    return r6_sql(f"{d.zip_sum(a, b, dim)} / nullif({na} * {nb}, 0)")

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import pq as _pq
+from ..functions.dialect import Dialect, render
 from . import similarity as _sim
 from ..materialize import materialize
 
@@ -117,14 +118,14 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_sql(texts: dict[str, str], bf_text: str, intdiv: str) -> str:
+def _recall_sql(d: Dialect) -> str:
     """Literal composition of the per-method top-k SQL texts — each
     already-gated statement becomes a nested subquery, so the composed
-    report is exactly as trustworthy as its parts. Shared by the
-    DuckDB oracle and (r12, once ann_ivf_trained gained its kmeans-
-    unroll dual) the Spark-SQL dual."""
+    report is exactly as trustworthy as its parts."""
+    texts = _sim.TEMPLATES | _pq.TEMPLATES
+    bf_text = texts["ann_cosine_topk"](d)
     branches = " UNION ALL ".join(
-        f"SELECT '{label}' AS method, q_id, neighbor_id FROM ({texts[key]}) t_{label}"
+        f"SELECT '{label}' AS method, q_id, neighbor_id FROM ({texts[key](d)}) t_{label}"
         for label, _, key in _METHODS
     )
     return f"""
@@ -145,44 +146,13 @@ hits AS (
 )
 SELECT method, CAST(n_hits AS BIGINT) AS n_hits,
        CAST(n_possible AS BIGINT) AS n_possible,
-       CAST(n_hits * 1000000 {intdiv} n_possible AS BIGINT) AS recall_ppm
+       CAST({d.idiv('n_hits * 1000000', 'n_possible')} AS BIGINT) AS recall_ppm
 FROM hits ORDER BY method
 """
 
 
-def _recall_oracle() -> str:
-    from . import pq as pqmod
-    from . import similarity as simmod
-
-    return _recall_sql(
-        {
-            "ann_ivf_topk": simmod.ANN_IVF_TOPK_ORACLE,
-            "ann_ivf_pq_topk": pqmod.ORACLES["ann_ivf_pq_topk"],
-            "ann_ivf_trained": simmod.ORACLES["ann_ivf_trained"],
-            "ann_lsh_topk": simmod.ANN_LSH_TOPK_ORACLE,
-            "ann_matryoshka_topk": simmod.ANN_MATRYOSHKA_TOPK_ORACLE,
-            "ann_pq_adc": pqmod.ORACLES["ann_pq_adc"],
-            "ann_sq8_topk": simmod.ANN_SQ8_TOPK_ORACLE,
-        },
-        _sim.ANN_COSINE_TOPK_ORACLE,
-        "//",
-    )
-
-
-def _recall_spark_sql() -> str:
-    from . import pq as pqmod
-    from . import similarity as simmod
-
-    return _recall_sql(
-        {k: simmod.SPARK_SQL[k]
-         for k in ["ann_ivf_topk", "ann_ivf_trained", "ann_lsh_topk",
-                   "ann_matryoshka_topk", "ann_sq8_topk"]}
-        | {k: pqmod.SPARK_SQL[k] for k in ["ann_pq_adc", "ann_ivf_pq_topk"]},
-        simmod.SPARK_SQL["ann_cosine_topk"],
-        "div",
-    )
-
-
 QUERIES = {"ann_recall_report": ann_recall_report}
-ORACLES = {"ann_recall_report": _recall_oracle()}
-SPARK_SQL: dict[str, str] = {"ann_recall_report": _recall_spark_sql()}
+TEMPLATES = {
+    "ann_recall_report": _recall_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

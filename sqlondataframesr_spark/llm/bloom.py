@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..materialize import materialize
 from .decontam import CONTAM_THRESHOLD, EVAL_MOD
-from .dedup import _SHINGLES_SPARK_SQL, _SHINGLES_SQL, _with_shingles
+from ..functions.dialect import Dialect, render
+from .dedup import _with_shingles, shingles_sql
 
 #: filter geometry — M sized so the tiny test eval set stays sparse
 #: (~2k eval shingles at sf0.01 -> ~1.5 bits/key load with K=3);
@@ -52,7 +53,7 @@ K_HASHES = 3
 _WORDS = M_BITS // 64
 
 
-def _pos_spark(j: int, s: str) -> str:
+def _bit_pos(j: int, s: str) -> str:
     """Bit position of salt ``j`` for shingle expression ``s`` —
     md5-prefix bucket, the repo-standard deterministic hash."""
     return (
@@ -61,8 +62,11 @@ def _pos_spark(j: int, s: str) -> str:
     )
 
 
-def _pos_duck(j: int, s: str) -> str:
-    return f"(('0x' || substr(md5('{j}:' || {s}), 1, 8))::BIGINT % {M_BITS})"
+def _pos_sql(d: Dialect, j: int, s: str) -> str:
+    """:func:`_bit_pos` as SQL (the hash is non-negative, so ``%`` is
+    ``pmod``)."""
+    salted = f"'{j}:' || {s}"
+    return f"({d.hex_bigint(f'substr(md5({salted}), 1, 8)')} % {M_BITS})"
 
 
 def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,7 +86,7 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = (
         eval_sh.select(
             F.explode(
-                F.array(*[F.expr(_pos_spark(j, "s")) for j in range(K_HASHES)])
+                F.array(*[F.expr(_bit_pos(j, "s")) for j in range(K_HASHES)])
             ).alias("p")
         )
         .distinct()
@@ -106,8 +110,8 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode("sh").alias("s")
     )
     bit_ok = " AND ".join(
-        f"((coalesce(element_at(bm, cast({_pos_spark(j, 's')} div 64 as int)), 0L)"
-        f" >> cast({_pos_spark(j, 's')} % 64 as int)) & 1) = 1"
+        f"((coalesce(element_at(bm, cast({_bit_pos(j, 's')} div 64 as int)), 0L)"
+        f" >> cast({_bit_pos(j, 's')} % 64 as int)) & 1) = 1"
         for j in range(K_HASHES)
     )
     hits = train_sh.join(F.broadcast(bitmap)).filter(F.expr(bit_ok)).select(
@@ -143,31 +147,32 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _member_duck() -> str:
+def _member_sql(d: Dialect) -> str:
     return " AND ".join(
-        f"{_pos_duck(j, 't.s')} IN (SELECT p FROM pos)" for j in range(K_HASHES)
+        f"{_pos_sql(d, j, 't.s')} IN (SELECT p FROM pos)" for j in range(K_HASHES)
     )
 
 
-BLOOM_DECONTAM_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
+def _decontam_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
 eval_sh AS (
-  SELECT DISTINCT unnest(sh) AS s FROM s WHERE doc_id % {EVAL_MOD} = 0
+  SELECT DISTINCT {d.fn('unnest', 'sh')} AS s FROM s WHERE doc_id % {EVAL_MOD} = 0
 ),
 pos AS (
-  {" UNION ".join(f"SELECT DISTINCT {_pos_duck(j, 's')} AS p FROM eval_sh" for j in range(K_HASHES))}
+  {" UNION ".join(f"SELECT DISTINCT {_pos_sql(d, j, 's')} AS p FROM eval_sh" for j in range(K_HASHES))}
 ),
 train AS (SELECT doc_id, sh FROM s WHERE doc_id % {EVAL_MOD} != 0),
-train_e AS (SELECT doc_id, unnest(sh) AS s FROM train),
+train_e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS s FROM train),
 hits AS (
-  SELECT t.doc_id, t.s FROM train_e t WHERE {_member_duck()}
+  SELECT t.doc_id, t.s FROM train_e t WHERE {_member_sql(d)}
 ),
 bloom_cnt AS (SELECT doc_id, COUNT(*) AS n_bloom_hits FROM hits GROUP BY doc_id),
 overlap AS (
   SELECT h.doc_id, COUNT(*) AS n_overlap
   FROM hits h JOIN eval_sh e ON h.s = e.s GROUP BY h.doc_id
 ),
-sizes AS (SELECT doc_id, len(sh) AS n_shingles FROM train)
+sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_shingles FROM train)
 SELECT d.doc_id,
        CAST(COALESCE(sz.n_shingles, 0) AS BIGINT) AS n_shingles,
        CAST(COALESCE(b.n_bloom_hits, 0) AS BIGINT) AS n_bloom_hits,
@@ -175,54 +180,13 @@ SELECT d.doc_id,
        (CASE WHEN COALESCE(sz.n_shingles, 0) > 0
              THEN CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
                   / CAST(sz.n_shingles AS DOUBLE)
-             ELSE 0.0 END) >= {CONTAM_THRESHOLD} AS contaminated
+             ELSE 0.0{d.D} END) >= {CONTAM_THRESHOLD}{d.D} AS contaminated
 FROM (SELECT doc_id FROM documents WHERE doc_id % {EVAL_MOD} != 0) d
 LEFT JOIN sizes sz USING (doc_id)
 LEFT JOIN bloom_cnt b USING (doc_id)
 LEFT JOIN overlap o USING (doc_id)
 ORDER BY d.doc_id
 """
-
-#: Spark-SQL twin — deliberately the SET formulation (IN subqueries)
-#: rather than the fluent plan's packed-word bitset: the N-version
-#: check then proves bitset-shift membership == positional-set
-#: membership, the semantic heart of the filter.
-BLOOM_DECONTAM_SPARK_SQL = f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-eval_sh AS (
-  SELECT DISTINCT sx AS s FROM (SELECT explode(sh) AS sx FROM s
-                                WHERE doc_id % {EVAL_MOD} = 0)
-),
-pos AS (
-  {" UNION ".join(f"SELECT DISTINCT {_pos_spark(j, 's')} AS p FROM eval_sh" for j in range(K_HASHES))}
-),
-train AS (SELECT doc_id, sh FROM s WHERE doc_id % {EVAL_MOD} != 0),
-train_e AS (SELECT doc_id, explode(sh) AS s FROM train),
-hits AS (
-  SELECT t.doc_id, t.s FROM train_e t
-  WHERE {" AND ".join(f"{_pos_spark(j, 't.s')} IN (SELECT p FROM pos)" for j in range(K_HASHES))}
-),
-bloom_cnt AS (SELECT doc_id, COUNT(1) AS n_bloom_hits FROM hits GROUP BY doc_id),
-overlap AS (
-  SELECT h.doc_id, COUNT(1) AS n_overlap
-  FROM hits h JOIN eval_sh e ON h.s = e.s GROUP BY h.doc_id
-),
-sizes AS (SELECT doc_id, size(sh) AS n_shingles FROM train)
-SELECT d.doc_id,
-       CAST(COALESCE(sz.n_shingles, 0) AS BIGINT) AS n_shingles,
-       CAST(COALESCE(b.n_bloom_hits, 0) AS BIGINT) AS n_bloom_hits,
-       CAST(COALESCE(o.n_overlap, 0) AS BIGINT) AS n_overlap,
-       (CASE WHEN COALESCE(sz.n_shingles, 0) > 0
-             THEN CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
-                  / CAST(sz.n_shingles AS DOUBLE)
-             ELSE 0.0D END) >= {CONTAM_THRESHOLD}D AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % {EVAL_MOD} != 0) d
-LEFT JOIN sizes sz USING (doc_id)
-LEFT JOIN bloom_cnt b USING (doc_id)
-LEFT JOIN overlap o USING (doc_id)
-ORDER BY d.doc_id
-"""
-
 
 #: semi-join filter geometry: sized for the big-order key count at
 #: sf0.1 (~1.5k keys at sf0.01 -> fp ~0.03%; deliberately saturates toward ~12% at sf0.1s 15k keys so the report SHOWS what an under-sized filter costs)
@@ -231,18 +195,16 @@ SJ_M_BITS = 65536
 SJ_MIN_TOTAL = 450000
 
 
-def _sj_pos_spark(j: int, s: str) -> str:
+def _sj_bit_pos(j: int, s: str) -> str:
     return (
         f"pmod(cast(conv(substring(md5(concat('{j}:', {s})), 1, 8), 16, 10)"
         f" as bigint), {SJ_M_BITS})"
     )
 
 
-def _sj_pos_duck(j: int, s: str) -> str:
-    return (
-        f"((('0x' || substr(md5('{j}:' || {s}), 1, 8))::BIGINT)"
-        f" % {SJ_M_BITS})"
-    )
+def _sj_pos_sql(d: Dialect, j: int, s: str) -> str:
+    salted = f"'{j}:' || {s}"
+    return f"(({d.hex_bigint(f'substr(md5({salted}), 1, 8)')}) % {SJ_M_BITS})"
 
 
 def bloom_semijoin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,7 +236,7 @@ def bloom_semijoin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct().transform(materialize)
     pos = keys.select(
         F.explode(
-            F.array(*[F.expr(_sj_pos_spark(j, "k")) for j in range(K_HASHES)])
+            F.array(*[F.expr(_sj_bit_pos(j, "k")) for j in range(K_HASHES)])
         ).alias("p")
     ).distinct()
     bitmap = (
@@ -296,9 +258,9 @@ def bloom_semijoin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(l_orderkey as string) as k"
     )
     bit_ok = " AND ".join(
-        f"((coalesce(element_at(bm, cast({_sj_pos_spark(j, 'k')} div 64"
+        f"((coalesce(element_at(bm, cast({_sj_bit_pos(j, 'k')} div 64"
         f" as int)), 0L)"
-        f" >> cast({_sj_pos_spark(j, 'k')} % 64 as int)) & 1) = 1"
+        f" >> cast({_sj_bit_pos(j, 'k')} % 64 as int)) & 1) = 1"
         for j in range(K_HASHES)
     )
     probed = fact.join(F.broadcast(bitmap)).selectExpr(
@@ -338,21 +300,21 @@ def bloom_semijoin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sj_sql(pos_fn, div: str) -> str:
+def _sj_sql(d: Dialect) -> str:
     member = " AND ".join(
-        f"{pos_fn(j, 'f.k')} IN (SELECT p FROM pos)" for j in range(K_HASHES)
+        f"{_sj_pos_sql(d, j, 'f.k')} IN (SELECT p FROM pos)" for j in range(K_HASHES)
     )
     pos_union = " UNION ".join(
-        f"SELECT DISTINCT {pos_fn(j, 'k')} AS p FROM keys"
+        f"SELECT DISTINCT {_sj_pos_sql(d, j, 'k')} AS p FROM keys"
         for j in range(K_HASHES)
     )
     return f"""
 WITH keys AS (
-  SELECT DISTINCT CAST(o_orderkey AS STRING) AS k FROM orders
+  SELECT DISTINCT CAST(o_orderkey AS {d.varchar}) AS k FROM orders
   WHERE o_totalprice >= {SJ_MIN_TOTAL}
 ),
 pos AS ({pos_union}),
-fact AS (SELECT CAST(l_orderkey AS STRING) AS k FROM lineitem),
+fact AS (SELECT CAST(l_orderkey AS {d.varchar}) AS k FROM lineitem),
 flagged AS (
   SELECT f.k,
          CASE WHEN {member} THEN 1 ELSE 0 END AS bloom_pass,
@@ -371,26 +333,17 @@ agg AS (
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM keys) AS n_dim_keys,
        n_fact_rows, n_true_match, n_bloom_pass, n_false_pos,
        n_false_pos * 1000000
-         {div} nullif(n_fact_rows - n_true_match, 0) AS fp_nonmatch_ppm
+         {d.div} nullif(n_fact_rows - n_true_match, 0) AS fp_nonmatch_ppm
 FROM agg
 """
-
-
-BLOOM_SEMIJOIN_ORACLE = _sj_sql(_sj_pos_duck, "//").replace(
-    "AS STRING)", "AS VARCHAR)"
-)
-BLOOM_SEMIJOIN_SPARK_SQL = _sj_sql(_sj_pos_spark, "div")
 
 
 QUERIES = {
     "bloom_decontam": bloom_decontam,
     "bloom_semijoin_report": bloom_semijoin_report,
 }
-ORACLES = {
-    "bloom_decontam": BLOOM_DECONTAM_ORACLE,
-    "bloom_semijoin_report": BLOOM_SEMIJOIN_ORACLE,
+TEMPLATES = {
+    "bloom_decontam": _decontam_sql,
+    "bloom_semijoin_report": _sj_sql,
 }
-SPARK_SQL: dict[str, str] = {
-    "bloom_decontam": BLOOM_DECONTAM_SPARK_SQL,
-    "bloom_semijoin_report": BLOOM_SEMIJOIN_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
+from ..functions.dialect import Dialect, render
 from ..functions.rounding import r6 as _r6
 
 K1 = 1.2
@@ -120,12 +121,15 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ctes(tok_expr: str) -> str:
-    """The shared CTE chain (everything WITH..r) parameterized only by
-    the tokenizer spelling — DuckDB ``unnest(string_split(..))`` vs
-    Spark ``explode(split(..))``; reused by the hybrid-RRF oracle."""
+def _toks(d: Dialect) -> str:
+    return d.fn("unnest", d.fn("string_split", "text", "' '"))
+
+
+def bm25_ctes(d: Dialect) -> str:
+    """The shared CTE chain (everything WITH..r); reused by the
+    hybrid-RRF SQL."""
     return f"""toks AS (
-  SELECT doc_id, {tok_expr} AS term FROM documents
+  SELECT doc_id, {_toks(d)} AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
@@ -158,16 +162,14 @@ bm25_ranked AS (
 )"""
 
 
-BM25_CTES_DUCK = _ctes("unnest(string_split(text, ' '))")
-BM25_CTES_SPARK = _ctes("explode(split(text, ' '))")
-
-
 BM25_FINAL_SELECT = (
     "SELECT q_id, doc_id, score, rnk FROM bm25_ranked"
     " WHERE rnk <= {k} ORDER BY q_id, rnk".format(k=BM25_TOP_K)
 )
 
-BM25_TOPK_ORACLE = "WITH " + BM25_CTES_DUCK + "\n" + BM25_FINAL_SELECT
+
+def _bm25_sql(d: Dialect) -> str:
+    return "WITH " + bm25_ctes(d) + "\n" + BM25_FINAL_SELECT
 
 #: Dirichlet smoothing mass (Zhai & Lafferty's classic default)
 QL_MU = 2000
@@ -264,11 +266,11 @@ def ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ql_sql(tok_expr: str) -> str:
+def _ql_sql(d: Dialect) -> str:
     pc = "(CAST(c.cf AS DOUBLE) / CAST(ct.ctot AS DOUBLE))"
     return f"""
 WITH toks AS (
-  SELECT doc_id, {tok_expr} AS term FROM documents
+  SELECT doc_id, {_toks(d)} AS term FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
@@ -317,16 +319,9 @@ WHERE rnk <= {BM25_TOP_K} ORDER BY q_id, rnk
 """
 
 
-QL_TOPK_ORACLE = _ql_sql("unnest(string_split(text, ' '))")
-QL_TOPK_SPARK_SQL = _ql_sql("explode(split(text, ' '))")
-
-
 QUERIES = {"bm25_topk": bm25_topk, "ql_dirichlet_topk": ql_dirichlet_topk}
-ORACLES = {
-    "bm25_topk": BM25_TOPK_ORACLE,
-    "ql_dirichlet_topk": QL_TOPK_ORACLE,
+TEMPLATES = {
+    "bm25_topk": _bm25_sql,
+    "ql_dirichlet_topk": _ql_sql,
 }
-SPARK_SQL: dict[str, str] = {
-    "bm25_topk": "WITH " + BM25_CTES_SPARK + "\n" + BM25_FINAL_SELECT,
-    "ql_dirichlet_topk": QL_TOPK_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: number of merge rounds to learn (real tokenizers: ~32k; unrolled
 #: here like the pagerank iterations, enough to pin the algorithm)
@@ -183,60 +184,37 @@ def bpe_apply_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_sql(dialect: str, mode: str = "learn") -> str:
-    """Unrolled CTE chain for the identical computation.
+#: the symbol separator of a spaced word
+_SEP = "'  '"
 
-    dialect='duck': DuckDB list slicing + parallel unnest.
-    dialect='spark': explode(zip_with(...)) pair extraction.
-    mode='learn': emit the merge table; mode='apply': emit per-doc
-    post-merge token counts from the fully-merged type table.
-    """
-    if dialect == "duck":
-        words = r"""
+
+def _bpe_sql(d: Dialect, mode: str = "learn") -> str:
+    """Unrolled CTE chain for the identical computation. mode='learn':
+    emit the merge table; mode='apply': emit per-doc post-merge token
+    counts from the fully-merged type table."""
+    tokens = d.fn("unnest", d.fn("regexp_split_to_array", "lower(text)", "'[^a-z]+'"))
+    words = f"""
   SELECT w AS word, CAST(COUNT(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS w
+  FROM (SELECT {tokens} AS w
         FROM documents)
   WHERE length(w) >= 2
   GROUP BY w"""
-        w0 = (
-            r"SELECT word, trim(regexp_replace(word, '(.)', '\1  ', 'g')) AS sp,"
-            " freq FROM words"
-        )
-        pairs = (
-            "SELECT unnest(l[1:len(l)-1]) AS lft, unnest(l[2:len(l)]) AS rgt, freq"
-            " FROM (SELECT string_split(sp, '  ') AS l, freq FROM {w})"
-        )
-        cnt = "CAST(SUM(freq) AS BIGINT)"
-        n_sym = "CAST(len(string_split(sp, '  ')) AS BIGINT)"
-        occ = """
+    spaced = d.regexp_replace_all("word", "'(.)'", f"'{d.backref(1)}  '")
+    w0 = f"SELECT word, trim({spaced}) AS sp, freq FROM words"
+    n = d.fn("len", "l")
+    lft, rgt = d.slice("l", 1, f"{n}-1", f"{n} - 1"), d.slice("l", 2, n, f"{n} - 1")
+    pairs = (
+        f"SELECT {d.unnest_zip((lft, 'lft'), (rgt, 'rgt'))}, freq"
+        f" FROM (SELECT {d.fn('string_split', 'sp', _SEP)} AS l, freq FROM {{w}})"
+    )
+    cnt = "CAST(SUM(freq) AS BIGINT)"
+    n_sym = f"CAST({d.fn('len', d.fn('string_split', 'sp', _SEP))} AS BIGINT)"
+    occ = f"""
   SELECT doc_id, w AS word
-  FROM (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '[^a-z]+')) AS w
+  FROM (SELECT doc_id, {tokens} AS w
         FROM documents)
   WHERE length(w) >= 2"""
-        agg = "CAST(COUNT(*) AS BIGINT) AS n_words, CAST(SUM(map.n_sym) AS BIGINT) AS n_tokens"
-    else:
-        words = r"""
-  SELECT w AS word, COUNT(*) AS freq
-  FROM (SELECT explode(split(lower(text), '[^a-z]+')) AS w FROM documents)
-  WHERE length(w) >= 2
-  GROUP BY w"""
-        w0 = (
-            "SELECT word, trim(regexp_replace(word, '(.)', '$1  ')) AS sp,"
-            " freq FROM words"
-        )
-        pairs = (
-            "SELECT p.lft AS lft, p.rgt AS rgt, freq"
-            " FROM (SELECT explode(zip_with(slice(l, 1, size(l) - 1),"
-            " slice(l, 2, size(l) - 1), (a, b) -> struct(a AS lft, b AS rgt))) AS p,"
-            " freq FROM (SELECT split(sp, '  ') AS l, freq FROM {w}))"
-        )
-        cnt = "SUM(freq)"
-        n_sym = "CAST(size(split(sp, '  ')) AS BIGINT)"
-        occ = """
-  SELECT doc_id, w AS word
-  FROM (SELECT doc_id, explode(split(lower(text), '[^a-z]+')) AS w FROM documents)
-  WHERE length(w) >= 2"""
-        agg = "COUNT(*) AS n_words, SUM(map.n_sym) AS n_tokens"
+    agg = "CAST(COUNT(*) AS BIGINT) AS n_words, CAST(SUM(map.n_sym) AS BIGINT) AS n_tokens"
     ctes = [f"words AS ({words})", f"w0 AS ({w0})"]
     for i in range(MERGES):
         ctes.append(
@@ -269,20 +247,12 @@ def _oracle_sql(dialect: str, mode: str = "learn") -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + tail
 
 
-BPE_LEARN_ORACLE = _oracle_sql("duck")
-BPE_LEARN_SPARK_SQL = _oracle_sql("spark")
-BPE_APPLY_ORACLE = _oracle_sql("duck", mode="apply")
-BPE_APPLY_SPARK_SQL = _oracle_sql("spark", mode="apply")
-
 QUERIES = {
     "bpe_learn_merges": bpe_learn_merges,
     "bpe_apply_token_counts": bpe_apply_token_counts,
 }
-ORACLES = {
-    "bpe_learn_merges": BPE_LEARN_ORACLE,
-    "bpe_apply_token_counts": BPE_APPLY_ORACLE,
+TEMPLATES = {
+    "bpe_learn_merges": _bpe_sql,
+    "bpe_apply_token_counts": lambda d: _bpe_sql(d, mode="apply"),
 }
-SPARK_SQL = {
-    "bpe_learn_merges": BPE_LEARN_SPARK_SQL,
-    "bpe_apply_token_counts": BPE_APPLY_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

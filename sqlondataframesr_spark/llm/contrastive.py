@@ -35,16 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize
-from ..functions.rounding import r6 as _r6
-from .semdedup import _cap_cte, _final_assign_sql, capped_partners
+from ..functions import vector as V
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
+from .semdedup import cap_cte, capped_partners, final_assign_sql, trained_prefix_sql
 from .similarity import (
-    KM_ITERS,
-    _COS,
-    _COS_DUCK,
+    DIM,
     _assign_lists,
     _kmeans_centroids,
-    _kmeans_parts,
-    _kmeans_spark_parts,
     _vectors,
 )
 
@@ -81,7 +79,7 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a_id",
             "b_id",
-            F.expr(_COS.format(a="va", b="vb", na="na", nb="nb")).alias("cos"),
+            F.expr(V.cosine(SPARK, "va", "vb", "na", "nb", DIM)).alias("cos"),
         )
     )
     pos = (
@@ -116,26 +114,24 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _contrastive_sql(cos_tpl: str, parts: list[str]) -> str:
-    cos = cos_tpl.format(a="a.v", b="b.v", na="a.nrm", nb="b.nrm")
+def _contrastive_sql(d: Dialect) -> str:
+    cos = V.cosine(d, "a.v", "b.v", "a.nrm", "b.nrm", DIM)
     return (
-        "WITH "
-        + ",\n".join(parts)
-        + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _final_assign_sql(cos_tpl)
+        trained_prefix_sql(d)
+        + final_assign_sql(d)
         + f""",
-{_cap_cte()},
+{cap_cte()},
 pairs AS (
   SELECT a.vec_id AS a_id, b.vec_id AS b_id, {cos} AS cos
   FROM m a JOIN ma b ON a.list_id = b.list_id AND a.vec_id <> b.vec_id),
 pos AS (
-  SELECT a_id, b_id AS pos_id, (floor((cos) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS pos_cos FROM (
+  SELECT a_id, b_id AS pos_id, {r6_sql('cos')} AS pos_cos FROM (
     SELECT a_id, b_id, cos,
            ROW_NUMBER() OVER (PARTITION BY a_id
                               ORDER BY cos DESC, b_id ASC) AS rn
     FROM pairs WHERE cos >= {POS_T}) WHERE rn = 1),
 neg AS (
-  SELECT a_id, b_id AS neg_id, (floor((cos) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS neg_cos FROM (
+  SELECT a_id, b_id AS neg_id, {r6_sql('cos')} AS neg_cos FROM (
     SELECT a_id, b_id, cos,
            ROW_NUMBER() OVER (PARTITION BY a_id
                               ORDER BY cos DESC, b_id ASC) AS rn
@@ -152,8 +148,7 @@ ORDER BY m.vec_id"""
 
 
 QUERIES = {"contrastive_pairs": contrastive_pairs}
-ORACLES = {"contrastive_pairs": _contrastive_sql(_COS_DUCK, _kmeans_parts())}
-# Spark-SQL N-version twin (three-way agreement like semdedup)
-SPARK_SQL: dict[str, str] = {
-    "contrastive_pairs": _contrastive_sql(_COS, _kmeans_spark_parts())
+TEMPLATES = {
+    "contrastive_pairs": _contrastive_sql,
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
+from .sampling import bucket_sql
 
 #: "paragraph" width in words for boilerplate stripping
 SEG_W = 8
@@ -44,12 +46,6 @@ MIN_TTR = 0.3
 #: bigram collocation thresholds
 PMI_MIN_COUNT = 5
 PMI_TOP_K = 50
-
-_BUCKET1000_SPARK = (
-    "pmod(cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint), 1000)"
-)
-_BUCKET1000_DUCK = "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 1000)"
-
 
 # ---------------------------------------------------------------------------
 # Boilerplate stripping (CCNet-style paragraph dedup, arXiv:1911.00359)
@@ -114,23 +110,24 @@ def corpus_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_BOILERPLATE_STRIP_ORACLE = f"""
-WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+def _boilerplate_sql(d: Dialect) -> str:
+    return f"""
+WITH words AS (SELECT doc_id, {d.fn('string_split', 'text', "' '")} AS w FROM documents),
 idx AS (SELECT doc_id, w,
-               unnest(range(0, CAST(ceil(len(w) / {SEG_W}.0) AS BIGINT))) AS k
+               {d.fn('unnest', d.seq(0, f"CAST(ceil({d.fn('len', 'w')} / {SEG_W}.0) AS BIGINT)"))} AS k
         FROM words),
 segs AS (SELECT doc_id, k,
-                array_to_string(list_slice(w, k * {SEG_W} + 1, k * {SEG_W} + {SEG_W}), ' ') AS seg
+                {d.fn('array_to_string', d.list_slice('w', f'k * {SEG_W} + 1', f'k * {SEG_W} + {SEG_W}', SEG_W), "' '")} AS seg
          FROM idx),
 hot AS (SELECT seg FROM segs GROUP BY seg
         HAVING count(DISTINCT doc_id) > {SEG_DF_CAP}),
 kept AS (SELECT doc_id, k, seg FROM segs
          WHERE seg NOT IN (SELECT seg FROM hot)),
-clean AS (SELECT doc_id, string_agg(seg, ' ' ORDER BY k) AS clean_text,
+clean AS (SELECT doc_id, {d.string_agg('seg', "' '", 'k')} AS clean_text,
                  count(*) AS n_kept
           FROM kept GROUP BY doc_id),
 tot AS (SELECT doc_id,
-               CAST(ceil(len(string_split(text, ' ')) / {SEG_W}.0) AS BIGINT) AS n_segments
+               CAST(ceil({d.fn('len', d.fn('string_split', 'text', "' '"))} / {SEG_W}.0) AS BIGINT) AS n_segments
         FROM documents)
 SELECT t.doc_id, coalesce(c.clean_text, '') AS clean_text, t.n_segments,
        CAST(t.n_segments - coalesce(c.n_kept, 0) AS BIGINT) AS n_removed
@@ -156,12 +153,13 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.expr("size(split(text, ' '))").alias("n_words"),
         F.expr(
-            "(floor((aggregate(split(text, ' '), 0L, (acc, x) -> acc + length(x))"
-            " / CAST(size(split(text, ' ')) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
+            r6_sql(
+                "aggregate(split(text, ' '), 0L, (acc, x) -> acc + length(x))"
+                " / CAST(size(split(text, ' ')) AS DOUBLE)"
+            )
         ).alias("mean_word_len"),
         F.expr(
-            "(floor((CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)"
-            " / size(split(text, ' '))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
+            r6_sql("CAST(size(array_distinct(split(text, ' '))) AS DOUBLE) / size(split(text, ' '))")
         ).alias("ttr"),
     ).select(
         "doc_id",
@@ -184,23 +182,25 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_GOPHER_RULES_ORACLE = f"""
+def _gopher_sql(d: Dialect) -> str:
+    split = d.fn("string_split", "text", "' '")
+    return f"""
 WITH m AS (
   SELECT doc_id, lang,
-         len(string_split(text, ' ')) AS n_words,
-         (floor((list_sum(list_transform(string_split(text, ' '), x -> length(x)))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS mean_word_len,
-         (floor((CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / len(string_split(text, ' '))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr
+         {d.fn('len', split)} AS n_words,
+         {r6_sql(f'''{d.list_sum(d.fn('list_transform', split, 'x -> length(x)'), '0L')}
+               / CAST({d.fn('len', split)} AS DOUBLE)''')} AS mean_word_len,
+         {r6_sql(f'''CAST({d.fn('len', d.fn('list_distinct', split))} AS DOUBLE)
+               / {d.fn('len', split)}''')} AS ttr
   FROM documents
 )
 SELECT doc_id, lang, CAST(n_words AS INT) AS n_words, mean_word_len, ttr,
        CAST(n_words BETWEEN {MIN_WORDS} AND {MAX_WORDS} AS INT) AS pass_word_count,
-       CAST(mean_word_len BETWEEN {MIN_MWL} AND {MAX_MWL} AS INT) AS pass_mean_word_len,
-       CAST(ttr >= {MIN_TTR} AS INT) AS pass_ttr,
+       CAST(mean_word_len BETWEEN {MIN_MWL}{d.D} AND {MAX_MWL}{d.D} AS INT) AS pass_mean_word_len,
+       CAST(ttr >= {MIN_TTR}{d.D} AS INT) AS pass_ttr,
        CAST(n_words BETWEEN {MIN_WORDS} AND {MAX_WORDS}
-            AND mean_word_len BETWEEN {MIN_MWL} AND {MAX_MWL}
-            AND ttr >= {MIN_TTR} AS INT) AS passes
+            AND mean_word_len BETWEEN {MIN_MWL}{d.D} AND {MAX_MWL}{d.D}
+            AND ttr >= {MIN_TTR}{d.D} AS INT) AS passes
 FROM m
 """
 
@@ -224,7 +224,7 @@ def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate_pm = (
         (F.lit(1) + F.regexp_extract("source", r"src(\d+)", 1).cast("int") % 5) * 100
     )
-    kept = (F.expr(_BUCKET1000_SPARK) < rate_pm).cast("long")
+    kept = (F.expr(bucket_sql(SPARK, 1000)) < rate_pm).cast("long")
     return (
         docs.select("source", rate_pm.alias("rate_pm"), kept.alias("kept"))
         .groupBy("source", "rate_pm")
@@ -241,17 +241,21 @@ def sample_mixture_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_MIXTURE_WEIGHTED_ORACLE = f"""
+_SRC_RE = r"src(\d+)"
+
+
+def _mixture_weighted_sql(d: Dialect) -> str:
+    return f"""
 WITH tagged AS (
   SELECT source,
-         (1 + CAST(regexp_extract(source, 'src(\\d+)', 1) AS INT) % 5) * 100 AS rate_pm,
-         CASE WHEN {_BUCKET1000_DUCK} <
-              (1 + CAST(regexp_extract(source, 'src(\\d+)', 1) AS INT) % 5) * 100
+         (1 + CAST(regexp_extract(source, {d.str_lit(_SRC_RE)}, 1) AS INT) % 5) * 100 AS rate_pm,
+         CASE WHEN {bucket_sql(d, 1000)} <
+              (1 + CAST(regexp_extract(source, {d.str_lit(_SRC_RE)}, 1) AS INT) % 5) * 100
               THEN 1 ELSE 0 END AS kept
   FROM documents
 )
 SELECT source,
-       round(rate_pm / 1000.0, 3) AS rate,
+       round(rate_pm / 1000.0{d.D}, 3) AS rate,
        CAST(count(*) AS BIGINT) AS n_total,
        CAST(SUM(kept) AS BIGINT) AS n_kept
 FROM tagged
@@ -290,10 +294,11 @@ def sample_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("epoch1_key", "doc_id")
 
 
-SAMPLE_EPOCH_SHUFFLE_ORACLE = """
+def _epoch_shuffle_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id,
-       ('0x' || substr(md5('epoch1:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS epoch1_key,
-       ('0x' || substr(md5('epoch2:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS epoch2_key
+       {d.hex_bigint(f"substr(md5('epoch1:' || {d.cast_str('doc_id')}), 1, 12)")} AS epoch1_key,
+       {d.hex_bigint(f"substr(md5('epoch2:' || {d.cast_str('doc_id')}), 1, 12)")} AS epoch2_key
 FROM documents
 ORDER BY epoch1_key, doc_id
 """
@@ -344,11 +349,12 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_BIGRAM_PMI_ORACLE = f"""
-WITH words AS (SELECT string_split(text, ' ') AS w FROM documents),
-bg AS (SELECT w[i] AS a, w[i + 1] AS b
-       FROM (SELECT w, unnest(range(1, len(w))) AS i
-             FROM words WHERE len(w) >= 2)),
+def _bigram_pmi_sql(d: Dialect) -> str:
+    return f"""
+WITH words AS (SELECT {d.fn('string_split', 'text', "' '")} AS w FROM documents),
+bg AS (SELECT {d.at('w', 'i')} AS a, {d.at('w', 'i + 1')} AS b
+       FROM (SELECT w, {d.fn('unnest', d.seq(1, d.fn('len', 'w')))} AS i
+             FROM words WHERE {d.fn('len', 'w')} >= 2)),
 cnt AS (SELECT a, b, count(*) AS c_ab FROM bg GROUP BY a, b),
 win AS (SELECT a, b, c_ab,
                SUM(c_ab) OVER () AS n_tot,
@@ -356,7 +362,7 @@ win AS (SELECT a, b, c_ab,
                SUM(c_ab) OVER (PARTITION BY b) AS c_b
         FROM cnt)
 SELECT a, b, CAST(c_ab AS BIGINT) AS c_ab,
-       (floor((ln(CAST(c_ab AS DOUBLE) * n_tot / (c_a * c_b))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS pmi
+       {r6_sql('ln(CAST(c_ab AS DOUBLE) * n_tot / (c_a * c_b))')} AS pmi
 FROM win
 WHERE c_ab >= {PMI_MIN_COUNT}
 ORDER BY pmi DESC, a, b
@@ -392,13 +398,14 @@ def corpus_stats_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_STATS_BY_SOURCE_ORACLE = """
+def _stats_by_source_sql(d: Dialect) -> str:
+    return f"""
 SELECT source,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
+       CAST(SUM({d.fn('len', d.fn('string_split', 'text', "' '"))}) AS BIGINT) AS total_tokens,
        round(avg(n_chars), 4) AS avg_chars,
-       quantile_cont(n_chars, 0.5) AS med_chars
+       {d.quantile_cont('n_chars', 0.5)} AS med_chars
 FROM documents
 GROUP BY source
 ORDER BY source
@@ -449,36 +456,21 @@ def evt_sequence_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVT_SEQUENCE_EXAMPLES_ORACLE = """
+def _sequence_examples_sql(d: Dialect) -> str:
+    return f"""
 WITH t AS (
   SELECT user_id, event_id, event_type,
-         array_to_string(list(event_type) OVER w, ' ') AS context,
+         {d.fn('array_to_string', d.fn('list', 'event_type') + ' OVER w', "' '")} AS context,
          COUNT(*) OVER w AS n_ctx
   FROM events
   WHERE user_id % 20 = 0
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id
+  WINDOW w AS (PARTITION BY user_id ORDER BY {d.fn('epoch_us', 'ts')}, event_id
                ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
 )
 SELECT user_id, event_id AS target_event_id, context, event_type AS target
 FROM t WHERE n_ctx = 3
 ORDER BY user_id, target_event_id
 """
-
-EVT_SEQUENCE_EXAMPLES_SPARK_SQL = """
-WITH t AS (
-  SELECT user_id, event_id, event_type,
-         array_join(collect_list(event_type) OVER w, ' ') AS context,
-         COUNT(*) OVER w AS n_ctx
-  FROM events
-  WHERE user_id % 20 = 0
-  WINDOW w AS (PARTITION BY user_id ORDER BY unix_micros(ts), event_id
-               ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING)
-)
-SELECT user_id, event_id AS target_event_id, context, event_type AS target
-FROM t WHERE n_ctx = 3
-ORDER BY user_id, target_event_id
-"""
-
 
 QUERIES = {
     "evt_sequence_examples": evt_sequence_examples,
@@ -490,112 +482,13 @@ QUERIES = {
     "corpus_stats_by_source": corpus_stats_by_source,
 }
 
-ORACLES = {
-    "evt_sequence_examples": EVT_SEQUENCE_EXAMPLES_ORACLE,
-    "corpus_boilerplate_strip": CORPUS_BOILERPLATE_STRIP_ORACLE,
-    "text_gopher_rules": TEXT_GOPHER_RULES_ORACLE,
-    "sample_mixture_weighted": SAMPLE_MIXTURE_WEIGHTED_ORACLE,
-    "sample_epoch_shuffle": SAMPLE_EPOCH_SHUFFLE_ORACLE,
-    "text_bigram_pmi": TEXT_BIGRAM_PMI_ORACLE,
-    "corpus_stats_by_source": CORPUS_STATS_BY_SOURCE_ORACLE,
+TEMPLATES = {
+    "evt_sequence_examples": _sequence_examples_sql,
+    "corpus_boilerplate_strip": _boilerplate_sql,
+    "text_gopher_rules": _gopher_sql,
+    "sample_mixture_weighted": _mixture_weighted_sql,
+    "sample_epoch_shuffle": _epoch_shuffle_sql,
+    "text_bigram_pmi": _bigram_pmi_sql,
+    "corpus_stats_by_source": _stats_by_source_sql,
 }
-
-# Spark-SQL N-version twins (fluent ≡ SQL, tests/test_reference_queries.py)
-SPARK_SQL: dict[str, str] = {
-    "evt_sequence_examples": EVT_SEQUENCE_EXAMPLES_SPARK_SQL,
-    "corpus_boilerplate_strip": f"""
-WITH words AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-segs AS (SELECT doc_id, k, array_join(slice(w, k * {SEG_W} + 1, {SEG_W}), ' ') AS seg
-         FROM words
-         LATERAL VIEW explode(sequence(0, CAST(ceil(size(w) / {SEG_W}.0D) AS INT) - 1)) t AS k),
-hot AS (SELECT seg FROM segs GROUP BY seg
-        HAVING count(DISTINCT doc_id) > {SEG_DF_CAP}),
-kept AS (SELECT doc_id, k, seg FROM segs
-         WHERE seg NOT IN (SELECT seg FROM hot)),
-clean AS (SELECT doc_id,
-                 array_join(transform(array_sort(collect_list(struct(k, seg))),
-                            x -> x.seg), ' ') AS clean_text,
-                 count(*) AS n_kept
-          FROM kept GROUP BY doc_id),
-tot AS (SELECT doc_id,
-               CAST(ceil(size(split(text, ' ')) / {SEG_W}.0D) AS BIGINT) AS n_segments
-        FROM documents)
-SELECT t.doc_id, coalesce(c.clean_text, '') AS clean_text, t.n_segments,
-       t.n_segments - coalesce(c.n_kept, 0L) AS n_removed
-FROM tot t LEFT JOIN clean c ON t.doc_id = c.doc_id
-""",
-    "text_gopher_rules": f"""
-WITH m AS (
-  SELECT doc_id, lang,
-         size(split(text, ' ')) AS n_words,
-         (floor((aggregate(split(text, ' '), 0L, (acc, x) -> acc + length(x))
-               / CAST(size(split(text, ' ')) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS mean_word_len,
-         (floor((CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)
-               / size(split(text, ' '))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr
-  FROM documents
-)
-SELECT doc_id, lang, n_words, mean_word_len, ttr,
-       CAST(n_words BETWEEN {MIN_WORDS} AND {MAX_WORDS} AS INT) AS pass_word_count,
-       CAST(mean_word_len BETWEEN {MIN_MWL}D AND {MAX_MWL}D AS INT) AS pass_mean_word_len,
-       CAST(ttr >= {MIN_TTR}D AS INT) AS pass_ttr,
-       CAST(n_words BETWEEN {MIN_WORDS} AND {MAX_WORDS}
-            AND mean_word_len BETWEEN {MIN_MWL}D AND {MAX_MWL}D
-            AND ttr >= {MIN_TTR}D AS INT) AS passes
-FROM m
-""",
-    # Spark string literals C-escape backslashes — double them in the regex
-    "sample_mixture_weighted": f"""
-WITH tagged AS (
-  SELECT source,
-         (1 + CAST(regexp_extract(source, 'src(\\\\d+)', 1) AS INT) % 5) * 100 AS rate_pm,
-         CAST({_BUCKET1000_SPARK} <
-              (1 + CAST(regexp_extract(source, 'src(\\\\d+)', 1) AS INT) % 5) * 100
-              AS LONG) AS kept
-  FROM documents
-)
-SELECT source,
-       round(rate_pm / 1000.0D, 3) AS rate,
-       count(*) AS n_total,
-       SUM(kept) AS n_kept
-FROM tagged
-GROUP BY source, rate_pm
-""",
-    "sample_epoch_shuffle": """
-SELECT doc_id,
-       CAST(conv(substring(md5(concat('epoch1:', CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT) AS epoch1_key,
-       CAST(conv(substring(md5(concat('epoch2:', CAST(doc_id AS STRING))), 1, 12), 16, 10) AS BIGINT) AS epoch2_key
-FROM documents
-ORDER BY epoch1_key, doc_id
-""",
-    "text_bigram_pmi": f"""
-WITH words AS (SELECT w FROM (SELECT split(text, ' ') AS w FROM documents)
-               WHERE size(w) >= 2),
-bg AS (SELECT bgs.a AS a, bgs.b AS b
-       FROM words
-       LATERAL VIEW explode(transform(sequence(1, size(w) - 1),
-                    i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))) t AS bgs),
-cnt AS (SELECT a, b, count(*) AS c_ab FROM bg GROUP BY a, b),
-win AS (SELECT a, b, c_ab,
-               SUM(c_ab) OVER () AS n_tot,
-               SUM(c_ab) OVER (PARTITION BY a) AS c_a,
-               SUM(c_ab) OVER (PARTITION BY b) AS c_b
-        FROM cnt)
-SELECT a, b, c_ab,
-       (floor((ln(CAST(c_ab AS DOUBLE) * n_tot / (c_a * c_b))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS pmi
-FROM win
-WHERE c_ab >= {PMI_MIN_COUNT}
-ORDER BY pmi DESC, a, b
-LIMIT {PMI_TOP_K}
-""",
-    "corpus_stats_by_source": """
-SELECT source,
-       count(*) AS n_docs,
-       count(DISTINCT lang) AS n_langs,
-       SUM(size(split(text, ' '))) AS total_tokens,
-       round(avg(n_chars), 4) AS avg_chars,
-       percentile(n_chars, 0.5D) AS med_chars
-FROM documents
-GROUP BY source
-ORDER BY source
-""",
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

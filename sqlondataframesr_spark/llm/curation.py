@@ -31,7 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 
 # ---------------------------------------------------------------------------
 # Exact distributed heavy hitters
@@ -104,8 +105,9 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_HEAVY_HITTERS_ORACLE = """
-WITH t AS (SELECT unnest(string_split(text, ' ')) AS term FROM documents),
+def _heavy_hitters_sql(d: Dialect) -> str:
+    return f"""
+WITH t AS (SELECT {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents),
      s AS (SELECT COUNT(*) AS n_docs FROM documents)
 SELECT term, COUNT(*) AS n
 FROM t GROUP BY term
@@ -113,19 +115,9 @@ HAVING COUNT(*) >= (SELECT n_docs FROM s)
 ORDER BY n DESC, term ASC
 """
 
-#: the SQL dual states the *semantics* (plain GROUP BY/HAVING); the
-#: fluent form is the pruned physical strategy. The N-version test
-#: proves the pruning changed cost, not truth.
-TEXT_HEAVY_HITTERS_SPARK_SQL = """
-WITH t AS (SELECT explode(split(text, ' ')) AS term FROM documents),
-     s AS (SELECT COUNT(*) AS n_docs FROM documents)
-SELECT term, COUNT(*) AS n
-FROM t GROUP BY term
-HAVING COUNT(*) >= (SELECT n_docs FROM s)
-ORDER BY n DESC, term ASC
-"""
-
-
+# the SQL text states the *semantics* (plain GROUP BY/HAVING); the
+# fluent form is the pruned physical strategy. The N-version test
+# proves the pruning changed cost, not truth.
 # ---------------------------------------------------------------------------
 # Canonical-representative selection over bag-of-words duplicate groups
 # ---------------------------------------------------------------------------
@@ -172,13 +164,15 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is identical — md5 on the Spark side is a key-width optimization, the
 # key never appears in the output so cross-engine hash equality is not
 # required)
-DEDUP_KEEP_BEST_ORACLE = """
+def _keep_best_sql(d: Dialect) -> str:
+    split = d.fn("string_split", "text", "' '")
+    return f"""
 WITH b AS (
   SELECT doc_id, source,
-         array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')
+         {d.fn('array_to_string', d.fn('list_sort', d.fn('list_distinct', split)), "' '")}
            AS bow_key,
-         (floor((CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-               / CAST(len(string_split(text, ' ')) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr
+         {r6_sql(f'''CAST({d.fn('len', d.fn('list_distinct', split))} AS DOUBLE)
+               / CAST({d.fn('len', split)} AS DOUBLE)''')} AS ttr
   FROM documents
 ), ranked AS (
   SELECT doc_id, source, ttr,
@@ -189,25 +183,6 @@ WITH b AS (
 )
 SELECT doc_id, source, ttr, n_dups FROM ranked WHERE rn = 1 ORDER BY doc_id
 """
-
-DEDUP_KEEP_BEST_SPARK_SQL = """
-WITH b AS (
-  SELECT doc_id, source,
-         md5(concat_ws(' ', array_sort(array_distinct(split(text, ' ')))))
-           AS bow_key,
-         (floor((CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)
-               / CAST(size(split(text, ' ')) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr
-  FROM documents
-), ranked AS (
-  SELECT doc_id, source, ttr,
-         COUNT(*) OVER (PARTITION BY bow_key) AS n_dups,
-         ROW_NUMBER() OVER (PARTITION BY bow_key
-                            ORDER BY ttr DESC, doc_id ASC) AS rn
-  FROM b
-)
-SELECT doc_id, source, ttr, n_dups FROM ranked WHERE rn = 1 ORDER BY doc_id
-"""
-
 
 # ---------------------------------------------------------------------------
 # PII scrubbing (map-only redaction)
@@ -249,36 +224,20 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PII_SQL = {
-    "email": PII_EMAIL.replace("\\", "\\\\"),
-    "phone": PII_PHONE.replace("\\", "\\\\"),
-    "ipv4": PII_IPV4.replace("\\", "\\\\"),
-}
-
-TEXT_PII_SCRUB_ORACLE = f"""
+def _pii_scrub_sql(d: Dialect) -> str:
+    email, phone, ipv4 = d.str_lit(PII_EMAIL), d.str_lit(PII_PHONE), d.str_lit(PII_IPV4)
+    gap = ",\n" + " " * 17
+    clean = d.regexp_replace_all("\n" + " " * 11 + "text", email, "'<EMAIL>'")
+    clean = d.regexp_replace_all(clean, phone, "'<PHONE>'", gap=gap)
+    clean = d.regexp_replace_all(clean, ipv4, "'<IP>'", gap=gap)
+    return f"""
 SELECT doc_id,
-       len(regexp_extract_all(text, '{PII_EMAIL}')) AS n_emails,
-       len(regexp_extract_all(text, '{PII_PHONE}')) AS n_phones,
-       len(regexp_extract_all(text, '{PII_IPV4}')) AS n_ipv4,
-       length(regexp_replace(regexp_replace(regexp_replace(
-           text, '{PII_EMAIL}', '<EMAIL>', 'g'),
-                 '{PII_PHONE}', '<PHONE>', 'g'),
-                 '{PII_IPV4}', '<IP>', 'g')) AS clean_len
+       {d.fn('len', d.regexp_extract_all('text', email))} AS n_emails,
+       {d.fn('len', d.regexp_extract_all('text', phone))} AS n_phones,
+       {d.fn('len', d.regexp_extract_all('text', ipv4))} AS n_ipv4,
+       length({clean}) AS clean_len
 FROM documents
 """
-
-TEXT_PII_SCRUB_SPARK_SQL = f"""
-SELECT doc_id,
-       regexp_count(text, '{_PII_SQL["email"]}') AS n_emails,
-       regexp_count(text, '{_PII_SQL["phone"]}') AS n_phones,
-       regexp_count(text, '{_PII_SQL["ipv4"]}') AS n_ipv4,
-       length(regexp_replace(regexp_replace(regexp_replace(
-           text, '{_PII_SQL["email"]}', '<EMAIL>'),
-                 '{_PII_SQL["phone"]}', '<PHONE>'),
-                 '{_PII_SQL["ipv4"]}', '<IP>')) AS clean_len
-FROM documents
-"""
-
 
 # ---------------------------------------------------------------------------
 # Per-source quality-quantile gate
@@ -321,40 +280,24 @@ def corpus_quality_quantile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_QUALITY_QUANTILE_GATE_ORACLE = """
+def _quality_gate_sql(d: Dialect) -> str:
+    split = d.fn("string_split", "text", "' '")
+    return f"""
 WITH scored AS (
   SELECT doc_id, source,
-         CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-           / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ttr_raw
+         CAST({d.fn('len', d.fn('list_distinct', split))} AS DOUBLE)
+           / CAST({d.fn('len', split)} AS DOUBLE) AS ttr_raw
   FROM documents
 ), med AS (
-  SELECT source, quantile_cont(ttr_raw, 0.5) AS med_raw
+  SELECT source, {d.quantile_cont('ttr_raw', 0.5)} AS med_raw
   FROM scored GROUP BY source
 )
 SELECT s.doc_id, s.source,
-       (floor((s.ttr_raw) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr,
-       (floor((m.med_raw) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS src_median
+       {r6_sql('s.ttr_raw')} AS ttr,
+       {r6_sql('m.med_raw')} AS src_median
 FROM scored s JOIN med m USING (source)
 WHERE s.ttr_raw > m.med_raw
 """
-
-CORPUS_QUALITY_QUANTILE_GATE_SPARK_SQL = """
-WITH scored AS (
-  SELECT doc_id, source,
-         CAST(size(array_distinct(split(text, ' '))) AS DOUBLE)
-           / CAST(size(split(text, ' ')) AS DOUBLE) AS ttr_raw
-  FROM documents
-), med AS (
-  SELECT source, percentile(ttr_raw, 0.5) AS med_raw
-  FROM scored GROUP BY source
-)
-SELECT s.doc_id, s.source,
-       (floor((s.ttr_raw) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS ttr,
-       (floor((m.med_raw) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS src_median
-FROM scored s JOIN med m USING (source)
-WHERE s.ttr_raw > m.med_raw
-"""
-
 
 QUERIES = {
     "text_heavy_hitters": text_heavy_hitters,
@@ -363,16 +306,10 @@ QUERIES = {
     "corpus_quality_quantile_gate": corpus_quality_quantile_gate,
 }
 
-ORACLES = {
-    "text_heavy_hitters": TEXT_HEAVY_HITTERS_ORACLE,
-    "dedup_keep_best": DEDUP_KEEP_BEST_ORACLE,
-    "text_pii_scrub": TEXT_PII_SCRUB_ORACLE,
-    "corpus_quality_quantile_gate": CORPUS_QUALITY_QUANTILE_GATE_ORACLE,
+TEMPLATES = {
+    "text_heavy_hitters": _heavy_hitters_sql,
+    "dedup_keep_best": _keep_best_sql,
+    "text_pii_scrub": _pii_scrub_sql,
+    "corpus_quality_quantile_gate": _quality_gate_sql,
 }
-
-SPARK_SQL = {
-    "text_heavy_hitters": TEXT_HEAVY_HITTERS_SPARK_SQL,
-    "dedup_keep_best": DEDUP_KEEP_BEST_SPARK_SQL,
-    "text_pii_scrub": TEXT_PII_SCRUB_SPARK_SQL,
-    "corpus_quality_quantile_gate": CORPUS_QUALITY_QUANTILE_GATE_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

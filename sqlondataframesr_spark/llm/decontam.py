@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
-from .dedup import _SHINGLES_SPARK_SQL, _SHINGLES_SQL, _with_shingles
+from ..functions.rounding import r6 as _r6, r6_sql
+from ..functions.dialect import Dialect, render
+from .dedup import _with_shingles, shingles_sql
 
 #: flag a training doc when >= this fraction of its 3-shingles appear in the eval set
 CONTAM_THRESHOLD = 0.2
@@ -82,30 +83,31 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DECONTAM_OVERLAP_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
+def _overlap_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
 eval_sh AS (
-  SELECT DISTINCT unnest(sh) AS sh FROM s WHERE doc_id % {EVAL_MOD} = 0
+  SELECT DISTINCT {d.fn('unnest', 'sh')} AS sh FROM s WHERE doc_id % {EVAL_MOD} = 0
 ),
 train AS (SELECT doc_id, sh FROM s WHERE doc_id % {EVAL_MOD} != 0),
-train_e AS (SELECT doc_id, unnest(sh) AS sh FROM train),
+train_e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM train),
 overlap AS (
   SELECT t.doc_id, COUNT(*) AS n_overlap
   FROM train_e t JOIN eval_sh e ON t.sh = e.sh
   GROUP BY t.doc_id
 ),
-sizes AS (SELECT doc_id, len(sh) AS n_shingles FROM train)
+sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_shingles FROM train)
 SELECT d.doc_id,
        CAST(COALESCE(sz.n_shingles, 0) AS BIGINT) AS n_shingles,
        CAST(COALESCE(o.n_overlap, 0) AS BIGINT) AS n_overlap,
        CASE WHEN COALESCE(sz.n_shingles, 0) > 0
-            THEN (floor((CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
-                       / CAST(sz.n_shingles AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-            ELSE 0.0 END AS overlap_ratio,
+            THEN {r6_sql('''CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
+                       / CAST(sz.n_shingles AS DOUBLE)''')}
+            ELSE 0.0{d.D} END AS overlap_ratio,
        (CASE WHEN COALESCE(sz.n_shingles, 0) > 0
-             THEN (floor((CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
-                        / CAST(sz.n_shingles AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-             ELSE 0.0 END) >= {CONTAM_THRESHOLD} AS contaminated
+             THEN {r6_sql('''CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
+                        / CAST(sz.n_shingles AS DOUBLE)''')}
+             ELSE 0.0{d.D} END) >= {CONTAM_THRESHOLD}{d.D} AS contaminated
 FROM (SELECT doc_id FROM documents WHERE doc_id % {EVAL_MOD} != 0) d
 LEFT JOIN sizes sz USING (doc_id)
 LEFT JOIN overlap o USING (doc_id)
@@ -238,6 +240,9 @@ FROM kp ORDER BY doc_id
 """
 
 
+# deliberate dual: IF-guards keep the window generators total when
+# Spark hoists them past the size(w) filter (slice throws on a
+# descending sequence), and exists() replaces the nested list_filter
 def _scrub_spark_sql() -> str:
     from .dedup import SUBSTR_K as K
 
@@ -290,43 +295,7 @@ QUERIES = {
     "decontam_overlap": decontam_overlap,
     "decontam_scrub_spans": decontam_scrub_spans,
 }
-ORACLES = {
-    "decontam_overlap": DECONTAM_OVERLAP_ORACLE,
-    "decontam_scrub_spans": _scrub_oracle(),
-}
-
-#: Spark-SQL ratio expression (shared by overlap_ratio and contaminated)
-_RATIO_SPARK = """CASE WHEN COALESCE(sz.n_shingles, 0) > 0
-            THEN (floor((CAST(COALESCE(o.n_overlap, 0) AS DOUBLE)
-                       / CAST(sz.n_shingles AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-            ELSE 0.0D END"""
-
-# Spark-SQL N-version form (fluent ≡ SQL, tests/test_reference_queries.py)
-SPARK_SQL: dict[str, str] = {
-    "decontam_overlap": f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-eval_sh AS (
-  SELECT DISTINCT sx FROM (SELECT explode(sh) AS sx FROM s
-                           WHERE doc_id % {EVAL_MOD} = 0)
-),
-train AS (SELECT doc_id, sh FROM s WHERE doc_id % {EVAL_MOD} != 0),
-train_e AS (SELECT doc_id, explode(sh) AS sx FROM train),
-overlap AS (
-  SELECT t.doc_id, COUNT(1) AS n_overlap
-  FROM train_e t JOIN eval_sh e ON t.sx = e.sx
-  GROUP BY t.doc_id
-),
-sizes AS (SELECT doc_id, size(sh) AS n_shingles FROM train)
-SELECT d.doc_id,
-       CAST(COALESCE(sz.n_shingles, 0) AS BIGINT) AS n_shingles,
-       CAST(COALESCE(o.n_overlap, 0) AS BIGINT) AS n_overlap,
-       {_RATIO_SPARK} AS overlap_ratio,
-       ({_RATIO_SPARK}) >= {CONTAM_THRESHOLD}D AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % {EVAL_MOD} != 0) d
-LEFT JOIN sizes sz USING (doc_id)
-LEFT JOIN overlap o USING (doc_id)
-ORDER BY d.doc_id
-""",
-}
-
+TEMPLATES = {"decontam_overlap": _overlap_sql}
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES["decontam_scrub_spans"] = _scrub_oracle()
 SPARK_SQL["decontam_scrub_spans"] = _scrub_spark_sql()

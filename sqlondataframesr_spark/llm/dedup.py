@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import DUCK, SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 from ..functions.closure_sql import packed_closure_sql
 
 #: near-duplicate decision threshold on word-3-shingle Jaccard
@@ -53,22 +54,28 @@ def _with_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-_SHINGLES_SQL = """
-  SELECT doc_id,
-         list_distinct([w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT)+1] || ' ' || w[CAST(i AS INT)+2]
-                        for i in range(1, len(w)-1)]) AS sh
-  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-  WHERE len(w) >= 3
-"""
+def shingle_comp_sql(d: Dialect, indent: int) -> str:
+    """The word 3-shingles of a token list ``w``, the ``for`` clause on
+    its own line at ``indent``."""
+    i = "CAST(i AS INT)"
+    sh = " || ' ' || ".join(d.at("w", f"{i}{k}") for k in ("", "+1", "+2"))
+    return d.comp(sh, "i", d.seq(1, f"{d.fn('len', 'w')}-1"), brk="\n" + " " * indent)
 
-#: Spark-dialect twin of _SHINGLES_SQL (shared by the SPARK_SQL dual
-#: forms here and in llm/minhash.py / llm/decontam.py)
-_SHINGLES_SPARK_SQL = """
+
+def shingle_list_sql(d: Dialect) -> str:
+    """The distinct word 3-shingles of a token list ``w``."""
+    return d.fn("list_distinct", shingle_comp_sql(d, 24))
+
+
+def shingles_sql(d: Dialect) -> str:
+    """(doc_id, sh): each document's distinct word 3-shingles; shared
+    with llm/minhash.py, llm/decontam.py, llm/bloom.py and
+    llm/incremental.py."""
+    return f"""
   SELECT doc_id,
-         array_distinct(transform(sequence(0, size(w) - 3),
-                        i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh
-  FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
-  WHERE size(w) >= 3
+         {shingle_list_sql(d)} AS sh
+  FROM (SELECT doc_id, {d.fn('string_split', 'text', "' '")} AS w FROM documents)
+  WHERE {d.fn('len', 'w')} >= 3
 """
 
 
@@ -154,23 +161,24 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_NGRAM_JACCARD_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-e AS (SELECT doc_id, unnest(sh) AS sh FROM s),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM s),
+def _ngram_jaccard_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
+sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_sh FROM s),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
 SELECT c.doc_a, c.doc_b,
-       (floor((CAST(c.n_common AS DOUBLE)
-             / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS jaccard
+       {r6_sql('''CAST(c.n_common AS DOUBLE)
+             / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)''')} AS jaccard
 FROM common c
 JOIN sizes sa ON sa.doc_id = c.doc_a
 JOIN sizes sb ON sb.doc_id = c.doc_b
-WHERE (floor((CAST(c.n_common AS DOUBLE)
-      / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) >= {JACCARD_THRESHOLD}
+WHERE {r6_sql('''CAST(c.n_common AS DOUBLE)
+      / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)''')} >= {JACCARD_THRESHOLD}{d.D}
 ORDER BY doc_a, doc_b
 """
 
@@ -359,9 +367,10 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_NGRAM_JACCARD_CAPPED_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-e AS (SELECT doc_id, unnest(sh) AS sh FROM s),
+def _ngram_jaccard_capped_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
 rare AS (SELECT sh FROM e GROUP BY sh HAVING COUNT(*) <= {SHINGLE_DF_CAP}),
 p AS (SELECT e.doc_id, e.sh FROM e JOIN rare USING (sh)),
 cand AS (
@@ -377,17 +386,17 @@ common AS (
 ),
 verified AS (
   SELECT cm.doc_a, cm.doc_b, cm.n_common,
-         len(sa.sh) AS na, len(sb.sh) AS nb
+         {d.fn('len', 'sa.sh')} AS na, {d.fn('len', 'sb.sh')} AS nb
   FROM common cm
   JOIN s sa ON sa.doc_id = cm.doc_a
   JOIN s sb ON sb.doc_id = cm.doc_b
 )
 SELECT doc_a, doc_b,
-       (floor((CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+       {r6_sql('CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)')}
          AS jaccard
 FROM verified
-WHERE (floor((CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-      >= {JACCARD_THRESHOLD}
+WHERE {r6_sql('CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)')}
+      >= {JACCARD_THRESHOLD}{d.D}
 ORDER BY doc_a, doc_b
 """
 
@@ -464,9 +473,10 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _containment_pairs(load_table(spark, sf_dir, "documents"))
 
 
-DEDUP_CONTAINMENT_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-e AS (SELECT doc_id, unnest(sh) AS sh FROM s),
+def _containment_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
 rare AS (SELECT sh FROM e GROUP BY sh HAVING COUNT(*) <= {SHINGLE_DF_CAP}),
 p AS (SELECT e.doc_id, e.sh FROM e JOIN rare USING (sh)),
 cand AS (
@@ -482,64 +492,25 @@ common AS (
 ),
 verified AS (
   SELECT cm.doc_a, cm.doc_b, cm.n_common,
-         len(sa.sh) AS na, len(sb.sh) AS nb
+         {d.fn('len', 'sa.sh')} AS na, {d.fn('len', 'sb.sh')} AS nb
   FROM common cm
   JOIN s sa ON sa.doc_id = cm.doc_a
   JOIN s sb ON sb.doc_id = cm.doc_b
 ),
 dirs AS (
   SELECT doc_a AS container_id, doc_b AS contained_id,
-         (floor((CAST(n_common AS DOUBLE) / CAST(nb AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS containment
+         {r6_sql('CAST(n_common AS DOUBLE) / CAST(nb AS DOUBLE)')} AS containment
   FROM verified
   UNION ALL
   SELECT doc_b, doc_a,
-         (floor((CAST(n_common AS DOUBLE) / CAST(na AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+         {r6_sql('CAST(n_common AS DOUBLE) / CAST(na AS DOUBLE)')}
   FROM verified
 )
 SELECT container_id, contained_id, containment
 FROM dirs
-WHERE containment >= {CONTAINMENT_THRESHOLD}
+WHERE containment >= {CONTAINMENT_THRESHOLD}{d.D}
 ORDER BY container_id, contained_id
 """
-
-DEDUP_CONTAINMENT_SPARK_SQL = f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-e AS (SELECT doc_id, explode(sh) AS sh FROM s),
-rare AS (SELECT sh FROM e GROUP BY sh HAVING COUNT(*) <= {SHINGLE_DF_CAP}),
-p AS (SELECT e.doc_id, e.sh FROM e JOIN rare USING (sh)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM p a JOIN p b ON a.sh = b.sh AND a.doc_id < b.doc_id
-),
-common AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-  FROM cand c
-  JOIN e ea ON ea.doc_id = c.doc_a
-  JOIN e eb ON eb.doc_id = c.doc_b AND eb.sh = ea.sh
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT cm.doc_a, cm.doc_b, cm.n_common,
-         size(sa.sh) AS na, size(sb.sh) AS nb
-  FROM common cm
-  JOIN s sa ON sa.doc_id = cm.doc_a
-  JOIN s sb ON sb.doc_id = cm.doc_b
-),
-dirs AS (
-  SELECT doc_a AS container_id, doc_b AS contained_id,
-         (floor((CAST(n_common AS DOUBLE) / CAST(nb AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS containment
-  FROM verified
-  UNION ALL
-  SELECT doc_b, doc_a,
-         (floor((CAST(n_common AS DOUBLE) / CAST(na AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-  FROM verified
-)
-SELECT container_id, contained_id, containment
-FROM dirs
-WHERE containment >= {CONTAINMENT_THRESHOLD}D
-ORDER BY container_id, contained_id
-"""
-
 
 #: exact-substring window length (tokens) — the classic 13-gram
 #: training-data contamination/dedup criterion
@@ -625,19 +596,28 @@ def _substring_pairs(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     )
 
 
-DEDUP_SUBSTRING_13GRAM_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+def _grams_ctes(d: Dialect) -> str:
+    """t -> tt -> g -> e: every document's distinct md5'd
+    SUBSTR_K-token windows, one ``gx`` row each."""
+    n = d.fn("len", "w")
+    win = d.slice("w", "CAST(i AS INT)", f"CAST(i AS INT) + {SUBSTR_K - 1}", SUBSTR_K)
+    gram = "md5(" + d.fn("array_to_string", "\n             " + win, "' '") + ")"
+    grams = d.comp(gram, "i", d.seq(1, f"{n} - {SUBSTR_K - 2}"), brk="\n" + " " * 11)
+    return f"""WITH t AS (
+  SELECT doc_id, {d.fn('string_split', 'text', "' '")} AS w FROM documents
 ),
-tt AS (SELECT doc_id, w FROM t WHERE len(w) >= {SUBSTR_K}),
+tt AS (SELECT doc_id, w FROM t WHERE {n} >= {SUBSTR_K}),
 g AS (
   SELECT doc_id,
-         list_distinct([md5(array_to_string(
-             w[CAST(i AS INT):CAST(i AS INT) + {SUBSTR_K - 1}], ' '))
-           for i in range(1, len(w) - {SUBSTR_K - 2})]) AS gr
+         {d.fn('list_distinct', grams)} AS gr
   FROM tt
 ),
-e AS (SELECT doc_id, unnest(gr) AS gx FROM g)
+e AS (SELECT doc_id, {d.fn('unnest', 'gr')} AS gx FROM g)"""
+
+
+def _substring_sql(d: Dialect) -> str:
+    return f"""
+{_grams_ctes(d)}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(COUNT(*) AS BIGINT) AS n_shared
 FROM e a JOIN e b ON a.gx = b.gx AND a.doc_id < b.doc_id
@@ -706,19 +686,9 @@ def dedup_substring_13gram_capped(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-DEDUP_SUBSTRING_13GRAM_CAPPED_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-tt AS (SELECT doc_id, w FROM t WHERE len(w) >= {SUBSTR_K}),
-g AS (
-  SELECT doc_id,
-         list_distinct([md5(array_to_string(
-             w[CAST(i AS INT):CAST(i AS INT) + {SUBSTR_K - 1}], ' '))
-           for i in range(1, len(w) - {SUBSTR_K - 2})]) AS gr
-  FROM tt
-),
-e AS (SELECT doc_id, unnest(gr) AS gx FROM g),
+def _substring_capped_sql(d: Dialect) -> str:
+    return f"""
+{_grams_ctes(d)},
 rare AS (SELECT gx FROM e GROUP BY gx HAVING COUNT(*) <= {SUBSTR_DF_CAP}),
 p AS (SELECT e.doc_id, e.gx FROM e JOIN rare USING (gx)),
 cand AS (
@@ -763,19 +733,9 @@ def dedup_substring_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_SUBSTRING_CAP_REPORT_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-),
-tt AS (SELECT doc_id, w FROM t WHERE len(w) >= {SUBSTR_K}),
-g AS (
-  SELECT doc_id,
-         list_distinct([md5(array_to_string(
-             w[CAST(i AS INT):CAST(i AS INT) + {SUBSTR_K - 1}], ' '))
-           for i in range(1, len(w) - {SUBSTR_K - 2})]) AS gr
-  FROM tt
-),
-e AS (SELECT doc_id, unnest(gr) AS gx FROM g),
+def _substring_cap_report_sql(d: Dialect) -> str:
+    return f"""
+{_grams_ctes(d)},
 dfs AS (SELECT gx, COUNT(*) AS df FROM e GROUP BY gx)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_grams,
        CAST(MAX(df) AS BIGINT) AS max_gram_df,
@@ -900,10 +860,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE s AS ({_SHINGLES_SQL}),
-e AS (SELECT doc_id, unnest(sh) AS sh FROM s),
-sizes AS (SELECT doc_id, len(sh) AS n_sh FROM s),
+def _cluster_edges_sql(d: Dialect) -> str:
+    """s -> e -> sizes -> common -> near, exact -> edges: shingle-Jaccard
+    and md5-equal pairs, both directions."""
+    return f"""s AS ({shingles_sql(d)}),
+e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
+sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_sh FROM s),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -914,8 +876,8 @@ near AS (
   FROM common c
   JOIN sizes sa ON sa.doc_id = c.doc_a
   JOIN sizes sb ON sb.doc_id = c.doc_b
-  WHERE (floor((CAST(c.n_common AS DOUBLE)
-        / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) >= {JACCARD_THRESHOLD}
+  WHERE {r6_sql('''CAST(c.n_common AS DOUBLE)
+        / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)''')} >= {JACCARD_THRESHOLD}{d.D}
 ),
 exact AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -926,7 +888,12 @@ edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM (SELECT * FROM near UNION SELECT * FROM exact)
   UNION
   SELECT doc_b AS src, doc_a AS dst FROM (SELECT * FROM near UNION SELECT * FROM exact)
-),
+)"""
+
+
+def _clusters_sql(d: Dialect) -> str:
+    return f"""
+WITH RECURSIVE {_cluster_edges_sql(d)},
 reach(src, dst) AS (
   SELECT doc_id, doc_id FROM documents
   UNION
@@ -1214,7 +1181,7 @@ GROUP BY doc_id
 ORDER BY doc_id
 """
 
-DEDUP_SPANS_SPARK_SQL = f"""
+DEDUP_SPANS_DUAL = f"""
 WITH toks AS (
   SELECT doc_id, split(text, ' ') AS w FROM documents
 ),
@@ -1257,142 +1224,30 @@ QUERIES = {
     "dedup_winnow_pairs": dedup_winnow_pairs,
 }
 
-ORACLES = {
+TEMPLATES = {
+    "dedup_ngram_jaccard": _ngram_jaccard_sql,
+    "dedup_ngram_jaccard_capped": _ngram_jaccard_capped_sql,
+    "dedup_containment": _containment_sql,
+    "dedup_substring_13gram": _substring_sql,
+    "dedup_substring_13gram_capped": _substring_capped_sql,
+    "dedup_substring_cap_report": _substring_cap_report_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES |= {
     "dedup_exact": DEDUP_EXACT_ORACLE,
     "dedup_spans": DEDUP_SPANS_ORACLE,
-    "dedup_ngram_jaccard": DEDUP_NGRAM_JACCARD_ORACLE,
-    "dedup_ngram_jaccard_capped": DEDUP_NGRAM_JACCARD_CAPPED_ORACLE,
-    "dedup_containment": DEDUP_CONTAINMENT_ORACLE,
-    "dedup_substring_13gram": DEDUP_SUBSTRING_13GRAM_ORACLE,
-    "dedup_substring_13gram_capped": DEDUP_SUBSTRING_13GRAM_CAPPED_ORACLE,
-    "dedup_substring_cap_report": DEDUP_SUBSTRING_CAP_REPORT_ORACLE,
-    "dedup_clusters": DEDUP_CLUSTERS_ORACLE,
+    "dedup_clusters": _clusters_sql(DUCK),
     "doc_winnow_fingerprint": DOC_WINNOW_ORACLE,
     "dedup_winnow_pairs": DEDUP_WINNOW_PAIRS_ORACLE,
 }
 
-# Spark-SQL N-version forms (fluent ≡ SQL, tests/test_reference_queries.py).
-# dedup_clusters gained a bounded-round packed-closure dual in r12
-# (packed_closure_sql, registered below): the min-label propagation is
-# unrolled to the proven round bound instead of WITH RECURSIVE.
-SPARK_SQL: dict[str, str] = {
+SPARK_SQL |= {
     "dedup_exact": DEDUP_EXACT_ORACLE,  # dialect-neutral: valid in both engines
-    "dedup_spans": DEDUP_SPANS_SPARK_SQL,
-    "dedup_containment": DEDUP_CONTAINMENT_SPARK_SQL,
-    "dedup_ngram_jaccard": f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-e AS (SELECT doc_id, explode(sh) AS sx FROM s),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(1) AS n_common
-  FROM e a JOIN e b ON a.sx = b.sx AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sizes AS (SELECT doc_id, size(sh) AS n_sh FROM s),
-jac AS (
-  SELECT doc_a, doc_b,
-         (floor((cast(n_common as double)
-               / cast(sa.n_sh + sb.n_sh - n_common as double)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS jaccard
-  FROM common
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-)
-SELECT doc_a, doc_b, jaccard FROM jac
-WHERE jaccard >= {JACCARD_THRESHOLD}D
-ORDER BY doc_a, doc_b
-""",
-    "dedup_ngram_jaccard_capped": f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-e AS (SELECT doc_id, explode(sh) AS sx FROM s),
-rare AS (SELECT sx FROM e GROUP BY sx HAVING COUNT(1) <= {SHINGLE_DF_CAP}),
-p AS (SELECT e.doc_id, e.sx FROM e JOIN rare USING (sx)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM p a JOIN p b ON a.sx = b.sx AND a.doc_id < b.doc_id
-),
-common AS (
-  SELECT c.doc_a, c.doc_b, COUNT(1) AS n_common
-  FROM cand c
-  JOIN e ea ON ea.doc_id = c.doc_a
-  JOIN e eb ON eb.doc_id = c.doc_b AND eb.sx = ea.sx
-  GROUP BY c.doc_a, c.doc_b
-),
-verified AS (
-  SELECT cm.doc_a, cm.doc_b, cm.n_common,
-         size(sa.sh) AS na, size(sb.sh) AS nb
-  FROM common cm
-  JOIN s sa ON sa.doc_id = cm.doc_a
-  JOIN s sb ON sb.doc_id = cm.doc_b
-)
-SELECT doc_a, doc_b,
-       (floor((CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-         AS jaccard
-FROM verified
-WHERE (floor((CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-      >= {JACCARD_THRESHOLD}D
-ORDER BY doc_a, doc_b
-""",
-    "dedup_substring_13gram": f"""
-WITH t AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-tt AS (SELECT doc_id, w FROM t WHERE size(w) >= {SUBSTR_K}),
-g AS (
-  SELECT doc_id,
-         array_distinct(IF(size(w) >= {SUBSTR_K},
-             transform(sequence(0, size(w) - {SUBSTR_K}),
-               i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_K})))),
-             array())) AS gr
-  FROM tt
-),
-e AS (SELECT doc_id, explode(gr) AS gx FROM g)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(1) AS n_shared
-FROM e a JOIN e b ON a.gx = b.gx AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-ORDER BY doc_a, doc_b
-""",
-    "dedup_substring_13gram_capped": f"""
-WITH t AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-tt AS (SELECT doc_id, w FROM t WHERE size(w) >= {SUBSTR_K}),
-g AS (
-  SELECT doc_id,
-         array_distinct(IF(size(w) >= {SUBSTR_K},
-             transform(sequence(0, size(w) - {SUBSTR_K}),
-               i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_K})))),
-             array())) AS gr
-  FROM tt
-),
-e AS (SELECT doc_id, explode(gr) AS gx FROM g),
-rare AS (SELECT gx FROM e GROUP BY gx HAVING COUNT(1) <= {SUBSTR_DF_CAP}),
-p AS (SELECT e.doc_id, e.gx FROM e JOIN rare USING (gx)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM p a JOIN p b ON a.gx = b.gx AND a.doc_id < b.doc_id
-)
-SELECT c.doc_a, c.doc_b, COUNT(1) AS n_shared
-FROM cand c
-JOIN e ea ON ea.doc_id = c.doc_a
-JOIN e eb ON eb.doc_id = c.doc_b AND eb.gx = ea.gx
-GROUP BY c.doc_a, c.doc_b
-ORDER BY doc_a, doc_b
-""",
-    "dedup_substring_cap_report": f"""
-WITH t AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-tt AS (SELECT doc_id, w FROM t WHERE size(w) >= {SUBSTR_K}),
-g AS (
-  SELECT doc_id,
-         array_distinct(IF(size(w) >= {SUBSTR_K},
-             transform(sequence(0, size(w) - {SUBSTR_K}),
-               i -> md5(concat_ws(' ', slice(w, i + 1, {SUBSTR_K})))),
-             array())) AS gr
-  FROM tt
-),
-e AS (SELECT doc_id, explode(gr) AS gx FROM g),
-dfs AS (SELECT gx, COUNT(1) AS df FROM e GROUP BY gx)
-SELECT CAST(COUNT(1) AS BIGINT) AS n_grams,
-       CAST(MAX(df) AS BIGINT) AS max_gram_df,
-       CAST({SUBSTR_DF_CAP} AS BIGINT) AS df_cap,
-       MAX(df) > {SUBSTR_DF_CAP} AS cap_binds
-FROM dfs
-""",
-    # Winnowing duals (VERDICT r11 item 8): the fluent forms are built
+    # deliberate dual: segments via posexplode and an array_sort'ed
+    # collect_list where the oracle unnests a lateral range and uses
+    # an ordered string_agg
+    "dedup_spans": DEDUP_SPANS_DUAL,
+    # deliberate dual (both winnowing duals): the fluent forms are built
     # from Spark-SQL expression strings already (_winnow_selections),
     # so the dual is the same chain as CTEs. Stage layout mirrors the
     # fluent exactly (th -> khs -> sel as separate projections — Spark
@@ -1469,40 +1324,12 @@ FROM e a JOIN e b ON a.f = b.f AND a.doc_id < b.doc_id
 GROUP BY a.doc_id, b.doc_id
 ORDER BY doc_a, doc_b
 """,
-    # dual of the ITERATIVE dedup_clusters (VERDICT r11 item 2): edges
-    # replay the oracle's full-corpus form (near = shingle-Jaccard with
-    # the portable floor rounding, exact = md5 match — identical texts
-    # under 3 words have no shingles, so the exact arm is not redundant);
-    # the closure is the shared bounded-round packed-array fold
-    # (functions/closure_sql.py), poisoning ids on non-convergence.
+    # deliberate dual: Spark's recursive CTE allows only UNION ALL, which
+    # never terminates on a cyclic edge list, so the edges (the oracle's
+    # own CTEs) feed the shared bounded-round packed-array fold
+    # (functions/closure_sql.py), which poisons ids on non-convergence
     "dedup_clusters": packed_closure_sql(
-        prelude=f"""s AS ({_SHINGLES_SPARK_SQL}),
-e AS (SELECT doc_id, explode(sh) AS sx FROM s),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(1) AS n_common
-  FROM e a JOIN e b ON a.sx = b.sx AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sizes AS (SELECT doc_id, size(sh) AS n_sh FROM s),
-near AS (
-  SELECT doc_a, doc_b
-  FROM common
-  JOIN sizes sa ON doc_a = sa.doc_id
-  JOIN sizes sb ON doc_b = sb.doc_id
-  WHERE (floor((cast(n_common as double)
-        / cast(sa.n_sh + sb.n_sh - n_common as double)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) >= {JACCARD_THRESHOLD}D
-),
-exact AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM documents a JOIN documents b
-    ON md5(a.text) = md5(b.text) AND a.doc_id < b.doc_id
-),
-allp AS (SELECT doc_a, doc_b FROM near UNION SELECT doc_a, doc_b FROM exact),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM allp
-  UNION ALL
-  SELECT doc_b AS src, doc_a AS dst FROM allp
-)""",
+        prelude=_cluster_edges_sql(SPARK),
         nodes_sql="SELECT doc_id AS node FROM documents",
         key_name="doc_id",
         id_name="cluster_id",

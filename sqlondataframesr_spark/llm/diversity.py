@@ -35,7 +35,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
+from .dedup import shingle_comp_sql
+from .text import words_sql
 
 #: diversity is reported for word n-grams of these orders
 DIVERSITY_NS = (1, 2, 3)
@@ -43,7 +46,7 @@ DIVERSITY_NS = (1, 2, 3)
 #: head of the vocabulary; 1000 terms is the standard fit range
 ZIPF_TOP_K = 1000
 
-_LN_MICRO = "cast(round((floor((ln({x})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
+_LN_MICRO = f"cast(round({r6_sql('ln({x})')} * 1000000.0) as bigint)"
 
 
 def _ngrams_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,57 +112,29 @@ def corpus_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _div_grams_sql(dialect: str) -> str:
-    """UNION ALL of per-n gram streams, duck/spark dialects."""
+def _div_grams_sql(d: Dialect) -> str:
+    """UNION ALL of per-n gram streams."""
+    n_w = d.fn("len", "w")
     parts = []
     for n in DIVERSITY_NS:
-        if dialect == "duck":
-            join_expr = " || ' ' || ".join(
-                f"w[CAST(i + {j} AS INT)]" for j in range(n)
-            )
-            parts.append(
-                f"SELECT source, {n} AS n, unnest([{join_expr}"
-                f" for i in range(1, len(w) - {n - 2})]) AS gram"
-                f" FROM t WHERE len(w) >= {n}"
-            )
-        else:
-            join_expr = ", ".join(f"element_at(w, i + {j})" for j in range(n))
-            parts.append(
-                f"SELECT source, {n} AS n, explode(IF(size(w) >= {n},"
-                f" transform(sequence(1, size(w) - {n - 1}),"
-                f"  i -> concat_ws(' ', {join_expr})), array())) AS gram"
-                f" FROM t WHERE size(w) >= {n}"
-            )
+        gram = " || ' ' || ".join(d.at("w", f"CAST(i + {j} AS INT)") for j in range(n))
+        grams = d.comp(gram, "i", d.seq(1, f"{n_w} - {n - 2}"))
+        parts.append(
+            f"SELECT source, {n} AS n, {d.fn('unnest', grams)} AS gram"
+            f" FROM t WHERE {n_w} >= {n}"
+        )
     return "\nUNION ALL\n".join(parts)
 
 
-_DIV_TOKENS_DUCK = (
-    "SELECT source, list_filter(string_split(text, ' '), x -> x != '') AS w"
-    " FROM documents"
-)
-_DIV_TOKENS_SPARK = (
-    "SELECT source, filter(split(text, ' '), x -> x != '') AS w FROM documents"
-)
-
-CORPUS_NGRAM_DIVERSITY_ORACLE = f"""
-WITH t AS ({_DIV_TOKENS_DUCK}),
-g AS ({_div_grams_sql("duck")}),
+def _ngram_diversity_sql(d: Dialect) -> str:
+    return f"""
+WITH t AS (SELECT source, {words_sql(d)} AS w FROM documents),
+g AS ({_div_grams_sql(d)}),
 per_gram AS (SELECT source, n, gram, COUNT(*) AS cnt FROM g GROUP BY ALL)
 SELECT source, n,
        CAST(SUM(cnt) AS BIGINT) AS total_ngrams,
        CAST(COUNT(*) AS BIGINT) AS distinct_ngrams,
-       (floor((CAST(COUNT(*) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS diversity
-FROM per_gram GROUP BY source, n ORDER BY source, n
-"""
-
-CORPUS_NGRAM_DIVERSITY_SPARK_SQL = f"""
-WITH t AS ({_DIV_TOKENS_SPARK}),
-g AS ({_div_grams_sql("spark")}),
-per_gram AS (SELECT source, n, gram, COUNT(*) AS cnt FROM g GROUP BY source, n, gram)
-SELECT source, n,
-       CAST(SUM(cnt) AS BIGINT) AS total_ngrams,
-       CAST(COUNT(*) AS BIGINT) AS distinct_ngrams,
-       (floor((CAST(COUNT(*) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS diversity
+       {r6_sql('CAST(COUNT(*) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE)')} AS diversity
 FROM per_gram GROUP BY source, n ORDER BY source, n
 """
 
@@ -213,7 +188,7 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ZIPF_LN_DUCK = "CAST(round((floor((ln({x})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)"
+_ZIPF_LN = f"CAST(round({r6_sql('ln({x})')} * 1000000.0) AS BIGINT)"
 
 CORPUS_ZIPF_SLOPE_ORACLE = f"""
 WITH tok AS (
@@ -225,21 +200,23 @@ top AS (
   SELECT term, freq FROM freq ORDER BY freq DESC, term ASC LIMIT {ZIPF_TOP_K}
 ),
 ranked AS (
-  SELECT {_ZIPF_LN_DUCK.format(x="CAST(row_number() OVER (ORDER BY freq DESC, term ASC) AS DOUBLE)")} AS x,
-         {_ZIPF_LN_DUCK.format(x="CAST(freq AS DOUBLE)")} AS y
+  SELECT {_ZIPF_LN.format(x="CAST(row_number() OVER (ORDER BY freq DESC, term ASC) AS DOUBLE)")} AS x,
+         {_ZIPF_LN.format(x="CAST(freq AS DOUBLE)")} AS y
   FROM top
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-       (floor((CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS DOUBLE)
-             / CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS slope,
-       (floor(((CAST(SUM(y) AS DOUBLE)
+       {r6_sql('''CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS DOUBLE)
+             / CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS DOUBLE)''')} AS slope,
+       {r6_sql('''(CAST(SUM(y) AS DOUBLE)
               - CAST(COUNT(*) * SUM(x * y) - SUM(x) * SUM(y) AS DOUBLE)
                 / CAST(COUNT(*) * SUM(x * x) - SUM(x) * SUM(x) AS DOUBLE)
-                * CAST(SUM(x) AS DOUBLE)) / (COUNT(*) * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS intercept
+                * CAST(SUM(x) AS DOUBLE)) / (COUNT(*) * 1000000.0)''')} AS intercept
 FROM ranked
 """
 
-CORPUS_ZIPF_SLOPE_SPARK_SQL = f"""
+# deliberate dual: Spark's BIGINT products overflow where DuckDB widens
+# to HUGEINT, so the dual runs the OLS combination in DECIMAL(38,0)
+CORPUS_ZIPF_SLOPE_DUAL = f"""
 WITH tok AS (
   SELECT explode(filter(split(text, ' '), x -> x != '')) AS term FROM documents
 ),
@@ -248,21 +225,21 @@ top AS (
   SELECT term, freq FROM freq ORDER BY freq DESC, term ASC LIMIT {ZIPF_TOP_K}
 ),
 ranked AS (
-  SELECT CAST(round((floor((ln(CAST(row_number() OVER (ORDER BY freq DESC, term ASC) AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT) AS x,
-         CAST(round((floor((ln(CAST(freq AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT) AS y
+  SELECT CAST(round({r6_sql('ln(CAST(row_number() OVER (ORDER BY freq DESC, term ASC) AS DOUBLE))')} * 1000000.0) AS BIGINT) AS x,
+         CAST(round({r6_sql('ln(CAST(freq AS DOUBLE))')} * 1000000.0) AS BIGINT) AS y
   FROM top
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_terms,
-       (floor((CAST(CAST(COUNT(1) AS DECIMAL(38,0)) * CAST(SUM(x * y) AS DECIMAL(38,0))
+       {r6_sql('''CAST(CAST(COUNT(1) AS DECIMAL(38,0)) * CAST(SUM(x * y) AS DECIMAL(38,0))
                   - CAST(SUM(x) AS DECIMAL(38,0)) * CAST(SUM(y) AS DECIMAL(38,0)) AS DOUBLE)
              / CAST(CAST(COUNT(1) AS DECIMAL(38,0)) * CAST(SUM(x * x) AS DECIMAL(38,0))
-                  - CAST(SUM(x) AS DECIMAL(38,0)) * CAST(SUM(x) AS DECIMAL(38,0)) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS slope,
-       (floor(((CAST(SUM(y) AS DOUBLE)
+                  - CAST(SUM(x) AS DECIMAL(38,0)) * CAST(SUM(x) AS DECIMAL(38,0)) AS DOUBLE)''')} AS slope,
+       {r6_sql('''(CAST(SUM(y) AS DOUBLE)
               - CAST(CAST(COUNT(1) AS DECIMAL(38,0)) * CAST(SUM(x * y) AS DECIMAL(38,0))
                      - CAST(SUM(x) AS DECIMAL(38,0)) * CAST(SUM(y) AS DECIMAL(38,0)) AS DOUBLE)
                 / CAST(CAST(COUNT(1) AS DECIMAL(38,0)) * CAST(SUM(x * x) AS DECIMAL(38,0))
                      - CAST(SUM(x) AS DECIMAL(38,0)) * CAST(SUM(x) AS DECIMAL(38,0)) AS DOUBLE)
-                * CAST(SUM(x) AS DOUBLE)) / (COUNT(1) * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS intercept
+                * CAST(SUM(x) AS DOUBLE)) / (COUNT(1) * 1000000.0)''')} AS intercept
 FROM ranked
 """
 
@@ -350,16 +327,20 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SRC_SHINGLES_DUCK = """
-  SELECT DISTINCT source, unnest(
-           [w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT)+1] || ' ' || w[CAST(i AS INT)+2]
-            for i in range(1, len(w)-1)]) AS sh
-  FROM (SELECT source, string_split(text, ' ') AS w FROM documents)
-  WHERE len(w) >= 3
+def _src_shingles_sql(d: Dialect) -> str:
+    """(source, sh): the distinct word 3-shingles of each source."""
+    n = d.fn("len", "w")
+    shingles = d.fn("unnest", "\n" + " " * 11 + shingle_comp_sql(d, 12))
+    return f"""
+  SELECT DISTINCT source, {shingles} AS sh
+  FROM (SELECT source, {d.fn('string_split', 'text', "' '")} AS w FROM documents)
+  WHERE {n} >= 3
 """
 
-CORPUS_SOURCE_OVERLAP_ORACLE = f"""
-WITH e AS ({_SRC_SHINGLES_DUCK}),
+
+def _source_overlap_sql(d: Dialect) -> str:
+    return f"""
+WITH e AS ({_src_shingles_sql(d)}),
 sizes AS (SELECT source, COUNT(*) AS n_sh FROM e GROUP BY source),
 shared AS (
   SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
@@ -368,38 +349,13 @@ shared AS (
 )
 SELECT s.source_a, s.source_b,
        CAST(s.n_shared AS BIGINT) AS n_shared,
-       (floor((CAST(s.n_shared AS DOUBLE)
-             / CAST(LEAST(sa.n_sh, sb.n_sh) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS overlap_coef
+       {r6_sql('''CAST(s.n_shared AS DOUBLE)
+             / CAST(LEAST(sa.n_sh, sb.n_sh) AS DOUBLE)''')} AS overlap_coef
 FROM shared s
 JOIN sizes sa ON sa.source = s.source_a
 JOIN sizes sb ON sb.source = s.source_b
 ORDER BY s.source_a, s.source_b
 """
-
-CORPUS_SOURCE_OVERLAP_SPARK_SQL = """
-WITH e AS (
-  SELECT DISTINCT source, explode(array_distinct(transform(
-           sequence(0, size(w) - 3),
-           i -> concat_ws(' ', w[i], w[i+1], w[i+2])))) AS sh
-  FROM (SELECT source, split(text, ' ') AS w FROM documents)
-  WHERE size(w) >= 3
-),
-sizes AS (SELECT source, COUNT(*) AS n_sh FROM e GROUP BY source),
-shared AS (
-  SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
-  FROM e a JOIN e b ON a.sh = b.sh AND a.source < b.source
-  GROUP BY a.source, b.source
-)
-SELECT s.source_a, s.source_b,
-       CAST(s.n_shared AS BIGINT) AS n_shared,
-       (floor((CAST(s.n_shared AS DOUBLE)
-             / CAST(LEAST(sa.n_sh, sb.n_sh) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS overlap_coef
-FROM shared s
-JOIN sizes sa ON sa.source = s.source_a
-JOIN sizes sb ON sb.source = s.source_b
-ORDER BY s.source_a, s.source_b
-"""
-
 
 QUERIES = {
     "corpus_ngram_diversity": corpus_ngram_diversity,
@@ -407,14 +363,10 @@ QUERIES = {
     "corpus_source_overlap": corpus_source_overlap,
 }
 
-ORACLES = {
-    "corpus_ngram_diversity": CORPUS_NGRAM_DIVERSITY_ORACLE,
-    "corpus_zipf_slope": CORPUS_ZIPF_SLOPE_ORACLE,
-    "corpus_source_overlap": CORPUS_SOURCE_OVERLAP_ORACLE,
+TEMPLATES = {
+    "corpus_ngram_diversity": _ngram_diversity_sql,
+    "corpus_source_overlap": _source_overlap_sql,
 }
-
-SPARK_SQL = {
-    "corpus_ngram_diversity": CORPUS_NGRAM_DIVERSITY_SPARK_SQL,
-    "corpus_zipf_slope": CORPUS_ZIPF_SLOPE_SPARK_SQL,
-    "corpus_source_overlap": CORPUS_SOURCE_OVERLAP_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES["corpus_zipf_slope"] = CORPUS_ZIPF_SLOPE_ORACLE
+SPARK_SQL["corpus_zipf_slope"] = CORPUS_ZIPF_SLOPE_DUAL

@@ -42,31 +42,27 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 from .decontam import EVAL_MOD
+from .text import words_sql
 
 #: hashed feature-space size (paper uses 10k; small here so the tiny
 #: test corpus still populates most buckets)
 N_BUCKETS = 256
 
-#: whitespace tokens, empties dropped (the repo-standard tokenizer)
-_W_SPARK = "filter(split(text, ' '), x -> x != '')"
-_W_DUCK = "list_filter(string_split(text, ' '), x -> x != '')"
+def _feats_sql(d: Dialect) -> str:
+    """Unigrams + bigrams ("a_b") of the repo-standard tokens — the
+    DSIR hashed-ngram feature bag."""
+    w = words_sql(d)
+    bigram = f"{d.at(w, 'i')} || '_' || {d.at(w, 'i + 1')}"
+    return d.fn("list_concat", w, d.comp(bigram, "i", d.seq(1, d.fn("len", w))))
 
-#: unigrams + bigrams ("a_b") — the DSIR hashed-ngram feature bag
-_FEATS_SPARK = (
-    f"concat({_W_SPARK},"
-    f" transform(slice({_W_SPARK}, 1, greatest(size({_W_SPARK}) - 1, 0)),"
-    f" (x, i) -> concat(x, '_', element_at({_W_SPARK}, i + 2))))"
-)
-_FEATS_DUCK = (
-    f"list_concat({_W_DUCK},"
-    f" [{_W_DUCK}[i] || '_' || {_W_DUCK}[i + 1]"
-    f" for i in range(1, len({_W_DUCK}))])"
-)
 
-_HASH_SPARK = f"pmod(cast(conv(substring(md5(f), 1, 8), 16, 10) as bigint), {N_BUCKETS})"
-_HASH_DUCK = f"(('0x' || substr(md5(f), 1, 8))::BIGINT % {N_BUCKETS})"
+def _hash_sql(d: Dialect) -> str:
+    """The hashed feature bucket of ``f`` (non-negative hash: ``%`` is
+    ``pmod``)."""
+    return f"({d.hex_bigint('substr(md5(f), 1, 8)')} % {N_BUCKETS})"
 
 
 def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,8 +75,8 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     feat = (
         spread_scan(docs, "doc_id")
-        .select("doc_id", F.explode(F.expr(_FEATS_SPARK)).alias("f"))
-        .select("doc_id", F.expr(_HASH_SPARK).alias("feat"))
+        .select("doc_id", F.explode(F.expr(_feats_sql(SPARK))).alias("f"))
+        .select("doc_id", F.expr(_hash_sql(SPARK)).alias("feat"))
     )
     # pinned: dcnt feeds FIVE branches (target/raw counts, their two
     # totals, and the per-doc scoring join) — unpinned, the md5
@@ -103,11 +99,12 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "feat",
             F.expr(
-                "cast(round((floor(("
-                f" ln((coalesce(tcnt, 0) + 1) / cast(t_total + {N_BUCKETS} as double))"
-                f" - ln((coalesce(rcnt, 0) + 1) / cast(r_total + {N_BUCKETS} as double))"
-                ") * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))"
-                " / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
+                "cast(round("
+                + r6_sql(
+                    f" ln((coalesce(tcnt, 0) + 1) / cast(t_total + {N_BUCKETS} as double))"
+                    f" - ln((coalesce(rcnt, 0) + 1) / cast(r_total + {N_BUCKETS} as double))"
+                )
+                + " * 1000000.0) as bigint)"
             ).alias("lr_us"),
         )
     )
@@ -134,10 +131,11 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DSIR_IMPORTANCE_ORACLE = f"""
+def _importance_sql(d: Dialect) -> str:
+    return f"""
 WITH feat AS (
-  SELECT doc_id, {_HASH_DUCK} AS feat
-  FROM (SELECT doc_id, unnest({_FEATS_DUCK}) AS f FROM documents)
+  SELECT doc_id, {_hash_sql(d)} AS feat
+  FROM (SELECT doc_id, {d.fn('unnest', _feats_sql(d))} AS f FROM documents)
 ),
 dcnt AS (
   SELECT doc_id, feat, COUNT(*) AS cnt FROM feat GROUP BY doc_id, feat
@@ -152,9 +150,9 @@ totals AS (
 ),
 lr AS (
   SELECT COALESCE(t.feat, r.feat) AS feat,
-         CAST(round((floor((
+         CAST(round({r6_sql(f'''
            ln((COALESCE(t.tcnt, 0) + 1) / CAST(tt.t_total + {N_BUCKETS} AS DOUBLE))
-           - ln((COALESCE(r.rcnt, 0) + 1) / CAST(tt.r_total + {N_BUCKETS} AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT) AS lr_us
+           - ln((COALESCE(r.rcnt, 0) + 1) / CAST(tt.r_total + {N_BUCKETS} AS DOUBLE))''')} * 1000000.0) AS BIGINT) AS lr_us
   FROM tcnt t FULL JOIN rcnt r ON t.feat = r.feat CROSS JOIN totals tt
 ),
 scored AS (
@@ -166,52 +164,14 @@ scored AS (
 )
 SELECT d.doc_id,
        CAST(COALESCE(s.n_feats, 0) AS BIGINT) AS n_feats,
-       (floor((CAST(COALESCE(s.w_us, 0) AS DOUBLE) / 1000000.0) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS log_weight
+       {r6_sql('CAST(COALESCE(s.w_us, 0) AS DOUBLE) / 1000000.0')} AS log_weight
 FROM documents d LEFT JOIN scored s USING (doc_id)
 WHERE d.doc_id % {EVAL_MOD} != 0
 ORDER BY d.doc_id
 """
-
-#: Spark-SQL N-version twin (fluent ≡ SQL check)
-DSIR_IMPORTANCE_SPARK_SQL = f"""
-WITH feat AS (
-  SELECT doc_id, {_HASH_SPARK} AS feat
-  FROM (SELECT doc_id, explode({_FEATS_SPARK}) AS f FROM documents)
-),
-dcnt AS (
-  SELECT doc_id, feat, COUNT(1) AS cnt FROM feat GROUP BY doc_id, feat
-),
-tcnt AS (SELECT feat, SUM(cnt) AS tcnt FROM dcnt
-         WHERE doc_id % {EVAL_MOD} = 0 GROUP BY feat),
-rcnt AS (SELECT feat, SUM(cnt) AS rcnt FROM dcnt
-         WHERE doc_id % {EVAL_MOD} != 0 GROUP BY feat),
-totals AS (
-  SELECT (SELECT COALESCE(SUM(tcnt), 0) FROM tcnt) AS t_total,
-         (SELECT COALESCE(SUM(rcnt), 0) FROM rcnt) AS r_total
-),
-lr AS (
-  SELECT COALESCE(t.feat, r.feat) AS feat,
-         CAST(round((floor((
-           ln((COALESCE(t.tcnt, 0) + 1) / CAST(tt.t_total + {N_BUCKETS} AS DOUBLE))
-           - ln((COALESCE(r.rcnt, 0) + 1) / CAST(tt.r_total + {N_BUCKETS} AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT) AS lr_us
-  FROM tcnt t FULL JOIN rcnt r ON t.feat = r.feat CROSS JOIN totals tt
-),
-scored AS (
-  SELECT dcnt.doc_id, SUM(dcnt.cnt) AS n_feats,
-         SUM(dcnt.cnt * lr.lr_us) AS w_us
-  FROM dcnt JOIN lr USING (feat)
-  WHERE dcnt.doc_id % {EVAL_MOD} != 0
-  GROUP BY dcnt.doc_id
-)
-SELECT d.doc_id,
-       CAST(COALESCE(s.n_feats, 0) AS BIGINT) AS n_feats,
-       (floor((CAST(COALESCE(s.w_us, 0) AS DOUBLE) / 1000000.0) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS log_weight
-FROM documents d LEFT JOIN scored s USING (doc_id)
-WHERE d.doc_id % {EVAL_MOD} != 0
-ORDER BY d.doc_id
-"""
-
 
 QUERIES = {"dsir_importance": dsir_importance}
-ORACLES = {"dsir_importance": DSIR_IMPORTANCE_ORACLE}
-SPARK_SQL: dict[str, str] = {"dsir_importance": DSIR_IMPORTANCE_SPARK_SQL}
+TEMPLATES = {
+    "dsir_importance": _importance_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

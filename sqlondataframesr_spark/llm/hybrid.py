@@ -24,16 +24,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import vector as V
+from ..functions.dialect import Dialect, render
 from ..functions.rounding import r6 as _r6
-
 from .bm25 import (
-    BM25_CTES_DUCK,
-    BM25_CTES_SPARK,
     BM25_N_QUERIES,
     BM25_TOP_K,
+    bm25_ctes,
     bm25_topk,
 )
-from .similarity import TOP_K, _COS, _COS_DUCK, _VEC_SPARK_SQL, _VEC_SQL, ann_cosine_topk
+from .similarity import DIM, TOP_K, ann_cosine_topk, vec_sql
 
 RRF_K = 60
 
@@ -77,11 +77,11 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_ctes(vec_sql: str, cos: str) -> str:
-    return f"""vec AS ({vec_sql}),
+def _ann_ctes(d: Dialect) -> str:
+    return f"""vec AS ({vec_sql(d)}),
 ann_scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {cos.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {V.cosine(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm', DIM)} AS cosine
   FROM vec q JOIN vec c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {BM25_N_QUERIES}
 ),
@@ -114,17 +114,12 @@ SELECT q_id, id, rrf_score, rnk FROM fr WHERE rnk <= {BM25_TOP_K}
 ORDER BY q_id, rnk"""
 
 
-HYBRID_RRF_ORACLE = (
-    "WITH " + BM25_CTES_DUCK + ",\n"
-    + _ann_ctes(_VEC_SQL, _COS_DUCK) + ",\n" + _fusion_tail()
-)
-
-HYBRID_RRF_SPARK_SQL = (
-    "WITH " + BM25_CTES_SPARK + ",\n"
-    + _ann_ctes(_VEC_SPARK_SQL, _COS) + ",\n" + _fusion_tail()
-)
+def _hybrid_sql(d: Dialect) -> str:
+    return "WITH " + bm25_ctes(d) + ",\n" + _ann_ctes(d) + ",\n" + _fusion_tail()
 
 
 QUERIES = {"hybrid_rrf_topk": hybrid_rrf_topk}
-ORACLES = {"hybrid_rrf_topk": HYBRID_RRF_ORACLE}
-SPARK_SQL: dict[str, str] = {"hybrid_rrf_topk": HYBRID_RRF_SPARK_SQL}
+TEMPLATES = {
+    "hybrid_rrf_topk": _hybrid_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

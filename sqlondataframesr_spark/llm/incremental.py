@@ -39,16 +39,17 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..materialize import materialize
 from ..functions.rounding import r6 as _r6
-from .dedup import _SHINGLES_SPARK_SQL, _SHINGLES_SQL, _with_shingles
+from ..functions.dialect import Dialect, render
+from .dedup import _with_shingles, shingles_sql
 from .minhash import (
     BANDS,
     EST_THRESHOLD,
     NUM_PERM,
-    P,
     ROWS_PER_BAND,
-    _PERMS_DUCK,
-    _PERMS_SPARK,
+    minhash_bands_sql,
+    minhash_sig_sql,
     minhash_signatures,
+    sig_agree,
 )
 
 BATCH_MOD = 10
@@ -137,22 +138,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_INCREMENTAL_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-sig AS (
-  SELECT doc_id,
-         [list_min([(p[1] * h + p[2]) % {P}
-                    for h in [('0x' || substr(md5(x), 1, 8))::BIGINT for x in sh]])
-          for p in {_PERMS_DUCK}] AS sig
-  FROM s
-),
-bands AS (
-  SELECT doc_id, t.b,
-         list_aggregate([CAST(x AS VARCHAR)
-                         for x in sig[t.b * {ROWS_PER_BAND} + 1 : t.b * {ROWS_PER_BAND} + {ROWS_PER_BAND}]],
-                        'string_agg', ',') AS bkey
-  FROM sig, range(0, {BANDS}) t(b)
-),
+def _incremental_sql(d: Dialect) -> str:
+    agree = sig_agree(d, "{a} = {b}", "\n" + " " * 37)
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+sig AS ({minhash_sig_sql(d)}),
+bands AS ({minhash_bands_sql(d)}),
 ex AS (
   SELECT b.doc_id, MIN(h.doc_id) AS exact_dup_of
   FROM documents b JOIN documents h ON md5(b.text) = md5(h.text)
@@ -168,9 +159,8 @@ cand AS (
 ),
 est AS (
   SELECT c.b_id, c.h_id,
-         ROUND(CAST(len(list_filter([sa.sig[i] = sb.sig[i]
-                                     for i in range(1, {NUM_PERM + 1})], v -> v)) AS DOUBLE)
-               / {float(NUM_PERM)}, 6) AS est
+         ROUND(CAST({agree} AS DOUBLE)
+               / {float(NUM_PERM)}{d.D}, 6) AS est
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.b_id
   JOIN sig sb ON sb.doc_id = c.h_id
@@ -179,13 +169,13 @@ near AS (
   SELECT b_id, h_id AS near_dup_of, est AS best_est
   FROM (SELECT *, row_number() OVER (PARTITION BY b_id
                                      ORDER BY est DESC, h_id) AS rn
-        FROM est WHERE est >= {EST_THRESHOLD})
+        FROM est WHERE est >= {EST_THRESHOLD}{d.D})
   WHERE rn = 1
 )
 SELECT d.doc_id,
        CAST(COALESCE(ex.exact_dup_of, -1) AS BIGINT) AS exact_dup_of,
        CAST(COALESCE(near.near_dup_of, -1) AS BIGINT) AS near_dup_of,
-       COALESCE(near.best_est, 0.0) AS best_est,
+       COALESCE(near.best_est, 0.0{d.D}) AS best_est,
        CASE WHEN ex.exact_dup_of IS NOT NULL THEN 'drop_exact'
             WHEN near.near_dup_of IS NOT NULL THEN 'drop_near'
             ELSE 'keep' END AS decision
@@ -194,66 +184,9 @@ LEFT JOIN ex ON ex.doc_id = d.doc_id
 LEFT JOIN near ON near.b_id = d.doc_id
 ORDER BY d.doc_id
 """
-
-DEDUP_INCREMENTAL_SPARK_SQL = f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-sigt AS (
-  SELECT doc_id,
-         transform({_PERMS_SPARK}, p -> aggregate(
-           transform(sh, x -> cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint)),
-           bigint({P}),
-           (acc, h) -> least(acc, (element_at(p, 1) * h + element_at(p, 2)) % {P})))
-           AS sig
-  FROM s
-),
-bands AS (
-  SELECT doc_id, b AS band,
-         concat_ws(',', transform(slice(sig, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}),
-                                  x -> cast(x as string))) AS bkey
-  FROM sigt LATERAL VIEW explode(sequence(0, {BANDS - 1})) t AS b
-),
-ex AS (
-  SELECT b.doc_id, MIN(h.doc_id) AS exact_dup_of
-  FROM documents b JOIN documents h ON md5(b.text) = md5(h.text)
-  WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
-    AND h.doc_id % {BATCH_MOD} != {BATCH_REM}
-  GROUP BY b.doc_id
-),
-cand AS (
-  SELECT DISTINCT b.doc_id AS b_id, h.doc_id AS h_id
-  FROM bands b JOIN bands h ON b.band = h.band AND b.bkey = h.bkey
-  WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
-    AND h.doc_id % {BATCH_MOD} != {BATCH_REM}
-),
-est AS (
-  SELECT c.b_id, c.h_id,
-         round(cast(size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y),
-                                v -> v)) as double) / {float(NUM_PERM)}D, 6) AS est
-  FROM cand c
-  JOIN sigt sa ON sa.doc_id = c.b_id
-  JOIN sigt sb ON sb.doc_id = c.h_id
-),
-near AS (
-  SELECT b_id, h_id AS near_dup_of, est AS best_est
-  FROM (SELECT *, row_number() OVER (PARTITION BY b_id
-                                     ORDER BY est DESC, h_id) AS rn
-        FROM est WHERE est >= {EST_THRESHOLD}D)
-  WHERE rn = 1
-)
-SELECT d.doc_id,
-       CAST(COALESCE(ex.exact_dup_of, -1) AS BIGINT) AS exact_dup_of,
-       CAST(COALESCE(near.near_dup_of, -1) AS BIGINT) AS near_dup_of,
-       COALESCE(near.best_est, 0.0D) AS best_est,
-       CASE WHEN ex.exact_dup_of IS NOT NULL THEN 'drop_exact'
-            WHEN near.near_dup_of IS NOT NULL THEN 'drop_near'
-            ELSE 'keep' END AS decision
-FROM (SELECT doc_id FROM documents WHERE doc_id % {BATCH_MOD} = {BATCH_REM}) d
-LEFT JOIN ex ON ex.doc_id = d.doc_id
-LEFT JOIN near ON near.b_id = d.doc_id
-ORDER BY d.doc_id
-"""
-
 
 QUERIES = {"dedup_incremental": dedup_incremental}
-ORACLES = {"dedup_incremental": DEDUP_INCREMENTAL_ORACLE}
-SPARK_SQL: dict[str, str] = {"dedup_incremental": DEDUP_INCREMENTAL_SPARK_SQL}
+TEMPLATES = {
+    "dedup_incremental": _incremental_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

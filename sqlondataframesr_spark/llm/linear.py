@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize
+from ..functions.dialect import Dialect, render
 from .similarity import DIM
 
 #: unrolled training rounds
@@ -294,14 +295,30 @@ def _quantized_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _perceptron_ovr_sql(lt: str, lmax: str, elem: str, gens: str) -> str:
-    """Unrolled one-vs-rest training + argmax scoring as SQL. ``gens``
-    is the dialect's 0..N_CLASSES-1 generator table snippet aliased
-    ``c(cls)``."""
+def _quantized_ctes(d: Dialect, label_sel: str, label: str) -> str:
+    """v -> s -> q: the int8-quantized vectors ``xq`` with the ``label``
+    column that ``label_sel`` selects."""
+    lt = "list_transform"
+    quant = """x -> CAST(floor(x * (CASE WHEN maxabs > 0
+             THEN 127.0 / maxabs ELSE 0.0 END) + 0.5) AS BIGINT)"""
+    return f"""v AS (
+  SELECT vec_id{label_sel},
+         {d.fn(lt, 'embedding', 'x -> CAST(x AS DOUBLE)')} AS v
+  FROM embeddings
+),
+s AS (
+  SELECT vec_id, {label}, v, {d.fn('list_max', d.fn(lt, 'v', 'x -> abs(x)'))} AS maxabs FROM v
+),
+q AS (
+  SELECT vec_id, {label},
+         {d.fn(lt, 'v', quant)} AS xq
+  FROM s
+)"""
 
-    def e(col: str, i: int) -> str:
-        return elem.format(col=col, i=i)
 
+def _perceptron_ovr_sql(d: Dialect) -> str:
+    """Unrolled one-vs-rest training + argmax scoring as SQL."""
+    e = d.at
     margin = " + ".join(f"{e('xq', i + 1)} * w.w{i}" for i in range(DIM))
     d_sums = ",\n         ".join(
         f"COALESCE(SUM(y * {e('xq', i + 1)}), 0) AS d{i}" for i in range(DIM)
@@ -309,21 +326,8 @@ def _perceptron_ovr_sql(lt: str, lmax: str, elem: str, gens: str) -> str:
     w_upd = ", ".join(f"w.w{i} + COALESCE(u.d{i}, 0) AS w{i}" for i in range(DIM))
     w_zero = ", ".join(f"CAST(0 AS BIGINT) AS w{i}" for i in range(DIM))
     sql = f"""
-WITH v AS (
-  SELECT vec_id, CAST(label AS BIGINT) AS label,
-         {lt}(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-s AS (
-  SELECT vec_id, label, v, {lmax}({lt}(v, x -> abs(x))) AS maxabs FROM v
-),
-q AS (
-  SELECT vec_id, label,
-         {lt}(v, x -> CAST(floor(x * (CASE WHEN maxabs > 0
-             THEN 127.0 / maxabs ELSE 0.0 END) + 0.5) AS BIGINT)) AS xq
-  FROM s
-),
-classes AS (SELECT CAST(cls AS BIGINT) AS cls FROM {gens}),
+WITH {_quantized_ctes(d, ", CAST(label AS BIGINT) AS label", "label")},
+classes AS (SELECT CAST(cls AS BIGINT) AS cls FROM {d.generate_series(0, N_CLASSES - 1)} AS c(cls)),
 q10 AS (
   SELECT q.vec_id, q.label, c.cls,
          CAST(CASE WHEN q.label = c.cls THEN 1 ELSE -1 END AS BIGINT) AS y,
@@ -367,15 +371,11 @@ ORDER BY y_true, y_pred"""
     return sql
 
 
-def _perceptron_sql(lt: str, lmax: str, elem: str, final: str = "curve") -> str:
-    """The SAME unrolled training replayed as SQL. Dialect params:
-    ``lt``/``lmax`` = transform/max-over-list function names, ``elem``
-    = 1-based element access pattern with ``{col}`` and ``{i}``;
-    ``final`` selects the output: 'curve' (learning curve) or
-    'confusion' (score the final weights back over the training set)."""
-
-    def e(col: str, i: int) -> str:
-        return elem.format(col=col, i=i)
+def _perceptron_sql(d: Dialect, final: str = "curve") -> str:
+    """The SAME unrolled training replayed as SQL. ``final`` selects
+    the output: 'curve' (learning curve) or 'confusion' (score the
+    final weights back over the training set)."""
+    e = d.at
 
     margin = " + ".join(f"{e('xq', i + 1)} * w.w{i}" for i in range(DIM))
     d_sums = ",\n         ".join(
@@ -384,22 +384,10 @@ def _perceptron_sql(lt: str, lmax: str, elem: str, final: str = "curve") -> str:
     w_upd = ", ".join(f"w.w{i} + u.d{i} AS w{i}" for i in range(DIM))
     w_zero = ", ".join(f"CAST(0 AS BIGINT) AS w{i}" for i in range(DIM))
     l1 = " + ".join(f"ABS(w{i})" for i in range(DIM))
+    label = f""",
+         CAST(CASE WHEN label = {PC_POS_LABEL} THEN 1 ELSE -1 END AS BIGINT) AS y"""
     sql = f"""
-WITH v AS (
-  SELECT vec_id,
-         CAST(CASE WHEN label = {PC_POS_LABEL} THEN 1 ELSE -1 END AS BIGINT) AS y,
-         {lt}(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-s AS (
-  SELECT vec_id, y, v, {lmax}({lt}(v, x -> abs(x))) AS maxabs FROM v
-),
-q AS (
-  SELECT vec_id, y,
-         {lt}(v, x -> CAST(floor(x * (CASE WHEN maxabs > 0
-             THEN 127.0 / maxabs ELSE 0.0 END) + 0.5) AS BIGINT)) AS xq
-  FROM s
-),
+WITH {_quantized_ctes(d, label, "y")},
 w0 AS (SELECT CAST(0 AS BIGINT) AS b, {w_zero})"""
     for t in range(1, PC_ROUNDS + 1):
         sql += f""",
@@ -440,36 +428,14 @@ ORDER BY y_true, y_pred"""
     return sql + f"\n{union}\nORDER BY round"
 
 
-_DUCK = dict(lt="list_transform", lmax="list_max", elem="{col}[{i}]")
-_SPARK = dict(lt="transform", lmax="array_max", elem="element_at({col}, {i})")
-
-ML_PERCEPTRON_CURVE_ORACLE = _perceptron_sql(**_DUCK)
-ML_PERCEPTRON_CURVE_SPARK_SQL = _perceptron_sql(**_SPARK)
-ML_PERCEPTRON_CONFUSION_ORACLE = _perceptron_sql(**_DUCK, final="confusion")
-ML_PERCEPTRON_CONFUSION_SPARK_SQL = _perceptron_sql(**_SPARK, final="confusion")
-
-
-ML_PERCEPTRON_OVR_ORACLE = _perceptron_ovr_sql(
-    **_DUCK, gens=f"generate_series(0, {N_CLASSES - 1}) AS c(cls)"
-)
-ML_PERCEPTRON_OVR_SPARK_SQL = _perceptron_ovr_sql(
-    **_SPARK,
-    gens=f"(SELECT explode(sequence(0, {N_CLASSES - 1})) AS cls) c",
-)
-
-
 QUERIES = {
     "ml_perceptron_curve": ml_perceptron_curve,
     "ml_perceptron_confusion": ml_perceptron_confusion,
     "ml_perceptron_ovr_confusion": ml_perceptron_ovr_confusion,
 }
-ORACLES = {
-    "ml_perceptron_curve": ML_PERCEPTRON_CURVE_ORACLE,
-    "ml_perceptron_confusion": ML_PERCEPTRON_CONFUSION_ORACLE,
-    "ml_perceptron_ovr_confusion": ML_PERCEPTRON_OVR_ORACLE,
+TEMPLATES = {
+    "ml_perceptron_curve": _perceptron_sql,
+    "ml_perceptron_confusion": lambda d: _perceptron_sql(d, final="confusion"),
+    "ml_perceptron_ovr_confusion": _perceptron_ovr_sql,
 }
-SPARK_SQL = {
-    "ml_perceptron_curve": ML_PERCEPTRON_CURVE_SPARK_SQL,
-    "ml_perceptron_confusion": ML_PERCEPTRON_CONFUSION_SPARK_SQL,
-    "ml_perceptron_ovr_confusion": ML_PERCEPTRON_OVR_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

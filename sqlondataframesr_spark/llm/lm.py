@@ -37,7 +37,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
+from .text import words_sql
 
 #: interpolation weight of the ML bigram term (rest goes to the
 #: unigram continuation model) — 0.9 is the classic Jelinek-Mercer
@@ -47,7 +49,7 @@ LAMBDA_BI = 0.9
 NB_TEST_MOD = 5
 
 #: ln -> 6 dp -> integer micro-nats (exact BIGINT from here on)
-_MICRONATS = "cast(round((floor((ln({p})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
+_MICRONATS = f"cast(round({r6_sql('ln({p})')} * 1000000.0) as bigint)"
 
 
 def _clean_tokens_expr() -> str:
@@ -149,15 +151,19 @@ def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BI_STAGES_DUCK = f"""t AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x != '') AS w
+def _bi_stages_sql(d: Dialect) -> str:
+    """t -> big -> tf -> c12 -> c1/c2/tot -> prob -> per_doc: the
+    interpolated bigram model's CTE chain."""
+    n = d.fn("len", "w")
+    return f"""t AS (
+  SELECT doc_id, {words_sql(d)} AS w
   FROM documents
 ),
 big AS (
   SELECT doc_id,
-         w[CAST(i AS INT)] AS t1, w[CAST(i + 1 AS INT)] AS t2
-  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        FROM t WHERE len(w) >= 2)
+         {d.at('w', 'CAST(i AS INT)')} AS t1, {d.at('w', 'CAST(i + 1 AS INT)')} AS t2
+  FROM (SELECT doc_id, w, {d.fn('unnest', d.seq(1, n))} AS i
+        FROM t WHERE {n} >= 2)
 ),
 tf AS (SELECT doc_id, t1, t2, COUNT(*) AS tf FROM big GROUP BY ALL),
 c12 AS (SELECT t1, t2, SUM(tf) AS c12 FROM tf GROUP BY ALL),
@@ -166,8 +172,8 @@ c2 AS (SELECT t2, SUM(c12) AS c2 FROM c12 GROUP BY t2),
 tot AS (SELECT SUM(c12) AS t_total FROM c12),
 prob AS (
   SELECT c12.t1, c12.t2,
-         CAST(round((floor((ln({LAMBDA_BI} * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-              + {1 - LAMBDA_BI} * (CAST(c2.c2 AS DOUBLE) / CAST(tot.t_total AS DOUBLE)))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+         CAST(round({r6_sql(f'''ln({LAMBDA_BI} * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
+              + {1 - LAMBDA_BI} * (CAST(c2.c2 AS DOUBLE) / CAST(tot.t_total AS DOUBLE)))''')}
               * 1000000.0) AS BIGINT) AS micronats
   FROM c12 JOIN c1 USING (t1) JOIN c2 USING (t2) CROSS JOIN tot
 ),
@@ -177,50 +183,13 @@ per_doc AS (
   FROM tf JOIN prob USING (t1, t2) GROUP BY tf.doc_id
 )"""
 
-LM_BIGRAM_LOGPROB_ORACLE = f"""
-WITH {_BI_STAGES_DUCK}
+
+def _bigram_sql(d: Dialect) -> str:
+    return f"""
+WITH {_bi_stages_sql(d)}
 SELECT d.doc_id,
        CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       (floor((CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-         AS avg_logprob
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-ORDER BY d.doc_id
-"""
-
-_BI_STAGES_SPARK = f"""t AS (
-  SELECT doc_id, filter(split(text, ' '), x -> x != '') AS w FROM documents
-),
-big AS (
-  SELECT doc_id, b.t1, b.t2 FROM (
-    SELECT doc_id, explode(IF(size(w) >= 2,
-             transform(sequence(1, size(w) - 1),
-               i -> struct(element_at(w, i) AS t1, element_at(w, i + 1) AS t2)),
-             CAST(array() AS array<struct<t1:string,t2:string>>))) AS b
-    FROM t WHERE size(w) >= 2)
-),
-tf AS (SELECT doc_id, t1, t2, COUNT(*) AS tf FROM big GROUP BY doc_id, t1, t2),
-c12 AS (SELECT t1, t2, SUM(tf) AS c12 FROM tf GROUP BY t1, t2),
-c1 AS (SELECT t1, SUM(c12) AS c1 FROM c12 GROUP BY t1),
-c2 AS (SELECT t2, SUM(c12) AS c2 FROM c12 GROUP BY t2),
-tot AS (SELECT SUM(c12) AS t_total FROM c12),
-prob AS (
-  SELECT c12.t1, c12.t2,
-         CAST(round((floor((ln({LAMBDA_BI} * (CAST(c12.c12 AS DOUBLE) / CAST(c1.c1 AS DOUBLE))
-              + {1 - LAMBDA_BI} * (CAST(c2.c2 AS DOUBLE) / CAST(tot.t_total AS DOUBLE)))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-              * 1000000.0) AS BIGINT) AS micronats
-  FROM c12 JOIN c1 USING (t1) JOIN c2 USING (t2) CROSS JOIN tot
-),
-per_doc AS (
-  SELECT tf.doc_id, SUM(tf.tf) AS n_bigrams,
-         SUM(tf.tf * prob.micronats) AS sum_micronats
-  FROM tf JOIN prob USING (t1, t2) GROUP BY tf.doc_id
-)"""
-
-LM_BIGRAM_LOGPROB_SPARK_SQL = f"""
-WITH {_BI_STAGES_SPARK}
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       (floor((CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+       {r6_sql('CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)')}
          AS avg_logprob
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 ORDER BY d.doc_id
@@ -273,42 +242,20 @@ def lm_perplexity_tercile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LM_PERPLEXITY_TERCILE_GATE_ORACLE = f"""
-WITH {_BI_STAGES_DUCK},
+def _tercile_gate_sql(d: Dialect) -> str:
+    return f"""
+WITH {_bi_stages_sql(d)},
 scored AS (
   SELECT d.doc_id, d.lang,
-         (floor((CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+         {r6_sql('CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)')}
            AS avg_logprob
   FROM documents d JOIN per_doc p USING (doc_id)
   WHERE p.n_bigrams > 0
 ),
 cuts AS (
   SELECT lang,
-         (floor((quantile_cont(avg_logprob, 1.0/3.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p33,
-         (floor((quantile_cont(avg_logprob, 2.0/3.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p66
-  FROM scored GROUP BY lang
-)
-SELECT s.doc_id, s.lang, s.avg_logprob,
-       CASE WHEN s.avg_logprob >= c.p66 THEN 'head'
-            WHEN s.avg_logprob < c.p33 THEN 'tail'
-            ELSE 'middle' END AS bucket
-FROM scored s JOIN cuts c USING (lang)
-ORDER BY s.doc_id
-"""
-
-LM_PERPLEXITY_TERCILE_GATE_SPARK_SQL = f"""
-WITH {_BI_STAGES_SPARK},
-scored AS (
-  SELECT d.doc_id, d.lang,
-         (floor((CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-           AS avg_logprob
-  FROM documents d JOIN per_doc p USING (doc_id)
-  WHERE p.n_bigrams > 0
-),
-cuts AS (
-  SELECT lang,
-         (floor((percentile(avg_logprob, 1.0D/3.0D)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p33,
-         (floor((percentile(avg_logprob, 2.0D/3.0D)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p66
+         {r6_sql(d.quantile_cont('avg_logprob', '1.0/3.0'))} AS p33,
+         {r6_sql(d.quantile_cont('avg_logprob', '2.0/3.0'))} AS p66
   FROM scored GROUP BY lang
 )
 SELECT s.doc_id, s.lang, s.avg_logprob,
@@ -437,19 +384,10 @@ def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _nb_stages(dialect: str) -> str:
-    """Shared CTE chain; dialect differences are only the tokenizer."""
-    if dialect == "duck":
-        tok = (
-            "SELECT doc_id, lang, is_test, unnest(list_filter("
-            "string_split(text, ' '), x -> x != '')) AS term FROM d"
-        )
-    else:
-        tok = (
-            "SELECT doc_id, lang, is_test, explode(filter("
-            "split(text, ' '), x -> x != '')) AS term FROM d"
-        )
-    mn = "CAST(round((floor((ln({p})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)"
+def _nb_stages(d: Dialect) -> str:
+    """The Naive-Bayes train/score CTE chain."""
+    tok = f"SELECT doc_id, lang, is_test, {d.fn('unnest', words_sql(d))} AS term FROM d"
+    mn = f"CAST(round({r6_sql('ln({p})')} * 1000000.0) AS BIGINT)"
     return f"""d AS (
   SELECT doc_id, lang, text, doc_id % {NB_TEST_MOD} = 0 AS is_test FROM documents
 ),
@@ -501,8 +439,9 @@ pred AS (
 )"""
 
 
-NB_LANG_CONFUSION_ORACLE = f"""
-WITH {_nb_stages("duck")}
+def _nb_confusion_sql(d: Dialect) -> str:
+    return f"""
+WITH {_nb_stages(d)}
 SELECT d.lang AS true_lang, p.pred_lang,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM d JOIN pred p USING (doc_id)
@@ -510,17 +449,6 @@ WHERE d.is_test
 GROUP BY d.lang, p.pred_lang
 ORDER BY true_lang, pred_lang
 """
-
-NB_LANG_CONFUSION_SPARK_SQL = f"""
-WITH {_nb_stages("spark")}
-SELECT d.lang AS true_lang, p.pred_lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM d JOIN pred p USING (doc_id)
-WHERE d.is_test
-GROUP BY d.lang, p.pred_lang
-ORDER BY true_lang, pred_lang
-"""
-
 
 #: Kneser-Ney absolute discount (the classic 0.75 = 3/4 default)
 KN_DISCOUNT = 0.75
@@ -621,11 +549,10 @@ def lm_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kn_stages(bi_stages: str) -> str:
-    """The KN count/prob CTE chain, shared by both dialects: reuses
-    the dialect's tokenize/bigram/tf/c12 stages, then swaps the
-    Jelinek-Mercer prob for the Kneser-Ney one."""
-    head = bi_stages.split("c1 AS (", 1)[0]
+def _kn_stages(d: Dialect) -> str:
+    """The KN count/prob CTE chain: reuses the tokenize/bigram/tf/c12
+    stages, then swaps the Jelinek-Mercer prob for the Kneser-Ney one."""
+    head = _bi_stages_sql(d).split("c1 AS (", 1)[0]
     return (
         head
         + f"""c1 AS (SELECT t1, SUM(c12) AS c1, COUNT(*) AS n1f
@@ -634,7 +561,7 @@ n1b AS (SELECT t2, COUNT(*) AS n1b FROM c12 GROUP BY t2),
 bt AS (SELECT COUNT(*) AS b_types FROM c12),
 prob AS (
   SELECT c12.t1, c12.t2,
-         CAST(round((floor((ln({_KN_P})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)
+         CAST(round({r6_sql(f'ln({_KN_P})')} * 1000000.0) AS BIGINT)
            AS micronats
   FROM c12 JOIN c1 USING (t1) JOIN n1b USING (t2) CROSS JOIN bt
 ),
@@ -646,18 +573,14 @@ per_doc AS (
     )
 
 
-_KN_FINAL = """
+_KN_FINAL = f"""
 SELECT d.doc_id,
        CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       (floor((CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+       {r6_sql('CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)')}
          AS avg_logprob
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 ORDER BY d.doc_id
 """
-
-LM_KNESER_NEY_ORACLE = f"WITH {_kn_stages(_BI_STAGES_DUCK)}{_KN_FINAL}"
-
-LM_KNESER_NEY_SPARK_SQL = f"WITH {_kn_stages(_BI_STAGES_SPARK)}{_KN_FINAL}"
 
 
 QUERIES = {
@@ -667,16 +590,10 @@ QUERIES = {
     "nb_lang_confusion": nb_lang_confusion,
 }
 
-ORACLES = {
-    "lm_bigram_logprob": LM_BIGRAM_LOGPROB_ORACLE,
-    "lm_kneser_ney_logprob": LM_KNESER_NEY_ORACLE,
-    "lm_perplexity_tercile_gate": LM_PERPLEXITY_TERCILE_GATE_ORACLE,
-    "nb_lang_confusion": NB_LANG_CONFUSION_ORACLE,
+TEMPLATES = {
+    "lm_bigram_logprob": _bigram_sql,
+    "lm_kneser_ney_logprob": lambda d: f"WITH {_kn_stages(d)}{_KN_FINAL}",
+    "lm_perplexity_tercile_gate": _tercile_gate_sql,
+    "nb_lang_confusion": _nb_confusion_sql,
 }
-
-SPARK_SQL = {
-    "lm_bigram_logprob": LM_BIGRAM_LOGPROB_SPARK_SQL,
-    "lm_kneser_ney_logprob": LM_KNESER_NEY_SPARK_SQL,
-    "lm_perplexity_tercile_gate": LM_PERPLEXITY_TERCILE_GATE_SPARK_SQL,
-    "nb_lang_confusion": NB_LANG_CONFUSION_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -41,8 +41,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize
 from ..catalog import load_table
+from ..functions.dialect import SPARK, Dialect, render
 from ..functions.rounding import r6 as _r6
-from .dedup import _SHINGLES_SPARK_SQL, _SHINGLES_SQL, _with_shingles
+from . import dedup as _dedup
+from .dedup import _with_shingles, shingles_sql
 
 #: K signature positions = BANDS * ROWS_PER_BAND
 NUM_PERM = 12
@@ -64,8 +66,50 @@ def _param(i: int, which: str, lo: int) -> int:
 #: (A_i, B_i) per permutation — embedded as literals in BOTH dialects
 PERMS = [(_param(i, "a", 1), _param(i, "b", 0)) for i in range(NUM_PERM)]
 
-_PERMS_SPARK = "array(" + ",".join(f"array({a}L,{b}L)" for a, b in PERMS) + ")"
-_PERMS_DUCK = "[" + ",".join(f"[{a}::BIGINT,{b}::BIGINT]" for a, b in PERMS) + "]"
+
+def _perms(d: Dialect) -> str:
+    """The (A_i, B_i) pairs as a literal list of BIGINT pairs."""
+    return d.list(",".join(d.list(f"{a}::BIGINT,{b}::BIGINT") for a, b in PERMS))
+
+
+def minhash_sig_sql(d: Dialect) -> str:
+    """(doc_id, sig): the NUM_PERM-position minhash signature of each
+    shingle set ``sh`` of a CTE ``s``."""
+    h = d.comp(d.hex_bigint("substr(md5(x), 1, 8)"), "x", "sh")
+    perm = f"({d.at('p', 1)} * h + {d.at('p', 2)}) % {P}"
+    mins = d.fn("list_min", d.comp(perm, "h", h, brk="\n" + " " * 20))
+    sig = d.comp(mins, "p", _perms(d), brk="\n" + " " * 10)
+    return f"""
+  SELECT doc_id,
+         {sig} AS sig
+  FROM s
+"""
+
+
+def minhash_bands_sql(d: Dialect) -> str:
+    """(doc_id, b, bkey): BANDS rows per signature, ROWS_PER_BAND
+    positions each, comma-joined."""
+    lo, hi = f"t.b * {ROWS_PER_BAND} + 1", f"t.b * {ROWS_PER_BAND} + {ROWS_PER_BAND}"
+    window = d.slice("sig", lo, hi, ROWS_PER_BAND, sep=" : ")
+    keys = d.comp(d.cast_str("x"), "x", window, brk="\n" + " " * 25)
+    bkey = d.string_agg_list(keys, "','", gap="\n" + " " * 24)
+    return f"""
+  SELECT doc_id, t.b,
+         {bkey} AS bkey
+  FROM sig, range(0, {BANDS}) t(b)
+"""
+
+
+#: line break before a comprehension's ``for`` in the minhash SQL
+_BRK = "\n" + " " * 16
+
+
+def sig_agree(d: Dialect, cmp: str, brk: str) -> str:
+    """How many of the NUM_PERM positions of ``sa.sig`` and ``sb.sig``
+    satisfy ``cmp`` (``{a}``/``{b}`` are the two values)."""
+    pair = cmp.format(a=d.at("sa.sig", "i"), b=d.at("sb.sig", "i"))
+    agree = d.comp(pair, "i", d.seq(1, NUM_PERM + 1), brk=brk)
+    return d.fn("len", d.fn("list_filter", agree, "v -> v"))
 
 
 def minhash_signatures(docs_shingled: DataFrame) -> DataFrame:
@@ -78,7 +122,7 @@ def minhash_signatures(docs_shingled: DataFrame) -> DataFrame:
     ).select(
         "doc_id",
         F.expr(
-            f"transform({_PERMS_SPARK}, p -> aggregate(hsh, bigint({P}),"
+            f"transform({_perms(SPARK)}, p -> aggregate(hsh, bigint({P}),"
             f"  (acc, h) -> least(acc, (element_at(p, 1) * h + element_at(p, 2)) % {P})))"
         ).alias("sig"),
     )
@@ -134,22 +178,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_MINHASH_LSH_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-sig AS (
-  SELECT doc_id,
-         [list_min([(p[1] * h + p[2]) % {P}
-                    for h in [('0x' || substr(md5(x), 1, 8))::BIGINT for x in sh]])
-          for p in {_PERMS_DUCK}] AS sig
-  FROM s
-),
-bands AS (
-  SELECT doc_id, t.b,
-         list_aggregate([CAST(x AS VARCHAR)
-                         for x in sig[t.b * {ROWS_PER_BAND} + 1 : t.b * {ROWS_PER_BAND} + {ROWS_PER_BAND}]],
-                        'string_agg', ',') AS bkey
-  FROM sig, range(0, {BANDS}) t(b)
-),
+def _lsh_sql(d: Dialect) -> str:
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+sig AS ({minhash_sig_sql(d)}),
+bands AS ({minhash_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a
@@ -157,15 +190,15 @@ cand AS (
 ),
 est AS (
   SELECT c.doc_a, c.doc_b,
-         ROUND(CAST(len(list_filter([sa.sig[i] = sb.sig[i] for i in range(1, {NUM_PERM + 1})], v -> v)) AS DOUBLE)
-               / {float(NUM_PERM)}, 6) AS est_jaccard
+         ROUND(CAST({sig_agree(d, "{a} = {b}", " ")} AS DOUBLE)
+               / {float(NUM_PERM)}{d.D}, 6) AS est_jaccard
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.doc_a
   JOIN sig sb ON sb.doc_id = c.doc_b
 )
 SELECT doc_a, doc_b, est_jaccard
 FROM est
-WHERE est_jaccard >= {EST_THRESHOLD}
+WHERE est_jaccard >= {EST_THRESHOLD}{d.D}
 ORDER BY doc_a, doc_b
 """
 
@@ -240,22 +273,12 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_MINHASH_BBIT_ORACLE = f"""
-WITH s AS ({_SHINGLES_SQL}),
-sig AS MATERIALIZED (
-  SELECT doc_id,
-         [list_min([(p[1] * h + p[2]) % {P}
-                    for h in [('0x' || substr(md5(x), 1, 8))::BIGINT for x in sh]])
-          for p in {_PERMS_DUCK}] AS sig
-  FROM s
-),
-bands AS (
-  SELECT doc_id, t.b,
-         list_aggregate([CAST(x AS VARCHAR)
-                         for x in sig[t.b * {ROWS_PER_BAND} + 1 : t.b * {ROWS_PER_BAND} + {ROWS_PER_BAND}]],
-                        'string_agg', ',') AS bkey
-  FROM sig, range(0, {BANDS}) t(b)
-),
+def _bbit_sql(d: Dialect) -> str:
+    sig_est = f"CAST({sig_agree(d, '{a} = {b}', _BRK)} AS BIGINT)\n           * 1000000"
+    return f"""
+WITH s AS ({shingles_sql(d)}),
+sig AS{d.materialized} ({minhash_sig_sql(d)}),
+bands AS ({minhash_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a
@@ -263,20 +286,17 @@ cand AS (
 ),
 scored AS (
   SELECT c.doc_a, c.doc_b,
-         CAST(len(list_filter([sa.sig[i] = sb.sig[i]
-                for i in range(1, {NUM_PERM + 1})], v -> v)) AS BIGINT)
-           * 1000000 // {NUM_PERM} AS sig_est_ppm,
-         CAST(len(list_filter([sa.sig[i] % 2 = sb.sig[i] % 2
-                for i in range(1, {NUM_PERM + 1})], v -> v)) AS BIGINT)
+         {d.idiv(sig_est, NUM_PERM)} AS sig_est_ppm,
+         CAST({sig_agree(d, "{a} % 2 = {b} % 2", _BRK)} AS BIGINT)
            AS bbit_agree
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.doc_a
   JOIN sig sb ON sb.doc_id = c.doc_b
 )
 SELECT doc_a, doc_b, sig_est_ppm, bbit_agree,
-       greatest(2 * (bbit_agree * 1000000 // {NUM_PERM}) - 1000000, 0)
+       greatest(2 * ({d.idiv('bbit_agree * 1000000', NUM_PERM)}) - 1000000, 0)
          AS bbit_est_ppm,
-       greatest(2 * (bbit_agree * 1000000 // {NUM_PERM}) - 1000000, 0)
+       greatest(2 * ({d.idiv('bbit_agree * 1000000', NUM_PERM)}) - 1000000, 0)
          - sig_est_ppm AS err_ppm
 FROM scored ORDER BY doc_a, doc_b
 """
@@ -330,9 +350,11 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _recall_report_sql(truth_sql: str, cand_sql: str, div: str) -> str:
-    """The report as one composed SQL text — truth/cand are the two
-    registered pipelines' own (dialect-specific) texts."""
+def _recall_report_sql(d: Dialect) -> str:
+    """The report as one composed SQL text over the two pipelines' own
+    texts."""
+    truth_sql = _dedup.TEMPLATES["dedup_ngram_jaccard"](d)
+    cand_sql = _lsh_sql(d)
     hit = "COALESCE(SUM(CASE WHEN t IS NOT NULL AND c IS NOT NULL THEN 1 ELSE 0 END), 0)"
     return f"""
 WITH truth AS (
@@ -349,28 +371,10 @@ joined AS (
 SELECT CAST(COUNT(t) AS BIGINT) AS n_true_pairs,
        CAST(COUNT(c) AS BIGINT) AS n_candidate_pairs,
        CAST({hit} AS BIGINT) AS n_hits,
-       CAST({hit} * 1000000 {div} NULLIF(COUNT(t), 0) AS BIGINT) AS recall_ppm,
-       CAST({hit} * 1000000 {div} NULLIF(COUNT(c), 0) AS BIGINT) AS precision_ppm
+       CAST({d.idiv(f'{hit} * 1000000', 'NULLIF(COUNT(t), 0)')} AS BIGINT) AS recall_ppm,
+       CAST({d.idiv(f'{hit} * 1000000', 'NULLIF(COUNT(c), 0)')} AS BIGINT) AS precision_ppm
 FROM joined
 """
-
-
-def _recall_report_oracle() -> str:
-    from .dedup import DEDUP_NGRAM_JACCARD_ORACLE
-
-    return _recall_report_sql(
-        DEDUP_NGRAM_JACCARD_ORACLE, DEDUP_MINHASH_LSH_ORACLE, "//"
-    )
-
-
-def _recall_report_spark_sql() -> str:
-    from . import dedup as _dedup
-
-    return _recall_report_sql(
-        _dedup.SPARK_SQL["dedup_ngram_jaccard"],
-        DEDUP_MINHASH_LSH_SPARK_SQL,
-        "div",
-    )
 
 
 QUERIES = {
@@ -378,75 +382,9 @@ QUERIES = {
     "dedup_minhash_bbit": dedup_minhash_bbit,
     "minhash_recall_report": minhash_recall_report,
 }
-
-ORACLES = {
-    "dedup_minhash_lsh": DEDUP_MINHASH_LSH_ORACLE,
-    "dedup_minhash_bbit": DEDUP_MINHASH_BBIT_ORACLE,
-    "minhash_recall_report": _recall_report_oracle(),
+TEMPLATES = {
+    "dedup_minhash_lsh": _lsh_sql,
+    "dedup_minhash_bbit": _bbit_sql,
+    "minhash_recall_report": _recall_report_sql,
 }
-
-# Spark-SQL N-version form (fluent ≡ SQL, tests/test_reference_queries.py);
-# named so llm/sampling.split_leakage_report can compose its dual on it
-DEDUP_MINHASH_LSH_SPARK_SQL = f"""
-WITH s AS ({_SHINGLES_SPARK_SQL}),
-sigt AS (
-  SELECT doc_id,
-         transform({_PERMS_SPARK}, p -> aggregate(
-           transform(sh, x -> cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint)),
-           bigint({P}),
-           (acc, h) -> least(acc, (element_at(p, 1) * h + element_at(p, 2)) % {P})))
-           AS sig
-  FROM s
-),
-bands AS (
-  SELECT doc_id, b AS band,
-         concat_ws(',', transform(slice(sig, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}),
-                                  x -> cast(x as string))) AS bkey
-  FROM sigt LATERAL VIEW explode(sequence(0, {BANDS - 1})) t AS b
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-),
-est AS (
-  SELECT c.doc_a, c.doc_b,
-         round(cast(size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y),
-                                v -> v)) as double) / {float(NUM_PERM)}D, 6)
-           AS est_jaccard
-  FROM cand c
-  JOIN sigt sa ON sa.doc_id = c.doc_a
-  JOIN sigt sb ON sb.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, est_jaccard
-FROM est
-WHERE est_jaccard >= {EST_THRESHOLD}D
-ORDER BY doc_a, doc_b
-"""
-
-DEDUP_MINHASH_BBIT_SPARK_SQL = DEDUP_MINHASH_LSH_SPARK_SQL.split(
-    "est AS ("
-)[0] + f"""scored AS (
-  SELECT c.doc_a, c.doc_b,
-         size(filter(zip_with(sa.sig, sb.sig, (x, y) -> x = y), v -> v))
-           * 1000000 div {NUM_PERM} AS sig_est_ppm,
-         cast(size(filter(zip_with(sa.sig, sb.sig,
-              (x, y) -> x % 2 = y % 2), v -> v)) as bigint) AS bbit_agree
-  FROM cand c
-  JOIN sigt sa ON sa.doc_id = c.doc_a
-  JOIN sigt sb ON sb.doc_id = c.doc_b
-)
-SELECT doc_a, doc_b, sig_est_ppm, bbit_agree,
-       greatest(2 * (bbit_agree * 1000000 div {NUM_PERM}) - 1000000, 0L)
-         AS bbit_est_ppm,
-       greatest(2 * (bbit_agree * 1000000 div {NUM_PERM}) - 1000000, 0L)
-         - sig_est_ppm AS err_ppm
-FROM scored ORDER BY doc_a, doc_b
-"""
-
-SPARK_SQL: dict[str, str] = {
-    "dedup_minhash_lsh": DEDUP_MINHASH_LSH_SPARK_SQL,
-    "dedup_minhash_bbit": DEDUP_MINHASH_BBIT_SPARK_SQL,
-    "minhash_recall_report": _recall_report_spark_sql(),
-}
-
+ORACLES, SPARK_SQL = render(TEMPLATES)

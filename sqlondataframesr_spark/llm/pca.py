@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import DUCK, SPARK, Dialect
 from ..materialize import materialize
 
 #: embedding dimensionality of the testdata embeddings table
@@ -69,18 +70,17 @@ PCA_DIM = 64
 _U = 1_000_000
 
 
-def _tdiv_spark(x: str, d: str) -> str:
+def _tdiv(dialect: Dialect, x: str, d: str) -> str:
     """Truncate-toward-zero division. Spark ``div`` and DuckDB ``//``
     BOTH already truncate toward zero (see module docstring); the
     sign-split spelling is a defensive identity, not a bridge."""
-    return f"(CASE WHEN {x} >= 0 THEN ({x}) div ({d}) ELSE -((-({x})) div ({d})) END)"
+    return (
+        f"(CASE WHEN {x} >= 0 THEN ({x}) {dialect.div} ({d})"
+        f" ELSE -((-({x})) {dialect.div} ({d})) END)"
+    )
 
 
-def _tdiv_duck(x: str, d: str) -> str:
-    return f"(CASE WHEN {x} >= 0 THEN ({x}) // ({d}) ELSE -((-({x})) // ({d})) END)"
-
-
-_Q8_SPARK = (
+_Q8 = (
     "transform(v, x -> cast(floor(x * (CASE WHEN maxabs > 0"
     " THEN 127.0 / maxabs ELSE 0.0 END) + 0.5) as bigint))"
 )
@@ -98,7 +98,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> cast(x as double))").alias("v"),
         )
         .withColumn("maxabs", F.expr("array_max(transform(v, x -> abs(x)))"))
-        .selectExpr("vec_id", f"{_Q8_SPARK} as q")
+        .selectExpr("vec_id", f"{_Q8} as q")
     )
     n = q8.agg(F.count(F.lit(1)).cast("long").alias("n"))
     s = (
@@ -152,7 +152,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         return m.crossJoin(F.broadcast(mx)).selectExpr(
             "a",
             "b",
-            _tdiv_spark(f"{col} * {_U}", "nullif(mx, 0)") + " as p",
+            _tdiv(SPARK, f"{col} * {_U}", "nullif(mx, 0)") + " as p",
         )
 
     # the squaring chain is a 3-round iterative loop on a DIM^2-bounded
@@ -175,7 +175,7 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         y = m.selectExpr("a as k_", "b", "p as pb")
         mm = (
             x.join(F.broadcast(y), F.col("k") == F.col("k_"))
-            .selectExpr("a", "b", _tdiv_spark("pa * pb", str(_U)) + " as m")
+            .selectExpr("a", "b", _tdiv(SPARK, "pa * pb", str(_U)) + " as m")
             .groupBy("a", "b")
             .agg(F.sum("m").cast("long").alias("raw"))
         ).localCheckpoint()  # also stops rescale's max-agg re-deriving the join
@@ -188,13 +188,13 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.crossJoin(F.broadcast(l1))
         .selectExpr(
             "a as dim",
-            _tdiv_spark(f"v * {_U}", "nullif(l1, 0)") + " as loading_ppm",
+            _tdiv(SPARK, f"v * {_U}", "nullif(l1, 0)") + " as loading_ppm",
         )
         .orderBy("dim")
     )
 
 
-def _pca_sql(tdiv, div: str) -> str:
+def _pca_sql(d: Dialect) -> str:
     """The oracle runs the SAME chain but builds the product sums via
     an exploded self-join (a second implementation of step 2 — the
     N-version discipline)."""
@@ -203,13 +203,13 @@ def _pca_sql(tdiv, div: str) -> str:
     for name in ("b2", "b4", "b8"):
         sq_ctes.append(f"""
 {name}_raw AS MATERIALIZED (
-  SELECT x.a, y.b, CAST(SUM({tdiv("x.p * y.p", str(_U))}) AS BIGINT) AS raw
+  SELECT x.a, y.b, CAST(SUM({_tdiv(d, "x.p * y.p", str(_U))}) AS BIGINT) AS raw
   FROM {prev} x JOIN {prev} y ON x.b = y.a
   GROUP BY x.a, y.b
 ),
 {name} AS MATERIALIZED (
   SELECT a, b,
-         {tdiv(f"raw * {_U}", f"nullif((SELECT MAX(abs(raw)) FROM {name}_raw), 0)")}
+         {_tdiv(d, f"raw * {_U}", f"nullif((SELECT MAX(abs(raw)) FROM {name}_raw), 0)")}
            AS p
   FROM {name}_raw
 )""")
@@ -250,19 +250,19 @@ c AS MATERIALIZED (
 ),
 b1 AS MATERIALIZED (
   SELECT a, b,
-         {tdiv(f"cv * {_U}", "nullif((SELECT MAX(abs(cv)) FROM c), 0)")} AS p
+         {_tdiv(d, f"cv * {_U}", "nullif((SELECT MAX(abs(cv)) FROM c), 0)")} AS p
   FROM c
 ),{",".join(sq_ctes)},
 v AS MATERIALIZED (SELECT a, CAST(SUM(p) AS BIGINT) AS v FROM b8 GROUP BY a),
 l1 AS MATERIALIZED (SELECT CAST(SUM(abs(v)) AS BIGINT) AS l1 FROM v)
 SELECT CAST(v.a AS BIGINT) AS dim,
-       {tdiv(f"v.v * {_U}", "nullif(l1.l1, 0)")} AS loading_ppm
+       {_tdiv(d, f"v.v * {_U}", "nullif(l1.l1, 0)")} AS loading_ppm
 FROM v CROSS JOIN l1
 ORDER BY dim
 """
 
 
-EMB_PCA_ORACLE = _pca_sql(_tdiv_duck, "//")
+EMB_PCA_ORACLE = _pca_sql(DUCK)
 
 QUERIES = {"emb_pca_power": emb_pca_power}
 ORACLES = {"emb_pca_power": EMB_PCA_ORACLE}

@@ -26,15 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from . import decontam as _decontam_mod, text as _text_mod
-from .decontam import DECONTAM_OVERLAP_ORACLE, decontam_overlap
+from .decontam import decontam_overlap
 from .dedup import DEDUP_EXACT_ORACLE, dedup_exact
-from .text import (
-    TEXT_CHUNKS_ORACLE,
-    TEXT_REPETITION_ORACLE,
-    text_chunks,
-    text_repetition,
-)
+from .text import text_chunks, text_repetition
 
 #: quality gate thresholds (sf-robust: p10-ish on the synthetic corpus)
 MIN_TOKENS = 20
@@ -71,16 +67,19 @@ def pipeline_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIPELINE_TRAINING_SET_ORACLE = f"""
+def _pipeline_sql(d: Dialect) -> str:
+    """The stage texts chained: the SQL pipeline is the SQL stages
+    composed, not a re-derivation."""
+    return f"""
 WITH keepers AS (
   SELECT keep_id AS doc_id FROM ({DEDUP_EXACT_ORACLE})
 ),
 quality AS (
-  SELECT doc_id FROM ({TEXT_REPETITION_ORACLE})
-  WHERE n_tokens >= {MIN_TOKENS} AND distinct_ratio >= {MIN_DISTINCT_RATIO}
+  SELECT doc_id FROM ({d.texts(_text_mod)["text_repetition"]})
+  WHERE n_tokens >= {MIN_TOKENS} AND distinct_ratio >= {MIN_DISTINCT_RATIO}{d.D}
 ),
 clean AS (
-  SELECT doc_id FROM ({DECONTAM_OVERLAP_ORACLE}) WHERE NOT contaminated
+  SELECT doc_id FROM ({d.texts(_decontam_mod)["decontam_overlap"]}) WHERE NOT contaminated
 ),
 kept AS (
   SELECT k.doc_id FROM keepers k
@@ -88,7 +87,7 @@ kept AS (
   JOIN clean USING (doc_id)
 ),
 chunks AS (
-  SELECT * FROM ({TEXT_CHUNKS_ORACLE}) c
+  SELECT * FROM ({d.texts(_text_mod)["text_chunks"]}) c
   WHERE c.doc_id IN (SELECT doc_id FROM kept)
 )
 SELECT d.source,
@@ -103,39 +102,7 @@ ORDER BY d.source
 
 
 QUERIES = {"pipeline_training_set": pipeline_training_set}
-ORACLES = {"pipeline_training_set": PIPELINE_TRAINING_SET_ORACLE}
-
-# Spark-SQL N-version form: composed from the STAGE duals exactly the
-# way the DuckDB oracle composes the stage oracles — the SQL pipeline
-# is the SQL stages chained, not a re-derivation.
-SPARK_SQL: dict[str, str] = {
-    "pipeline_training_set": f"""
-WITH keepers AS (
-  SELECT keep_id AS doc_id FROM ({DEDUP_EXACT_ORACLE})
-),
-quality AS (
-  SELECT doc_id FROM ({_text_mod.SPARK_SQL["text_repetition"]})
-  WHERE n_tokens >= {MIN_TOKENS} AND distinct_ratio >= {MIN_DISTINCT_RATIO}D
-),
-clean AS (
-  SELECT doc_id FROM ({_decontam_mod.SPARK_SQL["decontam_overlap"]})
-  WHERE NOT contaminated
-),
-kept AS (
-  SELECT k.doc_id FROM keepers k
-  JOIN quality USING (doc_id)
-  JOIN clean USING (doc_id)
-),
-chunks AS (
-  SELECT * FROM ({_text_mod.SPARK_SQL["text_chunks"]}) c
-  WHERE c.doc_id IN (SELECT doc_id FROM kept)
-)
-SELECT d.source,
-       COUNT(DISTINCT c.doc_id) AS n_docs,
-       COUNT(1) AS n_chunks,
-       SUM(c.n_chunk_tokens) AS n_tokens
-FROM chunks c JOIN documents d USING (doc_id)
-GROUP BY d.source
-ORDER BY d.source
-""",
+TEMPLATES = {
+    "pipeline_training_set": _pipeline_sql,
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

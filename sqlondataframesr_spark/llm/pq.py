@@ -38,32 +38,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..materialize import materialize
-from ..functions.rounding import r6 as _r6
+from ..functions import vector as V
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 from .similarity import (
+    DIM,
     N_QUERIES,
     NLIST,
     NPROBE,
     TOP_K,
-    _COS,
-    _COS_DUCK,
-    _VEC_SPARK_SQL,
-    _VEC_SQL,
     _vectors,
+    vec_sql,
 )
 
 M_SUB = 8
 SUB_DIM = 8
 KSUB = 16
 
-#: squared-L2 subspace distance in integer micro-units (engine-exact)
-_D_US_SPARK = (
-    "cast(round((floor((aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-    " 0D, (acc, x) -> acc + x)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
-)
-_D_US_DUCK = (
-    "CAST(round((floor((list_sum([({a}[i] - {b}[i]) * ({a}[i] - {b}[i])"
-    f" for i in range(1, {SUB_DIM + 1})])) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)"
-)
+
+def _d_us_sql(d: Dialect, a: str, b: str) -> str:
+    """Squared-L2 subspace distance in integer micro-units
+    (engine-exact)."""
+    dist = d.zip_sum(a, b, SUB_DIM, term="({x} - {y}) * ({x} - {y})")
+    return f"CAST(round({r6_sql(dist)} * 1000000.0) AS BIGINT)"
 
 
 def _subvectors(vec: DataFrame) -> DataFrame:
@@ -89,7 +86,7 @@ def _encoded(vec: DataFrame) -> DataFrame:
         "vec_id",
         "m",
         "cw_id",
-        F.expr(_D_US_SPARK.format(a="subv", b="cw")).alias("d_us"),
+        F.expr(_d_us_sql(SPARK, "subv", "cw")).alias("d_us"),
     )
     return dist.groupBy("vec_id", "m").agg(
         F.expr("min_by(cw_id, struct(d_us, cw_id))").alias("code"),
@@ -141,7 +138,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cb), "m")
         .select(
             "q_id", "m", "cw_id",
-            F.expr(_D_US_SPARK.format(a="qsub", b="cw")).alias("d_us"),
+            F.expr(_d_us_sql(SPARK, "qsub", "cw")).alias("d_us"),
         )
     )
     approx = (
@@ -205,7 +202,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     asg_scored = vec.crossJoin(F.broadcast(cent)).select(
         "vec_id",
         "c_id",
-        F.expr(_COS.format(a="v", b="cv", na="nrm", nb="cn")).alias("ccos"),
+        F.expr(V.cosine(SPARK, "v", "cv", "nrm", "cn", DIM)).alias("ccos"),
     )
     aw = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.col("c_id"))
     ranked = asg_scored.withColumn("arnk", F.row_number().over(aw))
@@ -234,7 +231,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cb), "m")
         .select(
             "q_id", "m", "cw_id",
-            F.expr(_D_US_SPARK.format(a="qsub", b="cw")).alias("d_us"),
+            F.expr(_d_us_sql(SPARK, "qsub", "cw")).alias("d_us"),
         )
     )
     cand_codes = cand.join(
@@ -268,7 +265,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "neighbor_id",
             _r6(F.col("dist_us").cast("double") / 1000000.0).alias("adc_dist"),
-            F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"),
+            F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"),
         )
     )
     rw = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -280,19 +277,17 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_pq_sql(dialect: str) -> str:
+def _ivf_pq_sql(d: Dialect) -> str:
     """Both-stage oracle: IVF probe candidates -> ADC shortlist ->
     exact cosine rerank, unrolled in the target dialect."""
-    d_us = _D_US_DUCK if dialect == "duck" else _D_US_SPARK
-    cos = _COS_DUCK if dialect == "duck" else _COS
     return (
         "WITH "
-        + ",\n".join(_pq_parts(dialect))
+        + ",\n".join(_pq_parts(d))
         + f""",
 cent AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vec WHERE vec_id < {NLIST}),
 asg_scored AS (
   SELECT vec.vec_id, cent.c_id,
-         {cos.format(a='vec.v', b='cent.cv', na='vec.nrm', nb='cent.cn')} AS ccos
+         {V.cosine(d, 'vec.v', 'cent.cv', 'vec.nrm', 'cent.cn', DIM)} AS ccos
   FROM vec CROSS JOIN cent),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -308,7 +303,7 @@ cand AS (
   WHERE asg.vec_id != probes.q_id),
 lut AS (
   SELECT q.vec_id AS q_id, q.m, cb.cw_id,
-         {d_us.format(a='q.subv', b='cb.cw')} AS d_us
+         {_d_us_sql(d, 'q.subv', 'cb.cw')} AS d_us
   FROM sub q JOIN cb ON q.m = cb.m
   WHERE q.vec_id < {N_QUERIES}),
 approx AS (
@@ -323,8 +318,8 @@ short AS (
   FROM approx),
 rer AS (
   SELECT s.q_id, s.neighbor_id,
-         (floor((CAST(s.dist_us AS DOUBLE) / 1000000.0) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS adc_dist,
-         {cos.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {r6_sql('CAST(s.dist_us AS DOUBLE) / 1000000.0')} AS adc_dist,
+         {V.cosine(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm', DIM)} AS cosine
   FROM short s
   JOIN vec q ON q.vec_id = s.q_id
   JOIN vec c ON c.vec_id = s.neighbor_id
@@ -338,29 +333,18 @@ ORDER BY q_id, rnk"""
     )
 
 
-def _pq_parts(dialect: str) -> list[str]:
+def _pq_parts(d: Dialect) -> list[str]:
     """Shared CTE list: vec -> sub -> cb -> dist -> best (per-vector
-    per-subspace nearest codeword). dialect in {'duck', 'spark'}."""
-    if dialect == "duck":
-        vec_sql, d_us = _VEC_SQL, _D_US_DUCK
-        sub = (
-            f"SELECT vec_id, t.m AS m,"
-            f" (v)[t.m * {SUB_DIM} + 1 : t.m * {SUB_DIM} + {SUB_DIM}] AS subv"
-            f" FROM vec, range(0, {M_SUB}) t(m)"
-        )
-    else:
-        vec_sql, d_us = _VEC_SPARK_SQL, _D_US_SPARK
-        sub = (
-            f"SELECT vec_id, m, slice(v, m * {SUB_DIM} + 1, {SUB_DIM}) AS subv"
-            f" FROM vec LATERAL VIEW explode(sequence(0, {M_SUB - 1})) t AS m"
-        )
+    per-subspace nearest codeword)."""
+    subv = d.slice("(v)", f"t.m * {SUB_DIM} + 1", f"t.m * {SUB_DIM} + {SUB_DIM}", SUB_DIM, sep=" : ")
+    sub = f"SELECT vec_id, t.m AS m, {subv} AS subv FROM vec, range(0, {M_SUB}) t(m)"
     return [
-        f"vec AS ({vec_sql})",
+        f"vec AS ({vec_sql(d)})",
         f"sub AS ({sub})",
         f"cb AS (SELECT vec_id AS cw_id, m, subv AS cw FROM sub WHERE vec_id < {KSUB})",
         f"""dist AS (
   SELECT s.vec_id, s.m, cb.cw_id,
-         {d_us.format(a='s.subv', b='cb.cw')} AS d_us
+         {_d_us_sql(d, 's.subv', 'cb.cw')} AS d_us
   FROM sub s JOIN cb ON s.m = cb.m)""",
         """best AS (
   SELECT vec_id, m, cw_id AS code, d_us
@@ -371,32 +355,26 @@ def _pq_parts(dialect: str) -> list[str]:
     ]
 
 
-def _pq_encode_sql(dialect: str) -> str:
-    codes = (
-        "string_agg(CAST(code AS VARCHAR), ',' ORDER BY m)"
-        if dialect == "duck"
-        else "array_join(transform(array_sort(collect_list(struct(m, code))),"
-        " x -> cast(x.code as string)), ',')"
-    )
+def _pq_encode_sql(d: Dialect) -> str:
+    codes = d.string_agg(d.cast_str("code"), "','", "m")
     return (
         "WITH "
-        + ",\n".join(_pq_parts(dialect))
+        + ",\n".join(_pq_parts(d))
         + f"""
 SELECT vec_id, {codes} AS codes,
-       (floor((CAST(SUM(d_us) AS DOUBLE) / 1000000.0) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS qerr
+       {r6_sql('CAST(SUM(d_us) AS DOUBLE) / 1000000.0')} AS qerr
 FROM best GROUP BY vec_id ORDER BY vec_id"""
     )
 
 
-def _pq_adc_sql(dialect: str) -> str:
-    d_us = _D_US_DUCK if dialect == "duck" else _D_US_SPARK
+def _pq_adc_sql(d: Dialect) -> str:
     return (
         "WITH "
-        + ",\n".join(_pq_parts(dialect))
+        + ",\n".join(_pq_parts(d))
         + f""",
 lut AS (
   SELECT q.vec_id AS q_id, q.m, cb.cw_id,
-         {d_us.format(a='q.subv', b='cb.cw')} AS d_us
+         {_d_us_sql(d, 'q.subv', 'cb.cw')} AS d_us
   FROM sub q JOIN cb ON q.m = cb.m
   WHERE q.vec_id < {N_QUERIES}),
 approx AS (
@@ -409,7 +387,7 @@ r AS (
                                ORDER BY dist_us, vec_id) AS rnk
   FROM approx)
 SELECT q_id, vec_id AS neighbor_id,
-       (floor((CAST(dist_us AS DOUBLE) / 1000000.0) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS adc_dist, rnk
+       {r6_sql('CAST(dist_us AS DOUBLE) / 1000000.0')} AS adc_dist, rnk
 FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk"""
     )
 
@@ -419,13 +397,9 @@ QUERIES = {
     "ann_pq_adc": ann_pq_adc,
     "ann_ivf_pq_topk": ann_ivf_pq_topk,
 }
-ORACLES = {
-    "emb_pq_encode": _pq_encode_sql("duck"),
-    "ann_pq_adc": _pq_adc_sql("duck"),
-    "ann_ivf_pq_topk": _ivf_pq_sql("duck"),
+TEMPLATES = {
+    "emb_pq_encode": _pq_encode_sql,
+    "ann_pq_adc": _pq_adc_sql,
+    "ann_ivf_pq_topk": _ivf_pq_sql,
 }
-SPARK_SQL: dict[str, str] = {
-    "emb_pq_encode": _pq_encode_sql("spark"),
-    "ann_pq_adc": _pq_adc_sql("spark"),
-    "ann_ivf_pq_topk": _ivf_pq_sql("spark"),
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import bm25 as _bm25
 from . import hybrid as _hybrid
 from . import similarity as _sim
+from ..functions.dialect import Dialect, render
 from ..materialize import force_concurrently, materialize
 
 #: (method label, fn, output id column) — label-sorted
@@ -156,10 +157,14 @@ def ret_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _agreement_sql(texts: dict[str, tuple[str, str]], intdiv: str) -> str:
-    """The report as one composed SQL text over the three rankers'
-    own registered (dialect-specific) statements — shared by the
-    DuckDB oracle and (r12) the Spark-SQL dual."""
+def _agreement_sql(d: Dialect) -> str:
+    """The report as one composed SQL text over the three rankers' own
+    statements."""
+    texts = {
+        "bm25": ("doc_id", d.texts(_bm25)["bm25_topk"]),
+        "hybrid_rrf": ("id", d.texts(_hybrid)["hybrid_rrf_topk"]),
+        "ql_dirichlet": ("doc_id", d.texts(_bm25)["ql_dirichlet_topk"]),
+    }
     n_q, k = _bm25.BM25_N_QUERIES, _bm25.BM25_TOP_K
     branches = " UNION ALL ".join(
         f"SELECT '{label}' AS method, q_id, {col} AS id, rnk"
@@ -182,7 +187,7 @@ SELECT p.method_a, p.method_b,
        CAST({n_q} AS BIGINT) AS n_queries,
        CAST({k} AS BIGINT) AS k,
        CAST(COUNT(j.q_id) AS BIGINT) AS n_overlap,
-       CAST(COUNT(j.q_id) * 1000000 {intdiv} {n_q * k} AS BIGINT) AS overlap_ppm,
+       CAST(COUNT(j.q_id) * 1000000 {d.div} {n_q * k} AS BIGINT) AS overlap_ppm,
        CAST(COALESCE(SUM(CASE WHEN j.rnk_a = 1 AND j.rnk_b = 1
                               THEN 1 ELSE 0 END), 0) AS BIGINT)
          AS n_same_top1
@@ -194,25 +199,7 @@ ORDER BY p.method_a, p.method_b
 
 
 QUERIES = {"ret_rank_agreement": ret_rank_agreement}
-ORACLES = {
-    "ret_rank_agreement": _agreement_sql(
-        {
-            "bm25": ("doc_id", _bm25.ORACLES["bm25_topk"]),
-            "hybrid_rrf": ("id", _hybrid.ORACLES["hybrid_rrf_topk"]),
-            "ql_dirichlet": ("doc_id", _bm25.ORACLES["ql_dirichlet_topk"]),
-        },
-        "//",
-    )
+TEMPLATES = {
+    "ret_rank_agreement": _agreement_sql,
 }
-# composed dual (r12): same composition over the rankers' registered
-# Spark-SQL statements — replaces the "composition" COVERAGE waiver
-SPARK_SQL: dict[str, str] = {
-    "ret_rank_agreement": _agreement_sql(
-        {
-            "bm25": ("doc_id", _bm25.SPARK_SQL["bm25_topk"]),
-            "hybrid_rrf": ("id", _hybrid.SPARK_SQL["hybrid_rrf_topk"]),
-            "ql_dirichlet": ("doc_id", _bm25.SPARK_SQL["ql_dirichlet_topk"]),
-        },
-        "div",
-    )
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 
 #: hash-bucket split boundaries (out of 100): [0,80) train, [80,90) val,
 #: [90,100) test
@@ -34,8 +35,11 @@ STRATUM_N = 5
 #: token budget per packed training sequence
 PACK_BUDGET = 512
 
-_BUCKET_SPARK = "pmod(cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint), 100)"
-_BUCKET_DUCK = "(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100)"
+def bucket_sql(d: Dialect, buckets: int = 100) -> str:
+    """The md5 hash bucket of ``doc_id`` out of ``buckets`` (the hash
+    is non-negative, so ``%`` is ``pmod``)."""
+    h = d.hex_bigint(f"substr(md5({d.cast_str('doc_id')}), 1, 8)")
+    return f"({h} % {buckets})"
 
 
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +52,7 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (contamination-safe). Map-only — zero shuffle, fully codegen'd.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.expr(_BUCKET_SPARK)
+    bucket = F.expr(bucket_sql(SPARK))
     return docs.select(
         "doc_id",
         "lang",
@@ -60,11 +64,12 @@ def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_HASH_SPLIT_ORACLE = f"""
+def _hash_split_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id, lang,
-       {_BUCKET_DUCK} AS bucket,
-       CASE WHEN {_BUCKET_DUCK} < {TRAIN_PCT} THEN 'train'
-            WHEN {_BUCKET_DUCK} < {VAL_PCT} THEN 'val'
+       {bucket_sql(d)} AS bucket,
+       CASE WHEN {bucket_sql(d)} < {TRAIN_PCT} THEN 'train'
+            WHEN {bucket_sql(d)} < {VAL_PCT} THEN 'val'
             ELSE 'test' END AS split
 FROM documents
 """
@@ -136,9 +141,10 @@ def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PACK_TOKEN_BUDGET_ORACLE = f"""
+def _pack_sql(d: Dialect) -> str:
+    return f"""
 WITH toks AS (
-  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens FROM documents
+  SELECT doc_id, lang, {d.fn('len', d.fn('string_split', 'text', "' '"))} AS n_tokens FROM documents
 ),
 cum AS (
   SELECT doc_id, lang, n_tokens,
@@ -162,16 +168,11 @@ FROM cum
 #: weighted-reservoir sample size
 RESERVOIR_K = 20
 
-#: md5-uniform u(doc_id) in (0, 1] — deterministic, so the "random"
-#: sample is a pure row property (repo-standard reproducibility)
-_U_SPARK = (
-    "((cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as double)"
-    " + 1.0) / 4294967296.0)"
-)
-_U_DUCK = (
-    "((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
-    " + 1.0) / 4294967296.0)"
-)
+def _u_sql(d: Dialect) -> str:
+    """md5-uniform u(doc_id) in (0, 1] — deterministic, so the "random"
+    sample is a pure row property (repo-standard reproducibility)."""
+    h = d.hex_cast(f"substr(md5({d.cast_str('doc_id')}), 1, 8)", "BIGINT")
+    return f"(({h} + 1.0{d.D}) / 4294967296.0{d.D})"
 
 
 def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -192,7 +193,7 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     key = _r6(
-        F.expr(f"power({_U_SPARK}, 1.0 / cast(n_chars as double))"))
+        F.expr(f"power({_u_sql(SPARK)}, 1.0 / cast(n_chars as double))"))
     return (
         docs.filter(F.col("n_chars") > 0)
         .select("doc_id", "n_chars", key.alias("es_key"))
@@ -201,18 +202,10 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_WEIGHTED_RESERVOIR_ORACLE = f"""
+def _reservoir_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id, n_chars,
-       (floor((POW({_U_DUCK}, 1.0 / CAST(n_chars AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS es_key
-FROM documents
-WHERE n_chars > 0
-ORDER BY es_key DESC, doc_id
-LIMIT {RESERVOIR_K}
-"""
-
-SAMPLE_WEIGHTED_RESERVOIR_SPARK_SQL = f"""
-SELECT doc_id, n_chars,
-       (floor((POWER({_U_SPARK}, 1.0 / CAST(n_chars AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS es_key
+       {r6_sql(f'POW({_u_sql(d)}, 1.0 / CAST(n_chars AS DOUBLE))')} AS es_key
 FROM documents
 WHERE n_chars > 0
 ORDER BY es_key DESC, doc_id
@@ -258,15 +251,15 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _split_leakage_oracle() -> str:
-    from .minhash import DEDUP_MINHASH_LSH_ORACLE
+def _split_leakage_sql(d: Dialect) -> str:
+    from . import minhash
 
     return f"""
-WITH pairs AS ({DEDUP_MINHASH_LSH_ORACLE}),
+WITH pairs AS ({d.texts(minhash)["dedup_minhash_lsh"]}),
 splits AS (
   SELECT doc_id,
-         CASE WHEN {_BUCKET_DUCK} < {TRAIN_PCT} THEN 'train'
-              WHEN {_BUCKET_DUCK} < {VAL_PCT} THEN 'val'
+         CASE WHEN {bucket_sql(d)} < {TRAIN_PCT} THEN 'train'
+              WHEN {bucket_sql(d)} < {VAL_PCT} THEN 'val'
               ELSE 'test' END AS split
   FROM documents
 ),
@@ -385,20 +378,18 @@ def sample_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _unimax_sql(intdiv: str) -> str:
-    """Dialect-shared UniMax SQL — parameterized only by the integer-
-    division operator (Spark ``div``, DuckDB ``//``)."""
+def _unimax_sql(d: Dialect) -> str:
     return f"""
 WITH toks AS (
   SELECT lang, CAST(SUM(nt) AS BIGINT) AS t
-  FROM (SELECT lang, size(string_split_ws(text)) AS nt FROM documents)
+  FROM (SELECT lang, {d.fn('len', d.fn('string_split', 'text', "' '"))} AS nt FROM documents)
   GROUP BY lang
 ),
 tot AS (SELECT CAST(SUM(t) AS BIGINT) AS tot, CAST(COUNT(*) AS BIGINT) AS k FROM toks),
 c AS (
   SELECT lang, t,
-         ({UNIMAX_BUDGET_NUM} * tot) {intdiv} {UNIMAX_BUDGET_DEN} AS budget,
-         ({UNIMAX_CAP_NUM} * t) {intdiv} {UNIMAX_CAP_DEN} AS cap,
+         {d.idiv(f'({UNIMAX_BUDGET_NUM} * tot)', UNIMAX_BUDGET_DEN)} AS budget,
+         {d.idiv(f'({UNIMAX_CAP_NUM} * t)', UNIMAX_CAP_DEN)} AS cap,
          k
   FROM toks CROSS JOIN tot
 ),
@@ -424,21 +415,12 @@ m AS (
 SELECT lang, t AS lang_tokens, cap AS cap_tokens,
        round(CASE WHEN capped THEN CAST(cap AS DOUBLE)
                   ELSE (budget - paid) / (k - m) END, 2) AS alloc_tokens,
-       (floor((round(CASE WHEN capped THEN CAST(cap AS DOUBLE)
-                        ELSE (budget - paid) / (k - m) END, 2) / t) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS epochs,
+       {r6_sql('''round(CASE WHEN capped THEN CAST(cap AS DOUBLE)
+                        ELSE (budget - paid) / (k - m) END, 2) / t''')} AS epochs,
        capped
 FROM f CROSS JOIN m
 ORDER BY lang
 """
-
-
-SAMPLE_UNIMAX_ORACLE = _unimax_sql("//").replace(
-    "size(string_split_ws(text))", "len(string_split(text, ' '))"
-)
-
-SAMPLE_UNIMAX_SPARK_SQL = _unimax_sql("div").replace(
-    "size(string_split_ws(text))", "size(split(text, ' '))"
-)
 
 
 #: total sample the Neyman allocation distributes
@@ -511,7 +493,8 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SAMPLE_NEYMAN_ORACLE = f"""
+def _neyman_sql(d: Dialect) -> str:
+    return f"""
 WITH strata AS (
     SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS sx,
@@ -527,9 +510,9 @@ w AS (
 tot AS (SELECT CAST(SUM(weight) AS BIGINT) AS wt FROM w),
 base AS (
     SELECT source, n_docs, weight,
-           {NEYMAN_TOTAL} * weight // nullif(tot.wt, 0) AS base,
+           {d.idiv(f'{NEYMAN_TOTAL} * weight', 'nullif(tot.wt, 0)')} AS base,
            {NEYMAN_TOTAL} * weight - ({NEYMAN_TOTAL} * weight
-             // nullif(tot.wt, 0)) * tot.wt AS rem
+             {d.div} nullif(tot.wt, 0)) * tot.wt AS rem
     FROM w CROSS JOIN tot
 ),
 leftover AS (
@@ -557,78 +540,14 @@ QUERIES = {
     "sample_weighted_reservoir": sample_weighted_reservoir,
 }
 
-ORACLES = {
-    "sample_neyman_allocation": SAMPLE_NEYMAN_ORACLE,
-    "sample_unimax_allocation": SAMPLE_UNIMAX_ORACLE,
-    "sample_hash_split": SAMPLE_HASH_SPLIT_ORACLE,
-    "sample_stratified_topn": SAMPLE_STRATIFIED_TOPN_ORACLE,
-    "pack_token_budget": PACK_TOKEN_BUDGET_ORACLE,
-    "split_leakage_report": _split_leakage_oracle(),
-    "sample_weighted_reservoir": SAMPLE_WEIGHTED_RESERVOIR_ORACLE,
-}
-
-def _split_leakage_spark_sql() -> str:
-    from .minhash import DEDUP_MINHASH_LSH_SPARK_SQL
-
-    return f"""
-WITH pairs AS ({DEDUP_MINHASH_LSH_SPARK_SQL}),
-splits AS (
-  SELECT doc_id,
-         CASE WHEN {_BUCKET_SPARK} < {TRAIN_PCT} THEN 'train'
-              WHEN {_BUCKET_SPARK} < {VAL_PCT} THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents
-),
-j AS (
-  SELECT least(sa.split, sb.split) AS split_1,
-         greatest(sa.split, sb.split) AS split_2
-  FROM pairs p
-  JOIN splits sa ON sa.doc_id = p.doc_a
-  JOIN splits sb ON sb.doc_id = p.doc_b
-)
-SELECT split_1, split_2, COUNT(*) AS n_pairs,
-       (split_1 <> split_2) AS is_leak
-FROM j
-GROUP BY split_1, split_2
-ORDER BY split_1, split_2
-"""
-
-
-# Spark-SQL N-version forms (fluent ≡ SQL, tests/test_reference_queries.py)
-SPARK_SQL: dict[str, str] = {
-    # seams: // -> div; IF spelling shared via CASE WHEN already
-    "sample_neyman_allocation": SAMPLE_NEYMAN_ORACLE.replace(
-        " // ", " div "
-    ),
-    "sample_unimax_allocation": SAMPLE_UNIMAX_SPARK_SQL,
-    "split_leakage_report": _split_leakage_spark_sql(),
-    "sample_weighted_reservoir": SAMPLE_WEIGHTED_RESERVOIR_SPARK_SQL,
-    "sample_hash_split": f"""
-SELECT doc_id, lang,
-       {_BUCKET_SPARK} AS bucket,
-       CASE WHEN {_BUCKET_SPARK} < {TRAIN_PCT} THEN 'train'
-            WHEN {_BUCKET_SPARK} < {VAL_PCT} THEN 'val'
-            ELSE 'test' END AS split
-FROM documents
-""",
+TEMPLATES = {
+    "sample_neyman_allocation": _neyman_sql,
+    "sample_unimax_allocation": _unimax_sql,
+    "sample_hash_split": _hash_split_sql,
+    "pack_token_budget": _pack_sql,
+    "split_leakage_report": _split_leakage_sql,
+    "sample_weighted_reservoir": _reservoir_sql,
     # dialect-neutral: the oracle text parses identically in Spark SQL
     "sample_stratified_topn": SAMPLE_STRATIFIED_TOPN_ORACLE,
-    "pack_token_budget": f"""
-WITH toks AS (
-  SELECT doc_id, lang, size(split(text, ' ')) AS n_tokens FROM documents
-),
-cum AS (
-  SELECT doc_id, lang, n_tokens,
-         SUM(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                             ROWS UNBOUNDED PRECEDING) AS cum_tokens
-  FROM toks
-)
-SELECT lang,
-       floor((cum_tokens - n_tokens) / {PACK_BUDGET}) AS bin_id,
-       row_number() OVER (
-            PARTITION BY lang, floor((cum_tokens - n_tokens) / {PACK_BUDGET})
-            ORDER BY doc_id) AS bin_pos,
-       doc_id, n_tokens, cum_tokens
-FROM cum
-""",
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -43,16 +43,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import vector as V
+from ..functions.dialect import SPARK, Dialect, render
 from ..materialize import materialize
 from .similarity import (
+    DIM,
     KM_ITERS,
-    _COS,
-    _COS_DUCK,
     _assign_lists,
     _kmeans_centroids,
-    _kmeans_parts,
-    _kmeans_spark_parts,
     _vectors,
+    kmeans_parts,
 )
 
 #: semantic-duplicate cosine threshold (the paper's epsilon)
@@ -82,7 +82,7 @@ def capped_partners(members: DataFrame, cap: int = CLUSTER_PAIR_CAP) -> DataFram
     back; when no cluster is hot the drop side is empty and the
     anti-join is a broadcast no-op. Result set is identical to
     ranking every cluster — the SQL duals keep the simple global-rank
-    spelling (:func:`_cap_cte`) for exactly that reason.
+    spelling (:func:`cap_cte`) for exactly that reason.
 
     When the cap BINDS the result is approximate (duplicates whose
     smallest matching keeper ranks past the cap are missed — a recall
@@ -108,7 +108,7 @@ def capped_partners(members: DataFrame, cap: int = CLUSTER_PAIR_CAP) -> DataFram
     return members.join(drop, "vec_id", "anti")
 
 
-def _cap_cte(cap: int = CLUSTER_PAIR_CAP) -> str:
+def cap_cte(cap: int = CLUSTER_PAIR_CAP) -> str:
     """SQL twin of :func:`capped_partners` (dialect-neutral): ``ma`` =
     capped members, given a CTE ``m`` (vec_id, list_id, v, nrm)."""
     return f"""prt AS (
@@ -155,7 +155,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a_list") == F.col("b_list")) & (F.col("a_id") < F.col("b_id")),
         )
         .filter(
-            F.expr(_COS.format(a="va", b="vb", na="na", nb="nb")) >= F.lit(TAU)
+            F.expr(V.cosine(SPARK, "va", "vb", "na", "nb", DIM)) >= F.lit(TAU)
         )
         .groupBy(F.col("b_id").alias("vec_id"))
         .agg(F.min("a_id").alias("dup_of"))
@@ -198,14 +198,21 @@ def semdedup_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cap_report_sql(cos_tpl: str, parts: list[str]) -> str:
-    """Dialect-shared dual of :func:`semdedup_cap_report` — replays
-    the k-means assignment and aggregates cluster sizes."""
+def trained_prefix_sql(d: Dialect) -> str:
+    """``WITH`` the k-means unroll and ``cent`` = its trained codebook."""
     return (
         "WITH "
-        + ",\n".join(parts)
+        + ",\n".join(kmeans_parts(d))
         + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _final_assign_sql(cos_tpl)
+    )
+
+
+def _cap_report_sql(d: Dialect) -> str:
+    """SQL of :func:`semdedup_cap_report` — replays the k-means
+    assignment and aggregates cluster sizes."""
+    return (
+        trained_prefix_sql(d)
+        + final_assign_sql(d)
         + f""",
 sizes AS (SELECT list_id, COUNT(*) AS csz FROM fa GROUP BY list_id)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_clusters,
@@ -216,10 +223,9 @@ FROM sizes"""
     )
 
 
-def _final_assign_sql(cos_tpl: str) -> str:
-    """Assignment of every vector to the trained codebook (CTE text,
-    dialect-parametrized by the cosine template)."""
-    cos = cos_tpl.format(a="vec.v", b="cent.cv", na="vec.nrm", nb="cent.cn")
+def final_assign_sql(d: Dialect) -> str:
+    """Assignment of every vector to the trained codebook (CTE text)."""
+    cos = V.cosine(d, "vec.v", "cent.cv", "vec.nrm", "cent.cn", DIM)
     return f"""fa AS (
   SELECT vec_id, c_id AS list_id FROM (
     SELECT vec.vec_id, cent.c_id,
@@ -230,9 +236,9 @@ m AS (SELECT vec.vec_id, fa.list_id, vec.v, vec.nrm
       FROM vec JOIN fa USING (vec_id))"""
 
 
-def _semdedup_tail(cos_tpl: str) -> str:
-    cos = cos_tpl.format(a="a.v", b="b.v", na="a.nrm", nb="b.nrm")
-    return f"""{_cap_cte()},
+def _semdedup_tail(d: Dialect) -> str:
+    cos = V.cosine(d, "a.v", "b.v", "a.nrm", "b.nrm", DIM)
+    return f"""{cap_cte()},
 pairs AS (
   SELECT b.vec_id, a.vec_id AS keeper
   FROM ma a JOIN m b ON a.list_id = b.list_id AND a.vec_id < b.vec_id
@@ -296,10 +302,9 @@ def emb_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _proto_tail(cos_tpl: str, intdiv: str) -> str:
-    """Dialect-shared prune SQL — expects ``vec`` and ``cent`` CTEs;
-    parameterized by the cosine template and the int-division token."""
-    cos = cos_tpl.format(a="vec.v", b="cent.cv", na="vec.nrm", nb="cent.cn")
+def _proto_tail(d: Dialect) -> str:
+    """Prune SQL — expects ``vec`` and ``cent`` CTEs."""
+    cos = V.cosine(d, "vec.v", "cent.cv", "vec.nrm", "cent.cn", DIM)
     return f"""scored AS (
   SELECT vec.vec_id, cent.c_id, {cos} AS ccos
   FROM vec CROSS JOIN cent),
@@ -317,48 +322,16 @@ rnk AS (
   FROM asg)
 SELECT vec_id, list_id AS c_id, proto_cos,
        CAST(proto_rank AS INT) AS proto_rank,
-       proto_rank > (csz * {PRUNE_NUM}) {intdiv} {PRUNE_DEN} AS keep
+       proto_rank > {d.idiv(f'(csz * {PRUNE_NUM})', PRUNE_DEN)} AS keep
 FROM rnk ORDER BY vec_id"""
 
 
-def _proto_oracle() -> str:
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_parts())
-        + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _proto_tail(_COS_DUCK, "//")
-    )
+def _proto_sql(d: Dialect) -> str:
+    return trained_prefix_sql(d) + _proto_tail(d)
 
 
-def _proto_spark_sql() -> str:
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_spark_parts())
-        + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _proto_tail(_COS, "div")
-    )
-
-
-def _semdedup_oracle() -> str:
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_parts())
-        + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _final_assign_sql(_COS_DUCK)
-        + ",\n"
-        + _semdedup_tail(_COS_DUCK)
-    )
-
-
-def _semdedup_spark_sql() -> str:
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_spark_parts())
-        + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _final_assign_sql(_COS)
-        + ",\n"
-        + _semdedup_tail(_COS)
-    )
+def _semdedup_sql(d: Dialect) -> str:
+    return trained_prefix_sql(d) + final_assign_sql(d) + ",\n" + _semdedup_tail(d)
 
 
 QUERIES = {
@@ -366,13 +339,9 @@ QUERIES = {
     "semdedup_cap_report": semdedup_cap_report,
     "emb_prototypicality_prune": emb_prototypicality_prune,
 }
-ORACLES = {
-    "semdedup": _semdedup_oracle(),
-    "semdedup_cap_report": _cap_report_sql(_COS_DUCK, _kmeans_parts()),
-    "emb_prototypicality_prune": _proto_oracle(),
+TEMPLATES = {
+    "semdedup": _semdedup_sql,
+    "semdedup_cap_report": _cap_report_sql,
+    "emb_prototypicality_prune": _proto_sql,
 }
-SPARK_SQL: dict[str, str] = {
-    "semdedup": _semdedup_spark_sql(),
-    "semdedup_cap_report": _cap_report_sql(_COS, _kmeans_spark_parts()),
-    "emb_prototypicality_prune": _proto_spark_sql(),
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 NUM_BITS = 64
 BLOCKS = 4
@@ -46,7 +47,7 @@ BLOCK_BITS = NUM_BITS // BLOCKS
 HAMMING_MAX = 3
 
 #: per-token 32-bit halves of md5 (hex → bigint), computed once
-_HS_SPARK = (
+_HS = (
     "transform(array_distinct(split(text, ' ')), t -> array("
     " cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint),"
     " cast(conv(substring(md5(t), 9, 8), 16, 10) as bigint)))"
@@ -69,7 +70,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     spread_scan: two md5s per token then a 64-bit vote-fold is the
     CPU-dense pass; don't let a single-row-group scan serialize it."""
     return (
-        spread_scan(docs, "doc_id").withColumn("hs", F.expr(_HS_SPARK))
+        spread_scan(docs, "doc_id").withColumn("hs", F.expr(_HS))
         .select(
             "doc_id",
             F.expr(_half_expr(1)).alias("fp_hi"),
@@ -179,44 +180,61 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return intra.unionByName(inter).orderBy("doc_a", "doc_b")
 
 
-#: DuckDB mirror of the fingerprint (same md5 halves, same packing).
-_FP_SQL = """
+def _fp_sql(d: Dialect) -> str:
+    """The fingerprint (same md5 halves, same packing as the fluent
+    :data:`_HS` / :func:`_half_expr`)."""
+
+    def half(idx: int) -> str:
+        vote = d.comp(f"2 * (({d.at('m', idx)} >> (31 - j)) & 1) - 1", "m", "hs")
+        bit = f"""CASE WHEN {d.list_sum(vote, '0L')} > 0
+                        THEN (1::BIGINT << (31 - j)) ELSE 0 END"""
+        bits = d.comp(bit, "j", d.seq(0, 32), brk="\n" + " " * 24)
+        return f"CAST({d.list_sum(bits, '0L')} AS BIGINT)"
+
+    md5_halves = d.list(
+        f"{d.hex_bigint('substr(md5(t), 1, 8)')},\n{' ' * 13}{d.hex_bigint('substr(md5(t), 9, 8)')}"
+    )
+    tokens = d.fn("list_distinct", d.fn("string_split", "text", "' '"))
+    hs = d.comp(md5_halves, "t", tokens, brk="\n" + " " * 12)
+    return f"""
   SELECT doc_id,
-         CAST(list_sum([CASE WHEN list_sum([2 * ((m[1] >> (31 - j)) & 1) - 1 for m in hs]) > 0
-                        THEN (1::BIGINT << (31 - j)) ELSE 0 END
-                        for j in range(0, 32)]) AS BIGINT) AS fp_hi,
-         CAST(list_sum([CASE WHEN list_sum([2 * ((m[2] >> (31 - j)) & 1) - 1 for m in hs]) > 0
-                        THEN (1::BIGINT << (31 - j)) ELSE 0 END
-                        for j in range(0, 32)]) AS BIGINT) AS fp_lo,
-         len(hs) AS n_tokens
+         {half(1)} AS fp_hi,
+         {half(2)} AS fp_lo,
+         {d.fn('len', 'hs')} AS n_tokens
   FROM (
     SELECT doc_id,
-           [[('0x' || substr(md5(t), 1, 8))::BIGINT,
-             ('0x' || substr(md5(t), 9, 8))::BIGINT]
-            for t in list_distinct(string_split(text, ' '))] AS hs
+           {hs} AS hs
     FROM documents
   )
 """
 
-SIMHASH_FINGERPRINT_ORACLE = f"""
-WITH fp AS ({_FP_SQL})
+
+def _fingerprint_sql(d: Dialect) -> str:
+    return f"""
+WITH fp AS ({_fp_sql(d)})
 SELECT doc_id, fp_hi, fp_lo, n_tokens FROM fp ORDER BY doc_id
 """
 
-DEDUP_SIMHASH_ORACLE = f"""
-WITH fp AS ({_FP_SQL}),
+
+def _dedup_sql(d: Dialect) -> str:
+    bkey = d.shr(
+        "CASE WHEN t.b < 2 THEN fp_hi ELSE fp_lo END",
+        "(CASE WHEN t.b % 2 = 0 THEN 16 ELSE 0 END)",
+        gap="\n" + " " * 10,
+    )
+    return f"""
+WITH fp AS ({_fp_sql(d)}),
 blocks AS (
   SELECT doc_id, fp_hi, fp_lo, t.b AS blk,
-         (CASE WHEN t.b < 2 THEN fp_hi ELSE fp_lo END
-          >> (CASE WHEN t.b % 2 = 0 THEN 16 ELSE 0 END)) & 65535 AS bkey
+         ({bkey}) & 65535 AS bkey
   FROM fp, range(0, {BLOCKS}) t(b)
 ),
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         bit_count(xor(a.fp_hi, b.fp_hi)) + bit_count(xor(a.fp_lo, b.fp_lo)) AS hamming
+         bit_count({d.xor('a.fp_hi', 'b.fp_hi')}) + bit_count({d.xor('a.fp_lo', 'b.fp_lo')}) AS hamming
   FROM blocks a
   JOIN blocks b ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.fp_hi, b.fp_hi)) + bit_count(xor(a.fp_lo, b.fp_lo)) <= {HAMMING_MAX}
+  WHERE bit_count({d.xor('a.fp_hi', 'b.fp_hi')}) + bit_count({d.xor('a.fp_lo', 'b.fp_lo')}) <= {HAMMING_MAX}
 )
 SELECT doc_a, doc_b, hamming FROM cand ORDER BY doc_a, doc_b
 """
@@ -227,45 +245,8 @@ QUERIES = {
     "dedup_simhash": dedup_simhash,
 }
 
-ORACLES = {
-    "simhash_fingerprint": SIMHASH_FINGERPRINT_ORACLE,
-    "dedup_simhash": DEDUP_SIMHASH_ORACLE,
+TEMPLATES = {
+    "simhash_fingerprint": _fingerprint_sql,
+    "dedup_simhash": _dedup_sql,
 }
-
-#: Spark-SQL mirror of the fingerprint CTE (same _HS_SPARK/_half_expr
-#: text the fluent form compiles — N versions share constants, not paths)
-_FP_SPARK_SQL = f"""
-  SELECT doc_id,
-         {_half_expr(1)} AS fp_hi,
-         {_half_expr(2)} AS fp_lo,
-         size(hs) AS n_tokens
-  FROM (SELECT doc_id, {_HS_SPARK} AS hs FROM documents)
-"""
-
-# Spark-SQL N-version forms (fluent ≡ SQL, tests/test_reference_queries.py).
-# dedup_simhash's SQL twin uses the direct doc-level block join (same
-# answer as the fluent group-compressed plan — the compression is a
-# performance rewrite, which is exactly what N-version testing pins).
-SPARK_SQL: dict[str, str] = {
-    "simhash_fingerprint": f"""
-WITH fp AS ({_FP_SPARK_SQL})
-SELECT doc_id, fp_hi, fp_lo, n_tokens FROM fp ORDER BY doc_id
-""",
-    "dedup_simhash": f"""
-WITH fp AS ({_FP_SPARK_SQL}),
-blocks AS (
-  SELECT doc_id, fp_hi, fp_lo, b AS blk,
-         shiftright(IF(b < 2, fp_hi, fp_lo), IF(b % 2 = 0, 16, 0)) & 65535 AS bkey
-  FROM fp LATERAL VIEW explode(sequence(0, {BLOCKS - 1})) t AS b
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         bit_count(a.fp_hi ^ b.fp_hi) + bit_count(a.fp_lo ^ b.fp_lo) AS hamming
-  FROM blocks a
-  JOIN blocks b ON a.blk = b.blk AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-  WHERE bit_count(a.fp_hi ^ b.fp_hi) + bit_count(a.fp_lo ^ b.fp_lo)
-        <= {HAMMING_MAX}
-)
-SELECT doc_a, doc_b, hamming FROM cand ORDER BY doc_a, doc_b
-""",
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
 from ..functions import vector as V
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import DUCK, SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 from ..functions.closure_sql import packed_closure_sql
 
 DIM = 64
@@ -65,12 +66,10 @@ def _plane_weight(j: int, d: int) -> float:
 
 PLANES = [[_plane_weight(j, d) for d in range(DIM)] for j in range(NUM_PLANES)]
 
-_PLANES_SPARK = "array(" + ",".join(
-    "array(" + ",".join(f"{w}D" for w in p) + ")" for p in PLANES
-) + ")"
-_PLANES_DUCK = "[" + ",".join(
-    "[" + ",".join(str(w) for w in p) + "]" for p in PLANES
-) + "]"
+
+def _planes(d: Dialect) -> str:
+    """The hyperplane matrix as a literal list of double lists."""
+    return d.list(",".join(d.list(",".join(f"{w}{d.D}" for w in p)) for p in PLANES))
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,7 +83,6 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COS = V.cosine("{a}", "{b}", "{na}", "{nb}")
 
 
 def with_signature(vectors: DataFrame) -> DataFrame:
@@ -92,7 +90,7 @@ def with_signature(vectors: DataFrame) -> DataFrame:
     return vectors.withColumn(
         "sig",
         F.expr(
-            f"concat_ws('', transform({_PLANES_SPARK},"
+            f"concat_ws('', transform({_planes(SPARK)},"
             " p -> IF(aggregate(zip_with(p, v, (w, x) -> w * x), 0D, (a, x) -> a + x) >= 0,"
             " '1', '0')))"
         ),
@@ -136,7 +134,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"),
+            F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"),
         )
     )
     return _topk(scored)
@@ -166,7 +164,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(F.broadcast(qv), "q_id")
         .join(nv, "neighbor_id")
         .select("q_id", "neighbor_id",
-                F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"))
+                F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"))
     )
     return _topk(scored)
 
@@ -219,7 +217,7 @@ def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "neighbor_id",
-            F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"),
+            F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.col("neighbor_id"))
@@ -249,7 +247,7 @@ def _assign_lists(
     scored = vec.join(F.broadcast(centroids)).select(
         F.col(id_col),
         F.col("c_id"),
-        F.expr(_COS.format(a="v", b="cv", na="nrm", nb="cn")).alias("ccos"),
+        F.expr(V.cosine(SPARK, "v", "cv", "nrm", "cn", DIM)).alias("ccos"),
     )
     aggs = [F.expr("max_by(c_id, struct(ccos, -c_id))").alias("list_id")]
     if with_cos:
@@ -312,7 +310,7 @@ def _ivf_from_centroids(vec: DataFrame, centroids: DataFrame) -> DataFrame:
     )
     q_scored = q.join(F.broadcast(centroids)).select(
         "q_id", "c_id",
-        F.expr(_COS.format(a="qv", b="cv", na="qn", nb="cn")).alias("ccos"),
+        F.expr(V.cosine(SPARK, "qv", "cv", "qn", "cn", DIM)).alias("ccos"),
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("ccos"), F.col("c_id"))
     probes = (
@@ -331,12 +329,12 @@ def _ivf_from_centroids(vec: DataFrame, centroids: DataFrame) -> DataFrame:
         cand.join(F.broadcast(qv.filter(F.col("q_id") < N_QUERIES)), "q_id")
         .join(nv, "neighbor_id")
         .select("q_id", "neighbor_id",
-                F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"))
+                F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"))
     )
     return _topk(scored)
 
 
-def _mean_us(s: str, n: str, div: str) -> str:
+def _mean_us(d: Dialect, s: str, n: str) -> str:
     """Round-half-up integer mean in micro units: mi = round(s/n) on
     exact integers, half away from zero. The r11 skew tree exposed why
     this can NOT be spelled as float round(round(s/(n*1e6),6)*1e6):
@@ -348,8 +346,8 @@ def _mean_us(s: str, n: str, div: str) -> str:
     engines for every input. Overflow bound: |2s+n| <= n*(2*0.52e6+1),
     inside int64 through n ~ 8.8e12 rows per group."""
     return (
-        f"(CASE WHEN {s} >= 0 THEN (2 * {s} + {n}) {div} (2 * {n})"
-        f" ELSE -((2 * -({s}) + {n}) {div} (2 * {n})) END)"
+        f"(CASE WHEN {s} >= 0 THEN (2 * {s} + {n}) {d.div} (2 * {n})"
+        f" ELSE -((2 * -({s}) + {n}) {d.div} (2 * {n})) END)"
     )
 
 
@@ -383,7 +381,7 @@ def emb_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     g = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n"), *sums)
     comps_us = [
-        F.expr(_mean_us(f"s{i}", "n", "div")).cast("string")
+        F.expr(_mean_us(SPARK, f"s{i}", "n")).cast("string")
         for i in range(DIM)
     ]
     return g.select(
@@ -391,15 +389,13 @@ def emb_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("label")
 
 
-def _centroid_oracle() -> str:
+def _centroid_sql(d: Dialect) -> str:
     sums = ",\n       ".join(
-        f"SUM(CAST(round(v[{i + 1}] * 1000000) AS BIGINT)) AS s{i}" for i in range(DIM)
+        f"SUM(CAST(round({d.at('v', i + 1)} * 1000000) AS BIGINT)) AS s{i}" for i in range(DIM)
     )
-    comps = ", ".join(
-        f"CAST({_mean_us(f's{i}', 'n', '//')} AS VARCHAR)" for i in range(DIM)
-    )
+    comps = ", ".join(d.cast_str(_mean_us(d, f"s{i}", "n")) for i in range(DIM))
     return f"""
-WITH e AS (SELECT label, [CAST(x AS DOUBLE) for x in embedding] AS v FROM embeddings),
+WITH e AS (SELECT label, {d.comp('CAST(x AS DOUBLE)', 'x', 'embedding')} AS v FROM embeddings),
 g AS (
   SELECT label, COUNT(*) AS n,
        {sums}
@@ -407,9 +403,6 @@ g AS (
 )
 SELECT label, n, concat_ws(',', {comps}) AS centroid_us FROM g ORDER BY label
 """
-
-
-EMB_LABEL_CENTROID_ORACLE = _centroid_oracle()
 
 
 #: k-means trainer: clusters and unrolled Lloyd iterations
@@ -440,7 +433,7 @@ def _kmeans_centroids(vec: DataFrame) -> DataFrame:
         # CAST, not a bare 1000000.0 literal — Spark parses that as
         # DECIMAL and the whole centroid would silently go decimal
         F.expr(
-            f"cast({_mean_us(f's{i}', 'n', 'div')} as double)"
+            f"cast({_mean_us(SPARK, f's{i}', 'n')} as double)"
             " / cast(1000000.0 as double)"
         )
         for i in range(DIM)
@@ -496,24 +489,20 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cent.select("c_id", "n", cent_us.alias("centroid_us")).orderBy("c_id")
 
 
-def _kmeans_parts() -> list[str]:
-    """CTE list replaying the unrolled Lloyd iterations in DuckDB —
-    shared by the kmeans_train oracle and the ann_ivf_trained oracle
-    (final centroid CTE: ``c{KM_ITERS}`` with c_id, n, cv, cn)."""
+def kmeans_parts(d: Dialect) -> list[str]:
+    """CTE list replaying the unrolled Lloyd iterations — shared by the
+    kmeans_train, ann_ivf_trained, semdedup and contrastive SQL (final
+    centroid CTE: ``c{KM_ITERS}`` with c_id, n, cv, cn)."""
     sums = ",\n         ".join(
-        f"SUM(CAST(round(v[{i + 1}] * 1000000) AS BIGINT)) AS s{i}" for i in range(DIM)
+        f"SUM(CAST(round({d.at('v', i + 1)} * 1000000) AS BIGINT)) AS s{i}" for i in range(DIM)
     )
-    comps = ", ".join(
-        f"({_mean_us(f's{i}', 'n', '//')} / 1000000.0)" for i in range(DIM)
-    )
+    comps = ", ".join(f"({_mean_us(d, f's{i}', 'n')} / 1000000.0{d.D})" for i in range(DIM))
     parts = [
-        f"vec AS ({_VEC_SQL})",
+        f"vec AS ({vec_sql(d)})",
         f"c0 AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vec WHERE vec_id < {KM_K})",
     ]
     for it in range(KM_ITERS):
-        cos = _COS_DUCK.format(
-            a="vec.v", b=f"c{it}.cv", na="vec.nrm", nb=f"c{it}.cn"
-        )
+        cos = _cos(d, "vec.v", f"c{it}.cv", "vec.nrm", f"c{it}.cn")
         parts.append(
             f"""a{it} AS (
   SELECT vec_id, c_id AS list_id FROM (
@@ -530,21 +519,19 @@ def _kmeans_parts() -> list[str]:
         )
         parts.append(
             f"""c{it + 1} AS (
-  SELECT list_id AS c_id, n, [{comps}] AS cv,
-         sqrt(list_sum(list_transform([{comps}], x -> x * x))) AS cn
+  SELECT list_id AS c_id, n, {d.list(comps)} AS cv,
+         sqrt({d.list_sum(d.fn('list_transform', d.list(comps), 'x -> x * x'))}) AS cn
   FROM g{it})"""
         )
     return parts
 
 
-def _kmeans_oracle() -> str:
-    cent_us = (
-        "array_to_string(list_transform(cv,"
-        " x -> CAST(CAST(round(x * 1000000.0) AS BIGINT) AS VARCHAR)), ',')"
-    )
+def _kmeans_sql(d: Dialect) -> str:
+    as_us = d.cast_str("CAST(round(x * 1000000.0) AS BIGINT)")
+    cent_us = d.fn("array_to_string", d.fn("list_transform", "cv", f"x -> {as_us}"), "','")
     return (
         "WITH "
-        + ",\n".join(_kmeans_parts())
+        + ",\n".join(kmeans_parts(d))
         + f"\nSELECT c_id, n, {cent_us} AS centroid_us"
         + f" FROM c{KM_ITERS} ORDER BY c_id"
     )
@@ -572,44 +559,53 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
         .select("vec_a", "vec_b",
-                F.expr(_COS.format(a="va", b="vb", na="na", nb="nb")).alias("cosine"))
+                F.expr(V.cosine(SPARK, "va", "vb", "na", "nb", DIM)).alias("cosine"))
         .filter(F.col("cosine") >= COS_THRESHOLD)
         .orderBy("vec_a", "vec_b")
     )
 
 
-_VEC_SQL = """
-  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS v,
-         sqrt(list_sum([CAST(x AS DOUBLE) * CAST(x AS DOUBLE) for x in embedding])) AS nrm
+def vec_sql(d: Dialect) -> str:
+    """vec_id, the double-cast vector ``v`` and its L2 norm ``nrm``."""
+    dbl = "CAST(x AS DOUBLE)"
+    return f"""
+  SELECT vec_id, {d.comp(dbl, 'x', 'embedding')} AS v,
+         sqrt({d.list_sum(d.comp(f'{dbl} * {dbl}', 'x', 'embedding'))}) AS nrm
   FROM embeddings
 """
 
-# floor-based 6-dp rounding, not (floor((x) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)): engine-portable at
-# decimal ties (see functions/vector.py cosine, r11 skew finding)
-_COS_DUCK = (
-    "(floor((list_sum([{a}[i] * {b}[i] for i in range(1, " + str(DIM + 1) + ")])"
-    " / nullif({na} * {nb}, 0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
-)
 
-_SIG_SQL = f"""
+def _cos(d: Dialect, a: str, b: str, na: str, nb: str) -> str:
+    return V.cosine(d, a, b, na, nb, DIM)
+
+
+def _sig_sql(d: Dialect) -> str:
+    dot = d.zip_sum("p", "v", DIM)
+    gap = "\n" + " " * 24
+    bits = d.comp(f"""CASE WHEN {dot} >= 0
+                         THEN '1' ELSE '0' END""", "p", _planes(d))
+    return f"""
   SELECT vec_id,
-         list_aggregate([CASE WHEN list_sum([p[i] * v[i] for i in range(1, {DIM + 1})]) >= 0
-                         THEN '1' ELSE '0' END for p in {_PLANES_DUCK}],
-                        'string_agg', '') AS sig
+         {d.string_agg_list(bits, "''", gap=gap)} AS sig
   FROM vec
 """
 
-_BANDS_SQL = f"""
+
+def _bands_sql(d: Dialect) -> str:
+    lo = f"t.b * {BAND_BITS} + 1"
+    return f"""
   SELECT vec_id, t.b AS band,
-         sig[t.b * {BAND_BITS} + 1 : t.b * {BAND_BITS} + {BAND_BITS}] AS bkey
+         {d.str_slice('sig', lo, f't.b * {BAND_BITS} + {BAND_BITS}', BAND_BITS, sep=' : ')} AS bkey
   FROM sig, range(0, {BANDS}) t(b)
 """
 
-ANN_COSINE_TOPK_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
+
+def _cosine_topk_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM vec q JOIN vec c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
@@ -620,17 +616,19 @@ r AS (
 SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
-KNN_GRAPH_LSH_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-sig AS ({_SIG_SQL}),
-bands AS ({_BANDS_SQL}),
+
+def _knn_graph_lsh_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+sig AS ({_sig_sql(d)}),
+bands AS ({_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
   FROM bands q JOIN bands c ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM cand
   JOIN vec q ON q.vec_id = cand.q_id
   JOIN vec c ON c.vec_id = cand.neighbor_id
@@ -643,10 +641,12 @@ SELECT q_id AS vec_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {KNN_K}
 ORDER BY vec_id, rnk
 """
 
-ANN_LSH_TOPK_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-sig AS ({_SIG_SQL}),
-bands AS ({_BANDS_SQL}),
+
+def _lsh_topk_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+sig AS ({_sig_sql(d)}),
+bands AS ({_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
   FROM bands q JOIN bands c ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
@@ -654,7 +654,7 @@ cand AS (
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM cand
   JOIN vec q ON q.vec_id = cand.q_id
   JOIN vec c ON c.vec_id = cand.neighbor_id
@@ -670,9 +670,10 @@ SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id,
 #: (c_id, cv, cn) and the ``vec`` CTE to be in scope. Appended after
 #: either the stand-in cent (ANN_IVF_TOPK_ORACLE) or the unrolled
 #: k-means parts (_ivf_trained_oracle).
-_IVF_BODY_SQL = f"""asg_scored AS (
+def _ivf_body_sql(d: Dialect) -> str:
+    return f"""asg_scored AS (
   SELECT vec.vec_id, cent.c_id,
-         {_COS_DUCK.format(a='vec.v', b='cent.cv', na='vec.nrm', nb='cent.cn')} AS ccos
+         {_cos(d, 'vec.v', 'cent.cv', 'vec.nrm', 'cent.cn')} AS ccos
   FROM vec CROSS JOIN cent
 ),
 asg AS (
@@ -694,7 +695,7 @@ cand AS (
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM cand
   JOIN vec q ON q.vec_id = cand.q_id
   JOIN vec c ON c.vec_id = cand.neighbor_id
@@ -706,41 +707,44 @@ r AS (
 SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
-ANN_IVF_TOPK_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
+
+def _ivf_topk_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
 cent AS (
   SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vec WHERE vec_id < {NLIST}
 ),
-{_IVF_BODY_SQL}"""
+{_ivf_body_sql(d)}"""
 
 
-def _ivf_trained_oracle() -> str:
+def _ivf_trained_sql(d: Dialect) -> str:
     """Unrolled k-means training + IVF probe in ONE SQL statement."""
     return (
         "WITH "
-        + ",\n".join(_kmeans_parts())
+        + ",\n".join(kmeans_parts(d))
         + f",\ncent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),\n"
-        + _IVF_BODY_SQL
+        + _ivf_body_sql(d)
     )
 
 
-DEDUP_EMBEDDING_COSINE_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-sig AS ({_SIG_SQL}),
-bands AS ({_BANDS_SQL}),
+def _dedup_embedding_cosine_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+sig AS ({_sig_sql(d)}),
+bands AS ({_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
 ),
 scored AS (
   SELECT cand.vec_a, cand.vec_b,
-         {_COS_DUCK.format(a='va.v', b='vb.v', na='va.nrm', nb='vb.nrm')} AS cosine
+         {_cos(d, 'va.v', 'vb.v', 'va.nrm', 'vb.nrm')} AS cosine
   FROM cand
   JOIN vec va ON va.vec_id = cand.vec_a
   JOIN vec vb ON vb.vec_id = cand.vec_b
 )
 SELECT vec_a, vec_b, cosine FROM scored
-WHERE cosine >= {COS_THRESHOLD}
+WHERE cosine >= {COS_THRESHOLD}{d.D}
 ORDER BY vec_a, vec_b
 """
 
@@ -798,7 +802,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMB_QUANTIZE_INT8_ORACLE = """
+EMB_QUANTIZE_INT8_ORACLE = f"""
 WITH v AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -821,11 +825,11 @@ q AS (
 )
 SELECT vec_id,
        array_to_string(list_transform(q_emb, x -> CAST(x AS VARCHAR)), ',') AS q_emb_str,
-       (floor((scale) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS scale,
+       {r6_sql('scale')} AS scale,
        CASE WHEN scale > 0
-            THEN (floor((list_max(list_transform(
+            THEN {r6_sql('''list_max(list_transform(
                    list_zip(v, q_emb),
-                   p -> abs(p[1] - p[2] / scale)))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+                   p -> abs(p[1] - p[2] / scale)))''')}
             ELSE 0.0 END AS max_err
 FROM q
 ORDER BY vec_id
@@ -842,13 +846,12 @@ RP_MATRIX = [
 ]
 
 
-def _rp_terms(j: int, elem: str) -> str:
+def _rp_terms(d: Dialect, j: int) -> str:
     """The j-th projection as an explicit left-to-right double sum —
     the SAME evaluation order in both engines, so the pre-round value
-    is bit-identical. ``elem`` is the dialect's 1-based element access
-    pattern with ``{i}`` as the index placeholder."""
+    is bit-identical."""
     return " + ".join(
-        f"CAST({elem.format(i=i + 1)} AS DOUBLE) * ({c})"
+        f"CAST({d.at('embedding', i + 1)} AS DOUBLE) * ({c})"
         for i, c in enumerate(RP_MATRIX[j])
     )
 
@@ -868,7 +871,7 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         *[
-            F.expr(f"round({_rp_terms(j, 'element_at(embedding, {i})')}, 5)").alias(
+            F.expr(f"round({_rp_terms(SPARK, j)}, 5)").alias(
                 f"p{j}"
             )
             for j in range(RP_DIMS)
@@ -876,18 +879,10 @@ def emb_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-EMB_RANDOM_PROJECTION_ORACLE = "SELECT vec_id, " + ", ".join(
-    f"round({_rp_terms(j, 'embedding[{i}]')}, 5) AS p{j}" for j in range(RP_DIMS)
-) + " FROM embeddings ORDER BY vec_id"
-
-_RP_SPARK_SQL = "SELECT vec_id, " + ", ".join(
-    f"round({_rp_terms(j, 'element_at(embedding, {i})')}, 5) AS p{j}"
-    for j in range(RP_DIMS)
-) + " FROM embeddings ORDER BY vec_id"
-
-
-# built here, after _VEC_SQL/_COS_DUCK exist (the builder reads both)
-KMEANS_TRAIN_ORACLE = _kmeans_oracle()
+def _random_projection_sql(d: Dialect) -> str:
+    return "SELECT vec_id, " + ", ".join(
+        f"round({_rp_terms(d, j)}, 5) AS p{j}" for j in range(RP_DIMS)
+    ) + " FROM embeddings ORDER BY vec_id"
 
 
 #: SQ8 search: candidates kept per query for exact re-ranking. 32 for
@@ -975,28 +970,33 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "neighbor_id",
-            F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"),
+            F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"),
         )
     )
     return _topk(scored)
 
 
-_SQ8_CODES_DUCK = f"""
+def _sq8_codes_sql(d: Dialect) -> str:
+    code = f"CAST(floor({d.at('v', 'i')} * scale + 0.5{d.D}) AS BIGINT)"
+    maxabs = d.fn("list_max", d.fn("list_transform", "v", "x -> abs(x)"))
+    return f"""
   SELECT vec_id, nrm, scale,
-         [CAST(floor(v[i] * scale + 0.5) AS BIGINT) for i in range(1, {DIM + 1})] AS qe
+         {d.comp(code, 'i', d.seq(1, DIM + 1))} AS qe
   FROM (SELECT vec_id, v, nrm,
-               CASE WHEN list_max(list_transform(v, x -> abs(x))) > 0
-                    THEN 127.0 / list_max(list_transform(v, x -> abs(x)))
-                    ELSE 0.0 END AS scale
+               CASE WHEN {maxabs} > 0
+                    THEN 127.0{d.D} / {maxabs}
+                    ELSE 0.0{d.D} END AS scale
         FROM vec)
 """
 
-ANN_SQ8_TOPK_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-codes AS ({_SQ8_CODES_DUCK}),
+
+def _sq8_topk_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+codes AS ({_sq8_codes_sql(d)}),
 scored_int AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         list_sum([q.qe[i] * c.qe[i] for i in range(1, {DIM + 1})]) AS idot,
+         {d.zip_sum('q.qe', 'c.qe', DIM, zero='0L')} AS idot,
          c.scale AS scale, c.nrm AS nrm
   FROM codes q JOIN codes c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
@@ -1014,7 +1014,7 @@ cand AS (
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM cand
   JOIN vec q ON q.vec_id = cand.q_id
   JOIN vec c ON c.vec_id = cand.neighbor_id
@@ -1079,7 +1079,7 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(_COS.format(a="qpv", b="pv", na="qpn", nb="pn")).alias("pcos"),
+            F.expr(V.cosine(SPARK, "qpv", "pv", "qpn", "pn", MRL_PREFIX_DIM)).alias("pcos"),
         )
         .withColumn(
             "crnk",
@@ -1101,7 +1101,7 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "neighbor_id",
-            F.expr(_COS.format(a="qv", b="v", na="qn", nb="nrm")).alias("cosine"),
+            F.expr(V.cosine(SPARK, "qv", "v", "qn", "nrm", DIM)).alias("cosine"),
         )
     )
     return _topk(scored)
@@ -1148,24 +1148,21 @@ def ann_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # nullif: the 16-dim prefix CAN be all-zero even when the full vector
 # is not; DuckDB would emit inf/nan (sorts first under DESC NULLS LAST)
 # where Spark emits NULL — both engines must agree on NULL (r8 ADVICE).
-_MRL_COS_DUCK = (
-    "(floor((list_sum([{a}[i] * {b}[i] for i in range(1, "
-    + str(MRL_PREFIX_DIM + 1)
-    + ")]) / nullif({na} * {nb}, 0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
-)
-
-_MRL_PREFIX_DUCK = f"""
-  SELECT vec_id, v, nrm, v[1:{MRL_PREFIX_DIM}] AS pv,
-         sqrt(list_sum([v[i] * v[i] for i in range(1, {MRL_PREFIX_DIM + 1})])) AS pn
+def _mrl_prefix_sql(d: Dialect) -> str:
+    return f"""
+  SELECT vec_id, v, nrm, {d.slice('v', 1, MRL_PREFIX_DIM, MRL_PREFIX_DIM)} AS pv,
+         sqrt({d.list_sum(d.comp(f"{d.at('v', 'i')} * {d.at('v', 'i')}", 'i', d.seq(1, MRL_PREFIX_DIM + 1)))}) AS pn
   FROM vec
 """
 
-#: shared MRL stage chain (pvec -> pre -> cand -> scored), DuckDB
-#: dialect — used by the top-k oracle and the recall-report oracle
-_MRL_STAGES_DUCK = f"""pvec AS ({_MRL_PREFIX_DUCK}),
+
+def _mrl_stages_sql(d: Dialect) -> str:
+    """Shared MRL stage chain (pvec -> pre -> cand -> scored), used by
+    the top-k and the recall-report SQL."""
+    return f"""pvec AS ({_mrl_prefix_sql(d)}),
 pre AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_MRL_COS_DUCK.format(a='q.pv', b='c.pv', na='q.pn', nb='c.pn')} AS pcos
+         {V.cosine(d, 'q.pv', 'c.pv', 'q.pn', 'c.pn', MRL_PREFIX_DIM)} AS pcos
   FROM pvec q JOIN pvec c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
@@ -1179,15 +1176,17 @@ cand AS (
 ),
 scored AS (
   SELECT cand.q_id, cand.neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM cand
   JOIN vec q ON q.vec_id = cand.q_id
   JOIN vec c ON c.vec_id = cand.neighbor_id
 )"""
 
-ANN_MATRYOSHKA_TOPK_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-{_MRL_STAGES_DUCK},
+
+def _matryoshka_topk_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+{_mrl_stages_sql(d)},
 r AS (
   SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
   FROM scored
@@ -1195,9 +1194,11 @@ r AS (
 SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
-ANN_MATRYOSHKA_RECALL_ORACLE = f"""
-WITH vec AS ({_VEC_SQL}),
-{_MRL_STAGES_DUCK},
+
+def _matryoshka_recall_sql(d: Dialect) -> str:
+    return f"""
+WITH vec AS ({vec_sql(d)}),
+{_mrl_stages_sql(d)},
 mrl AS (
   SELECT q_id, neighbor_id
   FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
@@ -1206,7 +1207,7 @@ mrl AS (
 ),
 bf_scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_COS_DUCK.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
   FROM vec q JOIN vec c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
@@ -1243,366 +1244,25 @@ QUERIES = {
     "dedup_embedding_cosine": dedup_embedding_cosine,
 }
 
-ORACLES = {
-    "ann_matryoshka_topk": ANN_MATRYOSHKA_TOPK_ORACLE,
-    "ann_matryoshka_recall_report": ANN_MATRYOSHKA_RECALL_ORACLE,
-    "kmeans_train": KMEANS_TRAIN_ORACLE,
-    "emb_random_projection": EMB_RANDOM_PROJECTION_ORACLE,
-    "emb_quantize_int8": EMB_QUANTIZE_INT8_ORACLE,
-    "ann_cosine_topk": ANN_COSINE_TOPK_ORACLE,
-    "ann_lsh_topk": ANN_LSH_TOPK_ORACLE,
-    "knn_graph_lsh": KNN_GRAPH_LSH_ORACLE,
-    "ann_ivf_topk": ANN_IVF_TOPK_ORACLE,
-    "ann_ivf_trained": _ivf_trained_oracle(),
-    "ann_sq8_topk": ANN_SQ8_TOPK_ORACLE,
-    "emb_label_centroid": EMB_LABEL_CENTROID_ORACLE,
-    "dedup_embedding_cosine": DEDUP_EMBEDDING_COSINE_ORACLE,
+TEMPLATES = {
+    "ann_matryoshka_topk": _matryoshka_topk_sql,
+    "ann_matryoshka_recall_report": _matryoshka_recall_sql,
+    "kmeans_train": _kmeans_sql,
+    "emb_random_projection": _random_projection_sql,
+    "ann_cosine_topk": _cosine_topk_sql,
+    "ann_lsh_topk": _lsh_topk_sql,
+    "knn_graph_lsh": _knn_graph_lsh_sql,
+    "ann_ivf_topk": _ivf_topk_sql,
+    "ann_ivf_trained": _ivf_trained_sql,
+    "ann_sq8_topk": _sq8_topk_sql,
+    "emb_label_centroid": _centroid_sql,
+    "dedup_embedding_cosine": _dedup_embedding_cosine_sql,
 }
-
-# ---------------------------------------------------------------------------
-# Spark-SQL N-version forms (fluent ≡ SQL, tests/test_reference_queries.py).
-# Same discipline as the reference's N implementations per task
-# (RDataFramesSQL.Rmd:40-53): each fluent builder above gets a SQL
-# sibling run through spark.sql() on the registered views. The shared
-# CTE blocks mirror _VEC_SQL/_SIG_SQL/_BANDS_SQL in Spark dialect, and
-# the literal hyperplane matrix is the SAME _PLANES_SPARK string the
-# fluent form compiles — the N versions share constants, not code paths.
-# ---------------------------------------------------------------------------
-
-_VEC_SPARK_SQL = """
-  SELECT vec_id, v, sqrt(aggregate(v, 0D, (a, x) -> a + x * x)) AS nrm
-  FROM (SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v
-        FROM embeddings)
-"""
-
-_SIG_SPARK_SQL = f"""
-  SELECT vec_id,
-         concat_ws('', transform({_PLANES_SPARK},
-           p -> IF(aggregate(zip_with(p, v, (w, x) -> w * x), 0D,
-                             (a, x) -> a + x) >= 0, '1', '0'))) AS sig
-  FROM vec
-"""
-
-_BANDS_SPARK_SQL = f"""
-  SELECT vec_id, b AS band,
-         substring(sig, b * {BAND_BITS} + 1, {BAND_BITS}) AS bkey
-  FROM sigt LATERAL VIEW explode(sequence(0, {BANDS - 1})) t AS b
-"""
-
-_TOPK_TAIL_SPARK = f"""
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id
-                               ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
-
-
-ANN_SQ8_TOPK_SPARK_SQL = f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-codes AS (
-  SELECT vec_id, nrm, scale,
-         transform(v, x -> cast(floor(x * scale + 0.5d) as bigint)) AS qe
-  FROM (SELECT vec_id, v, nrm,
-               CASE WHEN array_max(transform(v, x -> abs(x))) > 0
-                    THEN 127.0D / array_max(transform(v, x -> abs(x)))
-                    ELSE 0.0D END AS scale
-        FROM vec)
-),
-scored_int AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         aggregate(zip_with(q.qe, c.qe, (a, b) -> a * b), 0L,
-                   (acc, x) -> acc + x) AS idot,
-         c.scale AS scale, c.nrm AS nrm
-  FROM codes q JOIN codes c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-),
-cand AS (
-  SELECT q_id, neighbor_id
-  FROM (SELECT q_id, neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q_id
-                 ORDER BY (CASE WHEN scale > 0
-                           THEN CAST(idot AS DOUBLE) / (scale * nrm) END)
-                          DESC NULLS LAST, neighbor_id ASC) AS crnk
-        FROM scored_int)
-  WHERE crnk <= {SQ_RERANK}
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-{_TOPK_TAIL_SPARK}
-"""
-
-
-def _centroid_spark_sql() -> str:
-    sums = ",\n       ".join(
-        f"SUM(cast(round(v[{i}] * 1000000) as bigint)) AS s{i}" for i in range(DIM)
-    )
-    comps = ", ".join(
-        f"cast({_mean_us(f's{i}', 'n', 'div')} as string)" for i in range(DIM)
-    )
-    return f"""
-WITH e AS (SELECT label, transform(embedding, x -> cast(x as double)) AS v
-           FROM embeddings),
-g AS (
-  SELECT label, COUNT(1) AS n,
-       {sums}
-  FROM e GROUP BY label
-)
-SELECT label, n, concat_ws(',', {comps}) AS centroid_us FROM g ORDER BY label
-"""
-
-
-def _kmeans_spark_parts() -> list[str]:
-    """Spark-SQL CTE list replaying the unrolled Lloyd iterations —
-    the dialect twin of :func:`_kmeans_parts` (final centroid CTE:
-    ``c{KM_ITERS}``). Shared by the kmeans_train SQL dual and
-    llm/semdedup.py's dual."""
-    sums = ",\n         ".join(
-        f"SUM(cast(round(v[{i}] * 1000000) as bigint)) AS s{i}" for i in range(DIM)
-    )
-    comps = ", ".join(
-        f"({_mean_us(f's{i}', 'n', 'div')} / 1000000.0D)" for i in range(DIM)
-    )
-    parts = [
-        f"vec AS ({_VEC_SPARK_SQL})",
-        f"c0 AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vec"
-        f" WHERE vec_id < {KM_K})",
-    ]
-    for it in range(KM_ITERS):
-        cos = _COS.format(a="vec.v", b=f"c{it}.cv", na="vec.nrm", nb=f"c{it}.cn")
-        parts.append(
-            f"""a{it} AS (
-  SELECT vec_id, c_id AS list_id FROM (
-    SELECT vec.vec_id, c{it}.c_id,
-           row_number() OVER (PARTITION BY vec.vec_id
-                              ORDER BY {cos} DESC, c{it}.c_id) AS arnk
-    FROM vec CROSS JOIN c{it}) WHERE arnk = 1)"""
-        )
-        parts.append(
-            f"""g{it} AS (
-  SELECT list_id, COUNT(1) AS n,
-         {sums}
-  FROM vec JOIN a{it} USING (vec_id) GROUP BY list_id)"""
-        )
-        parts.append(
-            f"""c{it + 1} AS (
-  SELECT list_id AS c_id, n, array({comps}) AS cv,
-         sqrt(aggregate(array({comps}), 0D, (a, x) -> a + x * x)) AS cn
-  FROM g{it})"""
-        )
-    return parts
-
-
-def _kmeans_spark_sql() -> str:
-    cent_us = (
-        "array_join(transform(cv,"
-        " x -> cast(cast(round(x * 1000000.0) as bigint) as string)), ',')"
-    )
-    return (
-        "WITH "
-        + ",\n".join(_kmeans_spark_parts())
-        + f"\nSELECT c_id, n, {cent_us} AS centroid_us"
-        + f" FROM c{KM_ITERS} ORDER BY c_id"
-    )
-
-
-SPARK_SQL: dict[str, str] = {
-    "ann_sq8_topk": ANN_SQ8_TOPK_SPARK_SQL,
-    "ann_matryoshka_topk": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-pvec AS (
-  SELECT vec_id, v, nrm, slice(v, 1, {MRL_PREFIX_DIM}) AS pv,
-         sqrt(aggregate(slice(v, 1, {MRL_PREFIX_DIM}), 0D, (a, x) -> a + x * x)) AS pn
-  FROM vec
-),
-pre AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_COS.format(a='q.pv', b='c.pv', na='q.pn', nb='c.pn')} AS pcos
-  FROM pvec q JOIN pvec c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-),
-cand AS (
-  SELECT q_id, neighbor_id
-  FROM (SELECT q_id, neighbor_id,
-               row_number() OVER (PARTITION BY q_id
-                                  ORDER BY pcos DESC NULLS LAST, neighbor_id ASC) AS crnk
-        FROM pre)
-  WHERE crnk <= {MRL_SHORTLIST}
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-{_TOPK_TAIL_SPARK}
-""",
-    "ann_cosine_topk": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM vec q JOIN vec c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-),
-{_TOPK_TAIL_SPARK}
-""",
-    "ann_lsh_topk": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-sigt AS ({_SIG_SPARK_SQL}),
-bands AS ({_BANDS_SPARK_SQL}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
-  FROM bands q JOIN bands c
-    ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
-  WHERE q.vec_id < {N_QUERIES}
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-{_TOPK_TAIL_SPARK}
-""",
-    "knn_graph_lsh": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-sigt AS ({_SIG_SPARK_SQL}),
-bands AS ({_BANDS_SPARK_SQL}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
-  FROM bands q JOIN bands c
-    ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id AS vec_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {KNN_K}
-ORDER BY vec_id, rnk
-""",
-    "ann_ivf_topk": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-cent AS (
-  SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM vec WHERE vec_id < {NLIST}
-),
-asg_scored AS (
-  SELECT vec.vec_id, cent.c_id,
-         {_COS.format(a='vec.v', b='cent.cv', na='vec.nrm', nb='cent.cn')} AS ccos
-  FROM vec CROSS JOIN cent
-),
-asg AS (
-  SELECT vec_id, c_id AS list_id
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, c_id) AS arnk
-        FROM asg_scored)
-  WHERE arnk = 1
-),
-probes AS (
-  SELECT vec_id AS q_id, c_id AS list_id
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, c_id) AS prnk
-        FROM asg_scored WHERE vec_id < {N_QUERIES})
-  WHERE prnk <= {NPROBE}
-),
-cand AS (
-  SELECT probes.q_id, asg.vec_id AS neighbor_id
-  FROM asg JOIN probes USING (list_id)
-  WHERE asg.vec_id != probes.q_id
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-{_TOPK_TAIL_SPARK}
-""",
-    "dedup_embedding_cosine": f"""
-WITH vec AS ({_VEC_SPARK_SQL}),
-sigt AS ({_SIG_SPARK_SQL}),
-bands AS ({_BANDS_SPARK_SQL}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
-),
-scored AS (
-  SELECT cand.vec_a, cand.vec_b,
-         {_COS.format(a='va.v', b='vb.v', na='va.nrm', nb='vb.nrm')} AS cosine
-  FROM cand
-  JOIN vec va ON va.vec_id = cand.vec_a
-  JOIN vec vb ON vb.vec_id = cand.vec_b
-)
-SELECT vec_a, vec_b, cosine FROM scored
-WHERE cosine >= {COS_THRESHOLD}D
-ORDER BY vec_a, vec_b
-""",
-    "emb_label_centroid": _centroid_spark_sql(),
-    "kmeans_train": _kmeans_spark_sql(),
-    # trained-IVF dual (r12): the kmeans unroll (shared CTE list, same
-    # text the kmeans_train dual runs) feeds the SAME probe/rerank tail
-    # as ann_ivf_topk's dual, with cent = the trained codebook c{ITERS}.
-    # This closes the one ANN rung COVERAGE.md previously called
-    # non-dialect-expressible — the r11 kmeans dual made it expressible.
-    "ann_ivf_trained": (
-        "WITH "
-        + ",\n".join(_kmeans_spark_parts())
-        + f""",
-cent AS (SELECT c_id, cv, cn FROM c{KM_ITERS}),
-asg_scored AS (
-  SELECT vec.vec_id, cent.c_id,
-         {_COS.format(a='vec.v', b='cent.cv', na='vec.nrm', nb='cent.cn')} AS ccos
-  FROM vec CROSS JOIN cent
-),
-asg AS (
-  SELECT vec_id, c_id AS list_id
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, c_id) AS arnk
-        FROM asg_scored)
-  WHERE arnk = 1
-),
-probes AS (
-  SELECT vec_id AS q_id, c_id AS list_id
-  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY ccos DESC, c_id) AS prnk
-        FROM asg_scored WHERE vec_id < {N_QUERIES})
-  WHERE prnk <= {NPROBE}
-),
-cand AS (
-  SELECT probes.q_id, asg.vec_id AS neighbor_id
-  FROM asg JOIN probes USING (list_id)
-  WHERE asg.vec_id != probes.q_id
-),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_COS.format(a='q.v', b='c.v', na='q.nrm', nb='c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-{_TOPK_TAIL_SPARK}
-"""
-    ),
-    "emb_random_projection": _RP_SPARK_SQL,
-    "emb_quantize_int8": """
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES["emb_quantize_int8"] = EMB_QUANTIZE_INT8_ORACLE
+# deliberate dual: zip_with in place of list_zip, whose positional
+# struct fields (p[1], p[2]) have no Spark spelling
+SPARK_SQL["emb_quantize_int8"] = f"""
 WITH vv AS (
   SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v
   FROM embeddings
@@ -1622,15 +1282,14 @@ q AS (
 )
 SELECT vec_id,
        array_join(transform(q_emb, x -> cast(x as string)), ',') AS q_emb_str,
-       (floor((scale) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS scale,
+       {r6_sql('scale')} AS scale,
        CASE WHEN scale > 0
-            THEN (floor((array_max(transform(zip_with(v, q_emb,
-                   (x, qq) -> abs(x - qq / scale)), e -> e))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+            THEN {r6_sql('''array_max(transform(zip_with(v, q_emb,
+                   (x, qq) -> abs(x - qq / scale)), e -> e))''')}
             ELSE 0.0D END AS max_err
 FROM q
 ORDER BY vec_id
-""",
-}
+"""
 
 
 def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1713,10 +1372,12 @@ def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMB_SEMANTIC_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE vec AS ({_VEC_SQL}),
-sig AS ({_SIG_SQL}),
-bands AS ({_BANDS_SQL}),
+def _semantic_edges_sql(d: Dialect) -> str:
+    """vec -> sig -> bands -> cand -> near -> edges: the banded-LSH
+    candidates kept at cosine >= COS_THRESHOLD, both directions."""
+    return f"""vec AS ({vec_sql(d)}),
+sig AS ({_sig_sql(d)}),
+bands AS ({_bands_sql(d)}),
 cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
@@ -1726,13 +1387,18 @@ near AS (
   FROM cand
   JOIN vec va ON va.vec_id = cand.vec_a
   JOIN vec vb ON vb.vec_id = cand.vec_b
-  WHERE {_COS_DUCK.format(a='va.v', b='vb.v', na='va.nrm', nb='vb.nrm')} >= {COS_THRESHOLD}
+  WHERE {_cos(d, 'va.v', 'vb.v', 'va.nrm', 'vb.nrm')} >= {COS_THRESHOLD}{d.D}
 ),
 edges AS (
   SELECT vec_a AS src, vec_b AS dst FROM near
   UNION
   SELECT vec_b AS src, vec_a AS dst FROM near
-),
+)"""
+
+
+def _semantic_clusters_sql(d: Dialect) -> str:
+    return f"""
+WITH RECURSIVE {_semantic_edges_sql(d)},
 reach(src, dst) AS (
   SELECT vec_id, vec_id FROM embeddings
   UNION
@@ -1748,56 +1414,15 @@ JOIN (SELECT cluster_id, COUNT(*) AS cluster_size FROM clusters GROUP BY cluster
 ORDER BY c.vec_id
 """
 
+
 QUERIES["emb_semantic_clusters"] = emb_semantic_clusters
-ORACLES["emb_semantic_clusters"] = EMB_SEMANTIC_CLUSTERS_ORACLE
-
-# composed dual (r12): the recall report joins two pipelines whose
-# Spark-SQL duals are registered above — the composition is exactly as
-# trustworthy as its parts (the minhash_recall_report pattern).
-SPARK_SQL["ann_matryoshka_recall_report"] = f"""
-WITH bf AS (
-  SELECT q_id, neighbor_id FROM ({SPARK_SQL["ann_cosine_topk"]}) t_bf
-),
-mrl AS (
-  SELECT q_id AS m_q, neighbor_id AS m_n
-  FROM ({SPARK_SQL["ann_matryoshka_topk"]}) t_mrl
-),
-hits AS (
-  SELECT bf.q_id, COUNT(mrl.m_n) AS n_hits
-  FROM bf LEFT JOIN mrl ON bf.q_id = mrl.m_q AND bf.neighbor_id = mrl.m_n
-  GROUP BY bf.q_id
-)
-SELECT q_id, CAST(n_hits AS BIGINT) AS n_hits,
-       CAST(n_hits AS DOUBLE) / {TOP_K} AS recall
-FROM hits ORDER BY q_id
-"""
-
-# dual of the ITERATIVE emb_semantic_clusters (VERDICT r11 item 2):
-# edges replay the banded-LSH candidate generation + cosine threshold
-# in Spark dialect (the dedup_embedding_cosine dual's own CTEs); the
-# closure is the shared bounded-round packed-array fold
-# (functions/closure_sql.py), poisoning ids on non-convergence.
+ORACLES["emb_semantic_clusters"] = _semantic_clusters_sql(DUCK)
+# deliberate dual: Spark's recursive CTE allows only UNION ALL, which
+# never terminates on a cyclic edge list, so the edges (the oracle's
+# own CTEs) feed the shared bounded-round packed-array fold
+# (functions/closure_sql.py), which poisons ids on non-convergence
 SPARK_SQL["emb_semantic_clusters"] = packed_closure_sql(
-    prelude=f"""vec AS ({_VEC_SPARK_SQL}),
-sigt AS ({_SIG_SPARK_SQL}),
-bands AS ({_BANDS_SPARK_SQL}),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id
-),
-near AS (
-  SELECT cand.vec_a, cand.vec_b
-  FROM cand
-  JOIN vec va ON va.vec_id = cand.vec_a
-  JOIN vec vb ON vb.vec_id = cand.vec_b
-  WHERE {_COS.format(a='va.v', b='vb.v', na='va.nrm', nb='vb.nrm')} >= {COS_THRESHOLD}D
-),
-edges AS (
-  SELECT vec_a AS src, vec_b AS dst FROM near
-  UNION ALL
-  SELECT vec_b AS src, vec_a AS dst FROM near
-)""",
+    prelude=_semantic_edges_sql(SPARK),
     nodes_sql="SELECT vec_id AS node FROM embeddings",
     key_name="vec_id",
     id_name="cluster_id",

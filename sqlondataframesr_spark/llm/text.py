@@ -15,7 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
+from .dedup import shingle_list_sql
 
 #: Tiny per-language stopword lists for the n-gram/stopword language
 #: heuristic. Order matters: it is the deterministic tie-break.
@@ -54,13 +56,15 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_TOKEN_STATS_ORACLE = """
+def _token_stats_sql(d: Dialect) -> str:
+    split = d.fn("string_split", "text", "' '")
+    return f"""
 SELECT doc_id, lang,
        length(text) AS n_chars_actual,
-       len(string_split(text, ' ')) AS n_tokens,
-       len(list_distinct(string_split(text, ' '))) AS n_unique_tokens,
-       CAST(length(text) - len(string_split(text, ' ')) + 1 AS DOUBLE)
-         / CAST(len(string_split(text, ' ')) AS DOUBLE) AS avg_token_len
+       {d.fn('len', split)} AS n_tokens,
+       {d.fn('len', d.fn('list_distinct', split))} AS n_unique_tokens,
+       CAST(length(text) - {d.fn('len', split)} + 1 AS DOUBLE)
+         / CAST({d.fn('len', split)} AS DOUBLE) AS avg_token_len
 FROM documents
 """
 
@@ -94,17 +98,31 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EN_LIST_SQL = "[" + ", ".join(f"'{s}'" for s in LANG_STOPWORDS["en"]) + "]"
+def words_sql(d: Dialect) -> str:
+    """The non-empty space-split tokens of ``text`` (the repo-standard
+    tokenizer); shared by llm/lm.py, llm/diversity.py and llm/dsir.py."""
+    return d.fn("list_filter", d.fn("string_split", "text", "' '"), "x -> x != ''")
 
-TEXT_QUALITY_SCORE_ORACLE = f"""
-WITH t AS (SELECT doc_id, source, text, string_split(text, ' ') AS w FROM documents)
+
+def _stopwords(d: Dialect, lang: str) -> str:
+    return d.list(", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang]))
+
+
+def _n_stopwords(d: Dialect, lang: str) -> str:
+    hit = d.fn("list_contains", _stopwords(d, lang), "t")
+    return d.fn("len", d.fn("list_filter", "w", f"t -> {hit}"))
+
+
+def _quality_score_sql(d: Dialect) -> str:
+    return f"""
+WITH t AS (SELECT doc_id, source, text, {d.fn('string_split', 'text', "' '")} AS w FROM documents)
 SELECT doc_id, source,
-       (floor((CAST(len(list_distinct(w)) AS DOUBLE) / CAST(len(w) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+       {r6_sql(f'''CAST({d.fn('len', d.fn('list_distinct', 'w'))} AS DOUBLE) / CAST({d.fn('len', 'w')} AS DOUBLE)''')}
          AS type_token_ratio,
-       (floor((CAST(len(list_filter(w, t -> list_contains({_EN_LIST_SQL}, t))) AS DOUBLE)
-             / CAST(len(w) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS stopword_ratio,
-       (floor((CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE)
-             / CAST(length(text) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS digit_ratio
+       {r6_sql(f'''CAST({_n_stopwords(d, 'en')} AS DOUBLE)
+             / CAST({d.fn('len', 'w')} AS DOUBLE)''')} AS stopword_ratio,
+       {r6_sql(f'''CAST(length(text) - length({d.regexp_replace_all('text', "'[0-9]'", "''")}) AS DOUBLE)
+             / CAST(length(text) AS DOUBLE)''')} AS digit_ratio
 FROM t
 """
 
@@ -145,12 +163,9 @@ def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(*sel)
 
 
-def _lang_id_oracle() -> str:
+def _lang_id_sql(d: Dialect) -> str:
     langs = list(LANG_STOPWORDS)
-    score_exprs = ",\n       ".join(
-        f"len(list_filter(w, t -> list_contains({'[' + ', '.join(chr(39) + s + chr(39) for s in LANG_STOPWORDS[lang]) + ']'}, t))) AS score_{lang}"
-        for lang in langs
-    )
+    score_exprs = ",\n       ".join(f"{_n_stopwords(d, lang)} AS score_{lang}" for lang in langs)
     # same right-fold as the fluent build: earlier language wins ties
     pred = "'und'"
     best = "0"
@@ -162,7 +177,7 @@ def _lang_id_oracle() -> str:
         )
         best = f"greatest({best}, score_{lang})"
     return f"""
-WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
+WITH t AS (SELECT doc_id, lang, {d.fn('string_split', 'text', "' '")} AS w FROM documents),
 scored AS (
   SELECT doc_id, lang AS labeled_lang,
        {score_exprs}
@@ -172,9 +187,6 @@ SELECT doc_id, labeled_lang, {', '.join('score_' + lang for lang in langs)},
        {pred} AS predicted_lang
 FROM scored
 """
-
-
-LANG_ID_ORACLE = _lang_id_oracle()
 
 
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -206,17 +218,17 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_FINGERPRINT_ORACLE = """
-WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+def _fingerprint_sql(d: Dialect) -> str:
+    return f"""
+WITH t AS (SELECT doc_id, {d.fn('string_split', 'text', "' '")} AS w FROM documents),
 s AS (
   SELECT doc_id,
-         list_distinct([w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT)+1] || ' ' || w[CAST(i AS INT)+2]
-                        for i in range(1, len(w)-1)]) AS sh
-  FROM t WHERE len(w) >= 3
+         {shingle_list_sql(d)} AS sh
+  FROM t WHERE {d.fn('len', 'w')} >= 3
 )
 SELECT doc_id,
-       list_min([md5(x) for x in sh]) AS fingerprint,
-       len(sh) AS n_shingles
+       {d.fn('list_min', d.comp('md5(x)', 'x', 'sh'))} AS fingerprint,
+       {d.fn('len', 'sh')} AS n_shingles
 FROM s
 """
 
@@ -243,9 +255,10 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top.withColumn("rnk", F.row_number().over(w)).orderBy("rnk")
 
 
-TEXT_TOP_TERMS_ORACLE = """
-WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS w FROM documents),
-e AS (SELECT doc_id, unnest(w) AS term FROM t),
+def _top_terms_sql(d: Dialect) -> str:
+    return f"""
+WITH t AS (SELECT doc_id, {d.fn('list_distinct', d.fn('string_split', 'text', "' '"))} AS w FROM documents),
+e AS (SELECT doc_id, {d.fn('unnest', 'w')} AS term FROM t),
 c AS (SELECT term, COUNT(*) AS doc_freq FROM e GROUP BY term),
 r AS (SELECT term, doc_freq,
              row_number() OVER (ORDER BY doc_freq DESC, term) AS rnk
@@ -297,15 +310,16 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_TFIDF_ORACLE = """
-WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+def _tfidf_sql(d: Dialect) -> str:
+    return f"""
+WITH tok AS (SELECT doc_id, {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
 dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
 nd AS (SELECT COUNT(*) AS n_docs FROM documents),
 scored AS (
   SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-         (floor(((CAST(tf.tf AS DOUBLE) / CAST(SUM(tf.tf) OVER (PARTITION BY tf.doc_id) AS DOUBLE))
-               * ln((CAST(n_docs AS DOUBLE) + 1) / (CAST(df AS DOUBLE) + 1))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS score
+         {r6_sql('''(CAST(tf.tf AS DOUBLE) / CAST(SUM(tf.tf) OVER (PARTITION BY tf.doc_id) AS DOUBLE))
+               * ln((CAST(n_docs AS DOUBLE) + 1) / (CAST(df AS DOUBLE) + 1))''')} AS score
   FROM tf JOIN dfq USING (term) CROSS JOIN nd
 ),
 r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rnk
@@ -369,31 +383,34 @@ def text_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_CHUNKS_ORACLE = f"""
+def _chunks_sql(d: Dialect) -> str:
+    split = d.fn("string_split", "text", "' '")
+    lo, hi = f"CAST(k AS INT) * {CHUNK_STRIDE} + 1", f"CAST(k AS INT) * {CHUNK_STRIDE} + {CHUNK_TOKENS}"
+    chunk = d.list_slice("w", lo, hi, CHUNK_TOKENS, sep=",\n" + " " * 23)
+    return f"""
 WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS w, len(string_split(text, ' ')) AS n
+  SELECT doc_id, {split} AS w, {d.fn('len', split)} AS n
   FROM documents
 ),
 geo AS (
   SELECT doc_id, w, n,
          CASE WHEN n > {CHUNK_TOKENS}
-              THEN (n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1) // {CHUNK_STRIDE}
+              THEN {d.idiv(f'(n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1)', CHUNK_STRIDE)}
               ELSE 0 END AS n_extra
   FROM toks
 ),
 ks AS (
-  SELECT doc_id, w, unnest(range(0, n_extra + 1)) AS k FROM geo
+  SELECT doc_id, w, {d.fn('unnest', d.seq(0, 'n_extra + 1'))} AS k FROM geo
 ),
 chunks AS (
   SELECT doc_id,
          CAST(k AS BIGINT) AS chunk_id,
-         list_slice(w, CAST(k AS INT) * {CHUNK_STRIDE} + 1,
-                       CAST(k AS INT) * {CHUNK_STRIDE} + {CHUNK_TOKENS}) AS chunk
+         {chunk} AS chunk
   FROM ks
 )
 SELECT doc_id, chunk_id,
-       CAST(len(chunk) AS INT) AS n_chunk_tokens,
-       md5(array_to_string(chunk, ' ')) AS chunk_hash
+       CAST({d.fn('len', 'chunk')} AS INT) AS n_chunk_tokens,
+       md5({d.fn('array_to_string', 'chunk', "' '")}) AS chunk_hash
 FROM chunks
 ORDER BY doc_id, chunk_id
 """
@@ -443,9 +460,10 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_REPETITION_ORACLE = """
+def _repetition_sql(d: Dialect) -> str:
+    return f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+  SELECT doc_id, {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents
 ),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
@@ -466,8 +484,8 @@ top AS (
   WHERE rn = 1
 )
 SELECT r.doc_id, r.n_tokens, r.n_distinct, t.top_term, r.top_tf,
-       (floor((CAST(r.top_tf AS DOUBLE) / r.n_tokens) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS repetition_ratio,
-       (floor((CAST(r.n_distinct AS DOUBLE) / r.n_tokens) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS distinct_ratio
+       {r6_sql('CAST(r.top_tf AS DOUBLE) / r.n_tokens')} AS repetition_ratio,
+       {r6_sql('CAST(r.n_distinct AS DOUBLE) / r.n_tokens')} AS distinct_ratio
 FROM rolled r JOIN top t USING (doc_id)
 ORDER BY r.doc_id
 """
@@ -505,8 +523,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "micronats",
             F.expr(
-                "cast(round((floor((ln(cast(ctf as double)"
-                " / cast(total as double))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
+                f"cast(round({r6_sql('ln(cast(ctf as double) / cast(total as double))')}"
+                " * 1000000.0) as bigint)"
             ),
         )
     )
@@ -527,9 +545,10 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_UNIGRAM_LOGPROB_ORACLE = """
+def _unigram_logprob_sql(d: Dialect) -> str:
+    return f"""
 WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+  SELECT doc_id, {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents
 ),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
@@ -539,15 +558,15 @@ ctf AS (SELECT term, SUM(tf) AS ctf FROM tf GROUP BY term),
 tot AS (SELECT SUM(ctf) AS total FROM ctf),
 scored AS (
   SELECT tf.doc_id, tf.tf,
-         CAST(round((floor((ln(CAST(ctf.ctf AS DOUBLE)
-              / CAST(tot.total AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)
+         CAST(round({r6_sql('''ln(CAST(ctf.ctf AS DOUBLE)
+              / CAST(tot.total AS DOUBLE))''')} * 1000000.0) AS BIGINT)
            AS micronats
   FROM tf JOIN ctf USING (term) CROSS JOIN tot
 )
 SELECT doc_id,
        CAST(SUM(tf) AS BIGINT) AS n_tokens,
-       (floor((CAST(SUM(tf * micronats) AS DOUBLE)
-             / (SUM(tf) * 1000000.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_logprob
+       {r6_sql(f'''CAST(SUM(tf * micronats) AS DOUBLE)
+             / (SUM(tf) * 1000000.0{d.D})''')} AS avg_logprob
 FROM scored
 GROUP BY doc_id
 ORDER BY doc_id
@@ -615,47 +634,21 @@ def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _bpe_sum_duck(pat: str, div: int) -> str:
-    return (
-        f"COALESCE(list_sum(list_transform(regexp_extract_all(text, '{pat}'),"
-        f" x -> (length(x) + {div - 1}) // {div})), 0)"
-    )
+def _bpe_sum(d: Dialect, pat: str, div: int) -> str:
+    runs = d.regexp_extract_all("text", d.str_lit(pat))
+    pieces = d.fn("list_transform", runs, f"x -> {d.idiv(f'(length(x) + {div - 1})', div)}")
+    return f"COALESCE({d.list_sum(pieces, '0L')}, 0)"
 
 
-TEXT_BPE_ORACLE = f"""
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{_RUN_LETTER}')) AS BIGINT) AS n_letter_runs,
-       CAST(len(regexp_extract_all(text, '{_RUN_DIGIT}')) AS BIGINT) AS n_digit_runs,
-       CAST(len(regexp_extract_all(text, '{_RUN_PUNCT}')) AS BIGINT) AS n_punct_runs,
-       CAST({_bpe_sum_duck(_RUN_LETTER, _DIV_LETTER)}
-          + {_bpe_sum_duck(_RUN_DIGIT, _DIV_DIGIT)}
-          + {_bpe_sum_duck(_RUN_PUNCT, _DIV_PUNCT)} AS BIGINT) AS est_bpe_tokens
-FROM documents
-ORDER BY doc_id
-"""
-
-
-def _bpe_sum_spark(pat: str, div: int) -> str:
-    # Spark SQL string literals treat backslash as escape: double them
-    p = pat.replace("\\", "\\\\")
-    return (
-        f"aggregate(regexp_extract_all(text, '{p}', 0), cast(0 as bigint),"
-        f" (a, x) -> a + (length(x) + {div - 1}) div {div})"
-    )
-
-
-def _bpe_spark_sql() -> str:
-    pl = _RUN_LETTER.replace("\\", "\\\\")
-    pd = _RUN_DIGIT.replace("\\", "\\\\")
-    pp = _RUN_PUNCT.replace("\\", "\\\\")
+def _bpe_sql(d: Dialect) -> str:
     return f"""
 SELECT doc_id,
-       CAST(size(regexp_extract_all(text, '{pl}', 0)) AS BIGINT) AS n_letter_runs,
-       CAST(size(regexp_extract_all(text, '{pd}', 0)) AS BIGINT) AS n_digit_runs,
-       CAST(size(regexp_extract_all(text, '{pp}', 0)) AS BIGINT) AS n_punct_runs,
-       {_bpe_sum_spark(_RUN_LETTER, _DIV_LETTER)}
-         + {_bpe_sum_spark(_RUN_DIGIT, _DIV_DIGIT)}
-         + {_bpe_sum_spark(_RUN_PUNCT, _DIV_PUNCT)} AS est_bpe_tokens
+       CAST({d.fn('len', d.regexp_extract_all('text', d.str_lit(_RUN_LETTER)))} AS BIGINT) AS n_letter_runs,
+       CAST({d.fn('len', d.regexp_extract_all('text', d.str_lit(_RUN_DIGIT)))} AS BIGINT) AS n_digit_runs,
+       CAST({d.fn('len', d.regexp_extract_all('text', d.str_lit(_RUN_PUNCT)))} AS BIGINT) AS n_punct_runs,
+       CAST({_bpe_sum(d, _RUN_LETTER, _DIV_LETTER)}
+          + {_bpe_sum(d, _RUN_DIGIT, _DIV_DIGIT)}
+          + {_bpe_sum(d, _RUN_PUNCT, _DIV_PUNCT)} AS BIGINT) AS est_bpe_tokens
 FROM documents
 ORDER BY doc_id
 """
@@ -674,190 +667,16 @@ QUERIES = {
     "text_tfidf_top_term": text_tfidf_top_term,
 }
 
-ORACLES = {
-    "text_bpe_token_estimate": TEXT_BPE_ORACLE,
-    "text_chunks": TEXT_CHUNKS_ORACLE,
-    "text_unigram_logprob": TEXT_UNIGRAM_LOGPROB_ORACLE,
-    "text_repetition": TEXT_REPETITION_ORACLE,
-    "text_token_stats": TEXT_TOKEN_STATS_ORACLE,
-    "text_quality_score": TEXT_QUALITY_SCORE_ORACLE,
-    "lang_id_stopword": LANG_ID_ORACLE,
-    "doc_fingerprint": DOC_FINGERPRINT_ORACLE,
-    "text_top_terms": TEXT_TOP_TERMS_ORACLE,
-    "text_tfidf_top_term": TEXT_TFIDF_ORACLE,
+TEMPLATES = {
+    "text_bpe_token_estimate": _bpe_sql,
+    "text_chunks": _chunks_sql,
+    "text_unigram_logprob": _unigram_logprob_sql,
+    "text_repetition": _repetition_sql,
+    "text_token_stats": _token_stats_sql,
+    "text_quality_score": _quality_score_sql,
+    "lang_id_stopword": _lang_id_sql,
+    "doc_fingerprint": _fingerprint_sql,
+    "text_top_terms": _top_terms_sql,
+    "text_tfidf_top_term": _tfidf_sql,
 }
-
-def _lang_id_spark_sql() -> str:
-    """Spark-dialect twin of :func:`_lang_id_oracle` — same right-fold
-    CASE chain, Spark's lambda/array functions instead of DuckDB's
-    list comprehensions."""
-    langs = list(LANG_STOPWORDS)
-    score_exprs = ",\n       ".join(
-        "size(filter(w, t -> array_contains(array("
-        + ", ".join(f"'{s}'" for s in LANG_STOPWORDS[lang])
-        + f"), t))) AS score_{lang}"
-        for lang in langs
-    )
-    pred = "'und'"
-    best = "0"
-    for lang in reversed(langs):
-        pred = (
-            f"CASE WHEN score_{lang} > 0 THEN "
-            f"(CASE WHEN score_{lang} >= {best} THEN '{lang}' ELSE {pred} END) "
-            f"ELSE {pred} END"
-        )
-        best = f"greatest({best}, score_{lang})"
-    return f"""
-WITH t AS (SELECT doc_id, lang, split(text, ' ') AS w FROM documents),
-scored AS (
-  SELECT doc_id, lang AS labeled_lang,
-       {score_exprs}
-  FROM t
-)
-SELECT doc_id, labeled_lang, {', '.join('score_' + lang for lang in langs)},
-       {pred} AS predicted_lang
-FROM scored
-"""
-
-
-_EN_ARRAY_SPARK = (
-    "array(" + ", ".join(f"'{s}'" for s in LANG_STOPWORDS["en"]) + ")"
-)
-
-# Spark-SQL N-version forms (fluent ≡ SQL, tests/test_reference_queries.py).
-# The reference's defining discipline is N implementations of every task
-# compared for equality (RDataFramesSQL.Rmd:40-53); these are the SQL
-# siblings of the fluent builders above, run through spark.sql() against
-# the same registered views.
-SPARK_SQL: dict[str, str] = {
-    "text_bpe_token_estimate": _bpe_spark_sql(),
-    "text_token_stats": """
-SELECT doc_id, lang,
-       length(text) AS n_chars_actual,
-       size(split(text, ' ')) AS n_tokens,
-       size(array_distinct(split(text, ' '))) AS n_unique_tokens,
-       CAST(length(text) - size(split(text, ' ')) + 1 AS DOUBLE)
-         / CAST(size(split(text, ' ')) AS DOUBLE) AS avg_token_len
-FROM documents
-""",
-    "text_quality_score": f"""
-WITH t AS (SELECT doc_id, source, text, split(text, ' ') AS w FROM documents)
-SELECT doc_id, source,
-       (floor((CAST(size(array_distinct(w)) AS DOUBLE) / CAST(size(w) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-         AS type_token_ratio,
-       (floor((CAST(size(filter(w, t -> array_contains({_EN_ARRAY_SPARK}, t))) AS DOUBLE)
-             / CAST(size(w) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS stopword_ratio,
-       (floor((CAST(length(text) - length(regexp_replace(text, '[0-9]', '')) AS DOUBLE)
-             / CAST(length(text) AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS digit_ratio
-FROM t
-""",
-    "lang_id_stopword": _lang_id_spark_sql(),
-    "doc_fingerprint": """
-WITH t AS (SELECT doc_id, split(text, ' ') AS w FROM documents),
-s AS (
-  SELECT doc_id,
-         array_distinct(transform(sequence(0, size(w) - 3),
-                        i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh
-  FROM t WHERE size(w) >= 3
-)
-SELECT doc_id,
-       array_min(transform(sh, x -> md5(x))) AS fingerprint,
-       size(sh) AS n_shingles
-FROM s
-""",
-    "text_top_terms": """
-WITH t AS (SELECT doc_id, array_distinct(split(text, ' ')) AS w FROM documents),
-e AS (SELECT doc_id, explode(w) AS term FROM t),
-c AS (SELECT term, COUNT(1) AS doc_freq FROM e GROUP BY term),
-r AS (SELECT term, doc_freq,
-             row_number() OVER (ORDER BY doc_freq DESC, term) AS rnk
-      FROM c)
-SELECT term, doc_freq, rnk FROM r WHERE rnk <= 20 ORDER BY rnk
-""",
-    "text_tfidf_top_term": """
-WITH tok AS (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents),
-tf AS (SELECT doc_id, term, COUNT(1) AS tf FROM tok GROUP BY doc_id, term),
-dfq AS (SELECT term, COUNT(1) AS df FROM tf GROUP BY term),
-nd AS (SELECT COUNT(1) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-         (floor(((CAST(tf.tf AS DOUBLE)
-                / CAST(SUM(tf.tf) OVER (PARTITION BY tf.doc_id) AS DOUBLE))
-               * ln((CAST(n_docs AS DOUBLE) + 1) / (CAST(df AS DOUBLE) + 1))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
-           AS score
-  FROM tf JOIN dfq USING (term) CROSS JOIN nd
-),
-r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term)
-               AS rnk
-      FROM scored)
-SELECT doc_id, term, tf, df, score FROM r WHERE rnk = 1 ORDER BY doc_id
-""",
-    "text_chunks": f"""
-WITH toks AS (
-  SELECT doc_id, split(text, ' ') AS w, size(split(text, ' ')) AS n FROM documents
-),
-geo AS (
-  SELECT doc_id, w, n,
-         CASE WHEN n > {CHUNK_TOKENS}
-              THEN (n - {CHUNK_TOKENS} + {CHUNK_STRIDE} - 1) div {CHUNK_STRIDE}
-              ELSE 0 END AS n_extra
-  FROM toks
-),
-ks AS (
-  SELECT doc_id, w, chunk_id, start
-  FROM geo
-  LATERAL VIEW posexplode(transform(sequence(0, n_extra),
-                                    i -> i * {CHUNK_STRIDE}))
-    t AS chunk_id, start
-),
-chunks AS (
-  SELECT doc_id, chunk_id, slice(w, start + 1, {CHUNK_TOKENS}) AS chunk FROM ks
-)
-SELECT doc_id, chunk_id,
-       size(chunk) AS n_chunk_tokens,
-       md5(concat_ws(' ', chunk)) AS chunk_hash
-FROM chunks
-ORDER BY doc_id, chunk_id
-""",
-    "text_repetition": """
-WITH tf AS (
-  SELECT doc_id, term, COUNT(1) AS tf
-  FROM (SELECT doc_id, explode(split(text, ' ')) AS term FROM documents)
-  WHERE term != ''
-  GROUP BY doc_id, term
-)
-SELECT doc_id,
-       SUM(tf) AS n_tokens,
-       COUNT(1) AS n_distinct,
-       min_by(term, struct(-tf, term)) AS top_term,
-       MAX(tf) AS top_tf,
-       (floor((MAX(tf) / SUM(tf)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS repetition_ratio,
-       (floor((COUNT(1) / SUM(tf)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS distinct_ratio
-FROM tf GROUP BY doc_id ORDER BY doc_id
-""",
-    "text_unigram_logprob": """
-WITH tok AS (
-  SELECT doc_id, explode(split(text, ' ')) AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, COUNT(1) AS tf
-  FROM tok WHERE term != '' GROUP BY doc_id, term
-),
-ctf AS (SELECT term, SUM(tf) AS ctf FROM tf GROUP BY term),
-tot AS (SELECT SUM(ctf) AS total FROM ctf),
-scored AS (
-  SELECT tf.doc_id, tf.tf,
-         CAST(round((floor((ln(CAST(ctf.ctf AS DOUBLE)
-              / CAST(tot.total AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT)
-           AS micronats
-  FROM tf JOIN ctf USING (term) CROSS JOIN tot
-)
-SELECT doc_id,
-       SUM(tf) AS n_tokens,
-       (floor((CAST(SUM(tf * micronats) AS DOUBLE)
-             / (SUM(tf) * 1000000.0D)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_logprob
-FROM scored
-GROUP BY doc_id
-ORDER BY doc_id
-""",
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -39,6 +39,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -410,13 +411,14 @@ def mm_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MM_FRAME_PLAN_ORACLE = f"""
+def _frame_plan_sql(d: Dialect) -> str:
+    return f"""
 WITH vids AS (
   SELECT doc_id, CAST({_DURATION_S} AS INT) AS duration_s
   FROM documents
   WHERE ({_MEDIA_TYPE}) = 'video'
 ),
-secs AS (SELECT doc_id, unnest(range(0, duration_s)) AS sec FROM vids)
+secs AS (SELECT doc_id, {d.fn('unnest', d.seq(0, 'duration_s'))} AS sec FROM vids)
 SELECT doc_id,
        CAST(sec * {FPS} AS BIGINT) AS frame_idx,
        CAST(sec * 1000 AS BIGINT) AS t_ms
@@ -425,10 +427,11 @@ ORDER BY doc_id, frame_idx
 """
 
 
-MM_MEDIA_CHECKSUM_ORACLE = f"""
+def _media_checksum_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id,
        {_MEDIA_TYPE.replace("doc_id", "doc_id")} AS media_type,
-       octet_length(encode(text)) AS n_bytes,
+       octet_length({d.utf8_bytes('text')}) AS n_bytes,
        md5(text) AS payload_md5,
        CAST(32 + n_chars % 480 AS INTEGER) AS width,
        CAST(32 + (n_chars * 7) % 480 AS INTEGER) AS height
@@ -547,40 +550,14 @@ def __getattr__(name: str):
     paid a rebuild on every expected.py edit). registry.oracles()'s
     ``getattr(mod, "ORACLES")`` triggers this at gate time instead."""
     if name == "ORACLES":
-        return {
-            "mm_media_checksum": MM_MEDIA_CHECKSUM_ORACLE,
-            "mm_frame_plan": MM_FRAME_PLAN_ORACLE,
-            **_featurizer_oracles(),
-        }
+        return _METADATA_ORACLES | _featurizer_oracles()
     raise AttributeError(name)
 
-# Spark-SQL N-version forms for the metadata/plan queries (the
-# mapInPandas featurizer has no SQL spelling — byte-level blob work)
-SPARK_SQL: dict[str, str] = {
-    "mm_media_checksum": f"""
-SELECT doc_id,
-       {_MEDIA_TYPE} AS media_type,
-       length(encode(text, 'UTF-8')) AS n_bytes,
-       md5(encode(text, 'UTF-8')) AS payload_md5,
-       CAST(32 + n_chars % 480 AS INT) AS width,
-       CAST(32 + (n_chars * 7) % 480 AS INT) AS height
-FROM documents
-ORDER BY doc_id
-""",
-    "mm_frame_plan": f"""
-WITH vids AS (
-  SELECT doc_id, CAST({_DURATION_S} AS INT) AS duration_s
-  FROM documents
-  WHERE ({_MEDIA_TYPE}) = 'video'
-),
-secs AS (
-  SELECT doc_id, explode(sequence(0, duration_s - 1)) AS sec
-  FROM vids
-)
-SELECT doc_id,
-       CAST(sec * {FPS} AS BIGINT) AS frame_idx,
-       CAST(sec * 1000 AS BIGINT) AS t_ms
-FROM secs
-ORDER BY doc_id, frame_idx
-""",
+
+# Spark-SQL forms of the metadata/plan queries (the mapInPandas
+# featurizer has no SQL spelling — byte-level blob work)
+TEMPLATES = {
+    "mm_media_checksum": _media_checksum_sql,
+    "mm_frame_plan": _frame_plan_sql,
 }
+_METADATA_ORACLES, SPARK_SQL = render(TEMPLATES)

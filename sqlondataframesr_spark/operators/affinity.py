@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: minimum co-occurrence count for a pair to be scored
 MIN_SUPPORT = 2
@@ -126,7 +127,8 @@ def _affinity_pipeline(li: DataFrame) -> DataFrame:
     )
 
 
-_PAIRS_BODY = f"""
+def _pairs_sql(d: Dialect) -> str:
+    return f"""
   WITH li AS (
     SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
   ),
@@ -147,7 +149,7 @@ _PAIRS_BODY = f"""
   )
   SELECT p.part_a, p.part_b, p.n_orders,
          na.n_part AS n_a, nb.n_part AS n_b,
-         CAST(p.n_orders * t.n_baskets * 1000000 {{DIV}}
+         CAST(p.n_orders * t.n_baskets * 1000000 {d.div}
               (na.n_part * nb.n_part) AS BIGINT) AS lift_ppm
   FROM pairs p
   JOIN part_n na ON na.l_partkey = p.part_a
@@ -156,9 +158,6 @@ _PAIRS_BODY = f"""
   ORDER BY p.n_orders DESC, lift_ppm DESC, p.part_a ASC, p.part_b ASC
   LIMIT {TOP_PAIRS_K}
 """
-
-BASKET_TOP_PAIRS_ORACLE = _PAIRS_BODY.format(DIV="//")
-BASKET_TOP_PAIRS_SPARK_SQL = _PAIRS_BODY.format(DIV="div")
 
 
 def basket_top_pairs_capped(
@@ -190,7 +189,8 @@ def basket_top_pairs_capped(
     return _affinity_pipeline(li.join(keep, "l_orderkey", "left_semi"))
 
 
-_PAIRS_CAPPED_BODY = f"""
+def _pairs_capped_sql(d: Dialect) -> str:
+    return f"""
   WITH li0 AS (
     SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
   ),
@@ -219,7 +219,7 @@ _PAIRS_CAPPED_BODY = f"""
   )
   SELECT p.part_a, p.part_b, p.n_orders,
          na.n_part AS n_a, nb.n_part AS n_b,
-         CAST(p.n_orders * t.n_baskets * 1000000 {{DIV}}
+         CAST(p.n_orders * t.n_baskets * 1000000 {d.div}
               (na.n_part * nb.n_part) AS BIGINT) AS lift_ppm
   FROM pairs p
   JOIN part_n na ON na.l_partkey = p.part_a
@@ -228,9 +228,6 @@ _PAIRS_CAPPED_BODY = f"""
   ORDER BY p.n_orders DESC, lift_ppm DESC, p.part_a ASC, p.part_b ASC
   LIMIT {TOP_PAIRS_K}
 """
-
-BASKET_TOP_PAIRS_CAPPED_ORACLE = _PAIRS_CAPPED_BODY.format(DIV="//")
-BASKET_TOP_PAIRS_CAPPED_SPARK_SQL = _PAIRS_CAPPED_BODY.format(DIV="div")
 
 
 def basket_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,14 +278,10 @@ QUERIES = {
     "basket_top_pairs_capped": basket_top_pairs_capped,
     "basket_cap_report": basket_cap_report,
 }
-ORACLES = {
-    "basket_top_pairs": BASKET_TOP_PAIRS_ORACLE,
-    "basket_top_pairs_capped": BASKET_TOP_PAIRS_CAPPED_ORACLE,
-    "basket_cap_report": BASKET_CAP_REPORT_ORACLE,
-}
-SPARK_SQL = {
-    "basket_top_pairs": BASKET_TOP_PAIRS_SPARK_SQL,
-    "basket_top_pairs_capped": BASKET_TOP_PAIRS_CAPPED_SPARK_SQL,
+TEMPLATES = {
+    "basket_top_pairs": _pairs_sql,
+    "basket_top_pairs_capped": _pairs_capped_sql,
     # the cap report is engine-portable SQL — one text, both engines
     "basket_cap_report": BASKET_CAP_REPORT_ORACLE,
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

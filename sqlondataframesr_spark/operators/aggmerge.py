@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.rounding import r6 as _r6
+from ..functions.dialect import render
 
 def _state_aggs() -> list:
     """The mergeable state per key — a function, not a module
@@ -95,5 +96,7 @@ ORDER BY event_type
 """
 
 QUERIES = {"evt_agg_merge": evt_agg_merge}
-ORACLES = {"evt_agg_merge": EVT_AGG_MERGE_ORACLE}
-SPARK_SQL = {"evt_agg_merge": EVT_AGG_MERGE_ORACLE}
+TEMPLATES = {
+    "evt_agg_merge": EVT_AGG_MERGE_ORACLE,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

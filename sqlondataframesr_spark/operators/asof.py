@@ -132,7 +132,7 @@ ORDER BY c.user_id, c.ts
 QUERIES = {"evt_asof_attribution": evt_asof_attribution}
 ORACLES = {"evt_asof_attribution": EVT_ASOF_ORACLE}
 
-# Spark-SQL N-version form: the textbook correlated spelling (left join
+# deliberate dual: the textbook correlated spelling (left join
 # on ts <= ts + per-left argmax) — the form whose O(|L| x |R|)-per-key
 # blow-up the union-window operator above exists to avoid. Keeping it
 # as the dual pins the SEMANTICS with an independent plan; it is not a

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from .drank import ntile_expr, with_global_rank
 
 #: Pareto bucket count (deciles)
@@ -72,7 +73,8 @@ def evt_activity_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("decile")
 
 
-_DECILES_BODY = f"""
+def _deciles_sql(d: Dialect) -> str:
+    return f"""
   WITH per_user AS (
     SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
     FROM events GROUP BY user_id
@@ -89,14 +91,11 @@ _DECILES_BODY = f"""
     FROM bucketed GROUP BY decile
   )
   SELECT decile, n_users, n_events,
-         CAST(n_events * 1000000 {{DIV}} SUM(n_events) OVER () AS BIGINT)
+         CAST(n_events * 1000000 {d.div} SUM(n_events) OVER () AS BIGINT)
            AS share_ppm
   FROM per_decile
   ORDER BY decile
 """
-
-EVT_ACTIVITY_DECILES_ORACLE = _DECILES_BODY.format(DIV="//")
-EVT_ACTIVITY_DECILES_SPARK_SQL = _DECILES_BODY.format(DIV="div")
 
 
 def evt_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -123,7 +122,8 @@ def evt_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GINI_BODY = """
+def _gini_sql(d: Dialect) -> str:
+    return f"""
   WITH per_user AS (
     SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
     FROM events GROUP BY user_id
@@ -136,13 +136,10 @@ _GINI_BODY = """
   SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
          CAST(SUM(n_events) AS BIGINT) AS total_events,
          CAST((2 * SUM(i * n_events) - (COUNT(*) + 1) * SUM(n_events))
-              * 1000000 {DIV} (COUNT(*) * SUM(n_events)) AS BIGINT)
+              * 1000000 {d.div} (COUNT(*) * SUM(n_events)) AS BIGINT)
            AS gini_ppm
   FROM ranked
 """
-
-EVT_ACTIVITY_GINI_ORACLE = _GINI_BODY.format(DIV="//")
-EVT_ACTIVITY_GINI_SPARK_SQL = _GINI_BODY.format(DIV="div")
 
 
 def cust_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,7 +199,8 @@ def cust_abc_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ABC_BODY = """
+def _abc_sql(d: Dialect) -> str:
+    return f"""
   WITH per AS (
     SELECT o_custkey,
            CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -229,14 +227,11 @@ _ABC_BODY = """
     FROM classed GROUP BY abc_class
   )
   SELECT abc_class, n_customers, revenue_c,
-         CAST(revenue_c * 1000000 {DIV} SUM(revenue_c) OVER () AS BIGINT)
+         CAST(revenue_c * 1000000 {d.div} SUM(revenue_c) OVER () AS BIGINT)
            AS share_ppm
   FROM agg
   ORDER BY abc_class
 """
-
-CUST_ABC_CLASSES_ORACLE = _ABC_BODY.format(DIV="//")
-CUST_ABC_CLASSES_SPARK_SQL = _ABC_BODY.format(DIV="div")
 
 
 def evt_value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,16 +312,11 @@ QUERIES = {
     "evt_activity_gini": evt_activity_gini,
     "cust_abc_classes": cust_abc_classes,
 }
-ORACLES = {
-    "evt_value_percentiles_exact": EVT_VALUE_PCT_ORACLE,
-    "evt_activity_deciles": EVT_ACTIVITY_DECILES_ORACLE,
-    "evt_activity_gini": EVT_ACTIVITY_GINI_ORACLE,
-    "cust_abc_classes": CUST_ABC_CLASSES_ORACLE,
-}
-SPARK_SQL = {
+TEMPLATES = {
     # the percentile body is dialect-portable (no // or date seams)
     "evt_value_percentiles_exact": EVT_VALUE_PCT_ORACLE,
-    "evt_activity_deciles": EVT_ACTIVITY_DECILES_SPARK_SQL,
-    "evt_activity_gini": EVT_ACTIVITY_GINI_SPARK_SQL,
-    "cust_abc_classes": CUST_ABC_CLASSES_SPARK_SQL,
+    "evt_activity_deciles": _deciles_sql,
+    "evt_activity_gini": _gini_sql,
+    "cust_abc_classes": _abc_sql,
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

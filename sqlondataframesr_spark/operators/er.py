@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from ..materialize import materialize, spread_scan
 from .components import min_label_components
 from ..functions.closure_sql import packed_closure_sql
@@ -51,7 +52,6 @@ ER_MAX_DISTANCE = 2
 ER_TOP_K = 100
 
 
-
 def _lev_bounded(left: str, right: str):
     """Threshold-bounded Levenshtein (Spark 3.5+ 3-arg form): returns
     the true distance when <= ER_MAX_DISTANCE, else -1, letting the
@@ -61,6 +61,7 @@ def _lev_bounded(left: str, right: str):
     distances (`>= 0` replaces `<= ER_MAX_DISTANCE` as the filter; the
     oracle keeps the dialect-portable 2-arg spelling)."""
     return F.expr(f"levenshtein({left}, {right}, {ER_MAX_DISTANCE})")
+
 
 def er_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate duplicate customers: pairs inside the same
@@ -454,11 +455,12 @@ JOIN norms nb ON nb.event_type = d.item_b
 ORDER BY d.item_a, d.item_b
 """
 
-def _banded_cand_sql(expl: str) -> str:
-    """bnd + ok + kept + cand CTE text; ``expl`` is the dialect's 0..2
-    band-axis spelling. The bkey expression is the shared _band_expr
-    spelling with the band index as a column; ``ok`` is the DF cap
-    (the dedup `rare` CTE idiom)."""
+
+def _banded_cand_sql(d: Dialect) -> str:
+    """bnd + ok + kept + cand CTE text. The bkey expression is the
+    shared _band_expr spelling with the band index as a column; ``ok``
+    is the DF cap (the dedup `rare` CTE idiom)."""
+    expl = f"CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2'))} AS band) t"
     return f"""bnd AS (
   SELECT c_custkey, c_nationkey, c_mktsegment, band,
          substring(c_name, greatest(length(c_name) - 8, 1)
@@ -484,9 +486,9 @@ cand AS (
 )"""
 
 
-def _banded_pairs_sql(expl: str) -> str:
+def _banded_pairs_sql(d: Dialect) -> str:
     return f"""
-WITH {_banded_cand_sql(expl)}
+WITH {_banded_cand_sql(d)}
 SELECT cand.ka AS custkey_a, cand.kb AS custkey_b,
        ca.c_nationkey AS nationkey, ca.c_mktsegment AS mktsegment,
        CAST(levenshtein(ca.c_name, cb.c_name) AS BIGINT) AS name_distance
@@ -499,9 +501,10 @@ LIMIT {ER_TOP_K}
 """
 
 
-def _banding_report_sql(expl: str, intdiv: str) -> str:
+def _banding_report_sql(d: Dialect) -> str:
+    intdiv = d.div
     return f"""
-WITH {_banded_cand_sql(expl)},
+WITH {_banded_cand_sql(d)},
 blocked AS (
   SELECT CAST(SUM(n * (n - 1) {intdiv} 2) AS BIGINT) AS n_blocked
   FROM (SELECT COUNT(*) AS n FROM customer
@@ -544,15 +547,6 @@ FROM blocked CROSS JOIN nb CROSS JOIN tm CROSS JOIN bm CROSS JOIN hot
 """
 
 
-_EXPL_DUCK = "CROSS JOIN (SELECT unnest([0, 1, 2]) AS band) t"
-_EXPL_SPARK = "LATERAL VIEW explode(array(0, 1, 2)) t AS band"
-
-ER_BANDED_PAIRS_ORACLE = _banded_pairs_sql(_EXPL_DUCK)
-ER_BANDED_PAIRS_SPARK_SQL = _banded_pairs_sql(_EXPL_SPARK)
-ER_BANDING_REPORT_ORACLE = _banding_report_sql(_EXPL_DUCK, "//")
-ER_BANDING_REPORT_SPARK_SQL = _banding_report_sql(_EXPL_SPARK, "div")
-
-
 ER_CLUSTERS_ORACLE = f"""
 WITH RECURSIVE pairs AS (
     SELECT a.c_custkey AS ka, b.c_custkey AS kb
@@ -583,12 +577,20 @@ JOIN (SELECT entity_id, CAST(COUNT(*) AS BIGINT) AS entity_size
 ORDER BY c.custkey
 """
 
-#: Spark-SQL dual of :func:`er_entity_clusters` (VERDICT r10 item 5):
-#: the bounded-round packed-array hash-to-min closure, generated by
-#: the shared helper (functions/closure_sql.py — r12 generalized this
-#: file's original unroll so the label-propagation family shares one
-#: audited spelling). Poisons every id to -1 on non-convergence.
-ER_CLUSTERS_SPARK_SQL = packed_closure_sql(
+QUERIES = {
+    "er_customer_pairs": er_customer_pairs,
+    "er_customer_pairs_banded": er_customer_pairs_banded,
+    "er_banding_report": er_banding_report,
+    "er_entity_clusters": er_entity_clusters,
+    "rec_item_cosine": rec_item_cosine,
+}
+
+# deliberate dual: Spark 4's recursive CTE supports only UNION ALL
+# (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE), which never terminates on a
+# cyclic edge list, so er_entity_clusters' dual is the bounded-round
+# packed-array hash-to-min closure (functions/closure_sql.py), which
+# poisons every id to -1 on non-convergence.
+_CLUSTERS_DUAL = packed_closure_sql(
     prelude=f"""pairs AS (
   SELECT a.c_custkey AS ka, b.c_custkey AS kb
   FROM customer a
@@ -607,33 +609,14 @@ edges AS (
     size_name="entity_size",
 )
 
-QUERIES = {
-    "er_customer_pairs": er_customer_pairs,
-    "er_customer_pairs_banded": er_customer_pairs_banded,
-    "er_banding_report": er_banding_report,
-    "er_entity_clusters": er_entity_clusters,
-    "rec_item_cosine": rec_item_cosine,
-}
-
-ORACLES = {
+TEMPLATES = {
+    # The pair/cosine oracle text is fully dialect-portable (levenshtein,
+    # sqrt, CAST) — the same string runs on both engines.
     "er_customer_pairs": ER_PAIRS_ORACLE,
-    "er_customer_pairs_banded": ER_BANDED_PAIRS_ORACLE,
-    "er_banding_report": ER_BANDING_REPORT_ORACLE,
-    "er_entity_clusters": ER_CLUSTERS_ORACLE,
+    "er_customer_pairs_banded": _banded_pairs_sql,
+    "er_banding_report": _banding_report_sql,
     "rec_item_cosine": REC_COSINE_ORACLE,
 }
-
-# Spark-SQL duals: the pair/cosine oracle text is fully
-# dialect-portable (levenshtein, sqrt, CAST) — the same string runs on
-# both engines. er_entity_clusters' dual is the bounded-round unrolled
-# closure (Spark 4's recursive CTE supports only UNION ALL —
-# UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE — which on a cyclic edge list
-# never terminates; the unroll + poison-on-nonconvergence flag closes
-# the gap instead, VERDICT r10 item 5).
-SPARK_SQL = {
-    "er_customer_pairs": ER_PAIRS_ORACLE,
-    "er_customer_pairs_banded": ER_BANDED_PAIRS_SPARK_SQL,
-    "er_banding_report": ER_BANDING_REPORT_SPARK_SQL,
-    "er_entity_clusters": ER_CLUSTERS_SPARK_SQL,
-    "rec_item_cosine": REC_COSINE_ORACLE,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES["er_entity_clusters"] = ER_CLUSTERS_ORACLE
+SPARK_SQL["er_entity_clusters"] = _CLUSTERS_DUAL

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: grid geometry: slopes from 50% to 150% of the moment estimate
 GRID_N = 16
@@ -122,25 +123,26 @@ def ml_quantile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ML_QUANTILE_GRID_ORACLE = f"""
+def _quantile_grid_sql(d: Dialect) -> str:
+    return f"""
 WITH li AS (
     SELECT CAST(round(l_quantity) AS BIGINT) AS x,
            CAST(round(l_extendedprice * 100) AS BIGINT) AS y
     FROM lineitem
 ),
 center AS (
-    SELECT CAST(SUM(y) AS BIGINT) {{DIV}} nullif(CAST(SUM(x) AS BIGINT), 0)
+    SELECT CAST(SUM(y) AS BIGINT) {d.div} nullif(CAST(SUM(x) AS BIGINT), 0)
              AS c,
            CAST(COUNT(*) AS BIGINT) AS n_rows
     FROM li
 ),
 grid AS (
-    SELECT DISTINCT c * ({GRID_N} + g.g) {{DIV}} {2 * GRID_N} AS slope,
+    SELECT DISTINCT c * ({GRID_N} + g.g) {d.div} {2 * GRID_N} AS slope,
            n_rows
     FROM center CROSS JOIN
-         (SELECT {{UNNEST_G}} AS g) g
+         (SELECT {d.fn('unnest', d.seq(0, 2 * GRID_N + 1))} AS g) g
 ),
-taus AS (SELECT {{UNNEST_T}} AS tau_pct),
+taus AS (SELECT {d.fn('unnest', d.list('50, 90'))} AS tau_pct),
 scored AS (
     SELECT t.tau_pct, gr.slope, gr.n_rows,
            CAST(SUM(CASE WHEN t.tau_pct = 50
@@ -225,7 +227,8 @@ def ml_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ML_TARGET_ENCODING_ORACLE = f"""
+def _target_encoding_sql(d: Dialect) -> str:
+    return f"""
 WITH rows_ AS (
     SELECT p.p_brand AS brand,
            CAST(round(l.l_extendedprice * 100) AS BIGINT) AS y
@@ -237,14 +240,14 @@ stats AS (
     FROM rows_ GROUP BY brand
 ),
 gmean AS (
-    SELECT CAST(SUM(y) AS BIGINT) {{DIV}} CAST(COUNT(*) AS BIGINT) AS mu
+    SELECT CAST(SUM(y) AS BIGINT) {d.div} CAST(COUNT(*) AS BIGINT) AS mu
     FROM rows_
 ),
 enc AS (
     SELECT r.brand, s.n, s.y_sum,
-           (s.y_sum - r.y) {{DIV}} nullif(s.n - 1, 0) AS enc_loo,
+           (s.y_sum - r.y) {d.div} nullif(s.n - 1, 0) AS enc_loo,
            (s.y_sum - r.y + {TE_SMOOTH_M} * g.mu)
-             {{DIV}} (s.n - 1 + {TE_SMOOTH_M}) AS enc_smooth
+             {d.div} (s.n - 1 + {TE_SMOOTH_M}) AS enc_smooth
     FROM rows_ r JOIN stats s USING (brand) CROSS JOIN gmean g
 )
 SELECT brand, n, y_sum,
@@ -357,7 +360,8 @@ def ml_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ML_ISOTONIC_ORACLE = f"""
+def _isotonic_sql(d: Dialect) -> str:
+    return f"""
 WITH per_user AS (
     SELECT user_id,
            least(CAST(COUNT(*) AS BIGINT), {ISO_MAX_BUCKET}) AS bucket,
@@ -379,7 +383,7 @@ pre AS (
 pairs AS (
     SELECT lo.bucket AS i, hi.bucket AS j,
            (hi.cc - (lo.cc - lo.c)) * 1000000
-             {{DIV}} nullif(hi.cw - (lo.cw - lo.w), 0) AS r
+             {d.div} nullif(hi.cw - (lo.cw - lo.w), 0) AS r
     FROM pre lo JOIN pre hi ON lo.bucket <= hi.bucket
 ),
 inner_ AS (
@@ -388,7 +392,7 @@ inner_ AS (
     GROUP BY 1, 2, 3, 4
 )
 SELECT k AS bucket, w AS n_users, c AS n_conv,
-       c * 1000000 {{DIV}} w AS raw_ppm,
+       c * 1000000 {d.div} w AS raw_ppm,
        CAST(MAX(mr) AS BIGINT) AS iso_ppm
 FROM inner_ GROUP BY k, w, c ORDER BY bucket
 """
@@ -479,7 +483,8 @@ def ml_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-ML_WINSORIZE_ORACLE = """
+def _winsorize_sql(d: Dialect) -> str:
+    return f"""
 WITH hist AS (
     SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents,
            CAST(COUNT(*) AS BIGINT) AS cnt
@@ -512,8 +517,8 @@ stats AS (
     GROUP BY 1, 2, 3, 4
 )
 SELECT event_type, n, p1_cents, p99_cents,
-       sx {DIV} n AS mean_cents,
-       wx {DIV} n AS wins_mean_cents,
+       sx {d.div} n AS mean_cents,
+       wx {d.div} n AS wins_mean_cents,
        round(sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
          / CAST(n AS DOUBLE), 6) AS std_cents,
@@ -531,24 +536,10 @@ QUERIES = {
     "ml_isotonic_calibration": ml_isotonic_calibration,
 }
 
-ORACLES = {
-    "ml_quantile_grid": ML_QUANTILE_GRID_ORACLE.format(
-        DIV="//",
-        UNNEST_G=f"unnest(range(0, {2 * GRID_N + 1}))",
-        UNNEST_T="unnest([50, 90])",
-    ),
-    "ml_target_encoding_loo": ML_TARGET_ENCODING_ORACLE.format(DIV="//"),
-    "ml_isotonic_calibration": ML_ISOTONIC_ORACLE.format(DIV="//"),
-    "ml_winsorize_stats": ML_WINSORIZE_ORACLE.format(DIV="//"),
+TEMPLATES = {
+    "ml_quantile_grid": _quantile_grid_sql,
+    "ml_target_encoding_loo": _target_encoding_sql,
+    "ml_isotonic_calibration": _isotonic_sql,
+    "ml_winsorize_stats": _winsorize_sql,
 }
-
-SPARK_SQL = {
-    "ml_isotonic_calibration": ML_ISOTONIC_ORACLE.format(DIV="div"),
-    "ml_winsorize_stats": ML_WINSORIZE_ORACLE.format(DIV="div"),
-    "ml_quantile_grid": ML_QUANTILE_GRID_ORACLE.format(
-        DIV="div",
-        UNNEST_G=f"explode(sequence(0, {2 * GRID_N}))",
-        UNNEST_T="explode(array(50, 90))",
-    ),
-    "ml_target_encoding_loo": ML_TARGET_ENCODING_ORACLE.format(DIV="div"),
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

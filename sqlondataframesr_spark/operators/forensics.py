@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: top-k emitted behavior trigrams
 TRIGRAM_TOP_K = 20
@@ -125,9 +126,11 @@ _P_CASE_SQL = "CASE " + " ".join(
     f"WHEN digit = {d} THEN CAST({p} AS DOUBLE)" for d, p in BENFORD_P.items()
 ) + " END"
 
-BENFORD_ORACLE = f"""
+
+def _benford_sql(d: Dialect) -> str:
+    return f"""
 WITH counts AS (
-    SELECT CAST(left(CAST(CAST(round(o_totalprice) AS BIGINT) AS VARCHAR), 1)
+    SELECT CAST(left(CAST(CAST(round(o_totalprice) AS BIGINT) AS {d.varchar}), 1)
                 AS BIGINT) AS digit,
            CAST(COUNT(*) AS BIGINT) AS n_obs
     FROM orders
@@ -135,7 +138,7 @@ WITH counts AS (
 ),
 anchored AS (
     SELECT d.digit, COALESCE(c.n_obs, 0) AS n_obs
-    FROM (SELECT CAST(range AS BIGINT) AS digit FROM range(1, 10)) d
+    FROM (SELECT CAST({d.range_col} AS BIGINT) AS digit FROM range(1, 10)) d
     LEFT JOIN counts c ON c.digit = d.digit
 ),
 total AS (
@@ -155,19 +158,8 @@ QUERIES = {
     "dq_benford_digits": dq_benford_digits,
 }
 
-ORACLES = {
+TEMPLATES = {
     "evt_type_trigrams": TRIGRAMS_ORACLE,
-    "dq_benford_digits": BENFORD_ORACLE,
+    "dq_benford_digits": _benford_sql,
 }
-
-# Spark-SQL duals. Dialect seams: VARCHAR -> STRING and the range()
-# table function's column name (DuckDB ``range``, Spark ``id``).
-SPARK_SQL = {
-    "evt_type_trigrams": TRIGRAMS_ORACLE,  # fully portable
-    "dq_benford_digits": BENFORD_ORACLE.replace(
-        "AS VARCHAR", "AS STRING"
-    ).replace(
-        "SELECT CAST(range AS BIGINT) AS digit FROM range(1, 10)",
-        "SELECT CAST(id AS BIGINT) AS digit FROM range(1, 10)",
-    ),
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from ..materialize import materialize
 
 #: damping factor 0.85 expressed as integer percent, and rank scale
@@ -126,12 +127,12 @@ def graph_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.orderBy(F.col("rank_us").desc(), F.col("nation").asc())
 
 
-def _pagerank_sql(n_nations: int) -> str:
-    """The SAME unrolled computation as portable SQL (DuckDB oracle
-    AND Spark-SQL twin). ``n_nations`` must equal the distinct node
-    count — asserted by the node-count CTE cross-check below."""
-    base = f"({100 - _DAMP_PCT} * {_SCALE_US}) // (100 * {n_nations})"
-    r0 = f"{_SCALE_US} // {n_nations}"
+def _pagerank_sql(d: Dialect, n_nations: int) -> str:
+    """The SAME unrolled computation as SQL. ``n_nations`` must equal
+    the distinct node count — asserted by the node-count CTE
+    cross-check below."""
+    base = d.idiv(f"({100 - _DAMP_PCT} * {_SCALE_US})", f"(100 * {n_nations})")
+    r0 = d.idiv(_SCALE_US, n_nations)
     sql = f"""
 WITH edges AS (
   SELECT nc.n_name AS src, ns.n_name AS dst,
@@ -152,10 +153,10 @@ g AS (SELECT e.src, e.dst, e.w, ow.ow
 r0 AS (SELECT nation, CAST({r0} AS BIGINT) AS rank_us FROM nodes)"""
     for i in range(_N_ITERS):
         sql += f""",
-c{i} AS (SELECT g.dst, SUM(r.rank_us * g.w // g.ow) AS in_us
+c{i} AS (SELECT g.dst, SUM({d.idiv('r.rank_us * g.w', 'g.ow')}) AS in_us
          FROM g JOIN r{i} r ON g.src = r.nation GROUP BY g.dst),
 r{i + 1} AS (SELECT n.nation,
-             CAST({base} + {_DAMP_PCT} * COALESCE(c.in_us, 0) // 100 AS BIGINT)
+             CAST({base} + {d.idiv(f'{_DAMP_PCT} * COALESCE(c.in_us, 0)', 100)} AS BIGINT)
                AS rank_us
              FROM nodes n LEFT JOIN c{i} c ON n.nation = c.dst)"""
     sql += f"""
@@ -167,10 +168,8 @@ ORDER BY rank_us DESC, nation ASC"""
 #: the testdata nation dim is 25 rows at every SF and every nation
 #: trades (dense synthetic data) — the oracle pins n = 25 and the
 #: pytest cross-checks it against the live node count
-GRAPH_NATION_PAGERANK_ORACLE = _pagerank_sql(25)
+N_NATIONS = 25
 
-#: Spark SQL uses `div` for integer division where DuckDB uses `//`
-GRAPH_NATION_PAGERANK_SPARK_SQL = _pagerank_sql(25).replace("//", "div")
 
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation triangle participation over the undirected nation
@@ -260,18 +259,14 @@ FROM nodes n LEFT JOIN parts p ON p.nation = n.nation
 GROUP BY n.nation
 ORDER BY n_triangles DESC, n.nation ASC"""
 
-#: identical text runs on both engines (no div/// divergence here)
-GRAPH_TRIANGLE_COUNT_SPARK_SQL = GRAPH_TRIANGLE_COUNT_ORACLE
 
 QUERIES = {
     "graph_nation_pagerank": graph_nation_pagerank,
     "graph_triangle_count": graph_triangle_count,
 }
-ORACLES = {
-    "graph_nation_pagerank": GRAPH_NATION_PAGERANK_ORACLE,
+# the triangle text runs on both engines as is
+TEMPLATES = {
+    "graph_nation_pagerank": lambda d: _pagerank_sql(d, N_NATIONS),
     "graph_triangle_count": GRAPH_TRIANGLE_COUNT_ORACLE,
 }
-SPARK_SQL = {
-    "graph_nation_pagerank": GRAPH_NATION_PAGERANK_SPARK_SQL,
-    "graph_triangle_count": GRAPH_TRIANGLE_COUNT_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

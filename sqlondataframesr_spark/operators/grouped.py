@@ -95,8 +95,8 @@ ORACLES = {
     "pandas_source_stats": PANDAS_SOURCE_STATS_ORACLE,
 }
 
-# Spark-SQL N-version form: the built-in-aggregate twin of the pandas
-# closure — exactly the "expressible in SQL" property that makes the
+# deliberate dual: the built-in-aggregate twin (min_by argmax) of the
+# pandas closure, where the oracle uses a correlated subquery — exactly the "expressible in SQL" property that makes the
 # Arrow path oracle-checkable (module docstring).
 SPARK_SQL: dict[str, str] = {
     "pandas_source_stats": """

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: rolling window width (days) for the active-user report
 WAU_DAYS = 7
@@ -73,9 +74,6 @@ _NEW_USERS_BODY = """
   ORDER BY day
 """
 
-EVT_NEW_USERS_DAILY_ORACLE = _NEW_USERS_BODY
-EVT_NEW_USERS_DAILY_SPARK_SQL = _NEW_USERS_BODY
-
 
 def evt_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per active day: distinct daily users (dau), distinct users in
@@ -114,7 +112,8 @@ def evt_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DAU_WAU_BODY = f"""
+def _dau_wau_sql(d: Dialect) -> str:
+    return f"""
   WITH ud AS (
     SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
   ),
@@ -122,28 +121,17 @@ _DAU_WAU_BODY = f"""
     SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM ud GROUP BY day
   ),
   fan AS (
-    SELECT DISTINCT user_id, {{DADD}} AS wend
-    FROM ud CROSS JOIN {{GENS}}
+    SELECT DISTINCT user_id, day + CAST(g.i AS INT) AS wend
+    FROM ud CROSS JOIN {d.generate_series(0, WAU_DAYS - 1)} AS g(i)
   ),
   wau AS (
     SELECT wend AS day, CAST(COUNT(*) AS BIGINT) AS wau FROM fan GROUP BY wend
   )
   SELECT d.day AS day, d.dau AS dau, w.wau AS wau,
-         CAST(d.dau * 1000000 {{DIV}} w.wau AS BIGINT) AS stickiness_ppm
+         CAST(d.dau * 1000000 {d.div} w.wau AS BIGINT) AS stickiness_ppm
   FROM dau d JOIN wau w ON w.day = d.day
   ORDER BY d.day
 """
-
-EVT_DAU_WAU_ORACLE = _DAU_WAU_BODY.format(
-    DADD="day + CAST(g.i AS INT)",
-    GENS=f"generate_series(0, {WAU_DAYS - 1}) AS g(i)",
-    DIV="//",
-)
-EVT_DAU_WAU_SPARK_SQL = _DAU_WAU_BODY.format(
-    DADD="date_add(day, g.i)",
-    GENS=f"(SELECT explode(sequence(0, {WAU_DAYS - 1})) AS i) g",
-    DIV="div",
-)
 
 
 #: cohort epoch — a Monday, so week indices align to ISO-style weeks
@@ -210,10 +198,12 @@ def evt_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COHORT_BODY = f"""
+def _cohort_retention_sql(d: Dialect) -> str:
+    ddiff = d.date_diff_days(f"DATE '{COHORT_EPOCH}'", "CAST(ts AS DATE)")
+    return f"""
   WITH uw AS (
     SELECT DISTINCT user_id,
-           CAST({{DDIFF}} {{DIV}} 7 AS BIGINT) AS widx
+           CAST({ddiff} {d.div} 7 AS BIGINT) AS widx
     FROM events
   ),
   first_w AS (
@@ -230,26 +220,15 @@ _COHORT_BODY = f"""
   base AS (
     SELECT cidx, n_active AS cohort_size FROM grid WHERE week_offset = 0
   )
-  SELECT {{WSTART}} AS cohort_week,
+  SELECT DATE '{COHORT_EPOCH}' + CAST(g.cidx * 7 AS INT) AS cohort_week,
          g.week_offset AS week_offset,
          g.n_active AS n_active,
          b.cohort_size AS cohort_size,
-         CAST(g.n_active * 1000000 {{DIV}} b.cohort_size AS BIGINT)
+         CAST(g.n_active * 1000000 {d.div} b.cohort_size AS BIGINT)
            AS retention_ppm
   FROM grid g JOIN base b ON b.cidx = g.cidx
   ORDER BY cohort_week, week_offset
 """
-
-EVT_COHORT_RETENTION_ORACLE = _COHORT_BODY.format(
-    DDIFF=f"date_diff('day', DATE '{COHORT_EPOCH}', CAST(ts AS DATE))",
-    WSTART=f"DATE '{COHORT_EPOCH}' + CAST(g.cidx * 7 AS INT)",
-    DIV="//",
-)
-EVT_COHORT_RETENTION_SPARK_SQL = _COHORT_BODY.format(
-    DDIFF=f"datediff(to_date(ts), date'{COHORT_EPOCH}')",
-    WSTART=f"date_add(date'{COHORT_EPOCH}', CAST(g.cidx * 7 AS INT))",
-    DIV="div",
-)
 
 
 QUERIES = {
@@ -257,13 +236,10 @@ QUERIES = {
     "evt_dau_wau": evt_dau_wau,
     "evt_cohort_retention": evt_cohort_retention,
 }
-ORACLES = {
-    "evt_new_users_daily": EVT_NEW_USERS_DAILY_ORACLE,
-    "evt_dau_wau": EVT_DAU_WAU_ORACLE,
-    "evt_cohort_retention": EVT_COHORT_RETENTION_ORACLE,
+# the new-users text runs on both engines as is
+TEMPLATES = {
+    "evt_new_users_daily": _NEW_USERS_BODY,
+    "evt_dau_wau": _dau_wau_sql,
+    "evt_cohort_retention": _cohort_retention_sql,
 }
-SPARK_SQL = {
-    "evt_new_users_daily": EVT_NEW_USERS_DAILY_SPARK_SQL,
-    "evt_dau_wau": EVT_DAU_WAU_SPARK_SQL,
-    "evt_cohort_retention": EVT_COHORT_RETENTION_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -213,31 +213,9 @@ FROM agg a CROSS JOIN mx m
 ORDER BY a.bucket_day, a.event_type
 """
 
-#: deliberately a DIFFERENT strategy (full recompute, no materialized
-#: read) — the dual certifies the continuous-aggregate INVARIANT, the
-#: same way the oracle does, rather than replaying the union plan
-EVT_HYPERTABLE_ROLLUP_SPARK_SQL = f"""
-WITH mx AS (
-  SELECT date_sub(cast(date_trunc('DAY', MAX(ts)) AS date), {RAW_TAIL_DAYS - 1})
-           AS split
-  FROM events
-),
-agg AS (
-  SELECT cast(date_trunc('DAY', ts) AS date) AS bucket_day, event_type,
-         COUNT(*) AS n_events,
-         SUM(cast(round(value * 100) AS bigint)) AS cents
-  FROM events GROUP BY 1, 2
-)
-SELECT a.bucket_day, a.event_type,
-       CAST(a.n_events AS BIGINT) AS n_events,
-       ROUND(CAST(a.cents AS DOUBLE) / 100.0, 2) AS total_value,
-       CASE WHEN a.bucket_day < m.split THEN 'materialized' ELSE 'raw' END
-         AS served_from
-FROM agg a CROSS JOIN mx m
-ORDER BY a.bucket_day, a.event_type
-"""
-
-
 QUERIES = {"evt_hypertable_rollup": evt_hypertable_rollup}
 ORACLES = {"evt_hypertable_rollup": EVT_HYPERTABLE_ROLLUP_ORACLE}
-SPARK_SQL = {"evt_hypertable_rollup": EVT_HYPERTABLE_ROLLUP_SPARK_SQL}
+# the full recompute certifies the continuous-aggregate INVARIANT, the
+# same way the oracle does, rather than replaying the union plan; the
+# text is portable
+SPARK_SQL = ORACLES

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from ..materialize import materialize
 from .drank import ntile_expr, with_global_rank
 from .sessionize import user_cap_report, user_cap_report_sql
@@ -92,7 +93,8 @@ def evt_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRANSITION_BODY = """
+def _transition_sql(d: Dialect) -> str:
+    return f"""
   WITH pairs AS (
     SELECT lag(event_type) OVER
              (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type,
@@ -105,15 +107,12 @@ _TRANSITION_BODY = """
     GROUP BY prev_type, next_type
   )
   SELECT prev_type, next_type, n_transitions,
-         CAST(n_transitions * 1000000 {DIV}
+         CAST(n_transitions * 1000000 {d.div}
               SUM(n_transitions) OVER (PARTITION BY prev_type) AS BIGINT)
            AS prob_ppm
   FROM counts
   ORDER BY prev_type, next_type
 """
-
-EVT_TRANSITION_MATRIX_ORACLE = _TRANSITION_BODY.format(DIV="//")
-EVT_TRANSITION_MATRIX_SPARK_SQL = _TRANSITION_BODY.format(DIV="div")
 
 
 def cust_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,7 +159,8 @@ def cust_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RFM_BODY = f"""
+def _rfm_sql(d: Dialect) -> str:
+    return f"""
   WITH per_cust AS (
     SELECT o_custkey, MAX(o_orderdate) AS last_order,
            CAST(COUNT(*) AS BIGINT) AS f_orders,
@@ -169,7 +169,7 @@ _RFM_BODY = f"""
   ),
   scored AS (
     SELECT o_custkey, f_orders, m_cents,
-           CAST({{DATEDIFF}} AS BIGINT) AS r_days
+           CAST({d.date_diff_days('last_order', 'ref_date')} AS BIGINT) AS r_days
     FROM per_cust, (SELECT MAX(last_order) AS ref_date FROM per_cust)
   ),
   quintiled AS (
@@ -187,13 +187,6 @@ _RFM_BODY = f"""
   FROM quintiled GROUP BY r_q, f_q, m_q
   ORDER BY r_q, f_q, m_q
 """
-
-CUST_RFM_SEGMENTS_ORACLE = _RFM_BODY.format(
-    DATEDIFF="date_diff('day', last_order, ref_date)"
-)
-CUST_RFM_SEGMENTS_SPARK_SQL = _RFM_BODY.format(
-    DATEDIFF="datediff(ref_date, last_order)"
-)
 
 
 def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,9 +244,6 @@ _DIFF_BODY = f"""
   LIMIT {DIFF_TOP_K}
 """
 
-ORDERS_SNAPSHOT_DIFF_ORACLE = _DIFF_BODY
-ORDERS_SNAPSHOT_DIFF_SPARK_SQL = _DIFF_BODY
-
 
 def evt_daily_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily volume anomalies per event type: days whose event count
@@ -300,7 +290,8 @@ def evt_daily_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPIKES_BODY = """
+def _spikes_sql(d: Dialect) -> str:
+    return f"""
   WITH daily AS (
     -- CAST pins the day to TIMESTAMP: DuckDB's date_trunc('day')
     -- yields DATE where Spark's yields TIMESTAMP
@@ -316,7 +307,7 @@ _SPIKES_BODY = """
     FROM daily
   )
   SELECT event_type, day, n_events,
-         CAST(total * 1000 {DIV} n_days AS BIGINT) AS mean_m,
+         CAST(total * 1000 {d.div} n_days AS BIGINT) AS mean_m,
          CASE WHEN 4 * n_events * n_days > 5 * total THEN 'spike'
               ELSE 'dip' END AS kind
   FROM stats
@@ -324,9 +315,6 @@ _SPIKES_BODY = """
      OR 5 * n_events * n_days < 4 * total
   ORDER BY event_type, day
 """
-
-EVT_DAILY_SPIKES_ORACLE = _SPIKES_BODY.format(DIV="//")
-EVT_DAILY_SPIKES_SPARK_SQL = _SPIKES_BODY.format(DIV="div")
 
 
 def orders_yoy_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +360,8 @@ def orders_yoy_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_YOY_BODY = f"""
+def _yoy_sql(d: Dialect) -> str:
+    return f"""
   WITH rev AS (
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
            CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS o_month,
@@ -385,14 +374,11 @@ _YOY_BODY = f"""
       ON p.o_year = r.o_year - 1 AND p.o_month = r.o_month
   )
   SELECT o_year, o_month, revenue_c, CAST(prev_year_c AS BIGINT) AS prev_year_c,
-         CAST(revenue_c * 1000000 {{DIV}} NULLIF(prev_year_c, 0) AS BIGINT)
+         CAST(revenue_c * 1000000 {d.div} NULLIF(prev_year_c, 0) AS BIGINT)
            AS yoy_ratio_ppm
   FROM joined
   ORDER BY o_year, o_month
 """
-
-ORDERS_YOY_SEASONALITY_ORACLE = _YOY_BODY.format(DIV="//")
-ORDERS_YOY_SEASONALITY_SPARK_SQL = _YOY_BODY.format(DIV="div")
 
 
 #: attribution lookback window (hours before the purchase)
@@ -508,15 +494,17 @@ def evt_attribution_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return user_cap_report(spark, sf_dir, ATTR_USER_EVENTS_CAP)
 
 
-_ATTR_BODY = f"""
-WITH {{CAPPED}}purchases AS (
+def _attribution_sql(d: Dialect, capped: bool) -> str:
+    src = "capped" if capped else "events"
+    return f"""
+WITH {_ATTR_CAPPED_CTE if capped else ''}purchases AS (
     SELECT user_id, ts AS p_ts, event_id AS p_id,
            CAST(round(value * 100) AS BIGINT) AS cents
-    FROM {{SRC}} WHERE event_type = 'purchase'
+    FROM {src} WHERE event_type = 'purchase'
 ),
 clicks AS (
     SELECT user_id AS c_user, ts AS c_ts, event_id AS c_id
-    FROM {{SRC}} WHERE event_type = 'click'
+    FROM {src} WHERE event_type = 'click'
 ),
 j AS (
     SELECT p.*, c.c_ts, c.c_id
@@ -524,7 +512,7 @@ j AS (
     LEFT JOIN clicks c
       ON c.c_user = p.user_id
      AND c.c_ts <= p.p_ts
-     AND c.c_ts > p.p_ts - INTERVAL {{IVL}}
+     AND c.c_ts > p.p_ts - INTERVAL {d.interval(ATTR_WINDOW_HOURS, 'HOURS')}
 ),
 marked AS (
     SELECT *,
@@ -540,8 +528,8 @@ attributed AS (
            CASE WHEN c_id IS NULL THEN 'direct' ELSE 'click' END AS channel,
            CASE WHEN c_id IS NULL THEN cents
                 WHEN rn = 1
-                  THEN cents - (cents {{DIV}} n_touch) * (n_touch - 1)
-                ELSE cents {{DIV}} n_touch END AS att
+                  THEN cents - (cents {d.div} n_touch) * (n_touch - 1)
+                ELSE cents {d.div} n_touch END AS att
     FROM marked
 )
 SELECT day, channel,
@@ -557,24 +545,6 @@ _ATTR_CAPPED_CTE = f"""capped AS (
 ),
 """
 
-EVT_LINEAR_ATTRIBUTION_ORACLE = _ATTR_BODY.format(
-    DIV="//", IVL=f"{ATTR_WINDOW_HOURS} HOURS", CAPPED="", SRC="events"
-)
-EVT_LINEAR_ATTRIBUTION_SPARK_SQL = _ATTR_BODY.format(
-    DIV="div", IVL=f"'{ATTR_WINDOW_HOURS}' HOURS", CAPPED="", SRC="events"
-)
-EVT_LINEAR_ATTRIBUTION_CAPPED_ORACLE = _ATTR_BODY.format(
-    DIV="//",
-    IVL=f"{ATTR_WINDOW_HOURS} HOURS",
-    CAPPED=_ATTR_CAPPED_CTE,
-    SRC="capped",
-)
-EVT_LINEAR_ATTRIBUTION_CAPPED_SPARK_SQL = _ATTR_BODY.format(
-    DIV="div",
-    IVL=f"'{ATTR_WINDOW_HOURS}' HOURS",
-    CAPPED=_ATTR_CAPPED_CTE,
-    SRC="capped",
-)
 
 ATTR_CAP_REPORT_SQL = user_cap_report_sql(ATTR_USER_EVENTS_CAP)
 
@@ -759,9 +729,9 @@ def evt_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _markov_sql(div: str) -> str:
-    """The SAME unrolled computation as portable SQL (DuckDB oracle;
-    the Spark-SQL twin swaps the division spelling)."""
+def _markov_sql(d: Dialect) -> str:
+    """The SAME unrolled computation as SQL."""
+    div = d.div
     sql = f"""
 WITH ev AS (
   SELECT user_id, ts, event_id,
@@ -841,10 +811,6 @@ FROM per_chan ORDER BY channel"""
     return sql
 
 
-EVT_MARKOV_ORACLE = _markov_sql("//")
-EVT_MARKOV_SPARK_SQL = _markov_sql("div")
-
-
 QUERIES = {
     "evt_markov_attribution": evt_markov_attribution,
     "evt_transition_matrix": evt_transition_matrix,
@@ -857,26 +823,16 @@ QUERIES = {
     "evt_attribution_cap_report": evt_attribution_cap_report,
 }
 
-ORACLES = {
-    "evt_markov_attribution": EVT_MARKOV_ORACLE,
-    "evt_transition_matrix": EVT_TRANSITION_MATRIX_ORACLE,
-    "cust_rfm_segments": CUST_RFM_SEGMENTS_ORACLE,
-    "orders_snapshot_diff": ORDERS_SNAPSHOT_DIFF_ORACLE,
-    "evt_daily_spikes": EVT_DAILY_SPIKES_ORACLE,
-    "orders_yoy_seasonality": ORDERS_YOY_SEASONALITY_ORACLE,
-    "evt_linear_attribution": EVT_LINEAR_ATTRIBUTION_ORACLE,
-    "evt_linear_attribution_capped": EVT_LINEAR_ATTRIBUTION_CAPPED_ORACLE,
-    "evt_attribution_cap_report": ATTR_CAP_REPORT_SQL,
-}
 
-SPARK_SQL = {
-    "evt_markov_attribution": EVT_MARKOV_SPARK_SQL,
-    "evt_transition_matrix": EVT_TRANSITION_MATRIX_SPARK_SQL,
-    "cust_rfm_segments": CUST_RFM_SEGMENTS_SPARK_SQL,
-    "orders_snapshot_diff": ORDERS_SNAPSHOT_DIFF_SPARK_SQL,
-    "evt_daily_spikes": EVT_DAILY_SPIKES_SPARK_SQL,
-    "orders_yoy_seasonality": ORDERS_YOY_SEASONALITY_SPARK_SQL,
-    "evt_linear_attribution": EVT_LINEAR_ATTRIBUTION_SPARK_SQL,
-    "evt_linear_attribution_capped": EVT_LINEAR_ATTRIBUTION_CAPPED_SPARK_SQL,
-    "evt_attribution_cap_report": ATTR_CAP_REPORT_SQL,
+TEMPLATES = {
+    "evt_markov_attribution": _markov_sql,
+    "evt_transition_matrix": _transition_sql,
+    "cust_rfm_segments": _rfm_sql,
+    "evt_daily_spikes": _spikes_sql,
+    "orders_yoy_seasonality": _yoy_sql,
+    "evt_linear_attribution": lambda d: _attribution_sql(d, capped=False),
+    "evt_linear_attribution_capped": lambda d: _attribution_sql(d, capped=True),
 }
+# one text, both engines
+NEUTRAL = {"orders_snapshot_diff": _DIFF_BODY, "evt_attribution_cap_report": ATTR_CAP_REPORT_SQL}
+ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

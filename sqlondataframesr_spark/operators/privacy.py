@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6_sql
 
 #: k-anonymity threshold: classes smaller than this need suppression
 K_ANON = 5
@@ -127,7 +129,8 @@ def privacy_k_anonymity_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-K_ANON_ORACLE = f"""
+def _k_anon_sql(d: Dialect) -> str:
+    return f"""
 WITH cust AS (
     SELECT c_nationkey, c_mktsegment,
            CAST(floor(CAST(round(c_acctbal * 100) AS BIGINT)
@@ -155,7 +158,7 @@ SELECT level,
             AS BIGINT) AS rows_below_k,
        CAST(SUM(CASE WHEN class_size < {K_ANON} THEN class_size ELSE 0 END)
             AS BIGINT) * 1000000
-         // CAST(SUM(class_size) AS BIGINT) AS rows_below_ppm
+         {d.div} CAST(SUM(class_size) AS BIGINT) AS rows_below_ppm
 FROM classes GROUP BY level ORDER BY level
 """
 
@@ -205,7 +208,8 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-L_DIV_ORACLE = f"""
+def _l_div_sql(d: Dialect) -> str:
+    return f"""
 WITH dedup AS (
     SELECT c_nationkey,
            CAST(floor(CAST(round(c_acctbal * 100) AS BIGINT)
@@ -229,18 +233,11 @@ LIMIT 50
 #: DP release parameters: epsilon = 1, count sensitivity Delta f = 1
 DP_EPS = "1.0"
 
-#: md5-uniform in (0, 1]: (h + 1) / 2^52 over 13 hex chars — the
-#: sketches-module determinism contract (llm/sampling.py's idiom)
-_U_SPARK = (
-    "((cast(conv(substring(md5(concat('{salt}', cast(c_nationkey as"
-    " string))), 1, 13), 16, 10) as bigint) + 1)"
-    " / cast(4503599627370496 as double))"
-)
-_U_DUCK = (
-    "((('0x' || substr(md5('{salt}' || CAST(c_nationkey AS VARCHAR)),"
-    " 1, 13))::BIGINT + 1)"
-    " / CAST(4503599627370496 AS DOUBLE))"
-)
+def _u_sql(d: Dialect, salt: str) -> str:
+    """md5-uniform in (0, 1]: (h + 1) / 2^52 over 13 hex chars — the
+    sketches-module determinism contract (llm/sampling.py's idiom)."""
+    h = d.hex_bigint(f"substr(md5('{salt}' || {d.cast_str('c_nationkey')}), 1, 13)")
+    return f"(({h} + 1) / CAST(4503599627370496 AS DOUBLE))"
 
 
 def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,13 +265,13 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = cust.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")
     )
-    u1 = _U_SPARK.format(salt="a")
-    u2 = _U_SPARK.format(salt="b")
+    u1 = _u_sql(SPARK, "a")
+    u2 = _u_sql(SPARK, "b")
     noise = f"(ln({u1}) - ln({u2})) / {DP_EPS}"
     return counts.selectExpr(
         "c_nationkey",
         "exact_n",
-        f"(floor(({noise}) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) as noise",
+        f"{r6_sql(noise)} as noise",
         f"greatest(cast(round(cast(exact_n as double) + {noise})"
         " as bigint), 0L) as noisy_n",
         f"abs(greatest(cast(round(cast(exact_n as double) + {noise})"
@@ -282,21 +279,20 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_nationkey")
 
 
-_DP_U1 = _U_DUCK.format(salt="a")
-_DP_U2 = _U_DUCK.format(salt="b")
-
-DP_NOISY_ORACLE = f"""
+def _dp_noisy_sql(d: Dialect) -> str:
+    u1, u2 = _u_sql(d, "a"), _u_sql(d, "b")
+    return f"""
 WITH counts AS (
     SELECT c_nationkey, CAST(COUNT(*) AS BIGINT) AS exact_n
     FROM customer GROUP BY c_nationkey
 )
 SELECT c_nationkey, exact_n,
-       (floor(((ln({_DP_U1}) - ln({_DP_U2})) / {DP_EPS}) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS noise,
+       {r6_sql(f'(ln({u1}) - ln({u2})) / {DP_EPS}')} AS noise,
        greatest(CAST(round(CAST(exact_n AS DOUBLE)
-                + (ln({_DP_U1}) - ln({_DP_U2})) / {DP_EPS}) AS BIGINT),
+                + (ln({u1}) - ln({u2})) / {DP_EPS}) AS BIGINT),
                 0) AS noisy_n,
        abs(greatest(CAST(round(CAST(exact_n AS DOUBLE)
-                + (ln({_DP_U1}) - ln({_DP_U2})) / {DP_EPS}) AS BIGINT),
+                + (ln({u1}) - ln({u2})) / {DP_EPS}) AS BIGINT),
                 0) - exact_n) AS abs_err
 FROM counts ORDER BY c_nationkey
 """
@@ -308,18 +304,9 @@ QUERIES = {
     "privacy_dp_noisy_counts": privacy_dp_noisy_counts,
 }
 
-ORACLES = {
-    "privacy_k_anonymity_ladder": K_ANON_ORACLE,
-    "privacy_l_diversity": L_DIV_ORACLE,
-    "privacy_dp_noisy_counts": DP_NOISY_ORACLE,
+TEMPLATES = {
+    "privacy_k_anonymity_ladder": _k_anon_sql,
+    "privacy_l_diversity": _l_div_sql,
+    "privacy_dp_noisy_counts": _dp_noisy_sql,
 }
-
-# Spark-SQL duals: seams are DuckDB's ``//`` (Spark ``div``) and the
-# hex-literal md5 uniforms (Spark conv(,16,10)).
-SPARK_SQL = {
-    name: sql.replace(" // ", " div ") for name, sql in ORACLES.items()
-}
-SPARK_SQL["privacy_dp_noisy_counts"] = (
-    DP_NOISY_ORACLE.replace(_DP_U1, _U_SPARK.format(salt="a"))
-    .replace(_DP_U2, _U_SPARK.format(salt="b"))
-)
+ORACLES, SPARK_SQL = render(TEMPLATES)

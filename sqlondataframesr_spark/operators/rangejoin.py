@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: pair window in seconds
 WINDOW_S = 600
@@ -86,37 +87,23 @@ def evt_pairs_in_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs_in_window(ev, _WINDOW_US)
 
 
-EVT_PAIRS_IN_WINDOW_ORACLE = f"""
+def _pairs_in_window_sql(d: Dialect) -> str:
+    return f"""
 SELECT a.user_id,
        a.event_id AS event_a,
        b.event_id AS event_b,
-       CAST(epoch_us(b.ts) - epoch_us(a.ts) AS BIGINT) AS dt_us
+       CAST({d.fn("epoch_us", "b.ts")} - {d.fn("epoch_us", "a.ts")} AS BIGINT) AS dt_us
 FROM events a
 JOIN events b
   ON a.user_id = b.user_id
  AND a.event_id < b.event_id
- AND abs(epoch_us(b.ts) - epoch_us(a.ts)) <= {_WINDOW_US}
+ AND abs({d.fn("epoch_us", "b.ts")} - {d.fn("epoch_us", "a.ts")}) <= {_WINDOW_US}
 ORDER BY event_a, event_b
 """
 
 
 QUERIES = {"evt_pairs_in_window": evt_pairs_in_window}
-ORACLES = {"evt_pairs_in_window": EVT_PAIRS_IN_WINDOW_ORACLE}
-
-# Spark-SQL N-version form: the naive inequality self-join the
-# bin-and-replicate operator rewrites away — an independent plan that
-# pins the semantics (fine at sf0.01; quadratic per user at scale).
-SPARK_SQL: dict[str, str] = {
-    "evt_pairs_in_window": f"""
-SELECT a.user_id,
-       a.event_id AS event_a,
-       b.event_id AS event_b,
-       unix_micros(b.ts) - unix_micros(a.ts) AS dt_us
-FROM events a
-JOIN events b
-  ON a.user_id = b.user_id
- AND a.event_id < b.event_id
- AND abs(unix_micros(b.ts) - unix_micros(a.ts)) <= {_WINDOW_US}
-ORDER BY event_a, event_b
-""",
+TEMPLATES = {
+    "evt_pairs_in_window": _pairs_in_window_sql,
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.dialect import Dialect, render
+
 SALT_COL = "__salt"
 
 
@@ -100,8 +102,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 QUERIES = {"evt_distinct_users_2phase": evt_distinct_users_2phase}
-ORACLES = {"evt_distinct_users_2phase": EVT_DISTINCT_USERS_2PHASE_ORACLE}
-SPARK_SQL = {"evt_distinct_users_2phase": EVT_DISTINCT_USERS_2PHASE_ORACLE}
 
 
 #: a key is flagged skewed when it holds more than this share of the
@@ -150,34 +150,24 @@ def skew_key_report(spark, sf_dir: str) -> DataFrame:
     )
 
 
-SKEW_KEY_REPORT_ORACLE = f"""
+def _skew_key_report_sql(d: Dialect) -> str:
+    return f"""
 WITH counts AS (
   SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id
 ),
 tot AS (SELECT SUM(cnt) AS total FROM counts)
 SELECT user_id,
        CAST(cnt AS BIGINT) AS cnt,
-       CAST(cnt * 1000000 // total AS BIGINT) AS share_ppm,
-       (cnt * 1000000 // total) > {SKEW_PPM_THRESHOLD} AS skewed
-FROM counts CROSS JOIN tot
-ORDER BY cnt DESC, user_id ASC
-LIMIT {SKEW_TOP_K}
-"""
-
-SKEW_KEY_REPORT_SPARK_SQL = f"""
-WITH counts AS (
-  SELECT user_id, COUNT(*) AS cnt FROM events GROUP BY user_id
-),
-tot AS (SELECT SUM(cnt) AS total FROM counts)
-SELECT user_id,
-       CAST(cnt AS BIGINT) AS cnt,
-       CAST(cnt * 1000000L div total AS BIGINT) AS share_ppm,
-       (cnt * 1000000L div total) > {SKEW_PPM_THRESHOLD} AS skewed
+       CAST(cnt * 1000000 {d.div} total AS BIGINT) AS share_ppm,
+       (cnt * 1000000 {d.div} total) > {SKEW_PPM_THRESHOLD} AS skewed
 FROM counts CROSS JOIN tot
 ORDER BY cnt DESC, user_id ASC
 LIMIT {SKEW_TOP_K}
 """
 
 QUERIES["skew_key_report"] = skew_key_report
-ORACLES["skew_key_report"] = SKEW_KEY_REPORT_ORACLE
-SPARK_SQL["skew_key_report"] = SKEW_KEY_REPORT_SPARK_SQL
+TEMPLATES = {
+    "evt_distinct_users_2phase": EVT_DISTINCT_USERS_2PHASE_ORACLE,
+    "skew_key_report": _skew_key_report_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

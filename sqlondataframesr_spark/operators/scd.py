@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 from .sessionize import user_cap_report, user_cap_report_sql
 
 #: top-k longest-lived closed versions emitted by cdc_scd2_top_versions
@@ -199,23 +200,27 @@ vers AS (
 )
 """
 
-_SUMMARY_BODY = """
+
+def _summary_body(d: Dialect) -> str:
+    return f"""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_versions,
        CAST(SUM(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_current,
        CAST(SUM(CASE WHEN valid_to IS NOT NULL
-                     THEN epoch_us(valid_to) - epoch_us(valid_from)
+                     THEN {d.fn("epoch_us", "valid_to")} - {d.fn("epoch_us", "valid_from")}
                      ELSE 0 END) AS BIGINT) AS total_closed_us,
        CAST(MAX(CASE WHEN valid_to IS NOT NULL
-                     THEN epoch_us(valid_to) - epoch_us(valid_from)
+                     THEN {d.fn("epoch_us", "valid_to")} - {d.fn("epoch_us", "valid_from")}
                 END) AS BIGINT) AS max_closed_us
 FROM vers
 GROUP BY event_type
 ORDER BY event_type
 """
 
-SCD2_SUMMARY_ORACLE = f"WITH {_versions_cte()}{_SUMMARY_BODY}"
+
+def _summary_sql(d: Dialect) -> str:
+    return f"WITH {_versions_cte()}{_summary_body(d)}"
 
 _CAPPED_SRC = f"""capped AS (
     SELECT user_id, ts, event_id, event_type
@@ -226,14 +231,16 @@ _CAPPED_SRC = f"""capped AS (
 ),
 """
 
-SCD2_SUMMARY_CAPPED_ORACLE = (
-    f"WITH {_CAPPED_SRC}{_versions_cte('capped')}{_SUMMARY_BODY}"
-)
 
-SCD2_TOP_ORACLE = f"""
+def _summary_capped_sql(d: Dialect) -> str:
+    return f"WITH {_CAPPED_SRC}{_versions_cte('capped')}{_summary_body(d)}"
+
+
+def _top_sql(d: Dialect) -> str:
+    return f"""
 WITH {_versions_cte()}
 SELECT user_id, event_type, valid_from, valid_to,
-       CAST(epoch_us(valid_to) - epoch_us(valid_from) AS BIGINT)
+       CAST({d.fn("epoch_us", "valid_to")} - {d.fn("epoch_us", "valid_from")} AS BIGINT)
          AS duration_us,
        n_events
 FROM vers
@@ -300,20 +307,13 @@ QUERIES = {
     "cdc_scd2_incremental": cdc_scd2_incremental,
 }
 
-ORACLES = {
-    "cdc_scd2_summary": SCD2_SUMMARY_ORACLE,
-    "cdc_scd2_summary_capped": SCD2_SUMMARY_CAPPED_ORACLE,
-    "cdc_scd2_top_versions": SCD2_TOP_ORACLE,
+TEMPLATES = {
+    "cdc_scd2_summary": _summary_sql,
+    "cdc_scd2_summary_capped": _summary_capped_sql,
+    "cdc_scd2_top_versions": _top_sql,
     # deliberately the FULL-recompute SQL: the check IS incremental≡batch
-    "cdc_scd2_incremental": SCD2_SUMMARY_ORACLE,
+    "cdc_scd2_incremental": _summary_sql,
+    # the cap report is engine-portable SQL - one text, both engines
     "cdc_scd2_cap_report": user_cap_report_sql(SCD2_USER_EVENTS_CAP),
 }
-
-# Spark-SQL duals (N-version: fluent plan vs SQL text on the Spark
-# engine — tests/test_reference_queries.py). One dialect seam: DuckDB
-# ``epoch_us`` is ``unix_micros`` in Spark SQL; everything else in the
-# oracle text is dialect-portable window SQL.
-SPARK_SQL = {
-    name: sql.replace("epoch_us(", "unix_micros(")
-    for name, sql in ORACLES.items()
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -36,7 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 
 #: maximal intra-session gap, seconds. The synthetic events stream has
 #: a ~7 h median inter-event gap per user (sf0.01), so 4 h yields a
@@ -53,7 +54,7 @@ TOP_SESSIONS_K = 15
 #: binds on this corpus and the cap report proves it
 USER_EVENTS_CAP = 80
 
-_VAL_MICRO = "cast(round((floor((value) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) as bigint)"
+_VAL_MICRO = f"cast(round({r6_sql('value')} * 1000000.0) as bigint)"
 
 
 def _assigned(
@@ -165,10 +166,10 @@ def evt_sessionize_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sessions_cte(epoch: str, cap: int | None = None) -> str:
-    """The flagged/assigned/sess CTE prefix, parameterized over the
-    engine's exact epoch-microseconds function (DuckDB ``epoch_us``,
-    Spark ``unix_micros``) and the optional per-user event cap."""
+def _sessions_cte(d: Dialect, cap: int | None = None) -> str:
+    """The flagged/assigned/sess CTE prefix, with the optional per-user
+    event cap."""
+    t_us = d.fn("epoch_us", "ts")
     capped, src = "", "events"
     if cap is not None:
         capped = f"""capped AS (
@@ -183,9 +184,9 @@ def _sessions_cte(epoch: str, cap: int | None = None) -> str:
     return f"""
   WITH {capped}flagged AS (
     SELECT user_id, ts, event_id, event_type,
-           CAST(round((floor((value) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) * 1000000.0) AS BIGINT) AS v_micro,
-           {epoch}(ts) AS t_us,
-           CASE WHEN {epoch}(ts) - lag({epoch}(ts)) OVER
+           CAST(round({r6_sql('value')} * 1000000.0) AS BIGINT) AS v_micro,
+           {t_us} AS t_us,
+           CASE WHEN {t_us} - lag({t_us}) OVER
                      (PARTITION BY user_id ORDER BY ts, event_id) <= {_GAP_US}
                 THEN 0 ELSE 1 END AS new_session
     FROM {src}
@@ -200,29 +201,22 @@ def _sessions_cte(epoch: str, cap: int | None = None) -> str:
     SELECT user_id, session_id,
            MIN(ts) AS session_start, MAX(ts) AS session_end,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           (floor(((MAX(t_us) - MIN(t_us)) / CAST(1000000 AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS duration_s,
-           (floor((SUM(v_micro) / CAST(1000000 AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS total_value
+           {r6_sql('(MAX(t_us) - MIN(t_us)) / CAST(1000000 AS DOUBLE)')} AS duration_s,
+           {r6_sql('SUM(v_micro) / CAST(1000000 AS DOUBLE)')} AS total_value
     FROM assigned GROUP BY user_id, session_id
   )
 """
 
 
-_SESSIONS_DUCK = _sessions_cte("epoch_us")
-_SESSIONS_SPARK = _sessions_cte("unix_micros")
-_SESSIONS_DUCK_CAPPED = _sessions_cte("epoch_us", USER_EVENTS_CAP)
-_SESSIONS_SPARK_CAPPED = _sessions_cte("unix_micros", USER_EVENTS_CAP)
-
-_PROFILE_BODY = """
+_PROFILE_BODY = f"""
   SELECT n_events,
          CAST(COUNT(*) AS BIGINT) AS n_sessions,
-         (floor((SUM(CAST(round(duration_s * 1000000.0) AS BIGINT))
-               / (COUNT(*) * CAST(1000000 AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_duration_s,
+         {r6_sql('''SUM(CAST(round(duration_s * 1000000.0) AS BIGINT))
+               / (COUNT(*) * CAST(1000000 AS DOUBLE))''')} AS avg_duration_s,
          MAX(duration_s) AS max_duration_s
   FROM sess GROUP BY n_events ORDER BY n_events
 """
 
-EVT_SESSIONIZE_PROFILE_ORACLE = _SESSIONS_DUCK + _PROFILE_BODY
-EVT_SESSIONIZE_PROFILE_SPARK_SQL = _SESSIONS_SPARK + _PROFILE_BODY
 
 _TOP_BODY = f"""
   SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
@@ -231,9 +225,6 @@ _TOP_BODY = f"""
   ORDER BY n_events DESC, duration_s DESC, user_id ASC, session_id ASC
   LIMIT {TOP_SESSIONS_K}
 """
-
-EVT_SESSIONIZE_TOP_ORACLE = _SESSIONS_DUCK + _TOP_BODY
-EVT_SESSIONIZE_TOP_SPARK_SQL = _SESSIONS_SPARK + _TOP_BODY
 
 
 def evt_sessionize_profile_capped(
@@ -263,10 +254,6 @@ def evt_sessionize_profile_capped(
         )
         .orderBy("n_events")
     )
-
-
-EVT_SESSIONIZE_PROFILE_CAPPED_ORACLE = _SESSIONS_DUCK_CAPPED + _PROFILE_BODY
-EVT_SESSIONIZE_PROFILE_CAPPED_SPARK_SQL = _SESSIONS_SPARK_CAPPED + _PROFILE_BODY
 
 
 def user_cap_report(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
@@ -393,9 +380,6 @@ _CONCURRENT_BODY = """
   ORDER BY hr
 """
 
-EVT_CONCURRENT_SESSIONS_ORACLE = _SESSIONS_DUCK + _CONCURRENT_BODY
-EVT_CONCURRENT_SESSIONS_SPARK_SQL = _SESSIONS_SPARK + _CONCURRENT_BODY
-
 
 EVT_SESSIONIZE_CAP_REPORT_SQL = user_cap_report_sql(USER_EVENTS_CAP)
 
@@ -448,7 +432,8 @@ def evt_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FUNNEL_BODY = """
+def _funnel_sql(d: Dialect) -> str:
+    return f"""
   , f AS (
     SELECT user_id, session_id,
            MIN(CASE WHEN event_type = 'click' THEN t_us END) AS c_us,
@@ -464,13 +449,10 @@ _FUNNEL_BODY = """
     FROM f
   )
   SELECT n_sessions, n_with_click, n_converted,
-         CAST(COALESCE(n_converted * 1000000 {DIV} NULLIF(n_with_click, 0), 0)
+         CAST(COALESCE(n_converted * 1000000 {d.div} NULLIF(n_with_click, 0), 0)
               AS BIGINT) AS cvr_ppm
   FROM agg
 """
-
-EVT_SESSION_FUNNEL_ORACLE = _SESSIONS_DUCK + _FUNNEL_BODY.format(DIV="//")
-EVT_SESSION_FUNNEL_SPARK_SQL = _SESSIONS_SPARK + _FUNNEL_BODY.format(DIV="div")
 
 
 #: the strict-order funnel stages (each must occur AT or AFTER the
@@ -547,9 +529,6 @@ _STAGES_BODY = """
          CAST((SELECT COUNT(*) FROM s3) AS BIGINT) AS reached_purchase
 """
 
-EVT_SESSION_FUNNEL_STAGES_ORACLE = _SESSIONS_DUCK + _STAGES_BODY
-EVT_SESSION_FUNNEL_STAGES_SPARK_SQL = _SESSIONS_SPARK + _STAGES_BODY
-
 
 def evt_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time from a session's first click to its first purchase at or
@@ -591,7 +570,8 @@ def evt_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LATENCY_BODY = """
+def _latency_sql(d: Dialect) -> str:
+    return f"""
   , clicks AS (
     SELECT user_id, session_id,
            MIN(CASE WHEN event_type = 'click' THEN t_us END) AS c_us
@@ -606,19 +586,12 @@ _LATENCY_BODY = """
     GROUP BY a.user_id, a.session_id
   )
   SELECT CAST(COUNT(*) AS BIGINT) AS n_converted,
-         (floor((SUM(lat_us) / (COUNT(*) * CAST(1000000 AS DOUBLE))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))
+         {r6_sql('SUM(lat_us) / (COUNT(*) * CAST(1000000 AS DOUBLE))')}
            AS mean_latency_s,
-         (floor(({P50} / CAST(1000000 AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p50_s,
-         (floor(({P90} / CAST(1000000 AS DOUBLE)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p90_s
+         {r6_sql(d.quantile_cont('lat_us', 0.5) + ' / CAST(1000000 AS DOUBLE)')} AS p50_s,
+         {r6_sql(d.quantile_cont('lat_us', 0.9) + ' / CAST(1000000 AS DOUBLE)')} AS p90_s
   FROM lat
 """
-
-EVT_CONVERSION_LATENCY_ORACLE = _SESSIONS_DUCK + _LATENCY_BODY.format(
-    P50="quantile_cont(lat_us, 0.5)", P90="quantile_cont(lat_us, 0.9)"
-)
-EVT_CONVERSION_LATENCY_SPARK_SQL = _SESSIONS_SPARK + _LATENCY_BODY.format(
-    P50="percentile(lat_us, 0.5D)", P90="percentile(lat_us, 0.9D)"
-)
 
 
 QUERIES = {
@@ -632,25 +605,15 @@ QUERIES = {
     "evt_conversion_latency": evt_conversion_latency,
 }
 
-ORACLES = {
-    "evt_sessionize_profile": EVT_SESSIONIZE_PROFILE_ORACLE,
-    "evt_sessionize_profile_capped": EVT_SESSIONIZE_PROFILE_CAPPED_ORACLE,
-    "evt_sessionize_cap_report": EVT_SESSIONIZE_CAP_REPORT_SQL,
-    "evt_concurrent_sessions": EVT_CONCURRENT_SESSIONS_ORACLE,
-    "evt_sessionize_top": EVT_SESSIONIZE_TOP_ORACLE,
-    "evt_session_funnel": EVT_SESSION_FUNNEL_ORACLE,
-    "evt_session_funnel_stages": EVT_SESSION_FUNNEL_STAGES_ORACLE,
-    "evt_conversion_latency": EVT_CONVERSION_LATENCY_ORACLE,
-}
-
-SPARK_SQL = {
-    "evt_sessionize_profile": EVT_SESSIONIZE_PROFILE_SPARK_SQL,
-    "evt_sessionize_profile_capped": EVT_SESSIONIZE_PROFILE_CAPPED_SPARK_SQL,
+TEMPLATES = {
     # the cap report is engine-portable SQL - one text, both engines
     "evt_sessionize_cap_report": EVT_SESSIONIZE_CAP_REPORT_SQL,
-    "evt_concurrent_sessions": EVT_CONCURRENT_SESSIONS_SPARK_SQL,
-    "evt_sessionize_top": EVT_SESSIONIZE_TOP_SPARK_SQL,
-    "evt_session_funnel": EVT_SESSION_FUNNEL_SPARK_SQL,
-    "evt_session_funnel_stages": EVT_SESSION_FUNNEL_STAGES_SPARK_SQL,
-    "evt_conversion_latency": EVT_CONVERSION_LATENCY_SPARK_SQL,
+    "evt_sessionize_profile": lambda d: _sessions_cte(d) + _PROFILE_BODY,
+    "evt_sessionize_profile_capped": lambda d: _sessions_cte(d, USER_EVENTS_CAP) + _PROFILE_BODY,
+    "evt_concurrent_sessions": lambda d: _sessions_cte(d) + _CONCURRENT_BODY,
+    "evt_sessionize_top": lambda d: _sessions_cte(d) + _TOP_BODY,
+    "evt_session_funnel": lambda d: _sessions_cte(d) + _funnel_sql(d),
+    "evt_session_funnel_stages": lambda d: _sessions_cte(d) + _STAGES_BODY,
+    "evt_conversion_latency": lambda d: _sessions_cte(d) + _latency_sql(d),
 }
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import SPARK, Dialect, render
 from ..materialize import materialize
 
 #: KMV sketch size (number of minimum hash values retained)
@@ -75,8 +76,9 @@ CMS_WIDTH = 1024
 #: how many exact-top terms the CMS report probes
 CMS_TOP = 20
 
-_H_SPARK = "cast(conv(substring(md5(text), 1, 13), 16, 10) as bigint)"
-_H_DUCK = "('0x' || substr(md5(text), 1, 13))::BIGINT"
+def _h_sql(d: Dialect, col: str = "text") -> str:
+    """The 52-bit md5 hash of ``col`` (13 hex chars)."""
+    return d.hex_bigint(f"substr(md5({col}), 1, 13)")
 
 
 def _kmv_minset(distinct_h: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -123,7 +125,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     distinct_h = (
-        docs.select("source", F.expr(_H_SPARK).alias("h"))
+        docs.select("source", F.expr(_h_sql(SPARK)).alias("h"))
         .groupBy("source", "h")
         .agg(F.count(F.lit(1)).alias("_"))
         .drop("_")
@@ -166,7 +168,7 @@ def sketch_kmv_merge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: two rows (method in {'direct','merged'}) with identical
     (n_sk, h_k, kmv_estimate), ordered by method."""
     docs = load_table(spark, sf_dir, "documents")
-    h_frame = docs.select("lang", F.expr(_H_SPARK).alias("h"))
+    h_frame = docs.select("lang", F.expr(_h_sql(SPARK)).alias("h"))
 
     # per-lang sketches (as a 1000-tenant rollup would materialize)
     per_lang_h = h_frame.groupBy("lang", "h").agg(
@@ -337,7 +339,8 @@ def sketch_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SKETCH_CMS_JOIN_SIZE_ORACLE = f"""
+def _cms_join_size_sql(d: Dialect) -> str:
+    return f"""
 WITH cnt AS (
     SELECT event_type, user_id, CAST(COUNT(*) AS BIGINT) AS f
     FROM events
@@ -346,10 +349,10 @@ WITH cnt AS (
 ),
 stream AS (
     SELECT c.event_type, j.j, c.user_id, c.f
-    FROM cnt c CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+    FROM cnt c CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 ),
 cells AS (
-    SELECT event_type, j, {{BUCKET}} AS bucket,
+    SELECT event_type, j, {_bucket_sql(d, d.cast_str('user_id'))} AS bucket,
            CAST(SUM(f) AS BIGINT) AS cell
     FROM stream GROUP BY 1, 2, 3
 ),
@@ -372,23 +375,22 @@ ex AS (
 SELECT ex.exact_join_size, est.cms_join_size,
        est.cms_join_size - ex.exact_join_size AS overcount,
        (est.cms_join_size - ex.exact_join_size) * 1000000
-         {{DIV}} nullif(ex.exact_join_size, 0) AS overcount_ppm
+         {d.div} nullif(ex.exact_join_size, 0) AS overcount_ppm
 FROM ex CROSS JOIN est
 """
 
-_JS_BUCKET_DUCK = (
-    "(('0x' || substr(md5(CAST(j AS VARCHAR) || ':'"
-    f" || CAST(user_id AS VARCHAR)), 1, 13))::BIGINT % {CMS_WIDTH})"
-)
-_JS_BUCKET_SPARK = (
-    "pmod(cast(conv(substring(md5(concat(cast(j as string), ':',"
-    f" cast(user_id as string))), 1, 13), 16, 10) as bigint), {CMS_WIDTH})"
-)
+
+def _bucket_sql(d: Dialect, key: str) -> str:
+    """CMS row ``j``'s bucket of ``key`` (non-negative hash, so ``%``
+    is ``pmod``)."""
+    salted = f"{d.cast_str('j')} || ':' || {key}"
+    return f"({_h_sql(d, salted)} % {CMS_WIDTH})"
 
 
-SKETCH_KMV_DISTINCT_ORACLE = f"""
+def _kmv_distinct_sql(d: Dialect) -> str:
+    return f"""
 WITH h AS (
-    SELECT DISTINCT source, {_H_DUCK} AS h FROM documents
+    SELECT DISTINCT source, {_h_sql(d)} AS h FROM documents
 ),
 ranked AS (
     SELECT source, h,
@@ -406,17 +408,19 @@ ex AS (
 est AS (
     SELECT s.source, e.exact_distinct, s.n_sk,
            CAST(CASE WHEN s.n_sk < {KMV_K} THEN s.n_sk
-                ELSE {_KMV_FULL_EST} // s.h_k END AS BIGINT) AS kmv_estimate
+                ELSE {_KMV_FULL_EST} {d.div} s.h_k END AS BIGINT) AS kmv_estimate
     FROM sk s JOIN ex e USING (source)
 )
 SELECT source, exact_distinct, n_sk, kmv_estimate,
        CAST((kmv_estimate - exact_distinct) * 1000000
-            // nullif(exact_distinct, 0) AS BIGINT) AS err_ppm
+            {d.div} nullif(exact_distinct, 0) AS BIGINT) AS err_ppm
 FROM est ORDER BY source
 """
 
-SKETCH_KMV_MERGE_ORACLE = f"""
-WITH h AS (SELECT lang, {_H_DUCK} AS h FROM documents),
+
+def _kmv_merge_sql(d: Dialect) -> str:
+    return f"""
+WITH h AS (SELECT lang, {_h_sql(d)} AS h FROM documents),
 lang_h AS (SELECT DISTINCT lang, h FROM h),
 lang_ranked AS (
     SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
@@ -439,25 +443,27 @@ sk AS (
 )
 SELECT method, n_sk, h_k,
        CAST(CASE WHEN n_sk < {KMV_K} THEN n_sk
-            ELSE {_KMV_FULL_EST} // h_k END AS BIGINT) AS kmv_estimate
+            ELSE {_KMV_FULL_EST} {d.div} h_k END AS BIGINT) AS kmv_estimate
 FROM sk ORDER BY method
 """
 
-_CMS_BUCKET_DUCK = (
-    "(('0x' || substr(md5(CAST(j AS VARCHAR) || ':' || term), 1, 13))"
-    f"::BIGINT % {CMS_WIDTH})"
-)
 
-SKETCH_CMS_ORACLE = f"""
+_TOP_TERMS = """SELECT term, exact_cnt,
+           row_number() OVER (ORDER BY exact_cnt DESC, term) AS rnk
+    FROM exact"""
+
+
+def _cms_freq_sql(d: Dialect) -> str:
+    return f"""
 WITH toks AS (
-    SELECT unnest(string_split(text, ' ')) AS term FROM documents
+    SELECT {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents
 ),
 stream AS (
     SELECT t.term, j.j
-    FROM toks t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+    FROM toks t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 ),
 cms AS (
-    SELECT j, {_CMS_BUCKET_DUCK} AS bucket,
+    SELECT j, {_bucket_sql(d, 'term')} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS cell_cnt
     FROM stream GROUP BY 1, 2
 ),
@@ -466,14 +472,12 @@ exact AS (
     FROM toks GROUP BY term
 ),
 top AS (
-    SELECT term, exact_cnt,
-           row_number() OVER (ORDER BY exact_cnt DESC, term) AS rnk
-    FROM exact QUALIFY rnk <= {CMS_TOP}
+    {d.qualify(_TOP_TERMS, f"rnk <= {CMS_TOP}")}
 ),
 probes AS (
     SELECT t.term, t.exact_cnt, t.rnk, j.j,
-           {_CMS_BUCKET_DUCK} AS bucket
-    FROM top t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+           {_bucket_sql(d, 'term')} AS bucket
+    FROM top t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 )
 SELECT p.term, p.exact_cnt,
        MIN(c.cell_cnt) AS cms_cnt,
@@ -483,10 +487,6 @@ FROM probes p JOIN cms c ON p.j = c.j AND p.bucket = c.bucket
 GROUP BY p.term, p.exact_cnt, p.rnk
 ORDER BY p.rnk
 """
-
-#: term-level hash (the vocab-sketch variants key on words, not docs)
-_HT_SPARK = "cast(conv(substring(md5(term), 1, 13), 16, 10) as bigint)"
-_HT_DUCK = "('0x' || substr(md5(term), 1, 13))::BIGINT"
 
 
 def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,7 +526,7 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and minset feeds srcs/side_a/side_b: pin both, or the corpus
     # tokenize+hash pass re-runs per consumer (~8 scans unpinned)
     dh = (
-        terms.select("source", F.expr(_HT_SPARK).alias("h"))
+        terms.select("source", F.expr(_h_sql(SPARK, "term")).alias("h"))
         .groupBy("source", "h")
         .agg(F.count(F.lit(1)).alias("_"))
         .drop("_")
@@ -610,14 +610,15 @@ def sketch_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SKETCH_KMV_JACCARD_ORACLE = f"""
+def _kmv_jaccard_sql(d: Dialect) -> str:
+    return f"""
 WITH terms AS (
     SELECT source,
-           unnest(list_filter(string_split(text, ' '), x -> x != ''))
+           {d.fn('unnest', d.fn('list_filter', d.fn('string_split', 'text', "' '"), "x -> x != ''"))}
              AS term
     FROM documents
 ),
-dh AS (SELECT DISTINCT source, {_HT_DUCK} AS h FROM terms),
+dh AS (SELECT DISTINCT source, {_h_sql(d, 'term')} AS h FROM terms),
 ranked AS (
     SELECT source, h,
            row_number() OVER (PARTITION BY source ORDER BY h) AS rn
@@ -657,17 +658,17 @@ ex_inter AS (
 )
 SELECT u.sa AS src_a, u.sb AS src_b, u.n_sk AS n_union_sk,
        CAST(CASE WHEN u.n_sk < {KMV_K} THEN u.n_sk
-            ELSE {_KMV_FULL_EST} // u.h_k END AS BIGINT)
+            ELSE {_KMV_FULL_EST} {d.div} u.h_k END AS BIGINT)
          AS union_estimate,
        u.inter_sk AS inter_in_sketch,
-       u.inter_sk * 1000000 // u.n_sk AS jaccard_est_ppm,
+       u.inter_sk * 1000000 {d.div} u.n_sk AS jaccard_est_ppm,
        COALESCE(i.n_inter, 0) AS exact_inter,
        a.n + b.n - COALESCE(i.n_inter, 0) AS exact_union,
        COALESCE(i.n_inter, 0) * 1000000
-         // (a.n + b.n - COALESCE(i.n_inter, 0)) AS exact_jaccard_ppm,
-       u.inter_sk * 1000000 // u.n_sk
+         {d.div} (a.n + b.n - COALESCE(i.n_inter, 0)) AS exact_jaccard_ppm,
+       u.inter_sk * 1000000 {d.div} u.n_sk
          - COALESCE(i.n_inter, 0) * 1000000
-           // (a.n + b.n - COALESCE(i.n_inter, 0)) AS err_ppm
+           {d.div} (a.n + b.n - COALESCE(i.n_inter, 0)) AS err_ppm
 FROM usk u
 JOIN sizes a ON a.source = u.sa
 JOIN sizes b ON b.source = u.sb
@@ -684,82 +685,11 @@ QUERIES = {
     "sketch_cms_freq_report": sketch_cms_freq_report,
 }
 
-ORACLES = {
-    "sketch_kmv_distinct": SKETCH_KMV_DISTINCT_ORACLE,
-    "sketch_kmv_jaccard": SKETCH_KMV_JACCARD_ORACLE,
-    "sketch_cms_join_size": SKETCH_CMS_JOIN_SIZE_ORACLE.format(
-        BUCKET=_JS_BUCKET_DUCK, DIV="//"
-    ),
-    "sketch_kmv_merge_check": SKETCH_KMV_MERGE_ORACLE,
-    "sketch_cms_freq_report": SKETCH_CMS_ORACLE,
+TEMPLATES = {
+    "sketch_kmv_distinct": _kmv_distinct_sql,
+    "sketch_kmv_jaccard": _kmv_jaccard_sql,
+    "sketch_cms_join_size": _cms_join_size_sql,
+    "sketch_kmv_merge_check": _kmv_merge_sql,
+    "sketch_cms_freq_report": _cms_freq_sql,
 }
-
-# Spark-SQL duals. Dialect seams: hex-literal cast -> conv(,16,10),
-# ``//`` -> ``div``, ``%`` on the bucket -> pmod (h >= 0 so they
-# agree; spelled pmod for clarity), unnest/QUALIFY -> explode/filter.
-_H_SQL = "cast(conv(substring(md5(text), 1, 13), 16, 10) as bigint)"
-_CMS_BUCKET_SQL = (
-    "pmod(cast(conv(substring(md5(concat(cast(j as string), ':', term)),"
-    f" 1, 13), 16, 10) as bigint), {CMS_WIDTH})"
-)
-
-SPARK_SQL = {
-    "sketch_kmv_distinct": SKETCH_KMV_DISTINCT_ORACLE.replace(
-        _H_DUCK, _H_SQL
-    ).replace(" // ", " div "),
-    # extra seams for the vocab sketch: list tokenization + unnest
-    "sketch_kmv_jaccard": SKETCH_KMV_JACCARD_ORACLE.replace(
-        _HT_DUCK, _HT_SPARK
-    )
-    .replace(
-        "unnest(list_filter(string_split(text, ' '), x -> x != ''))",
-        "explode(filter(split(text, ' '), x -> x != ''))",
-    )
-    .replace(" // ", " div "),
-    "sketch_kmv_merge_check": SKETCH_KMV_MERGE_ORACLE.replace(
-        _H_DUCK, _H_SQL
-    ).replace(" // ", " div "),
-    "sketch_cms_join_size": SKETCH_CMS_JOIN_SIZE_ORACLE.format(
-        BUCKET=_JS_BUCKET_SPARK, DIV="div"
-    ).replace(
-        "(SELECT unnest([0, 1, 2, 3]) AS j)",
-        "(SELECT explode(array(0, 1, 2, 3)) AS j)",
-    ),
-    "sketch_cms_freq_report": f"""
-WITH toks AS (
-    SELECT explode(split(text, ' ')) AS term FROM documents
-),
-stream AS (
-    SELECT t.term, j.j
-    FROM toks t CROSS JOIN (SELECT explode(array(0, 1, 2, 3)) AS j) j
-),
-cms AS (
-    SELECT j, {_CMS_BUCKET_SQL} AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS cell_cnt
-    FROM stream GROUP BY 1, 2
-),
-exact AS (
-    SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_cnt
-    FROM toks GROUP BY term
-),
-top AS (
-    SELECT * FROM (
-        SELECT term, exact_cnt,
-               row_number() OVER (ORDER BY exact_cnt DESC, term) AS rnk
-        FROM exact
-    ) WHERE rnk <= {CMS_TOP}
-),
-probes AS (
-    SELECT t.term, t.exact_cnt, t.rnk, j.j,
-           {_CMS_BUCKET_SQL} AS bucket
-    FROM top t CROSS JOIN (SELECT explode(array(0, 1, 2, 3)) AS j) j
-)
-SELECT p.term, p.exact_cnt,
-       MIN(c.cell_cnt) AS cms_cnt,
-       MIN(c.cell_cnt) - p.exact_cnt AS overcount,
-       p.rnk
-FROM probes p JOIN cms c ON p.j = c.j AND p.bucket = c.bucket
-GROUP BY p.term, p.exact_cnt, p.rnk
-ORDER BY p.rnk
-""",
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

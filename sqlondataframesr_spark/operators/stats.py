@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6_sql
 from ..materialize import materialize
 
 #: MAD multiplier for spike flagging (|x - med| > K * MAD); 2 rather
@@ -325,7 +327,9 @@ FROM stats
 ORDER BY n_name
 """
 
-AB_ZTEST_ORACLE = f"""
+
+def _ztest_sql(d: Dialect) -> str:
+    return f"""
 WITH per_user AS (
     SELECT user_id,
            MAX(CASE WHEN event_type = 'purchase' AND value >= {CONV_VALUE_MIN}
@@ -346,10 +350,10 @@ row_agg AS (
     FROM per_user
 )
 SELECT n_control, conv_control, n_treat, conv_treat,
-       conv_control * 1000000 // nullif(n_control, 0) AS conv_control_ppm,
-       conv_treat * 1000000 // nullif(n_treat, 0) AS conv_treat_ppm,
-       conv_treat * 1000000 // nullif(n_treat, 0)
-         - conv_control * 1000000 // nullif(n_control, 0) AS lift_ppm,
+       conv_control * 1000000 {d.div} nullif(n_control, 0) AS conv_control_ppm,
+       conv_treat * 1000000 {d.div} nullif(n_treat, 0) AS conv_treat_ppm,
+       conv_treat * 1000000 {d.div} nullif(n_treat, 0)
+         - conv_control * 1000000 {d.div} nullif(n_control, 0) AS lift_ppm,
        (CAST(conv_treat AS DOUBLE) / CAST(nullif(n_treat, 0) AS DOUBLE)
         - CAST(conv_control AS DOUBLE) / CAST(nullif(n_control, 0) AS DOUBLE))
         / nullif(sqrt((CAST(conv_control + conv_treat AS DOUBLE)
@@ -361,7 +365,9 @@ SELECT n_control, conv_control, n_treat, conv_treat,
 FROM row_agg
 """
 
-MAD_SPIKES_ORACLE = f"""
+
+def _mad_spikes_sql(d: Dialect) -> str:
+    return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -370,7 +376,7 @@ WITH daily AS (
     GROUP BY CAST(ts AS DATE)
 ),
 nk AS (
-    SELECT (CAST(COUNT(*) AS BIGINT) + 1) // 2 AS k FROM daily
+    SELECT (CAST(COUNT(*) AS BIGINT) + 1) {d.div} 2 AS k FROM daily
 ),
 med AS (
     SELECT cents AS med_cents
@@ -397,7 +403,9 @@ WHERE w.abs_dev > {MAD_K} * mad.mad_cents
 ORDER BY w.day
 """
 
-CUSUM_ORACLE = """
+
+def _cusum_sql(d: Dialect) -> str:
+    return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
@@ -406,7 +414,7 @@ WITH daily AS (
     GROUP BY CAST(ts AS DATE)
 ),
 nk AS (
-    SELECT (CAST(COUNT(*) AS BIGINT) + 1) // 2 AS k FROM daily
+    SELECT (CAST(COUNT(*) AS BIGINT) + 1) {d.div} 2 AS k FROM daily
 ),
 med AS (
     SELECT cents AS med_cents
@@ -540,7 +548,8 @@ def ml_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_THEILSEN_BODY = """
+def _theilsen_sql(d: Dialect) -> str:
+    return f"""
 WITH monthly AS (
     SELECT n.n_name,
            CAST((year(o.o_orderdate) - 1995) * 12
@@ -553,7 +562,7 @@ WITH monthly AS (
 ),
 pairs AS (
     SELECT a.n_name,
-           (b.y - a.y) * 1000000 {DIV} (b.x - a.x) AS slope_micro
+           (b.y - a.y) * 1000000 {d.div} (b.x - a.x) AS slope_micro
     FROM monthly a JOIN monthly b
       ON a.n_name = b.n_name AND a.x < b.x
 ),
@@ -567,7 +576,7 @@ ranked AS (
 med AS (
     SELECT n_name, CAST(cnt AS BIGINT) AS n_pairs,
            CAST(slope_micro AS BIGINT) AS theil_slope_micro
-    FROM ranked WHERE rn = (cnt + 1) {DIV} 2
+    FROM ranked WHERE rn = (cnt + 1) {d.div} 2
 ),
 months AS (
     SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_months
@@ -578,13 +587,10 @@ FROM months m JOIN med d ON m.n_name = d.n_name
 ORDER BY m.n_name
 """
 
-ML_THEILSEN_ORACLE = _THEILSEN_BODY.format(DIV="//")
-ML_THEILSEN_SPARK_SQL = _THEILSEN_BODY.format(DIV="div")
 
-
-#: weekend = ISO weekday in {Sat, Sun}; spelled per dialect below
-_WKEND_SPARK = "weekday(ts) >= 5"
-_WKEND_DUCK = "isodow(ts) >= 6"
+def _wkend_sql(d: Dialect) -> str:
+    """Weekend = ISO weekday in {Sat, Sun}."""
+    return f"{d.isodow('ts')} >= 6"
 
 
 def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -612,7 +618,7 @@ def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_v = (
         ev.selectExpr(
             "cast(round(value * 100) as bigint) as cents",
-            f"IF({_WKEND_SPARK}, 1L, 0L) as is_b",
+            f"IF({_wkend_sql(SPARK)}, 1L, 0L) as is_b",
         )
         .groupBy("cents")
         .agg(
@@ -652,11 +658,12 @@ def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KS_BODY = """
+def _ks_sql(d: Dialect) -> str:
+    return f"""
 WITH per_v AS (
     SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-           CAST(SUM(CASE WHEN {WKEND} THEN 0 ELSE 1 END) AS BIGINT) AS na,
-           CAST(SUM(CASE WHEN {WKEND} THEN 1 ELSE 0 END) AS BIGINT) AS nb
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 0 ELSE 1 END) AS BIGINT) AS na,
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 1 ELSE 0 END) AS BIGINT) AS nb
     FROM events WHERE event_type = 'purchase'
     GROUP BY 1
 ),
@@ -678,12 +685,9 @@ agg AS (
     FROM cum
 )
 SELECT n_a, n_b, n_points, d_num,
-       d_num {DIV} nullif((n_a * n_b) {DIV} 1000000, 0) AS ks_ppm
+       d_num {d.div} nullif((n_a * n_b) {d.div} 1000000, 0) AS ks_ppm
 FROM agg
 """
-
-DQ_KS_ORACLE = _KS_BODY.format(WKEND=_WKEND_DUCK, DIV="//")
-DQ_KS_SPARK_SQL = _KS_BODY.format(WKEND=_WKEND_SPARK, DIV="div")
 
 
 def ab_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,7 +711,7 @@ def ab_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_v = (
         ev.selectExpr(
             "cast(round(value * 100) as bigint) as cents",
-            f"IF({_WKEND_SPARK}, 1L, 0L) as is_b",
+            f"IF({_wkend_sql(SPARK)}, 1L, 0L) as is_b",
         )
         .groupBy("cents")
         .agg(
@@ -738,11 +742,12 @@ def ab_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MWU_BODY = """
+def _mwu_sql(d: Dialect) -> str:
+    return f"""
 WITH per_v AS (
     SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-           CAST(SUM(CASE WHEN {WKEND} THEN 0 ELSE 1 END) AS BIGINT) AS na,
-           CAST(SUM(CASE WHEN {WKEND} THEN 1 ELSE 0 END) AS BIGINT) AS nb
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 0 ELSE 1 END) AS BIGINT) AS na,
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 1 ELSE 0 END) AS BIGINT) AS nb
     FROM events WHERE event_type = 'purchase'
     GROUP BY 1
 ),
@@ -764,12 +769,9 @@ SELECT n_a, n_b,
        r2_a - n_a * (n_a + 1) AS u2_a,
        r2_b - n_b * (n_b + 1) AS u2_b,
        (r2_a - n_a * (n_a + 1))
-         {DIV} nullif((2 * n_a * n_b) {DIV} 1000000, 0) AS auc_ppm
+         {d.div} nullif((2 * n_a * n_b) {d.div} 1000000, 0) AS auc_ppm
 FROM agg
 """
-
-AB_MWU_ORACLE = _MWU_BODY.format(WKEND=_WKEND_DUCK, DIV="//")
-AB_MWU_SPARK_SQL = _MWU_BODY.format(WKEND=_WKEND_SPARK, DIV="div")
 
 
 def evt_chisq_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -813,9 +815,10 @@ def evt_chisq_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHISQ_BODY = """
+def _chisq_sql(d: Dialect) -> str:
+    return f"""
 WITH cells AS (
-    SELECT event_type, CAST({DOW} AS INT) AS dow,
+    SELECT event_type, CAST({d.isodow('ts')} - 1 AS INT) AS dow,
            CAST(COUNT(*) AS BIGINT) AS o
     FROM events GROUP BY 1, 2
 ),
@@ -827,14 +830,11 @@ marg AS (
     FROM cells
 )
 SELECT event_type, dow, o,
-       CAST((rt * ct) {DIV} t AS BIGINT) AS e,
-       CAST((o - (rt * ct) {DIV} t) * (o - (rt * ct) {DIV} t) * 1000
-            {DIV} nullif((rt * ct) {DIV} t, 0) AS BIGINT) AS chi_milli
+       CAST((rt * ct) {d.div} t AS BIGINT) AS e,
+       CAST((o - (rt * ct) {d.div} t) * (o - (rt * ct) {d.div} t) * 1000
+            {d.div} nullif((rt * ct) {d.div} t, 0) AS BIGINT) AS chi_milli
 FROM marg ORDER BY event_type, dow
 """
-
-EVT_CHISQ_ORACLE = _CHISQ_BODY.format(DOW="isodow(ts) - 1", DIV="//")
-EVT_CHISQ_SPARK_SQL = _CHISQ_BODY.format(DOW="weekday(ts)", DIV="div")
 
 
 #: conformal split buckets out of 10: [0,6) train, [6,8) cal, [8,10) test
@@ -842,14 +842,11 @@ _CONF_TRAIN_HI = 6
 _CONF_CAL_HI = 8
 #: conformal miscoverage alpha = 0.1 -> the ceil(0.9(m+1)) calibration rank
 
-_CONF_BUCKET_DUCK = (
-    "(('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || ':'"
-    " || CAST(l_linenumber AS VARCHAR)), 1, 8))::BIGINT % 10)"
-)
-_CONF_BUCKET_SPARK = (
-    "pmod(cast(conv(substring(md5(concat(cast(l_orderkey as string), ':',"
-    " cast(l_linenumber as string))), 1, 8), 16, 10) as bigint), 10)"
-)
+def _conf_bucket_sql(d: Dialect) -> str:
+    """The conformal split bucket of a line item out of 10
+    (non-negative hash: ``%`` is ``pmod``)."""
+    key = f"{d.cast_str('l_orderkey')} || ':' || {d.cast_str('l_linenumber')}"
+    return f"({d.hex_bigint(f'substr(md5({key}), 1, 8)')} % 10)"
 
 
 def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -881,7 +878,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     q90_resid_usd, n_test, covered, coverage_ppm).
     """
     li = load_table(spark, sf_dir, "lineitem").selectExpr(
-        f"{_CONF_BUCKET_SPARK} as b",
+        f"{_conf_bucket_sql(SPARK)} as b",
         "cast(round(l_quantity) as bigint) as x",
         "cast(round(l_extendedprice * 100) as bigint) as y",
     )
@@ -975,8 +972,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(test_cov))
         .selectExpr(
             "n_train",
-            "(floor((slope) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) as slope",
-            "(floor((intercept) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) as intercept",
+            f"{r6_sql('slope')} as slope",
+            f"{r6_sql('intercept')} as intercept",
             "m as n_cal",
             "q90_resid_usd",
             "n_test",
@@ -986,9 +983,10 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONF_BODY = """
+def _conformal_sql(d: Dialect) -> str:
+    return f"""
 WITH li AS (
-    SELECT {BUCKET} AS b,
+    SELECT {_conf_bucket_sql(d)} AS b,
            CAST(round(l_quantity) AS BIGINT) AS x,
            CAST(round(l_extendedprice * 100) AS BIGINT) AS y
     FROM lineitem
@@ -998,7 +996,7 @@ tr AS (
            CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
            CAST(SUM(x * y) AS BIGINT) AS sxy,
            CAST(SUM(x * x) AS BIGINT) AS sxx
-    FROM li WHERE b < {TRAIN_HI}
+    FROM li WHERE b < {_CONF_TRAIN_HI}
 ),
 fit1 AS (
     SELECT n_train, sx, sy,
@@ -1015,13 +1013,13 @@ fit AS (
     FROM fit1
 ),
 hist AS (
-    SELECT CASE WHEN li.b < {CAL_HI} THEN 'cal' ELSE 'test' END AS split,
+    SELECT CASE WHEN li.b < {_CONF_CAL_HI} THEN 'cal' ELSE 'test' END AS split,
            CAST(round(abs(CAST(li.y AS DOUBLE)
                 - (f.slope * CAST(li.x AS DOUBLE) + f.intercept)) / 100.0)
                 AS BIGINT) AS r_usd,
            f.n_train, f.slope, f.intercept,
            CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM li CROSS JOIN fit f WHERE li.b >= {TRAIN_HI}
+    FROM li CROSS JOIN fit f WHERE li.b >= {_CONF_TRAIN_HI}
     GROUP BY 1, 2, 3, 4, 5
 ),
 cal_cum AS (
@@ -1032,7 +1030,7 @@ cal_cum AS (
 ),
 q AS (
     SELECT m,
-           MIN(CASE WHEN cum >= least((9 * (m + 1) + 9) {DIV} 10, m)
+           MIN(CASE WHEN cum >= least((9 * (m + 1) + 9) {d.div} 10, m)
                THEN r_usd END) AS q90_resid_usd
     FROM cal_cum GROUP BY m
 ),
@@ -1047,29 +1045,15 @@ cov AS (
     FROM hist h CROSS JOIN q WHERE h.split = 'test'
 )
 SELECT t.n_train,
-       (floor((t.slope) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS slope,
-       (floor((t.intercept) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS intercept,
+       {r6_sql('t.slope')} AS slope,
+       {r6_sql('t.intercept')} AS intercept,
        CAST(q.m AS BIGINT) AS n_cal,
        q.q90_resid_usd,
        t.n_test,
        c.covered,
-       c.covered * 1000000 {DIV} nullif(t.n_test, 0) AS coverage_ppm
+       c.covered * 1000000 {d.div} nullif(t.n_test, 0) AS coverage_ppm
 FROM test t CROSS JOIN q CROSS JOIN cov c
 """
-
-ML_CONFORMAL_ORACLE = _CONF_BODY.format(
-    BUCKET=_CONF_BUCKET_DUCK,
-    TRAIN_HI=_CONF_TRAIN_HI,
-    CAL_HI=_CONF_CAL_HI,
-    DIV="//",
-)
-ML_CONFORMAL_SPARK_SQL = _CONF_BODY.format(
-    BUCKET=_CONF_BUCKET_SPARK,
-    TRAIN_HI=_CONF_TRAIN_HI,
-    CAL_HI=_CONF_CAL_HI,
-    DIV="div",
-)
-
 
 QUERIES = {
     "ml_conformal_interval": ml_conformal_interval,
@@ -1084,35 +1068,19 @@ QUERIES = {
     "evt_chisq_type_weekday": evt_chisq_type_weekday,
 }
 
-ORACLES = {
-    "ml_conformal_interval": ML_CONFORMAL_ORACLE,
+TEMPLATES = {
+    "ml_conformal_interval": _conformal_sql,
+    "ab_conversion_ztest": _ztest_sql,
+    "evt_mad_spikes": _mad_spikes_sql,
+    "evt_cusum_shifts": _cusum_sql,
+    "ml_theilsen_trend": _theilsen_sql,
+    "dq_ks_statistic": _ks_sql,
+    "ab_mannwhitney_auc": _mwu_sql,
+    "evt_chisq_type_weekday": _chisq_sql,
+}
+# these texts are dialect-neutral
+NEUTRAL = {
     "ml_ols_trend": OLS_TREND_ORACLE,
-    "ab_conversion_ztest": AB_ZTEST_ORACLE,
-    "evt_mad_spikes": MAD_SPIKES_ORACLE,
-    "evt_cusum_shifts": CUSUM_ORACLE,
     "ml_discount_qty_corr": DISCOUNT_CORR_ORACLE,
-    "ml_theilsen_trend": ML_THEILSEN_ORACLE,
-    "dq_ks_statistic": DQ_KS_ORACLE,
-    "ab_mannwhitney_auc": AB_MWU_ORACLE,
-    "evt_chisq_type_weekday": EVT_CHISQ_ORACLE,
 }
-
-# Spark-SQL duals. One dialect seam: DuckDB spells truncating integer
-# division ``//``, Spark SQL spells it ``div`` (identical semantics on
-# the non-negative operands used here); the float expressions are
-# already shared token-for-token.
-SPARK_SQL = {
-    name: sql.replace(" // ", " div ") for name, sql in ORACLES.items()
-}
-# the weekend/weekday ops also seam on the day-of-week function
-# (DuckDB isodow vs Spark weekday), so their duals are built from the
-# shared body with both seams applied, not by the blanket replace
-SPARK_SQL.update(
-    {
-        "ml_conformal_interval": ML_CONFORMAL_SPARK_SQL,
-        "ml_theilsen_trend": ML_THEILSEN_SPARK_SQL,
-        "dq_ks_statistic": DQ_KS_SPARK_SQL,
-        "ab_mannwhitney_auc": AB_MWU_SPARK_SQL,
-        "evt_chisq_type_weekday": EVT_CHISQ_SPARK_SQL,
-    }
-)
+ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

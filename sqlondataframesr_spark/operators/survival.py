@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 #: right-censor horizon: lifetimes still active here are censored, not
 #: churned (corpus order dates end 2001-08-01)
@@ -119,7 +120,8 @@ def km_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KM_ORACLE = f"""
+def _km_sql(d: Dialect) -> str:
+    return f"""
 WITH RECURSIVE per_cust AS (
     SELECT c.c_mktsegment AS segment,
            o.o_custkey,
@@ -132,8 +134,8 @@ WITH RECURSIVE per_cust AS (
 lifetimes AS (
     SELECT segment,
            CASE WHEN last_o < TIMESTAMP '{HORIZON} 00:00:00'
-                THEN date_diff('day', CAST(first_o AS DATE), CAST(last_o AS DATE))
-                ELSE date_diff('day', CAST(first_o AS DATE), DATE '{HORIZON}')
+                THEN {d.date_diff_days('CAST(first_o AS DATE)', 'CAST(last_o AS DATE)')}
+                ELSE {d.date_diff_days('CAST(first_o AS DATE)', f"DATE '{HORIZON}'")}
            END AS t,
            CASE WHEN last_o < TIMESTAMP '{HORIZON} 00:00:00' THEN 1 ELSE 0 END
              AS ev
@@ -160,12 +162,12 @@ curve AS (
 ),
 km AS (
     SELECT segment, t, d, n, rn,
-           (1000000 * (n - d)) // n AS s
+           (1000000 * (n - d)) {d.div} n AS s
     FROM curve
     WHERE rn = 1
     UNION ALL
     SELECT c.segment, c.t, c.d, c.n, c.rn,
-           (km.s * (c.n - c.d)) // c.n
+           (km.s * (c.n - c.d)) {d.div} c.n
     FROM km
     JOIN curve c ON c.segment = km.segment AND c.rn = km.rn + 1
 )
@@ -180,23 +182,9 @@ ORDER BY segment, duration_days
 
 QUERIES = {"km_survival_curve": km_survival_curve}
 
-ORACLES = {"km_survival_curve": KM_ORACLE}
-
-# Spark-SQL dual: Spark 4 supports WITH RECURSIVE, so the SAME
-# iterative KM recurrence runs as SQL text on the Spark engine.
-# Dialect seams: DuckDB ``//`` -> Spark ``div`` and
-# ``date_diff('day', a, b)`` -> ``datediff(b, a)`` (argument order is
-# reversed between the dialects).
-_KM_SPARK = (
-    KM_ORACLE.replace(" // ", " div ")
-    .replace(
-        "date_diff('day', CAST(first_o AS DATE), CAST(last_o AS DATE))",
-        "datediff(CAST(last_o AS DATE), CAST(first_o AS DATE))",
-    )
-    .replace(
-        f"date_diff('day', CAST(first_o AS DATE), DATE '{HORIZON}')",
-        f"datediff(DATE '{HORIZON}', CAST(first_o AS DATE))",
-    )
-)
-
-SPARK_SQL = {"km_survival_curve": _KM_SPARK}
+# Spark 4 supports WITH RECURSIVE, so the SAME iterative KM recurrence
+# runs as SQL text on both engines.
+TEMPLATES = {
+    "km_survival_curve": _km_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import Dialect, render
 
 _CENTS = "cast(round(value * 100) as bigint)"
 
@@ -246,7 +247,8 @@ def evt_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EWMA_ORACLE = f"""
+def _ewma_sql(d: Dialect) -> str:
+    return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
@@ -255,7 +257,7 @@ WITH daily AS (
 idx AS (
     SELECT day, x, row_number() OVER (ORDER BY day) AS t FROM daily
 ),
-lags AS (SELECT unnest(range(0, {EWMA_W})) AS k),
+lags AS (SELECT {d.fn('unnest', d.seq(0, EWMA_W))} AS k),
 terms AS (
     SELECT a.day, a.x, l.k, b.x AS xb,
            CAST(1 AS BIGINT) << ({EWMA_W} - 1 - l.k) AS w
@@ -265,13 +267,14 @@ terms AS (
 )
 SELECT day, x AS x_cents,
        CAST(COUNT(*) AS BIGINT) AS n_terms,
-       CAST(SUM(xb * w) AS BIGINT) // CAST(SUM(w) AS BIGINT)
+       CAST(SUM(xb * w) AS BIGINT) {d.div} CAST(SUM(w) AS BIGINT)
          AS ewma_cents
 FROM terms GROUP BY day, x ORDER BY day
 """
 
 
-ACF_ORACLE = f"""
+def _acf_sql(d: Dialect) -> str:
+    return f"""
 WITH daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
@@ -282,12 +285,12 @@ st AS (
     FROM daily
 ),
 idx AS (
-    SELECT x - (SELECT s // n FROM st) AS r,
+    SELECT x - (SELECT s {d.div} n FROM st) AS r,
            row_number() OVER (ORDER BY day) AS t
     FROM daily
 ),
 den AS (SELECT CAST(SUM(r * r) AS BIGINT) AS den FROM idx),
-lags AS (SELECT unnest(range(1, {ACF_LAGS + 1})) AS lag),
+lags AS (SELECT {d.fn('unnest', d.seq(1, ACF_LAGS + 1))} AS lag),
 pairs AS (
     SELECT l.lag, a.r AS r0, b.r AS r1
     FROM lags l
@@ -298,9 +301,10 @@ SELECT CAST(lag AS INT) AS lag,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
        CAST(SUM(r0 * r1) AS BIGINT) AS num,
        CAST(SUM(r0 * r1) AS BIGINT)
-         // nullif((SELECT den FROM den) // 1000000, 0) AS acf_ppm
+         {d.div} nullif((SELECT den FROM den) {d.div} 1000000, 0) AS acf_ppm
 FROM pairs GROUP BY lag ORDER BY lag
 """
+
 
 def orders_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MASE evaluation of the seasonal-naive forecast on monthly order
@@ -354,11 +358,12 @@ def orders_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MASE_BODY = """
+def _mase_sql(d: Dialect) -> str:
+    return f"""
 WITH monthly AS (
     SELECT CAST((year(o_orderdate) - 1995) * 12
                 + month(o_orderdate) - 1 AS BIGINT) AS x,
-           CAST(SUM({CENTS}) AS BIGINT) AS y
+           CAST(SUM({_O_CENTS}) AS BIGINT) AS y
     FROM orders GROUP BY 1
 ),
 lagged AS (
@@ -374,19 +379,19 @@ agg AS (
     FROM lagged WHERE x >= 12
 )
 SELECT n_eval, sae_c, sane_c,
-       sae_c {DIV} nullif(sane_c {DIV} 1000000, 0) AS mase_ppm
+       sae_c {d.div} nullif(sane_c {d.div} 1000000, 0) AS mase_ppm
 FROM agg
 """
 
 _O_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
-MASE_ORACLE = _MASE_BODY.format(CENTS=_O_CENTS, DIV="//")
-MASE_SPARK_SQL = _MASE_BODY.format(CENTS=_O_CENTS, DIV="div")
 
 
-TWAP_ORACLE = """
+def _twap_sql(d: Dialect) -> str:
+    next_day_us = d.fn("epoch_us", f"CAST(day + INTERVAL {d.interval(1, 'DAY')} AS TIMESTAMP)")
+    return f"""
 WITH obs AS (
     SELECT CAST(ts AS DATE) AS day,
-           epoch_us(ts) // 1000 AS t_ms,
+           {d.fn('epoch_us', 'ts')} {d.div} 1000 AS t_ms,
            event_id,
            CAST(round(value * 100) AS BIGINT) AS cents
     FROM events
@@ -396,7 +401,7 @@ with_dur AS (
     SELECT day, cents,
            COALESCE(
                LEAD(t_ms) OVER (PARTITION BY day ORDER BY t_ms, event_id),
-               epoch_us(CAST(day + INTERVAL 1 DAY AS TIMESTAMP)) // 1000
+               {next_day_us} {d.div} 1000
            ) - t_ms AS dur_ms
     FROM obs
 )
@@ -404,7 +409,7 @@ SELECT day,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        CAST(SUM(cents * dur_ms) AS BIGINT) AS weighted_ms,
        CAST(SUM(cents * dur_ms) AS BIGINT)
-         // nullif(CAST(SUM(dur_ms) AS BIGINT), 0) AS twap_cents
+         {d.div} nullif(CAST(SUM(dur_ms) AS BIGINT), 0) AS twap_cents
 FROM with_dur
 GROUP BY day
 ORDER BY day
@@ -443,40 +448,12 @@ QUERIES = {
     "orders_seasonal_naive_mase": orders_seasonal_naive_mase,
 }
 
-ORACLES = {
-    "evt_time_weighted_avg": TWAP_ORACLE,
+TEMPLATES = {
+    # the OHLC text is fully portable
     "evt_ohlc_hourly": OHLC_ORACLE,
-    "evt_daily_acf": ACF_ORACLE,
-    "evt_ewma_daily": EWMA_ORACLE,
-    "orders_seasonal_naive_mase": MASE_ORACLE,
+    "evt_time_weighted_avg": _twap_sql,
+    "evt_daily_acf": _acf_sql,
+    "evt_ewma_daily": _ewma_sql,
+    "orders_seasonal_naive_mase": _mase_sql,
 }
-
-# Spark-SQL duals. Dialect seams: ``//`` -> ``div``, ``epoch_us`` ->
-# ``unix_micros``, and DuckDB's bare ``INTERVAL 1 DAY`` -> ``INTERVAL
-# '1' DAY``; the OHLC text is fully portable.
-SPARK_SQL = {
-    "evt_time_weighted_avg": TWAP_ORACLE.replace(" // ", " div ")
-    .replace("epoch_us(", "unix_micros(")
-    .replace("INTERVAL 1 DAY", "INTERVAL '1' DAY"),
-    "evt_ohlc_hourly": OHLC_ORACLE,
-    # ACF seams: ``//`` -> div, unnest(range) -> explode(sequence),
-    # DuckDB's ON TRUE lateral spelling -> CROSS JOIN
-    "evt_daily_acf": ACF_ORACLE.replace(" // ", " div ")
-    .replace(
-        f"unnest(range(1, {ACF_LAGS + 1}))",
-        f"explode(sequence(1, {ACF_LAGS}))",
-    )
-    .replace("JOIN idx a ON TRUE", "CROSS JOIN idx a"),
-    # EWMA seams: same range/ON TRUE seams + ``<<`` -> shiftleft
-    "evt_ewma_daily": EWMA_ORACLE.replace(" // ", " div ")
-    .replace(
-        f"unnest(range(0, {EWMA_W}))",
-        f"explode(sequence(0, {EWMA_W - 1}))",
-    )
-    .replace("JOIN lags l ON TRUE", "CROSS JOIN lags l")
-    .replace(
-        f"CAST(1 AS BIGINT) << ({EWMA_W} - 1 - l.k)",
-        f"shiftleft(CAST(1 AS BIGINT), {EWMA_W} - 1 - l.k)",
-    ),
-    "orders_seasonal_naive_mase": MASE_SPARK_SQL,
-}
+ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -84,8 +84,9 @@ ORDER BY doc_id
 QUERIES = {"doc_sentence_stats": doc_sentence_stats}
 ORACLES = {"doc_sentence_stats": DOC_SENTENCE_STATS_ORACLE}
 
-# Spark-SQL N-version form: posexplode(split) replaces the Python UDTF
-# — same enumeration (index over ALL '. '-parts, empties dropped after)
+# deliberate dual: posexplode(split) replaces the Python UDTF and the
+# oracle's generate_subscripts — same enumeration (index over ALL
+# '. '-parts, empties dropped after)
 SPARK_SQL: dict[str, str] = {
     "doc_sentence_stats": """
 WITH sent AS (

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 
 RICH_BAL = 9000.0
 RECENT = "1998-01-01"
@@ -169,11 +170,12 @@ def q11_quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q11_ORACLE = """
+def _q11_sql(d: Dialect) -> str:
+    return f"""
 SELECT l_returnflag,
-       quantile_cont(l_quantity, 0.25) AS p25,
-       quantile_cont(l_quantity, 0.50) AS p50,
-       quantile_cont(l_quantity, 0.75) AS p75
+       {d.quantile_cont('l_quantity', '0.25')} AS p25,
+       {d.quantile_cont('l_quantity', '0.50')} AS p50,
+       {d.quantile_cont('l_quantity', '0.75')} AS p75
 FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -310,18 +312,20 @@ def q15_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_linestatus",
         "n",
-        F.expr("(floor((CAST(s AS DOUBLE) / n) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))").alias("avg_qty"),
+        F.expr(r6_sql('CAST(s AS DOUBLE) / n')).alias("avg_qty"),
         "min_qty",
         "max_qty",
         "n_parts",
         F.expr(
-            "(floor((SQRT((n * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))"
-            " / (CAST(n AS DOUBLE) * (n - 1)))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
+            r6_sql(
+                "SQRT((n * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))"
+                " / (CAST(n AS DOUBLE) * (n - 1)))"
+            )
         ).alias("stddev_qty"),
     ).orderBy("l_returnflag", "l_linestatus")
 
 
-Q15_ORACLE = """
+Q15_ORACLE = f"""
 WITH g AS (
   SELECT l_returnflag, l_linestatus,
          COUNT(*) AS n,
@@ -334,10 +338,10 @@ WITH g AS (
   GROUP BY l_returnflag, l_linestatus
 )
 SELECT l_returnflag, l_linestatus, n,
-       (floor((CAST(s AS DOUBLE) / n) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_qty,
+       {r6_sql('CAST(s AS DOUBLE) / n')} AS avg_qty,
        min_qty, max_qty, n_parts,
-       (floor((SQRT((n * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-             / (CAST(n AS DOUBLE) * (n - 1)))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS stddev_qty
+       {r6_sql('''SQRT((n * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
+             / (CAST(n AS DOUBLE) * (n - 1)))''')} AS stddev_qty
 FROM g
 ORDER BY l_returnflag, l_linestatus
 """
@@ -525,12 +529,13 @@ def q19_json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q19_ORACLE = """
+def _q19_sql(d: Dialect) -> str:
+    return f"""
 SELECT event_type,
        COUNT(*) AS n,
-       CAST(SUM(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-       MIN(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
-       MAX(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
+       CAST(SUM(CAST({d.fn('json_extract', 'props', "'$.k'")} AS BIGINT)) AS BIGINT) AS sum_k,
+       MIN(CAST({d.fn('json_extract', 'props', "'$.k'")} AS BIGINT)) AS min_k,
+       MAX(CAST({d.fn('json_extract', 'props', "'$.k'")} AS BIGINT)) AS max_k
 FROM events
 GROUP BY event_type
 ORDER BY event_type
@@ -653,12 +658,13 @@ def q21_trailing_window_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-Q21_ORACLE = """
+def _q21_sql(d: Dialect) -> str:
+    return f"""
 SELECT user_id, event_id, ts,
        ROUND(CAST(SUM(CAST(round(value * 100) AS BIGINT)) OVER w AS DOUBLE) / 100.0, 2) AS trail_7d_value,
        COUNT(*) OVER w AS trail_7d_n
 FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
+WINDOW w AS (PARTITION BY user_id ORDER BY {d.fn('epoch_us', 'ts')}
              RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
 ORDER BY event_id
 """
@@ -821,11 +827,15 @@ def q24_string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q24_ORACLE = """
+_NAME_NUM_RE = r"(\d+)$"
+
+
+def _q24_sql(d: Dialect) -> str:
+    return f"""
 WITH per_row AS (
   SELECT c_custkey,
          c_name LIKE '%001%' AS has_001,
-         TRY_CAST(regexp_extract(c_name, '(\\d+)$', 1) AS BIGINT) AS name_num,
+         TRY_CAST(regexp_extract(c_name, {d.str_lit(_NAME_NUM_RE)}, 1) AS BIGINT) AS name_num,
          substring(c_name, 1, 8) AS prefix8,
          concat_ws('/', c_mktsegment, upper(c_name)) AS tag,
          length(trim(c_mktsegment)) AS seg_len,
@@ -919,11 +929,12 @@ def q26_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q26_ORACLE = """
+def _q26_sql(d: Dialect) -> str:
+    return f"""
 WITH gaps AS (
   SELECT user_id,
-         epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-           PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS gap_us
+         {d.fn('epoch_us', 'ts')} - LAG({d.fn('epoch_us', 'ts')}) OVER (
+           PARTITION BY user_id ORDER BY {d.fn('epoch_us', 'ts')}, event_id) AS gap_us
   FROM events
 )
 SELECT user_id,
@@ -971,12 +982,13 @@ def q27_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q27_ORACLE = """
+def _q27_sql(d: Dialect) -> str:
+    return f"""
 WITH per_user AS (
   SELECT user_id,
-         MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
-         MIN(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t_click,
-         MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t_purchase
+         MIN(CASE WHEN event_type = 'view' THEN {d.fn('epoch_us', 'ts')} END) AS t_view,
+         MIN(CASE WHEN event_type = 'click' THEN {d.fn('epoch_us', 'ts')} END) AS t_click,
+         MIN(CASE WHEN event_type = 'purchase' THEN {d.fn('epoch_us', 'ts')} END) AS t_purchase
   FROM events GROUP BY user_id
 )
 SELECT COUNT(*) AS n_users,
@@ -1019,16 +1031,17 @@ def q28_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q28_ORACLE = f"""
+def _q28_sql(d: Dialect) -> str:
+    return f"""
 WITH hist AS (
-  SELECT CAST(floor(o_totalprice / {BUCKET_W}) AS BIGINT) AS bucket,
+  SELECT CAST(floor(o_totalprice / {BUCKET_W}{d.D}) AS BIGINT) AS bucket,
          COUNT(*) AS n_orders
   FROM orders GROUP BY 1
 )
 SELECT bucket,
-       CAST(bucket * {BUCKET_W} AS DOUBLE) AS bucket_lo,
+       CAST(bucket * {BUCKET_W}{d.D} AS DOUBLE) AS bucket_lo,
        n_orders,
-       (floor((CAST(n_orders AS DOUBLE) / SUM(n_orders) OVER ()) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS share
+       {r6_sql('CAST(n_orders AS DOUBLE) / SUM(n_orders) OVER ()')} AS share
 FROM hist
 ORDER BY bucket
 """
@@ -1075,7 +1088,7 @@ def q29_price_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q29_ORACLE = """
+Q29_ORACLE = f"""
 WITH ranked AS (
   SELECT o_orderpriority, o_totalprice,
          CAST(ntile(4) OVER w AS BIGINT) AS quartile,
@@ -1088,8 +1101,8 @@ SELECT o_orderpriority, quartile,
        CAST(count(*) AS BIGINT) AS n,
        round(min(o_totalprice), 2) AS min_price,
        round(max(o_totalprice), 2) AS max_price,
-       (floor((CAST(sum(CAST(round(pr * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_pct_rank,
-       (floor((CAST(sum(CAST(round(cd * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_cume_dist
+       {r6_sql('CAST(sum(CAST(round(pr * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_pct_rank,
+       {r6_sql('CAST(sum(CAST(round(cd * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_cume_dist
 FROM ranked
 GROUP BY o_orderpriority, quartile
 ORDER BY o_orderpriority, quartile
@@ -1186,7 +1199,8 @@ def q31_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q31_ORACLE = """
+def _q31_sql(d: Dialect) -> str:
+    return f"""
 WITH days AS (
   SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events
 ),
@@ -1195,17 +1209,17 @@ cohort AS (
 ),
 matrix AS (
   SELECT cohort_d,
-         CAST(date_diff('day', cohort_d, d) AS BIGINT) AS day_offset,
+         CAST({d.date_diff_days('cohort_d', 'd')} AS BIGINT) AS day_offset,
          count(DISTINCT days.user_id) AS n_users
   FROM days JOIN cohort ON days.user_id = cohort.user_id
   GROUP BY 1, 2
 )
-SELECT strftime(cohort_d, '%Y-%m-%d') AS cohort_day,
+SELECT {d.ymd('cohort_d')} AS cohort_day,
        day_offset,
        CAST(n_users AS BIGINT) AS n_users,
-       (floor((CAST(n_users AS DOUBLE) /
+       {r6_sql('''CAST(n_users AS DOUBLE) /
              MAX(CASE WHEN day_offset = 0 THEN n_users END)
-               OVER (PARTITION BY cohort_d)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS retained_share
+               OVER (PARTITION BY cohort_d)''')} AS retained_share
 FROM matrix
 ORDER BY cohort_day, day_offset
 """
@@ -1246,7 +1260,7 @@ def q32_unpivot_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q32_ORACLE = """
+Q32_ORACLE = f"""
 WITH melted AS (
   SELECT 'l_quantity' AS metric, l_quantity AS value FROM lineitem
   UNION ALL SELECT 'l_extendedprice', l_extendedprice FROM lineitem
@@ -1256,9 +1270,9 @@ WITH melted AS (
 SELECT metric,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(DISTINCT value) AS BIGINT) AS n_distinct,
-       (floor((min(value)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS min_v,
-       (floor((max(value)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS max_v,
-       (floor((CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_v
+       {r6_sql('min(value)')} AS min_v,
+       {r6_sql('max(value)')} AS max_v,
+       {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_v
 FROM melted
 GROUP BY metric
 ORDER BY metric
@@ -1315,10 +1329,10 @@ def q33_gapfill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q33_ORACLE = """
+Q33_ORACLE = f"""
 WITH daily AS (
   SELECT user_id, CAST(ts AS DATE) AS d,
-         (floor((CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS v
+         {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS v
   FROM events GROUP BY 1, 2
 ),
 bounds AS (
@@ -1382,12 +1396,13 @@ def q44_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q44_SQL = """
+def _q44_sql(d: Dialect) -> str:
+    return f"""
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
        round(CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2)
          AS total_price,
-       GROUPING(o_orderstatus, o_orderpriority) AS gid
+       {d.grouping('o_orderstatus, o_orderpriority')} AS gid
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 ORDER BY gid ASC, o_orderstatus ASC NULLS LAST, o_orderpriority ASC NULLS LAST
@@ -1410,7 +1425,7 @@ def q45_conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("bool_and(l_discount <= 0.1)").alias("all_low_discount"),
             F.expr("bool_or(l_tax > 0.07)").alias("any_high_tax"),
             F.min("l_linestatus").alias("first_status"),
-            # Integer ppm, not (floor((avg) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)): two engines' double
+            # Integer ppm, not `round(x, 6)`: two engines' double
             # round-to-6dp can differ in the last ulp and the driver
             # hashes bit patterns (VERDICT r4 item 1). sum*1e6 div n
             # is exact bigint arithmetic on both engines.
@@ -1422,13 +1437,14 @@ def q45_conditional_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q45_SQL = """
+def _q45_sql(d: Dialect) -> str:
+    return f"""
 SELECT l_returnflag,
        CAST(count_if(l_quantity > 40) AS BIGINT) AS n_large,
        bool_and(l_discount <= 0.1) AS all_low_discount,
        bool_or(l_tax > 0.07) AS any_high_tax,
        MIN(l_linestatus) AS first_status,
-       CAST(SUM(CAST(l_quantity >= 25 AS INT)) * 1000000 // COUNT(*) AS BIGINT)
+       CAST(SUM(CAST(l_quantity >= 25 AS INT)) * 1000000 {d.div} COUNT(*) AS BIGINT)
          AS share_heavy_ppm
 FROM lineitem
 GROUP BY l_returnflag
@@ -1654,6 +1670,7 @@ SELECT (SELECT COUNT(*) FROM g a JOIN g b ON a.grp = b.grp) AS n_eq,
         ON a.grp IS NOT DISTINCT FROM b.grp) AS n_nullsafe
 """
 
+
 def q60_array_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array higher-order-function battery over the token arrays of
     ``documents``: filter / exists / forall / aggregate (fold) /
@@ -1682,25 +1699,15 @@ def q60_array_hof_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q60_ORACLE = """
+def _q60_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id,
-       CAST(len(list_filter(t, x -> length(x) > 4)) AS BIGINT) AS n_long,
-       list_contains(t, 'spark') AS has_spark,
-       len(list_filter(t, x -> length(x) > 10)) = 0 AS all_short,
-       CAST(list_sum([length(x) for x in t]) AS BIGINT) AS sum_len,
-       array_to_string(list_sort(t)[1:5], ' ') AS first5_sorted
-FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-ORDER BY doc_id
-"""
-
-Q60_SPARK_SQL = """
-SELECT doc_id,
-       size(filter(t, x -> length(x) > 4)) AS n_long,
-       exists(t, x -> x = 'spark') AS has_spark,
-       forall(t, x -> length(x) <= 10) AS all_short,
-       aggregate(t, 0L, (a, x) -> a + length(x)) AS sum_len,
-       array_join(slice(array_sort(t), 1, 5), ' ') AS first5_sorted
-FROM (SELECT doc_id, split(text, ' ') AS t FROM documents)
+       CAST({d.fn('len', d.fn('list_filter', 't', 'x -> length(x) > 4'))} AS BIGINT) AS n_long,
+       {d.fn('list_contains', 't', "'spark'")} AS has_spark,
+       {d.fn('len', d.fn('list_filter', 't', 'x -> length(x) > 10'))} = 0 AS all_short,
+       CAST({d.list_sum(d.comp('length(x)', 'x', 't'), '0L')} AS BIGINT) AS sum_len,
+       {d.fn('array_to_string', d.slice(d.fn('list_sort', 't'), 1, 5, 5), "' '")} AS first5_sorted
+FROM (SELECT doc_id, {d.fn('string_split', 'text', "' '")} AS t FROM documents)
 ORDER BY doc_id
 """
 
@@ -1729,26 +1736,18 @@ def q61_regex_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q61_ORACLE = """
+def _q61_sql(d: Dialect) -> str:
+    return f"""
 SELECT doc_id,
-       regexp_extract(text, '[a-z]+k') AS first_k_word,
-       CAST(len(regexp_extract_all(text, '[a-z]+k')) AS BIGINT) AS n_k_words,
-       CAST(length(regexp_replace(text, '[aeiou]', '', 'g')) AS BIGINT)
+       {d.regexp_extract('text', "'[a-z]+k'")} AS first_k_word,
+       CAST({d.fn('len', d.regexp_extract_all('text', "'[a-z]+k'"))} AS BIGINT) AS n_k_words,
+       CAST(length({d.regexp_replace_all('text', "'[aeiou]'", "''")}) AS BIGINT)
          AS novowel_len,
        text LIKE '%spark%' AS mentions_spark
 FROM documents
 ORDER BY doc_id
 """
 
-Q61_SPARK_SQL = """
-SELECT doc_id,
-       regexp_extract(text, '[a-z]+k', 0) AS first_k_word,
-       size(regexp_extract_all(text, '[a-z]+k', 0)) AS n_k_words,
-       length(regexp_replace(text, '[aeiou]', '')) AS novowel_len,
-       text LIKE '%spark%' AS mentions_spark
-FROM documents
-ORDER BY doc_id
-"""
 
 def q62_datetime_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datetime-function battery on the dialect-portable subset:
@@ -1837,38 +1836,41 @@ QUERIES = {
     "q30_above_brand_avg": q30_above_brand_avg,
 }
 
-ORACLES = {
+TEMPLATES = {
+    "q11_quantity_quantiles": _q11_sql,
+    "q19_json_props_stats": _q19_sql,
+    "q21_trailing_window_value": _q21_sql,
+    "q24_string_functions": _q24_sql,
+    "q26_event_gaps": _q26_sql,
+    "q27_event_funnel": _q27_sql,
+    "q28_price_histogram": _q28_sql,
+    "q31_cohort_retention": _q31_sql,
+    "q44_grouping_sets_revenue": _q44_sql,
+    "q45_conditional_aggregates": _q45_sql,
+    "q60_array_hof_battery": _q60_sql,
+    "q61_regex_battery": _q61_sql,
+}
+
+# one text, both engines
+NEUTRAL = {
     "q62_datetime_battery": Q62_SQL,
-    "q60_array_hof_battery": Q60_ORACLE,
-    "q61_regex_battery": Q61_ORACLE,
-    "q58_null_semantics": Q58_ORACLE,
-    "q59_nullsafe_join": Q59_ORACLE,
-    "q44_grouping_sets_revenue": Q44_SQL,
-    "q45_conditional_aggregates": Q45_SQL,
-    "q46_window_frame_battery": Q46_SQL,
+    "q58_null_semantics": Q58_ORACLE,  # incl. NULLS FIRST
+    "q59_nullsafe_join": Q59_ORACLE,  # IS NOT DISTINCT FROM
+    "q46_window_frame_battery": Q46_SQL,  # WINDOW clause + ROWS frames
+    # the twin keeps the literal correlated LATERAL ... LIMIT 2; the
+    # fluent form is the window decorrelation
     "q47_lateral_topk": Q47_ORACLE,
     "q29_price_rank_battery": Q29_ORACLE,
-    "q30_above_brand_avg": Q30_ORACLE,
-    "q31_cohort_retention": Q31_ORACLE,
-    "q32_unpivot_profile": Q32_ORACLE,
-    "q33_gapfill_daily": Q33_ORACLE,
-    "q17_small_quantity_revenue": Q17_ORACLE,
     "q20_regional_revenue": Q20_ORACLE,
-    "q21_trailing_window_value": Q21_ORACLE,
-    "q22_approx_sketches": Q22_ORACLE,
     "q23_cube_order_matrix": Q23_ORACLE,
-    "q24_string_functions": Q24_ORACLE,
     "q25_full_outer_nation_balance": Q25_ORACLE,
-    "q26_event_gaps": Q26_ORACLE,
-    "q27_event_funnel": Q27_ORACLE,
-    "q28_price_histogram": Q28_ORACLE,
     "q18_large_orders": Q18_ORACLE,
-    "q19_json_props_stats": Q19_ORACLE,
     "q7_rollup_order_counts": Q7_ORACLE,
     "q8_union_all_parties": Q8_ORACLE,
+    # NOT EXISTS for the anti join: Catalyst's RewritePredicateSubquery
+    # must land on the fluent form's explicit left-anti plan
     "q9_anti_recent_customers": Q9_ORACLE,
     "q10_running_totals": Q10_ORACLE,
-    "q11_quantity_quantiles": Q11_ORACLE,
     "q12_set_intersect": Q12_ORACLE,
     "q13_set_except": Q13_ORACLE,
     "q14_outer_join_spend_tiers": Q14_ORACLE,
@@ -1876,61 +1878,47 @@ ORACLES = {
     "q16_pivot_status_by_priority": Q16_ORACLE,
 }
 
-# Spark-SQL forms (internal N-version, tests/test_reference_queries.py
-# checks fluent ≡ SQL). Where the fluent form hand-picks a strategy,
-# the SQL form deliberately uses the *declarative* construct instead —
-# NOT EXISTS for the anti join (q9), a correlated scalar subquery for
-# q17 — so the check proves Catalyst's rewrite (RewritePredicateSubquery
-# / decorrelation) lands on the same results as the explicit plan.
-SPARK_SQL: dict[str, str] = {
-    "q62_datetime_battery": Q62_SQL,  # fully dialect-portable text
-    "q60_array_hof_battery": Q60_SPARK_SQL,
-    "q61_regex_battery": Q61_SPARK_SQL,
-    "q58_null_semantics": Q58_ORACLE,  # dialect-neutral incl. NULLS FIRST
-    "q59_nullsafe_join": Q59_ORACLE,  # IS NOT DISTINCT FROM: both dialects
-    "q7_rollup_order_counts": Q7_ORACLE,
-    # one dialect seam: ANSI/DuckDB multi-arg GROUPING(a, b) is
-    # spelled grouping_id(a, b) in Spark SQL (same bitmask)
-    "q44_grouping_sets_revenue": Q44_SQL.replace(
-        "GROUPING(o_orderstatus, o_orderpriority)",
-        "grouping_id(o_orderstatus, o_orderpriority)",
-    ),
-    # the WINDOW clause + explicit ROWS frames parse identically
-    "q46_window_frame_battery": Q46_SQL,
-    # deliberately DIFFERENT strategy: the twin keeps the literal
-    # correlated LATERAL ... LIMIT 2; the fluent form is the window
-    # decorrelation
-    "q47_lateral_topk": Q47_ORACLE,
-    # dialect seam: DuckDB integer division is `//`, Spark's is `div`
-    "q45_conditional_aggregates": Q45_SQL.replace("* 1000000 //", "* 1000000 div"),
-    # dialect-neutral: the WINDOW clause parses identically in Spark SQL
-    "q29_price_rank_battery": Q29_ORACLE,
-    "q31_cohort_retention": """
-WITH days AS (
-  SELECT DISTINCT user_id, to_date(ts) AS d FROM events
-),
-cohort AS (
-  SELECT user_id, MIN(d) AS cohort_d FROM days GROUP BY user_id
-),
-matrix AS (
-  SELECT cohort_d,
-         CAST(datediff(d, cohort_d) AS BIGINT) AS day_offset,
-         count(DISTINCT days.user_id) AS n_users
-  FROM days JOIN cohort ON days.user_id = cohort.user_id
-  GROUP BY 1, 2
-)
-SELECT date_format(cohort_d, 'yyyy-MM-dd') AS cohort_day,
-       day_offset,
-       n_users,
-       (floor((CAST(n_users AS DOUBLE) /
-             MAX(CASE WHEN day_offset = 0 THEN n_users END)
-               OVER (PARTITION BY cohort_d)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS retained_share
-FROM matrix
-ORDER BY cohort_day, day_offset
+ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)
+ORACLES |= {
+    "q30_above_brand_avg": Q30_ORACLE,
+    "q32_unpivot_profile": Q32_ORACLE,
+    "q33_gapfill_daily": Q33_ORACLE,
+    "q17_small_quantity_revenue": Q17_ORACLE,
+    "q22_approx_sketches": Q22_ORACLE,
+}
+
+SPARK_SQL |= {
+    # deliberate dual: the genuinely correlated spelling — proves
+    # Catalyst decorrelation lands on the fluent join-back plan's rows;
+    # the correlated scalar is the same exact-cent-sum average
+    "q30_above_brand_avg": """
+SELECT p_partkey, p_brand, p_retailprice,
+       round((SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
+              FROM part p2 WHERE p2.p_brand = p.p_brand), 4) AS brand_avg,
+       round(p_retailprice - (SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
+                              FROM part p2 WHERE p2.p_brand = p.p_brand), 4) AS above_by
+FROM part p
+WHERE p_retailprice > (SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
+                       FROM part p2 WHERE p2.p_brand = p.p_brand)
 """,
-    # the SQL twin uses stack() — the dialect spelling of the fluent
-    # .unpivot() API; the N-version check proves they're the same op
-    "q32_unpivot_profile": """
+    # deliberate dual: a correlated scalar subquery, decorrelated by
+    # Catalyst, against the fluent form's explicit per-part aggregate
+    "q17_small_quantity_revenue": """
+SELECT p.p_brand,
+       COUNT(*) AS n_items,
+       ROUND(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) / 100.0D / 7.0D, 2)
+         AS avg_yearly
+FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+WHERE l.l_quantity < (
+  SELECT 0.2 * (SUM(l2.l_quantity) / COUNT(*))
+  FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey
+)
+GROUP BY p.p_brand
+ORDER BY p.p_brand
+""",
+    # deliberate dual: stack(), the SQL spelling of the fluent
+    # .unpivot() API, where the oracle unions one SELECT per column
+    "q32_unpivot_profile": f"""
 WITH melted AS (
   SELECT stack(4,
                'l_quantity', l_quantity,
@@ -1942,17 +1930,20 @@ WITH melted AS (
 SELECT metric,
        count(*) AS n_rows,
        count(DISTINCT value) AS n_distinct,
-       (floor((min(value)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS min_v,
-       (floor((max(value)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS max_v,
-       (floor((CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS avg_v
+       {r6_sql('min(value)')} AS min_v,
+       {r6_sql('max(value)')} AS max_v,
+       {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_v
 FROM melted
 GROUP BY metric
 ORDER BY metric
 """,
-    "q33_gapfill_daily": """
+    # deliberate dual: Spark cannot cast a generator inline, so the
+    # date spine is a LATERAL VIEW over sequence(), and the fill is
+    # last(v, true) where the oracle counts non-null islands
+    "q33_gapfill_daily": f"""
 WITH daily AS (
   SELECT user_id, to_date(ts) AS d,
-         (floor((CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS v
+         {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS v
   FROM events GROUP BY 1, 2
 ),
 spine AS (
@@ -1972,80 +1963,8 @@ SELECT user_id, date_format(d, 'yyyy-MM-dd') AS day,
 FROM j
 ORDER BY user_id, day
 """,
-    # the genuinely correlated spelling — proves Catalyst decorrelation
-    # lands on the fluent join-back plan's rows; the correlated scalar
-    # is the same exact-cent-sum average as the fluent form
-    "q30_above_brand_avg": """
-SELECT p_partkey, p_brand, p_retailprice,
-       round((SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
-              FROM part p2 WHERE p2.p_brand = p.p_brand), 4) AS brand_avg,
-       round(p_retailprice - (SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
-                              FROM part p2 WHERE p2.p_brand = p.p_brand), 4) AS above_by
-FROM part p
-WHERE p_retailprice > (SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
-                       FROM part p2 WHERE p2.p_brand = p.p_brand)
-""",
-    "q9_anti_recent_customers": Q9_ORACLE,
-    "q12_set_intersect": Q12_ORACLE,
-    "q13_set_except": Q13_ORACLE,
-    "q14_outer_join_spend_tiers": Q14_ORACLE,
-    "q17_small_quantity_revenue": """
-SELECT p.p_brand,
-       COUNT(*) AS n_items,
-       ROUND(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) / 100.0D / 7.0D, 2)
-         AS avg_yearly
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_quantity < (
-  SELECT 0.2 * (SUM(l2.l_quantity) / COUNT(*))
-  FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey
-)
-GROUP BY p.p_brand
-ORDER BY p.p_brand
-""",
-    "q18_large_orders": Q18_ORACLE,
-    "q8_union_all_parties": Q8_ORACLE,
-    "q10_running_totals": Q10_ORACLE,
-    "q16_pivot_status_by_priority": Q16_ORACLE,
-    "q19_json_props_stats": """
-SELECT event_type,
-       COUNT(*) AS n,
-       SUM(CAST(get_json_object(props, '$.k') AS BIGINT)) AS sum_k,
-       MIN(CAST(get_json_object(props, '$.k') AS BIGINT)) AS min_k,
-       MAX(CAST(get_json_object(props, '$.k') AS BIGINT)) AS max_k
-FROM events
-GROUP BY event_type
-ORDER BY event_type
-""",
-    "q20_regional_revenue": Q20_ORACLE,
-    "q25_full_outer_nation_balance": Q25_ORACLE,
-    "q26_event_gaps": Q26_ORACLE.replace("epoch_us(ts)", "unix_micros(ts)"),
-    "q27_event_funnel": Q27_ORACLE.replace("epoch_us(ts)", "unix_micros(ts)"),
-    "q21_trailing_window_value": """
-SELECT user_id, event_id, ts,
-       ROUND(CAST(SUM(CAST(round(value * 100) AS BIGINT)) OVER w AS DOUBLE) / 100.0, 2) AS trail_7d_value,
-       COUNT(*) OVER w AS trail_7d_n
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY unix_micros(ts)
-             RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
-ORDER BY event_id
-""",
-    "q11_quantity_quantiles": """
-SELECT l_returnflag,
-       percentile(l_quantity, 0.25) AS p25,
-       percentile(l_quantity, 0.50) AS p50,
-       percentile(l_quantity, 0.75) AS p75
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-""",
-    # dialect-neutral: the oracle text parses identically in Spark SQL
-    "q15_lineitem_stats": Q15_ORACLE,
-    "q23_cube_order_matrix": Q23_ORACLE,
-    # Spark string literals C-escape backslashes ('\d' -> 'd'); DuckDB
-    # keeps them — double the regex backslash for the Spark parse
-    "q24_string_functions": Q24_ORACLE.replace("(\\d+)$", "(\\\\d+)$"),
-    # same engine on both sides, so the sketch internals agree exactly —
-    # the SQL twin replays the full validation contract
+    # deliberate dual: Spark's own HLL / percentile_approx sketches,
+    # checked against the same validation contract as the oracle's
     "q22_approx_sketches": """
 WITH g AS (
   SELECT event_type,
@@ -2067,18 +1986,5 @@ SELECT g.event_type, g.n_events, g.n_users,
 FROM events e JOIN g USING (event_type)
 GROUP BY g.event_type, g.n_events, g.n_users, g.approx_users, g.pct
 ORDER BY g.event_type
-""",
-    "q28_price_histogram": f"""
-WITH hist AS (
-  SELECT CAST(floor(o_totalprice / {BUCKET_W}D) AS BIGINT) AS bucket,
-         COUNT(*) AS n_orders
-  FROM orders GROUP BY 1
-)
-SELECT bucket,
-       CAST(bucket * {BUCKET_W}D AS DOUBLE) AS bucket_lo,
-       n_orders,
-       (floor((CAST(n_orders AS DOUBLE) / SUM(n_orders) OVER ()) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS share
-FROM hist
-ORDER BY bucket
 """,
 }

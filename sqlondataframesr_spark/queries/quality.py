@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import spread_scan
-from ..functions.rounding import r6 as _r6
+from ..functions.dialect import SPARK, Dialect, render
+from ..functions.rounding import r6 as _r6, r6_sql
 
 #: orders columns profiled, with their kind ('num' | 'ts' | 'str')
 _PROFILE_COLS = [
@@ -104,16 +105,18 @@ def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("col_name")
 
 
-def _profile_oracle() -> str:
+def _profile_sql(d: Dialect) -> str:
+    """The per-column UNION-ALL spelling (the differential then proves
+    single-pass-stack ≡ per-column scans)."""
     selects = []
     for c, kind in _PROFILE_COLS:
         if kind == "num":
             mn, mx = f"CAST(MIN({c}) AS DOUBLE)", f"CAST(MAX({c}) AS DOUBLE)"
-            smn = smx = "CAST(NULL AS VARCHAR)"
+            smn = smx = d.cast_str("NULL")
         elif kind == "ts":
-            mn = f"CAST(epoch(MIN({c})) AS DOUBLE)"
-            mx = f"CAST(epoch(MAX({c})) AS DOUBLE)"
-            smn = smx = "CAST(NULL AS VARCHAR)"
+            mn = f"CAST({d.fn('epoch', f'MIN({c})')} AS DOUBLE)"
+            mx = f"CAST({d.fn('epoch', f'MAX({c})')} AS DOUBLE)"
+            smn = smx = d.cast_str("NULL")
         else:
             mn = mx = "CAST(NULL AS DOUBLE)"
             smn, smx = f"MIN({c})", f"MAX({c})"
@@ -126,38 +129,6 @@ def _profile_oracle() -> str:
          {smn} AS min_str, {smx} AS max_str
   FROM orders""")
     return "\nUNION ALL\n".join(selects) + "\nORDER BY col_name"
-
-
-PROFILE_ORDERS_ORACLE = _profile_oracle()
-
-
-def _profile_spark_sql() -> str:
-    """Spark-dialect dual: same UNION-ALL spelling (the differential
-    then proves single-pass-stack ≡ per-column scans)."""
-    selects = []
-    for c, kind in _PROFILE_COLS:
-        if kind == "num":
-            mn, mx = f"CAST(MIN({c}) AS DOUBLE)", f"CAST(MAX({c}) AS DOUBLE)"
-            smn = smx = "CAST(NULL AS STRING)"
-        elif kind == "ts":
-            mn = f"CAST(unix_seconds(MIN({c})) AS DOUBLE)"
-            mx = f"CAST(unix_seconds(MAX({c})) AS DOUBLE)"
-            smn = smx = "CAST(NULL AS STRING)"
-        else:
-            mn = mx = "CAST(NULL AS DOUBLE)"
-            smn, smx = f"MIN({c})", f"MAX({c})"
-        selects.append(f"""
-  SELECT '{c}' AS col_name,
-         COUNT(*) AS n_rows,
-         SUM(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS n_nulls,
-         COUNT(DISTINCT {c}) AS n_distinct,
-         {mn} AS min_num, {mx} AS max_num,
-         {smn} AS min_str, {smx} AS max_str
-  FROM orders""")
-    return "\nUNION ALL\n".join(selects) + "\nORDER BY col_name"
-
-
-PROFILE_ORDERS_SPARK_SQL = _profile_spark_sql()
 
 
 def dq_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,10 +249,10 @@ def dq_split_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     PSI_BUCKETS * 2 cells plus a 1-row total broadcast — the same
     shape at 100 TB.
     """
-    from ..llm.sampling import TRAIN_PCT, VAL_PCT, _BUCKET_SPARK
+    from ..llm.sampling import TRAIN_PCT, VAL_PCT, bucket_sql
 
     docs = load_table(spark, sf_dir, "documents")
-    hb = F.expr(_BUCKET_SPARK)
+    hb = F.expr(bucket_sql(SPARK))
     split = (
         F.when(hb < TRAIN_PCT, F.lit("train"))
         .when(hb < VAL_PCT, F.lit("val"))
@@ -327,13 +298,13 @@ def dq_split_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _psi_oracle() -> str:
-    from ..llm.sampling import TRAIN_PCT, VAL_PCT, _BUCKET_DUCK
+def _psi_sql(d: Dialect) -> str:
+    from ..llm.sampling import TRAIN_PCT, VAL_PCT, bucket_sql
 
     return f"""
 WITH tagged AS (
-  SELECT CASE WHEN {_BUCKET_DUCK} < {TRAIN_PCT} THEN 'train'
-              WHEN {_BUCKET_DUCK} < {VAL_PCT} THEN 'val'
+  SELECT CASE WHEN {bucket_sql(d)} < {TRAIN_PCT} THEN 'train'
+              WHEN {bucket_sql(d)} < {VAL_PCT} THEN 'val'
               ELSE 'test' END AS split,
          LEAST(CAST(floor(n_chars / {PSI_WIDTH}) AS BIGINT), {PSI_BUCKETS - 1}) AS bucket
   FROM documents
@@ -351,49 +322,13 @@ filled AS (
 ),
 tot AS (SELECT SUM(n_train) AS tot_train, SUM(n_test) AS tot_test FROM filled)
 SELECT bucket, n_train, n_test,
-       (floor(((n_train + 1.0) / (tot_train + {PSI_BUCKETS})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p_train,
-       (floor(((n_test + 1.0) / (tot_test + {PSI_BUCKETS})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS q_test,
-       (floor((((n_train + 1.0) / (tot_train + {PSI_BUCKETS})
-              - (n_test + 1.0) / (tot_test + {PSI_BUCKETS}))
-             * ln(((n_train + 1.0) / (tot_train + {PSI_BUCKETS}))
-                  / ((n_test + 1.0) / (tot_test + {PSI_BUCKETS})))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS psi_term
+       {r6_sql(f'(n_train + 1.0{d.D}) / (tot_train + {PSI_BUCKETS})')} AS p_train,
+       {r6_sql(f'(n_test + 1.0{d.D}) / (tot_test + {PSI_BUCKETS})')} AS q_test,
+       {r6_sql(f'''((n_train + 1.0{d.D}) / (tot_train + {PSI_BUCKETS})
+              - (n_test + 1.0{d.D}) / (tot_test + {PSI_BUCKETS}))
+             * ln(((n_train + 1.0{d.D}) / (tot_train + {PSI_BUCKETS}))
+                  / ((n_test + 1.0{d.D}) / (tot_test + {PSI_BUCKETS})))''')} AS psi_term
 FROM filled, tot
-ORDER BY bucket
-"""
-
-
-def _psi_spark_sql() -> str:
-    from ..llm.sampling import TRAIN_PCT, VAL_PCT, _BUCKET_SPARK
-
-    return f"""
-WITH tagged AS (
-  SELECT CASE WHEN {_BUCKET_SPARK} < {TRAIN_PCT} THEN 'train'
-              WHEN {_BUCKET_SPARK} < {VAL_PCT} THEN 'val'
-              ELSE 'test' END AS split,
-         LEAST(CAST(floor(n_chars / {PSI_WIDTH}) AS BIGINT), {PSI_BUCKETS - 1}L) AS bucket
-  FROM documents
-),
-counts AS (
-  SELECT bucket,
-         SUM(CASE WHEN split = 'train' THEN 1 ELSE 0 END) AS n_train,
-         SUM(CASE WHEN split = 'test' THEN 1 ELSE 0 END) AS n_test
-  FROM tagged WHERE split <> 'val' GROUP BY bucket
-),
-spine AS (SELECT explode(sequence(0, {PSI_BUCKETS - 1})) AS b),
-filled AS (
-  SELECT CAST(s.b AS BIGINT) AS bucket,
-         COALESCE(n_train, 0L) AS n_train, COALESCE(n_test, 0L) AS n_test
-  FROM spine s LEFT JOIN counts ON counts.bucket = s.b
-),
-tot AS (SELECT SUM(n_train) AS tot_train, SUM(n_test) AS tot_test FROM filled)
-SELECT bucket, n_train, n_test,
-       (floor(((n_train + 1.0D) / (tot_train + {PSI_BUCKETS})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS p_train,
-       (floor(((n_test + 1.0D) / (tot_test + {PSI_BUCKETS})) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS q_test,
-       (floor((((n_train + 1.0D) / (tot_train + {PSI_BUCKETS})
-              - (n_test + 1.0D) / (tot_test + {PSI_BUCKETS}))
-             * ln(((n_train + 1.0D) / (tot_train + {PSI_BUCKETS}))
-                  / ((n_test + 1.0D) / (tot_test + {PSI_BUCKETS})))) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE)) AS psi_term
-FROM filled CROSS JOIN tot
 ORDER BY bucket
 """
 
@@ -453,7 +388,8 @@ def dq_join_fanout_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FANOUT_BODY = """
+def _fanout_sql(d: Dialect) -> str:
+    return f"""
   WITH lc AS (
     SELECT o_orderkey AS k, CAST(COUNT(*) AS BIGINT) AS nl
     FROM orders GROUP BY o_orderkey
@@ -480,14 +416,11 @@ _FANOUT_BODY = """
     FROM both_sides
   )
   SELECT agg.*,
-         CAST(exact_join_rows * 1000000 {DIV}
+         CAST(exact_join_rows * 1000000 {d.div}
               NULLIF(GREATEST(left_rows, right_rows), 0) AS BIGINT)
            AS amplification_ppm
   FROM agg
 """
-
-DQ_JOIN_FANOUT_ORACLE = _FANOUT_BODY.format(DIV="//")
-DQ_JOIN_FANOUT_SPARK_SQL = _FANOUT_BODY.format(DIV="div")
 
 
 #: the lineitem numeric battery for the correlation matrix — integer
@@ -508,13 +441,13 @@ def _corr_expr(a: str, b: str) -> str:
     n·Σxy would overflow int64 at row scale, so every factor casts to
     double first (exact for sums < 2^53)."""
     n = "cast(n as double)"
-    return (
-        f"(floor((({n} * cast(s_{a}_{b} as double)"
+    return r6_sql(
+        f"({n} * cast(s_{a}_{b} as double)"
         f" - cast(s_{a} as double) * cast(s_{b} as double))"
         f" / nullif(sqrt(({n} * cast(s_{a}_{a} as double)"
         f"   - cast(s_{a} as double) * cast(s_{a} as double))"
         f"  * ({n} * cast(s_{b}_{b} as double)"
-        f"   - cast(s_{b} as double) * cast(s_{b} as double))), 0.0)) * CAST(1000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) / CAST(1000000.0 AS DOUBLE))"
+        f"   - cast(s_{b} as double) * cast(s_{b} as double))), 0.0)"
     )
 
 
@@ -592,15 +525,13 @@ PROFILE_CORR_ORACLE = _corr_oracle()
 
 #: the orders categorical battery for the entropy profile: column
 #: name -> dialect-neutral value expression (bounded domains only)
-_ENTROPY_COLS = [
-    ("o_orderstatus", "o_orderstatus"),
-    ("o_orderpriority", "o_orderpriority"),
-    ("order_month", "CAST(month(o_orderdate) AS VARCHAR)"),
-    (
-        "price_10k_bracket",
-        "CAST(CAST(floor(o_totalprice / 10000.0) AS BIGINT) AS VARCHAR)",
-    ),
-]
+def _entropy_cols(d: Dialect) -> list[tuple[str, str]]:
+    return [
+        ("o_orderstatus", "o_orderstatus"),
+        ("o_orderpriority", "o_orderpriority"),
+        ("order_month", d.cast_str("month(o_orderdate)")),
+        ("price_10k_bracket", d.cast_str("CAST(floor(o_totalprice / 10000.0) AS BIGINT)")),
+    ]
 
 
 def profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,11 +555,11 @@ def profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ords = load_table(spark, sf_dir, "orders")
     stack = ", ".join(
-        f"'{name}', {expr.replace('AS VARCHAR', 'AS STRING')}"
-        for name, expr in _ENTROPY_COLS
+        f"'{name}', {expr}"
+        for name, expr in _entropy_cols(SPARK)
     )
     long_ = ords.selectExpr(
-        f"stack({len(_ENTROPY_COLS)}, {stack}) as (col_name, val)"
+        f"stack({len(_entropy_cols(SPARK))}, {stack}) as (col_name, val)"
     )
     hist = long_.groupBy("col_name", "val").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -662,10 +593,15 @@ def profile_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _entropy_oracle() -> str:
+def _entropy_sql(d: Dialect) -> str:
     selects = " UNION ALL ".join(
         f"SELECT '{name}' AS col_name, {expr} AS val FROM orders"
-        for name, expr in _ENTROPY_COLS
+        for name, expr in _entropy_cols(d)
+    )
+    ent = d.idiv("(-CAST(SUM(term_us) AS BIGINT))", "n_rows")
+    norm = d.idiv(
+        f"({ent}) * 1000000\n        ",
+        "nullif(CAST(round(ln(CAST(n_distinct AS DOUBLE))\n                   * 1000000.0) AS BIGINT), 0)",
     )
     return f"""
 WITH long_ AS ({selects}),
@@ -686,16 +622,11 @@ terms AS (
     FROM hist h JOIN per_col p USING (col_name)
 )
 SELECT col_name, n_rows, n_distinct,
-       (-CAST(SUM(term_us) AS BIGINT)) // n_rows AS entropy_micronats,
-       ((-CAST(SUM(term_us) AS BIGINT)) // n_rows) * 1000000
-         // nullif(CAST(round(ln(CAST(n_distinct AS DOUBLE))
-                   * 1000000.0) AS BIGINT), 0) AS norm_entropy_ppm
+       {ent} AS entropy_micronats,
+       {norm} AS norm_entropy_ppm
 FROM terms GROUP BY col_name, n_rows, n_distinct
 ORDER BY col_name
 """
-
-
-PROFILE_ENTROPY_ORACLE = _entropy_oracle()
 
 
 QUERIES = {
@@ -707,25 +638,13 @@ QUERIES = {
     "dq_join_fanout_report": dq_join_fanout_report,
 }
 
-ORACLES = {
-    "profile_corr_matrix": PROFILE_CORR_ORACLE,
-    "profile_entropy": PROFILE_ENTROPY_ORACLE,
-    "profile_orders": PROFILE_ORDERS_ORACLE,
-    "dq_violations": DQ_VIOLATIONS_ORACLE,
-    "dq_split_psi": _psi_oracle(),
-    "dq_join_fanout_report": DQ_JOIN_FANOUT_ORACLE,
+TEMPLATES = {
+    "profile_entropy": _entropy_sql,
+    "profile_orders": _profile_sql,
+    "dq_split_psi": _psi_sql,
+    "dq_join_fanout_report": _fanout_sql,
 }
-
-SPARK_SQL: dict[str, str] = {
-    # the UNION-ALL-over-one-CTE spelling is dialect-neutral
-    "profile_corr_matrix": PROFILE_CORR_ORACLE,
-    # seams: VARCHAR -> STRING, // -> div
-    "profile_entropy": PROFILE_ENTROPY_ORACLE.replace(
-        "AS VARCHAR)", "AS STRING)"
-    ).replace(" // ", " div "),
-    "profile_orders": PROFILE_ORDERS_SPARK_SQL,
-    # the scalar-subquery UNION spelling is dialect-neutral
-    "dq_violations": DQ_VIOLATIONS_ORACLE,
-    "dq_split_psi": _psi_spark_sql(),
-    "dq_join_fanout_report": DQ_JOIN_FANOUT_SPARK_SQL,
-}
+# the UNION-ALL-over-one-CTE and scalar-subquery UNION spellings are
+# dialect-neutral
+NEUTRAL = {"profile_corr_matrix": PROFILE_CORR_ORACLE, "dq_violations": DQ_VIOLATIONS_ORACLE}
+ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

@@ -131,19 +131,20 @@ QUERIES = {"mm_binary_ingest": mm_binary_ingest}
 ORACLES = {"mm_binary_ingest": MM_BINARY_INGEST_ORACLE}
 
 
-#: Spark-SQL N-version twin: the `binaryFile.` path-table syntax reads
-#: the same files straight from SQL (path is the pure fixture_path()
-#: computation — no import-time I/O; the fluent twin builds the files)
-MM_BINARY_INGEST_SPARK_SQL = f"""
+# deliberate dual: the `binaryFile.` path table, Spark's own reader of
+# the same files, where the oracle uses DuckDB's read_blob (path is the
+# pure fixture_path() computation — no import-time I/O; the fluent twin
+# builds the files)
+SPARK_SQL = {
+    "mm_binary_ingest": f"""
 SELECT element_at(split(path, '/'), -1) AS file_name,
        length AS n_bytes,
        md5(hex(content)) AS content_md5,
        {_SNIFF_CASE.format(h="hex(content)")} AS media_type
 FROM binaryFile.`{fixture_path()}/*.bin`
 ORDER BY file_name
-"""
-
-SPARK_SQL = {"mm_binary_ingest": MM_BINARY_INGEST_SPARK_SQL}
+""",
+}
 
 #: the SQL dual reads binaryFile.`fixture_path()` — a runner executing
 #: it standalone (fresh env, no fluent-first ordering) must create the

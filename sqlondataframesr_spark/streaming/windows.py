@@ -39,12 +39,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import _canonicalize_ts, load_table
+from ..functions.dialect import DUCK, SPARK, Dialect, render
 
 TUMBLE_WIDTH = "1 day"
 SLIDE_WIDTH = "1 day"
 SLIDE_STEP = "12 hours"
 SESSION_GAP = "1 hour"
 WATERMARK_DELAY = "1 hour"
+
 
 def _raw_events_schema(spark: SparkSession, sf_dir: str):
     """Schema for the streaming file source, read from the batch
@@ -434,11 +436,12 @@ def evt_click_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVT_CLICK_PURCHASE_PAIRS_ORACLE = """
+def _click_purchase_pairs_sql(d: Dialect) -> str:
+    return f"""
 SELECT c.user_id,
        c.event_id AS click_id,
        p.event_id AS purchase_id,
-       CAST(epoch_us(p.ts) - epoch_us(c.ts) AS BIGINT) AS dt_us
+       CAST({d.fn("epoch_us", "p.ts")} - {d.fn("epoch_us", "c.ts")} AS BIGINT) AS dt_us
 FROM events c
 JOIN events p
   ON c.user_id = p.user_id
@@ -508,17 +511,19 @@ def evt_click_purchase_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EVT_CLICK_PURCHASE_LEFT_ORACLE = """
+def _click_purchase_left_sql(d: Dialect) -> str:
+    return f"""
 SELECT c.user_id, c.event_id AS click_id,
-       epoch_us(c.ts) AS click_us,
+       {d.fn("epoch_us", "c.ts")} AS click_us,
        p.event_id AS purchase_id,
-       epoch_us(p.ts) - epoch_us(c.ts) AS dt_us
+       {d.fn("epoch_us", "p.ts")} - {d.fn("epoch_us", "c.ts")} AS dt_us
 FROM (SELECT * FROM events WHERE event_type = 'click') c
 LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
   ON c.user_id = p.user_id
  AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 2 HOURS
 ORDER BY click_id, purchase_id
 """
+
 
 def ohlc_candles(events: DataFrame) -> DataFrame:
     """Hourly OHLC candle bars of purchase values, window-function-free
@@ -560,12 +565,6 @@ def evt_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
 CMS_STREAM_DEPTH = 4
 CMS_STREAM_WIDTH = 1024
 
-_CMS_USER_BUCKET = (
-    "pmod(cast(conv(substring(md5(concat(cast(j as string), ':',"
-    " cast(user_id as string))), 1, 13), 16, 10) as bigint),"
-    f" {CMS_STREAM_WIDTH})"
-)
-
 #: the depth axis as a SQL literal — interpolated into the CMS duals so
 #: a geometry change can never desync them from the fluent path
 _CMS_J_ARRAY = "array(" + ", ".join(str(i) for i in range(CMS_STREAM_DEPTH)) + ")"
@@ -588,7 +587,7 @@ def cms_user_cells(events: DataFrame) -> DataFrame:
         .groupBy(
             F.window("ts", "1 day").alias("w"),
             "j",
-            F.expr(_CMS_USER_BUCKET).alias("bucket"),
+            F.expr(_cms_user_bucket_sql(SPARK)).alias("bucket"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cell_cnt"))
         .select(F.col("w.start").cast("date").alias("day"), "j", "bucket", "cell_cnt")
@@ -637,7 +636,7 @@ def evt_cms_user_merge_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = top.withColumn("rnk", F.row_number().over(w))
     js = F.array(*[F.lit(i) for i in range(CMS_STREAM_DEPTH)])
     probes = top.withColumn("j", F.explode(js)).withColumn(
-        "bucket", F.expr(_CMS_USER_BUCKET)
+        "bucket", F.expr(_cms_user_bucket_sql(SPARK))
     )
     return (
         probes.join(F.broadcast(merged), ["j", "bucket"])
@@ -654,29 +653,37 @@ def evt_cms_user_merge_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMS_USER_BUCKET_DUCK = (
-    "(('0x' || substr(md5(CAST(j AS VARCHAR) || ':' ||"
-    " CAST(user_id AS VARCHAR)), 1, 13))::BIGINT"
-    f" % {CMS_STREAM_WIDTH})"
-)
+def _cms_user_bucket_sql(d: Dialect) -> str:
+    """The count-min bucket of ``user_id`` in row ``j`` (non-negative
+    hash: ``%`` is ``pmod``)."""
+    key = f"{d.cast_str('j')} || ':' || {d.cast_str('user_id')}"
+    return f"({d.hex_bigint(f'substr(md5({key}), 1, 13)')} % {CMS_STREAM_WIDTH})"
 
-EVT_CMS_DAILY_CELLS_ORACLE = f"""
+
+def _cms_daily_cells_sql(d: Dialect) -> str:
+    return f"""
 WITH stream AS (
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day, user_id, j.j
-    FROM events CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+    FROM events CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 )
-SELECT day, j, {_CMS_USER_BUCKET_DUCK} AS bucket,
+SELECT day, j, {_cms_user_bucket_sql(d)} AS bucket,
        CAST(COUNT(*) AS BIGINT) AS cell_cnt
 FROM stream GROUP BY 1, 2, 3 ORDER BY day, j, bucket
 """
 
-EVT_CMS_USER_MERGE_ORACLE = f"""
+_TOP_USERS = """SELECT user_id, exact_cnt,
+           row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rnk
+    FROM exact"""
+
+
+def _cms_user_merge_sql(d: Dialect) -> str:
+    return f"""
 WITH stream AS (
     SELECT user_id, j.j
-    FROM events CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+    FROM events CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 ),
 merged AS (
-    SELECT j, {_CMS_USER_BUCKET_DUCK} AS bucket,
+    SELECT j, {_cms_user_bucket_sql(d)} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS cell_cnt
     FROM stream GROUP BY 1, 2
 ),
@@ -685,14 +692,12 @@ exact AS (
     FROM events GROUP BY user_id
 ),
 top AS (
-    SELECT user_id, exact_cnt,
-           row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rnk
-    FROM exact QUALIFY rnk <= {CMS_USER_TOP}
+    {d.qualify(_TOP_USERS, f"rnk <= {CMS_USER_TOP}")}
 ),
 probes AS (
     SELECT t.user_id, t.exact_cnt, t.rnk, j.j,
-           {_CMS_USER_BUCKET_DUCK} AS bucket
-    FROM top t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) j
+           {_cms_user_bucket_sql(d)} AS bucket
+    FROM top t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
 )
 SELECT p.user_id, p.exact_cnt,
        MIN(c.cell_cnt) AS cms_cnt,
@@ -744,24 +749,26 @@ QUERIES = {
     "evt_cms_user_merge_report": evt_cms_user_merge_report,
 }
 
-ORACLES = {
+TEMPLATES = {
+    "evt_click_purchase_pairs": _click_purchase_pairs_sql,
+    "evt_click_purchase_left": _click_purchase_left_sql,
+    "evt_cms_user_merge_report": _cms_user_merge_sql,
+}
+ORACLES, SPARK_SQL = render(TEMPLATES)
+ORACLES |= {
     "evt_ohlc_candles": EVT_OHLC_CANDLES_ORACLE,
-    "evt_click_purchase_pairs": EVT_CLICK_PURCHASE_PAIRS_ORACLE,
-    "evt_click_purchase_left": EVT_CLICK_PURCHASE_LEFT_ORACLE,
     "evt_segment_daily": EVT_SEGMENT_DAILY_ORACLE,
     "evt_tumbling_daily": EVT_TUMBLING_DAILY_ORACLE,
     "evt_sliding_12h": EVT_SLIDING_12H_ORACLE,
     "evt_sessions_1h": EVT_SESSIONS_1H_ORACLE,
-    "evt_cms_daily_cells": EVT_CMS_DAILY_CELLS_ORACLE,
-    "evt_cms_user_merge_report": EVT_CMS_USER_MERGE_ORACLE,
+    "evt_cms_daily_cells": _cms_daily_cells_sql(DUCK),
 }
 
-# Spark-SQL N-version forms — the SQL spelling of event-time windows
-# (GROUP BY window(...)) against the fluent F.window plan.
-SPARK_SQL: dict[str, str] = {
-    # r12 duals for the remaining batch-expressible window rows: the
-    # min_by/max_by OHLC endpoints and the CMS cells/merge (explode +
-    # md5 buckets + GROUP BY window — every piece has a SQL spelling).
+# deliberate duals: Spark's event-time spelling (GROUP BY window(...) /
+# session_window(...), min_by/max_by endpoints) against the oracles'
+# date_trunc / row_number forms, so the check proves the windowed
+# aggregation the streaming plans run ≡ the batch arithmetic.
+SPARK_SQL |= {
     "evt_ohlc_candles": """
 SELECT w.window.start AS hour, w.open_cents, w.high_cents, w.low_cents,
        w.close_cents, w.n_events
@@ -781,54 +788,12 @@ ORDER BY hour
     "evt_cms_daily_cells": f"""
 SELECT CAST(w.window.start AS DATE) AS day, w.j, w.bucket, w.cell_cnt
 FROM (
-  SELECT window, j, {_CMS_USER_BUCKET} AS bucket,
+  SELECT window, j, {_cms_user_bucket_sql(SPARK)} AS bucket,
          CAST(COUNT(1) AS BIGINT) AS cell_cnt
   FROM (SELECT ts, user_id, explode({_CMS_J_ARRAY}) AS j FROM events)
-  GROUP BY window(ts, '1 day'), j, {_CMS_USER_BUCKET}
+  GROUP BY window(ts, '1 day'), j, {_cms_user_bucket_sql(SPARK)}
 ) w
 ORDER BY day, j, bucket
-""",
-    "evt_cms_user_merge_report": f"""
-WITH merged AS (
-  SELECT j, {_CMS_USER_BUCKET} AS bucket,
-         CAST(COUNT(1) AS BIGINT) AS cell_cnt
-  FROM (SELECT user_id, explode({_CMS_J_ARRAY}) AS j FROM events)
-  GROUP BY j, {_CMS_USER_BUCKET}
-),
-exact AS (
-  SELECT user_id, CAST(COUNT(1) AS BIGINT) AS exact_cnt
-  FROM events GROUP BY user_id
-),
-top AS (
-  SELECT user_id, exact_cnt, rnk
-  FROM (SELECT *, row_number() OVER (ORDER BY exact_cnt DESC, user_id) AS rnk
-        FROM exact)
-  WHERE rnk <= 10
-),
-probes AS (
-  SELECT t.user_id, t.exact_cnt, t.rnk, j.j, {_CMS_USER_BUCKET} AS bucket
-  FROM top t LATERAL VIEW explode({_CMS_J_ARRAY}) j AS j
-)
-SELECT p.user_id, p.exact_cnt,
-       MIN(c.cell_cnt) AS cms_cnt,
-       MIN(c.cell_cnt) - p.exact_cnt AS overcount,
-       p.rnk
-FROM probes p JOIN merged c ON p.j = c.j AND p.bucket = c.bucket
-GROUP BY p.user_id, p.exact_cnt, p.rnk
-ORDER BY p.rnk
-""",
-    "evt_click_purchase_left": """
-SELECT c.user_id,
-       c.event_id AS click_id,
-       unix_micros(c.ts) AS click_us,
-       p.event_id AS purchase_id,
-       unix_micros(p.ts) - unix_micros(c.ts) AS dt_us
-FROM (SELECT * FROM events WHERE event_type = 'click') c
-LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-  ON c.user_id = p.user_id
- AND p.ts >= c.ts
- AND p.ts < c.ts + INTERVAL 2 HOURS
-ORDER BY click_id, purchase_id
 """,
     "evt_tumbling_daily": """
 SELECT w.window.start AS ws, w.event_type, w.n_events, w.total_value
@@ -840,20 +805,6 @@ FROM (
   GROUP BY window(ts, '1 day'), event_type
 ) w
 ORDER BY ws, event_type
-""",
-    "evt_click_purchase_pairs": """
-SELECT c.user_id,
-       c.event_id AS click_id,
-       p.event_id AS purchase_id,
-       unix_micros(p.ts) - unix_micros(c.ts) AS dt_us
-FROM events c
-JOIN events p
-  ON c.user_id = p.user_id
- AND c.event_type = 'click'
- AND p.event_type = 'purchase'
- AND p.ts >= c.ts
- AND p.ts < c.ts + INTERVAL 2 HOURS
-ORDER BY click_id, purchase_id
 """,
     "evt_sliding_12h": """
 SELECT w.window.start AS ws, w.n_events, w.total_value

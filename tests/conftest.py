@@ -31,3 +31,26 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_dir_mid():
     return SF_DIR_MID
+
+
+@pytest.fixture(scope="session")
+def oracle_rows():
+    """Each DuckDB oracle runs once per session: ``(sf_dir, oracle
+    text) -> check.duckdb_rows(...)``, shared by the oracle test and the
+    dual test, which would otherwise both execute it."""
+    from sqlondataframesr_spark.check import duckdb_connect, duckdb_rows
+
+    cons: dict = {}
+    memo: dict = {}
+
+    def rows(sf_dir: str, sql: str):
+        key = (sf_dir, sql)
+        if key not in memo:
+            if sf_dir not in cons:
+                cons[sf_dir] = duckdb_connect(sf_dir)
+            memo[key] = duckdb_rows(cons[sf_dir], sql)
+        return memo[key]
+
+    yield rows
+    for con in cons.values():
+        con.close()

@@ -365,6 +365,7 @@ def test_kmeans_improves_assignment_quality(spark, sf_dir):
     mean assignment cosine no worse than the untrained (first-K-ids)
     codebook — Lloyd iterations cannot degrade the objective."""
     from pyspark.sql import functions as F
+    from sqlondataframesr_spark.functions.dialect import SPARK
     from sqlondataframesr_spark.llm import similarity as S
 
     vec = S._vectors(spark, sf_dir).localCheckpoint(eager=False)
@@ -376,7 +377,7 @@ def test_kmeans_improves_assignment_quality(spark, sf_dir):
     def mean_best_cos(cent_df):
         scored = vec.join(F.broadcast(cent_df)).select(
             "vec_id",
-            F.expr(S._COS.format(a="v", b="cv", na="nrm", nb="cn")).alias("c"),
+            F.expr(S.V.cosine(SPARK, "v", "cv", "nrm", "cn", S.DIM)).alias("c"),
         )
         best = scored.groupBy("vec_id").agg(F.max("c").alias("b"))
         return best.agg(F.avg("b")).collect()[0][0]
@@ -401,6 +402,7 @@ def test_ivf_trained_uses_kmeans_codebook(spark, sf_dir):
     query)."""
     from pyspark.sql import functions as F
 
+    from sqlondataframesr_spark.functions.dialect import SPARK
     from sqlondataframesr_spark.llm import similarity as S
 
     rows = S.ann_ivf_trained(spark, sf_dir).collect()
@@ -421,7 +423,7 @@ def test_ivf_trained_uses_kmeans_codebook(spark, sf_dir):
         vec.filter(F.col("vec_id") < S.N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn"))
         .join(F.broadcast(cent))
-        .select("q_id", "c_id", F.expr(S._COS.format(a="qv", b="cv", na="qn", nb="cn")).alias("ccos"))
+        .select("q_id", "c_id", F.expr(S.V.cosine(SPARK, "qv", "cv", "qn", "cn", S.DIM)).alias("ccos"))
         .collect()
     )
     probes = {}
@@ -1035,7 +1037,7 @@ def test_matryoshka_zero_prefix_agrees_across_engines(spark, tmp_path):
         con.execute(
             f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{pq}/*.parquet')"
         )
-        oracle = duckdb_rows(con, S.ANN_MATRYOSHKA_TOPK_ORACLE)
+        oracle = duckdb_rows(con, S.ORACLES["ann_matryoshka_topk"])
     finally:
         con.close()
     problems = compare_rows(cols, lrows, *oracle)

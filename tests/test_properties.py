@@ -224,7 +224,7 @@ def test_keep_best_is_order_invariant(spark, texts):
 
     def run(df):
         df.createOrReplaceTempView("documents")
-        return spark.sql(curation.DEDUP_KEEP_BEST_SPARK_SQL)
+        return spark.sql(curation.SPARK_SQL["dedup_keep_best"])
 
     a = [tuple(r) for r in run(base).collect()]
     b = [tuple(r) for r in run(shuffled).collect()]

@@ -13,24 +13,24 @@ import pytest
 
 from sqlondataframesr_spark import registry
 from sqlondataframesr_spark.catalog import register_views
-from sqlondataframesr_spark.check import compare_spark_duckdb
+from sqlondataframesr_spark.check import compare_rows, spark_rows
 
 NAMES = sorted(registry.queries())
 
 
 @pytest.mark.parametrize("name", NAMES)
-def test_vs_duckdb_oracle(spark, sf_dir, name):
+def test_vs_duckdb_oracle(spark, sf_dir, name, oracle_rows):
     df = registry.queries()[name](spark, sf_dir)
     oracle = registry.oracles().get(name)
     if oracle is None:
         assert df.count() >= 0
         return
-    problems = compare_spark_duckdb(df, oracle, sf_dir)
+    problems = compare_rows(*spark_rows(df), *oracle_rows(sf_dir, oracle))
     assert not problems, f"{name}: {problems}"
 
 
 @pytest.mark.parametrize("name", sorted(registry.spark_sql()))
-def test_fluent_vs_spark_sql(spark, sf_dir, name):
+def test_fluent_vs_spark_sql(spark, sf_dir, name, oracle_rows):
     """The SQL form against the oracle; with test_vs_duckdb_oracle this
     proves fluent ≡ SQL by transitivity."""
     register_views(spark, sf_dir)
@@ -38,7 +38,7 @@ def test_fluent_vs_spark_sql(spark, sf_dir, name):
     # work standalone, not rely on fluent-first ordering (ADVICE r6)
     registry.sql_prereqs().get(name, lambda: None)()
     via_sql = spark.sql(registry.spark_sql()[name])
-    problems = compare_spark_duckdb(via_sql, registry.oracles()[name], sf_dir)
+    problems = compare_rows(*spark_rows(via_sql), *oracle_rows(sf_dir, registry.oracles()[name]))
     assert not problems, f"{name}: {problems}"
 
 

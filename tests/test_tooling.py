@@ -1,12 +1,15 @@
-"""One measurement path and one comparator: the bench and the scripts
-must compile under names that shadow no stdlib module, and the
-status-store reader, the conf profiles, the float rule and the DuckDB
-star views must each live in one place (perfbench/, session.PROFILES
-and check.py), so a second copy cannot drift from what the bench times
-or from what the driver's value hash accepts."""
+"""One measurement path, one comparator and one SQL source per query:
+the bench and the scripts must compile under names that shadow no
+stdlib module, and the status-store reader, the conf profiles, the
+float rule, the DuckDB star views and the DuckDB/Spark-SQL spellings
+must each live in one place (perfbench/, session.PROFILES, check.py
+and functions/dialect.py), so a second copy cannot drift from what the
+bench times, from what the driver's value hash accepts, or from the
+oracle its dual is checked against."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import importlib.util
 import os
@@ -22,6 +25,16 @@ JOIN_PROFILE_CONF = re.escape("spark.sql.join." + "preferSortMergeJoin")
 FLOAT_TOLERANCE = re.escape("math." + "isclose")
 EXACT_ENV_READ = r"""(environ\.get\(|environ\[|getenv\()\s*["']EXACT["']"""
 DUCKDB_VIEW = r"(?i)CREATE\s+(OR\s+REPLACE\s+)?VIEW\b"
+TWIN_NAME = re.compile(r"(_DUCK|_SPARK|_DUCK_SQL|_SPARK_SQL)$")
+DIALECT_BRANCH = r"""\bdialect\s*:\s*str\b|==\s*["'](duck|spark)["']"""
+PACKAGE = os.path.join(ROOT, "sqlondataframesr_spark")
+#: the one place a dialect spelling lives
+DIALECT_MODULE = os.path.join("sqlondataframesr_spark", "functions", "dialect.py")
+#: the paper's six tasks keep their ``Q<n>_SPARK_SQL`` names: the
+#: benchmark times queries/reference.py as is
+REFERENCE_TWINS = re.compile(
+    re.escape(os.path.join("sqlondataframesr_spark", "queries", "reference.py")) + r":Q[1-6]_SPARK_SQL$"
+)
 
 
 def _py_files() -> list[str]:
@@ -94,6 +107,45 @@ def test_duckdb_views_only_in_check():
                 if re.search(DUCKDB_VIEW, line) and not (fixture and fixture in line):
                     sites.append(f"{rel}:{n}")
     assert sites == []
+
+
+def _package_modules() -> list[tuple[str, ast.Module]]:
+    out = []
+    for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
+        rel = _rel(path)
+        if rel != DIALECT_MODULE:
+            with open(path, encoding="utf-8") as fh:
+                out.append((rel, ast.parse(fh.read(), path)))
+    return out
+
+
+def _is_private_sql(name: str) -> bool:
+    # a private constant or SQL builder: _COS, _VEC_SQL, _kmeans_parts
+    return name.startswith("_") and (name.isupper() or name.endswith(("_sql", "_parts", "_cte")))
+
+
+def test_one_sql_source_per_query():
+    """Outside functions/dialect.py no module keeps a DuckDB/Spark twin:
+    no ``*_DUCK`` / ``*_SPARK`` / ``*_SPARK_SQL`` name (the six
+    ``Q<n>_SPARK_SQL`` names of queries/reference.py aside), no string
+    dialect switch, and no private SQL fragment shared across modules
+    (a shared builder is public and takes the Dialect)."""
+    twins, branches, imports = [], [], []
+    for rel, tree in _package_modules():
+        for node in tree.body:
+            targets = node.targets if isinstance(node, ast.Assign) else (
+                [node.target] if isinstance(node, ast.AnnAssign) else [])
+            twins += [f"{rel}:{t.id}" for t in targets
+                      if isinstance(t, ast.Name) and t.id != "SPARK_SQL" and TWIN_NAME.search(t.id)
+                      and not REFERENCE_TWINS.match(f"{rel}:{t.id}")]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.level > 0:
+                imports += [f"{rel}:{a.name}" for a in node.names if _is_private_sql(a.name)]
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
+            branches += [f"{rel}:{n}" for n, line in enumerate(fh, 1) if re.search(DIALECT_BRANCH, line)]
+    assert twins == []
+    assert branches == []
+    assert imports == []
 
 
 def test_bench_tracer_counts_jobs_run_under_another_group(spark):
