@@ -74,7 +74,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # member used to run its Lloyd k-means INSIDE the report action —
     # its centroid frame is consumed by TWO broadcast exchanges
     # (assignment + query probes), which raced on the lazy
-    # localCheckpoint and trained twice (~3 s of the report's 8.8).
+    # truncation and trained twice (~3 s of the report's 8.8).
     # Train ONCE on the pinned vec cache, pin the K-row result, and
     # plug it into the identical serving machinery. The composed plan
     # and the result are unchanged (ann_ivf_trained == _ivf_from_

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
+from ..operators.components import min_label_components
 from ..catalog import load_table
 from ..functions.dialect import DUCK, SPARK, Dialect, render
 from ..functions.rounding import r6 as _r6, r6_sql
@@ -762,14 +763,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
        inverted-shingle Jaccard join (identical texts have identical
        shingle sets, so the relation factors exactly through
        fingerprints).
-    3. **Iterative min-label propagation** on the compressed graph:
-       label(v) <- min(label(v), min over neighbours) until fixpoint,
-       O(component diameter) rounds, each round one shuffle of the
-       (tiny) label table; localCheckpoint per round keeps the plan
-       from growing. This is the hash-to-min CC scheme (Kiveris et
-       al., "Connected Components in MapReduce"); for adversarial
-       long-chain graphs swap in large-star/small-star — dup graphs
-       in practice are dense blobs with diameter 1-2.
+    3. **Connected components** of the compressed graph through the
+       shared loop, :func:`..operators.components.min_label_components`
+       (hash-to-min label propagation with pointer jumping, each round
+       one join and one aggregate of the tiny label table, cut by
+       ``materialize.truncate``). Dup graphs are dense blobs with
+       diameter 1-2; the 20-round cap is far above that, and an
+       unconverged exit raises.
     4. **Expand members back** through the fingerprint map.
 
     min doc_id of a component is always a representative (the min doc
@@ -794,54 +794,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .transform(materialize)
     )
-    # Min-label propagation with driver round-trips HALVED: the
-    # convergence count is only taken every second round (dup graphs
-    # converge in 1-2 rounds, so the common case is ONE count job that
-    # materializes two propagation rounds in a single lineage, instead
-    # of an eager checkpoint + count per round). Checkpoints stay lazy;
-    # the count is what materializes them.
-    labels = reps.select(F.col("rep").alias("node"), F.col("rep").alias("label"))
-    max_rounds = 20  # cap >> real dup-graph diameter
-    converged = False
-    for rnd in range(1, max_rounds + 1):
-        msg = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(msg, labels.node == msg.node2, "left")
-            .select(
-                "node",
-                F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
-            )
-            # in-loop: localCheckpoint TRUNCATES lineage so the plan
-            # stays one join deep per round (persist would grow it by
-            # a join per iteration). Executor loss here fails the job;
-            # retry story = re-run the query (deterministic). At
-            # production scale use setCheckpointDir + checkpoint().
-            .localCheckpoint(eager=False)
-        )
-        converged = False
-        if rnd % 2 == 0 or rnd == max_rounds:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            converged = changed == 0
-        labels = new_labels
-        if converged:
-            break
-    # oracle = FULL recursive closure — an unconverged exit must fail
-    # loudly, not surface as a differential mismatch (ADVICE r6, same
-    # guard as emb_semantic_clusters)
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters: min-label propagation did not converge "
-            f"within {max_rounds} rounds; raise max_rounds"
-        )
+    nodes = reps.select(F.col("rep").alias("node"))
+    labels = min_label_components(nodes, edges, max_rounds=20)
 
     member_label = fp.join(reps.select("fp", "rep"), "fp").join(
         labels, F.col("rep") == F.col("node")

@@ -18,7 +18,7 @@ kmeans_train (llm/similarity.py:443) and the integer PageRank
   explode-free 64-column integer aggregate (the
   emb_label_centroid pattern), and the weight update is a 1-row x
   1-row crossJoin. State between rounds is ONE row;
-  ``localCheckpoint`` keeps the lazy plan flat.
+  ``materialize.truncate`` keeps the lazy plan flat.
 - at 100 TB each round is one bandwidth-bound scan + a tiny global
   aggregate — the same cost envelope as a Lloyd iteration; nothing
   quadratic, nothing driver-side.
@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..materialize import materialize
+from ..materialize import materialize, truncate
 from ..functions.dialect import Dialect, render
 from .similarity import DIM
 
@@ -80,7 +80,7 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: r13 (guide §1.2 "per-task work" applied to the DRIVER): profiling
 #: showed ~0.5 s PER ROUND of pure py4j plan construction for the 64
 #: separate Column objects (each F.sum/.cast/.alias chain is its own
-#: JVM round-trip) plus ~0.25 s of JVM analysis at the localCheckpoint
+#: JVM round-trip) plus ~0.25 s of JVM analysis at the truncation
 #: call. One string expression parsed JVM-side builds the IDENTICAL
 #: aggregate plan (same coalesce(sum(..), 0)::bigint per dimension)
 #: with two py4j calls per round instead of ~260.
@@ -122,7 +122,7 @@ def _train(spark: SparkSession, sf_dir: str):
         w = (
             w.crossJoin(upd)
             .selectExpr(_NEW_WS, "cast(b + u.db as bigint) as b", "u.nm as nm")
-            .localCheckpoint(eager=False)
+            .transform(truncate)
         )
         curve_rows.append(
             w.selectExpr(
@@ -259,7 +259,7 @@ def ml_perceptron_ovr_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ovr_new_ws,
                 "cast(b + coalesce(u.db, 0L) as bigint) as b",
             )
-            .localCheckpoint(eager=False)
+            .transform(truncate)
         )
     scored = q10.join(F.broadcast(w), "cls").withColumn("mg", F.expr(mg_expr))
     pred = scored.groupBy("vec_id").agg(

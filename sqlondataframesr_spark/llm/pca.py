@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.dialect import DUCK, SPARK, Dialect
-from ..materialize import materialize
+from ..materialize import materialize, truncate
 
 #: embedding dimensionality of the testdata embeddings table
 PCA_DIM = 64
@@ -156,19 +156,10 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # the squaring chain is a 3-round iterative loop on a DIM^2-bounded
-    # frame: localCheckpoint (the materialize.py iterative-loop remedy)
-    # truncates lineage so Catalyst analysis stays flat per round —
-    # with lazy persist the per-round wall time grew 0.4s -> 1.5s ->
-    # 5.3s on IDENTICAL 4,096-row inputs, pure plan-depth cost.
-    # Fault-tolerance caveat (ADVICE r11): localCheckpoint truncates
-    # lineage NON-fault-tolerantly — a lost block (executor death)
-    # cannot be recomputed and fails the whole job; the retry story is
-    # re-submitting the query, which is cheap only because every
-    # checkpointed intermediate here is <= DIM^2 rows and the corpus
-    # pass that feeds it runs once. Where that resubmit isn't
-    # acceptable, use sparkContext.setCheckpointDir + reliable
-    # checkpoint() (see materialize.py docstring).
-    b1 = rescale(c, "cv").localCheckpoint()
+    # frame: truncate each round so Catalyst analysis stays flat — with
+    # lazy persist the per-round wall time grew 0.4s -> 1.5s -> 5.3s on
+    # IDENTICAL 4,096-row inputs, pure plan-depth cost.
+    b1 = truncate(rescale(c, "cv"))
 
     def square(m: DataFrame) -> DataFrame:
         x = m.selectExpr("a", "b as k", "p as pa")
@@ -178,8 +169,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             .selectExpr("a", "b", _tdiv(SPARK, "pa * pb", str(_U)) + " as m")
             .groupBy("a", "b")
             .agg(F.sum("m").cast("long").alias("raw"))
-        ).localCheckpoint()  # also stops rescale's max-agg re-deriving the join
-        return rescale(mm, "raw").localCheckpoint()
+        ).transform(truncate)  # also stops rescale's max-agg re-deriving the join
+        return truncate(rescale(mm, "raw"))
 
     b8 = square(square(square(b1)))
     v = b8.groupBy("a").agg(F.sum("p").cast("long").alias("v"))

@@ -40,7 +40,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..materialize import materialize, spread_scan
+from ..materialize import materialize, spread_scan, truncate
+from ..operators.components import min_label_components
 from ..catalog import load_table
 from ..functions import vector as V
 from ..functions.dialect import DUCK, SPARK, Dialect, render
@@ -448,10 +449,7 @@ def _kmeans_centroids(vec: DataFrame) -> DataFrame:
         cent = (
             g.select(F.col("list_id").alias("c_id"), "n", F.array(*comps).alias("cv"))
             .withColumn("cn", F.expr(V.l2_norm("cv")))
-            # in-loop: localCheckpoint TRUNCATES lineage so the K-row
-            # centroid plan stays flat across Lloyd rounds; loss =>
-            # re-run query. Production: reliable checkpoint() per round.
-            .localCheckpoint(eager=False)
+            .transform(truncate)
         )
     return cent
 
@@ -468,7 +466,7 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no shuffle of the corpus), then ONE hash aggregate keyed on the
     cluster id for the centroid update (the explode-free 64-column
     integer-micros mean of :func:`emb_label_centroid`). State between
-    iterations is K rows; ``localCheckpoint`` pins each round so the
+    iterations is K rows; ``materialize.truncate`` cuts each round so the
     lazy plan doesn't grow K*ITERS deep. At 100 TB each iteration is
     one corpus scan + one 8-group aggregate — bandwidth-bound, no
     quadratic term anywhere.
@@ -1300,12 +1298,12 @@ def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The embedding-space analogue of ``dedup_clusters`` — pairwise
     semantic verdicts become a keep/drop partition (keep vec_id ==
     cluster_id, or route each cluster through a quality-ranked keeper
-    policy). Same min-label-propagation CC harness: per round ONE
-    shuffle of the (vec_id, label) table, O(component diameter) rounds
-    with lazy localCheckpoint lineage truncation; semantic-dup blobs
-    are diameter 1-2 in practice so the halved convergence count
-    usually fires once. Singleton vectors (no qualifying edge) remain
-    their own cluster of size 1 — the report covers the WHOLE corpus.
+    policy). Same connected-components loop,
+    :func:`..operators.components.min_label_components`: per round one
+    join and one aggregate of the (vec_id, label) table, cut by
+    ``materialize.truncate``; near-dup chains in the sf0.1 testdata
+    need 6 rounds. Singleton vectors (no qualifying edge) remain their
+    own cluster of size 1 — the report covers the WHOLE corpus.
 
     The DuckDB oracle replays the banded candidate generation and a
     WITH RECURSIVE reachability closure — the same unbounded-iteration
@@ -1320,45 +1318,7 @@ def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("node")
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    max_rounds = 20
-    converged = False
-    for rnd in range(1, max_rounds + 1):
-        msg = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(msg, labels.node == msg.node2, "left")
-            .select(
-                "node",
-                F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        converged = False
-        if rnd % 2 == 0 or rnd == max_rounds:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .filter(F.col("n.label") != F.col("o.label"))
-                .count()
-            )
-            converged = changed == 0
-        labels = new_labels
-        if converged:
-            break
-    # The DuckDB oracle computes the FULL recursive closure; silently
-    # returning unconverged labels would surface as a confusing
-    # differential mismatch instead of a clear error (ADVICE r6). A
-    # component with diameter > max_rounds must fail loudly here.
-    if not converged:
-        raise RuntimeError(
-            f"emb_semantic_clusters: min-label propagation did not "
-            f"converge within {max_rounds} rounds — a near-dup chain "
-            f"longer than the round cap exists; raise max_rounds"
-        )
+    labels = min_label_components(nodes, edges, max_rounds=20)
 
     sized = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (

@@ -11,21 +11,20 @@ Two pinning strategies exist, with different failure semantics:
   lost executor's blocks are *recomputed* from the parquet scan;
   correct at 100 TB with preemptible/spot executors. This is the
   default here (VERDICT r3 item 7).
-- ``localCheckpoint`` — truncates lineage; blocks die with their
-  executor and the job fails (retry = re-run the query). Only used
-  inside iterative loops (label propagation, Lloyd iterations) where
+- ``localCheckpoint`` — truncates lineage, through :func:`truncate`,
+  the one caller. Only used inside iterative loops (label propagation,
+  Lloyd iterations, perceptron rounds, the PCA squaring chain) where
   truncation is the point: without it the logical plan grows by one
-  join per round and analysis time dominates. For production clusters
-  the upgrade path is ``sparkContext.setCheckpointDir`` + reliable
-  ``checkpoint()`` per round; at our round counts (<=12, on tables
-  bounded by doc/cluster count) re-run-on-loss is an acceptable
-  retry story and is documented at each call site.
+  join per round and analysis time dominates. Its failure semantics
+  and the production upgrade path are documented at ``truncate``.
 
-Lifecycle: every pinned frame is registered and released by
-``release_all()``, which the entry points (driver wrapper, bench
-loop, test session teardown) call between queries — so one query's
-cache cannot crowd the next query's working set. ``persist`` entries
-would otherwise live in the CacheManager until session end.
+Lifecycle: every pinned frame and every truncation is registered and
+released by ``release_all()``, which the entry points (driver wrapper,
+bench loop, test session teardown) call between queries — so one
+query's blocks cannot crowd the next query's working set. ``persist``
+entries would otherwise live in the CacheManager until session end,
+and a truncation's blocks until the ContextCleaner finds its RDD
+unreachable: ``DataFrame.unpersist`` does not free them.
 
 Use as ``df.transform(materialize)`` to keep method-chain style.
 """
@@ -36,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark import StorageLevel
 
 _PINNED: list[DataFrame] = []
+#: the JVM RDDs holding the blocks of :func:`truncate`'s frames
+_TRUNCATED: list = []
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -52,6 +53,28 @@ def materialize(df: DataFrame) -> DataFrame:
     """
     df = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
     _PINNED.append(df)
+    return df
+
+
+def truncate(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: a lazy ``localCheckpoint``, for the state an
+    iterative loop carries from one round to the next, so the plan stays
+    one round deep instead of growing by a join per round.
+
+    Fault tolerance: the checkpointed blocks live only on the executor
+    that computed them. Losing that executor fails the job, and the
+    retry is re-running the query (every query here is deterministic).
+    That is acceptable because each truncated frame is bounded by a
+    node, cluster or matrix count and the corpus pass that feeds it
+    runs once. At production scale, where a resubmit is not acceptable,
+    use ``sparkContext.setCheckpointDir`` + reliable ``checkpoint()``.
+
+    Right after the call the logical plan is the ``LogicalRDD`` over the
+    checkpointed RDD; that RDD is recorded so ``release_all`` can
+    unpersist it. A released frame can no longer be executed.
+    """
+    df = df.localCheckpoint(eager=False)
+    _TRUNCATED.append(df._jdf.queryExecution().logical().rdd())
     return df
 
 
@@ -132,11 +155,17 @@ def force_concurrently(frames: list[DataFrame], max_workers: int = 4) -> None:
 
 
 def release_all() -> None:
-    """Unpersist every frame pinned since the last release (per-query
-    cache scope; safe to call with queries in flight — unpersist only
-    drops the cache, lineage recomputes if a plan is re-executed)."""
+    """Unpersist every frame pinned and every truncation made since the
+    last release (per-query cache scope). A persisted frame stays
+    computable after the release (lineage recomputes it); a truncated
+    one does not, so call this only after the query's last action."""
     while _PINNED:
         try:
             _PINNED.pop().unpersist(blocking=False)
+        except Exception:  # noqa: BLE001 - session may already be stopped
+            pass
+    while _TRUNCATED:
+        try:
+            _TRUNCATED.pop().unpersist(False)
         except Exception:  # noqa: BLE001 - session may already be stopped
             pass

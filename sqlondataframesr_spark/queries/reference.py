@@ -92,21 +92,7 @@ WHERE r.rn = 1
 ORDER BY r.yr
 """
 
-Q1_SPARK_SQL = """
-WITH upy AS (
-  SELECT l_orderkey, CAST(year(l_shipdate) AS INT) AS yr, COUNT(*) AS n_upvotes
-  FROM lineitem WHERE l_returnflag = 'N'
-  GROUP BY 1, 2
-), ranked AS (
-  SELECT yr, l_orderkey, n_upvotes,
-         ROW_NUMBER() OVER (PARTITION BY yr ORDER BY n_upvotes DESC, l_orderkey ASC) AS rn
-  FROM upy
-)
-SELECT r.yr, o.o_orderkey, o.o_orderpriority, r.n_upvotes
-FROM ranked r JOIN orders o ON o.o_orderkey = r.l_orderkey
-WHERE r.rn = 1
-ORDER BY r.yr
-"""
+Q1_SPARK_SQL = Q1_ORACLE
 
 
 # ---------------------------------------------------------------------------

@@ -367,8 +367,9 @@ def test_kmeans_improves_assignment_quality(spark, sf_dir):
     from pyspark.sql import functions as F
     from sqlondataframesr_spark.functions.dialect import SPARK
     from sqlondataframesr_spark.llm import similarity as S
+    from sqlondataframesr_spark.materialize import materialize
 
-    vec = S._vectors(spark, sf_dir).localCheckpoint(eager=False)
+    vec = materialize(S._vectors(spark, sf_dir))
     n_vecs = vec.count()
     trained = S.kmeans_train(spark, sf_dir).collect()
     assert sum(r.n for r in trained) == n_vecs

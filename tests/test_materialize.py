@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 from sqlondataframesr_spark.materialize import _PINNED, materialize, release_all
+from sqlondataframesr_spark.operators.components import min_label_components
 
 
 def test_materialize_pins_and_release_unpersists(spark):
@@ -16,6 +18,24 @@ def test_materialize_pins_and_release_unpersists(spark):
     release_all()
     assert not _PINNED
     assert pinned.storageLevel == StorageLevel.NONE
+
+
+def test_release_all_frees_truncated_blocks(spark):
+    """``DataFrame.unpersist`` leaves a ``localCheckpoint``'s blocks
+    cached, so ``release_all`` must unpersist the checkpointed RDDs that
+    ``truncate`` recorded: after the release no RDD stays cached."""
+    nodes = spark.range(6).select(F.col("id").alias("node"))
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 1), (4, 5), (5, 4)], "src bigint, dst bigint"
+    )
+    labels = min_label_components(nodes, edges)
+    assert sorted(labels.collect()) == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 4)
+    ]
+    sc = spark.sparkContext._jsc.sc()
+    assert len(sc.getRDDStorageInfo()) > 0
+    release_all()
+    assert [i.toString() for i in sc.getRDDStorageInfo()] == []
 
 
 def test_release_all_is_idempotent_and_safe(spark):

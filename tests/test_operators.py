@@ -1304,3 +1304,37 @@ def test_bloom_semijoin_no_false_negatives(spark, sf_dir):
     assert row.n_bloom_pass >= row.n_true_match
     assert row.n_false_pos >= 0
     assert row.n_dim_keys > 0 and row.n_true_match > 0
+
+
+def _chain_graph(spark):
+    """A 40-node path whose ids fall along the listed edge direction
+    (139 -> 138 -> ... -> 100, so the minimum sits at the far end), a
+    2-node component {7, 3} and the singletons 1 and 500."""
+    path = list(range(139, 99, -1))
+    pairs = list(zip(path, path[1:])) + [(7, 3)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src bigint, dst bigint"
+    )
+    nodes = spark.createDataFrame(
+        [(n,) for n in path + [7, 3, 1, 500]], "node bigint"
+    )
+    return nodes, edges, path
+
+
+def test_min_label_components_labels_each_component_by_its_min(spark):
+    from sqlondataframesr_spark.operators.components import min_label_components
+
+    nodes, edges, path = _chain_graph(spark)
+    got = {r.node: r.label for r in min_label_components(nodes, edges).collect()}
+    want = {n: min(path) for n in path} | {7: 3, 3: 3, 1: 1, 500: 500}
+    assert got == want
+
+
+def test_min_label_components_unconverged_exit_raises(spark):
+    import pytest
+
+    from sqlondataframesr_spark.operators.components import min_label_components
+
+    nodes, edges, _ = _chain_graph(spark)
+    with pytest.raises(RuntimeError, match="no fixpoint within 2 rounds"):
+        min_label_components(nodes, edges, max_rounds=2)

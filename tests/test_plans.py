@@ -741,12 +741,12 @@ def test_kmv_jaccard_pair_stages_are_broadcast(spark, sf_dir):
 
 def test_pca_reuses_the_quantized_frame(spark, sf_dir):
     """emb_pca_power: the squaring chain is an iterative loop on the
-    DIM^2-bounded frame, so each round is localCheckpoint-truncated
-    (the materialize.py iterative-loop remedy — lazy persist grew
-    0.4s -> 5.3s per round on identical 4,096-row inputs from pure
-    plan-depth analysis cost, VERDICT r10 item 3). The final plan must
-    therefore read the checkpointed matrix RDD (lineage cut), and no
-    squaring join may cartesian."""
+    DIM^2-bounded frame, so each round is cut by the shared
+    ``materialize.truncate`` (lazy persist grew 0.4s -> 5.3s per round
+    on identical 4,096-row inputs from pure plan-depth analysis cost,
+    VERDICT r10 item 3). The final plan must therefore read the
+    checkpointed matrix RDD (lineage cut), and no squaring join may
+    cartesian."""
     a = _audit(spark, sf_dir, "emb_pca_power")
     assert not a.has_cartesian
     assert "ExistingRDD" in a.text  # checkpoint truncation in effect

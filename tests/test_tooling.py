@@ -1,11 +1,12 @@
 """One measurement path, one comparator and one SQL source per query:
 the bench and the scripts must compile under names that shadow no
 stdlib module, and the status-store reader, the conf profiles, the
-float rule, the DuckDB star views and the DuckDB/Spark-SQL spellings
-must each live in one place (perfbench/, session.PROFILES, check.py
-and functions/dialect.py), so a second copy cannot drift from what the
-bench times, from what the driver's value hash accepts, or from the
-oracle its dual is checked against."""
+lineage cut, the float rule, the DuckDB star views and the
+DuckDB/Spark-SQL spellings must each live in one place (perfbench/,
+session.PROFILES, materialize.truncate, check.py and
+functions/dialect.py), so a second copy cannot drift from what the
+bench times, from what release_all frees, from what the driver's value
+hash accepts, or from the oracle its dual is checked against."""
 
 from __future__ import annotations
 
@@ -24,6 +25,7 @@ STATUS_STORE_CALL = re.escape("statusStore" + "()")
 JOIN_PROFILE_CONF = re.escape("spark.sql.join." + "preferSortMergeJoin")
 FLOAT_TOLERANCE = re.escape("math." + "isclose")
 EXACT_ENV_READ = r"""(environ\.get\(|environ\[|getenv\()\s*["']EXACT["']"""
+LOCAL_CHECKPOINT_CALL = re.escape(".local" + "Checkpoint(")
 DUCKDB_VIEW = r"(?i)CREATE\s+(OR\s+REPLACE\s+)?VIEW\b"
 TWIN_NAME = re.compile(r"(_DUCK|_SPARK|_DUCK_SQL|_SPARK_SQL)$")
 DIALECT_BRANCH = r"""\bdialect\s*:\s*str\b|==\s*["'](duck|spark)["']"""
@@ -83,6 +85,13 @@ def test_status_store_read_only_in_perfbench():
 def test_join_conf_profiles_only_in_session():
     allowed = {os.path.join("sqlondataframesr_spark", "session.py")}
     assert _sites(JOIN_PROFILE_CONF, allowed) == []
+
+
+def test_local_checkpoint_only_in_materialize():
+    # materialize.truncate is the one lineage cut: it records the
+    # checkpointed RDD so release_all can free its blocks
+    allowed = {os.path.join("sqlondataframesr_spark", "materialize.py")}
+    assert _sites(LOCAL_CHECKPOINT_CALL, allowed) == []
 
 
 def test_no_second_float_rule():
