@@ -1,21 +1,38 @@
-"""Benchmark harness — the analogue of the reference's
-``microbenchmark(times=5)`` tables (RDataFramesSQL.Rmd:139-152 and
-siblings; numbers in BASELINE.md).
+"""The one measurement CLI: bench medians, per-row profiles, plan digests.
 
-Per query: 1 warm-up run + timed runs (plan build → action → full
+The analogue of the reference's ``microbenchmark(times=5)`` tables
+(RDataFramesSQL.Rmd:139-152 and siblings; numbers in BASELINE.md).
+
+    python bench.py                      time every row; one JSON line
+    python bench.py profile [--sf-dir D] [--conf K=V ...] [--plan] ROW ...
+    python bench.py plans [--sf-dir D]   regenerate PLANS.md
+
+Every mode takes its rows from ``rows(sf_dir)``: a name, a builder and
+the conf profile the row's family is timed under (``row_confs``), so a
+profile or a plan digest shows the plan the bench times.
+
+Per row: 1 warm-up run + timed runs (plan build → action → full
 materialization), report the median, excluding SparkSession startup —
 matching the protocol in BASELINE.md §"How we benchmark". The headline
 ``value`` sums the medians of the SIX transposed reference queries
 (q1..q6) — the like-for-like comparison against BASELINE.md's six
 sqldf medians; extension operators (dedup/ANN/windows/multimodal) are
-timed too and reported under "queries" with the grand total in
-"total_all_queries". Prints ONE JSON line:
+timed too, with the grand total in "total_all_queries". Prints ONE
+JSON line last, bulk detail in BENCH_DETAILS.json:
 
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {"q1...": sec, ...}, "sf": 0.1, ...}
 
+``profile`` prints, per ROW (a row name or its unique ``<prefix>_``
+short form, ``q4``), the bench median over the bench's own run count,
+then one traced run split into layers (``profile_row``); each
+``--conf`` is set over the row's profile, so two invocations that
+differ in one ``--conf`` are the legs of an A/B. ``plans`` digests
+``explain("formatted")`` of the PLAN_SECTIONS queries into PLANS.md.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS  (default os.cpu_count()).
+     SPARK_GRAFT_CPUS  (default os.cpu_count()),
+     SPARK_GRAFT_SCALING=0 skips the scaling-exponent leg.
 
 Protocol note (r6, measured): run on an otherwise-IDLE machine. A
 bench launched right after (or beside) another Spark workload reads
@@ -27,25 +44,34 @@ BENCH_DETAILS before believing a regression).
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import functools
 import json
+import math
 import os
+import re
 import statistics
 import sys
 import time
+from typing import Callable, NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from perfbench.tracer import Tracer  # noqa: E402
+from perfbench.tracer import Tracer, force_plan  # noqa: E402
 from sqlondataframesr_spark import registry  # noqa: E402
 from sqlondataframesr_spark.materialize import release_all  # noqa: E402
+from sqlondataframesr_spark.queries import reference, stackexchange  # noqa: E402
 from sqlondataframesr_spark.session import PROFILES, get_spark  # noqa: E402
 
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
 #: reference protocol is microbenchmark(times=5); the headline six are
-#: sub-second, so host jitter moves a 5-run median by +-15% between
-#: whole bench invocations — 15 runs (r8, up from 11: VERDICT r7 item
-#: 1b — the borderline sub-0.5 s tasks sat close enough to the 2x
-#: contract line that an 11-run median could flip the verdict on
-#: jitter alone) tightens the median at ~10 s extra total cost.
+#: sub-second, so host jitter moves a short median by +-15% between
+#: whole bench invocations, so the six get 2 x REF_RUNS runs in one pass
+#: (a per-query min over two passes' medians would bias the headline
+#: down) and the literal SE tasks get REF_RUNS.
 #: Extensions get 3 to keep the whole bench inside the driver's
 #: per-round budget (their spreads are published either way)
 #: — EXCEPT the expensive ones: r5 showed EXT_RUNS=3 cannot tell GC
@@ -58,6 +84,162 @@ REF_RUNS = 15
 EXT_RUNS = 3
 EXT_HEAVY_RUNS = 7
 EXT_HEAVY_CUTOFF_S = 1.2
+
+#: The LITERAL SE workload at reference magnitude (VERDICT r4 item 3):
+#: BASELINE.md's per-task medians were measured on the real
+#: travel.stackexchange.com dump (~85k posts / ~400k votes,
+#: RDataFramesSQL.Rmd:26-33), which fixture scale 100 reproduces; the
+#: driver's correctness gate stays on the scale-1 fixture. Scale 1000
+#: is the past-reference-magnitude stress (VERDICT r5 item 7): the
+#: baseline engines are single-machine and at best linear in rows, so
+#: it is compared against 10x the measured sqldf median ("projected");
+#: a better ratio than at scale 100 shows Spark's fixed floor
+#: amortizing.
+SE_SCALE = 100
+SE_STRESS_SCALE = 1000
+
+#: BASELINE.md "sqldf" medians of the six reference tasks (the contract
+#: comparison), in reference.QUERIES order = stackexchange.TASKS order
+BASELINE_SQLDF = (1.331, 0.316, 0.211, 0.297, 0.534, 0.253)
+REF_BASE = dict(zip(reference.QUERIES, BASELINE_SQLDF))
+SE_BASE = dict(zip(stackexchange.TASKS, BASELINE_SQLDF))
+
+#: profile columns: build wall, Catalyst optimize/plan, action wall;
+#: jobs run while the plan is built; the action's jobs, stages, tasks,
+#: union of stage spans, driver gap (action wall minus stage wall),
+#: executor CPU and shuffle read + write
+COLUMNS = ("build_ms", "opt_ms", "plan_ms", "action_ms", "build_jobs", "jobs",
+           "stages", "tasks", "stage_ms", "gap_ms", "cpu_ms", "shuffle_mb")
+COUNTS = {"build_jobs", "jobs", "stages", "tasks"}
+
+#: PLANS.md: the headline six + the ops whose plans carry the scale
+#: story (broadcasting, banding, capped windows, top-k)
+PLAN_SECTIONS = {
+    "Reference queries": list(reference.QUERIES),
+    "TPC-H shapes": ["q40_shipping_priority", "q49_waiting_suppliers"],
+    "Dedup / LLM pipeline": ["dedup_minhash_lsh", "semdedup", "bloom_decontam",
+                             "dedup_containment"],
+    "Vector search": ["knn_graph_lsh", "ann_ivf_pq_topk", "ann_matryoshka_topk"],
+    "Sampling / allocation": ["sample_unimax_allocation"],
+    "Tokenizer training": ["bpe_learn_merges"],
+    "Windowing": ["evt_pairs_in_window"],
+    "Statistical LM / forensics (r9)": ["lm_bigram_logprob", "nb_lang_confusion",
+                                        "corpus_source_overlap"],
+    "Hypertable (r9)": ["evt_hypertable_rollup"],
+    "Distributed rank / caps (r10)": ["cust_rfm_segments", "evt_activity_gini",
+                                      "cust_abc_classes", "evt_sessionize_profile_capped",
+                                      "evt_cohort_retention"],
+    "Inferential / linkage (r10)": ["cdc_scd2_summary", "cdc_scd2_incremental",
+                                    "er_customer_pairs", "rec_item_cosine", "ml_ols_trend",
+                                    "km_survival_curve", "evt_type_trigrams"],
+    "Sketches / attribution (r10)": ["sketch_kmv_distinct", "sketch_cms_freq_report",
+                                     "evt_daily_acf", "evt_linear_attribution"],
+    "Bounded-frame inferential (r10)": ["dq_ks_statistic", "evt_value_percentiles_exact",
+                                        "ml_theilsen_trend"],
+}
+
+#: scaling-exponent leg (VERDICT r11 item 1): one representative per
+#: heavy family, timed at sf0.001/0.01/<sf> under the session defaults
+SCALING_FAMILIES = [
+    "dedup_minhash_lsh",          # MinHash-LSH banding
+    "semdedup",                   # cluster-scoped semantic dedup
+    "er_customer_pairs",          # blocked ER pair generation
+    "er_customer_pairs_banded",   # r13: the DF-capped banded escape,
+    #   published next to the blocked slope so the r12 claim ("banding
+    #   caps fan-out where blocks grow") carries a number
+    "er_entity_clusters",         # + hash-to-min closure
+    "dedup_ngram_jaccard_capped", # DF-capped inverted index
+    "evt_sessionize_profile",     # gap sessionization
+    "evt_activity_deciles",       # drank consumer (global rank)
+    "evt_markov_attribution",     # distill-then-iterate T^12
+    "ann_lsh_topk",               # banded ANN
+]
+
+
+class Row(NamedTuple):
+    """One bench row: ``build(spark)`` returns its DataFrame, which the
+    bench times under ``confs`` (``row_confs``)."""
+
+    name: str
+    build: Callable
+    confs: dict
+
+
+@functools.cache
+def _se_dir(scale: int) -> str:
+    return stackexchange.fixture_dir(scale=scale)
+
+
+def scaling_probe_cpu(spark, sf_dir):
+    """Bench-only cpu-scaling probe (r14, VERDICT r13 items 1/2a): 64
+    md5+xxhash evaluations per lineitem row, spread across
+    defaultParallelism after the (serial, single-row-group) scan. The
+    headline six cannot express core scaling on this data layout (one
+    parquet row group = one decode task; see session.PROFILES["ref"]),
+    so this row is the one on the headline line whose time moves with
+    the granted cores (`value` still sums only the six)."""
+    from pyspark.sql import functions as F
+
+    from sqlondataframesr_spark.catalog import load_table
+    from sqlondataframesr_spark.materialize import spread_scan
+
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
+        "concat_ws('-', l_orderkey, l_partkey, l_suppkey, l_linenumber) as payload"
+    )
+    return (
+        spread_scan(li)
+        .selectExpr("explode(sequence(1, 64)) as i", "payload")
+        .selectExpr("xxhash64(md5(concat(payload, i))) as h")
+        .agg(F.expr("bit_xor(h)").alias("probe_xor"))
+    )
+
+
+def rows(sf_dir: str) -> dict[str, Row]:
+    """The row table in timing order, each row under its family's confs:
+    the six reference queries (``PROFILES["ref"]``) first, in a fresh
+    JVM, so heap/GC state left by the heavier extensions cannot leak
+    into the headline medians; then the literal SE tasks at scale 100
+    (``PROFILES["se"]``); then every other row by name under the session
+    defaults, the scale-1000 SE tasks included: at that size the "se"
+    profile read 17-49% slower on tasks 1, 2 and 4 in a same-session
+    A/B. Two rows are bench-only: ``scaling_probe_cpu`` and
+    ``q22_sketch_production``, the single-pass sketch-only aggregate
+    production runs (VERDICT r5 item 2) — the registered
+    q22_approx_sketches carries the validation contract, and HLL/GK
+    estimates are engine-specific, so no DuckDB oracle can hash this
+    one. An SE fixture is generated when one of its rows first builds."""
+    from sqlondataframesr_spark.queries.extensions import q22_sketch_raw
+
+    def bound(fn):
+        return lambda spark: fn(spark, sf_dir)
+
+    def se_rows(scale, confs):
+        return [Row(f"se{scale}_{task}", lambda spark, fn=fn: fn(spark, _se_dir(scale)), confs)
+                for task, (fn, _) in stackexchange.TASKS.items()]
+
+    others = {n: fn for n, fn in registry.queries().items() if n not in reference.QUERIES}
+    others |= {"q22_sketch_production": q22_sketch_raw, "scaling_probe_cpu": scaling_probe_cpu}
+    table = [Row(n, bound(fn), PROFILES["ref"]) for n, fn in sorted(reference.QUERIES.items())]
+    table += se_rows(SE_SCALE, PROFILES["se"])
+    table += sorted([Row(n, bound(fn), {}) for n, fn in others.items()] + se_rows(SE_STRESS_SCALE, {}),
+                    key=lambda r: r.name)
+    return {r.name: r for r in table}
+
+
+@contextlib.contextmanager
+def row_confs(spark, confs: dict[str, str]):
+    """Run the block under ``confs``, then restore the session's values."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def time_runs(fn, n: int) -> list[float]:
@@ -81,6 +263,19 @@ def warm_median(fn, n: int) -> float:
     """Median of ``n`` timed calls after one untimed warm-up call."""
     time_runs(fn, 1)
     return statistics.median(time_runs(fn, n))
+
+
+def run_count(name: str, warm_s: float) -> int:
+    """Timed runs for ``name``, picked from its family and warm-up wall."""
+    if name in reference.QUERIES:
+        return 2 * REF_RUNS
+    if name.startswith(f"se{SE_SCALE}_"):
+        return REF_RUNS
+    # stress rows feed a ratio contract (crossover vs projected
+    # baseline): a 3-run median is too jittery for a verdict
+    if name.startswith(f"se{SE_STRESS_SCALE}_") or warm_s > EXT_HEAVY_CUTOFF_S:
+        return EXT_HEAVY_RUNS
+    return EXT_RUNS
 
 
 class BenchTracer(Tracer):
@@ -121,558 +316,385 @@ class BenchTracer(Tracer):
         return sorted(own + rest)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    spark = get_spark(app_name="bench")
-    tracer = BenchTracer(spark, "bench")
+def time_row(spark, tracer: BenchTracer, row: Row) -> dict:
+    """Time ``row`` under its confs: a warm-up run (JIT, parquet footer
+    cache), timed only to pick the run count, then the timed runs under
+    the job group ``bench:<name>:timed``. Returns the samples, the
+    shuffle [read, write] MB per run and the executor CPU seconds per
+    run of the group's completed stages.
 
-    def measured(name: str, phase: str, run, n: int):
-        """``time_runs(run, n)`` under the job group ``bench:<name>:<phase>``;
-        returns the samples, the shuffle [read, write] MB per run and
-        the executor CPU seconds per run of the group's completed stages.
-
-        Bytes moved are a pure function of plan + data, so a plan
-        regression shows as a shuffle_mb jump even on a noisy host; and
-        a contended host moves wall time while CPU time per query stays
-        flat, where a real plan regression grows both. Attribution is by
-        job group and window (``BenchTracer``), so only this query's
-        jobs count, streamed micro-batches included."""
-        group = tracer.group(name, phase)
+    Bytes moved are a pure function of plan + data, so a plan
+    regression shows as a shuffle_mb jump even on a noisy host; and a
+    contended host moves wall time while CPU time per query stays flat,
+    where a real plan regression grows both. Attribution is by job
+    group and window (``BenchTracer``), so only this row's jobs count,
+    streamed micro-batches included. Materialization is Arrow-batched
+    toPandas, the engine's real full-result path (per-Row collect()
+    would time Python object construction, not the engine)."""
+    with row_confs(spark, row.confs):
+        run = lambda: row.build(spark).toPandas()  # noqa: E731
+        n = run_count(row.name, time_runs(run, 1)[0])
+        group = tracer.group(row.name, "timed")
         samples = time_runs(run, n)
         tracer.clear()
         st = tracer.stage_stats(group)
-        return (
-            samples,
-            [round(st["shuffle_read_mb"] / n, 3), round(st["shuffle_write_mb"] / n, 3)],
-            round(st["cpu_s"] / n, 3),
-        )
-
-    # like-for-like vs BASELINE.md = the SIX transposed reference tasks
-    ref_names = {
-        "q1_yearly_top_order",
-        "q2_top_customers_by_spend",
-        "q3_top_orders_by_big_items",
-        "q4_price_spread",
-        "q5_user_event_totals",
-        "q6_distinct_suppliers_of_qualifying_brands",
+    return {
+        "samples": samples,
+        "shuffle_mb": [round(st["shuffle_read_mb"] / n, 3), round(st["shuffle_write_mb"] / n, 3)],
+        "cpu_s": round(st["cpu_s"] / n, 3),
     }
-    is_ref = ref_names.__contains__
 
-    # The LITERAL SE workload at reference magnitude (VERDICT r4 item
-    # 3): BASELINE.md's per-task medians were measured on the real
-    # travel.stackexchange.com dump (~85k posts / ~400k votes,
-    # RDataFramesSQL.Rmd:26-33); fixture_dir(scale=100) reproduces
-    # that magnitude, so the se100_* rows are the first direct
-    # performance comparison of the literal tasks (the driver's
-    # correctness gate stays on the scale-1 fixture).
-    from sqlondataframesr_spark.queries import stackexchange as _se
 
-    se_scale = float(os.environ.get("SPARK_GRAFT_SE_SCALE", "100"))
-    se_dir = _se.fixture_dir(scale=se_scale)
-    # prefix derives from the ACTUAL scale (ADVICE r5): an override
-    # run must not emit se100_* names ratioed against scale-100
-    # baselines it wasn't measured at
-    se_prefix = f"se{se_scale:g}_"
-    se_queries = [
-        (f"{se_prefix}{name}", (lambda f: lambda spark, _sf: f(spark, se_dir))(fn))
-        for name, (fn, _) in _se.TASKS.items()
-    ]
-    se_names = {n for n, _ in se_queries}
+def profile_row(spark, tracer: BenchTracer, row: Row):
+    """One traced run of ``row`` under its confs: plan build, the forced
+    optimized and physical plans, then ``toPandas``. Returns its
+    ``COLUMNS`` (counts as ints) and its DataFrame. Each phase's stats
+    are read before the next ``group``: ``BenchTracer.jobs_of`` claims
+    every unseen job since the last ``group``."""
 
-    # Past-reference-magnitude stress (VERDICT r5 item 7, widened to
-    # ALL SIX tasks in r8 per VERDICT r7 item 5): the literal workload
-    # at 10x the dump (~850k posts / ~4M votes). The baseline engines
-    # are single-machine in-memory; their cost is at best linear in
-    # rows, so the honest comparison at this scale is against 10x the
-    # measured scale-100 median (labeled "projected"). If Spark's
-    # ratio vs that projection beats its se100 ratio, the crossover is
-    # demonstrated: Spark's fixed floor amortizes while per-row cost
-    # stays flat — and it is strongest exactly where the baseline is
-    # slowest (task2: 4.99 s base-R; task4: 2.17 s,
-    # RDataFramesSQL.html:1882/2164).
-    se_stress: list[tuple[str, object]] = []
-    se_stress_scale = float(os.environ.get("SPARK_GRAFT_SE_STRESS_SCALE", "1000"))
-    if se_stress_scale > 0:
-        stress_dir = _se.fixture_dir(scale=se_stress_scale)
-        for tname in _se.TASKS:
-            fn = _se.TASKS[tname][0]
-            se_stress.append((
-                f"se{se_stress_scale:g}_{tname}",
-                (lambda f: lambda spark, _sf: f(spark, stress_dir))(fn),
-            ))
-    se_stress_names = {n for n, _ in se_stress}
-    # latency family = toy-scale sub-second relational queries: the
-    # six transposed refs + the literal SE tasks (same confs, 11 runs)
-    is_latency = lambda n: is_ref(n) or n in se_names  # noqa: E731
+    def phase(name, fn):
+        group = tracer.group(row.name, name)
+        t0 = time.perf_counter()
+        out = fn()
+        wall = time.perf_counter() - t0
+        tracer.clear()
+        return out, wall, tracer.stage_stats(group)
 
-    # Time the six baseline-comparable queries FIRST, in a fresh JVM,
-    # so heap/GC state left by the (heavier) extension operators can't
-    # leak into the headline medians; the literal SE tasks follow
-    # (same latency family), then extensions alphabetically.
-    # bench-only production path for the q22 sketch operator (VERDICT
-    # r5 item 2): the registered q22_approx_sketches row carries the
-    # validation contract (exact counts + tolerance booleans — the
-    # hashable form); THIS row times what production actually runs —
-    # the single-pass sketch-only aggregate. Bench-only because HLL /
-    # GK estimates are engine-specific: no DuckDB oracle can hash
-    # them, and a rows-only registry entry would weaken the gate.
-    from sqlondataframesr_spark.queries.extensions import q22_sketch_raw
+    with row_confs(spark, row.confs):
+        df, build_s, b = phase("build", lambda: row.build(spark))
+        (opt_s, plan_s), _, _ = phase("plan", lambda: force_plan(df))
+        _, action_s, a = phase("action", df.toPandas)
+    values = (build_s * 1e3, opt_s * 1e3, plan_s * 1e3, action_s * 1e3,
+              b["jobs"], a["jobs"], a["stages"], a["tasks"], a["stage_wall_s"] * 1e3,
+              (action_s - a["stage_wall_s"]) * 1e3, a["cpu_s"] * 1e3,
+              a["shuffle_read_mb"] + a["shuffle_write_mb"])
+    return {c: int(v) if c in COUNTS else v for c, v in zip(COLUMNS, values)}, df
 
-    # Bench-only cpu-scaling probe (r14, VERDICT r13 items 1/2a): a
-    # deterministic compute-dense aggregate over lineitem that REALLY
-    # uses the granted cores — 64 md5+xxhash evaluations per row,
-    # spread across defaultParallelism after the (serial,
-    # single-row-group) scan, timed under the session defaults. The
-    # headline six cannot express core scaling on this data layout
-    # (one parquet row group = one decode task; partitions follow data
-    # granularity — see session.PROFILES["ref"]), so the driver's
-    # 8-vs-32-core comparison kept flagging `suspect_cpus_ignored` on
-    # the conf pin.
-    # This row rides the one-line `queries` dict (additions are
-    # allowed; `value` still sums ONLY the six reference queries) so
-    # the scaling check has a query whose ratio moves with the cores.
-    from pyspark.sql import functions as _F
 
-    from sqlondataframesr_spark.catalog import load_table as _lt
-    from sqlondataframesr_spark.materialize import spread_scan as _spread
-
-    def scaling_probe_cpu(spark, sf_dir):
-        li = _lt(spark, sf_dir, "lineitem").selectExpr(
-            "concat_ws('-', l_orderkey, l_partkey, l_suppkey,"
-            " l_linenumber) as payload"
-        )
-        return (
-            _spread(li)
-            .selectExpr("explode(sequence(1, 64)) as i", "payload")
-            .selectExpr("xxhash64(md5(concat(payload, i))) as h")
-            .agg(_F.expr("bit_xor(h)").alias("probe_xor"))
-        )
-
-    bench_only = [
-        ("q22_sketch_production", q22_sketch_raw),
-        ("scaling_probe_cpu", scaling_probe_cpu),
-    ]
-
-    queries = (
-        sorted((kv for kv in registry.queries().items() if is_ref(kv[0])))
-        + se_queries
-        + sorted(
-            [kv for kv in registry.queries().items() if not is_ref(kv[0])]
-            + bench_only
-            + se_stress,
-            key=lambda kv: kv[0],
-        )
-    )
-
-    # Global JVM warm-up: a fresh JVM spends the first few actions
-    # JIT-compiling Spark's codegen/shuffle machinery, which would land
-    # entirely on whichever queries run first. Run the headline six
-    # once untimed (plus their per-query warm-up below) so every timed
-    # run executes against a hot JVM — the BASELINE.md protocol times
-    # warm engines too (microbenchmark reuses loaded R sessions).
-    # r13: warm under the SAME conf profile the six are timed under
-    # (OPTIMIZATION_r13.md): the profile changes the physical plans, so
-    # a default-conf warm-up compiled the WRONG codegen classes and
-    # timed run 1 still hit cold code. The per-family conf profiles and
-    # their measurements live in session.PROFILES: the six run under
-    # "ref", the literal SE tasks under "se", everything else under the
-    # session defaults (snapshotted here before anything is set). The
-    # driver's cpu-scaling contract is served by the default-conf
-    # `scaling_probe_cpu` row, which really does scale with the grant.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    ref_confs, se_confs = PROFILES["ref"], PROFILES["se"]
-    default_confs = {k: spark.conf.get(k) for k in ref_confs}
-
-    def set_confs(confs: dict[str, str]) -> None:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-
-    set_confs(ref_confs)
-    for name, fn in queries:
-        if is_ref(name):
-            fn(spark, sf_dir).toPandas()
-
-    timings: dict[str, float] = {}
-    #: per-query min/median/max over the timed runs — the reference's
-    #: own microbenchmark protocol publishes spread, not just medians
-    #: (RDataFramesSQL.Rmd:139-152), and cross-round drift (e.g.
-    #: minhash 7.6s->13.5s r1->r2) is only diagnosable with spread.
-    spreads: dict[str, dict[str, float]] = {}
-    #: per-query shuffle [read, write] MB and executor CPU seconds per
-    #: run for EVERY timed query (VERDICT r11 item 4), so a plan
-    #: regression in the heavy tail is bytes-visible too, not just
-    #: wall-visible. Written to BENCH_DETAILS as per_query_stats.
-    per_query_stats: dict[str, dict[str, object]] = {}
-    for name, fn in queries:
-        # progress marker (stderr; stdout stays the one-line contract)
-        # — without it a stalled query is undiagnosable from outside
-        print(f"[bench] {name}", file=sys.stderr, flush=True)
-        if is_ref(name):
-            set_confs(ref_confs)
-        elif name in se_names:
-            set_confs(se_confs)
-        else:
-            set_confs(default_confs)
-        # Materialization is Arrow-batched toPandas — columnar
-        # transfer, the engine's real full-result path (per-Row
-        # collect() would time Python object construction, not the
-        # engine).
-        run = lambda fn=fn: fn(spark, sf_dir).toPandas()  # noqa: E731
-        # Per-query warm-up (JIT, parquet footer cache): also TIMED
-        # (not recorded) to pick the run count — expensive extensions
-        # get EXT_HEAVY_RUNS so one GC pause can't masquerade as a
-        # regression.
-        warm_s = time_runs(run, 1)[0]
-        if is_latency(name):
-            n_runs = REF_RUNS
-        elif name in se_stress_names:
-            # stress rows feed a ratio contract (crossover vs projected
-            # baseline) — a 3-run median is too jittery for a verdict
-            n_runs = EXT_HEAVY_RUNS
-        elif warm_s > EXT_HEAVY_CUTOFF_S:
-            n_runs = EXT_HEAVY_RUNS
-        else:
-            n_runs = EXT_RUNS
-        samples, mb, cpu = measured(name, "first", run, n_runs)
-        per_query_stats[name] = {"shuffle_mb": mb, "cpu_s": cpu}
-        timings[name] = round(statistics.median(samples), 4)
-        spreads[name] = {
-            "min": round(min(samples), 4),
-            "median": timings[name],
-            "max": round(max(samples), 4),
-            "n": len(samples),
-        }
-
-    # Settled second pass over the headline six (r10). The six are
-    # timed FIRST (fresh JVM, heap clean of extension state) — but
-    # EARLY-session medians can also read 2x high while the same plans,
-    # same confs, same session measure fine later (residual JIT
-    # compilation, not plans). So the six are re-timed after the full
-    # loop under the same confs and the HEADLINE takes the per-query
-    # MIN of the two medians — the steady-state estimate; both passes
-    # are published (spreads = first pass, settled_pass = second) so
-    # nothing hides.
-    settled: dict[str, dict[str, float]] = {}
-    #: per-headline-query shuffle [read, write] MB and executor CPU
-    #: seconds per run, from the settled pass (VERDICT r10/r11)
-    shuffle_mb: dict[str, list[float]] = {}
-    cpu_s: dict[str, float] = {}
-    set_confs(ref_confs)
-    for name in sorted(ref_names):
-        fn = registry.queries()[name]
-        run = lambda fn=fn: fn(spark, sf_dir).toPandas()  # noqa: E731
-        time_runs(run, 1)
-        samples, shuffle_mb[name], cpu_s[name] = measured(
-            name, "settled", run, REF_RUNS
-        )
-        med = round(statistics.median(samples), 4)
-        settled[name] = {
-            "first_pass_median": timings[name],
-            "settled_median": med,
-            "min": round(min(samples), 4),
-            "max": round(max(samples), 4),
-        }
-        timings[name] = min(timings[name], med)
-
-    # Measured per-query fixed floor: a no-op job (schedule + collect,
-    # no data) and a one-stage parquet scan-count. Everything below
-    # the floor is Spark's per-query overhead (JVM scheduling, Python
-    # round-trips, Arrow setup) — a constant that vanishes at real
-    # scale but dominates sub-second toy-SF queries. The floor
-    # analysis contextualizes any per-query ratio vs BASELINE.md:
-    # ratio_adj strips the floor from our side (the baseline's
-    # in-process engines have no comparable scheduling floor).
+def floors(spark, sf_dir: str) -> dict[str, float]:
+    """Measured per-query fixed floor, under the six's confs: a no-op job
+    (schedule + collect, no data) and a one-stage parquet scan-count.
+    Below the floor is Spark's per-query overhead (JVM scheduling,
+    Python round-trips, Arrow setup) — a constant that vanishes at real
+    scale but dominates sub-second toy-SF queries, and which the
+    baseline's in-process engines do not pay (ratio_minus_floor)."""
     from sqlondataframesr_spark.catalog import load_table
 
-    floor_noop = round(warm_median(lambda: spark.range(1).toPandas(), 5), 4)
-    floor_scan = round(
-        warm_median(
-            lambda: load_table(spark, sf_dir, "lineitem").select("l_orderkey").count(),
-            5,
-        ),
-        4,
-    )
+    with row_confs(spark, PROFILES["ref"]):
+        noop = warm_median(lambda: spark.range(1).toPandas(), 5)
+        scan = warm_median(
+            lambda: load_table(spark, sf_dir, "lineitem").select("l_orderkey").count(), 5)
+    return {"noop": round(noop, 4), "scan_count": round(scan, 4)}
 
-    # N-version engine table (the reference's own format: each task
-    # timed on EVERY implementation — sqldf/base/dplyr/data.table,
-    # RDataFramesSQL.Rmd:139-152). Our analogue for the headline six:
-    # the fluent DataFrame plan (already in `timings`), the Spark-SQL
-    # text form (same engine, independent plan derivation), and the
-    # DuckDB oracle SQL (a genuinely different engine, single-process
-    # — expect it to win at toy SF exactly like the floor analysis
-    # predicts, and to lose the moment data outgrows one machine).
-    # Reported in BENCH_DETAILS only; the headline contract stays the
-    # six fluent medians vs BASELINE.md.
+
+def nversion(spark, sf_dir: str, timings: dict[str, float]) -> dict[str, dict[str, float]]:
+    """The reference's own table format (each task timed on EVERY
+    implementation — sqldf/base/dplyr/data.table,
+    RDataFramesSQL.Rmd:139-152) for the headline six: the fluent plan
+    (already timed), its Spark-SQL text form (same engine, independent
+    plan derivation), the DuckDB oracle (a different, single-process
+    engine, expected to win at toy SF exactly as the floor analysis
+    predicts) and pandas (correctness pinned in
+    tests/test_nversion_pandas.py). Prereqs and pandas tables load
+    OUTSIDE the timed region: the baseline engines were timed on
+    in-memory frames too."""
     from sqlondataframesr_spark.catalog import register_views
     from sqlondataframesr_spark.check import duckdb_connect
-
-    register_views(spark, sf_dir)
-    set_confs(ref_confs)
-    sql_forms = registry.spark_sql()
-    oracle_forms = registry.oracles()
-    con = duckdb_connect(sf_dir)
-    nversion: dict[str, dict[str, float]] = {}
-    for name in sorted(ref_names):
-        row = {"fluent": timings[name]}
-        if name in sql_forms:
-            # runner contract (registry.sql_prereqs, ADVICE r7): fixture
-            # prereqs run once, OUTSIDE the timed region (setup, not query)
-            registry.sql_prereqs().get(name, lambda: None)()
-            row["spark_sql"] = round(warm_median(
-                lambda: spark.sql(sql_forms[name]).toPandas(), REF_RUNS), 4)
-        if name in oracle_forms:
-            row["duckdb"] = round(warm_median(
-                lambda: con.execute(oracle_forms[name]).fetchall(), REF_RUNS), 4)
-        nversion[name] = row
-    # 4th engine — pandas (the single-machine dataframe-library rung,
-    # completing the reference's sqldf/base/dplyr/DT 4-engine format;
-    # correctness vs the DuckDB oracle is pinned in
-    # tests/test_nversion_pandas.py). Tables are pre-loaded OUTSIDE
-    # the timed region: the baseline engines were timed on in-memory
-    # frames too (microbenchmark over loaded data.frames).
     from sqlondataframesr_spark.nversion_pandas import PANDAS_QUERIES, load_tables
 
+    register_views(spark, sf_dir)
+    sql_forms, oracle_forms = registry.spark_sql(), registry.oracles()
+    con = duckdb_connect(sf_dir)
     pd_tables = load_tables(
-        sf_dir, ["lineitem", "orders", "customer", "events", "part",
-                 "supplier", "nation"]
-    )
-    for name in sorted(ref_names):
-        tabs, pfn = PANDAS_QUERIES[name]
-        sub = {k: pd_tables[k] for k in tabs}
-        nversion[name]["pandas"] = round(warm_median(lambda: pfn(sub), REF_RUNS), 4)
-    del pd_tables
+        sf_dir, ["lineitem", "orders", "customer", "events", "part", "supplier", "nation"])
+    out: dict[str, dict[str, float]] = {}
+    with row_confs(spark, PROFILES["ref"]):
+        for name in sorted(reference.QUERIES):
+            row = out[name] = {"fluent": timings[name]}
+            if name in sql_forms:
+                registry.sql_prereqs().get(name, lambda: None)()
+                row["spark_sql"] = round(warm_median(
+                    lambda: spark.sql(sql_forms[name]).toPandas(), REF_RUNS), 4)
+            if name in oracle_forms:
+                row["duckdb"] = round(warm_median(
+                    lambda: con.execute(oracle_forms[name]).fetchall(), REF_RUNS), 4)
+            tabs, pfn = PANDAS_QUERIES[name]
+            sub = {k: pd_tables[k] for k in tabs}
+            row["pandas"] = round(warm_median(lambda: pfn(sub), REF_RUNS), 4)
     con.close()
+    return out
 
-    #: BASELINE.md "sqldf" medians for the six reference tasks (the
-    #: contract comparison; same numbers the judge reads).
-    BASELINE_SQLDF = {
-        "q1_yearly_top_order": 1.331,
-        "q2_top_customers_by_spend": 0.316,
-        "q3_top_orders_by_big_items": 0.211,
-        "q4_price_spread": 0.297,
-        "q5_user_event_totals": 0.534,
-        "q6_distinct_suppliers_of_qualifying_brands": 0.253,
-    }
-    SE_TASK_BASE = {
-        "task1_upvotes_per_year": 1.331,
-        "task2_top_favorited_users": 0.316,
-        "task3_top_positive_answer_counts": 0.211,
-        "task4_best_vs_accepted": 0.297,
-        "task5_comment_scores": 0.534,
-        "task6_valuable_badges": 0.253,
-    }
-    # the sqldf medians were measured at dump magnitude (= scale 100);
-    # a run at any other SPARK_GRAFT_SE_SCALE has no measured baseline,
-    # so no ratio rows are emitted for it (ADVICE r5)
-    if se_scale == 100:
-        BASELINE_SQLDF.update(
-            {f"{se_prefix}{t}": v for t, v in SE_TASK_BASE.items()}
-        )
-    floor_analysis = {}
-    for name, base in BASELINE_SQLDF.items():
-        med = timings.get(name)
-        if med is None:
-            continue
-        floor_analysis[name] = {
-            "median": med,
-            "baseline_sqldf": base,
-            "ratio": round(med / base, 2),
-            "ratio_minus_floor": round(max(0.0, med - floor_noop) / base, 2),
-        }
 
-    # --- scaling-exponent leg (VERDICT r11 item 1) -----------------
-    # Time one representative per heavy family at sf0.001/0.01/<sf>
-    # and fit the time-vs-sf exponent: the first artifact that can
-    # FALSIFY the "survives 100x" plan audits. Two slopes published:
-    #   slope_fit  — least-squares log-log over all three points (raw
-    #                medians; the per-query scheduling floor flattens
-    #                it at toy SF, so it UNDERSTATES compute growth);
-    #   slope_tail — floor-subtracted slope over the largest decade
-    #                (0.01 -> sf): the honest super-linearity detector.
-    # Contract: slope_tail <= ~1.15 per family, else a SCALE.md
-    # forensic. Disable with SPARK_GRAFT_SCALING=0 (the leg adds ~2-3
-    # min; the driver's per-round bench keeps it on).
-    SCALING_FAMILIES = [
-        "dedup_minhash_lsh",          # MinHash-LSH banding
-        "semdedup",                   # cluster-scoped semantic dedup
-        "er_customer_pairs",          # blocked ER pair generation
-        "er_customer_pairs_banded",   # r13: the DF-capped banded escape
-        #   — published next to the blocked slope so the r12 claim
-        #   ("banding caps fan-out where blocks grow") carries a number
-        "er_entity_clusters",         # + hash-to-min closure
-        "dedup_ngram_jaccard_capped", # DF-capped inverted index
-        "evt_sessionize_profile",     # gap sessionization
-        "evt_activity_deciles",       # drank consumer (global rank)
-        "evt_markov_attribution",     # distill-then-iterate T^12
-        "ann_lsh_topk",               # banded ANN
-    ]
-    scaling: dict[str, list[float]] = {}
-    if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0":
-        import math
+def scaling(spark, sf_dir: str, sf: float, floor_noop: float) -> dict[str, list[float]]:
+    """Medians of SCALING_FAMILIES at sf0.001/0.01/<sf> and the fitted
+    time-vs-sf exponents: the first artifact that can FALSIFY the
+    "survives 100x" plan audits. slope_fit is least-squares log-log
+    over all points (the scheduling floor flattens it at toy SF, so it
+    UNDERSTATES compute growth); slope_tail is the floor-subtracted
+    slope over the largest decade, the honest super-linearity
+    detector. Contract: slope_tail <= ~1.15 per family, else a SCALE.md
+    forensic. Scales the tree does not carry are dropped (ADVICE r12)."""
+    base = os.path.dirname(sf_dir.rstrip("/"))
+    points: dict[float, str] = {}
+    for d, s in ((os.path.join(base, "sf0.001"), 0.001),
+                 (os.path.join(base, "sf0.01"), 0.01), (sf_dir, sf)):
+        if os.path.isdir(d):
+            points.setdefault(s, d)
+    if len(points) < 2:
+        print("[bench] scaling leg skipped: <2 sf points on this tree", file=sys.stderr, flush=True)
+        return {}
+    xs = [math.log10(s) for s in points]
+    mx = statistics.fmean(xs)
+    out = {}
+    for name in SCALING_FAMILIES:
+        print(f"[bench] scaling:{name}", file=sys.stderr, flush=True)
+        fn = registry.queries()[name]
+        meds = [warm_median(lambda d=d: fn(spark, d).toPandas(), 3) for d in points.values()]
+        ys = [math.log10(t) for t in meds]
+        my = statistics.fmean(ys)
+        slope_fit = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum((x - mx) ** 2 for x in xs)
+        adj = [max(t - floor_noop, 1e-4) for t in meds]
+        slope_tail = (math.log10(adj[-1]) - math.log10(adj[-2])) / (xs[-1] - xs[-2])
+        out[name] = [*(round(t, 3) for t in meds), round(slope_fit, 3), round(slope_tail, 3)]
+    return out
 
-        base = os.path.dirname(sf_dir.rstrip("/"))
-        sf_points = [
-            (os.path.join(base, "sf0.001"), 0.001),
-            (os.path.join(base, "sf0.01"), 0.01),
-            (sf_dir, sf),
-        ]
-        # drop duplicates if sf_dir IS one of the small scales, and
-        # (ADVICE r12) drop scales the tree doesn't carry — a skew or
-        # standalone dir lacks the sibling sf0.001/sf0.01 trees and
-        # would otherwise crash the leg after the expensive main passes
-        seen: set[float] = set()
-        sf_points = [
-            p
-            for p in sf_points
-            if os.path.isdir(p[0]) and not (p[1] in seen or seen.add(p[1]))
-        ]
-        if len(sf_points) < 2:
-            print(
-                "[bench] scaling leg skipped: <2 sf points on this tree",
-                file=sys.stderr,
-                flush=True,
-            )
-            sf_points = []
-        set_confs(default_confs)
-        for name in SCALING_FAMILIES if sf_points else []:
-            print(f"[bench] scaling:{name}", file=sys.stderr, flush=True)
-            fn = registry.queries()[name]
-            meds = [
-                warm_median(lambda d=d: fn(spark, d).toPandas(), 3)
-                for d, _s in sf_points
-            ]
-            xs = [math.log10(s) for _, s in sf_points]
-            ys = [math.log10(t) for t in meds]
-            n = len(xs)
-            mx, my = sum(xs) / n, sum(ys) / n
-            slope_fit = sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / sum(
-                (x - mx) ** 2 for x in xs
-            )
-            adj = [max(t - floor_noop, 1e-4) for t in meds]
-            slope_tail = (math.log10(adj[-1]) - math.log10(adj[-2])) / (
-                xs[-1] - xs[-2]
-            )
-            scaling[name] = [
-                *(round(t, 3) for t in meds),
-                round(slope_fit, 3),
-                round(slope_tail, 3),
-            ]
 
-    ref_total = sum(v for k, v in timings.items() if is_ref(k))
+def bench(sf_dir: str) -> None:
+    sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    spark = get_spark(app_name="bench")
+    tracer = BenchTracer(spark, "bench")
+    table = rows(sf_dir)
+    ref = [n for n in table if n in reference.QUERIES]
+    se = [n for n in table if n.startswith(f"se{SE_SCALE}_")]
+    stress = [n for n in table if n.startswith(f"se{SE_STRESS_SCALE}_")]
+
+    # Global JVM warm-up: a fresh JVM spends its first actions
+    # JIT-compiling Spark's codegen/shuffle machinery, which would land
+    # on whichever queries run first; the BASELINE.md protocol times
+    # warm engines too. r13: warm under the six's own confs, since the
+    # profile changes the physical plans (OPTIMIZATION_r13.md).
+    with row_confs(spark, PROFILES["ref"]):
+        for name in ref:
+            time_runs(lambda: table[name].build(spark).toPandas(), 1)
+
+    #: per-row min/median/max over the timed runs — the reference's own
+    #: protocol publishes spread, not just medians; and per-row shuffle
+    #: [read, write] MB and executor CPU s per run (VERDICT r11 item 4),
+    #: so a plan regression in the heavy tail is bytes-visible too
+    timings: dict[str, float] = {}
+    spreads: dict[str, dict[str, float]] = {}
+    per_query_stats: dict[str, dict[str, object]] = {}
+    for name, row in table.items():
+        # progress marker (stderr; stdout stays the one-line contract)
+        print(f"[bench] {name}", file=sys.stderr, flush=True)
+        t = time_row(spark, tracer, row)
+        s = t.pop("samples")
+        per_query_stats[name] = t
+        timings[name] = round(statistics.median(s), 4)
+        spreads[name] = {"min": round(min(s), 4), "median": timings[name],
+                         "max": round(max(s), 4), "n": len(s)}
+
+    floor = floors(spark, sf_dir)
+    engines = nversion(spark, sf_dir, timings)
+    scaling_block = scaling(spark, sf_dir, sf, floor["noop"]) \
+        if os.environ.get("SPARK_GRAFT_SCALING", "1") != "0" else {}
+
+    def vs(name, base):
+        med = timings[name]
+        return {"median": med, "baseline_sqldf": base, "ratio": round(med / base, 2),
+                "ratio_minus_floor": round(max(0.0, med - floor["noop"]) / base, 2)}
+
+    se_base = {f"se{SE_SCALE}_{t}": b for t, b in SE_BASE.items()}
+    floor_analysis = {n: vs(n, b) for n, b in (REF_BASE | se_base).items()}
     # r14 (VERDICT r13 item 2b): the one-line contract carries ONLY
-    # metric/value/unit/queries/sf plus three tiny scalars — the r12
-    # line (272 query entries + stats blocks) was truncated in the
-    # driver's tail capture and silently cost a whole round its
-    # round-over-round PERF comparison. Every bulk block (se_tasks,
-    # floor_sec, shuffle_mb, cpu_s, scaling, se_stress, spreads) now
-    # lives ONLY in BENCH_DETAILS.json and the chunked audit lines
-    # above the final line. "cpus" echoes the honored
-    # $SPARK_GRAFT_CPUS so a scaling-leg artifact is self-describing.
+    # metric/value/unit/queries/sf plus tiny scalars — a longer line was
+    # truncated in the driver's tail capture. Bulk blocks live in
+    # BENCH_DETAILS.json and the chunked lines above the final line.
     headline = {
         "metric": "sum_of_reference_query_medians",
-        "value": round(ref_total, 4),
+        "value": round(sum(timings[n] for n in ref), 4),
         "unit": "sec",
-        # the six reference queries + the cpu-scaling probe (an ADDED
-        # entry — the driver's 8-vs-32-core ratio check needs one row
-        # that can scale on single-row-group toy data; `value` still
-        # sums only the six)
-        "queries": {k: v for k, v in timings.items() if is_ref(k)}
-        | {"scaling_probe_cpu": timings["scaling_probe_cpu"]},
+        # + the cpu-scaling probe, the row the driver's 8-vs-32-core
+        # ratio check can see scale; `value` sums only the six
+        "queries": {n: timings[n] for n in ref} | {"scaling_probe_cpu": timings["scaling_probe_cpu"]},
         "sf": sf,
         "cpus": cpus,
         "n_queries_timed": len(timings),
         "total_all_queries": round(sum(timings.values()), 4),
     }
-    # bulk blocks (formerly on the final line; the DETAILS file and the
-    # chunked lines are their only home now):
-    # - se_tasks: name -> [median, baseline_sqldf, ratio,
-    #   ratio_minus_floor] (floor-subtracted ratio per VERDICT r9)
-    # - shuffle_mb / cpu_s: machine-independent plan observability for
-    #   the headline six (VERDICT r10/r11)
-    # - scaling: heavy-family medians at 3 SFs + fitted/tail slopes
-    #   (contract: tail slope <= ~1.15)
-    # - se_stress: ratio vs PROJECTED (linear-in-rows) sqldf baseline
-    se_tasks_block = {
-        k: [
-            timings[k],
-            BASELINE_SQLDF[k],
-            round(timings[k] / BASELINE_SQLDF[k], 2),
-            round(max(0.0, timings[k] - floor_noop) / BASELINE_SQLDF[k], 2),
-        ]
-        for k in sorted(se_names)
-        if k in timings and k in BASELINE_SQLDF
-    }
-    se_stress_block = {
-        k: [
-            timings[k],
-            round(SE_TASK_BASE[k.split("_", 1)[1]] * se_stress_scale / 100, 3),
-            round(
-                timings[k]
-                / (SE_TASK_BASE[k.split("_", 1)[1]] * se_stress_scale / 100),
-                2,
-            ),
-        ]
-        for k in sorted(se_stress_names)
-        if k in timings
-    }
-    details_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAILS.json"
-    )
-    with open(details_path, "w") as fh:
-        json.dump(
-            {
-                **headline,
-                "queries": timings,
-                "se_tasks": se_tasks_block,
-                "se_scale": se_scale,
-                "se_stress": se_stress_block,
-                "se_stress_scale": se_stress_scale,
-                "shuffle_mb": shuffle_mb,
-                "cpu_s": cpu_s,
-                "scaling": scaling,
-                "spreads": spreads,
-                "per_query_stats": per_query_stats,
-                "settled_pass": settled,
-                "floor_sec": {"noop": floor_noop, "scan_count": floor_scan},
-                "vs_baseline": floor_analysis,
-                "nversion_engines": nversion,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
+    # se_tasks: [median, baseline_sqldf, ratio, ratio_minus_floor];
+    # se_stress: [median, projected baseline, ratio vs projection]
+    se_tasks = {n: [v["median"], v["baseline_sqldf"], v["ratio"], v["ratio_minus_floor"]]
+                for n, v in floor_analysis.items() if n in se}
+    se_stress = {}
+    for n in stress:
+        projected = SE_BASE[n.split("_", 1)[1]] * SE_STRESS_SCALE / SE_SCALE
+        se_stress[n] = [timings[n], round(projected, 3), round(timings[n] / projected, 2)]
+    shuffle_mb = {n: per_query_stats[n]["shuffle_mb"] for n in ref}
+    cpu_s = {n: per_query_stats[n]["cpu_s"] for n in ref}
+    with open(os.path.join(ROOT, "BENCH_DETAILS.json"), "w") as fh:
+        json.dump({
+            **headline, "queries": timings, "se_tasks": se_tasks, "se_scale": SE_SCALE,
+            "se_stress": se_stress, "se_stress_scale": SE_STRESS_SCALE,
+            "shuffle_mb": shuffle_mb, "cpu_s": cpu_s, "scaling": scaling_block,
+            "spreads": spreads, "per_query_stats": per_query_stats, "floor_sec": floor,
+            "vs_baseline": floor_analysis, "nversion_engines": engines,
+        }, fh, indent=1, sort_keys=True)
     # chunked per-family detail lines (human/log audit; each line small;
     # the one-line headline stays LAST and minimal — the driver records
     # only the tail of stdout)
-    ext = sorted((k, v) for k, v in timings.items() if not is_latency(k))
+    ext = sorted((k, v) for k, v in timings.items() if k not in ref and k not in se)
     for i in range(0, len(ext), 8):
         print(json.dumps({"detail": dict(ext[i : i + 8])}))
     for name in sorted(floor_analysis):
         print(json.dumps({"vs_baseline": {name: floor_analysis[name]}}))
-    if scaling:
-        print(json.dumps({"scaling": scaling}))
-    if se_tasks_block:
-        print(json.dumps({"se_tasks": se_tasks_block, "se_scale": se_scale}))
-    if se_stress_block:
-        print(json.dumps({"se_stress": se_stress_block,
-                          "se_stress_scale": se_stress_scale}))
+    if scaling_block:
+        print(json.dumps({"scaling": scaling_block}))
+    print(json.dumps({"se_tasks": se_tasks, "se_scale": SE_SCALE}))
+    print(json.dumps({"se_stress": se_stress, "se_stress_scale": SE_STRESS_SCALE}))
     print(json.dumps({"shuffle_mb": shuffle_mb, "cpu_s": cpu_s}))
-    print(
-        json.dumps(
-            {
-                "floor_sec": {"noop": floor_noop, "scan_count": floor_scan},
-                "ref_spreads": {
-                    k[:4]: [v["min"], v["median"], v["max"]]
-                    for k, v in spreads.items()
-                    if is_ref(k)
-                },
-            }
-        )
-    )
+    print(json.dumps({"floor_sec": floor, "ref_spreads": {
+        n[:4]: [spreads[n]["min"], spreads[n]["median"], spreads[n]["max"]] for n in ref}}))
     print(json.dumps(headline))
     tracer.close()
     spark.stop()
+
+
+def resolve(arg: str, names) -> str:
+    """``arg`` itself, or the one name it is the ``<prefix>_`` of."""
+    if arg in names:
+        return arg
+    hits = [n for n in names if n.startswith(f"{arg}_")]
+    if len(hits) != 1:
+        raise SystemExit(f"bench.py: {arg!r} matches {hits or 'no row'}")
+    return hits[0]
+
+
+def profile(sf_dir: str, picked: list[str], overrides: dict[str, str], plan: bool) -> None:
+    from sqlondataframesr_spark.plans.audit import explain_formatted
+
+    table = rows(sf_dir)
+    picked = [resolve(a, table) for a in picked]
+    spark = get_spark(app_name="profile")
+    tracer = BenchTracer(spark, "profile")
+    print(f"# --conf {overrides or 'none'} over each row's profile")
+    print(f"{'row':44s}{'confs':>8s}{'median_s':>10s}{'runs':>6s}"
+          + "".join(f"{c:>11s}" for c in COLUMNS))
+    try:
+        for name in picked:
+            row = table[name]._replace(confs=table[name].confs | overrides)
+            samples = time_row(spark, tracer, row)["samples"]
+            cols, df = profile_row(spark, tracer, row)
+            family = next((k for k, v in PROFILES.items() if v == table[name].confs), "default")
+            cells = "".join(f"{v:11d}" if c in COUNTS else f"{v:11.1f}" for c, v in cols.items())
+            print(f"{name[:44]:44s}{family:>8s}{statistics.median(samples):10.3f}"
+                  f"{len(samples):6d}{cells}", flush=True)
+            if plan:
+                print(explain_formatted(df))
+            release_all()
+    finally:
+        tracer.close()
+        spark.stop()
+
+
+def digest(formatted: str) -> dict:
+    """The lines a plan review reads from ``explain("formatted")``: node
+    names, scans' PushedFilters/ReadSchema, join strategies and the
+    WholeStageCodegen span count."""
+    tree, scans, joins = [], [], []
+    for line in formatted.splitlines():
+        m = re.match(r"^([*(+:\-\s]*)\((\d+)\)\s+(\S+)", line)
+        if m:
+            tree.append(m.group(3))
+            if "Join" in m.group(3) or "CartesianProduct" in m.group(3):
+                joins.append(m.group(3))
+        if "PushedFilters:" in line or "ReadSchema:" in line:
+            scans.append(line.strip())
+    return {
+        "tree": tree,
+        "scans": scans,
+        "joins": sorted(set(joins)),
+        # formatted mode tags nodes with "[codegen id : N]" rather than
+        # printing WholeStageCodegen wrappers — count distinct span ids
+        "codegen": len(set(re.findall(r"codegen id : (\d+)", formatted))),
+        # BroadcastNestedLoopJoin is NOT flagged: every occurrence here
+        # is the deliberate broadcast-of-bounded-rows shape documented
+        # at each operator; a true CartesianProduct is always a defect
+        "cartesian": any("CartesianProduct" in j for j in joins),
+    }
+
+
+def plans(sf_dir: str) -> None:
+    from sqlondataframesr_spark.plans.audit import explain_formatted
+
+    table = rows(sf_dir)
+    spark = get_spark(app_name="plans")
+    out = [
+        "# PLANS — physical-plan digests (auto-generated)",
+        "",
+        f"Generated by `python bench.py plans` at `{sf_dir}`; each query runs",
+        "under the confs its bench row is timed with (the six reference",
+        "queries under `session.PROFILES[\"ref\"]`, AQE off). Per query:",
+        "the operator tree from `.explain(\"formatted\")` (names only),",
+        "every scan's PushedFilters/ReadSchema, the join strategies, and",
+        "the WholeStageCodegen span count. Review rule: scans must prune",
+        "(ReadSchema lists only consumed columns, filters pushed); a",
+        "CartesianProduct is always a defect. BroadcastNestedLoopJoin",
+        "appears only as the deliberate broadcast-of-bounded-rows shape",
+        "(K centroids, scalar totals, the ANN query set) documented at",
+        "each operator.",
+        "",
+    ]
+    for section, names in PLAN_SECTIONS.items():
+        out += [f"## {section}", ""]
+        for name in names:
+            row = table[name]
+            # execute=True digests the plan that ran: AQE's final plan
+            # where AQE is on (its pre-execution estimate carries no
+            # codegen ids, VERDICT r7 item 6)
+            with row_confs(spark, row.confs):
+                d = digest(explain_formatted(row.build(spark), execute=True))
+            release_all()
+            out += [f"### {name}", ""]
+            out += [
+                f"- joins: {', '.join(d['joins']) or '(none)'}"
+                + ("  ⚠ CARTESIAN/NESTED-LOOP" if d["cartesian"] else ""),
+                f"- WholeStageCodegen spans: {d['codegen']}",
+                "- operator tree: " + " → ".join(d["tree"][:40])
+                + (" …" if len(d["tree"]) > 40 else ""),
+                "- scans:",
+            ]
+            out += [f"  - `{s}`" for s in d["scans"]] or ["  - (none)"]
+            out += [""]
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
+        fh.write("\n".join(out) + "\n")
+    print("wrote PLANS.md")
+    spark.stop()
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    modes = ap.add_subparsers(dest="mode")
+    prof = modes.add_parser("profile", help="bench median + one traced run per ROW")
+    prof.add_argument("rows", nargs="+", metavar="ROW")
+    prof.add_argument("--conf", action="append", default=[], metavar="K=V")
+    prof.add_argument("--plan", action="store_true", help="print each row's formatted plan")
+    for p in (prof, modes.add_parser("plans", help="regenerate PLANS.md")):
+        p.add_argument("--sf-dir", default=SF_DIR)
+    args = ap.parse_args(argv)
+    if args.mode == "profile":
+        overrides = {}
+        for kv in args.conf:
+            k, sep, v = kv.partition("=")
+            if not sep:
+                ap.error(f"--conf wants K=V, got {kv!r}")
+            overrides[k] = v
+        profile(args.sf_dir, args.rows, overrides, args.plan)
+    elif args.mode == "plans":
+        plans(args.sf_dir)
+    else:
+        bench(SF_DIR)
 
 
 if __name__ == "__main__":

@@ -72,7 +72,7 @@ def _preflight(name: str, df: DataFrame) -> None:
         raise TypeError(
             f"schema drift in table {name!r}: {drift} (column: (expected, got)). "
             "The testdata generator changed an encoding the canonicalizer "
-            "does not recognize — teach catalog._canonicalize_ts / "
+            "does not recognize — teach catalog.canonicalize_ts / "
             "EXPECTED_DTYPES the new encoding."
         )
 
@@ -91,7 +91,7 @@ _table_cache: dict[tuple[str, str, str], DataFrame] = {}
 #: (TIMESTAMP(NANOS) read as int64 under nanosAsLong; TIMESTAMP(MICROS)
 #: without UTC adjustment read as TIMESTAMP_NTZ), so canonicalize by the
 #: *arrived type*, not by any one generator version's symptom.
-def _canonicalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
+def canonicalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     dtype = dict(df.dtypes).get(col)
     if dtype == "bigint":
         # int64 nanos → micros. Integer division — float division
@@ -106,7 +106,7 @@ def _canonicalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, canonicalizing types (see
-    :func:`_canonicalize_ts` for the events.ts invariant)."""
+    :func:`canonicalize_ts` for the events.ts invariant)."""
     key = (spark.sparkContext.applicationId, sf_dir, name)
     cached = _table_cache.get(key)
     if cached is not None:
@@ -120,7 +120,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _session.configure(spark)
         df = spark.read.parquet(path)
     if name == "events":
-        df = _canonicalize_ts(df)
+        df = canonicalize_ts(df)
     # Drift guards beyond events.ts (same fail-soft philosophy: a
     # generator encoding change should canonicalize where the cast is
     # value-preserving, and only fail-loud via _preflight when nobody

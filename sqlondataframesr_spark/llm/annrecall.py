@@ -68,7 +68,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (10.9 s: the union's stages already overlap; extra caches only
     # added build cost and pool stragglers — see OPTIMIZATION_r13.md).
     # The cache lives only within this run (release_all drops it).
-    vec = materialize(_sim._vectors(spark, sf_dir))
+    vec = materialize(_sim.load_vectors(spark, sf_dir))
     vec.count()
     # r14 (VERDICT r13 item 3, same §5 pattern): the ivf_trained
     # member used to run its Lloyd k-means INSIDE the report action —
@@ -78,14 +78,14 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Train ONCE on the pinned vec cache, pin the K-row result, and
     # plug it into the identical serving machinery. The composed plan
     # and the result are unchanged (ann_ivf_trained == _ivf_from_
-    # centroids(vec, _kmeans_centroids(vec)) by definition).
-    cent = materialize(_sim._kmeans_centroids(vec).select("c_id", "cv", "cn"))
+    # centroids(vec, kmeans_centroids(vec)) by definition).
+    cent = materialize(_sim.kmeans_centroids(vec).select("c_id", "cv", "cn"))
     cent.count()
     bf = _sim.ann_cosine_topk(spark, sf_dir).select("q_id", "neighbor_id")
     cand = None
     for label, fn, _ in _METHODS:
         if label == "ivf_trained":
-            c = _sim._ivf_from_centroids(vec, cent)
+            c = _sim.ivf_from_centroids(vec, cent)
         else:
             c = fn(spark, sf_dir)
         c = c.select(

@@ -43,7 +43,7 @@ from ..catalog import load_table
 from ..materialize import materialize
 from .decontam import CONTAM_THRESHOLD, EVAL_MOD
 from ..functions.dialect import Dialect, render
-from .dedup import _with_shingles, shingles_sql
+from .dedup import with_shingles, shingles_sql
 
 #: filter geometry — M sized so the tiny test eval set stays sparse
 #: (~2k eval shingles at sf0.01 -> ~1.5 bits/key load with K=3);
@@ -76,7 +76,7 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     contaminated), ordered by doc_id.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    shingled = _with_shingles(docs).transform(materialize)
+    shingled = with_shingles(docs).transform(materialize)
     is_eval = F.col("doc_id") % EVAL_MOD == 0
 
     eval_sh = (

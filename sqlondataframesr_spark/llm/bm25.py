@@ -47,7 +47,7 @@ BM25_N_QUERIES = 5
 BM25_TOP_K = 5
 
 
-def _postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+def bm25_postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(postings, dl) — the inverted-index frames every ranker in the
     family shares. The corpus is tokenized ONCE: ``tf`` is the cached
     root and ``dl`` is derived from it (Σ tf per doc ≡ token count per
@@ -71,7 +71,7 @@ def _postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    postings, dl = _postings(spark, sf_dir)
+    postings, dl = bm25_postings(spark, sf_dir)
     # r13: the collection size rides as a 1-row broadcast column
     # instead of an eager docs.count() — that count was a whole
     # driver-blocking job on EVERY call (also paid by hybrid_rrf_topk
@@ -201,7 +201,7 @@ def ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (q_id, doc_id, score, rnk) ordered by (q_id, rnk).
     """
-    postings, dl = _postings(spark, sf_dir)
+    postings, dl = bm25_postings(spark, sf_dir)
     cf = postings.groupBy("term").agg(F.sum("tf").alias("cf"))
     ctot = postings.agg(F.sum("tf").cast("long").alias("ctot"))
     q_terms = (

@@ -41,9 +41,9 @@ from ..functions.rounding import r6 as _r6, r6_sql
 from .semdedup import cap_cte, capped_partners, final_assign_sql, trained_prefix_sql
 from .similarity import (
     DIM,
-    _assign_lists,
-    _kmeans_centroids,
-    _vectors,
+    assign_lists,
+    kmeans_centroids,
+    load_vectors,
 )
 
 POS_T = 0.4
@@ -57,9 +57,9 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (vec_id, c_id, pos_id, pos_cos, neg_id, neg_cos) ordered
     by vec_id; -1 / 0.0 when no candidate exists in the class.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec).select("c_id", "cv", "cn")
-    asg = _assign_lists(vec, cent, "vec_id")
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec).select("c_id", "cv", "cn")
+    asg = assign_lists(vec, cent, "vec_id")
     members = materialize(
         vec.join(asg, "vec_id").select("vec_id", "list_id", "v", "nrm")
     )

@@ -26,7 +26,7 @@ from ..materialize import materialize
 from ..catalog import load_table
 from ..functions.rounding import r6 as _r6, r6_sql
 from ..functions.dialect import Dialect, render
-from .dedup import _with_shingles, shingles_sql
+from .dedup import with_shingles, shingles_sql
 
 #: flag a training doc when >= this fraction of its 3-shingles appear in the eval set
 CONTAM_THRESHOLD = 0.2
@@ -41,7 +41,7 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens have no shingles and are trivially clean (ratio 0).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    shingled = _with_shingles(docs).transform(materialize)
+    shingled = with_shingles(docs).transform(materialize)
 
     is_eval = F.col("doc_id") % EVAL_MOD == 0
     eval_sh = (
@@ -138,20 +138,20 @@ def decontam_scrub_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs (eval slice excluded), ordered by doc_id. Docs shorter than
     13 tokens have no windows and pass through untouched.
     """
-    from .dedup import SUBSTR_K, _with_grams
+    from .dedup import SUBSTR_K, with_grams
 
     k = SUBSTR_K
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_eval = F.col("doc_id") % EVAL_MOD == 0
 
     eval_g = (
-        _with_grams(docs.filter(is_eval), k)
+        with_grams(docs.filter(is_eval), k)
         .select(F.explode("gr").alias("gx"))
         .distinct()
     )
     train = docs.filter(~is_eval).withColumn("w", F.split("text", " "))
     # positional grams: (doc_id, start i [0-based], md5) — NO distinct.
-    # TOTAL expression (IF-guarded like _with_grams): Catalyst may hoist
+    # TOTAL expression (IF-guarded like with_grams): Catalyst may hoist
     # the generator child past the size(w) >= k filter, and slice()
     # throws on a descending sequence for sub-k-token docs.
     pos_g = train.filter(F.size("w") >= k).select(

@@ -30,7 +30,7 @@ from ..functions.closure_sql import packed_closure_sql
 JACCARD_THRESHOLD = 0.8
 
 
-def _with_shingles(docs: DataFrame) -> DataFrame:
+def with_shingles(docs: DataFrame) -> DataFrame:
     """doc_id + distinct word 3-shingles (documents with <3 tokens are
     excluded — they have no 3-shingle and no Jaccard identity).
 
@@ -111,7 +111,7 @@ def _jaccard_pairs(docs: DataFrame) -> DataFrame:
     dedup_ngram_jaccard for the scale discussion)."""
     # shingled feeds four branches (sizes x2, inverted index x2);
     # checkpoint so shingling runs once instead of per-branch.
-    shingled = _with_shingles(docs).transform(materialize)
+    shingled = with_shingles(docs).transform(materialize)
     sizes = shingled.select("doc_id", F.size("sh").alias("n_sh"))
     exploded = shingled.select("doc_id", F.explode("sh").alias("s"))
 
@@ -337,7 +337,7 @@ def _jaccard_pairs_capped(
     (jaccard(A,B) <= min/max sizes, 5e-7 slack for the r6 rounding)
     still drops size-incompatible pairs before the final arithmetic.
     """
-    shingled = _with_shingles(docs).transform(materialize)
+    shingled = with_shingles(docs).transform(materialize)
     v = _capped_pair_counts(shingled, "sh", cap).filter(
         F.least("na", "nb").cast("double")
         >= F.lit(JACCARD_THRESHOLD - 5e-7)
@@ -418,7 +418,7 @@ def _containment_pairs(docs: DataFrame, cap: int = SHINGLE_DF_CAP) -> DataFrame:
     2-struct explode instead of a UNION that re-executed the whole
     verify subtree twice (the old plan's single biggest cost: the
     union's branches each re-joined the full shingle arrays)."""
-    shingled = _with_shingles(docs).transform(materialize)
+    shingled = with_shingles(docs).transform(materialize)
     v = _capped_pair_counts(shingled, "sh", cap)
     both = v.select(
         F.explode(
@@ -541,7 +541,7 @@ def dedup_substring_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _with_grams(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
+def with_grams(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """(doc_id, gr=array of distinct k-token-window md5s) — the shared
     gram-building pass of the exact and capped substring operators."""
     # The window expression is TOTAL (IF-guarded): Catalyst can hoist a
@@ -551,7 +551,7 @@ def _with_grams(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     # are filtered out. (The 3-shingle operators survive unguarded only
     # because w[i] returns NULL instead of raising.)
     # spread_scan: one md5 per 13-token window is the CPU-dense pass —
-    # same single-row-group-scan serialization fix as _with_shingles
+    # same single-row-group-scan serialization fix as with_shingles
     return (
         spread_scan(docs, "doc_id")
         .withColumn("w", F.split(F.col("text"), " "))
@@ -572,7 +572,7 @@ def _with_grams(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
 
 def _substring_pairs(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """(doc_a < doc_b, n_shared) pairs sharing >= 1 exact k-token window."""
-    grams = _with_grams(docs, k)
+    grams = with_grams(docs, k)
     # e feeds BOTH sides of the self-join — checkpoint, or the window
     # md5 map (the expensive part: one hash per token window) runs
     # twice (measured ~2x the query's cost at sf0.1).
@@ -666,7 +666,7 @@ def _substring_pairs_capped(
     full 32-char-md5 gram arrays never cross a shuffle or a hash-set
     build again.
     """
-    grams = _with_grams(docs, k).transform(materialize)
+    grams = with_grams(docs, k).transform(materialize)
     return _capped_pair_counts(grams, "gr", cap).select(
         "doc_a",
         "doc_b",
@@ -721,7 +721,7 @@ def dedup_substring_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window chain serially below the spread exchange (3.8 s of the
     # report's 4.5 s wall)
     e = (
-        _with_grams(load_table(spark, sf_dir, "documents"))
+        with_grams(load_table(spark, sf_dir, "documents"))
         .select("doc_id", F.explode_outer("gr").alias("gx"))
         .filter(F.col("gx").isNotNull())
     )
@@ -932,7 +932,7 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform, aggregate-fold, slice/min) — zero shuffles; joining
     selections to find collisions is one (fingerprint, doc_id)
     shuffle, the same shape as dedup_exact. spread_scan via
-    _with_shingles' rationale applies (CPU-dense map on an
+    with_shingles' rationale applies (CPU-dense map on an
     under-split scan).
     """
     return (

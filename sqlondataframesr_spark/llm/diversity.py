@@ -54,7 +54,7 @@ def _ngrams_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One spread scan; per n the gram construction is a TOTAL (IF-
     guarded) transform, so short docs contribute empty arrays instead
-    of a descending ``sequence`` (the _with_grams discipline)."""
+    of a descending ``sequence`` (the with_grams discipline)."""
     docs = load_table(spark, sf_dir, "documents").select("source", "text")
     w = spread_scan(docs, "source").withColumn(
         "w", F.expr("filter(split(text, ' '), x -> x != '')")

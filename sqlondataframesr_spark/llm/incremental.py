@@ -40,7 +40,7 @@ from ..catalog import load_table
 from ..materialize import materialize
 from ..functions.rounding import r6 as _r6
 from ..functions.dialect import Dialect, render
-from .dedup import _with_shingles, shingles_sql
+from .dedup import with_shingles, shingles_sql
 from .minhash import (
     BANDS,
     EST_THRESHOLD,
@@ -87,7 +87,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("h_id").alias("exact_dup_of"))
     )
 
-    sig = minhash_signatures(_with_shingles(docs)).transform(materialize)
+    sig = minhash_signatures(with_shingles(docs)).transform(materialize)
     bands = _bands_of(sig)
     cand = (
         bands.filter(is_batch)

@@ -44,7 +44,7 @@ from ..catalog import load_table
 from ..functions.dialect import SPARK, Dialect, render
 from ..functions.rounding import r6 as _r6
 from . import dedup as _dedup
-from .dedup import _with_shingles, shingles_sql
+from .dedup import with_shingles, shingles_sql
 
 #: K signature positions = BANDS * ROWS_PER_BAND
 NUM_PERM = 12
@@ -131,7 +131,7 @@ def minhash_signatures(docs_shingled: DataFrame) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH, scored by
     estimated Jaccard (signature agreement fraction), est >= 0.5."""
-    shingled = _with_shingles(load_table(spark, sf_dir, "documents"))
+    shingled = with_shingles(load_table(spark, sf_dir, "documents"))
     # sig feeds three branches (bands + both sides of the score join);
     # checkpoint so the shingle+hash pass runs once. K bigints per doc.
     sig = minhash_signatures(shingled).transform(materialize)
@@ -223,7 +223,7 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (doc_a, doc_b, sig_est_ppm, bbit_agree, bbit_est_ppm,
     err_ppm) ordered by (doc_a, doc_b).
     """
-    shingled = _with_shingles(load_table(spark, sf_dir, "documents"))
+    shingled = with_shingles(load_table(spark, sf_dir, "documents"))
     sig = minhash_signatures(shingled).transform(materialize)
     bands = sig.select(
         "doc_id",

@@ -47,7 +47,7 @@ from .similarity import (
     NLIST,
     NPROBE,
     TOP_K,
-    _vectors,
+    load_vectors,
     vec_sql,
 )
 
@@ -98,7 +98,7 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-encode the corpus: (vec_id, codes, qerr) where codes is the
     comma-joined 8 codeword ids and qerr the total squared-L2
     quantization error."""
-    vec = _vectors(spark, sf_dir)
+    vec = load_vectors(spark, sf_dir)
     return (
         _encoded(vec)
         .groupBy("vec_id")
@@ -126,7 +126,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantization error); the oracle replicates the codebook and the
     LUT, pinning the algorithm, not ideal-kNN.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     sub = _subvectors(vec)
     cb = sub.filter(F.col("vec_id") < KSUB).select(
         F.col("vec_id").alias("cw_id"), "m", F.col("subv").alias("cw")
@@ -193,7 +193,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     code joins, map-combined; the rerank touches SHORTLIST x queries
     full vectors. No stage shuffles the corpus' float payload.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     # --- IVF coarse stage (stand-in centroids: first NLIST by id,
     # same convention + caveats as ann_ivf_topk) ---
     cent = vec.filter(F.col("vec_id") < NLIST).select(

@@ -30,7 +30,7 @@ corpus-sized. Two r12 structure changes (ADVICE r11 + VERDICT r11
 item 5): (a) the 3-ranker union is MATERIALIZED and consumed by ONE
 method-vs-method self-join + ONE aggregate (the oracle's own shape)
 instead of the per-pair filter/join/agg loop (6 scans + 3 agg jobs);
-(b) the rankers share the corpus pass — bm25.py's ``_postings``
+(b) the rankers share the corpus pass — bm25.py's ``bm25_postings``
 builds ONE cached tf frame (dl derived from it, no second tokenize)
 with plan-identical construction across all three arms, so Spark's
 CacheManager dedupes the tokenization within the report action.
@@ -87,8 +87,8 @@ def ret_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalized vectors (hybrid's ANN arm) — then force the three
     # pinned arm frames concurrently: wall ≈ max(arm), not Σ(arm).
     # All within this run; nothing outlives release_all().
-    postings, _dl = _bm25._postings(spark, sf_dir)
-    vec = materialize(_sim._vectors(spark, sf_dir))
+    postings, _dl = _bm25.bm25_postings(spark, sf_dir)
+    vec = materialize(_sim.load_vectors(spark, sf_dir))
     force_concurrently([postings, vec], max_workers=2)
     arms = []
     for label, fn, id_col in _METHODS:

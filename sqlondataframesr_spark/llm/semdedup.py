@@ -49,9 +49,9 @@ from ..materialize import materialize
 from .similarity import (
     DIM,
     KM_ITERS,
-    _assign_lists,
-    _kmeans_centroids,
-    _vectors,
+    assign_lists,
+    kmeans_centroids,
+    load_vectors,
     kmeans_parts,
 )
 
@@ -126,9 +126,9 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (vec_id, c_id, is_dup, dup_of) — dup_of = smallest
     smaller-id cluster-mate with cosine >= TAU, else -1.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec).select("c_id", "cv", "cn")
-    asg = _assign_lists(vec, cent, "vec_id")
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec).select("c_id", "cv", "cn")
+    asg = assign_lists(vec, cent, "vec_id")
     # members feeds both sides of the pair join — pin it so training
     # and assignment run once, not per join branch
     members = materialize(
@@ -186,9 +186,9 @@ def semdedup_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (n_clusters, max_cluster_size, pair_cap, cap_binds).
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec).select("c_id", "cv", "cn")
-    asg = _assign_lists(vec, cent, "vec_id")
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec).select("c_id", "cv", "cn")
+    asg = assign_lists(vec, cent, "vec_id")
     sizes = asg.groupBy("list_id").agg(F.count(F.lit(1)).alias("csz"))
     return sizes.agg(
         F.count(F.lit(1)).cast("long").alias("n_clusters"),
@@ -279,9 +279,9 @@ def emb_prototypicality_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (vec_id, c_id, proto_cos, proto_rank, keep) — keep=false
     for the floor(cluster_size/4) most-prototypical members.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec).select("c_id", "cv", "cn")
-    asg = _assign_lists(vec, cent, "vec_id", with_cos=True)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec).select("c_id", "cv", "cn")
+    asg = assign_lists(vec, cent, "vec_id", with_cos=True)
     wr = Window.partitionBy("list_id").orderBy(
         F.col("proto_cos").desc(), F.col("vec_id").asc()
     )

@@ -73,7 +73,7 @@ def _planes(d: Dialect) -> str:
     return d.list(",".join(d.list(",".join(f"{w}{d.D}" for w in p)) for p in PLANES))
 
 
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id + double-cast vector + L2 norm (cast once, reuse
     everywhere). spread_scan: band/dot-product exprs downstream are
     CPU-dense; don't let a single-row-group scan serialize them."""
@@ -126,7 +126,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory query table (BroadcastNestedLoopJoin), no shuffle of the
     big side at any scale.
     """
-    vec = _vectors(spark, sf_dir)
+    vec = load_vectors(spark, sf_dir)
     q = vec.select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     ).filter(F.col("q_id") < N_QUERIES)
@@ -148,7 +148,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replicates the bucketing, so the check pins the
     *algorithm*, not ideal-kNN."""
     # vec feeds three branches (bands + query/neighbor score joins)
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     bands = _bands(with_signature(vec))
     qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "band", "bkey"
@@ -194,7 +194,7 @@ def knn_graph_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Vectors with no band collision have no row — at production scale
     you union a random-neighbor fallback for isolated points.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     # bands feed both sides of the self-join — checkpoint once
     bands = _bands(with_signature(vec)).transform(materialize)
     a, b = bands.alias("a"), bands.alias("b")
@@ -235,7 +235,7 @@ NLIST = 8
 NPROBE = 2
 
 
-def _assign_lists(
+def assign_lists(
     vec: DataFrame, centroids: DataFrame, id_col: str, with_cos: bool = False
 ) -> DataFrame:
     """Nearest-centroid assignment: (id, list_id) by max cosine
@@ -274,35 +274,35 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned corpus, so the big side never reshuffles. Recall < 1 by
     design; the oracle replicates the bucketing, pinning the
     algorithm, not ideal-kNN."""
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     centroids = vec.filter(F.col("vec_id") < NLIST).select(
         F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn")
     )
-    return _ivf_from_centroids(vec, centroids)
+    return ivf_from_centroids(vec, centroids)
 
 
 def ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over the TRAINED k-means codebook — the end-to-end
     pipeline :func:`kmeans_train`'s docstring promises: Lloyd
     iterations produce the centroids, the identical partition/probe/
-    rerank machinery (:func:`_ivf_from_centroids`) serves queries.
+    rerank machinery (:func:`ivf_from_centroids`) serves queries.
 
     Same scale posture as ann_ivf_topk plus the training cost (one
     corpus scan + one K-group aggregate per iteration). The oracle
     replays the unrolled training AND the probe in one SQL statement,
     so the differential check pins the whole pipeline, not just the
     serving half."""
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec).select("c_id", "cv", "cn")
-    return _ivf_from_centroids(vec, cent)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec).select("c_id", "cv", "cn")
+    return ivf_from_centroids(vec, cent)
 
 
-def _ivf_from_centroids(vec: DataFrame, centroids: DataFrame) -> DataFrame:
+def ivf_from_centroids(vec: DataFrame, centroids: DataFrame) -> DataFrame:
     """The IVF partition/probe/rerank machinery, codebook-agnostic:
     broadcast assignment, NPROBE probes per query, exact rerank on
     candidates only. Plugged by :func:`ann_ivf_topk` (stand-in
     codebook) and :func:`ann_ivf_trained` (k-means codebook)."""
-    assigned = _assign_lists(vec, centroids, "vec_id")
+    assigned = assign_lists(vec, centroids, "vec_id")
 
     q = vec.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -411,7 +411,7 @@ KM_K = 8
 KM_ITERS = 3
 
 
-def _kmeans_centroids(vec: DataFrame) -> DataFrame:
+def kmeans_centroids(vec: DataFrame) -> DataFrame:
     """KM_ITERS unrolled Lloyd iterations → (c_id, n, cv, cn).
 
     Init = first KM_K vectors by id; assignment on 6-dp-rounded cosine
@@ -440,7 +440,7 @@ def _kmeans_centroids(vec: DataFrame) -> DataFrame:
         for i in range(DIM)
     ]
     for _ in range(KM_ITERS):
-        assigned = _assign_lists(vec, cent.select("c_id", "cv", "cn"), "vec_id")
+        assigned = assign_lists(vec, cent.select("c_id", "cv", "cn"), "vec_id")
         g = (
             vec.join(assigned, "vec_id")
             .groupBy("list_id")
@@ -476,8 +476,8 @@ def kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer-micros sums — the DuckDB oracle replays the
     identical unrolled iterations.
     """
-    vec = _vectors(spark, sf_dir).transform(materialize)
-    cent = _kmeans_centroids(vec)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    cent = kmeans_centroids(vec)
     # serialize the centroid as comma-joined integer micros — harness-
     # hashable, and round(x*1e6) of a 6-dp component is engine-exact
     cent_us = F.expr(
@@ -538,7 +538,7 @@ def _kmeans_sql(d: Dialect) -> str:
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup vector pairs: band collision then exact cosine >= 0.4."""
     # vec feeds three branches (bands + both sides of the score join)
-    vec = _vectors(spark, sf_dir).transform(materialize)
+    vec = load_vectors(spark, sf_dir).transform(materialize)
     bands = _bands(with_signature(vec))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -909,7 +909,7 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream over the corpus, no big-side shuffle); only
     N_QUERIES·SQ_RERANK rows reach the exact re-rank join.
     """
-    vec = _vectors(spark, sf_dir)
+    vec = load_vectors(spark, sf_dir)
     codes = (
         vec.withColumn("maxabs", F.expr("array_max(transform(v, x -> abs(x)))"))
         .withColumn(
@@ -1060,7 +1060,7 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); only N_QUERIES x MRL_SHORTLIST rows reach the full-width
     rerank join.
     """
-    vec = _vectors(spark, sf_dir)
+    vec = load_vectors(spark, sf_dir)
     pv = vec.withColumn("pv", F.expr(f"slice(v, 1, {MRL_PREFIX_DIM})")).withColumn(
         "pn", F.expr(V.l2_norm("pv"))
     )

@@ -63,9 +63,8 @@ def physical_plan(df: DataFrame) -> str:
 
 def explain_formatted(df: DataFrame, execute: bool = False) -> str:
     """``explain("formatted")`` as a string — the ONE shared accessor
-    (ADVICE r7: this call was previously duplicated across
-    scripts/dump_plans.py and tests; private-API churn now breaks in
-    exactly one place).
+    (ADVICE r7), used by ``bench.py plans``, ``bench.py profile --plan``
+    and the tests, so private-API churn breaks in exactly one place.
 
     ``execute=True`` materializes the query FIRST (an action on the
     same JVM Dataset finalizes the same queryExecution), so the digest

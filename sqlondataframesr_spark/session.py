@@ -65,7 +65,7 @@ SQL_CONFS = {
     # Plan-string truncation elides PushedFilters / ReadSchema
     # metadata mid-token (maxMetadataStringLength caps each scan-node
     # metadata entry at 100 chars; maxToStringFields caps field
-    # lists), blinding plans/audit.py and dump_plans.py; the audit
+    # lists), blinding plans/audit.py and `bench.py plans`; the audit
     # layer is a first-class surface here, so print plans whole.
     "spark.sql.debug.maxToStringFields": "500",
     "spark.sql.maxMetadataStringLength": "10000",
@@ -79,7 +79,8 @@ SQL_CONFS = {
 
 
 #: Per-family conf profiles for the two toy-scale latency families, set
-#: on a live session by bench.py and ``scripts/query_profile.py --profile``.
+#: on a live session by bench.py for each row of their family (all
+#: three modes: the timed runs, ``profile`` and ``plans``).
 #: ``get_spark`` and ``configure`` never apply them: every other query,
 #: and any session at real scale, runs under SQL_CONFS above — the
 #: compute-dense extension operators NEED the parallelism and AQE's

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import _canonicalize_ts, load_table
+from ..catalog import canonicalize_ts, load_table
 from ..functions.dialect import DUCK, SPARK, Dialect, render
 
 TUMBLE_WIDTH = "1 day"
@@ -54,7 +54,7 @@ def _raw_events_schema(spark: SparkSession, sf_dir: str):
     the ts encoding across rounds (int64 nanos, micros-NTZ); a pinned
     StructType silently mis-reads whichever encoding it wasn't written
     for, so stream and batch must derive from the same footer and both
-    pass through :func:`sqlondataframesr_spark.catalog._canonicalize_ts`."""
+    pass through :func:`sqlondataframesr_spark.catalog.canonicalize_ts`."""
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
@@ -62,7 +62,7 @@ def _canon_ts(df: DataFrame) -> DataFrame:
     """Canonicalize ts to session-TZ timestamp (same instant DuckDB
     sees); delegates to the catalog's by-type canonicalizer so stream
     and batch share one invariant."""
-    return _canonicalize_ts(df)
+    return canonicalize_ts(df)
 
 
 def _stream_dir(sf_dir: str) -> str:

@@ -113,7 +113,7 @@ def test_capped_13gram_bounds_hot_gram_keeps_true_dups(spark):
     assert set(capped) == {(100, 101)}
 
     # the cap-binding signal fires on this corpus...
-    e = dedup._with_grams(df).select("doc_id", F.explode("gr").alias("gx"))
+    e = dedup.with_grams(df).select("doc_id", F.explode("gr").alias("gx"))
     max_df = e.groupBy("gx").count().agg(F.max("count")).collect()[0][0]
     assert max_df > 10
 
@@ -163,7 +163,7 @@ def test_capped_jaccard_drops_boilerplate_keeps_near_dups(spark):
 
     # candidate bound: every boilerplate shingle has df=30 > cap, so the
     # rare-postings self-join must produce exactly the ONE genuine pair
-    shingled = dedup._with_shingles(df)
+    shingled = dedup.with_shingles(df)
     exploded = shingled.select("doc_id", F.explode("sh").alias("s"))
     rare = (
         exploded.groupBy("s")
@@ -369,7 +369,7 @@ def test_kmeans_improves_assignment_quality(spark, sf_dir):
     from sqlondataframesr_spark.llm import similarity as S
     from sqlondataframesr_spark.materialize import materialize
 
-    vec = materialize(S._vectors(spark, sf_dir))
+    vec = materialize(S.load_vectors(spark, sf_dir))
     n_vecs = vec.count()
     trained = S.kmeans_train(spark, sf_dir).collect()
     assert sum(r.n for r in trained) == n_vecs
@@ -413,11 +413,11 @@ def test_ivf_trained_uses_kmeans_codebook(spark, sf_dir):
     assert set(per_q) == set(range(S.N_QUERIES))
     assert all(len(v) == S.TOP_K for v in per_q.values())
 
-    vec = S._vectors(spark, sf_dir)
-    cent = S._kmeans_centroids(vec).select("c_id", "cv", "cn")
+    vec = S.load_vectors(spark, sf_dir)
+    cent = S.kmeans_centroids(vec).select("c_id", "cv", "cn")
     assigned = {
         r["vec_id"]: r["list_id"]
-        for r in S._assign_lists(vec, cent, "vec_id").collect()
+        for r in S.assign_lists(vec, cent, "vec_id").collect()
     }
     # probed lists per query = NPROBE best centroids by rounded cosine
     q_scored = (
@@ -820,7 +820,7 @@ def test_matryoshka_exact_when_signal_lives_in_prefix(spark):
         pre = [math.sin(i * 16 + d) for d in range(16)]
         rows.append((i, [float(x) for x in pre] + [0.0] * 48, 0))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    # route _vectors at the planted frame: patch the name the module
+    # route load_vectors at the planted frame: patch the name the module
     # resolves (similarity imported load_table into its own namespace)
     orig = S.load_table
     try:
@@ -880,7 +880,7 @@ def test_containment_counts_hot_shingles_exactly(spark):
 
     # boiler shingles are hot: df >= 32 > cap=10 — the rare index alone
     # cannot account for them, only the hot-array term can
-    exploded = dedup._with_shingles(df).select(
+    exploded = dedup.with_shingles(df).select(
         "doc_id", F.explode("sh").alias("s")
     )
     max_df = exploded.groupBy("s").count().agg(F.max("count")).collect()[0][0]
@@ -896,7 +896,7 @@ def test_containment_counts_hot_shingles_exactly(spark):
     # floor(x*1e6+0.5)/1e6 spelling, replicated)
     import math
 
-    sh = {r.doc_id: set(r.sh) for r in dedup._with_shingles(df).collect()}
+    sh = {r.doc_id: set(r.sh) for r in dedup.with_shingles(df).collect()}
     for (big, small), c in cont.items():
         n_common = len(sh[big] & sh[small])
         expect = math.floor(n_common / len(sh[small]) * 1e6 + 0.5) / 1e6

@@ -113,9 +113,9 @@ def test_dense_cluster_and_pair_cap(spark, skew_dir):
     corpus = 500
     assert r.max_cluster_size > 2 * (corpus // r.n_clusters)
     assert not r.cap_binds  # 4096 cap cannot bind at 500 rows
-    vec = SD._vectors(spark, skew_dir)
-    cent = SD._kmeans_centroids(vec).select("c_id", "cv", "cn")
-    members = SD._assign_lists(vec, cent, "vec_id")
+    vec = SD.load_vectors(spark, skew_dir)
+    cent = SD.kmeans_centroids(vec).select("c_id", "cv", "cn")
+    members = SD.assign_lists(vec, cent, "vec_id")
     small_cap = int(r.max_cluster_size) - 10
     kept = SD.capped_partners(members, cap=small_cap)
     n_all = members.count()

@@ -1,12 +1,13 @@
 """One measurement path, one comparator and one SQL source per query:
 the bench and the scripts must compile under names that shadow no
-stdlib module, and the status-store reader, the conf profiles, the
-lineage cut, the float rule, the DuckDB star views and the
-DuckDB/Spark-SQL spellings must each live in one place (perfbench/,
-session.PROFILES, materialize.truncate, check.py and
+stdlib module, and the timing loop, the status-store reader, the conf
+profiles, the lineage cut, the float rule, the DuckDB star views and
+the DuckDB/Spark-SQL spellings must each live in one place (bench.py,
+perfbench/, session.PROFILES, materialize.truncate, check.py and
 functions/dialect.py), so a second copy cannot drift from what the
 bench times, from what release_all frees, from what the driver's value
-hash accepts, or from the oracle its dual is checked against."""
+hash accepts, or from the oracle its dual is checked against. A
+package module uses only another module's public names."""
 
 from __future__ import annotations
 
@@ -26,6 +27,7 @@ JOIN_PROFILE_CONF = re.escape("spark.sql.join." + "preferSortMergeJoin")
 FLOAT_TOLERANCE = re.escape("math." + "isclose")
 EXACT_ENV_READ = r"""(environ\.get\(|environ\[|getenv\()\s*["']EXACT["']"""
 LOCAL_CHECKPOINT_CALL = re.escape(".local" + "Checkpoint(")
+TIMER_CALL = re.escape("time.perf" + "_counter")
 DUCKDB_VIEW = r"(?i)CREATE\s+(OR\s+REPLACE\s+)?VIEW\b"
 TWIN_NAME = re.compile(r"(_DUCK|_SPARK|_DUCK_SQL|_SPARK_SQL)$")
 DIALECT_BRANCH = r"""\bdialect\s*:\s*str\b|==\s*["'](duck|spark)["']"""
@@ -87,6 +89,11 @@ def test_join_conf_profiles_only_in_session():
     assert _sites(JOIN_PROFILE_CONF, allowed) == []
 
 
+def test_one_timing_loop():
+    # bench.py's time_runs is the one timing loop; perfbench keeps its own
+    assert _sites(TIMER_CALL, {"bench.py"}) == []
+
+
 def test_local_checkpoint_only_in_materialize():
     # materialize.truncate is the one lineage cut: it records the
     # checkpointed RDD so release_all can free its blocks
@@ -128,18 +135,13 @@ def _package_modules() -> list[tuple[str, ast.Module]]:
     return out
 
 
-def _is_private_sql(name: str) -> bool:
-    # a private constant or SQL builder: _COS, _VEC_SQL, _kmeans_parts
-    return name.startswith("_") and (name.isupper() or name.endswith(("_sql", "_parts", "_cte")))
-
-
 def test_one_sql_source_per_query():
     """Outside functions/dialect.py no module keeps a DuckDB/Spark twin:
     no ``*_DUCK`` / ``*_SPARK`` / ``*_SPARK_SQL`` name (the six
-    ``Q<n>_SPARK_SQL`` names of queries/reference.py aside), no string
-    dialect switch, and no private SQL fragment shared across modules
-    (a shared builder is public and takes the Dialect)."""
-    twins, branches, imports = [], [], []
+    ``Q<n>_SPARK_SQL`` names of queries/reference.py aside) and no
+    string dialect switch (a shared SQL builder is public and takes the
+    Dialect, test_no_private_import_across_modules)."""
+    twins, branches = [], []
     for rel, tree in _package_modules():
         for node in tree.body:
             targets = node.targets if isinstance(node, ast.Assign) else (
@@ -147,24 +149,101 @@ def test_one_sql_source_per_query():
             twins += [f"{rel}:{t.id}" for t in targets
                       if isinstance(t, ast.Name) and t.id != "SPARK_SQL" and TWIN_NAME.search(t.id)
                       and not REFERENCE_TWINS.match(f"{rel}:{t.id}")]
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom) and node.level > 0:
-                imports += [f"{rel}:{a.name}" for a in node.names if _is_private_sql(a.name)]
         with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
             branches += [f"{rel}:{n}" for n, line in enumerate(fh, 1) if re.search(DIALECT_BRANCH, line)]
     assert twins == []
     assert branches == []
-    assert imports == []
+
+
+def _is_private(name: str) -> bool:
+    return name.startswith("_") and not name.startswith("__")
+
+
+def test_no_private_import_across_modules():
+    """No package module imports another's private name
+    (``from .x import _y``) or reads one off a sibling module
+    (``_alias._y``), so renaming a module's internals breaks no other
+    module."""
+    sites = []
+    for path in sorted(glob.glob(os.path.join(PACKAGE, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read(), path)
+        modules = set()
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.level > 0):
+                continue
+            base = os.path.dirname(path)
+            for _ in range(node.level - 1):
+                base = os.path.dirname(base)
+            base = os.path.join(base, *(node.module or "").split("."))
+            for a in node.names:
+                if os.path.exists(os.path.join(base, a.name + ".py")) or os.path.isdir(os.path.join(base, a.name)):
+                    modules.add(a.asname or a.name)
+                elif _is_private(a.name):
+                    sites.append(f"{_rel(path)}:{node.lineno}:{a.name}")
+        sites += [f"{_rel(path)}:{node.lineno}:{node.value.id}.{node.attr}" for node in ast.walk(tree)
+                  if isinstance(node, ast.Attribute) and _is_private(node.attr)
+                  and isinstance(node.value, ast.Name) and node.value.id in modules]
+    assert sites == []
+
+
+def _bench():
+    spec = importlib.util.spec_from_file_location("bench", os.path.join(ROOT, "bench.py"))
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    return bench
+
+
+def test_bench_rows_take_their_family_confs(monkeypatch):
+    """Each row carries its family's conf profile, and building the table
+    generates no Stack-Exchange fixture."""
+    from sqlondataframesr_spark.queries import reference, stackexchange
+    from sqlondataframesr_spark.session import PROFILES
+
+    def no_fixture(*_a, **_k):
+        raise AssertionError("rows() generated an SE fixture")
+
+    monkeypatch.setattr(stackexchange, "fixture_dir", no_fixture)
+    table = _bench().rows("/nonexistent/sf0.1")
+    assert {n: table[n].confs for n in reference.QUERIES} == dict.fromkeys(reference.QUERIES, PROFILES["ref"])
+    assert table["se100_task1_upvotes_per_year"].confs == PROFILES["se"]
+    assert table["se1000_task1_upvotes_per_year"].confs == {}
+    assert table["kmeans_train"].confs == {}
+    assert list(table)[:6] == sorted(reference.QUERIES)
+
+
+def test_profile_row_runs_under_the_row_confs(spark, sf_dir):
+    """profile_row traces one q4 run under PROFILES["ref"], returns integer
+    counts and a timed action, and leaves the session's confs as it
+    found them."""
+    from sqlondataframesr_spark.session import PROFILES
+
+    bench = _bench()
+    row = bench.rows(sf_dir)["q4_price_spread"]
+    before = {k: spark.conf.get(k, None) for k in PROFILES["ref"]}
+    seen = {}
+
+    def build(s):
+        seen.update({k: s.conf.get(k) for k in PROFILES["ref"]})
+        return row.build(s)
+
+    tracer = bench.BenchTracer(spark, "t")
+    try:
+        cols, _df = bench.profile_row(spark, tracer, row._replace(build=build))
+    finally:
+        tracer.close()
+    assert seen == PROFILES["ref"]
+    assert {k: spark.conf.get(k, None) for k in PROFILES["ref"]} == before
+    assert all(type(cols[c]) is int for c in bench.COUNTS)
+    assert cols["jobs"] >= 1 and cols["tasks"] >= cols["stages"] >= 1
+    assert cols["action_ms"] > 0
 
 
 def test_bench_tracer_counts_jobs_run_under_another_group(spark):
     """A query's window owns jobs a helper thread runs under its own job
     group (Structured Streaming's micro-batches); nothing before the
     window counts."""
-    spec = importlib.util.spec_from_file_location("bench", os.path.join(ROOT, "bench.py"))
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    tracer = bench.BenchTracer(spark, "t")
+    tracer = _bench().BenchTracer(spark, "t")
     sc = spark.sparkContext
     spark.range(10).count()
 
