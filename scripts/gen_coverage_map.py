@@ -12,7 +12,8 @@ Columns (evidence sources, newest round of each):
 - plan:     name appears in tests/test_plans.py (plan-shape pinned).
 - property: name's implementing function appears in
             tests/test_properties.py (hypothesis property-tested).
-- dual:     query ships a SPARK_SQL text form (fluent≡SQL tested).
+- dual:     query's TEMPLATES value renders a Spark-SQL form, listed in
+            registry.spark_sql() (fluent≡SQL tested).
 
 The map is regenerated by `python scripts/gen_coverage_map.py` (writes
 COVERAGE.md in place between the markers); tests/test_docs_counts.py
@@ -127,7 +128,7 @@ def generate(pins: dict[str, str] | None = None) -> str:
         f"Per-query gate coverage ({len(queries)} queries; evidence rounds: "
         f"driver={driver_round}, matrix={matrix_round}, empty={empty_round}; "
         "plan/property = referenced in tests/test_plans.py+test_operators.py / "
-        "tests/test_properties.py; dual = SPARK_SQL form registered).",
+        "tests/test_properties.py; dual = Spark-SQL form in registry.spark_sql()).",
         "",
         "| query | driver | matrix | empty | plan | property | dual |",
         "|---|---|---|---|---|---|---|",

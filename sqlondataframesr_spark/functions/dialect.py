@@ -1,15 +1,22 @@
 """The one place a DuckDB/Spark-SQL spelling difference lives.
 
-Each oracle and its Spark-SQL dual render from one template
-``def _x_sql(d: Dialect) -> str``; a query module lists them as
-``TEMPLATES = {name: _x_sql}`` and renders both dicts at once::
+A query module declares its SQL once, in ``TEMPLATES``, keyed like its
+``QUERIES``. A value is one of:
 
-    ORACLES, SPARK_SQL = render(TEMPLATES)
+- a plain string, which both engines run as is;
+- a template ``def _x_sql(d: Dialect) -> str``, so an oracle and its
+  Spark-SQL dual are written once and cannot drift apart;
+- ``dual(oracle, spark=None)``: a deliberate dual (two texts that
+  check one plan shape against another) or, with no ``spark``, an
+  oracle-only query. Either side may be a zero-argument callable, so a
+  fixture-backed oracle is built only when it is asked for.
 
-so a query is written once and the two texts cannot drift apart. The
-DuckDB rendering is the oracle the driver executes, so every ``DUCK``
-spelling below reproduces the oracle text byte for byte; the ``SPARK``
-spelling is whatever Spark SQL needs for the same values and types.
+``registry`` renders every ``TEMPLATES`` value with :meth:`Dialect.render`
+on each call: ``DUCK`` gives the oracles, ``SPARK`` the Spark-SQL duals.
+The DuckDB rendering is the oracle the driver executes, so every
+``DUCK`` spelling below reproduces the oracle text byte for byte; the
+``SPARK`` spelling is whatever Spark SQL needs for the same values and
+types.
 
 Spellings both engines accept are NOT routed through here: ``||``,
 ``x::BIGINT``, ``substr``, ``<<``, ``GROUP BY ALL``, ``JOIN ... ON
@@ -222,25 +229,29 @@ class Dialect:
         """``x`` cast to a string."""
         return f"CAST({x} AS {self.varchar})"
 
-    def texts(self, module) -> dict[str, str]:
-        """A query module's SQL texts rendered in this dialect."""
-        return module.ORACLES if self.duck else module.SPARK_SQL
+    def render(self, template: Template) -> str | None:
+        """A ``TEMPLATES`` value's text in this dialect; ``None`` for an
+        oracle-only query's Spark side."""
+        return template if isinstance(template, str) else template(self)
 
     def fn(self, name: str, *args: str) -> str:
         """A call of the DuckDB function ``name``, renamed for Spark."""
         return f"{name if self.duck else _SPARK_NAMES[name]}({', '.join(args)})"
 
 
+#: a ``TEMPLATES`` value: one text, or a text per dialect
+Template = str | Callable[[Dialect], str | None]
+
 DUCK = Dialect(div="//", varchar="VARCHAR", D="", range_col="range")
 SPARK = Dialect(div="div", varchar="string", D="D", range_col="id")
 
 
-def render(templates: dict[str, str | Callable[[Dialect], str]]) -> tuple[dict[str, str], dict[str, str]]:
-    """A module's ``ORACLES`` (the DuckDB renderings) and ``SPARK_SQL``
-    (the Spark renderings) of its ``TEMPLATES``; a plain string is one
-    text both engines run as is."""
-    def one(t, d: Dialect) -> str:
-        return t if isinstance(t, str) else t(d)
+def dual(oracle: str | Callable[[], str], spark: str | Callable[[], str] | None = None) -> Template:
+    """A query whose oracle and Spark SQL are two texts (a deliberate
+    dual), or only an oracle (``spark=None``); a callable side is
+    called only when that side is rendered."""
+    def template(d: Dialect) -> str | None:
+        side = oracle if d.duck else spark
+        return side() if callable(side) else side
 
-    return ({n: one(t, DUCK) for n, t in templates.items()},
-            {n: one(t, SPARK) for n, t in templates.items()})
+    return template

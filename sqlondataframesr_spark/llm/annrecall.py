@@ -20,7 +20,7 @@ Determinism: recall is integer PPM (``n_hits * 10^6 div n_possible``),
 the repo-wide exact-division idiom, so the DuckDB oracle (a literal
 composition of the per-method oracle texts) hashes identically.
 
-The SPARK_SQL dual (r12) is the same composition over the seven
+The Spark-SQL dual (r12) is the same composition over the seven
 variants' registered Spark-SQL statements — possible once the
 Lloyd-trained IVF gained its kmeans-unroll dual.
 """
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import pq as _pq
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from . import similarity as _sim
 from ..materialize import materialize
 
@@ -123,9 +123,9 @@ def _recall_sql(d: Dialect) -> str:
     already-gated statement becomes a nested subquery, so the composed
     report is exactly as trustworthy as its parts."""
     texts = _sim.TEMPLATES | _pq.TEMPLATES
-    bf_text = texts["ann_cosine_topk"](d)
+    bf_text = d.render(texts["ann_cosine_topk"])
     branches = " UNION ALL ".join(
-        f"SELECT '{label}' AS method, q_id, neighbor_id FROM ({texts[key](d)}) t_{label}"
+        f"SELECT '{label}' AS method, q_id, neighbor_id FROM ({d.render(texts[key])}) t_{label}"
         for label, _, key in _METHODS
     )
     return f"""
@@ -155,4 +155,3 @@ QUERIES = {"ann_recall_report": ann_recall_report}
 TEMPLATES = {
     "ann_recall_report": _recall_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

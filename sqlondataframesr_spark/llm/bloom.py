@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..materialize import materialize
 from .decontam import CONTAM_THRESHOLD, EVAL_MOD
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from .dedup import with_shingles, shingles_sql
 
 #: filter geometry — M sized so the tiny test eval set stays sparse
@@ -346,4 +346,3 @@ TEMPLATES = {
     "bloom_decontam": _decontam_sql,
     "bloom_semijoin_report": _sj_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

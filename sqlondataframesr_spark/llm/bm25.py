@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6
 
 K1 = 1.2
@@ -324,4 +324,3 @@ TEMPLATES = {
     "bm25_topk": _bm25_sql,
     "ql_dirichlet_topk": _ql_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

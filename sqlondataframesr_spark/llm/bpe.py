@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: number of merge rounds to learn (real tokenizers: ~32k; unrolled
 #: here like the pagerank iterations, enough to pin the algorithm)
@@ -255,4 +255,3 @@ TEMPLATES = {
     "bpe_learn_merges": _bpe_sql,
     "bpe_apply_token_counts": lambda d: _bpe_sql(d, mode="apply"),
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize
 from ..functions import vector as V
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .semdedup import cap_cte, capped_partners, final_assign_sql, trained_prefix_sql
 from .similarity import (
@@ -151,4 +151,3 @@ QUERIES = {"contrastive_pairs": contrastive_pairs}
 TEMPLATES = {
     "contrastive_pairs": _contrastive_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

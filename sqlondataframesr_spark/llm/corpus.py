@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .sampling import bucket_sql
 
@@ -491,4 +491,3 @@ TEMPLATES = {
     "text_bigram_pmi": _bigram_pmi_sql,
     "corpus_stats_by_source": _stats_by_source_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

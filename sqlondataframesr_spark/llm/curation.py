@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 
 # ---------------------------------------------------------------------------
@@ -312,4 +312,3 @@ TEMPLATES = {
     "text_pii_scrub": _pii_scrub_sql,
     "corpus_quality_quantile_gate": _quality_gate_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

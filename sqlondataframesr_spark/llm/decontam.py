@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..materialize import materialize
 from ..catalog import load_table
 from ..functions.rounding import r6 as _r6, r6_sql
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect, dual
 from .dedup import with_shingles, shingles_sql
 
 #: flag a training doc when >= this fraction of its 3-shingles appear in the eval set
@@ -295,7 +295,7 @@ QUERIES = {
     "decontam_overlap": decontam_overlap,
     "decontam_scrub_spans": decontam_scrub_spans,
 }
-TEMPLATES = {"decontam_overlap": _overlap_sql}
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES["decontam_scrub_spans"] = _scrub_oracle()
-SPARK_SQL["decontam_scrub_spans"] = _scrub_spark_sql()
+TEMPLATES = {
+    "decontam_overlap": _overlap_sql,
+    "decontam_scrub_spans": dual(_scrub_oracle, _scrub_spark_sql),
+}

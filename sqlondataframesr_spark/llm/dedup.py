@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..materialize import materialize, spread_scan
 from ..operators.components import min_label_components
 from ..catalog import load_table
-from ..functions.dialect import DUCK, SPARK, Dialect, render
+from ..functions.dialect import DUCK, SPARK, Dialect, dual
 from ..functions.rounding import r6 as _r6, r6_sql
 from ..functions.closure_sql import packed_closure_sql
 
@@ -1185,22 +1185,22 @@ TEMPLATES = {
     "dedup_substring_13gram": _substring_sql,
     "dedup_substring_13gram_capped": _substring_capped_sql,
     "dedup_substring_cap_report": _substring_cap_report_sql,
-}
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES |= {
-    "dedup_exact": DEDUP_EXACT_ORACLE,
-    "dedup_spans": DEDUP_SPANS_ORACLE,
-    "dedup_clusters": _clusters_sql(DUCK),
-    "doc_winnow_fingerprint": DOC_WINNOW_ORACLE,
-    "dedup_winnow_pairs": DEDUP_WINNOW_PAIRS_ORACLE,
-}
-
-SPARK_SQL |= {
     "dedup_exact": DEDUP_EXACT_ORACLE,  # dialect-neutral: valid in both engines
     # deliberate dual: segments via posexplode and an array_sort'ed
     # collect_list where the oracle unnests a lateral range and uses
     # an ordered string_agg
-    "dedup_spans": DEDUP_SPANS_DUAL,
+    "dedup_spans": dual(DEDUP_SPANS_ORACLE, DEDUP_SPANS_DUAL),
+    # deliberate dual: Spark's recursive CTE allows only UNION ALL, which
+    # never terminates on a cyclic edge list, so the edges (the oracle's
+    # own CTEs) feed the shared bounded-round packed-array fold
+    # (functions/closure_sql.py), which poisons ids on non-convergence
+    "dedup_clusters": dual(_clusters_sql(DUCK), packed_closure_sql(
+        prelude=_cluster_edges_sql(SPARK),
+        nodes_sql="SELECT doc_id AS node FROM documents",
+        key_name="doc_id",
+        id_name="cluster_id",
+        size_name="cluster_size",
+    )),
     # deliberate dual (both winnowing duals): the fluent forms are built
     # from Spark-SQL expression strings already (_winnow_selections),
     # so the dual is the same chain as CTEs. Stage layout mirrors the
@@ -1208,7 +1208,7 @@ SPARK_SQL |= {
     # does NOT collapse them: each alias is referenced more than once
     # and higher-order transforms are non-cheap, so CollapseProject's
     # cost guard keeps the chain staged, not exponentially inlined).
-    "doc_winnow_fingerprint": f"""
+    "doc_winnow_fingerprint": dual(DOC_WINNOW_ORACLE, f"""
 WITH tt AS (
   SELECT doc_id, w FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
   WHERE size(w) >= {WINNOW_K}
@@ -1235,7 +1235,7 @@ s AS (
 )
 SELECT doc_id, size(sel) AS n_fp, array_join(sel, ',') AS fp
 FROM s ORDER BY doc_id
-""",
+"""),
     # The pairs dual needs one extra guard the fingerprint dual does
     # not: explode(sel) makes InferFiltersFromGenerate synthesize
     # ``size(sel) > 0`` and predicate pushdown then SUBSTITUTES the
@@ -1246,7 +1246,7 @@ FROM s ORDER BY doc_id
     # a per-doc aggregate (max of the single sel row): filters cannot
     # push below an aggregate on a non-grouping column, so the
     # inferred filter lands on the aggregated array, not the chain.
-    "dedup_winnow_pairs": f"""
+    "dedup_winnow_pairs": dual(DEDUP_WINNOW_PAIRS_ORACLE, f"""
 WITH tt AS (
   SELECT doc_id, w FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
   WHERE size(w) >= {WINNOW_K}
@@ -1277,16 +1277,5 @@ SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(1) AS n_shared
 FROM e a JOIN e b ON a.f = b.f AND a.doc_id < b.doc_id
 GROUP BY a.doc_id, b.doc_id
 ORDER BY doc_a, doc_b
-""",
-    # deliberate dual: Spark's recursive CTE allows only UNION ALL, which
-    # never terminates on a cyclic edge list, so the edges (the oracle's
-    # own CTEs) feed the shared bounded-round packed-array fold
-    # (functions/closure_sql.py), which poisons ids on non-convergence
-    "dedup_clusters": packed_closure_sql(
-        prelude=_cluster_edges_sql(SPARK),
-        nodes_sql="SELECT doc_id AS node FROM documents",
-        key_name="doc_id",
-        id_name="cluster_id",
-        size_name="cluster_size",
-    ),
+"""),
 }

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect, dual
 from ..functions.rounding import r6 as _r6, r6_sql
 from .dedup import shingle_comp_sql
 from .text import words_sql
@@ -366,7 +366,5 @@ QUERIES = {
 TEMPLATES = {
     "corpus_ngram_diversity": _ngram_diversity_sql,
     "corpus_source_overlap": _source_overlap_sql,
+    "corpus_zipf_slope": dual(CORPUS_ZIPF_SLOPE_ORACLE, CORPUS_ZIPF_SLOPE_DUAL),
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES["corpus_zipf_slope"] = CORPUS_ZIPF_SLOPE_ORACLE
-SPARK_SQL["corpus_zipf_slope"] = CORPUS_ZIPF_SLOPE_DUAL

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .decontam import EVAL_MOD
 from .text import words_sql
@@ -174,4 +174,3 @@ QUERIES = {"dsir_importance": dsir_importance}
 TEMPLATES = {
     "dsir_importance": _importance_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import vector as V
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6
 from .bm25 import (
     BM25_N_QUERIES,
@@ -122,4 +122,3 @@ QUERIES = {"hybrid_rrf_topk": hybrid_rrf_topk}
 TEMPLATES = {
     "hybrid_rrf_topk": _hybrid_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

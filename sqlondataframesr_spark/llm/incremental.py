@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import load_table
 from ..materialize import materialize
 from ..functions.rounding import r6 as _r6
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from .dedup import with_shingles, shingles_sql
 from .minhash import (
     BANDS,
@@ -189,4 +189,3 @@ QUERIES = {"dedup_incremental": dedup_incremental}
 TEMPLATES = {
     "dedup_incremental": _incremental_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, truncate
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from .similarity import DIM
 
 #: unrolled training rounds
@@ -438,4 +438,3 @@ TEMPLATES = {
     "ml_perceptron_confusion": lambda d: _perceptron_sql(d, final="confusion"),
     "ml_perceptron_ovr_confusion": _perceptron_ovr_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize, spread_scan
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .text import words_sql
 
@@ -596,4 +596,3 @@ TEMPLATES = {
     "lm_perplexity_tercile_gate": _tercile_gate_sql,
     "nb_lang_confusion": _nb_confusion_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize
 from ..catalog import load_table
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6
 from . import dedup as _dedup
 from .dedup import with_shingles, shingles_sql
@@ -353,7 +353,7 @@ def minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _recall_report_sql(d: Dialect) -> str:
     """The report as one composed SQL text over the two pipelines' own
     texts."""
-    truth_sql = _dedup.TEMPLATES["dedup_ngram_jaccard"](d)
+    truth_sql = d.render(_dedup.TEMPLATES["dedup_ngram_jaccard"])
     cand_sql = _lsh_sql(d)
     hit = "COALESCE(SUM(CASE WHEN t IS NOT NULL AND c IS NOT NULL THEN 1 ELSE 0 END), 0)"
     return f"""
@@ -387,4 +387,3 @@ TEMPLATES = {
     "dedup_minhash_bbit": _bbit_sql,
     "minhash_recall_report": _recall_report_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

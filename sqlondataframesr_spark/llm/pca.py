@@ -60,7 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import DUCK, SPARK, Dialect
+from ..functions.dialect import DUCK, SPARK, Dialect, dual
 from ..materialize import materialize, truncate
 
 #: embedding dimensionality of the testdata embeddings table
@@ -253,10 +253,7 @@ ORDER BY dim
 """
 
 
-EMB_PCA_ORACLE = _pca_sql(DUCK)
-
 QUERIES = {"emb_pca_power": emb_pca_power}
-ORACLES = {"emb_pca_power": EMB_PCA_ORACLE}
 # no Spark-SQL dual: generate_subscripts/zipped-unnest has no direct
 # Spark spelling; the fluent form + DuckDB oracle are the two versions
-SPARK_SQL: dict[str, str] = {}
+TEMPLATES = {"emb_pca_power": dual(_pca_sql(DUCK))}

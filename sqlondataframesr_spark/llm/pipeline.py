@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from . import decontam as _decontam_mod, text as _text_mod
 from .decontam import decontam_overlap
 from .dedup import DEDUP_EXACT_ORACLE, dedup_exact
@@ -75,11 +75,11 @@ WITH keepers AS (
   SELECT keep_id AS doc_id FROM ({DEDUP_EXACT_ORACLE})
 ),
 quality AS (
-  SELECT doc_id FROM ({d.texts(_text_mod)["text_repetition"]})
+  SELECT doc_id FROM ({d.render(_text_mod.TEMPLATES["text_repetition"])})
   WHERE n_tokens >= {MIN_TOKENS} AND distinct_ratio >= {MIN_DISTINCT_RATIO}{d.D}
 ),
 clean AS (
-  SELECT doc_id FROM ({d.texts(_decontam_mod)["decontam_overlap"]}) WHERE NOT contaminated
+  SELECT doc_id FROM ({d.render(_decontam_mod.TEMPLATES["decontam_overlap"])}) WHERE NOT contaminated
 ),
 kept AS (
   SELECT k.doc_id FROM keepers k
@@ -87,7 +87,7 @@ kept AS (
   JOIN clean USING (doc_id)
 ),
 chunks AS (
-  SELECT * FROM ({d.texts(_text_mod)["text_chunks"]}) c
+  SELECT * FROM ({d.render(_text_mod.TEMPLATES["text_chunks"])}) c
   WHERE c.doc_id IN (SELECT doc_id FROM kept)
 )
 SELECT d.source,
@@ -105,4 +105,3 @@ QUERIES = {"pipeline_training_set": pipeline_training_set}
 TEMPLATES = {
     "pipeline_training_set": _pipeline_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..materialize import materialize
 from ..functions import vector as V
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .similarity import (
     DIM,
@@ -402,4 +402,3 @@ TEMPLATES = {
     "ann_pq_adc": _pq_adc_sql,
     "ann_ivf_pq_topk": _ivf_pq_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -42,7 +42,7 @@ sub-second stages, the same toy-scale stage-latency floor the
 headline-six floor analysis documents, with per-run cpu_s now in
 BENCH_DETAILS per_query_stats to prove it. Oracle = literal
 composition of the three gated oracle texts (the annrecall.py
-pattern); the SPARK_SQL dual (r12) is the same composition over the
+pattern); the Spark-SQL dual (r12) is the same composition over the
 rankers' registered Spark-SQL statements.
 """
 
@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import bm25 as _bm25
 from . import hybrid as _hybrid
 from . import similarity as _sim
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..materialize import force_concurrently, materialize
 
 #: (method label, fn, output id column) — label-sorted
@@ -161,9 +161,9 @@ def _agreement_sql(d: Dialect) -> str:
     """The report as one composed SQL text over the three rankers' own
     statements."""
     texts = {
-        "bm25": ("doc_id", d.texts(_bm25)["bm25_topk"]),
-        "hybrid_rrf": ("id", d.texts(_hybrid)["hybrid_rrf_topk"]),
-        "ql_dirichlet": ("doc_id", d.texts(_bm25)["ql_dirichlet_topk"]),
+        "bm25": ("doc_id", d.render(_bm25.TEMPLATES["bm25_topk"])),
+        "hybrid_rrf": ("id", d.render(_hybrid.TEMPLATES["hybrid_rrf_topk"])),
+        "ql_dirichlet": ("doc_id", d.render(_bm25.TEMPLATES["ql_dirichlet_topk"])),
     }
     n_q, k = _bm25.BM25_N_QUERIES, _bm25.BM25_TOP_K
     branches = " UNION ALL ".join(
@@ -202,4 +202,3 @@ QUERIES = {"ret_rank_agreement": ret_rank_agreement}
 TEMPLATES = {
     "ret_rank_agreement": _agreement_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
 from ..materialize import materialize
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 
 #: hash-bucket split boundaries (out of 100): [0,80) train, [80,90) val,
@@ -255,7 +255,7 @@ def _split_leakage_sql(d: Dialect) -> str:
     from . import minhash
 
     return f"""
-WITH pairs AS ({d.texts(minhash)["dedup_minhash_lsh"]}),
+WITH pairs AS ({d.render(minhash.TEMPLATES["dedup_minhash_lsh"])}),
 splits AS (
   SELECT doc_id,
          CASE WHEN {bucket_sql(d)} < {TRAIN_PCT} THEN 'train'
@@ -550,4 +550,3 @@ TEMPLATES = {
     # dialect-neutral: the oracle text parses identically in Spark SQL
     "sample_stratified_topn": SAMPLE_STRATIFIED_TOPN_ORACLE,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import vector as V
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..materialize import materialize
 from .similarity import (
     DIM,
@@ -344,4 +344,3 @@ TEMPLATES = {
     "semdedup_cap_report": _cap_report_sql,
     "emb_prototypicality_prune": _proto_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..materialize import materialize, spread_scan
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 NUM_BITS = 64
 BLOCKS = 4
@@ -249,4 +249,3 @@ TEMPLATES = {
     "simhash_fingerprint": _fingerprint_sql,
     "dedup_simhash": _dedup_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

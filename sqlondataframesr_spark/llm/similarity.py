@@ -44,7 +44,7 @@ from ..materialize import materialize, spread_scan, truncate
 from ..operators.components import min_label_components
 from ..catalog import load_table
 from ..functions import vector as V
-from ..functions.dialect import DUCK, SPARK, Dialect, render
+from ..functions.dialect import DUCK, SPARK, Dialect, dual
 from ..functions.rounding import r6 as _r6, r6_sql
 from ..functions.closure_sql import packed_closure_sql
 
@@ -1226,69 +1226,6 @@ FROM hits ORDER BY q_id
 """
 
 
-QUERIES = {
-    "ann_matryoshka_topk": ann_matryoshka_topk,
-    "ann_matryoshka_recall_report": ann_matryoshka_recall_report,
-    "kmeans_train": kmeans_train,
-    "emb_random_projection": emb_random_projection,
-    "emb_quantize_int8": emb_quantize_int8,
-    "ann_cosine_topk": ann_cosine_topk,
-    "ann_lsh_topk": ann_lsh_topk,
-    "knn_graph_lsh": knn_graph_lsh,
-    "ann_ivf_topk": ann_ivf_topk,
-    "ann_ivf_trained": ann_ivf_trained,
-    "ann_sq8_topk": ann_sq8_topk,
-    "emb_label_centroid": emb_label_centroid,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-}
-
-TEMPLATES = {
-    "ann_matryoshka_topk": _matryoshka_topk_sql,
-    "ann_matryoshka_recall_report": _matryoshka_recall_sql,
-    "kmeans_train": _kmeans_sql,
-    "emb_random_projection": _random_projection_sql,
-    "ann_cosine_topk": _cosine_topk_sql,
-    "ann_lsh_topk": _lsh_topk_sql,
-    "knn_graph_lsh": _knn_graph_lsh_sql,
-    "ann_ivf_topk": _ivf_topk_sql,
-    "ann_ivf_trained": _ivf_trained_sql,
-    "ann_sq8_topk": _sq8_topk_sql,
-    "emb_label_centroid": _centroid_sql,
-    "dedup_embedding_cosine": _dedup_embedding_cosine_sql,
-}
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES["emb_quantize_int8"] = EMB_QUANTIZE_INT8_ORACLE
-# deliberate dual: zip_with in place of list_zip, whose positional
-# struct fields (p[1], p[2]) have no Spark spelling
-SPARK_SQL["emb_quantize_int8"] = f"""
-WITH vv AS (
-  SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v
-  FROM embeddings
-),
-s AS (
-  SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs FROM vv
-),
-sc AS (
-  SELECT vec_id, v,
-         CASE WHEN maxabs > 0 THEN 127.0D / maxabs ELSE 0.0D END AS scale
-  FROM s
-),
-q AS (
-  SELECT vec_id, v, scale,
-         transform(v, x -> cast(floor(x * scale + 0.5D) as int)) AS q_emb
-  FROM sc
-)
-SELECT vec_id,
-       array_join(transform(q_emb, x -> cast(x as string)), ',') AS q_emb_str,
-       {r6_sql('scale')} AS scale,
-       CASE WHEN scale > 0
-            THEN {r6_sql('''array_max(transform(zip_with(v, q_emb,
-                   (x, qq) -> abs(x - qq / scale)), e -> e))''')}
-            ELSE 0.0D END AS max_err
-FROM q
-ORDER BY vec_id
-"""
-
 
 def emb_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic duplicate clusters: connected components of the cosine
@@ -1375,16 +1312,75 @@ ORDER BY c.vec_id
 """
 
 
-QUERIES["emb_semantic_clusters"] = emb_semantic_clusters
-ORACLES["emb_semantic_clusters"] = _semantic_clusters_sql(DUCK)
-# deliberate dual: Spark's recursive CTE allows only UNION ALL, which
-# never terminates on a cyclic edge list, so the edges (the oracle's
-# own CTEs) feed the shared bounded-round packed-array fold
-# (functions/closure_sql.py), which poisons ids on non-convergence
-SPARK_SQL["emb_semantic_clusters"] = packed_closure_sql(
-    prelude=_semantic_edges_sql(SPARK),
-    nodes_sql="SELECT vec_id AS node FROM embeddings",
-    key_name="vec_id",
-    id_name="cluster_id",
-    size_name="cluster_size",
+QUERIES = {
+    "ann_matryoshka_topk": ann_matryoshka_topk,
+    "ann_matryoshka_recall_report": ann_matryoshka_recall_report,
+    "kmeans_train": kmeans_train,
+    "emb_random_projection": emb_random_projection,
+    "emb_quantize_int8": emb_quantize_int8,
+    "ann_cosine_topk": ann_cosine_topk,
+    "ann_lsh_topk": ann_lsh_topk,
+    "knn_graph_lsh": knn_graph_lsh,
+    "ann_ivf_topk": ann_ivf_topk,
+    "ann_ivf_trained": ann_ivf_trained,
+    "ann_sq8_topk": ann_sq8_topk,
+    "emb_label_centroid": emb_label_centroid,
+    "dedup_embedding_cosine": dedup_embedding_cosine,
+    "emb_semantic_clusters": emb_semantic_clusters,
+}
+
+TEMPLATES = {
+    "ann_matryoshka_topk": _matryoshka_topk_sql,
+    "ann_matryoshka_recall_report": _matryoshka_recall_sql,
+    "kmeans_train": _kmeans_sql,
+    "emb_random_projection": _random_projection_sql,
+    "ann_cosine_topk": _cosine_topk_sql,
+    "ann_lsh_topk": _lsh_topk_sql,
+    "knn_graph_lsh": _knn_graph_lsh_sql,
+    "ann_ivf_topk": _ivf_topk_sql,
+    "ann_ivf_trained": _ivf_trained_sql,
+    "ann_sq8_topk": _sq8_topk_sql,
+    "emb_label_centroid": _centroid_sql,
+    "dedup_embedding_cosine": _dedup_embedding_cosine_sql,
+    # deliberate dual: zip_with in place of list_zip, whose positional
+    # struct fields (p[1], p[2]) have no Spark spelling
+    "emb_quantize_int8": dual(EMB_QUANTIZE_INT8_ORACLE, f"""
+WITH vv AS (
+  SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v
+  FROM embeddings
+),
+s AS (
+  SELECT vec_id, v, array_max(transform(v, x -> abs(x))) AS maxabs FROM vv
+),
+sc AS (
+  SELECT vec_id, v,
+         CASE WHEN maxabs > 0 THEN 127.0D / maxabs ELSE 0.0D END AS scale
+  FROM s
+),
+q AS (
+  SELECT vec_id, v, scale,
+         transform(v, x -> cast(floor(x * scale + 0.5D) as int)) AS q_emb
+  FROM sc
 )
+SELECT vec_id,
+       array_join(transform(q_emb, x -> cast(x as string)), ',') AS q_emb_str,
+       {r6_sql('scale')} AS scale,
+       CASE WHEN scale > 0
+            THEN {r6_sql('''array_max(transform(zip_with(v, q_emb,
+                   (x, qq) -> abs(x - qq / scale)), e -> e))''')}
+            ELSE 0.0D END AS max_err
+FROM q
+ORDER BY vec_id
+"""),
+    # deliberate dual: Spark's recursive CTE allows only UNION ALL, which
+    # never terminates on a cyclic edge list, so the edges (the oracle's
+    # own CTEs) feed the shared bounded-round packed-array fold
+    # (functions/closure_sql.py), which poisons ids on non-convergence
+    "emb_semantic_clusters": dual(_semantic_clusters_sql(DUCK), packed_closure_sql(
+        prelude=_semantic_edges_sql(SPARK),
+        nodes_sql="SELECT vec_id AS node FROM embeddings",
+        key_name="vec_id",
+        id_name="cluster_id",
+        size_name="cluster_size",
+    )),
+}

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 from .dedup import shingle_list_sql
 
@@ -679,4 +679,3 @@ TEMPLATES = {
     "text_top_terms": _top_terms_sql,
     "text_tfidf_top_term": _tfidf_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -87,12 +87,14 @@ def spread_scan(df: DataFrame, *cols: str) -> DataFrame:
     any expensive per-row compute layered on the scan — per-shingle
     md5 signatures, Arrow decode bodies — inherits that serialism.
     Repartition (on ``cols`` if given, else round-robin) up to the
-    session's parallelism ONLY when the input is under-partitioned;
-    at real scale the scan already carries thousands of row-group
-    splits and this no-ops without inserting a shuffle.
+    session's parallelism ONLY when the input has fewer splits than
+    that: a scan of 3 splits, one of them holding the only row group,
+    would still run the whole map in one task. At real scale the scan
+    already carries thousands of row-group splits and this no-ops
+    without inserting a shuffle.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, target // 2):
+    if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *cols) if cols else df.repartition(target)
     return df
 

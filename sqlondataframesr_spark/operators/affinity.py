@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: minimum co-occurrence count for a pair to be scored
 MIN_SUPPORT = 2
@@ -284,4 +284,3 @@ TEMPLATES = {
     # the cap report is engine-portable SQL — one text, both engines
     "basket_cap_report": BASKET_CAP_REPORT_ORACLE,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.rounding import r6 as _r6
-from ..functions.dialect import render
 
 def _state_aggs() -> list:
     """The mergeable state per key — a function, not a module
@@ -99,4 +98,3 @@ QUERIES = {"evt_agg_merge": evt_agg_merge}
 TEMPLATES = {
     "evt_agg_merge": EVT_AGG_MERGE_ORACLE,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

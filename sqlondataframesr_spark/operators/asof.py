@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..catalog import load_table
+from ..functions.dialect import dual
 
 
 def asof_join(
@@ -130,15 +131,14 @@ ORDER BY c.user_id, c.ts
 
 
 QUERIES = {"evt_asof_attribution": evt_asof_attribution}
-ORACLES = {"evt_asof_attribution": EVT_ASOF_ORACLE}
 
 # deliberate dual: the textbook correlated spelling (left join
 # on ts <= ts + per-left argmax) — the form whose O(|L| x |R|)-per-key
 # blow-up the union-window operator above exists to avoid. Keeping it
 # as the dual pins the SEMANTICS with an independent plan; it is not a
 # production path.
-SPARK_SQL: dict[str, str] = {
-    "evt_asof_attribution": """
+TEMPLATES = {
+    "evt_asof_attribution": dual(EVT_ASOF_ORACLE, """
 WITH c AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'),
 p AS (SELECT user_id, ts AS p_ts, event_id AS purchase_event_id,
              value AS purchase_value
@@ -153,5 +153,5 @@ j AS (
 SELECT user_id, ts, event_id, purchase_event_id, purchase_value
 FROM j WHERE rn = 1
 ORDER BY user_id, ts
-""",
+"""),
 }

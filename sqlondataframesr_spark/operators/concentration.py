@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from .drank import ntile_expr, with_global_rank
 
 #: Pareto bucket count (deciles)
@@ -319,4 +319,3 @@ TEMPLATES = {
     "evt_activity_gini": _gini_sql,
     "cust_abc_classes": _abc_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect, dual
 from ..materialize import materialize, spread_scan
 from .components import min_label_components
 from ..functions.closure_sql import packed_closure_sql
@@ -616,7 +616,5 @@ TEMPLATES = {
     "er_customer_pairs_banded": _banded_pairs_sql,
     "er_banding_report": _banding_report_sql,
     "rec_item_cosine": REC_COSINE_ORACLE,
+    "er_entity_clusters": dual(ER_CLUSTERS_ORACLE, _CLUSTERS_DUAL),
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES["er_entity_clusters"] = ER_CLUSTERS_ORACLE
-SPARK_SQL["er_entity_clusters"] = _CLUSTERS_DUAL

@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: grid geometry: slopes from 50% to 150% of the moment estimate
 GRID_N = 16
@@ -542,4 +542,3 @@ TEMPLATES = {
     "ml_isotonic_calibration": _isotonic_sql,
     "ml_winsorize_stats": _winsorize_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

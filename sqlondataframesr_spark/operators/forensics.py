@@ -37,7 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: top-k emitted behavior trigrams
 TRIGRAM_TOP_K = 20
@@ -162,4 +162,3 @@ TEMPLATES = {
     "evt_type_trigrams": TRIGRAMS_ORACLE,
     "dq_benford_digits": _benford_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..materialize import materialize
 
 #: damping factor 0.85 expressed as integer percent, and rank scale
@@ -269,4 +269,3 @@ TEMPLATES = {
     "graph_nation_pagerank": lambda d: _pagerank_sql(d, N_NATIONS),
     "graph_triangle_count": GRAPH_TRIANGLE_COUNT_ORACLE,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

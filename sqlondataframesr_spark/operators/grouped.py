@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_table
+from ..functions.dialect import dual
 
 _OUT_SCHEMA = (
     "source string, n_docs long, median_chars double, "
@@ -91,15 +92,11 @@ QUERIES = {
     "pandas_source_stats": pandas_source_stats,
 }
 
-ORACLES = {
-    "pandas_source_stats": PANDAS_SOURCE_STATS_ORACLE,
-}
-
 # deliberate dual: the built-in-aggregate twin (min_by argmax) of the
 # pandas closure, where the oracle uses a correlated subquery — exactly the "expressible in SQL" property that makes the
 # Arrow path oracle-checkable (module docstring).
-SPARK_SQL: dict[str, str] = {
-    "pandas_source_stats": """
+TEMPLATES = {
+    "pandas_source_stats": dual(PANDAS_SOURCE_STATS_ORACLE, """
 SELECT source,
        COUNT(1) AS n_docs,
        CAST(percentile(n_chars, 0.5D) AS DOUBLE) AS median_chars,
@@ -108,5 +105,5 @@ SELECT source,
 FROM documents
 GROUP BY source
 ORDER BY source
-""",
+"""),
 }

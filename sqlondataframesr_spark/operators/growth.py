@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: rolling window width (days) for the active-user report
 WAU_DAYS = 7
@@ -242,4 +242,3 @@ TEMPLATES = {
     "evt_dau_wau": _dau_wau_sql,
     "evt_cohort_retention": _cohort_retention_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

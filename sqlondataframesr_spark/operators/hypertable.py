@@ -214,8 +214,7 @@ ORDER BY a.bucket_day, a.event_type
 """
 
 QUERIES = {"evt_hypertable_rollup": evt_hypertable_rollup}
-ORACLES = {"evt_hypertable_rollup": EVT_HYPERTABLE_ROLLUP_ORACLE}
 # the full recompute certifies the continuous-aggregate INVARIANT, the
 # same way the oracle does, rather than replaying the union plan; the
 # text is portable
-SPARK_SQL = ORACLES
+TEMPLATES = {"evt_hypertable_rollup": EVT_HYPERTABLE_ROLLUP_ORACLE}

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..materialize import materialize
 from .drank import ntile_expr, with_global_rank
 from .sessionize import user_cap_report, user_cap_report_sql
@@ -825,6 +825,9 @@ QUERIES = {
 
 
 TEMPLATES = {
+    # one text, both engines
+    "orders_snapshot_diff": _DIFF_BODY,
+    "evt_attribution_cap_report": ATTR_CAP_REPORT_SQL,
     "evt_markov_attribution": _markov_sql,
     "evt_transition_matrix": _transition_sql,
     "cust_rfm_segments": _rfm_sql,
@@ -833,6 +836,3 @@ TEMPLATES = {
     "evt_linear_attribution": lambda d: _attribution_sql(d, capped=False),
     "evt_linear_attribution_capped": lambda d: _attribution_sql(d, capped=True),
 }
-# one text, both engines
-NEUTRAL = {"orders_snapshot_diff": _DIFF_BODY, "evt_attribution_cap_report": ATTR_CAP_REPORT_SQL}
-ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6_sql
 
 #: k-anonymity threshold: classes smaller than this need suppression
@@ -309,4 +309,3 @@ TEMPLATES = {
     "privacy_l_diversity": _l_div_sql,
     "privacy_dp_noisy_counts": _dp_noisy_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

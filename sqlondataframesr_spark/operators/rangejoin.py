@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: pair window in seconds
 WINDOW_S = 600
@@ -106,4 +106,3 @@ QUERIES = {"evt_pairs_in_window": evt_pairs_in_window}
 TEMPLATES = {
     "evt_pairs_in_window": _pairs_in_window_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

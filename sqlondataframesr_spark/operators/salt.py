@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 SALT_COL = "__salt"
 
@@ -170,4 +170,3 @@ TEMPLATES = {
     "evt_distinct_users_2phase": EVT_DISTINCT_USERS_2PHASE_ORACLE,
     "skew_key_report": _skew_key_report_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

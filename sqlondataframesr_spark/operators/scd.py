@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from .sessionize import user_cap_report, user_cap_report_sql
 
 #: top-k longest-lived closed versions emitted by cdc_scd2_top_versions
@@ -316,4 +316,3 @@ TEMPLATES = {
     # the cap report is engine-portable SQL - one text, both engines
     "cdc_scd2_cap_report": user_cap_report_sql(SCD2_USER_EVENTS_CAP),
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 
 #: maximal intra-session gap, seconds. The synthetic events stream has
@@ -616,4 +616,3 @@ TEMPLATES = {
     "evt_session_funnel_stages": lambda d: _sessions_cte(d) + _STAGES_BODY,
     "evt_conversion_latency": lambda d: _sessions_cte(d) + _latency_sql(d),
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

@@ -56,7 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..materialize import materialize
 
 #: KMV sketch size (number of minimum hash values retained)
@@ -692,4 +692,3 @@ TEMPLATES = {
     "sketch_kmv_merge_check": _kmv_merge_sql,
     "sketch_cms_freq_report": _cms_freq_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

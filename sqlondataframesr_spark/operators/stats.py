@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6_sql
 from ..materialize import materialize
 
@@ -1069,6 +1069,9 @@ QUERIES = {
 }
 
 TEMPLATES = {
+    # these two texts are dialect-neutral
+    "ml_ols_trend": OLS_TREND_ORACLE,
+    "ml_discount_qty_corr": DISCOUNT_CORR_ORACLE,
     "ml_conformal_interval": _conformal_sql,
     "ab_conversion_ztest": _ztest_sql,
     "evt_mad_spikes": _mad_spikes_sql,
@@ -1078,9 +1081,3 @@ TEMPLATES = {
     "ab_mannwhitney_auc": _mwu_sql,
     "evt_chisq_type_weekday": _chisq_sql,
 }
-# these texts are dialect-neutral
-NEUTRAL = {
-    "ml_ols_trend": OLS_TREND_ORACLE,
-    "ml_discount_qty_corr": DISCOUNT_CORR_ORACLE,
-}
-ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 #: right-censor horizon: lifetimes still active here are censored, not
 #: churned (corpus order dates end 2001-08-01)
@@ -187,4 +187,3 @@ QUERIES = {"km_survival_curve": km_survival_curve}
 TEMPLATES = {
     "km_survival_curve": _km_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

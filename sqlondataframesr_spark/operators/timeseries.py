@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect
 
 _CENTS = "cast(round(value * 100) as bigint)"
 
@@ -456,4 +456,3 @@ TEMPLATES = {
     "evt_ewma_daily": _ewma_sql,
     "orders_seasonal_naive_mase": _mase_sql,
 }
-ORACLES, SPARK_SQL = render(TEMPLATES)

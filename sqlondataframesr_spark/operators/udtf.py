@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import dual
 
 
 def doc_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -82,13 +83,12 @@ ORDER BY doc_id
 
 
 QUERIES = {"doc_sentence_stats": doc_sentence_stats}
-ORACLES = {"doc_sentence_stats": DOC_SENTENCE_STATS_ORACLE}
 
 # deliberate dual: posexplode(split) replaces the Python UDTF and the
 # oracle's generate_subscripts — same enumeration (index over ALL
 # '. '-parts, empties dropped after)
-SPARK_SQL: dict[str, str] = {
-    "doc_sentence_stats": """
+TEMPLATES = {
+    "doc_sentence_stats": dual(DOC_SENTENCE_STATS_ORACLE, """
 WITH sent AS (
   SELECT doc_id, sent_idx, s
   FROM documents
@@ -104,5 +104,5 @@ SELECT doc_id,
 FROM kept
 GROUP BY doc_id
 ORDER BY doc_id
-""",
+"""),
 }

@@ -1,13 +1,13 @@
 """Query registry assembly.
 
-Each query module exposes three dicts keyed by query name:
+Each query module exposes two dicts with the same keys, the query names:
 
 - ``QUERIES``  — name -> callable(spark, sf_dir) -> DataFrame (fluent
   DataFrame form; what the driver's correctness gate runs).
-- ``ORACLES``  — name -> ANSI SQL string for DuckDB (the differential
-  oracle; omitted for genuinely non-SQL-expressible ops).
-- ``SPARK_SQL`` — name -> Spark-SQL string over the registered temp
-  views (the dual-API form; tests assert fluent == SQL before the
-  external oracle sees either, recreating the reference's N-version
-  structure, RDataFramesSQL.Rmd:40-53).
+- ``TEMPLATES`` — name -> the query's SQL, declared once
+  (functions/dialect.py). ``registry`` renders it into the DuckDB
+  oracle (the differential ground truth) and the Spark-SQL form over
+  the registered temp views (the dual-API form; tests check both
+  against the oracle, recreating the reference's N-version structure,
+  RDataFramesSQL.Rmd:40-53).
 """

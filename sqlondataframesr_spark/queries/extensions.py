@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import load_table
-from ..functions.dialect import Dialect, render
+from ..functions.dialect import Dialect, dual
 from ..functions.rounding import r6 as _r6, r6_sql
 
 RICH_BAL = 9000.0
@@ -1837,22 +1837,7 @@ QUERIES = {
 }
 
 TEMPLATES = {
-    "q11_quantity_quantiles": _q11_sql,
-    "q19_json_props_stats": _q19_sql,
-    "q21_trailing_window_value": _q21_sql,
-    "q24_string_functions": _q24_sql,
-    "q26_event_gaps": _q26_sql,
-    "q27_event_funnel": _q27_sql,
-    "q28_price_histogram": _q28_sql,
-    "q31_cohort_retention": _q31_sql,
-    "q44_grouping_sets_revenue": _q44_sql,
-    "q45_conditional_aggregates": _q45_sql,
-    "q60_array_hof_battery": _q60_sql,
-    "q61_regex_battery": _q61_sql,
-}
-
-# one text, both engines
-NEUTRAL = {
+    # one text, both engines
     "q62_datetime_battery": Q62_SQL,
     "q58_null_semantics": Q58_ORACLE,  # incl. NULLS FIRST
     "q59_nullsafe_join": Q59_ORACLE,  # IS NOT DISTINCT FROM
@@ -1876,22 +1861,22 @@ NEUTRAL = {
     "q14_outer_join_spend_tiers": Q14_ORACLE,
     "q15_lineitem_stats": Q15_ORACLE,
     "q16_pivot_status_by_priority": Q16_ORACLE,
-}
-
-ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)
-ORACLES |= {
-    "q30_above_brand_avg": Q30_ORACLE,
-    "q32_unpivot_profile": Q32_ORACLE,
-    "q33_gapfill_daily": Q33_ORACLE,
-    "q17_small_quantity_revenue": Q17_ORACLE,
-    "q22_approx_sketches": Q22_ORACLE,
-}
-
-SPARK_SQL |= {
+    "q11_quantity_quantiles": _q11_sql,
+    "q19_json_props_stats": _q19_sql,
+    "q21_trailing_window_value": _q21_sql,
+    "q24_string_functions": _q24_sql,
+    "q26_event_gaps": _q26_sql,
+    "q27_event_funnel": _q27_sql,
+    "q28_price_histogram": _q28_sql,
+    "q31_cohort_retention": _q31_sql,
+    "q44_grouping_sets_revenue": _q44_sql,
+    "q45_conditional_aggregates": _q45_sql,
+    "q60_array_hof_battery": _q60_sql,
+    "q61_regex_battery": _q61_sql,
     # deliberate dual: the genuinely correlated spelling — proves
     # Catalyst decorrelation lands on the fluent join-back plan's rows;
     # the correlated scalar is the same exact-cent-sum average
-    "q30_above_brand_avg": """
+    "q30_above_brand_avg": dual(Q30_ORACLE, """
 SELECT p_partkey, p_brand, p_retailprice,
        round((SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
               FROM part p2 WHERE p2.p_brand = p.p_brand), 4) AS brand_avg,
@@ -1900,25 +1885,10 @@ SELECT p_partkey, p_brand, p_retailprice,
 FROM part p
 WHERE p_retailprice > (SELECT CAST(sum(CAST(round(p2.p_retailprice * 100) AS BIGINT)) AS DOUBLE) / 100.0 / count(*)
                        FROM part p2 WHERE p2.p_brand = p.p_brand)
-""",
-    # deliberate dual: a correlated scalar subquery, decorrelated by
-    # Catalyst, against the fluent form's explicit per-part aggregate
-    "q17_small_quantity_revenue": """
-SELECT p.p_brand,
-       COUNT(*) AS n_items,
-       ROUND(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) / 100.0D / 7.0D, 2)
-         AS avg_yearly
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_quantity < (
-  SELECT 0.2 * (SUM(l2.l_quantity) / COUNT(*))
-  FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey
-)
-GROUP BY p.p_brand
-ORDER BY p.p_brand
-""",
+"""),
     # deliberate dual: stack(), the SQL spelling of the fluent
     # .unpivot() API, where the oracle unions one SELECT per column
-    "q32_unpivot_profile": f"""
+    "q32_unpivot_profile": dual(Q32_ORACLE, f"""
 WITH melted AS (
   SELECT stack(4,
                'l_quantity', l_quantity,
@@ -1936,11 +1906,11 @@ SELECT metric,
 FROM melted
 GROUP BY metric
 ORDER BY metric
-""",
+"""),
     # deliberate dual: Spark cannot cast a generator inline, so the
     # date spine is a LATERAL VIEW over sequence(), and the fill is
     # last(v, true) where the oracle counts non-null islands
-    "q33_gapfill_daily": f"""
+    "q33_gapfill_daily": dual(Q33_ORACLE, f"""
 WITH daily AS (
   SELECT user_id, to_date(ts) AS d,
          {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS v
@@ -1962,10 +1932,25 @@ SELECT user_id, date_format(d, 'yyyy-MM-dd') AS day,
        CAST(v IS NULL AS INT) AS was_missing
 FROM j
 ORDER BY user_id, day
-""",
+"""),
+    # deliberate dual: a correlated scalar subquery, decorrelated by
+    # Catalyst, against the fluent form's explicit per-part aggregate
+    "q17_small_quantity_revenue": dual(Q17_ORACLE, """
+SELECT p.p_brand,
+       COUNT(*) AS n_items,
+       ROUND(SUM(CAST(round(l.l_extendedprice * 100) AS BIGINT)) / 100.0D / 7.0D, 2)
+         AS avg_yearly
+FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+WHERE l.l_quantity < (
+  SELECT 0.2 * (SUM(l2.l_quantity) / COUNT(*))
+  FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey
+)
+GROUP BY p.p_brand
+ORDER BY p.p_brand
+"""),
     # deliberate dual: Spark's own HLL / percentile_approx sketches,
     # checked against the same validation contract as the oracle's
-    "q22_approx_sketches": """
+    "q22_approx_sketches": dual(Q22_ORACLE, """
 WITH g AS (
   SELECT event_type,
          COUNT(*) AS n_events,
@@ -1986,5 +1971,5 @@ SELECT g.event_type, g.n_events, g.n_users,
 FROM events e JOIN g USING (event_type)
 GROUP BY g.event_type, g.n_events, g.n_users, g.approx_users, g.pct
 ORDER BY g.event_type
-""",
+"""),
 }

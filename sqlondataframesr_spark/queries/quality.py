@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..materialize import spread_scan
-from ..functions.dialect import SPARK, Dialect, render
+from ..functions.dialect import SPARK, Dialect
 from ..functions.rounding import r6 as _r6, r6_sql
 
 #: orders columns profiled, with their kind ('num' | 'ts' | 'str')
@@ -639,12 +639,12 @@ QUERIES = {
 }
 
 TEMPLATES = {
+    # the UNION-ALL-over-one-CTE and scalar-subquery UNION spellings are
+    # dialect-neutral
+    "profile_corr_matrix": PROFILE_CORR_ORACLE,
+    "dq_violations": DQ_VIOLATIONS_ORACLE,
     "profile_entropy": _entropy_sql,
     "profile_orders": _profile_sql,
     "dq_split_psi": _psi_sql,
     "dq_join_fanout_report": _fanout_sql,
 }
-# the UNION-ALL-over-one-CTE and scalar-subquery UNION spellings are
-# dialect-neutral
-NEUTRAL = {"profile_corr_matrix": PROFILE_CORR_ORACLE, "dq_violations": DQ_VIOLATIONS_ORACLE}
-ORACLES, SPARK_SQL = render(NEUTRAL | TEMPLATES)

@@ -6,8 +6,8 @@ Each task keeps the exact operator shape of its original
 top-k/semi-join structure — re-targeted at the driver's TPC-H-ish
 tables. Every query exists in two forms that must agree (N-version
 discipline, Rmd:40-53): the fluent DataFrame build here and the
-Spark-SQL text in ``SPARK_SQL``; the DuckDB oracle in ``ORACLES`` is
-the external ground truth.
+SQL text in ``TEMPLATES``, which Spark SQL runs as is and which the
+DuckDB oracle runs as the external ground truth.
 
 Determinism policy (SURVEY.md §7 "What's hard"): SQLite's bare-column
 argmax (Rmd:77-81, 176-180, 400-404) returns *an arbitrary* max row on
@@ -76,7 +76,7 @@ def q1_yearly_top_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q1_ORACLE = """
+Q1_SQL = """
 WITH upy AS (
   SELECT l_orderkey, CAST(year(l_shipdate) AS INT) AS yr, COUNT(*) AS n_upvotes
   FROM lineitem WHERE l_returnflag = 'N'
@@ -91,8 +91,6 @@ FROM ranked r JOIN orders o ON o.o_orderkey = r.l_orderkey
 WHERE r.rn = 1
 ORDER BY r.yr
 """
-
-Q1_SPARK_SQL = Q1_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +114,7 @@ def q2_top_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Single-pass aggregation: the argmax rides in the same groupBy as
     # the sums via max_by over a (price, -key) struct — max price, and
     # the smallest orderkey among ties — instead of a second
-    # window-shuffle + join over orders. The SPARK_SQL form keeps the
+    # window-shuffle + join over orders. The SQL form keeps the
     # window formulation, so the N-version check proves the two
     # strategies equivalent.
     agg = orders.groupBy("o_custkey").agg(
@@ -154,7 +152,7 @@ def q2_top_customers_by_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q2_ORACLE = """
+Q2_SQL = """
 WITH agg AS (
   SELECT o_custkey,
          ROUND(CAST(SUM(CAST(round((CASE WHEN o_orderstatus = 'F' THEN o_totalprice END) * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2) AS finished_spend,
@@ -174,8 +172,6 @@ JOIN customer c ON c.c_custkey = a.o_custkey
 ORDER BY a.finished_spend DESC NULLS LAST, c.c_custkey ASC
 LIMIT 10
 """
-
-Q2_SPARK_SQL = Q2_ORACLE  # identical ANSI text parses in both dialects
 
 
 # ---------------------------------------------------------------------------
@@ -207,7 +203,7 @@ def q3_top_orders_by_big_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q3_ORACLE = """
+Q3_SQL = """
 WITH counts AS (
   SELECT l_orderkey, COUNT(*) AS n_big_items
   FROM lineitem WHERE l_quantity > 25
@@ -218,8 +214,6 @@ FROM counts c JOIN orders o ON o.o_orderkey = c.l_orderkey
 ORDER BY c.n_big_items DESC, o.o_orderkey ASC
 LIMIT 10
 """
-
-Q3_SPARK_SQL = Q3_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -238,7 +232,7 @@ def q4_price_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate* of the same grouping, so we collapse the self-join into
     ONE pass over lineitem — one scan, one partial-aggregating shuffle,
     zero self-joins; the rewrite an optimizer would want is done at
-    plan-construction time. The SPARK_SQL form keeps the two-derived-
+    plan-construction time. The SQL form keeps the two-derived-
     tables join, and the N-version check proves them equivalent. The
     spread is a single IEEE subtraction of stored doubles —
     bit-identical across engines, no rounding needed.
@@ -271,7 +265,7 @@ def q4_price_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q4_ORACLE = """
+Q4_SQL = """
 WITH best AS (
   SELECT l_orderkey, MAX(l_extendedprice) AS max_price
   FROM lineitem GROUP BY l_orderkey
@@ -287,11 +281,6 @@ JOIN orders o ON o.o_orderkey = b.l_orderkey
 WHERE b.max_price - f.first_price > 1000
 ORDER BY price_spread DESC, o.o_orderkey ASC
 """
-
-# The SQL form keeps the reference's two-derived-tables 3-way join
-# (Rmd:398-410); the fluent form collapses it to one conditional-agg
-# pass. The N-version test proves the strategies equivalent.
-Q4_SPARK_SQL = Q4_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +326,7 @@ def q5_user_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q5_ORACLE = """
+Q5_SQL = """
 WITH totals AS (
   SELECT user_id, event_type,
          ROUND(CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2) AS total_value,
@@ -353,8 +342,6 @@ JOIN big b ON b.user_id = t.user_id AND b.event_type = t.event_type
 ORDER BY t.total_value DESC, t.user_id ASC, t.event_type ASC
 LIMIT 10
 """
-
-Q5_SPARK_SQL = Q5_ORACLE
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +417,7 @@ def q6_distinct_suppliers_of_qualifying_brands(
     )
 
 
-Q6_ORACLE = """
+Q6_SQL = """
 SELECT DISTINCT s.s_suppkey, s.s_name, n.n_name, s.s_acctbal
 FROM lineitem l
 JOIN supplier s ON s.s_suppkey = l.l_suppkey
@@ -448,8 +435,6 @@ WHERE l.l_partkey IN (
 ORDER BY s_suppkey
 """
 
-Q6_SPARK_SQL = Q6_ORACLE
-
 
 QUERIES = {
     "q1_yearly_top_order": q1_yearly_top_order,
@@ -460,20 +445,15 @@ QUERIES = {
     "q6_distinct_suppliers_of_qualifying_brands": q6_distinct_suppliers_of_qualifying_brands,
 }
 
-ORACLES = {
-    "q1_yearly_top_order": Q1_ORACLE,
-    "q2_top_customers_by_spend": Q2_ORACLE,
-    "q3_top_orders_by_big_items": Q3_ORACLE,
-    "q4_price_spread": Q4_ORACLE,
-    "q5_user_event_totals": Q5_ORACLE,
-    "q6_distinct_suppliers_of_qualifying_brands": Q6_ORACLE,
-}
-
-SPARK_SQL = {
-    "q1_yearly_top_order": Q1_SPARK_SQL,
-    "q2_top_customers_by_spend": Q2_SPARK_SQL,
-    "q3_top_orders_by_big_items": Q3_SPARK_SQL,
-    "q4_price_spread": Q4_SPARK_SQL,
-    "q5_user_event_totals": Q5_SPARK_SQL,
-    "q6_distinct_suppliers_of_qualifying_brands": Q6_SPARK_SQL,
+# one text, both engines
+TEMPLATES = {
+    "q1_yearly_top_order": Q1_SQL,
+    "q2_top_customers_by_spend": Q2_SQL,
+    "q3_top_orders_by_big_items": Q3_SQL,
+    # the SQL form keeps the reference's two-derived-tables 3-way join
+    # (Rmd:398-410); the fluent form collapses it to one conditional-agg
+    # pass. The N-version test proves the strategies equivalent.
+    "q4_price_spread": Q4_SQL,
+    "q5_user_event_totals": Q5_SQL,
+    "q6_distinct_suppliers_of_qualifying_brands": Q6_SQL,
 }

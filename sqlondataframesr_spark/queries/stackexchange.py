@@ -36,9 +36,11 @@ import csv
 import os
 import random
 import weakref
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions.dialect import dual
 from ..materialize import materialize
 from ..sources.io import read_csv
 
@@ -645,14 +647,10 @@ def _self_contained(name: str, oracle: str) -> str:
 QUERIES = {f"se_{name}": _driver_task(name, fn) for name, (fn, _) in TASKS.items()}
 
 
-def __getattr__(name: str):
-    """Lazy ``ORACLES`` (PEP 562): ``_self_contained`` calls
-    ``fixture_dir()``, which generates the CSV fixture under /tmp —
-    importing the package must not touch the filesystem (same
-    discipline as multimodal/media.py, ADVICE r5). Resolved when
-    registry.oracles() first asks."""
-    if name == "ORACLES":
-        return {
-            f"se_{n}": _self_contained(n, sql) for n, (_fn, sql) in TASKS.items()
-        }
-    raise AttributeError(name)
+# oracle-only: ``_self_contained`` calls ``fixture_dir()``, which
+# generates the CSV fixture under the temp dir, so it runs only when
+# registry.oracles() renders it — importing the package must not touch
+# the filesystem (same discipline as multimodal/media.py)
+TEMPLATES = {
+    f"se_{name}": dual(partial(_self_contained, name, sql)) for name, (_fn, sql) in TASKS.items()
+}

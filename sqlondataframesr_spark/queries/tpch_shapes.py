@@ -1322,7 +1322,7 @@ QUERIES = {
 # NOT IN, CASE) — the SAME text serves as DuckDB oracle AND Spark-SQL
 # N-version twin, which is itself evidence the queries are portable
 # warehouse SQL rather than engine tricks.
-ORACLES = {
+TEMPLATES = {
     "q34_market_share": Q34_SQL,
     "q35_order_count_distribution": Q35_SQL,
     "q36_promo_revenue": Q36_SQL,
@@ -1345,5 +1345,3 @@ ORACLES = {
     "q56_forecast_revenue_change": Q56_SQL,
     "q57_priority_shipping_split": Q57_SQL,
 }
-
-SPARK_SQL: dict[str, str] = dict(ORACLES)

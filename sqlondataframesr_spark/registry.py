@@ -1,137 +1,43 @@
-"""Central registry: collects QUERIES / ORACLES / SPARK_SQL from every
-query module. ``__spark_entry__`` re-exports these for the driver."""
+"""Central registry: collects every query module's ``QUERIES``, renders
+its ``TEMPLATES`` into the DuckDB oracles and the Spark-SQL duals, and
+collects its ``SQL_PREREQS``. ``__spark_entry__`` re-exports these for
+the driver."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .llm import (
-    annrecall,
-    bloom,
-    bm25,
-    bpe,
-    contrastive,
-    corpus,
-    curation,
-    decontam,
-    dedup,
-    diversity,
-    dsir,
-    hybrid,
-    incremental,
-    linear,
-    lm,
-    minhash,
-    pca,
-    pipeline,
-    pq,
-    reteval,
-    sampling,
-    semdedup,
-    simhash,
-    similarity,
-    text,
-)
-from .multimodal import media
-from .sources import binary as sources_binary
-from .operators import (
-    affinity,
-    aggmerge,
-    asof,
-    concentration,
-    er,
-    features,
-    forensics,
-    graph,
-    grouped,
-    growth,
-    hypertable,
-    journeys,
-    privacy,
-    rangejoin,
-    salt,
-    scd,
-    sessionize,
-    sketches,
-    stats,
-    survival,
-    timeseries,
-    udtf,
-)
-from .queries import extensions, quality, reference, stackexchange, tpch_shapes
-from .streaming import dedup_sink as streaming_dedup_sink
-from .streaming import windows as streaming_windows
+from .functions.dialect import DUCK, SPARK
 
-_MODULES = [
-    affinity,
-    annrecall,
-    reference,
-    extensions,
-    stackexchange,
-    tpch_shapes,
-    quality,
-    text,
-    bloom,
-    bm25,
-    bpe,
-    decontam,
-    dedup,
-    diversity,
-    dsir,
-    hybrid,
-    incremental,
-    linear,
-    lm,
-    minhash,
-    pca,
-    pq,
-    reteval,
-    semdedup,
-    simhash,
-    similarity,
-    sampling,
-    contrastive,
-    corpus,
-    curation,
-    pipeline,
-    streaming_windows,
-    streaming_dedup_sink,
-    media,
-    sources_binary,
-    grouped,
-    growth,
-    aggmerge,
-    asof,
-    concentration,
-    graph,
-    hypertable,
-    journeys,
-    rangejoin,
-    salt,
-    scd,
-    er,
-    features,
-    privacy,
-    stats,
-    survival,
-    forensics,
-    timeseries,
-    sessionize,
-    sketches,
-    udtf,
-]
+_MODULES = [import_module(f"{__package__}.{path}") for path in (
+    "operators.affinity", "llm.annrecall", "queries.reference", "queries.extensions",
+    "queries.stackexchange", "queries.tpch_shapes", "queries.quality", "llm.text", "llm.bloom",
+    "llm.bm25", "llm.bpe", "llm.decontam", "llm.dedup", "llm.diversity", "llm.dsir", "llm.hybrid",
+    "llm.incremental", "llm.linear", "llm.lm", "llm.minhash", "llm.pca", "llm.pq", "llm.reteval",
+    "llm.semdedup", "llm.simhash", "llm.similarity", "llm.sampling", "llm.contrastive",
+    "llm.corpus", "llm.curation", "llm.pipeline", "streaming.windows", "streaming.dedup_sink",
+    "multimodal.media", "sources.binary", "operators.grouped", "operators.growth",
+    "operators.aggmerge", "operators.asof", "operators.concentration", "operators.graph",
+    "operators.hypertable", "operators.journeys", "operators.rangejoin", "operators.salt",
+    "operators.scd", "operators.er", "operators.features", "operators.privacy", "operators.stats",
+    "operators.survival", "operators.forensics", "operators.timeseries", "operators.sessionize",
+    "operators.sketches", "operators.udtf",
+)]
 
 
-def _collect(attr: str) -> dict:
+def _collect(attr: str, value: Callable = lambda v: v) -> dict:
+    """Every module's ``attr`` dict, each value mapped through ``value``;
+    a ``None`` result (an oracle-only query's Spark side) is left out."""
     out: dict = {}
     for mod in _MODULES:
-        entries = getattr(mod, attr, {})
+        entries = {n: value(v) for n, v in getattr(mod, attr, {}).items()}
         dup = set(entries) & set(out)
         if dup:
             raise ValueError(f"duplicate query names across modules: {dup}")
-        out.update(entries)
+        out.update((n, v) for n, v in entries.items() if v is not None)
     return out
 
 
@@ -140,11 +46,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracles() -> dict[str, str]:
-    return _collect("ORACLES")
+    return _collect("TEMPLATES", DUCK.render)
 
 
 def spark_sql() -> dict[str, str]:
-    return _collect("SPARK_SQL")
+    return _collect("TEMPLATES", SPARK.render)
 
 
 def sql_prereqs() -> dict[str, Callable[[], None]]:

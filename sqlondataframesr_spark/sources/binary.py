@@ -34,6 +34,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.dialect import dual
+
 #: number of fixture files (16 per media type)
 N_FILES = 64
 
@@ -128,22 +130,20 @@ ORDER BY file_name
 """
 
 QUERIES = {"mm_binary_ingest": mm_binary_ingest}
-ORACLES = {"mm_binary_ingest": MM_BINARY_INGEST_ORACLE}
-
 
 # deliberate dual: the `binaryFile.` path table, Spark's own reader of
 # the same files, where the oracle uses DuckDB's read_blob (path is the
 # pure fixture_path() computation — no import-time I/O; the fluent twin
 # builds the files)
-SPARK_SQL = {
-    "mm_binary_ingest": f"""
+TEMPLATES = {
+    "mm_binary_ingest": dual(MM_BINARY_INGEST_ORACLE, f"""
 SELECT element_at(split(path, '/'), -1) AS file_name,
        length AS n_bytes,
        md5(hex(content)) AS content_md5,
        {_SNIFF_CASE.format(h="hex(content)")} AS media_type
 FROM binaryFile.`{fixture_path()}/*.bin`
 ORDER BY file_name
-""",
+"""),
 }
 
 #: the SQL dual reads binaryFile.`fixture_path()` — a runner executing

@@ -44,6 +44,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..functions.dialect import dual
 
 def _bow_key() -> F.Column:
     """The dedup key: md5 of the sorted distinct token set (bag-of-
@@ -191,4 +192,4 @@ SELECT doc_id, source, batch_id FROM ranked WHERE rn = 1 ORDER BY doc_id
 
 
 QUERIES = {"stream_dedup_history": stream_dedup_history}
-ORACLES = {"stream_dedup_history": STREAM_DEDUP_HISTORY_ORACLE}
+TEMPLATES = {"stream_dedup_history": dual(STREAM_DEDUP_HISTORY_ORACLE)}

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import canonicalize_ts, load_table
-from ..functions.dialect import DUCK, SPARK, Dialect, render
+from ..functions.dialect import DUCK, SPARK, Dialect, dual
 
 TUMBLE_WIDTH = "1 day"
 SLIDE_WIDTH = "1 day"
@@ -753,23 +753,11 @@ TEMPLATES = {
     "evt_click_purchase_pairs": _click_purchase_pairs_sql,
     "evt_click_purchase_left": _click_purchase_left_sql,
     "evt_cms_user_merge_report": _cms_user_merge_sql,
-}
-ORACLES, SPARK_SQL = render(TEMPLATES)
-ORACLES |= {
-    "evt_ohlc_candles": EVT_OHLC_CANDLES_ORACLE,
-    "evt_segment_daily": EVT_SEGMENT_DAILY_ORACLE,
-    "evt_tumbling_daily": EVT_TUMBLING_DAILY_ORACLE,
-    "evt_sliding_12h": EVT_SLIDING_12H_ORACLE,
-    "evt_sessions_1h": EVT_SESSIONS_1H_ORACLE,
-    "evt_cms_daily_cells": _cms_daily_cells_sql(DUCK),
-}
-
-# deliberate duals: Spark's event-time spelling (GROUP BY window(...) /
-# session_window(...), min_by/max_by endpoints) against the oracles'
-# date_trunc / row_number forms, so the check proves the windowed
-# aggregation the streaming plans run ≡ the batch arithmetic.
-SPARK_SQL |= {
-    "evt_ohlc_candles": """
+    # deliberate duals: Spark's event-time spelling (GROUP BY window(...) /
+    # session_window(...), min_by/max_by endpoints) against the oracles'
+    # date_trunc / row_number forms, so the check proves the windowed
+    # aggregation the streaming plans run ≡ the batch arithmetic.
+    "evt_ohlc_candles": dual(EVT_OHLC_CANDLES_ORACLE, """
 SELECT w.window.start AS hour, w.open_cents, w.high_cents, w.low_cents,
        w.close_cents, w.n_events
 FROM (
@@ -784,18 +772,19 @@ FROM (
   GROUP BY window(ts, '1 hour')
 ) w
 ORDER BY hour
-""",
-    "evt_cms_daily_cells": f"""
-SELECT CAST(w.window.start AS DATE) AS day, w.j, w.bucket, w.cell_cnt
+"""),
+    "evt_segment_daily": dual(EVT_SEGMENT_DAILY_ORACLE, """
+SELECT w.window.start AS ws, w.segment, w.n_events, w.total_value
 FROM (
-  SELECT window, j, {_cms_user_bucket_sql(SPARK)} AS bucket,
-         CAST(COUNT(1) AS BIGINT) AS cell_cnt
-  FROM (SELECT ts, user_id, explode({_CMS_J_ARRAY}) AS j FROM events)
-  GROUP BY window(ts, '1 day'), j, {_cms_user_bucket_sql(SPARK)}
+  SELECT window, c.c_mktsegment AS segment,
+         COUNT(*) AS n_events,
+         ROUND(CAST(SUM(CAST(round(e.value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2) AS total_value
+  FROM events e JOIN customer c ON e.user_id = c.c_custkey
+  GROUP BY window(e.ts, '1 day'), c.c_mktsegment
 ) w
-ORDER BY day, j, bucket
-""",
-    "evt_tumbling_daily": """
+ORDER BY ws, segment
+"""),
+    "evt_tumbling_daily": dual(EVT_TUMBLING_DAILY_ORACLE, """
 SELECT w.window.start AS ws, w.event_type, w.n_events, w.total_value
 FROM (
   SELECT window, event_type,
@@ -805,8 +794,8 @@ FROM (
   GROUP BY window(ts, '1 day'), event_type
 ) w
 ORDER BY ws, event_type
-""",
-    "evt_sliding_12h": """
+"""),
+    "evt_sliding_12h": dual(EVT_SLIDING_12H_ORACLE, """
 SELECT w.window.start AS ws, w.n_events, w.total_value
 FROM (
   SELECT window, COUNT(*) AS n_events, ROUND(CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2) AS total_value
@@ -814,8 +803,8 @@ FROM (
   GROUP BY window(ts, '1 day', '12 hours')
 ) w
 ORDER BY ws
-""",
-    "evt_sessions_1h": """
+"""),
+    "evt_sessions_1h": dual(EVT_SESSIONS_1H_ORACLE, """
 SELECT w.user_id,
        w.session_window.start AS session_start,
        w.session_window.end AS session_end,
@@ -828,16 +817,15 @@ FROM (
   GROUP BY session_window(ts, '1 hour'), user_id
 ) w
 ORDER BY user_id, session_start
-""",
-    "evt_segment_daily": """
-SELECT w.window.start AS ws, w.segment, w.n_events, w.total_value
+"""),
+    "evt_cms_daily_cells": dual(_cms_daily_cells_sql(DUCK), f"""
+SELECT CAST(w.window.start AS DATE) AS day, w.j, w.bucket, w.cell_cnt
 FROM (
-  SELECT window, c.c_mktsegment AS segment,
-         COUNT(*) AS n_events,
-         ROUND(CAST(SUM(CAST(round(e.value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2) AS total_value
-  FROM events e JOIN customer c ON e.user_id = c.c_custkey
-  GROUP BY window(e.ts, '1 day'), c.c_mktsegment
+  SELECT window, j, {_cms_user_bucket_sql(SPARK)} AS bucket,
+         CAST(COUNT(1) AS BIGINT) AS cell_cnt
+  FROM (SELECT ts, user_id, explode({_CMS_J_ARRAY}) AS j FROM events)
+  GROUP BY window(ts, '1 day'), j, {_cms_user_bucket_sql(SPARK)}
 ) w
-ORDER BY ws, segment
-""",
+ORDER BY day, j, bucket
+"""),
 }

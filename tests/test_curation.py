@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from sqlondataframesr_spark import registry
 from sqlondataframesr_spark.llm import curation
 
 
@@ -83,7 +84,7 @@ def test_keep_best_picks_highest_ttr_then_lowest_id(spark, sf_dir):
     )
     df.createOrReplaceTempView("documents")
     out = {r["doc_id"]: r for r in spark.sql(
-        curation.SPARK_SQL["dedup_keep_best"]).collect()}
+        registry.spark_sql()["dedup_keep_best"]).collect()}
     assert set(out) == {2, 4}
     assert out[2]["n_dups"] == 3
     assert out[4]["n_dups"] == 2  # tie on ttr=1.0 -> lowest doc_id

@@ -2,13 +2,14 @@
 
 Until round 6, ``import sqlondataframesr_spark.registry`` generated the
 StackExchange fixture CSVs and the multimodal expected-parquet cache
-under the temp dir as a side effect of building module-level ORACLES —
+under the temp dir as a side effect of building module-level oracles —
 so bench runs, pytest collection, and any downstream import crashed in
-environments lacking /root/testdata and paid a rebuild on every
-expected.py edit. Both modules now resolve ORACLES lazily (PEP 562);
-this test pins that discipline: a subprocess with a fresh private
-TMPDIR imports the full registry and lists every query, and the TMPDIR
-must stay empty. Asking for the oracles IS allowed to build caches —
+environments lacking the test data and paid a rebuild on every
+expected.py edit. Both modules now declare those oracles as
+``dual(callable)`` templates, built only when registry.oracles()
+renders them; this test pins that discipline: a subprocess with a
+fresh private TMPDIR imports the full registry and lists every query
+and every Spark-SQL text, and the TMPDIR must stay empty. Asking for the oracles IS allowed to build caches —
 that is gate-time work, checked separately."""
 
 from __future__ import annotations

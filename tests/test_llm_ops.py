@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from sqlondataframesr_spark import registry
 from sqlondataframesr_spark.llm import dedup, text
 
 
@@ -1038,7 +1039,7 @@ def test_matryoshka_zero_prefix_agrees_across_engines(spark, tmp_path):
         con.execute(
             f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{pq}/*.parquet')"
         )
-        oracle = duckdb_rows(con, S.ORACLES["ann_matryoshka_topk"])
+        oracle = duckdb_rows(con, registry.oracles()["ann_matryoshka_topk"])
     finally:
         con.close()
     problems = compare_rows(cols, lrows, *oracle)

@@ -198,16 +198,18 @@ def test_no_broadcast_hint_on_sf_growing_tables():
 def test_spread_scan_noop_on_well_partitioned_input(spark):
     """spread_scan must not insert a shuffle when the input already
     carries enough partitions (the real-scale case), and must
-    repartition an under-split input up to session parallelism."""
+    repartition an under-split input up to session parallelism, one
+    split short of it included (a 3-split scan on 4 cores)."""
     from sqlondataframesr_spark.materialize import spread_scan
 
     target = spark.sparkContext.defaultParallelism
     wide = spark.range(0, 1000, 1, numPartitions=target)
     assert spread_scan(wide) is wide  # identical object: no-op
 
-    narrow = spark.range(0, 1000, 1, numPartitions=1)
-    spreaded = spread_scan(narrow, "id")
-    assert spreaded.rdd.getNumPartitions() == target
+    for n in (1, max(1, target - 1)):
+        narrow = spark.range(0, 1000, 1, numPartitions=n)
+        spreaded = spread_scan(narrow, "id")
+        assert spreaded.rdd.getNumPartitions() == target
 
 
 def test_bloom_membership_is_broadcast_no_corpus_shuffle(spark, sf_dir):

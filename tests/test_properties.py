@@ -220,11 +220,11 @@ def test_keep_best_is_order_invariant(spark, texts):
         .withColumn("source", F.lit("s"))
         .repartition(5)
     )
-    from sqlondataframesr_spark.llm import curation
+    from sqlondataframesr_spark import registry
 
     def run(df):
         df.createOrReplaceTempView("documents")
-        return spark.sql(curation.SPARK_SQL["dedup_keep_best"])
+        return spark.sql(registry.spark_sql()["dedup_keep_best"])
 
     a = [tuple(r) for r in run(base).collect()]
     b = [tuple(r) for r in run(shuffled).collect()]

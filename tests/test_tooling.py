@@ -34,11 +34,10 @@ DIALECT_BRANCH = r"""\bdialect\s*:\s*str\b|==\s*["'](duck|spark)["']"""
 PACKAGE = os.path.join(ROOT, "sqlondataframesr_spark")
 #: the one place a dialect spelling lives
 DIALECT_MODULE = os.path.join("sqlondataframesr_spark", "functions", "dialect.py")
-#: the paper's six tasks keep their ``Q<n>_SPARK_SQL`` names: the
-#: benchmark times queries/reference.py as is
-REFERENCE_TWINS = re.compile(
-    re.escape(os.path.join("sqlondataframesr_spark", "queries", "reference.py")) + r":Q[1-6]_SPARK_SQL$"
-)
+#: the one place that renders ``TEMPLATES`` into oracles and duals
+REGISTRY_MODULE = os.path.join("sqlondataframesr_spark", "registry.py")
+#: module-level names only the registry may build
+RENDERED_DICTS = {"ORACLES", "SPARK_SQL", "NEUTRAL"}
 
 
 def _py_files() -> list[str]:
@@ -137,22 +136,78 @@ def _package_modules() -> list[tuple[str, ast.Module]]:
 
 def test_one_sql_source_per_query():
     """Outside functions/dialect.py no module keeps a DuckDB/Spark twin:
-    no ``*_DUCK`` / ``*_SPARK`` / ``*_SPARK_SQL`` name (the six
-    ``Q<n>_SPARK_SQL`` names of queries/reference.py aside) and no
-    string dialect switch (a shared SQL builder is public and takes the
+    no ``*_DUCK`` / ``*_SPARK`` / ``*_SPARK_SQL`` name and no string
+    dialect switch (a shared SQL builder is public and takes the
     Dialect, test_no_private_import_across_modules)."""
     twins, branches = [], []
     for rel, tree in _package_modules():
         for node in tree.body:
-            targets = node.targets if isinstance(node, ast.Assign) else (
-                [node.target] if isinstance(node, ast.AnnAssign) else [])
-            twins += [f"{rel}:{t.id}" for t in targets
-                      if isinstance(t, ast.Name) and t.id != "SPARK_SQL" and TWIN_NAME.search(t.id)
-                      and not REFERENCE_TWINS.match(f"{rel}:{t.id}")]
+            twins += [f"{rel}:{name}" for name in _assigned_names(node) if TWIN_NAME.search(name)]
         with open(os.path.join(ROOT, rel), encoding="utf-8") as fh:
             branches += [f"{rel}:{n}" for n, line in enumerate(fh, 1) if re.search(DIALECT_BRANCH, line)]
     assert twins == []
     assert branches == []
+
+
+def _assigned_names(node: ast.stmt) -> list[str]:
+    """The names a module-level statement binds or mutates: ``x =``,
+    ``x: T =``, ``x |=``, ``x[k] =`` and tuple targets."""
+    if isinstance(node, ast.Assign):
+        targets = list(node.targets)
+    elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    while targets:
+        t = targets.pop()
+        if isinstance(t, ast.Tuple):
+            targets += t.elts
+        elif isinstance(t, ast.Subscript):
+            targets.append(t.value)
+        elif isinstance(t, ast.Name):
+            names.append(t.id)
+    return names
+
+
+def _import_time_calls(node: ast.AST, name: str) -> list[int]:
+    """Lines where ``node`` calls ``name`` (as ``name(...)`` or
+    ``x.name(...)``) outside any function, lambda or class body."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)):
+        return []
+    lines = []
+    if isinstance(node, ast.Call):
+        f = node.func
+        if (isinstance(f, ast.Name) and f.id == name) or (isinstance(f, ast.Attribute) and f.attr == name):
+            lines.append(node.lineno)
+    for child in ast.iter_child_nodes(node):
+        lines += _import_time_calls(child, name)
+    return lines
+
+
+def test_one_query_declaration():
+    """A query module declares its SQL once, in ``TEMPLATES``, keyed like
+    its ``QUERIES``; only the registry renders it (functions/dialect.py).
+    No other module builds ``ORACLES`` / ``SPARK_SQL`` / ``NEUTRAL``,
+    renders at import time, or resolves attributes lazily with a module
+    ``__getattr__``."""
+    sites = []
+    for rel, tree in _package_modules():
+        if rel == REGISTRY_MODULE:
+            continue
+        for node in tree.body:
+            sites += [f"{rel}:{node.lineno}:{n}" for n in _assigned_names(node) if n in RENDERED_DICTS]
+            sites += [f"{rel}:{n}:render" for n in _import_time_calls(node, "render")]
+            if isinstance(node, ast.FunctionDef) and node.name == "__getattr__":
+                sites.append(f"{rel}:{node.lineno}:__getattr__")
+    assert sites == []
+
+    mismatched = []
+    for rel, _tree in _package_modules():
+        mod = importlib.import_module(rel[:-3].replace(os.sep, ".").removesuffix(".__init__"))
+        if hasattr(mod, "QUERIES") and set(getattr(mod, "TEMPLATES", {})) != set(mod.QUERIES):
+            mismatched.append(rel)
+    assert mismatched == []
 
 
 def _is_private(name: str) -> bool:
