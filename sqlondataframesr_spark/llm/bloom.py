@@ -69,6 +69,24 @@ def _pos_sql(d: Dialect, j: int, s: str) -> str:
     return f"({d.hex_bigint(f'substr(md5({salted}), 1, 8)')} % {M_BITS})"
 
 
+def _packed_bitmap(pos: DataFrame) -> DataFrame:
+    """One row, one column ``bm``: the bit positions ``p`` packed into
+    a map of 64-bit words keyed by word index."""
+    return (
+        pos.groupBy(F.expr("cast(p div 64 as int)").alias("w"))
+        .agg(
+            F.expr(
+                "aggregate(collect_set(cast(p % 64 as int)), 0L,"
+                " (acc, b) -> acc | shiftleft(1L, b))"
+            ).alias("word")
+        )
+        .groupBy()
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("w", "word"))).alias("bm")
+        )
+    )
+
+
 def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per training document: Bloom-prefiltered eval-set contamination.
 
@@ -91,19 +109,7 @@ def bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    bitmap = (
-        pos.groupBy(F.expr("cast(p div 64 as int)").alias("w"))
-        .agg(
-            F.expr(
-                "aggregate(collect_set(cast(p % 64 as int)), 0L,"
-                " (acc, b) -> acc | shiftleft(1L, b))"
-            ).alias("word")
-        )
-        .groupBy()
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("w", "word"))).alias("bm")
-        )
-    )
+    bitmap = _packed_bitmap(pos)
 
     # --- probe: map-only bit test on every training shingle
     train_sh = shingled.filter(~is_eval).select(
@@ -239,21 +245,7 @@ def bloom_semijoin_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(*[F.expr(_sj_bit_pos(j, "k")) for j in range(K_HASHES)])
         ).alias("p")
     ).distinct()
-    bitmap = (
-        pos.groupBy(F.expr("cast(p div 64 as int)").alias("w"))
-        .agg(
-            F.expr(
-                "aggregate(collect_set(cast(p % 64 as int)), 0L,"
-                " (acc, b) -> acc | shiftleft(1L, b))"
-            ).alias("word")
-        )
-        .groupBy()
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("w", "word"))
-            ).alias("bm")
-        )
-    )
+    bitmap = _packed_bitmap(pos)
     fact = load_table(spark, sf_dir, "lineitem").selectExpr(
         "cast(l_orderkey as string) as k"
     )

@@ -162,16 +162,28 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_jaccard_sql(d: Dialect) -> str:
-    return f"""
-WITH s AS ({shingles_sql(d)}),
-e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
+def _shingle_postings_sql(d: Dialect) -> str:
+    """``s`` (doc_id, shingle array) and ``e`` (one row per doc_id,
+    shingle): the CTEs every shingle-join oracle starts from."""
+    return f"""s AS ({shingles_sql(d)}),
+e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s)"""
+
+
+def _exact_common_sql(d: Dialect) -> str:
+    """s -> e -> sizes -> common: shared-shingle count of every doc
+    pair with one shingle in common (the uncapped self-join)."""
+    return f"""{_shingle_postings_sql(d)},
 sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_sh FROM s),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)"""
+
+
+def _ngram_jaccard_sql(d: Dialect) -> str:
+    return f"""
+WITH {_exact_common_sql(d)}
 SELECT c.doc_a, c.doc_b,
        {r6_sql('''CAST(c.n_common AS DOUBLE)
              / CAST(sa.n_sh + sb.n_sh - c.n_common AS DOUBLE)''')} AS jaccard
@@ -368,10 +380,11 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_jaccard_capped_sql(d: Dialect) -> str:
-    return f"""
-WITH s AS ({shingles_sql(d)}),
-e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
+def _capped_verified_sql(d: Dialect) -> str:
+    """s -> e -> rare -> p -> cand -> common -> verified: the oracle
+    twin of :func:`_capped_pair_counts` — candidates from the DF-capped
+    postings, exact shared count and both array sizes per candidate."""
+    return f"""{_shingle_postings_sql(d)},
 rare AS (SELECT sh FROM e GROUP BY sh HAVING COUNT(*) <= {SHINGLE_DF_CAP}),
 p AS (SELECT e.doc_id, e.sh FROM e JOIN rare USING (sh)),
 cand AS (
@@ -391,7 +404,12 @@ verified AS (
   FROM common cm
   JOIN s sa ON sa.doc_id = cm.doc_a
   JOIN s sb ON sb.doc_id = cm.doc_b
-)
+)"""
+
+
+def _ngram_jaccard_capped_sql(d: Dialect) -> str:
+    return f"""
+WITH {_capped_verified_sql(d)}
 SELECT doc_a, doc_b,
        {r6_sql('CAST(n_common AS DOUBLE) / CAST(na + nb - n_common AS DOUBLE)')}
          AS jaccard
@@ -476,28 +494,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _containment_sql(d: Dialect) -> str:
     return f"""
-WITH s AS ({shingles_sql(d)}),
-e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
-rare AS (SELECT sh FROM e GROUP BY sh HAVING COUNT(*) <= {SHINGLE_DF_CAP}),
-p AS (SELECT e.doc_id, e.sh FROM e JOIN rare USING (sh)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM p a JOIN p b ON a.sh = b.sh AND a.doc_id < b.doc_id
-),
-common AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-  FROM cand c
-  JOIN e ea ON ea.doc_id = c.doc_a
-  JOIN e eb ON eb.doc_id = c.doc_b AND eb.sh = ea.sh
-  GROUP BY 1, 2
-),
-verified AS (
-  SELECT cm.doc_a, cm.doc_b, cm.n_common,
-         {d.fn('len', 'sa.sh')} AS na, {d.fn('len', 'sb.sh')} AS nb
-  FROM common cm
-  JOIN s sa ON sa.doc_id = cm.doc_a
-  JOIN s sb ON sb.doc_id = cm.doc_b
-),
+WITH {_capped_verified_sql(d)},
 dirs AS (
   SELECT doc_a AS container_id, doc_b AS contained_id,
          {r6_sql('CAST(n_common AS DOUBLE) / CAST(nb AS DOUBLE)')} AS containment
@@ -817,14 +814,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_edges_sql(d: Dialect) -> str:
     """s -> e -> sizes -> common -> near, exact -> edges: shingle-Jaccard
     and md5-equal pairs, both directions."""
-    return f"""s AS ({shingles_sql(d)}),
-e AS (SELECT doc_id, {d.fn('unnest', 'sh')} AS sh FROM s),
-sizes AS (SELECT doc_id, {d.fn('len', 'sh')} AS n_sh FROM s),
-common AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+    return f"""{_exact_common_sql(d)},
 near AS (
   SELECT c.doc_a, c.doc_b
   FROM common c
@@ -946,8 +936,9 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DOC_WINNOW_ORACLE = f"""
-WITH t AS (
+#: t -> k (token hashes, rolling k-gram hashes): the CTEs both
+#: winnowing oracles and both duals start from
+_WINNOW_KGRAMS_ORACLE = f"""WITH t AS (
   SELECT doc_id,
          [('0x' || substr(md5(x), 1, 8))::BIGINT % {WINNOW_M}
           for x in string_split(text, ' ')] AS th
@@ -960,7 +951,28 @@ k AS (
                       (a, b) -> (a * {WINNOW_B} + b) % {WINNOW_M})
           for i in range(0, len(th) - {WINNOW_K} + 1)] AS khs
   FROM t
+),"""
+_WINNOW_KGRAMS_DUAL = f"""WITH tt AS (
+  SELECT doc_id, w FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
+  WHERE size(w) >= {WINNOW_K}
 ),
+t AS (
+  SELECT doc_id,
+         transform(w, x -> cast(conv(substring(md5(x), 1, 8), 16, 10)
+                                AS bigint) % {WINNOW_M}) AS th
+  FROM tt
+),
+k AS (
+  SELECT doc_id,
+         transform(sequence(0, size(th) - {WINNOW_K}),
+                   i -> aggregate(slice(th, i + 1, {WINNOW_K}), bigint(0),
+                                  (a, b) -> (a * {WINNOW_B} + b) % {WINNOW_M})) AS khs
+  FROM t
+),"""
+
+
+DOC_WINNOW_ORACLE = f"""
+{_WINNOW_KGRAMS_ORACLE}
 s AS (
   SELECT doc_id,
          list_sort(list_distinct(
@@ -1012,20 +1024,7 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_WINNOW_PAIRS_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id,
-         [('0x' || substr(md5(x), 1, 8))::BIGINT % {WINNOW_M}
-          for x in string_split(text, ' ')] AS th
-  FROM documents
-  WHERE len(string_split(text, ' ')) >= {WINNOW_K}
-),
-k AS (
-  SELECT doc_id,
-         [list_reduce([CAST(0 AS BIGINT)] || th[i + 1 : i + {WINNOW_K}],
-                      (a, b) -> (a * {WINNOW_B} + b) % {WINNOW_M})
-          for i in range(0, len(th) - {WINNOW_K} + 1)] AS khs
-  FROM t
-),
+{_WINNOW_KGRAMS_ORACLE}
 s AS (
   SELECT doc_id,
          list_distinct(
@@ -1109,6 +1108,14 @@ def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: first occurrence (by doc_id, seg_idx) of each md5-equal segment
+_SPANS_RANKED = """ranked AS (
+  SELECT doc_id, seg_idx, seg,
+         row_number() OVER (PARTITION BY md5(seg)
+                            ORDER BY doc_id ASC, seg_idx ASC) = 1 AS keep
+  FROM spans
+)"""
+
 DEDUP_SPANS_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -1119,12 +1126,7 @@ spans AS (
   FROM toks CROSS JOIN LATERAL
        unnest(range(CAST(ceil(len(w) / {SPAN_K}.0) AS BIGINT))) AS u(i)
 ),
-ranked AS (
-  SELECT doc_id, seg_idx, seg,
-         row_number() OVER (PARTITION BY md5(seg)
-                            ORDER BY doc_id ASC, seg_idx ASC) = 1 AS keep
-  FROM spans
-)
+{_SPANS_RANKED}
 SELECT doc_id,
        COUNT(*) AS n_spans,
        CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
@@ -1146,12 +1148,7 @@ spans AS (
     transform(sequence(0, cast(ceil(size(w)/{SPAN_K}.0) as int) - 1),
               i -> concat_ws(' ', slice(w, i*{SPAN_K}+1, {SPAN_K})))) t AS pos, seg
 ),
-ranked AS (
-  SELECT doc_id, seg_idx, seg,
-         row_number() OVER (PARTITION BY md5(seg)
-                            ORDER BY doc_id ASC, seg_idx ASC) = 1 AS keep
-  FROM spans
-)
+{_SPANS_RANKED}
 SELECT doc_id,
        COUNT(*) AS n_spans,
        SUM(CAST(keep AS BIGINT)) AS n_kept,
@@ -1209,23 +1206,7 @@ TEMPLATES = {
     # and higher-order transforms are non-cheap, so CollapseProject's
     # cost guard keeps the chain staged, not exponentially inlined).
     "doc_winnow_fingerprint": dual(DOC_WINNOW_ORACLE, f"""
-WITH tt AS (
-  SELECT doc_id, w FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
-  WHERE size(w) >= {WINNOW_K}
-),
-t AS (
-  SELECT doc_id,
-         transform(w, x -> cast(conv(substring(md5(x), 1, 8), 16, 10)
-                                AS bigint) % {WINNOW_M}) AS th
-  FROM tt
-),
-k AS (
-  SELECT doc_id,
-         transform(sequence(0, size(th) - {WINNOW_K}),
-                   i -> aggregate(slice(th, i + 1, {WINNOW_K}), bigint(0),
-                                  (a, b) -> (a * {WINNOW_B} + b) % {WINNOW_M})) AS khs
-  FROM t
-),
+{_WINNOW_KGRAMS_DUAL}
 s AS (
   SELECT doc_id,
          array_sort(array_distinct(transform(
@@ -1247,23 +1228,7 @@ FROM s ORDER BY doc_id
     # push below an aggregate on a non-grouping column, so the
     # inferred filter lands on the aggregated array, not the chain.
     "dedup_winnow_pairs": dual(DEDUP_WINNOW_PAIRS_ORACLE, f"""
-WITH tt AS (
-  SELECT doc_id, w FROM (SELECT doc_id, split(text, ' ') AS w FROM documents)
-  WHERE size(w) >= {WINNOW_K}
-),
-t AS (
-  SELECT doc_id,
-         transform(w, x -> cast(conv(substring(md5(x), 1, 8), 16, 10)
-                                AS bigint) % {WINNOW_M}) AS th
-  FROM tt
-),
-k AS (
-  SELECT doc_id,
-         transform(sequence(0, size(th) - {WINNOW_K}),
-                   i -> aggregate(slice(th, i + 1, {WINNOW_K}), bigint(0),
-                                  (a, b) -> (a * {WINNOW_B} + b) % {WINNOW_M})) AS khs
-  FROM t
-),
+{_WINNOW_KGRAMS_DUAL}
 s AS (
   SELECT doc_id,
          array_distinct(transform(

@@ -42,10 +42,9 @@ from ..functions.rounding import r6 as _r6
 from ..functions.dialect import Dialect
 from .dedup import with_shingles, shingles_sql
 from .minhash import (
-    BANDS,
     EST_THRESHOLD,
     NUM_PERM,
-    ROWS_PER_BAND,
+    minhash_bands,
     minhash_bands_sql,
     minhash_sig_sql,
     minhash_signatures,
@@ -54,18 +53,6 @@ from .minhash import (
 
 BATCH_MOD = 10
 BATCH_REM = 9
-
-
-def _bands_of(sig: DataFrame) -> DataFrame:
-    return sig.select(
-        "doc_id",
-        F.explode(F.expr(
-            f"transform(sequence(0, {BANDS - 1}),"
-            f"  b -> struct(b as band, concat_ws(',', transform("
-            f"    slice(sig, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}),"
-            "     x -> cast(x as string))) as bkey))"
-        )).alias("e"),
-    ).select("doc_id", "e.band", "e.bkey")
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +75,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sig = minhash_signatures(with_shingles(docs)).transform(materialize)
-    bands = _bands_of(sig)
+    bands = minhash_bands(sig)
     cand = (
         bands.filter(is_batch)
         .select(F.col("doc_id").alias("b_id"), "band", "bkey")

@@ -58,27 +58,10 @@ def _clean_tokens_expr() -> str:
     return "filter(split(text, ' '), x -> x != '')"
 
 
-def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document mean log-probability under a corpus-self-trained
-    interpolated bigram LM:
-
-        P(w2|w1) = 0.9 * c(w1 w2)/c(w1 .) + 0.1 * c(. w2)/T
-
-    where c(w1 w2) is the corpus bigram count, c(w1 .) the count of
-    transitions leaving w1, c(. w2) the count of transitions entering
-    w2, and T the total transition count. Self-training makes every
-    scored bigram a seen bigram, so the ML term is always defined; the
-    unigram interpolation keeps one-off transitions from dominating.
-
-    Scale: a web-scale bigram vocabulary is billions of keys, so the
-    count tables join back by (t1, t2) as REGULAR shuffle joins (never
-    broadcast), all partial-aggregated map-side; the single-row total
-    T is the only broadcast. Same shuffle profile as TF-IDF /
-    text_unigram_logprob. Docs with < 2 tokens have no transitions and
-    surface as (n_bigrams=0, avg_logprob=NULL) — kept, not dropped, so
-    the gate downstream sees every doc.
-    """
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+def _bigram_counts(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(tf, c12): per-(doc, t1, t2) bigram counts and corpus bigram
+    counts over a (doc_id, text) frame, both pinned — the count tables
+    both bigram models estimate from."""
     # spread_scan: the bigram explode is the CPU-dense pass — a
     # single-row-group scan must not serialize it onto one task
     # TOTAL expression (IF-guarded): sequence(1, size-1) must never go
@@ -111,24 +94,13 @@ def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("tf").alias("c12"))
         .transform(materialize)
     )
-    c1 = c12.groupBy("t1").agg(F.sum("c12").alias("c1"))
-    c2 = c12.groupBy("t2").agg(F.sum("c12").alias("c2"))
-    total = c12.agg(F.sum("c12").alias("t_total"))
-    prob = (
-        c12.join(c1, "t1")
-        .join(c2, "t2")
-        .join(F.broadcast(total))
-        .withColumn(
-            "micronats",
-            F.expr(
-                _MICRONATS.format(
-                    p=f"{LAMBDA_BI} * (cast(c12 as double) / cast(c1 as double))"
-                    f" + {1 - LAMBDA_BI} * (cast(c2 as double) / cast(t_total as double))"
-                )
-            ),
-        )
-        .select("t1", "t2", "micronats")
-    )
+    return tf, c12
+
+
+def _doc_logprob(docs: DataFrame, tf: DataFrame, prob: DataFrame) -> DataFrame:
+    """(doc_id, n_bigrams, avg_logprob): each doc's bigram micronats
+    under ``prob`` averaged per transition; docs with < 2 tokens stay
+    as (0, NULL)."""
     per_doc = (
         tf.join(prob, ["t1", "t2"])
         .groupBy("doc_id")
@@ -151,9 +123,59 @@ def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bi_stages_sql(d: Dialect) -> str:
-    """t -> big -> tf -> c12 -> c1/c2/tot -> prob -> per_doc: the
-    interpolated bigram model's CTE chain."""
+def lm_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-document mean log-probability under a corpus-self-trained
+    interpolated bigram LM:
+
+        P(w2|w1) = 0.9 * c(w1 w2)/c(w1 .) + 0.1 * c(. w2)/T
+
+    where c(w1 w2) is the corpus bigram count, c(w1 .) the count of
+    transitions leaving w1, c(. w2) the count of transitions entering
+    w2, and T the total transition count. Self-training makes every
+    scored bigram a seen bigram, so the ML term is always defined; the
+    unigram interpolation keeps one-off transitions from dominating.
+
+    Scale: a web-scale bigram vocabulary is billions of keys, so the
+    count tables join back by (t1, t2) as REGULAR shuffle joins (never
+    broadcast), all partial-aggregated map-side; the single-row total
+    T is the only broadcast. Same shuffle profile as TF-IDF /
+    text_unigram_logprob. Docs with < 2 tokens have no transitions and
+    surface as (n_bigrams=0, avg_logprob=NULL) — kept, not dropped, so
+    the gate downstream sees every doc.
+    """
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    tf, c12 = _bigram_counts(docs)
+    c1 = c12.groupBy("t1").agg(F.sum("c12").alias("c1"))
+    c2 = c12.groupBy("t2").agg(F.sum("c12").alias("c2"))
+    total = c12.agg(F.sum("c12").alias("t_total"))
+    prob = (
+        c12.join(c1, "t1")
+        .join(c2, "t2")
+        .join(F.broadcast(total))
+        .withColumn(
+            "micronats",
+            F.expr(
+                _MICRONATS.format(
+                    p=f"{LAMBDA_BI} * (cast(c12 as double) / cast(c1 as double))"
+                    f" + {1 - LAMBDA_BI} * (cast(c2 as double) / cast(t_total as double))"
+                )
+            ),
+        )
+        .select("t1", "t2", "micronats")
+    )
+    return _doc_logprob(docs, tf, prob)
+
+
+#: the per-doc sum of bigram micronats under the chain's ``prob``
+_PER_DOC_SQL = """per_doc AS (
+  SELECT tf.doc_id, SUM(tf.tf) AS n_bigrams,
+         SUM(tf.tf * prob.micronats) AS sum_micronats
+  FROM tf JOIN prob USING (t1, t2) GROUP BY tf.doc_id
+)"""
+
+
+def _bi_counts_sql(d: Dialect) -> str:
+    """t -> big -> tf -> c12: the oracle twin of :func:`_bigram_counts`."""
     n = d.fn("len", "w")
     return f"""t AS (
   SELECT doc_id, {words_sql(d)} AS w
@@ -167,7 +189,13 @@ big AS (
 ),
 tf AS (SELECT doc_id, t1, t2, COUNT(*) AS tf FROM big GROUP BY ALL),
 c12 AS (SELECT t1, t2, SUM(tf) AS c12 FROM tf GROUP BY ALL),
-c1 AS (SELECT t1, SUM(c12) AS c1 FROM c12 GROUP BY t1),
+"""
+
+
+def _bi_stages_sql(d: Dialect) -> str:
+    """t -> big -> tf -> c12 -> c1/c2/tot -> prob -> per_doc: the
+    interpolated bigram model's CTE chain."""
+    return f"""{_bi_counts_sql(d)}c1 AS (SELECT t1, SUM(c12) AS c1 FROM c12 GROUP BY t1),
 c2 AS (SELECT t2, SUM(c12) AS c2 FROM c12 GROUP BY t2),
 tot AS (SELECT SUM(c12) AS t_total FROM c12),
 prob AS (
@@ -177,16 +205,11 @@ prob AS (
               * 1000000.0) AS BIGINT) AS micronats
   FROM c12 JOIN c1 USING (t1) JOIN c2 USING (t2) CROSS JOIN tot
 ),
-per_doc AS (
-  SELECT tf.doc_id, SUM(tf.tf) AS n_bigrams,
-         SUM(tf.tf * prob.micronats) AS sum_micronats
-  FROM tf JOIN prob USING (t1, t2) GROUP BY tf.doc_id
-)"""
+{_PER_DOC_SQL}"""
 
 
-def _bigram_sql(d: Dialect) -> str:
-    return f"""
-WITH {_bi_stages_sql(d)}
+#: the oracle twin of :func:`_doc_logprob`
+_LOGPROB_FINAL = f"""
 SELECT d.doc_id,
        CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
        {r6_sql('CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)')}
@@ -194,6 +217,11 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN per_doc p USING (doc_id)
 ORDER BY d.doc_id
 """
+
+
+def _bigram_sql(d: Dialect) -> str:
+    return f"""
+WITH {_bi_stages_sql(d)}{_LOGPROB_FINAL}"""
 
 
 def lm_perplexity_tercile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,28 +519,7 @@ def lm_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     with < 2 tokens surface as (0, NULL) — kept, not dropped.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    big = spread_scan(docs, "doc_id").select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"IF(size({_clean_tokens_expr()}) >= 2,"
-                f" transform(sequence(1, size({_clean_tokens_expr()}) - 1),"
-                f"  i -> struct(element_at({_clean_tokens_expr()}, i) AS t1,"
-                f"              element_at({_clean_tokens_expr()}, i + 1) AS t2)),"
-                f" CAST(array() AS array<struct<t1:string,t2:string>>))"
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.t1", "b.t2")
-    tf = (
-        big.groupBy("doc_id", "t1", "t2")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .transform(materialize)
-    )
-    c12 = (
-        tf.groupBy("t1", "t2")
-        .agg(F.sum("tf").alias("c12"))
-        .transform(materialize)
-    )
+    tf, c12 = _bigram_counts(docs)
     # N1+(w1.) rides c1's aggregate; N1+(.w2) is its own — one shuffle
     # each over the TYPE table, never the corpus
     c1 = c12.groupBy("t1").agg(
@@ -527,34 +534,14 @@ def lm_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("micronats", F.expr(_MICRONATS.format(p=_KN_P)))
         .select("t1", "t2", "micronats")
     )
-    per_doc = (
-        tf.join(prob, ["t1", "t2"])
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_bigrams"),
-            F.sum(F.col("tf") * F.col("micronats")).alias("sum_micronats"),
-        )
-    )
-    return (
-        docs.select("doc_id")
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
-            _r6(
-                F.col("sum_micronats").cast("double")
-                / (F.col("n_bigrams") * F.lit(1000000.0))).alias("avg_logprob"),
-        )
-        .orderBy("doc_id")
-    )
+    return _doc_logprob(docs, tf, prob)
 
 
 def _kn_stages(d: Dialect) -> str:
     """The KN count/prob CTE chain: reuses the tokenize/bigram/tf/c12
     stages, then swaps the Jelinek-Mercer prob for the Kneser-Ney one."""
-    head = _bi_stages_sql(d).split("c1 AS (", 1)[0]
     return (
-        head
+        _bi_counts_sql(d)
         + f"""c1 AS (SELECT t1, SUM(c12) AS c1, COUNT(*) AS n1f
        FROM c12 GROUP BY t1),
 n1b AS (SELECT t2, COUNT(*) AS n1b FROM c12 GROUP BY t2),
@@ -565,22 +552,9 @@ prob AS (
            AS micronats
   FROM c12 JOIN c1 USING (t1) JOIN n1b USING (t2) CROSS JOIN bt
 ),
-per_doc AS (
-  SELECT tf.doc_id, SUM(tf.tf) AS n_bigrams,
-         SUM(tf.tf * prob.micronats) AS sum_micronats
-  FROM tf JOIN prob USING (t1, t2) GROUP BY tf.doc_id
-)"""
+{_PER_DOC_SQL}"""
     )
 
-
-_KN_FINAL = f"""
-SELECT d.doc_id,
-       CAST(COALESCE(p.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       {r6_sql('CAST(p.sum_micronats AS DOUBLE) / (p.n_bigrams * 1000000.0)')}
-         AS avg_logprob
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-ORDER BY d.doc_id
-"""
 
 
 QUERIES = {
@@ -592,7 +566,7 @@ QUERIES = {
 
 TEMPLATES = {
     "lm_bigram_logprob": _bigram_sql,
-    "lm_kneser_ney_logprob": lambda d: f"WITH {_kn_stages(d)}{_KN_FINAL}",
+    "lm_kneser_ney_logprob": lambda d: f"WITH {_kn_stages(d)}{_LOGPROB_FINAL}",
     "lm_perplexity_tercile_gate": _tercile_gate_sql,
     "nb_lang_confusion": _nb_confusion_sql,
 }

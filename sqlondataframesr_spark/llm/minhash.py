@@ -128,15 +128,10 @@ def minhash_signatures(docs_shingled: DataFrame) -> DataFrame:
     )
 
 
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate candidate pairs via banded MinHash-LSH, scored by
-    estimated Jaccard (signature agreement fraction), est >= 0.5."""
-    shingled = with_shingles(load_table(spark, sf_dir, "documents"))
-    # sig feeds three branches (bands + both sides of the score join);
-    # checkpoint so the shingle+hash pass runs once. K bigints per doc.
-    sig = minhash_signatures(shingled).transform(materialize)
-
-    bands = sig.select(
+def minhash_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bkey): one row per signature band, the band's
+    rows joined into its bucket key."""
+    return sig.select(
         "doc_id",
         F.explode(F.expr(
             f"transform(sequence(0, {BANDS - 1}),"
@@ -146,6 +141,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )).alias("e"),
     ).select("doc_id", "e.band", "e.bkey")
 
+
+def _band_candidates(sig: DataFrame) -> DataFrame:
+    """(doc_b, doc_a, sig_a, sig_b): each distinct doc pair (doc_a <
+    doc_b) sharing at least one band bucket, with both signatures."""
+    bands = minhash_bands(sig)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -157,20 +157,25 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            _r6(
-                F.size(F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-                )).cast("double") / F.lit(float(NUM_PERM))).alias("est_jaccard"),
-        )
+    return cand.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate candidate pairs via banded MinHash-LSH, scored by
+    estimated Jaccard (signature agreement fraction), est >= 0.5."""
+    shingled = with_shingles(load_table(spark, sf_dir, "documents"))
+    # sig feeds three branches (bands + both sides of the score join);
+    # checkpoint so the shingle+hash pass runs once. K bigints per doc.
+    sig = minhash_signatures(shingled).transform(materialize)
+    est = _band_candidates(sig).select(
+        "doc_a",
+        "doc_b",
+        _r6(
+            F.size(F.filter(
+                F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
+            )).cast("double") / F.lit(float(NUM_PERM))).alias("est_jaccard"),
     )
     return (
         est.filter(F.col("est_jaccard") >= EST_THRESHOLD)
@@ -225,32 +230,8 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     shingled = with_shingles(load_table(spark, sf_dir, "documents"))
     sig = minhash_signatures(shingled).transform(materialize)
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.expr(
-            f"transform(sequence(0, {BANDS - 1}),"
-            f"  b -> struct(b as band, concat_ws(',', transform("
-            f"    slice(sig, b * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}),"
-            "     x -> cast(x as string))) as bkey))"
-        )).alias("e"),
-    ).select("doc_id", "e.band", "e.bkey")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _band_candidates(sig)
         .selectExpr(
             "doc_a",
             "doc_b",

@@ -118,15 +118,10 @@ def emb_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-domain top-5 per query (vec_id < N_QUERIES) by ADC:
-    approximate distance = sum over subspaces of LUT[m][code_m].
-
-    Output: (q_id, neighbor_id, adc_dist, rnk). Recall < 1 by design
-    (quantization error); the oracle replicates the codebook and the
-    LUT, pinning the algorithm, not ideal-kNN.
-    """
-    vec = load_vectors(spark, sf_dir).transform(materialize)
+def _adc_lookup(vec: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(codes, lut): each vector's code per subspace, and the ADC
+    lookup table — each query's distance to every codeword of each
+    subspace, in integer micro-units."""
     sub = _subvectors(vec)
     cb = sub.filter(F.col("vec_id") < KSUB).select(
         F.col("vec_id").alias("cw_id"), "m", F.col("subv").alias("cw")
@@ -141,6 +136,19 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(_d_us_sql(SPARK, "qsub", "cw")).alias("d_us"),
         )
     )
+    return codes, lut
+
+
+def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Compressed-domain top-5 per query (vec_id < N_QUERIES) by ADC:
+    approximate distance = sum over subspaces of LUT[m][code_m].
+
+    Output: (q_id, neighbor_id, adc_dist, rnk). Recall < 1 by design
+    (quantization error); the oracle replicates the codebook and the
+    LUT, pinning the algorithm, not ideal-kNN.
+    """
+    vec = load_vectors(spark, sf_dir).transform(materialize)
+    codes, lut = _adc_lookup(vec)
     approx = (
         codes.join(
             F.broadcast(lut),
@@ -220,20 +228,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(materialize)
     )
     # --- PQ/ADC stage over candidates only ---
-    sub = _subvectors(vec)
-    cb = sub.filter(F.col("vec_id") < KSUB).select(
-        F.col("vec_id").alias("cw_id"), "m", F.col("subv").alias("cw")
-    )
-    codes = _encoded(vec).select("vec_id", "m", "code")
-    lut = (
-        sub.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), "m", F.col("subv").alias("qsub"))
-        .join(F.broadcast(cb), "m")
-        .select(
-            "q_id", "m", "cw_id",
-            F.expr(_d_us_sql(SPARK, "qsub", "cw")).alias("d_us"),
-        )
-    )
+    codes, lut = _adc_lookup(vec)
     cand_codes = cand.join(
         codes, cand.neighbor_id == codes.vec_id
     ).select("q_id", "neighbor_id", "m", "code")
@@ -301,11 +296,7 @@ cand AS (
   SELECT probes.q_id, asg.vec_id AS neighbor_id
   FROM asg JOIN probes USING (list_id)
   WHERE asg.vec_id != probes.q_id),
-lut AS (
-  SELECT q.vec_id AS q_id, q.m, cb.cw_id,
-         {_d_us_sql(d, 'q.subv', 'cb.cw')} AS d_us
-  FROM sub q JOIN cb ON q.m = cb.m
-  WHERE q.vec_id < {N_QUERIES}),
+{_lut_sql(d)},
 approx AS (
   SELECT c.q_id, c.neighbor_id, SUM(lut.d_us) AS dist_us
   FROM cand c
@@ -355,6 +346,15 @@ def _pq_parts(d: Dialect) -> list[str]:
     ]
 
 
+def _lut_sql(d: Dialect) -> str:
+    """The oracle twin of :func:`_adc_lookup`'s ``lut``."""
+    return f"""lut AS (
+  SELECT q.vec_id AS q_id, q.m, cb.cw_id,
+         {_d_us_sql(d, 'q.subv', 'cb.cw')} AS d_us
+  FROM sub q JOIN cb ON q.m = cb.m
+  WHERE q.vec_id < {N_QUERIES})"""
+
+
 def _pq_encode_sql(d: Dialect) -> str:
     codes = d.string_agg(d.cast_str("code"), "','", "m")
     return (
@@ -372,11 +372,7 @@ def _pq_adc_sql(d: Dialect) -> str:
         "WITH "
         + ",\n".join(_pq_parts(d))
         + f""",
-lut AS (
-  SELECT q.vec_id AS q_id, q.m, cb.cw_id,
-         {_d_us_sql(d, 'q.subv', 'cb.cw')} AS d_us
-  FROM sub q JOIN cb ON q.m = cb.m
-  WHERE q.vec_id < {N_QUERIES}),
+{_lut_sql(d)},
 approx AS (
   SELECT lut.q_id, best.vec_id, SUM(lut.d_us) AS dist_us
   FROM best JOIN lut ON best.m = lut.m AND best.code = lut.cw_id

@@ -598,6 +598,41 @@ def _bands_sql(d: Dialect) -> str:
 """
 
 
+#: rank each query's scored neighbors by exact cosine, ties by id
+_RANK_BY_COSINE = """r AS (
+  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
+  FROM scored
+)"""
+#: the exact top-k tail every cosine top-k oracle ends with
+_TOP_K_TAIL = f"""{_RANK_BY_COSINE}
+SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
+"""
+
+
+def _rerank_sql(d: Dialect) -> str:
+    """``scored``: the exact cosine of each candidate pair in ``cand``
+    (q_id, neighbor_id), read from the ``vec`` CTE."""
+    return f"""scored AS (
+  SELECT cand.q_id, cand.neighbor_id,
+         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
+  FROM cand
+  JOIN vec q ON q.vec_id = cand.q_id
+  JOIN vec c ON c.vec_id = cand.neighbor_id
+)"""
+
+
+def _lsh_cand_sql(d: Dialect) -> str:
+    """vec -> sig -> bands -> the open ``cand`` CTE: distinct pairs
+    that share a band bucket (the caller may add a WHERE, then closes
+    the CTE)."""
+    return f"""WITH vec AS ({vec_sql(d)}),
+sig AS ({_sig_sql(d)}),
+bands AS ({_bands_sql(d)}),
+cand AS (
+  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
+  FROM bands q JOIN bands c ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id"""
+
+
 def _cosine_topk_sql(d: Dialect) -> str:
     return f"""
 WITH vec AS ({vec_sql(d)}),
@@ -607,34 +642,15 @@ scored AS (
   FROM vec q JOIN vec c ON c.vec_id != q.vec_id
   WHERE q.vec_id < {N_QUERIES}
 ),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
+{_TOP_K_TAIL}"""
 
 
 def _knn_graph_lsh_sql(d: Dialect) -> str:
     return f"""
-WITH vec AS ({vec_sql(d)}),
-sig AS ({_sig_sql(d)}),
-bands AS ({_bands_sql(d)}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
-  FROM bands q JOIN bands c ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
+{_lsh_cand_sql(d)}
 ),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
+{_rerank_sql(d)},
+{_RANK_BY_COSINE}
 SELECT q_id AS vec_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {KNN_K}
 ORDER BY vec_id, rnk
 """
@@ -642,27 +658,11 @@ ORDER BY vec_id, rnk
 
 def _lsh_topk_sql(d: Dialect) -> str:
     return f"""
-WITH vec AS ({vec_sql(d)}),
-sig AS ({_sig_sql(d)}),
-bands AS ({_bands_sql(d)}),
-cand AS (
-  SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS neighbor_id
-  FROM bands q JOIN bands c ON q.band = c.band AND q.bkey = c.bkey AND c.vec_id != q.vec_id
+{_lsh_cand_sql(d)}
   WHERE q.vec_id < {N_QUERIES}
 ),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
+{_rerank_sql(d)},
+{_TOP_K_TAIL}"""
 
 #: IVF probe/rerank SQL, codebook-agnostic — expects a ``cent`` CTE
 #: (c_id, cv, cn) and the ``vec`` CTE to be in scope. Appended after
@@ -691,19 +691,8 @@ cand AS (
   FROM asg JOIN probes USING (list_id)
   WHERE asg.vec_id != probes.q_id
 ),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
+{_rerank_sql(d)},
+{_TOP_K_TAIL}"""
 
 
 def _ivf_topk_sql(d: Dialect) -> str:
@@ -1010,19 +999,8 @@ cand AS (
         FROM scored_int)
   WHERE crnk <= {SQ_RERANK}
 ),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-),
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
+{_rerank_sql(d)},
+{_TOP_K_TAIL}"""
 
 
 #: Matryoshka progressive refinement: shortlist on the first
@@ -1172,25 +1150,14 @@ cand AS (
         FROM pre)
   WHERE crnk <= {MRL_SHORTLIST}
 ),
-scored AS (
-  SELECT cand.q_id, cand.neighbor_id,
-         {_cos(d, 'q.v', 'c.v', 'q.nrm', 'c.nrm')} AS cosine
-  FROM cand
-  JOIN vec q ON q.vec_id = cand.q_id
-  JOIN vec c ON c.vec_id = cand.neighbor_id
-)"""
+{_rerank_sql(d)}"""
 
 
 def _matryoshka_topk_sql(d: Dialect) -> str:
     return f"""
 WITH vec AS ({vec_sql(d)}),
 {_mrl_stages_sql(d)},
-r AS (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT q_id, neighbor_id, cosine, rnk FROM r WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
-"""
+{_TOP_K_TAIL}"""
 
 
 def _matryoshka_recall_sql(d: Dialect) -> str:

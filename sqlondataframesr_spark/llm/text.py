@@ -460,15 +460,20 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _repetition_sql(d: Dialect) -> str:
-    return f"""
-WITH tok AS (
+def _term_freq_sql(d: Dialect) -> str:
+    """tok -> tf: the count of each non-empty term per document."""
+    return f"""tok AS (
   SELECT doc_id, {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents
 ),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
   FROM tok WHERE term != '' GROUP BY doc_id, term
-),
+)"""
+
+
+def _repetition_sql(d: Dialect) -> str:
+    return f"""
+WITH {_term_freq_sql(d)},
 rolled AS (
   SELECT doc_id,
          CAST(SUM(tf) AS BIGINT) AS n_tokens,
@@ -547,13 +552,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _unigram_logprob_sql(d: Dialect) -> str:
     return f"""
-WITH tok AS (
-  SELECT doc_id, {d.fn('unnest', d.fn('string_split', 'text', "' '"))} AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf
-  FROM tok WHERE term != '' GROUP BY doc_id, term
-),
+WITH {_term_freq_sql(d)},
 ctf AS (SELECT term, SUM(tf) AS ctf FROM tf GROUP BY term),
 tot AS (SELECT SUM(ctf) AS total FROM ctf),
 scored AS (

@@ -91,6 +91,28 @@ def mm_media_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _featurize_rows(columns: list[str], features):
+    """A mapInPandas body: one output row ``features(r6, *values)`` (a
+    dict) per input row of ``columns``, one pandas frame per Arrow
+    batch. Nested, so cloudpickle ships it and ``features`` by value;
+    self-contained, because executors of an external driver cannot
+    import this package — ``r6`` is a local twin of
+    functions/rounding.r6_py."""
+
+    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        import math
+
+        import pandas as pd
+
+        def r6(x):
+            return math.floor(x * 1000000.0 + 0.5) / 1000000.0
+
+        for pdf in batches:
+            yield pd.DataFrame([features(r6, *row) for row in zip(*(pdf[c] for c in columns))])
+
+    return _decode
+
+
 def byte_histogram(media: DataFrame, buckets: int = HIST_BUCKETS) -> DataFrame:
     """Per-payload normalized byte histogram via Arrow-batched
     ``mapInPandas`` — the featurize-binary shape (binary → fixed-size
@@ -231,55 +253,34 @@ def decode_image(media: DataFrame) -> DataFrame:
 
     # nested so cloudpickle ships it by value (executors of an external
     # driver have no import path to this package)
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
-
+    def features(r6, doc_id, payload, width, height):
         import numpy as np
-        import pandas as pd
-
-        # local twin of functions/rounding.r6_py — the body must stay
-        # self-contained (no package globals: executors of an external
-        # driver can't import this package)
-        def _r6py(x):
-            return math.floor(x * 1000000.0 + 0.5) / 1000000.0
 
         magic, header = b"SIMG", 8
-
-        def pixels(payload, width, height):
-            if payload[:4] == magic:
-                w = int.from_bytes(payload[4:6], "big")
-                h = int.from_bytes(payload[6:8], "big")
-                return np.frombuffer(
-                    payload, np.uint8, count=w * h, offset=header
-                ).reshape(h, w)
+        payload = bytes(payload)
+        if payload[:4] == magic:
+            w = int.from_bytes(payload[4:6], "big")
+            h = int.from_bytes(payload[6:8], "big")
+            px = np.frombuffer(payload, np.uint8, count=w * h, offset=header).reshape(h, w)
+        else:
             n = int(width) * int(height)
             src = np.frombuffer(payload, np.uint8)
             if src.size == 0:
-                return np.zeros((int(height), int(width)), np.uint8)
-            return np.tile(src, -(-n // src.size))[:n].reshape(
-                int(height), int(width)
-            )
+                px = np.zeros((int(height), int(width)), np.uint8)
+            else:
+                px = np.tile(src, -(-n // src.size))[:n].reshape(int(height), int(width))
+        return {
+            "doc_id": doc_id,
+            "width": px.shape[1],
+            "height": px.shape[0],
+            "mean_luma": r6(float(px.mean())),
+            "std_luma": r6(float(px.std())),
+            "nonzero_frac": r6(float((px > 0).mean())),
+        }
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, width, height in zip(
-                pdf["doc_id"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                px = pixels(bytes(payload), width, height)
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": px.shape[1],
-                        "height": px.shape[0],
-                        "mean_luma": _r6py(float(px.mean())),
-                        "std_luma": _r6py(float(px.std())),
-                        "nonzero_frac": _r6py(float((px > 0).mean())),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return _spread(media.select("doc_id", "payload", "width", "height")).mapInPandas(
-        _decode, out_schema
+    columns = ["doc_id", "payload", "width", "height"]
+    return _spread(media.select(*columns)).mapInPandas(
+        _featurize_rows(columns, features), out_schema
     )
 
 
@@ -464,46 +465,33 @@ def decode_audio(media: DataFrame) -> DataFrame:
 
     # nested so cloudpickle ships it by value (external drivers have
     # no import path to this package on executors)
-    def _decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
-
+    def features(r6, doc_id, payload):
         import numpy as np
-        import pandas as pd
-
-        # local twin of functions/rounding.r6_py (see image decode)
-        def _r6py(x):
-            return math.floor(x * 1000000.0 + 0.5) / 1000000.0
 
         sr = 8000
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm = np.frombuffer(bytes(payload), np.uint8).astype(np.float64) - 128.0
-                n = int(pcm.size)
-                if n == 0:
-                    rows.append(
-                        {
-                            "doc_id": doc_id, "n_samples": 0, "duration_ms": 0,
-                            "rms": 0.0, "zcr": 0.0, "peak": 0, "clip_frac": 0.0,
-                        }
-                    )
-                    continue
-                neg = np.signbit(pcm)  # zero counts as positive: one rule, both replays
-                zc = int(np.count_nonzero(neg[1:] != neg[:-1]))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "n_samples": n,
-                        "duration_ms": int(round(n / sr * 1000)),
-                        "rms": _r6py(float(np.sqrt(np.mean(pcm * pcm)))),
-                        "zcr": _r6py(zc / max(n - 1, 1)),
-                        "peak": int(np.max(np.abs(pcm))),
-                        "clip_frac": _r6py(float(np.mean(np.abs(pcm) >= 127.0))),
-                    }
-                )
-            yield pd.DataFrame(rows)
+        pcm = np.frombuffer(bytes(payload), np.uint8).astype(np.float64) - 128.0
+        n = int(pcm.size)
+        if n == 0:
+            return {
+                "doc_id": doc_id, "n_samples": 0, "duration_ms": 0,
+                "rms": 0.0, "zcr": 0.0, "peak": 0, "clip_frac": 0.0,
+            }
+        neg = np.signbit(pcm)  # zero counts as positive: one rule, both replays
+        zc = int(np.count_nonzero(neg[1:] != neg[:-1]))
+        return {
+            "doc_id": doc_id,
+            "n_samples": n,
+            "duration_ms": int(round(n / sr * 1000)),
+            "rms": r6(float(np.sqrt(np.mean(pcm * pcm)))),
+            "zcr": r6(zc / max(n - 1, 1)),
+            "peak": int(np.max(np.abs(pcm))),
+            "clip_frac": r6(float(np.mean(np.abs(pcm) >= 127.0))),
+        }
 
-    return _spread(media.select("doc_id", "payload")).mapInPandas(_decode, out_schema)
+    columns = ["doc_id", "payload"]
+    return _spread(media.select(*columns)).mapInPandas(
+        _featurize_rows(columns, features), out_schema
+    )
 
 
 def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:

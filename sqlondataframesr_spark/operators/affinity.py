@@ -127,12 +127,11 @@ def _affinity_pipeline(li: DataFrame) -> DataFrame:
     )
 
 
-def _pairs_sql(d: Dialect) -> str:
-    return f"""
-  WITH li AS (
-    SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-  ),
-  pairs AS (
+def _lift_sql(d: Dialect) -> str:
+    """pairs -> part_n -> tot -> the top lift pairs, over an ``li``
+    (l_orderkey, l_partkey) basket CTE: the oracle twin of
+    :func:`_affinity_pipeline`."""
+    return f"""  pairs AS (
     SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
            CAST(COUNT(*) AS BIGINT) AS n_orders
     FROM li a JOIN li b
@@ -158,6 +157,14 @@ def _pairs_sql(d: Dialect) -> str:
   ORDER BY p.n_orders DESC, lift_ppm DESC, p.part_a ASC, p.part_b ASC
   LIMIT {TOP_PAIRS_K}
 """
+
+
+def _pairs_sql(d: Dialect) -> str:
+    return f"""
+  WITH li AS (
+    SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+  ),
+{_lift_sql(d)}"""
 
 
 def basket_top_pairs_capped(
@@ -202,32 +209,7 @@ def _pairs_capped_sql(d: Dialect) -> str:
     SELECT li0.l_orderkey, li0.l_partkey FROM li0
     JOIN keep ON keep.l_orderkey = li0.l_orderkey
   ),
-  pairs AS (
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-           CAST(COUNT(*) AS BIGINT) AS n_orders
-    FROM li a JOIN li b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY a.l_partkey, b.l_partkey
-    HAVING COUNT(*) >= {MIN_SUPPORT}
-  ),
-  part_n AS (
-    SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_part
-    FROM li GROUP BY l_partkey
-  ),
-  tot AS (
-    SELECT CAST(COUNT(DISTINCT l_orderkey) AS BIGINT) AS n_baskets FROM li
-  )
-  SELECT p.part_a, p.part_b, p.n_orders,
-         na.n_part AS n_a, nb.n_part AS n_b,
-         CAST(p.n_orders * t.n_baskets * 1000000 {d.div}
-              (na.n_part * nb.n_part) AS BIGINT) AS lift_ppm
-  FROM pairs p
-  JOIN part_n na ON na.l_partkey = p.part_a
-  JOIN part_n nb ON nb.l_partkey = p.part_b
-  CROSS JOIN tot t
-  ORDER BY p.n_orders DESC, lift_ppm DESC, p.part_a ASC, p.part_b ASC
-  LIMIT {TOP_PAIRS_K}
-"""
+{_lift_sql(d)}"""
 
 
 def basket_cap_report(spark: SparkSession, sf_dir: str) -> DataFrame:

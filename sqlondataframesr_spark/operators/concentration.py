@@ -234,6 +234,19 @@ def _abc_sql(d: Dialect) -> str:
 """
 
 
+def event_cents_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, cents, cnt): events per type and cent value — the
+    bounded per-value frame the percentile operators read."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.selectExpr(
+            "event_type", "cast(round(value * 100) as bigint) as cents"
+        )
+        .groupBy("event_type", "cents")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
 def evt_value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact P50/P90/P99 of the event value per event type WITHOUT
     sorting raw data: the value domain is price-like (≤ ~56k distinct
@@ -247,14 +260,7 @@ def evt_value_percentiles_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank — no interpolation, so no dialect rounding seam).
 
     Output: (event_type, n, p50_cents, p90_cents, p99_cents)."""
-    ev = load_table(spark, sf_dir, "events")
-    hist = (
-        ev.selectExpr(
-            "event_type", "cast(round(value * 100) as bigint) as cents"
-        )
-        .groupBy("event_type", "cents")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    hist = event_cents_histogram(spark, sf_dir)
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("cents").rowsBetween(

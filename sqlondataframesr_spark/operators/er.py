@@ -37,7 +37,7 @@ rounded, so Spark and DuckDB produce bit-identical doubles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.dialect import Dialect, dual
@@ -63,11 +63,10 @@ def _lev_bounded(left: str, right: str):
     return F.expr(f"levenshtein({left}, {right}, {ER_MAX_DISTANCE})")
 
 
-def er_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate duplicate customers: pairs inside the same
-    (nation, mktsegment) block whose names are within edit distance
-    2. Top-100 by (distance, custkey_a, custkey_b) — deterministic,
-    TakeOrderedAndProject."""
+def _blocked_matches(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """Customer pairs ``a``/``b`` (a.c_custkey < b.c_custkey) inside one
+    (nation, mktsegment) block whose names are within
+    ER_MAX_DISTANCE, and the bounded edit-distance column."""
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
@@ -77,23 +76,29 @@ def er_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = spread_scan(c).alias("a")
     b = c.alias("b")
     lev = _lev_bounded("a.c_name", "b.c_name")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.c_nationkey") == F.col("b.c_nationkey"),
-                F.col("a.c_mktsegment") == F.col("b.c_mktsegment"),
-                F.col("a.c_custkey") < F.col("b.c_custkey"),
-            ],
-        )
-        .filter(lev >= 0)
-        .select(
-            F.col("a.c_custkey").alias("custkey_a"),
-            F.col("b.c_custkey").alias("custkey_b"),
-            F.col("a.c_nationkey").alias("nationkey"),
-            F.col("a.c_mktsegment").alias("mktsegment"),
-            lev.cast("long").alias("name_distance"),
-        )
+    matches = a.join(
+        b,
+        on=[
+            F.col("a.c_nationkey") == F.col("b.c_nationkey"),
+            F.col("a.c_mktsegment") == F.col("b.c_mktsegment"),
+            F.col("a.c_custkey") < F.col("b.c_custkey"),
+        ],
+    ).filter(lev >= 0)
+    return matches, lev
+
+
+def er_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate duplicate customers: pairs inside the same
+    (nation, mktsegment) block whose names are within edit distance
+    2. Top-100 by (distance, custkey_a, custkey_b) — deterministic,
+    TakeOrderedAndProject."""
+    matches, lev = _blocked_matches(spark, sf_dir)
+    pairs = matches.select(
+        F.col("a.c_custkey").alias("custkey_a"),
+        F.col("b.c_custkey").alias("custkey_b"),
+        F.col("a.c_nationkey").alias("nationkey"),
+        F.col("a.c_mktsegment").alias("mktsegment"),
+        lev.cast("long").alias("name_distance"),
     )
     return pairs.orderBy("name_distance", "custkey_a", "custkey_b").limit(ER_TOP_K)
 
@@ -310,25 +315,9 @@ def er_banding_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNCAPPED threshold match pairs (the top-k cap in
     er_customer_pairs is presentation; clustering needs every edge)."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
-    )
-    a = spread_scan(c).alias("a")
-    b = c.alias("b")
-    lev = _lev_bounded("a.c_name", "b.c_name")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.c_nationkey") == F.col("b.c_nationkey"),
-                F.col("a.c_mktsegment") == F.col("b.c_mktsegment"),
-                F.col("a.c_custkey") < F.col("b.c_custkey"),
-            ],
-        )
-        .filter(lev >= 0)
-        .select(
-            F.col("a.c_custkey").alias("ka"), F.col("b.c_custkey").alias("kb")
-        )
+    matches, _ = _blocked_matches(spark, sf_dir)
+    return matches.select(
+        F.col("a.c_custkey").alias("ka"), F.col("b.c_custkey").alias("kb")
     )
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
 from ..functions.dialect import Dialect
+from .concentration import event_cents_histogram
 
 #: grid geometry: slopes from 50% to 150% of the moment estimate
 GRID_N = 16
@@ -420,14 +421,7 @@ def ml_winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    hist = (
-        ev.selectExpr(
-            "event_type", "cast(round(value * 100) as bigint) as cents"
-        )
-        .groupBy("event_type", "cents")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    hist = event_cents_histogram(spark, sf_dir)
     wcum = Window.partitionBy("event_type").orderBy("cents").rowsBetween(
         Window.unboundedPreceding, 0
     )

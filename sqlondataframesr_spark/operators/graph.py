@@ -127,6 +127,18 @@ def graph_nation_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.orderBy(F.col("rank_us").desc(), F.col("nation").asc())
 
 
+#: customer nation -> supplier nation over every lineitem, one group
+#: per directed nation pair: the FROM .. GROUP BY of both edge CTEs
+_TRADE_JOIN = """  FROM lineitem l
+  JOIN orders o ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation nc ON c.c_nationkey = nc.n_nationkey
+  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+  JOIN nation ns ON s.s_nationkey = ns.n_nationkey
+  GROUP BY nc.n_name, ns.n_name
+"""
+
+
 def _pagerank_sql(d: Dialect, n_nations: int) -> str:
     """The SAME unrolled computation as SQL. ``n_nations`` must equal
     the distinct node count — asserted by the node-count CTE
@@ -137,14 +149,7 @@ def _pagerank_sql(d: Dialect, n_nations: int) -> str:
 WITH edges AS (
   SELECT nc.n_name AS src, ns.n_name AS dst,
          SUM(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100) AS BIGINT)) AS w
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation nc ON c.c_nationkey = nc.n_nationkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-  GROUP BY nc.n_name, ns.n_name
-),
+{_TRADE_JOIN}),
 nodes AS (SELECT DISTINCT src AS nation FROM edges
           UNION SELECT DISTINCT dst FROM edges),
 g AS (SELECT e.src, e.dst, e.w, ow.ow
@@ -230,16 +235,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EDGES_CTE = """
+_EDGES_CTE = f"""
   SELECT nc.n_name AS src, ns.n_name AS dst
-  FROM lineitem l
-  JOIN orders o ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation nc ON c.c_nationkey = nc.n_nationkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation ns ON s.s_nationkey = ns.n_nationkey
-  GROUP BY nc.n_name, ns.n_name
-"""
+{_TRADE_JOIN}"""
 
 GRAPH_TRIANGLE_COUNT_ORACLE = f"""
 WITH edges AS ({_EDGES_CTE}),

@@ -114,17 +114,11 @@ def _sessions(
     )
 
 
-def evt_sessionize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-size profile: (n_events, n_sessions, avg_duration_s,
-    max_duration_s) per session size, ascending.
-
-    The histogram an analyst checks first: how sticky are sessions,
-    and does the gap threshold produce a sane size distribution.
-    Output is bounded by the largest session size, not data volume.
-    """
-    s = _sessions(spark, sf_dir)
+def _size_profile(sessions: DataFrame) -> DataFrame:
+    """(n_events, n_sessions, avg_duration_s, max_duration_s) per
+    session size, ascending."""
     return (
-        s.groupBy("n_events")
+        sessions.groupBy("n_events")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_sessions"),
             # duration_s is micro-exact (6dp multiple); avg over exact
@@ -136,6 +130,17 @@ def evt_sessionize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("n_events")
     )
+
+
+def evt_sessionize_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-size profile: (n_events, n_sessions, avg_duration_s,
+    max_duration_s) per session size, ascending.
+
+    The histogram an analyst checks first: how sticky are sessions,
+    and does the gap threshold produce a sane size distribution.
+    Output is bounded by the largest session size, not data volume.
+    """
+    return _size_profile(_sessions(spark, sf_dir))
 
 
 def evt_sessionize_top(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -242,18 +247,7 @@ def evt_sessionize_profile_capped(
     With ``cap >= max per-user count`` the output is identical to the
     uncapped profile (tested).
     """
-    s = _sessions(spark, sf_dir, cap)
-    return (
-        s.groupBy("n_events")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sessions"),
-            _r6(
-                F.sum(F.expr("cast(round(duration_s * 1000000.0) as bigint)"))
-                / (F.count(F.lit(1)) * F.lit(1_000_000.0))).alias("avg_duration_s"),
-            F.max("duration_s").alias("max_duration_s"),
-        )
-        .orderBy("n_events")
-    )
+    return _size_profile(_sessions(spark, sf_dir, cap))
 
 
 def user_cap_report(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:

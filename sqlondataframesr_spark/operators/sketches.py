@@ -69,7 +69,10 @@ HASH_SPACE = 1 << HASH_BITS  # 4503599627370496
 #: fan-out cells for the two-phase min-K (spreads a hot group's sort)
 KMV_CELLS = 256
 
-#: count-min sketch geometry
+#: count-min sketch geometry — the one geometry of every CMS here and
+#: in streaming/windows.py: the bucket and depth builders below read it
+#: at call time, so the fluent plans, the oracles and the duals follow
+#: any change together
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
 
@@ -79,6 +82,23 @@ CMS_TOP = 20
 def _h_sql(d: Dialect, col: str = "text") -> str:
     """The 52-bit md5 hash of ``col`` (13 hex chars)."""
     return d.hex_bigint(f"substr(md5({col}), 1, 13)")
+
+
+def cms_bucket_sql(d: Dialect, key: str) -> str:
+    """CMS row ``j``'s bucket of ``key`` (non-negative hash, so ``%``
+    is ``pmod``)."""
+    salted = f"{d.cast_str('j')} || ':' || {key}"
+    return f"({_h_sql(d, salted)} % {CMS_WIDTH})"
+
+
+def cms_depth_sql(d: Dialect) -> str:
+    """The CMS depth axis 0 .. CMS_DEPTH-1 as a list literal."""
+    return d.list(", ".join(map(str, range(CMS_DEPTH))))
+
+
+def cms_depth_axis() -> F.Column:
+    """The CMS depth axis 0 .. CMS_DEPTH-1 as an array column."""
+    return F.array(*[F.lit(i) for i in range(CMS_DEPTH)])
 
 
 def _kmv_minset(distinct_h: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -206,13 +226,6 @@ def sketch_kmv_merge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cms_bucket_spark(j: str, term: str) -> str:
-    return (
-        f"pmod(cast(conv(substring(md5(concat(cast({j} as string), ':',"
-        f" {term})), 1, 13), 16, 10) as bigint), {CMS_WIDTH})"
-    )
-
-
 def sketch_cms_freq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch over the corpus token stream, probed at the
     exact top-{CMS_TOP} terms: for each term the sketch's estimate
@@ -224,11 +237,11 @@ def sketch_cms_freq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("term")
     )
-    js = F.array(*[F.lit(i) for i in range(CMS_DEPTH)])
+    js = cms_depth_axis()
     cms = (
         toks.withColumn("j", F.explode(js))
         .select(
-            "j", F.expr(_cms_bucket_spark("j", "term")).alias("bucket")
+            "j", F.expr(cms_bucket_sql(SPARK, "term")).alias("bucket")
         )
         .groupBy("j", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cell_cnt"))
@@ -240,7 +253,7 @@ def sketch_cms_freq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy(F.desc("exact_cnt"), "term")
     top = top.withColumn("rnk", F.row_number().over(w))
     probes = top.withColumn("j", F.explode(js)).withColumn(
-        "bucket", F.expr(_cms_bucket_spark("j", "term"))
+        "bucket", F.expr(cms_bucket_sql(SPARK, "term"))
     )
     # the sketch is <= DEPTH*WIDTH rows — broadcast it to the probes
     return (
@@ -292,15 +305,13 @@ def sketch_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = ev.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).cast("long").alias("f")
     )
-    js = F.array(*[F.lit(i) for i in range(CMS_DEPTH)])
+    js = cms_depth_axis()
     cells = (
         cnt.withColumn("j", F.explode(js))
         .select(
             "event_type",
             "j",
-            F.expr(
-                _cms_bucket_spark("j", "cast(user_id as string)")
-            ).alias("bucket"),
+            F.expr(cms_bucket_sql(SPARK, SPARK.cast_str("user_id"))).alias("bucket"),
             "f",
         )
         .groupBy("event_type", "j", "bucket")
@@ -349,10 +360,10 @@ WITH cnt AS (
 ),
 stream AS (
     SELECT c.event_type, j.j, c.user_id, c.f
-    FROM cnt c CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+    FROM cnt c CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 ),
 cells AS (
-    SELECT event_type, j, {_bucket_sql(d, d.cast_str('user_id'))} AS bucket,
+    SELECT event_type, j, {cms_bucket_sql(d, d.cast_str('user_id'))} AS bucket,
            CAST(SUM(f) AS BIGINT) AS cell
     FROM stream GROUP BY 1, 2, 3
 ),
@@ -378,13 +389,6 @@ SELECT ex.exact_join_size, est.cms_join_size,
          {d.div} nullif(ex.exact_join_size, 0) AS overcount_ppm
 FROM ex CROSS JOIN est
 """
-
-
-def _bucket_sql(d: Dialect, key: str) -> str:
-    """CMS row ``j``'s bucket of ``key`` (non-negative hash, so ``%``
-    is ``pmod``)."""
-    salted = f"{d.cast_str('j')} || ':' || {key}"
-    return f"({_h_sql(d, salted)} % {CMS_WIDTH})"
 
 
 def _kmv_distinct_sql(d: Dialect) -> str:
@@ -460,10 +464,10 @@ WITH toks AS (
 ),
 stream AS (
     SELECT t.term, j.j
-    FROM toks t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+    FROM toks t CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 ),
 cms AS (
-    SELECT j, {_bucket_sql(d, 'term')} AS bucket,
+    SELECT j, {cms_bucket_sql(d, 'term')} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS cell_cnt
     FROM stream GROUP BY 1, 2
 ),
@@ -476,8 +480,8 @@ top AS (
 ),
 probes AS (
     SELECT t.term, t.exact_cnt, t.rnk, j.j,
-           {_bucket_sql(d, 'term')} AS bucket
-    FROM top t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+           {cms_bucket_sql(d, 'term')} AS bucket
+    FROM top t CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 )
 SELECT p.term, p.exact_cnt,
        MIN(c.cell_cnt) AS cms_cnt,

@@ -64,19 +64,15 @@ MAD_K = 2
 CONV_VALUE_MIN = 150
 
 
-def ml_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation linear revenue trend: OLS of monthly revenue (whole
-    dollars) against month index, via exact sufficient statistics.
-
-    Output: (n_name, n_months, slope_dollars_per_month, intercept_dollars,
-    r2) — one row per nation, ordered by n_name.
-    """
+def _nation_monthly_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(n_name, x, y): whole-dollar revenue y per nation and month index
+    x (months since 1995-01) — the series both trend fits read."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderdate", "o_totalprice"
     )
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    monthly = (
+    return (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy(
@@ -89,10 +85,18 @@ def ml_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("x"),
         )
-        .agg(
-            F.sum(F.expr("cast(round(o_totalprice) as bigint)")).alias("y")
-        )
+        .agg(F.sum(F.expr("cast(round(o_totalprice) as bigint)")).alias("y"))
     )
+
+
+def ml_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation linear revenue trend: OLS of monthly revenue (whole
+    dollars) against month index, via exact sufficient statistics.
+
+    Output: (n_name, n_months, slope_dollars_per_month, intercept_dollars,
+    r2) — one row per nation, ordered by n_name.
+    """
+    monthly = _nation_monthly_dollars(spark, sf_dir)
     stats = monthly.groupBy("n_name").agg(
         F.count(F.lit(1)).cast("long").alias("n_months"),
         F.sum("x").alias("sx"),
@@ -173,13 +177,12 @@ def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def evt_mad_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust anomaly days: daily purchase revenue whose absolute
-    deviation from the LOWER MEDIAN exceeds MAD_K × MAD (median
-    absolute deviation). Exact integer medians (k-th smallest at
-    k = (n+1) div 2, total order (value, day)) — no interpolation, no
-    floats. Output: (day, cents, med_cents, mad_cents, abs_dev) for
-    spike days, ordered by day."""
+def _daily_purchase_median(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(daily, n_k, med): purchase cents per day, the lower-median rank
+    k = (n+1) div 2 and the one-row lower median of the daily cents
+    (total order (cents, day))."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -195,6 +198,17 @@ def evt_mad_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n_k), F.col("rn") == F.col("k"))
         .select(F.col("cents").alias("med_cents"))
     )
+    return daily, n_k, med
+
+
+def evt_mad_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robust anomaly days: daily purchase revenue whose absolute
+    deviation from the LOWER MEDIAN exceeds MAD_K × MAD (median
+    absolute deviation). Exact integer medians (k-th smallest at
+    k = (n+1) div 2, total order (value, day)) — no interpolation, no
+    floats. Output: (day, cents, med_cents, mad_cents, abs_dev) for
+    spike days, ordered by day."""
+    daily, n_k, med = _daily_purchase_median(spark, sf_dir)
     with_dev = daily.crossJoin(F.broadcast(med)).withColumn(
         "abs_dev", F.abs(F.col("cents") - F.col("med_cents"))
     )
@@ -220,19 +234,7 @@ def evt_cusum_shifts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (day, cents, cusum_pos) for every day, ordered; a sustained
     level shift shows as cusum_pos ramping away from zero."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
-        F.sum(F.expr("cast(round(value * 100) as bigint)")).alias("cents")
-    )
-    n_k = daily.agg(F.expr("(count(1) + 1) div 2").alias("k"))
-    w_med = Window.orderBy("cents", "day")
-    med = (
-        daily.withColumn("rn", F.row_number().over(w_med))
-        .join(F.broadcast(n_k), F.col("rn") == F.col("k"))
-        .select(F.col("cents").alias("med_cents"))
-    )
+    daily, _, med = _daily_purchase_median(spark, sf_dir)
     w_run = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     run = (
         daily.crossJoin(F.broadcast(med))
@@ -366,9 +368,9 @@ FROM row_agg
 """
 
 
-def _mad_spikes_sql(d: Dialect) -> str:
-    return f"""
-WITH daily AS (
+def _daily_median_sql(d: Dialect) -> str:
+    """daily -> nk -> med: the oracle twin of :func:`_daily_purchase_median`."""
+    return f"""daily AS (
     SELECT CAST(ts AS DATE) AS day,
            CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
     FROM events
@@ -384,7 +386,12 @@ med AS (
                  ROW_NUMBER() OVER (ORDER BY cents, day) AS rn
           FROM daily) t, nk
     WHERE t.rn = nk.k
-),
+)"""
+
+
+def _mad_spikes_sql(d: Dialect) -> str:
+    return f"""
+WITH {_daily_median_sql(d)},
 with_dev AS (
     SELECT d.day, d.cents, m.med_cents,
            abs(d.cents - m.med_cents) AS abs_dev
@@ -406,23 +413,7 @@ ORDER BY w.day
 
 def _cusum_sql(d: Dialect) -> str:
     return f"""
-WITH daily AS (
-    SELECT CAST(ts AS DATE) AS day,
-           CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-    FROM events
-    WHERE event_type = 'purchase'
-    GROUP BY CAST(ts AS DATE)
-),
-nk AS (
-    SELECT (CAST(COUNT(*) AS BIGINT) + 1) {d.div} 2 AS k FROM daily
-),
-med AS (
-    SELECT cents AS med_cents
-    FROM (SELECT cents,
-                 ROW_NUMBER() OVER (ORDER BY cents, day) AS rn
-          FROM daily) t, nk
-    WHERE t.rn = nk.k
-),
+WITH {_daily_median_sql(d)},
 run AS (
     SELECT d.day, d.cents,
            SUM(d.cents - m.med_cents)
@@ -490,30 +481,7 @@ def ml_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (n_name, n_months, n_pairs, theil_slope_micro) ordered by
     n_name."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select(
-        "n_nationkey", "n_name"
-    )
-    monthly = (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy(
-            "n_name",
-            (
-                (F.year("o_orderdate") - F.lit(1995)) * 12
-                + F.month("o_orderdate")
-                - F.lit(1)
-            )
-            .cast("long")
-            .alias("x"),
-        )
-        .agg(F.sum(F.expr("cast(round(o_totalprice) as bigint)")).alias("y"))
-    )
+    monthly = _nation_monthly_dollars(spark, sf_dir)
     a = monthly.select(
         "n_name", F.col("x").alias("x1"), F.col("y").alias("y1")
     )
@@ -593,6 +561,36 @@ def _wkend_sql(d: Dialect) -> str:
     return f"{d.isodow('ts')} >= 6"
 
 
+def _cents_arm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cents, na, nb): purchases per cent value in arm A (weekday) and
+    arm B (weekend) — the bounded frame both rank tests window over."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    return (
+        ev.selectExpr(
+            "cast(round(value * 100) as bigint) as cents",
+            f"IF({_wkend_sql(SPARK)}, 1L, 0L) as is_b",
+        )
+        .groupBy("cents")
+        .agg(
+            F.sum(F.expr("1 - is_b")).cast("long").alias("na"),
+            F.sum("is_b").cast("long").alias("nb"),
+        )
+    )
+
+
+def _cents_arm_counts_sql(d: Dialect) -> str:
+    """The oracle twin of :func:`_cents_arm_counts`."""
+    return f"""per_v AS (
+    SELECT CAST(round(value * 100) AS BIGINT) AS cents,
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 0 ELSE 1 END) AS BIGINT) AS na,
+           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 1 ELSE 0 END) AS BIGINT) AS nb
+    FROM events WHERE event_type = 'purchase'
+    GROUP BY 1
+)"""
+
+
 def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov distance between weekday
     ('A') and weekend ('B') purchase-value distributions — "did the
@@ -612,20 +610,7 @@ def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix sum — same formula, no single-task sort.
 
     Output: 1 row (n_a, n_b, n_points, d_num, ks_ppm)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    per_v = (
-        ev.selectExpr(
-            "cast(round(value * 100) as bigint) as cents",
-            f"IF({_wkend_sql(SPARK)}, 1L, 0L) as is_b",
-        )
-        .groupBy("cents")
-        .agg(
-            F.sum(F.expr("1 - is_b")).cast("long").alias("na"),
-            F.sum("is_b").cast("long").alias("nb"),
-        )
-    )
+    per_v = _cents_arm_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     wt = Window.partitionBy()
     cum = per_v.select(
@@ -660,13 +645,7 @@ def dq_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ks_sql(d: Dialect) -> str:
     return f"""
-WITH per_v AS (
-    SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 0 ELSE 1 END) AS BIGINT) AS na,
-           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 1 ELSE 0 END) AS BIGINT) AS nb
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY 1
-),
+WITH {_cents_arm_counts_sql(d)},
 cum AS (
     SELECT cents, na, nb,
            SUM(na) OVER (ORDER BY cents
@@ -705,20 +684,7 @@ def ab_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical shape to dq_ks_statistic — one partial-agg
     shuffle to the bounded per-cent-value frame, then windows on the
     matrix. Output: 1 row (n_a, n_b, u2_a, u2_b, auc_ppm)."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    per_v = (
-        ev.selectExpr(
-            "cast(round(value * 100) as bigint) as cents",
-            f"IF({_wkend_sql(SPARK)}, 1L, 0L) as is_b",
-        )
-        .groupBy("cents")
-        .agg(
-            F.sum(F.expr("1 - is_b")).cast("long").alias("na"),
-            F.sum("is_b").cast("long").alias("nb"),
-        )
-    )
+    per_v = _cents_arm_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     ranked = per_v.select(
         "na",
@@ -744,13 +710,7 @@ def ab_mannwhitney_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mwu_sql(d: Dialect) -> str:
     return f"""
-WITH per_v AS (
-    SELECT CAST(round(value * 100) AS BIGINT) AS cents,
-           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 0 ELSE 1 END) AS BIGINT) AS na,
-           CAST(SUM(CASE WHEN {_wkend_sql(d)} THEN 1 ELSE 0 END) AS BIGINT) AS nb
-    FROM events WHERE event_type = 'purchase'
-    GROUP BY 1
-),
+WITH {_cents_arm_counts_sql(d)},
 ranked AS (
     SELECT na, nb,
            2 * COALESCE(SUM(na + nb) OVER (ORDER BY cents

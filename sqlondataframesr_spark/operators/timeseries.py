@@ -121,6 +121,18 @@ def evt_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 ACF_LAGS = 7
 
 
+def _daily_purchase_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, x): the daily purchase-cents series."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type") == "purchase"
+    )
+    return (
+        ev.select(F.to_date("ts").alias("day"), F.expr(_CENTS).alias("cents"))
+        .groupBy("day")
+        .agg(F.sum("cents").cast("long").alias("x"))
+    )
+
+
 def evt_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the daily purchase-revenue series at lags
     1..ACF_LAGS, in exact integer ppm — the seasonality probe a
@@ -139,14 +151,7 @@ def evt_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     a century) — a constant w.r.t. data volume, so the subsequent
     ordered window + lag self-join run on a broadcast-sized frame.
     Output: (lag, n_pairs, num, acf_ppm) ordered by lag."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    daily = (
-        ev.select(F.to_date("ts").alias("day"), F.expr(_CENTS).alias("cents"))
-        .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-    )
+    daily = _daily_purchase_cents(spark, sf_dir)
     stats = daily.agg(
         F.sum("x").cast("long").alias("s"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -213,14 +218,7 @@ def evt_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ml_ols_trend's Σy².
 
     Output: (day, x_cents, n_terms, ewma_cents) ordered by day."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type") == "purchase"
-    )
-    daily = (
-        ev.select(F.to_date("ts").alias("day"), F.expr(_CENTS).alias("cents"))
-        .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-    )
+    daily = _daily_purchase_cents(spark, sf_dir)
     idx = daily.withColumn("t", F.row_number().over(Window.orderBy("day")))
     lags = spark.range(0, EWMA_W).select(F.col("id").cast("int").alias("k"))
     a = idx.select("day", F.col("x"), F.col("t").alias("ta"))

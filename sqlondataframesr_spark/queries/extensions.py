@@ -182,10 +182,9 @@ ORDER BY l_returnflag
 """
 
 
-def q12_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nations having BOTH a rich customer and a rich supplier —
-    INTERSECT (distinct semantics; lowers to an aggregate + semi
-    join)."""
+def _rich_nationkeys(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(rich_c, rich_s): the nationkey of every customer and of every
+    supplier with an account balance above RICH_BAL."""
     rich_c = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > RICH_BAL)
@@ -196,6 +195,14 @@ def q12_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("s_acctbal") > RICH_BAL)
         .select(F.col("s_nationkey").alias("nationkey"))
     )
+    return rich_c, rich_s
+
+
+def q12_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nations having BOTH a rich customer and a rich supplier —
+    INTERSECT (distinct semantics; lowers to an aggregate + semi
+    join)."""
+    rich_c, rich_s = _rich_nationkeys(spark, sf_dir)
     return rich_c.intersect(rich_s).orderBy("nationkey")
 
 
@@ -209,16 +216,7 @@ ORDER BY nationkey
 
 def q13_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nations with a rich customer but NO rich supplier — EXCEPT."""
-    rich_c = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > RICH_BAL)
-        .select(F.col("c_nationkey").alias("nationkey"))
-    )
-    rich_s = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") > RICH_BAL)
-        .select(F.col("s_nationkey").alias("nationkey"))
-    )
+    rich_c, rich_s = _rich_nationkeys(spark, sf_dir)
     # subtract == SQL EXCEPT (distinct semantics); exceptAll would be
     # bag-difference and leak duplicated left values past the filter
     return rich_c.subtract(rich_s).orderBy("nationkey")
@@ -1260,6 +1258,16 @@ def q32_unpivot_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: min/max/mean of each ``melted`` metric: the tail of q32's oracle and dual
+_MELTED_STATS = f"""       {r6_sql('min(value)')} AS min_v,
+       {r6_sql('max(value)')} AS max_v,
+       {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_v
+FROM melted
+GROUP BY metric
+ORDER BY metric
+"""
+
+
 Q32_ORACLE = f"""
 WITH melted AS (
   SELECT 'l_quantity' AS metric, l_quantity AS value FROM lineitem
@@ -1270,13 +1278,7 @@ WITH melted AS (
 SELECT metric,
        CAST(count(*) AS BIGINT) AS n_rows,
        CAST(count(DISTINCT value) AS BIGINT) AS n_distinct,
-       {r6_sql('min(value)')} AS min_v,
-       {r6_sql('max(value)')} AS max_v,
-       {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_v
-FROM melted
-GROUP BY metric
-ORDER BY metric
-"""
+{_MELTED_STATS}"""
 
 
 def q33_gapfill_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1900,13 +1902,7 @@ WITH melted AS (
 SELECT metric,
        count(*) AS n_rows,
        count(DISTINCT value) AS n_distinct,
-       {r6_sql('min(value)')} AS min_v,
-       {r6_sql('max(value)')} AS max_v,
-       {r6_sql('CAST(sum(CAST(round(value * 1e6) AS BIGINT)) AS DOUBLE) / count(*) / 1e6')} AS avg_v
-FROM melted
-GROUP BY metric
-ORDER BY metric
-"""),
+{_MELTED_STATS}"""),
     # deliberate dual: Spark cannot cast a generator inline, so the
     # date spine is a LATERAL VIEW over sequence(), and the fill is
     # last(v, true) where the oracle counts non-null islands

@@ -36,10 +36,12 @@ are identical across engines and across restarts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..catalog import canonicalize_ts, load_table
 from ..functions.dialect import DUCK, SPARK, Dialect, dual
+from ..operators.timeseries import OHLC_ORACLE
+from ..operators.sketches import cms_bucket_sql, cms_depth_axis, cms_depth_sql
 
 TUMBLE_WIDTH = "1 day"
 SLIDE_WIDTH = "1 day"
@@ -105,19 +107,24 @@ def with_watermark(events: DataFrame, delay: str = WATERMARK_DELAY) -> DataFrame
     return events.withWatermark("ts", delay)
 
 
+def _count_and_total() -> list[Column]:
+    """n_events and total_value: every window aggregate's two columns."""
+    return [
+        F.count(F.lit(1)).alias("n_events"),
+        # exact bigint cent sum (value is cent-valued) — the raw
+        # double SUM is summation-order-nondeterministic cross-engine
+        F.round(
+            F.sum(F.expr("cast(round(value * 100) as bigint)"))
+            .cast("double") / F.lit(100.0), 2
+        ).alias("total_value"),
+    ]
+
+
 def tumbling(events: DataFrame, width: str = TUMBLE_WIDTH) -> DataFrame:
     """Fixed event-time windows x event_type: count + total value."""
     return (
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact bigint cent sum (value is cent-valued) — the raw
-            # double SUM is summation-order-nondeterministic cross-engine
-            F.round(
-                F.sum(F.expr("cast(round(value * 100) as bigint)"))
-                .cast("double") / F.lit(100.0), 2
-            ).alias("total_value"),
-        )
+        .agg(*_count_and_total())
         .select(
             F.col("w.start").alias("ws"),
             "event_type",
@@ -133,15 +140,7 @@ def sliding(
     """Overlapping windows (width 1d, step 12h → 2 windows/event)."""
     return (
         events.groupBy(F.window("ts", width, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact bigint cent sum (value is cent-valued) — the raw
-            # double SUM is summation-order-nondeterministic cross-engine
-            F.round(
-                F.sum(F.expr("cast(round(value * 100) as bigint)"))
-                .cast("double") / F.lit(100.0), 2
-            ).alias("total_value"),
-        )
+        .agg(*_count_and_total())
         .select(F.col("w.start").alias("ws"), "n_events", "total_value")
     )
 
@@ -151,15 +150,7 @@ def sessionized(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
     session end = last event ts + gap (Spark's half-open semantics)."""
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact bigint cent sum (value is cent-valued) — the raw
-            # double SUM is summation-order-nondeterministic cross-engine
-            F.round(
-                F.sum(F.expr("cast(round(value * 100) as bigint)"))
-                .cast("double") / F.lit(100.0), 2
-            ).alias("total_value"),
-        )
+        .agg(*_count_and_total())
         .select(
             "user_id",
             F.col("w.start").alias("session_start"),
@@ -265,15 +256,7 @@ def enriched_by_segment(
     return (
         events.join(dim, "user_id")
         .groupBy(F.window("ts", width).alias("w"), "c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # exact bigint cent sum (value is cent-valued) — the raw
-            # double SUM is summation-order-nondeterministic cross-engine
-            F.round(
-                F.sum(F.expr("cast(round(value * 100) as bigint)"))
-                .cast("double") / F.lit(100.0), 2
-            ).alias("total_value"),
-        )
+        .agg(*_count_and_total())
         .select(
             F.col("w.start").alias("ws"),
             F.col("c_mktsegment").alias("segment"),
@@ -284,6 +267,29 @@ def enriched_by_segment(
 
 
 JOIN_HORIZON = "2 hours"
+
+
+def _clicks_join_purchases(events: DataFrame, how: str) -> DataFrame:
+    """Clicks (click_id, c_user, click_ts) joined ``how`` to the same
+    user's purchases (purchase_id, p_user, purchase_ts) inside
+    [click, click + JOIN_HORIZON)."""
+    c = events.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("click_ts"),
+    )
+    p = events.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+    )
+    return c.join(
+        p,
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}")),
+        how,
+    )
 
 
 def click_purchase_pairs(events: DataFrame) -> DataFrame:
@@ -303,22 +309,7 @@ def click_purchase_pairs(events: DataFrame) -> DataFrame:
     residual predicate — one shuffle per side; per-user in-horizon
     density bounds the output, AQE handles hot users.
     """
-    c = events.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}")),
-    ).select(
+    return _clicks_join_purchases(events, "inner").select(
         F.col("c_user").alias("user_id"),
         "click_id",
         "purchase_id",
@@ -470,23 +461,7 @@ def click_purchase_left(events: DataFrame) -> DataFrame:
     plus the watermark evicts click state at watermark - 2h; without
     them outer state is unbounded.
     """
-    c = events.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr(f"INTERVAL {JOIN_HORIZON}")),
-        "left_outer",
-    ).select(
+    return _clicks_join_purchases(events, "left_outer").select(
         F.col("c_user").alias("user_id"),
         "click_id",
         "click_ts",
@@ -560,16 +535,6 @@ def evt_ohlc_candles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ohlc_candles(load_table(spark, sf_dir, "events")).orderBy("hour")
 
 
-#: count-min geometry for the streaming heavy-hitter sketch — shared
-#: with operators/sketches.py's corpus CMS (same md5 hash family)
-CMS_STREAM_DEPTH = 4
-CMS_STREAM_WIDTH = 1024
-
-#: the depth axis as a SQL literal — interpolated into the CMS duals so
-#: a geometry change can never desync them from the fluent path
-_CMS_J_ARRAY = "array(" + ", ".join(str(i) for i in range(CMS_STREAM_DEPTH)) + ")"
-
-
 def cms_user_cells(events: DataFrame) -> DataFrame:
     """Per-day count-min sketch cells over the USER stream — the
     top-talker / heavy-hitter sketch a stream processor keeps instead
@@ -580,7 +545,7 @@ def cms_user_cells(events: DataFrame) -> DataFrame:
 
     Deterministic: md5 buckets (the sketches.py contract), so batch,
     stream, and the DuckDB oracle agree bit-for-bit."""
-    js = F.array(*[F.lit(i) for i in range(CMS_STREAM_DEPTH)])
+    js = cms_depth_axis()
     return (
         events.select(F.col("ts"), F.col("user_id"))
         .withColumn("j", F.explode(js))
@@ -634,7 +599,7 @@ def evt_cms_user_merge_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = exact.orderBy(F.desc("exact_cnt"), "user_id").limit(CMS_USER_TOP)
     w = Window.orderBy(F.desc("exact_cnt"), "user_id")
     top = top.withColumn("rnk", F.row_number().over(w))
-    js = F.array(*[F.lit(i) for i in range(CMS_STREAM_DEPTH)])
+    js = cms_depth_axis()
     probes = top.withColumn("j", F.explode(js)).withColumn(
         "bucket", F.expr(_cms_user_bucket_sql(SPARK))
     )
@@ -654,17 +619,15 @@ def evt_cms_user_merge_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cms_user_bucket_sql(d: Dialect) -> str:
-    """The count-min bucket of ``user_id`` in row ``j`` (non-negative
-    hash: ``%`` is ``pmod``)."""
-    key = f"{d.cast_str('j')} || ':' || {d.cast_str('user_id')}"
-    return f"({d.hex_bigint(f'substr(md5({key}), 1, 13)')} % {CMS_STREAM_WIDTH})"
+    """The count-min bucket of ``user_id`` in row ``j``."""
+    return cms_bucket_sql(d, d.cast_str("user_id"))
 
 
 def _cms_daily_cells_sql(d: Dialect) -> str:
     return f"""
 WITH stream AS (
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day, user_id, j.j
-    FROM events CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+    FROM events CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 )
 SELECT day, j, {_cms_user_bucket_sql(d)} AS bucket,
        CAST(COUNT(*) AS BIGINT) AS cell_cnt
@@ -680,7 +643,7 @@ def _cms_user_merge_sql(d: Dialect) -> str:
     return f"""
 WITH stream AS (
     SELECT user_id, j.j
-    FROM events CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+    FROM events CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 ),
 merged AS (
     SELECT j, {_cms_user_bucket_sql(d)} AS bucket,
@@ -697,7 +660,7 @@ top AS (
 probes AS (
     SELECT t.user_id, t.exact_cnt, t.rnk, j.j,
            {_cms_user_bucket_sql(d)} AS bucket
-    FROM top t CROSS JOIN (SELECT {d.fn('unnest', d.list('0, 1, 2, 3'))} AS j) j
+    FROM top t CROSS JOIN (SELECT {d.fn('unnest', cms_depth_sql(d))} AS j) j
 )
 SELECT p.user_id, p.exact_cnt,
        MIN(c.cell_cnt) AS cms_cnt,
@@ -706,34 +669,6 @@ SELECT p.user_id, p.exact_cnt,
 FROM probes p JOIN merged c ON p.j = c.j AND p.bucket = c.bucket
 GROUP BY p.user_id, p.exact_cnt, p.rnk
 ORDER BY p.rnk
-"""
-
-
-# same result contract as operators/timeseries.evt_ohlc_hourly — the
-# differential proves the min_by strategy ≡ the row_number strategy
-EVT_OHLC_CANDLES_ORACLE = """
-WITH obs AS (
-    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
-           ts, event_id,
-           CAST(round(value * 100) AS BIGINT) AS cents
-    FROM events
-    WHERE event_type = 'purchase'
-),
-marked AS (
-    SELECT hour, cents,
-           ROW_NUMBER() OVER (PARTITION BY hour ORDER BY ts, event_id) AS rn,
-           COUNT(*) OVER (PARTITION BY hour) AS n_in
-    FROM obs
-)
-SELECT hour,
-       MAX(CASE WHEN rn = 1 THEN cents END) AS open_cents,
-       MAX(cents) AS high_cents,
-       MIN(cents) AS low_cents,
-       MAX(CASE WHEN rn = n_in THEN cents END) AS close_cents,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM marked
-GROUP BY hour
-ORDER BY hour
 """
 
 
@@ -757,7 +692,10 @@ TEMPLATES = {
     # session_window(...), min_by/max_by endpoints) against the oracles'
     # date_trunc / row_number forms, so the check proves the windowed
     # aggregation the streaming plans run ≡ the batch arithmetic.
-    "evt_ohlc_candles": dual(EVT_OHLC_CANDLES_ORACLE, """
+    # evt_ohlc_candles shares operators/timeseries.evt_ohlc_hourly's
+    # oracle: the differential proves the min_by strategy ≡ the
+    # row_number strategy
+    "evt_ohlc_candles": dual(OHLC_ORACLE, """
 SELECT w.window.start AS hour, w.open_cents, w.high_cents, w.low_cents,
        w.close_cents, w.n_events
 FROM (
@@ -818,12 +756,12 @@ FROM (
 ) w
 ORDER BY user_id, session_start
 """),
-    "evt_cms_daily_cells": dual(_cms_daily_cells_sql(DUCK), f"""
+    "evt_cms_daily_cells": dual(lambda: _cms_daily_cells_sql(DUCK), lambda: f"""
 SELECT CAST(w.window.start AS DATE) AS day, w.j, w.bucket, w.cell_cnt
 FROM (
   SELECT window, j, {_cms_user_bucket_sql(SPARK)} AS bucket,
          CAST(COUNT(1) AS BIGINT) AS cell_cnt
-  FROM (SELECT ts, user_id, explode({_CMS_J_ARRAY}) AS j FROM events)
+  FROM (SELECT ts, user_id, explode({cms_depth_sql(SPARK)}) AS j FROM events)
   GROUP BY window(ts, '1 day'), j, {_cms_user_bucket_sql(SPARK)}
 ) w
 ORDER BY day, j, bucket

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from sqlondataframesr_spark.session import get_spark
@@ -21,6 +23,29 @@ def _release_pinned():
 
     yield
     release_all()
+
+
+@pytest.fixture(scope="session")
+def plant_tables(spark):
+    """``with plant_tables(sf_dir, events=df): ...`` serves each given
+    frame as ``catalog.load_table(spark, str(sf_dir), name)`` — the
+    loader's first lookup is its table cache — and removes them all
+    when the block exits. Session-scoped, so a hypothesis ``@given``
+    body can plant a fresh corpus per example."""
+    from sqlondataframesr_spark import catalog
+
+    @contextmanager
+    def plant(sf_dir, **tables):
+        app = spark.sparkContext.applicationId
+        keys = [(app, str(sf_dir), name) for name in tables]
+        catalog._table_cache.update(zip(keys, tables.values()))
+        try:
+            yield str(sf_dir)
+        finally:
+            for key in keys:
+                catalog._table_cache.pop(key, None)
+
+    return plant
 
 
 @pytest.fixture(scope="session")

@@ -72,27 +72,18 @@ EMPTY_SF = "_empty_fixture"
 
 
 @pytest.fixture()
-def empty_loader(spark):
-    """Serve zero-row frames for the EMPTY_SF pseudo-dir by seeding
-    catalog._table_cache — the loader's first lookup — instead of
-    monkeypatching every module's imported load_table binding (which
-    is leak-prone across modules imported mid-battery)."""
-    import sqlondataframesr_spark.catalog as C
-
+def empty_loader(spark, plant_tables):
+    """Serve zero-row frames for the EMPTY_SF pseudo-dir through the
+    loader's table cache (``plant_tables``) instead of monkeypatching
+    every module's imported load_table binding (which is leak-prone
+    across modules imported mid-battery)."""
     spec = importlib.util.spec_from_file_location(
         "empty_sweep", os.path.join(ROOT, "scripts", "empty_sweep.py")
     )
     empty_sweep = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(empty_sweep)
-    app = spark.sparkContext.applicationId
-    keys = []
-    for name, df in empty_sweep.empty_tables(spark).items():
-        k = (app, EMPTY_SF, name)
-        C._table_cache[k] = df
-        keys.append(k)
-    yield
-    for k in keys:
-        C._table_cache.pop(k, None)
+    with plant_tables(EMPTY_SF, **empty_sweep.empty_tables(spark)):
+        yield
 
 
 @pytest.mark.parametrize("name", BATTERY)

@@ -11,8 +11,6 @@ from __future__ import annotations
 import datetime as dt
 import math
 
-import sqlondataframesr_spark.catalog as C
-
 EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
     " value double, props string"
@@ -28,21 +26,10 @@ ORD_SCHEMA = (
 NAT_SCHEMA = "n_nationkey int, n_name string, n_regionkey int"
 
 
-def _inject(spark, tmp_path, table, df):
-    key = (spark.sparkContext.applicationId, str(tmp_path), table)
-    C._table_cache[key] = df
-    return key
-
-
-def _cleanup(keys):
-    for key in keys:
-        C._table_cache.pop(key, None)
-
-
 # ---------------------------------------------------------------- SCD2
 
 
-def test_scd2_designed_runs(spark, tmp_path):
+def test_scd2_designed_runs(spark, tmp_path, plant_tables):
     """User 1 types [A, A, B, A] at minutes 0..3 -> versions A(2 ev,
     closed 2 min), B(1 ev, closed 1 min), A(1 ev, open). User 2 has a
     single open version. Durations in exact microseconds."""
@@ -57,15 +44,12 @@ def test_scd2_designed_runs(spark, tmp_path):
         (3, t0 + 3 * m, 1, "A", 1.0, "{}"),
         (4, t0, 2, "B", 1.0, "{}"),
     ]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         summary = {
             r.event_type: (r.n_versions, r.n_current, r.total_closed_us, r.max_closed_us)
             for r in scd.cdc_scd2_summary(spark, str(tmp_path)).collect()
         }
         top = scd.cdc_scd2_top_versions(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     min_us = 60_000_000
     # A: closed v1 spans minute 0 -> minute 2 (2 min), open v3
     assert summary["A"] == (2, 1, 2 * min_us, 2 * min_us)
@@ -93,7 +77,7 @@ def test_scd2_real_invariants(spark, sf_dir):
 # ------------------------------------------------------------ ER / CF
 
 
-def test_er_pairs_designed(spark, tmp_path):
+def test_er_pairs_designed(spark, tmp_path, plant_tables):
     """Names at distance 1 inside one block match; identical names in
     DIFFERENT blocks never pair (blocking is the contract); distance
     3 is filtered."""
@@ -105,20 +89,15 @@ def test_er_pairs_designed(spark, tmp_path):
         (3, "Customer#000000001", 2, 0.0, "SEG_A"),  # other block
         (4, "Customer#000000999", 1, 0.0, "SEG_A"),  # dist 3 to #1
     ]
-    key = _inject(
-        spark, tmp_path, "customer", spark.createDataFrame(rows, CUST_SCHEMA)
-    )
-    try:
+    with plant_tables(tmp_path, customer=spark.createDataFrame(rows, CUST_SCHEMA)):
         got = [
             (r.custkey_a, r.custkey_b, r.name_distance)
             for r in er.er_customer_pairs(spark, str(tmp_path)).collect()
         ]
-    finally:
-        _cleanup([key])
     assert got == [(1, 2, 1)]
 
 
-def test_rec_item_cosine_designed(spark, tmp_path):
+def test_rec_item_cosine_designed(spark, tmp_path, plant_tables):
     """u1: {a:1, b:2}, u2: {a:2, b:1} -> dot = 1*2 + 2*1 = 4,
     |a|² = 5, |b|² = 5, cosine = 4/5 exactly."""
     from sqlondataframesr_spark.operators import er
@@ -131,11 +110,8 @@ def test_rec_item_cosine_designed(spark, tmp_path):
             for _ in range(n):
                 rows.append((eid, t0, user, etype, 1.0, "{}"))
                 eid += 1
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = er.rec_item_cosine(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     assert len(got) == 1
     r = got[0]
     assert (r.item_a, r.item_b, r.dot) == ("a", "b", 4)
@@ -146,7 +122,7 @@ def test_rec_item_cosine_designed(spark, tmp_path):
 # ---------------------------------------------------------- stats ops
 
 
-def test_ols_trend_designed(spark, tmp_path):
+def test_ols_trend_designed(spark, tmp_path, plant_tables):
     """Revenue exactly linear in month (100, 200, 300 dollars in
     months 0, 1, 2) -> slope 100, intercept 100, r² == 1.0."""
     from sqlondataframesr_spark.operators import stats
@@ -161,15 +137,8 @@ def test_ols_trend_designed(spark, tmp_path):
         ],
         ORD_SCHEMA,
     )
-    keys = [
-        _inject(spark, tmp_path, "customer", cust),
-        _inject(spark, tmp_path, "nation", nat),
-        _inject(spark, tmp_path, "orders", orders),
-    ]
-    try:
+    with plant_tables(tmp_path, customer=cust, nation=nat, orders=orders):
         rows = stats.ml_ols_trend(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup(keys)
     assert len(rows) == 1
     r = rows[0]
     assert r.n_months == 3
@@ -178,7 +147,7 @@ def test_ols_trend_designed(spark, tmp_path):
     assert r.r2 == 1.0
 
 
-def test_ab_ztest_designed(spark, tmp_path):
+def test_ab_ztest_designed(spark, tmp_path, plant_tables):
     """4 control users (even ids) all convert, 4 treatment users (odd
     ids) none convert: p_pool = 1/2, z = -1 / sqrt(0.25 * 0.5)."""
     from sqlondataframesr_spark.operators import stats
@@ -192,11 +161,8 @@ def test_ab_ztest_designed(spark, tmp_path):
     for uid in [1, 3, 5, 7]:  # treatment: cheap purchase only
         rows.append((eid, t0, uid, "purchase", 10.0, "{}"))
         eid += 1
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         r = stats.ab_conversion_ztest(spark, str(tmp_path)).collect()[0]
-    finally:
-        _cleanup([key])
     assert (r.n_control, r.conv_control, r.n_treat, r.conv_treat) == (4, 4, 4, 0)
     assert r.conv_control_ppm == 1_000_000
     assert r.conv_treat_ppm == 0
@@ -205,7 +171,7 @@ def test_ab_ztest_designed(spark, tmp_path):
     assert r.z_score == expected_z
 
 
-def test_ab_ztest_degenerate_rates_yield_null(spark, tmp_path):
+def test_ab_ztest_degenerate_rates_yield_null(spark, tmp_path, plant_tables):
     """Pooled rate exactly 1 (everyone converts) -> z is NULL, not an
     ANSI divide-by-zero (the sf0.001 regression that motivated the
     nullif guard)."""
@@ -213,15 +179,12 @@ def test_ab_ztest_degenerate_rates_yield_null(spark, tmp_path):
 
     t0 = dt.datetime(2024, 3, 1)
     rows = [(i, t0, i + 1, "purchase", 200.0, "{}") for i in range(4)]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         r = stats.ab_conversion_ztest(spark, str(tmp_path)).collect()[0]
-    finally:
-        _cleanup([key])
     assert r.z_score is None
 
 
-def test_mad_spikes_designed(spark, tmp_path):
+def test_mad_spikes_designed(spark, tmp_path, plant_tables):
     """Ten flat days at $1 plus one $10 day: median 100c, MAD 0 ->
     only the $10 day deviates by more than 2*MAD."""
     from sqlondataframesr_spark.operators import stats
@@ -231,11 +194,8 @@ def test_mad_spikes_designed(spark, tmp_path):
     rows = [(i, t0 + i * day, 1, "purchase", 1.0, "{}") for i in range(10)]
     rows.append((10, t0 + 10 * day, 1, "purchase", 10.0, "{}"))
     rows.append((11, t0, 2, "view", 500.0, "{}"))  # non-purchase: ignored
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = stats.evt_mad_spikes(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     assert [(r.day, r.cents, r.med_cents, r.mad_cents, r.abs_dev) for r in got] == [
         (dt.date(2024, 3, 11), 1000, 100, 0, 900)
     ]
@@ -244,7 +204,7 @@ def test_mad_spikes_designed(spark, tmp_path):
 # ------------------------------------------------------------------ KM
 
 
-def test_km_designed_curve(spark, tmp_path):
+def test_km_designed_curve(spark, tmp_path, plant_tables):
     """3 customers, one segment: churn at t=1 (n=3), churn at t=2
     (n=2), one censored far later. S = 666666 then 333333 ppm — the
     exact truncating-integer recurrence."""
@@ -265,14 +225,8 @@ def test_km_designed_curve(spark, tmp_path):
         ],
         ORD_SCHEMA,
     )
-    keys = [
-        _inject(spark, tmp_path, "customer", cust),
-        _inject(spark, tmp_path, "orders", orders),
-    ]
-    try:
+    with plant_tables(tmp_path, customer=cust, orders=orders):
         rows = survival.km_survival_curve(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup(keys)
     got = [(r.duration_days, r.n_at_risk, r.d_events, r.survival_ppm) for r in rows]
     assert got == [(1, 3, 1, 666666), (2, 2, 1, 333333)]
 
@@ -298,7 +252,7 @@ def test_km_real_data_monotone(spark, sf_dir):
 # ----------------------------------------------------------- forensics
 
 
-def test_trigrams_designed(spark, tmp_path):
+def test_trigrams_designed(spark, tmp_path, plant_tables):
     """User chain [a, b, a, b] -> trigrams (a,b,a) and (b,a,b) once
     each; a two-event user contributes nothing."""
     from sqlondataframesr_spark.operators import forensics
@@ -308,18 +262,15 @@ def test_trigrams_designed(spark, tmp_path):
     seq = ["a", "b", "a", "b"]
     rows = [(i, t0 + i * m, 1, seq[i], 1.0, "{}") for i in range(4)]
     rows += [(10, t0, 2, "a", 1.0, "{}"), (11, t0 + m, 2, "b", 1.0, "{}")]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = [
             (r.t1, r.t2, r.t3, r.n)
             for r in forensics.evt_type_trigrams(spark, str(tmp_path)).collect()
         ]
-    finally:
-        _cleanup([key])
     assert got == [("a", "b", "a", 1), ("b", "a", "b", 1)]
 
 
-def test_benford_designed(spark, tmp_path):
+def test_benford_designed(spark, tmp_path, plant_tables):
     """Prices 100, 200, 200 -> digit 1 once, digit 2 twice, all nine
     digit rows present, chi2 built from the literal Benford constants."""
     from sqlondataframesr_spark.operators import forensics
@@ -332,11 +283,8 @@ def test_benford_designed(spark, tmp_path):
         ],
         ORD_SCHEMA,
     )
-    key = _inject(spark, tmp_path, "orders", orders)
-    try:
+    with plant_tables(tmp_path, orders=orders):
         rows = forensics.dq_benford_digits(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     assert [r.digit for r in rows] == list(range(1, 10))
     by_digit = {r.digit: r for r in rows}
     assert by_digit[1].n_obs == 1
@@ -358,7 +306,7 @@ def test_benford_chi2_nonnegative_real(spark, sf_dir):
     assert sum(r.n_obs for r in rows) == rows[0].n_total
 
 
-def test_cusum_designed_shift(spark, tmp_path):
+def test_cusum_designed_shift(spark, tmp_path, plant_tables):
     """Five days at $1 then five at $2: median is the lower median
     (100c), so cusum_pos stays 0 through the flat prefix and ramps
     100c/day after the level shift."""
@@ -368,18 +316,15 @@ def test_cusum_designed_shift(spark, tmp_path):
     day = dt.timedelta(days=1)
     rows = [(i, t0 + i * day, 1, "purchase", 1.0, "{}") for i in range(5)]
     rows += [(5 + i, t0 + (5 + i) * day, 1, "purchase", 2.0, "{}") for i in range(5)]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = [
             (r.cents, r.cusum_pos)
             for r in stats.evt_cusum_shifts(spark, str(tmp_path)).collect()
         ]
-    finally:
-        _cleanup([key])
     assert got == [(100, 0)] * 5 + [(200, 100 * (i + 1)) for i in range(5)]
 
 
-def test_discount_corr_designed(spark, tmp_path):
+def test_discount_corr_designed(spark, tmp_path, plant_tables):
     """One brand with quantity exactly linear in discount -> corr is
     num / (sqrt(dx) * sqrt(dy)) of the exact integer sums (== 1 up to
     the mirrored IEEE expression); a constant-discount brand has a
@@ -407,14 +352,8 @@ def test_discount_corr_designed(spark, tmp_path):
         (4, 2, 1, 1, 10.0, 1.0, 0.05, 0.0, "N", "O", t),
         (5, 2, 1, 1, 20.0, 1.0, 0.05, 0.0, "N", "O", t),
     ]
-    keys = [
-        _inject(spark, tmp_path, "part", part),
-        _inject(spark, tmp_path, "lineitem", spark.createDataFrame(rows, li_schema)),
-    ]
-    try:
+    with plant_tables(tmp_path, part=part, lineitem=spark.createDataFrame(rows, li_schema)):
         got = {r.p_brand: r for r in stats.ml_discount_qty_corr(spark, str(tmp_path)).collect()}
-    finally:
-        _cleanup(keys)
     # LIN sums: n=3 sx=6 sy=60 sxy=140 sxx=14 syy=1400
     num = 3 * 140 - 6 * 60
     dx, dy = 3 * 14 - 36, 3 * 1400 - 3600
@@ -422,7 +361,7 @@ def test_discount_corr_designed(spark, tmp_path):
     assert got["BRAND_FLAT"].corr is None
 
 
-def test_er_entity_clusters_designed(spark, tmp_path):
+def test_er_entity_clusters_designed(spark, tmp_path, plant_tables):
     """Chain 1-2 (dist 1) and 2-3 (dist 1) with 1-3 at dist 2: one
     entity {1,2,3} labeled by min key; an unmatched customer stays a
     singleton; blocking still separates identical names."""
@@ -435,16 +374,11 @@ def test_er_entity_clusters_designed(spark, tmp_path):
         (4, "Customer#000000999", 1, 0.0, "SEG_A"),  # distance 3+ to all
         (5, "Customer#000000001", 2, 0.0, "SEG_A"),  # other block
     ]
-    key = _inject(
-        spark, tmp_path, "customer", spark.createDataFrame(rows, CUST_SCHEMA)
-    )
-    try:
+    with plant_tables(tmp_path, customer=spark.createDataFrame(rows, CUST_SCHEMA)):
         got = {
             r.custkey: (r.entity_id, r.entity_size)
             for r in er.er_entity_clusters(spark, str(tmp_path)).collect()
         }
-    finally:
-        _cleanup([key])
     assert got == {
         1: (1, 3),
         2: (1, 3),
@@ -457,7 +391,7 @@ def test_er_entity_clusters_designed(spark, tmp_path):
 # ----------------------------------------------------------- timeseries
 
 
-def test_twap_designed(spark, tmp_path):
+def test_twap_designed(spark, tmp_path, plant_tables):
     """One day, two observations: $1 at 00:00 held for 6h, $3 at 06:00
     held to midnight (18h): twap = (100*6 + 300*18)/24 = 250 cents —
     far from the unweighted mean of 200."""
@@ -469,11 +403,8 @@ def test_twap_designed(spark, tmp_path):
         (2, d0 + dt.timedelta(hours=6), 1, "purchase", 3.0, "{}"),
         (3, d0, 1, "view", 99.0, "{}"),  # non-purchase: ignored
     ]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = timeseries.evt_time_weighted_avg(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     assert len(got) == 1
     r = got[0]
     h_ms = 3_600_000
@@ -482,7 +413,7 @@ def test_twap_designed(spark, tmp_path):
     assert r.twap_cents == 250
 
 
-def test_ohlc_designed(spark, tmp_path):
+def test_ohlc_designed(spark, tmp_path, plant_tables):
     """One hour with values 2, 9, 1, 5 in time order -> open 200,
     high 900, low 100, close 500; a same-timestamp tie at the close
     breaks on event_id."""
@@ -497,11 +428,8 @@ def test_ohlc_designed(spark, tmp_path):
         (4, h0 + 3 * m, 1, "purchase", 7.0, "{}"),
         (5, h0 + 3 * m, 1, "purchase", 5.0, "{}"),  # same ts: id 5 > 4 wins close
     ]
-    key = _inject(spark, tmp_path, "events", spark.createDataFrame(rows, EV_SCHEMA))
-    try:
+    with plant_tables(tmp_path, events=spark.createDataFrame(rows, EV_SCHEMA)):
         got = timeseries.evt_ohlc_hourly(spark, str(tmp_path)).collect()
-    finally:
-        _cleanup([key])
     assert len(got) == 1
     r = got[0]
     assert (r.open_cents, r.high_cents, r.low_cents, r.close_cents, r.n_events) == (
@@ -522,7 +450,7 @@ def _mk_events(spark, rows):
     )
 
 
-def test_ks_identical_distributions_is_zero(spark, tmp_path):
+def test_ks_identical_distributions_is_zero(spark, tmp_path, plant_tables):
     """Same purchase values on a weekday (Mon 2024-01-01) and a
     weekend (Sat 2024-01-06): every cum difference cancels -> D = 0."""
     from sqlondataframesr_spark.operators import stats
@@ -531,47 +459,38 @@ def test_ks_identical_distributions_is_zero(spark, tmp_path):
     for v in (10.0, 20.0, 30.0):
         rows.append(("2024-01-01 10:00:00", 1, "purchase", v))
         rows.append(("2024-01-06 10:00:00", 2, "purchase", v))
-    keys = [_inject(spark, tmp_path, "events", _mk_events(spark, rows))]
-    try:
+    with plant_tables(tmp_path, events=_mk_events(spark, rows)):
         r = stats.dq_ks_statistic(spark, str(tmp_path)).collect()[0]
         assert (r.n_a, r.n_b) == (3, 3)
         assert r.d_num == 0
         assert r.ks_ppm == 0 or r.ks_ppm is None  # 9 div 1e6 = 0 -> NULL
-    finally:
-        _cleanup(keys)
 
 
-def test_ks_disjoint_distributions_is_full(spark, tmp_path):
+def test_ks_disjoint_distributions_is_full(spark, tmp_path, plant_tables):
     """All weekday values strictly below all weekend values: at the
     crossover D = 1, so d_num = nA*nB exactly."""
     from sqlondataframesr_spark.operators import stats
 
     rows = [("2024-01-01 10:00:00", 1, "purchase", float(v)) for v in (1, 2, 3)]
     rows += [("2024-01-06 10:00:00", 2, "purchase", float(v)) for v in (9, 10)]
-    keys = [_inject(spark, tmp_path, "events", _mk_events(spark, rows))]
-    try:
+    with plant_tables(tmp_path, events=_mk_events(spark, rows)):
         r = stats.dq_ks_statistic(spark, str(tmp_path)).collect()[0]
         assert (r.n_a, r.n_b, r.n_points) == (3, 2, 5)
         assert r.d_num == 3 * 2
-    finally:
-        _cleanup(keys)
 
 
-def test_mwu_conservation_and_designed_auc(spark, tmp_path):
+def test_mwu_conservation_and_designed_auc(spark, tmp_path, plant_tables):
     """u2_a + u2_b == 2*nA*nB always; with every weekday value below
     every weekend value, U_A = 0 (A never wins)."""
     from sqlondataframesr_spark.operators import stats
 
     rows = [("2024-01-01 10:00:00", 1, "purchase", float(v)) for v in (1, 2)]
     rows += [("2024-01-06 10:00:00", 2, "purchase", float(v)) for v in (8, 9)]
-    keys = [_inject(spark, tmp_path, "events", _mk_events(spark, rows))]
-    try:
+    with plant_tables(tmp_path, events=_mk_events(spark, rows)):
         r = stats.ab_mannwhitney_auc(spark, str(tmp_path)).collect()[0]
         assert r.u2_a + r.u2_b == 2 * r.n_a * r.n_b
         assert r.u2_a == 0  # A strictly smaller everywhere
         assert r.u2_b == 2 * r.n_a * r.n_b
-    finally:
-        _cleanup(keys)
 
 
 def test_mwu_real_data_invariants(spark, sf_dir):
@@ -584,7 +503,7 @@ def test_mwu_real_data_invariants(spark, sf_dir):
         assert 0 <= r.auc_ppm <= 1_100_000
 
 
-def test_chisq_perfect_independence_is_zero(spark, tmp_path):
+def test_chisq_perfect_independence_is_zero(spark, tmp_path, plant_tables):
     """A contingency table with identical type mix on every day:
     every observed == expected -> all chi_milli = 0."""
     from sqlondataframesr_spark.operators import stats
@@ -595,15 +514,12 @@ def test_chisq_perfect_independence_is_zero(spark, tmp_path):
         rows.append((f"{day} 09:00:00", 1, "click", 1.0))
         rows.append((f"{day} 10:00:00", 1, "click", 1.0))
         rows.append((f"{day} 11:00:00", 2, "purchase", 5.0))
-    keys = [_inject(spark, tmp_path, "events", _mk_events(spark, rows))]
-    try:
+    with plant_tables(tmp_path, events=_mk_events(spark, rows)):
         out = stats.evt_chisq_type_weekday(spark, str(tmp_path)).collect()
         assert len(out) == 4  # 2 types x 2 days
         for r in out:
             assert r.o == r.e
             assert r.chi_milli == 0
-    finally:
-        _cleanup(keys)
 
 
 def test_chisq_real_data_marginals(spark, sf_dir):
@@ -620,7 +536,7 @@ def test_chisq_real_data_marginals(spark, sf_dir):
         assert r.chi_milli is None or r.chi_milli >= 0
 
 
-def test_theilsen_designed_robustness(spark, tmp_path):
+def test_theilsen_designed_robustness(spark, tmp_path, plant_tables):
     """A perfectly linear monthly series gives exactly the line's
     slope in micro-dollars; corrupting ONE month leaves the Theil-Sen
     median unchanged (the robustness OLS lacks)."""
@@ -643,16 +559,9 @@ def test_theilsen_designed_robustness(spark, tmp_path):
 
     for outlier in (False, True):
         o, c, n = mk(outlier)
-        keys = [
-            _inject(spark, tmp_path, "orders", o),
-            _inject(spark, tmp_path, "customer", c),
-            _inject(spark, tmp_path, "nation", n),
-        ]
-        try:
+        with plant_tables(tmp_path, orders=o, customer=c, nation=n):
             r = stats.ml_theilsen_trend(spark, str(tmp_path)).collect()
             assert len(r) == 1
             assert r[0].n_months == 8
             assert r[0].n_pairs == 8 * 7 // 2
             assert r[0].theil_slope_micro == 50_000_000, (outlier, r)
-        finally:
-            _cleanup(keys)

@@ -1181,13 +1181,12 @@ def test_source_overlap_disjoint_vs_identical(spark):
     assert got == {("s1", "s2"): 1.0}
 
 
-def test_perceptron_converges_on_separable_data(spark, tmp_path):
+def test_perceptron_converges_on_separable_data(spark, tmp_path, plant_tables):
     """Linearly separable injection: label-0 vectors at +e1, others at
     -e1 (quantized to +-127). Round 1 starts from zero weights (every
     y*0 <= 0 counts as a mistake), its update sets w_0 = 6*127 = 762,
     and every later round is mistake-free with the weights frozen —
     the batch-perceptron fixed point."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.llm import linear as L
 
     rows = []
@@ -1197,22 +1196,17 @@ def test_perceptron_converges_on_separable_data(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "embeddings")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, embeddings=df):
         got = [
             (r.round, r.n_mistakes, r.w_l1, r.bias)
             for r in L.ml_perceptron_curve(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     assert got == [(t, 6 if t == 1 else 0, 762, 0) for t in range(1, 6)]
 
 
-def test_perceptron_confusion_perfect_on_separable_data(spark, tmp_path):
+def test_perceptron_confusion_perfect_on_separable_data(spark, tmp_path, plant_tables):
     """On the separable fixture the final weights classify perfectly:
     only (1,1) and (-1,-1) confusion cells, 3 rows each."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.llm import linear as L
 
     rows = []
@@ -1222,24 +1216,19 @@ def test_perceptron_confusion_perfect_on_separable_data(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "embeddings")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, embeddings=df):
         got = {
             (r.y_true, r.y_pred): r.n
             for r in L.ml_perceptron_confusion(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {(1, 1): 3, (-1, -1): 3}
 
 
-def test_perceptron_ovr_perfect_on_axis_separated_classes(spark, tmp_path):
+def test_perceptron_ovr_perfect_on_axis_separated_classes(spark, tmp_path, plant_tables):
     """Three classes sitting on three orthogonal axes (+-e1/e2/e3, two
     vectors each): after training, argmax-margin serving must produce
     a perfect diagonal confusion matrix; classes with no positive
     examples never win the argmax."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.llm import linear as L
 
     rows = []
@@ -1253,15 +1242,11 @@ def test_perceptron_ovr_perfect_on_axis_separated_classes(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "embeddings")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, embeddings=df):
         got = {
             (r.y_true, r.y_pred): r.n
             for r in L.ml_perceptron_ovr_confusion(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {(0, 0): 2, (1, 1): 2, (2, 2): 2}
 
 
@@ -1284,12 +1269,11 @@ def test_ann_recall_report_invariants(spark, sf_dir):
         assert r.recall_ppm == r.n_hits * 1_000_000 // r.n_possible
 
 
-def test_pca_power_concentrates_on_the_variance_axis(spark, tmp_path):
+def test_pca_power_concentrates_on_the_variance_axis(spark, tmp_path, plant_tables):
     """Designed corpus: all variance lives on dim 1 (vectors k*e1,
     k = -3..3, zero elsewhere) -> the loading vector must be exactly
     +-1e6 on dim 1 and 0 on every other dim."""
     from sqlondataframesr_spark.llm import pca as P
-    import sqlondataframesr_spark.catalog as C
 
     rows = [
         (k + 4, [float(k)] + [0.0] * (P.PCA_DIM - 1), 0)
@@ -1298,13 +1282,9 @@ def test_pca_power_concentrates_on_the_variance_axis(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "embeddings")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, embeddings=df):
         out = {r.dim: r.loading_ppm
                for r in P.emb_pca_power(spark, str(tmp_path)).collect()}
-    finally:
-        C._table_cache.pop(key, None)
     assert abs(out[1]) == 1000000
     assert all(out[d] == 0 for d in range(2, P.PCA_DIM + 1))
 

@@ -244,7 +244,7 @@ def test_hypertable_materialization_is_write_once_and_keyed_on_inputs(spark, sf_
     assert k1 != H._mat_dir(sf_dir) and k2 != k1
 
 
-def test_skew_report_flags_planted_bot_user(spark, tmp_path):
+def test_skew_report_flags_planted_bot_user(spark, tmp_path, plant_tables):
     """A planted bot key holding half the table must be flagged; the
     uniform long tail must not."""
     import datetime as dt
@@ -260,20 +260,15 @@ def test_skew_report_flags_planted_bot_user(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    import sqlondataframesr_spark.catalog as C
 
-    key = (spark.sparkContext.applicationId, str(tmp_path), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, events=df):
         rep = {r.user_id: r for r in S.skew_key_report(spark, str(tmp_path)).collect()}
-    finally:
-        C._table_cache.pop(key, None)
     assert rep[999].skewed and rep[999].share_ppm == 500000
     others = [r for uid, r in rep.items() if uid != 999]
     assert others and all(not r.skewed for r in others)
 
 
-def test_sessionize_splits_exactly_at_gap(spark, tmp_path):
+def test_sessionize_splits_exactly_at_gap(spark, tmp_path, plant_tables):
     """Designed stream: one user with gaps [1h, 4h(=boundary, kept),
     4h+1us (split), 1h] -> sessions of sizes [3, 2]; a second user with
     a single event -> singleton. Boundary semantics: gap <= SESSION_GAP
@@ -281,7 +276,6 @@ def test_sessionize_splits_exactly_at_gap(spark, tmp_path):
     import datetime as dt
 
     from sqlondataframesr_spark.operators import sessionize as SZ
-    import sqlondataframesr_spark.catalog as C
 
     t0 = dt.datetime(2024, 3, 1)
     h = dt.timedelta(hours=1)
@@ -295,15 +289,11 @@ def test_sessionize_splits_exactly_at_gap(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, events=df):
         sess = sorted(
             SZ._sessions(spark, str(tmp_path)).collect(),
             key=lambda r: (r.user_id, r.session_id),
         )
-    finally:
-        C._table_cache.pop(key, None)
     assert [(r.user_id, r.session_id, r.n_events) for r in sess] == [
         (1, 1, 3), (1, 2, 2), (2, 1, 1)]
     s1 = sess[0]
@@ -345,22 +335,13 @@ def test_sessionize_groupby_reuses_window_partitioning(spark, sf_dir):
     assert "Exchange rangepartitioning" not in top
 
 
-def _inject(spark, tmp_path, table, df):
-    import sqlondataframesr_spark.catalog as C
-
-    key = (spark.sparkContext.applicationId, str(tmp_path), table)
-    C._table_cache[key] = df
-    return key
-
-
-def test_transition_matrix_designed_chain(spark, tmp_path):
+def test_transition_matrix_designed_chain(spark, tmp_path, plant_tables):
     """Two users: [click,view,view,purchase] and [click,view] ->
     click->view twice (ppm=1000000 of click's row), view->view and
     view->purchase once each (500000 ppm each). The first event of
     each user contributes no transition."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     t0 = dt.datetime(2024, 3, 1)
@@ -373,14 +354,11 @@ def test_transition_matrix_designed_chain(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         got = {
             (r.prev_type, r.next_type): (r.n_transitions, r.prob_ppm)
             for r in J.evt_transition_matrix(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {
         ("click", "view"): (2, 1_000_000),
         ("view", "view"): (1, 500_000),
@@ -388,12 +366,11 @@ def test_transition_matrix_designed_chain(spark, tmp_path):
     }
 
 
-def test_snapshot_diff_change_types(spark, tmp_path):
+def test_snapshot_diff_change_types(spark, tmp_path, plant_tables):
     """Designed CDC cases: a customer with orders only before T1 is
     'flat' (delta 0), before+after is 'grown', only after is 'new'."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     before = dt.datetime(1997, 6, 1)
@@ -409,14 +386,11 @@ def test_snapshot_diff_change_types(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    key = _inject(spark, tmp_path, "orders", df)
-    try:
+    with plant_tables(tmp_path, orders=df):
         got = {
             r.c_custkey: (r.spend_t1_c, r.spend_t2_c, r.delta_c, r.change_type)
             for r in J.orders_snapshot_diff(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {
         100: (1000, 1000, 0, "flat"),
         200: (1000, 3550, 2550, "grown"),
@@ -477,14 +451,13 @@ def test_snapshot_diff_is_single_exchange_topk(spark, sf_dir):
     assert "Exchange rangepartitioning" not in a.text
 
 
-def test_daily_spikes_designed_thresholds(spark, tmp_path):
+def test_daily_spikes_designed_thresholds(spark, tmp_path, plant_tables):
     """10 days at 100 events + one 126-event day (>1.25x mean) + one
     74-event day (<0.8x mean): exactly those two days flag, and the
     integer thresholds sit exactly at the contract boundary (a
     125-event day over a 100-mean stream would NOT flag)."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     t0 = dt.datetime(2024, 3, 1)
@@ -507,16 +480,11 @@ def test_daily_spikes_designed_thresholds(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         got = [
             (r.event_type, r.day.day, r.n_events, r.mean_m, r.kind)
             for r in J.evt_daily_spikes(spark, str(tmp_path)).collect()
         ]
-    finally:
-        import sqlondataframesr_spark.catalog as C2
-
-        C2._table_cache.pop(key, None)
     assert got == [
         ("click", 11, 126, 100_000, "spike"),
         ("click", 12, 74, 100_000, "dip"),
@@ -526,14 +494,13 @@ def test_daily_spikes_designed_thresholds(spark, tmp_path):
     assert all(t != "view" for t, *_ in got)
 
 
-def test_basket_pairs_designed_lift(spark, tmp_path):
+def test_basket_pairs_designed_lift(spark, tmp_path, plant_tables):
     """3 baskets: {1,2}, {1,2}, {1,3}. Pair (1,2): support 2, lift =
     2*3/(3*2) = 1.0 -> 1_000_000 ppm. Pair (1,3) has support 1 ->
     filtered by MIN_SUPPORT. Duplicate lines of one part in a basket
     must not inflate support."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import affinity as A
 
     t = dt.datetime(1997, 1, 1)
@@ -552,14 +519,11 @@ def test_basket_pairs_designed_lift(spark, tmp_path):
         " l_extendedprice double, l_discount double, l_returnflag string,"
         " l_shipdate timestamp",
     )
-    key = _inject(spark, tmp_path, "lineitem", df)
-    try:
+    with plant_tables(tmp_path, lineitem=df):
         got = [
             (r.part_a, r.part_b, r.n_orders, r.n_a, r.n_b, r.lift_ppm)
             for r in A.basket_top_pairs(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     assert got == [(1, 2, 2, 3, 2, 1_000_000)]
 
 
@@ -576,14 +540,13 @@ def test_basket_pairs_plan_filters_before_lift_joins(spark, sf_dir):
     assert "Exchange rangepartitioning" not in a.text
 
 
-def test_growth_designed_curves(spark, tmp_path):
+def test_growth_designed_curves(spark, tmp_path, plant_tables):
     """Users A,B first seen day0; A active again day3. New-user curve:
     (d0, 2, 2) only (day3 adds no NEW user). DAU/WAU: d0 dau=2 wau=2
     (stickiness 1e6); d3 dau=1, wau=2 (A and B both active within the
     trailing 7 days) -> 500000 ppm; non-activity days are not rows."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import growth as G
 
     d0 = dt.datetime(2024, 3, 1, 12)
@@ -597,8 +560,7 @@ def test_growth_designed_curves(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         new = [
             (r.day, r.n_new, r.n_cumulative)
             for r in G.evt_new_users_daily(spark, str(tmp_path)).collect()
@@ -607,8 +569,6 @@ def test_growth_designed_curves(spark, tmp_path):
             (r.day, r.dau, r.wau, r.stickiness_ppm)
             for r in G.evt_dau_wau(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     day0 = d0.date()
     day3 = day0 + dt.timedelta(days=3)
     assert new == [(day0, 2, 2)]
@@ -634,14 +594,13 @@ def test_dau_wau_invariants_real_data(spark, sf_dir):
         assert r.wau <= trail
 
 
-def test_session_funnel_designed(spark, tmp_path):
+def test_session_funnel_designed(spark, tmp_path, plant_tables):
     """Session 1: click then purchase -> converted. Session 2 (same
     user, after a 5h gap): purchase BEFORE click -> has a click but no
     conversion (order matters). Session 3 (other user): view only ->
     no click. cvr = 1/2 = 500000 ppm."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     t0 = dt.datetime(2024, 3, 1)
@@ -658,23 +617,19 @@ def test_session_funnel_designed(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         r = SZ.evt_session_funnel(spark, str(tmp_path)).collect()[0]
-    finally:
-        C._table_cache.pop(key, None)
     assert (r.n_sessions, r.n_with_click, r.n_converted, r.cvr_ppm) == (
         3, 2, 1, 500_000)
 
 
-def test_gini_designed_extremes(spark, tmp_path):
+def test_gini_designed_extremes(spark, tmp_path, plant_tables):
     """Perfect equality (4 users x 3 events) -> gini 0. Near-perfect
     concentration (one user with 99 events, three with 1) -> gini =
     (2*(1+2+3+4*99) - 5*102)*1e6 // (4*102) = 705882 ppm; cross-checked
     against the closed-form computation."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import concentration as CN
 
     t0 = dt.datetime(2024, 3, 1)
@@ -691,11 +646,8 @@ def test_gini_designed_extremes(spark, tmp_path):
             "event_id long, ts timestamp, user_id long, event_type string,"
             " value double, props string",
         )
-        key = _inject(spark, tmp_path, "events", df)
-        try:
+        with plant_tables(tmp_path, events=df):
             return CN.evt_activity_gini(spark, str(tmp_path)).collect()[0]
-        finally:
-            C._table_cache.pop(key, None)
 
     eq = run([3, 3, 3, 3])
     assert (eq.n_users, eq.total_events, eq.gini_ppm) == (4, 12, 0)
@@ -718,13 +670,12 @@ def test_activity_deciles_invariants(spark, sf_dir):
     assert 1_000_000 - 10 <= sum(shares) <= 1_000_000
 
 
-def test_yoy_seasonality_designed(spark, tmp_path):
+def test_yoy_seasonality_designed(spark, tmp_path, plant_tables):
     """Jan-1995 100.00, Jan-1996 150.00, Feb-1996 20.00: the 1996-01
     row carries ratio 1.5e6 vs its prior year; first-year rows and
     months with no prior year have NULL."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     rows = [
@@ -737,14 +688,11 @@ def test_yoy_seasonality_designed(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    key = _inject(spark, tmp_path, "orders", df)
-    try:
+    with plant_tables(tmp_path, orders=df):
         got = [
             (r.o_year, r.o_month, r.revenue_c, r.prev_year_c, r.yoy_ratio_ppm)
             for r in J.orders_yoy_seasonality(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     assert got == [
         (1995, 1, 10000, None, None),
         (1996, 1, 15000, 10000, 1_500_000),
@@ -770,14 +718,13 @@ def test_join_fanout_report_matches_actual_join(spark, sf_dir):
     assert r.amplification_ppm == actual * 1_000_000 // max(r.left_rows, r.right_rows)
 
 
-def test_session_funnel_stages_strict_order(spark, tmp_path):
+def test_session_funnel_stages_strict_order(spark, tmp_path, plant_tables):
     """Session A: view, click, purchase in order -> reaches all three.
     Session B: click BEFORE the first view, purchase after -> reaches
     view but NOT click (strict order), so not purchase either. Session
     C: view only. Funnel: 3 sessions, 3 views, 1 click, 1 purchase."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     t0 = dt.datetime(2024, 3, 1)
@@ -799,22 +746,18 @@ def test_session_funnel_stages_strict_order(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         r = SZ.evt_session_funnel_stages(spark, str(tmp_path)).collect()[0]
-    finally:
-        C._table_cache.pop(key, None)
     assert (r.n_sessions, r.reached_view, r.reached_click,
             r.reached_purchase) == (3, 3, 1, 1)
 
 
-def test_conversion_latency_designed(spark, tmp_path):
+def test_conversion_latency_designed(spark, tmp_path, plant_tables):
     """Two converted sessions with latencies 60s and 180s (plus a
     pre-click purchase that must not count): mean 120s, p50 120s
     (interpolated midpoint of two samples), p90 168s."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     t0 = dt.datetime(2024, 3, 1)
@@ -832,22 +775,18 @@ def test_conversion_latency_designed(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         r = SZ.evt_conversion_latency(spark, str(tmp_path)).collect()[0]
-    finally:
-        C._table_cache.pop(key, None)
     assert (r.n_converted, r.mean_latency_s, r.p50_s, r.p90_s) == (
         2, 120.0, 120.0, 168.0)
 
 
-def test_abc_classes_designed_boundaries(spark, tmp_path):
+def test_abc_classes_designed_boundaries(spark, tmp_path, plant_tables):
     """Spends 80/15/5 (of 100): the 80-unit customer is A (nothing
     precedes it), the 15-unit lands exactly AT the 80% boundary ->
     strict < sends it to B, and the 5-unit sits at 95% -> C."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import concentration as CN
 
     t = dt.datetime(1997, 1, 1)
@@ -861,14 +800,11 @@ def test_abc_classes_designed_boundaries(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    key = _inject(spark, tmp_path, "orders", df)
-    try:
+    with plant_tables(tmp_path, orders=df):
         got = {
             r.abc_class: (r.n_customers, r.revenue_c, r.share_ppm)
             for r in CN.cust_abc_classes(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {
         "A": (1, 8000, 800_000),
         "B": (1, 1500, 150_000),
@@ -876,7 +812,7 @@ def test_abc_classes_designed_boundaries(spark, tmp_path):
     }
 
 
-def test_basket_capped_designed_and_report(spark, tmp_path):
+def test_basket_capped_designed_and_report(spark, tmp_path, plant_tables):
     """Designed baskets: {1,2}, {1,2}, {1,2,3,4,5,6,7} (7 distinct
     parts — over BASKET_SIZE_CAP=6). The capped operator analyzes only
     the two small baskets: pair (1,2) support 2, n_a=n_b=n_baskets=2,
@@ -885,7 +821,6 @@ def test_basket_capped_designed_and_report(spark, tmp_path):
     equals uncapped exactly (the property the docstring promises)."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import affinity as A
 
     t = dt.datetime(1997, 1, 1)
@@ -896,8 +831,7 @@ def test_basket_capped_designed_and_report(spark, tmp_path):
         " l_extendedprice double, l_discount double, l_returnflag string,"
         " l_shipdate timestamp",
     )
-    key = _inject(spark, tmp_path, "lineitem", df)
-    try:
+    with plant_tables(tmp_path, lineitem=df):
         capped = [
             (r.part_a, r.part_b, r.n_orders, r.n_a, r.n_b, r.lift_ppm)
             for r in A.basket_top_pairs_capped(spark, str(tmp_path)).collect()
@@ -921,18 +855,15 @@ def test_basket_capped_designed_and_report(spark, tmp_path):
             ).collect()
         )
         assert wide == uncapped
-    finally:
-        C._table_cache.pop(key, None)
 
 
-def test_sessionize_capped_designed_and_wide_cap_identity(spark, tmp_path):
+def test_sessionize_capped_designed_and_wide_cap_identity(spark, tmp_path, plant_tables):
     """Designed events: user 1 has 2 events (one session), user 2 has
     5 (over cap=3). With cap=3 only user 1 is sessionized — profile is
     a single (n_events=2) row. With a cap above every user's count the
     capped profile equals the uncapped one row-for-row."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     t0 = dt.datetime(2024, 5, 1)
@@ -945,8 +876,7 @@ def test_sessionize_capped_designed_and_wide_cap_identity(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         prof = SZ.evt_sessionize_profile_capped(
             spark, str(tmp_path), cap=3
         ).collect()
@@ -962,8 +892,6 @@ def test_sessionize_capped_designed_and_wide_cap_identity(spark, tmp_path):
             for r in SZ.evt_sessionize_profile(spark, str(tmp_path)).collect()
         )
         assert wide == base
-    finally:
-        C._table_cache.pop(key, None)
 
 
 def test_sessionize_cap_report_real_data(spark, sf_dir):
@@ -1070,13 +998,12 @@ def test_attribution_cap_wide_equals_uncapped_and_binds(spark, sf_dir):
     assert att_total == admitted
 
 
-def test_yoy_sparse_calendar_yields_null_not_stale(spark, tmp_path):
+def test_yoy_sparse_calendar_yields_null_not_stale(spark, tmp_path, plant_tables):
     """r9 ADVICE: Jan-1995 and Jan-1997 with NO Jan-1996 — the 1997
     row's prev_year_c must be NULL (no same-month-last-year), never
     the stale 1995 value a per-month lag would silently pick up."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     rows = [
@@ -1090,14 +1017,11 @@ def test_yoy_sparse_calendar_yields_null_not_stale(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
-    key = _inject(spark, tmp_path, "orders", df)
-    try:
+    with plant_tables(tmp_path, orders=df):
         got = {
             (r.o_year, r.o_month): (r.revenue_c, r.prev_year_c, r.yoy_ratio_ppm)
             for r in J.orders_yoy_seasonality(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert got == {
         (1995, 1): (1000, None, None),
         (1997, 1): (2000, None, None),   # gap year -> NULL, not 1995
@@ -1106,7 +1030,7 @@ def test_yoy_sparse_calendar_yields_null_not_stale(spark, tmp_path):
     }
 
 
-def test_triangle_count_keeps_self_loop_only_nation(spark, tmp_path):
+def test_triangle_count_keeps_self_loop_only_nation(spark, tmp_path, plant_tables):
     """r9 ADVICE: a nation whose ONLY trade edge is a self-loop
     (domestic-only) must still appear in the output with zero
     triangles — the node set derives from the raw edge list, the
@@ -1114,7 +1038,6 @@ def test_triangle_count_keeps_self_loop_only_nation(spark, tmp_path):
     graph: A-B-C triangle + D trading only with itself."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import graph as G
 
     t = dt.datetime(1997, 1, 1)
@@ -1131,47 +1054,43 @@ def test_triangle_count_keeps_self_loop_only_nation(spark, tmp_path):
         (2, 2, 10.0, 0.0),  # A -> C
         (3, 3, 10.0, 0.0),  # D -> D (self-loop only)
     ]
-    keys = [
-        _inject(spark, tmp_path, "nation", spark.createDataFrame(
+    tables = dict(
+        nation=spark.createDataFrame(
             nations, "n_nationkey long, n_name string, n_regionkey long,"
-            " n_comment string")),
-        _inject(spark, tmp_path, "customer", spark.createDataFrame(
+            " n_comment string"),
+        customer=spark.createDataFrame(
             custs, "c_custkey long, c_name string, c_address string,"
             " c_nationkey long, c_phone string, c_acctbal double,"
-            " c_mktsegment string, c_comment string")),
-        _inject(spark, tmp_path, "supplier", spark.createDataFrame(
+            " c_mktsegment string, c_comment string"),
+        supplier=spark.createDataFrame(
             supps, "s_suppkey long, s_name string, s_address string,"
             " s_nationkey long, s_phone string, s_acctbal double,"
-            " s_comment string")),
-        _inject(spark, tmp_path, "orders", spark.createDataFrame(
+            " s_comment string"),
+        orders=spark.createDataFrame(
             orders, "o_orderkey long, o_custkey long, o_orderstatus string,"
             " o_totalprice double, o_orderdate timestamp,"
-            " o_orderpriority string")),
-        _inject(spark, tmp_path, "lineitem", spark.createDataFrame(
+            " o_orderpriority string"),
+        lineitem=spark.createDataFrame(
             [(o, s, 1, 1.0, p, d, "N", t) for o, s, p, d in lines],
             "l_orderkey long, l_suppkey long, l_partkey long,"
             " l_quantity double, l_extendedprice double, l_discount double,"
-            " l_returnflag string, l_shipdate timestamp")),
-    ]
-    try:
+            " l_returnflag string, l_shipdate timestamp"),
+    )
+    with plant_tables(tmp_path, **tables):
         got = {
             r.nation: r.n_triangles
             for r in G.graph_triangle_count(spark, str(tmp_path)).collect()
         }
-    finally:
-        for k in keys:
-            C._table_cache.pop(k, None)
     assert got == {"A": 1, "B": 1, "C": 1, "D": 0}
 
 
-def test_cohort_retention_designed_triangle(spark, tmp_path):
+def test_cohort_retention_designed_triangle(spark, tmp_path, plant_tables):
     """Designed two-cohort corpus (weeks of 2024-01-01 and 2024-01-08,
     both Mondays): users 1,2 first seen week 0 — user 1 returns week
     1, user 2 does not; user 3 first seen week 1. Offset-0 cells are
     1e6 ppm by construction; cohort A's offset-1 retention is 50%."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import growth as G
 
     w0, w1 = dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 10)
@@ -1186,15 +1105,12 @@ def test_cohort_retention_designed_triangle(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         got = [
             (str(r.cohort_week), r.week_offset, r.n_active, r.cohort_size,
              r.retention_ppm)
             for r in G.evt_cohort_retention(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     assert got == [
         ("2024-01-01", 0, 2, 2, 1_000_000),
         ("2024-01-01", 1, 1, 2, 500_000),
@@ -1202,7 +1118,7 @@ def test_cohort_retention_designed_triangle(spark, tmp_path):
     ]
 
 
-def test_concurrent_sessions_designed_curve(spark, tmp_path):
+def test_concurrent_sessions_designed_curve(spark, tmp_path, plant_tables):
     """Three users: u1's session lives inside hour 0; u2 has one
     session in hour 0 and one in hour 5; u3's session SPANS the
     hour-0/hour-1 boundary. At the end of hour 0: 3 started, 2 ended,
@@ -1210,7 +1126,6 @@ def test_concurrent_sessions_designed_curve(spark, tmp_path):
     second. Open count returns to zero at the end."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     d = dt.datetime
@@ -1228,18 +1143,15 @@ def test_concurrent_sessions_designed_curve(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = _inject(spark, tmp_path, "events", df)
-    try:
+    with plant_tables(tmp_path, events=df):
         got = [
             (r.hr.hour, r.n_started, r.n_ended, r.n_open)
             for r in SZ.evt_concurrent_sessions(spark, str(tmp_path)).collect()
         ]
-    finally:
-        C._table_cache.pop(key, None)
     assert got == [(0, 3, 2, 1), (1, 0, 1, 0), (5, 1, 1, 0)]
 
 
-def test_markov_attribution_designed_chain(spark, tmp_path):
+def test_markov_attribution_designed_chain(spark, tmp_path, plant_tables):
     """Designed journeys: user A converts via click only, user B via
     view only, user C views and never converts. Removing 'click' must
     kill exactly A's conversion path and removing 'view' exactly B's;
@@ -1249,7 +1161,6 @@ def test_markov_attribution_designed_chain(spark, tmp_path):
     import datetime as dt
 
     from sqlondataframesr_spark.operators import journeys as J
-    import sqlondataframesr_spark.catalog as C
 
     base = dt.datetime(2022, 1, 1)
 
@@ -1266,15 +1177,11 @@ def test_markov_attribution_designed_chain(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = (spark.sparkContext.applicationId, str(tmp_path), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp_path, events=df):
         out = {
             r.channel: r
             for r in J.evt_markov_attribution(spark, str(tmp_path)).collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
     assert set(out) == {"click", "view"}
     # full chain: start->click 1/3 (converts p=1), start->view 2/3
     # (converts p=1/2): p_full = 333333 + 666666*1/2-ish in trunc ppm

@@ -301,13 +301,12 @@ def test_source_overlap_matches_python_set_model(spark, texts):
     counts=st.lists(st.integers(min_value=1, max_value=40), min_size=1, max_size=12)
 )
 @_SETTINGS
-def test_gini_matches_closed_form_and_is_label_invariant(spark, counts, tmp_path_factory):
+def test_gini_matches_closed_form_and_is_label_invariant(spark, counts, tmp_path_factory, plant_tables):
     """For ANY per-user count multiset: the operator's gini equals the
     closed-form rank-sum computation, and relabeling users (reversing
     ids) leaves it unchanged — gini is a function of the multiset."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import concentration as CN
 
     t0 = dt.datetime(2024, 3, 1)
@@ -325,12 +324,8 @@ def test_gini_matches_closed_form_and_is_label_invariant(spark, counts, tmp_path
             "event_id long, ts timestamp, user_id long, event_type string,"
             " value double, props string",
         )
-        key = (spark.sparkContext.applicationId, str(tmp), "events")
-        C._table_cache[key] = df
-        try:
+        with plant_tables(tmp, events=df):
             return CN.evt_activity_gini(spark, str(tmp)).collect()[0]
-        finally:
-            C._table_cache.pop(key, None)
 
     got = run(lambda uid: uid)
     xs = sorted(counts)
@@ -353,14 +348,13 @@ def test_gini_matches_closed_form_and_is_label_invariant(spark, counts, tmp_path
     )
 )
 @_SETTINGS
-def test_transition_matrix_conservation(spark, seq, tmp_path_factory):
+def test_transition_matrix_conservation(spark, seq, tmp_path_factory, plant_tables):
     """For ANY event stream: transitions = events - users(with >=1
     event), and each prev row's prob_ppm sums to 1e6 within truncation
     slack (< n_next_types)."""
     import datetime as dt
     from collections import defaultdict
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import journeys as J
 
     t0 = dt.datetime(2024, 3, 1)
@@ -374,12 +368,8 @@ def test_transition_matrix_conservation(spark, seq, tmp_path_factory):
         " value double, props string",
     )
     tmp = tmp_path_factory.mktemp("tm")
-    key = (spark.sparkContext.applicationId, str(tmp), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp, events=df):
         out = J.evt_transition_matrix(spark, str(tmp)).collect()
-    finally:
-        C._table_cache.pop(key, None)
     n_users = len({u for u, _ in seq})
     assert sum(r.n_transitions for r in out) == len(seq) - n_users
     per_prev = defaultdict(list)
@@ -397,13 +387,12 @@ def test_transition_matrix_conservation(spark, seq, tmp_path_factory):
     )
 )
 @_SETTINGS
-def test_sessionize_counts_match_reference_model(spark, gaps, tmp_path_factory):
+def test_sessionize_counts_match_reference_model(spark, gaps, tmp_path_factory, plant_tables):
     """For ANY per-user gap sequence (seconds): the operator's session
     count per user must equal the reference model 1 + #(gaps > GAP),
     and total events must be conserved through the profile."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sessionize as SZ
 
     t0 = dt.datetime(2024, 3, 1)
@@ -427,12 +416,8 @@ def test_sessionize_counts_match_reference_model(spark, gaps, tmp_path_factory):
         " value double, props string",
     )
     tmp = tmp_path_factory.mktemp("sz")
-    key = (spark.sparkContext.applicationId, str(tmp), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp, events=df):
         prof = SZ.evt_sessionize_profile(spark, str(tmp)).collect()
-    finally:
-        C._table_cache.pop(key, None)
     assert sum(r.n_sessions for r in prof) == expected_sessions
     assert sum(r.n_events * r.n_sessions for r in prof) == n_events
 
@@ -495,7 +480,7 @@ def test_distributed_rank_is_the_global_sort(spark, vals, npart):
     )
 )
 @_SETTINGS
-def test_km_matches_python_reference(spark, lifetimes, tmp_path_factory):
+def test_km_matches_python_reference(spark, lifetimes, tmp_path_factory, plant_tables):
     """For ANY (duration, observed) multiset: the KM operator's curve
     equals an independent Python implementation of the truncating
     integer-ppm Kaplan-Meier recurrence. Censored subjects are encoded
@@ -503,7 +488,6 @@ def test_km_matches_python_reference(spark, lifetimes, tmp_path_factory):
     exactly t); observed as first = 2000-01-01, last = first + t."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import survival as SV
 
     horizon = dt.datetime(2001, 5, 1)
@@ -528,18 +512,11 @@ def test_km_matches_python_reference(spark, lifetimes, tmp_path_factory):
         " o_totalprice double, o_orderdate timestamp, o_orderpriority string",
     )
     tmp = tmp_path_factory.mktemp("km")
-    app = spark.sparkContext.applicationId
-    keys = [(app, str(tmp), "customer"), (app, str(tmp), "orders")]
-    C._table_cache[keys[0]] = cust
-    C._table_cache[keys[1]] = orders
-    try:
+    with plant_tables(tmp, customer=cust, orders=orders):
         got = [
             (r.duration_days, r.n_at_risk, r.d_events, r.survival_ppm)
             for r in SV.km_survival_curve(spark, str(tmp)).collect()
         ]
-    finally:
-        for k in keys:
-            C._table_cache.pop(k, None)
     # independent reference: sort event times, at-risk = lifetimes >= t
     want, s = [], 1_000_000
     event_times = sorted({t for t, ev in lifetimes if ev})
@@ -555,14 +532,13 @@ def test_km_matches_python_reference(spark, lifetimes, tmp_path_factory):
     cents=st.lists(st.integers(min_value=1, max_value=500), min_size=1, max_size=15)
 )
 @_SETTINGS
-def test_cusum_matches_recursion_model(spark, cents, tmp_path_factory):
+def test_cusum_matches_recursion_model(spark, cents, tmp_path_factory, plant_tables):
     """For ANY daily series: the window-unrolled cusum_pos equals the
     classic recursion S_t = max(0, S_{t-1} + (x_t - med)) — including
     series that deviate upward from day one (the empty-prefix case
     that motivated LEAST(min, 0))."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import stats as ST
 
     t0 = dt.datetime(2024, 3, 1)
@@ -577,12 +553,8 @@ def test_cusum_matches_recursion_model(spark, cents, tmp_path_factory):
         " value double, props string",
     )
     tmp = tmp_path_factory.mktemp("cusum")
-    key = (spark.sparkContext.applicationId, str(tmp), "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables(tmp, events=df):
         got = [r.cusum_pos for r in ST.evt_cusum_shifts(spark, str(tmp)).collect()]
-    finally:
-        C._table_cache.pop(key, None)
     med = sorted(cents)[(len(cents) + 1) // 2 - 1]
     s, want = 0, []
     for c in cents:
@@ -604,7 +576,7 @@ def test_cusum_matches_recursion_model(spark, cents, tmp_path_factory):
 )
 @_SETTINGS
 def test_scd2_incremental_equals_full_recompute(
-    spark, seq, split_frac, tmp_path_factory
+    spark, seq, split_frac, tmp_path_factory, plant_tables
 ):
     """For ANY event stream and ANY split point — including split
     before all events (pure rebuild) and after all (pure passthrough):
@@ -612,7 +584,6 @@ def test_scd2_incremental_equals_full_recompute(
     SAME summary as recomputing from scratch."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import scd as SCD
 
     t0 = dt.datetime(2024, 3, 1)
@@ -627,12 +598,10 @@ def test_scd2_incremental_equals_full_recompute(
         " value double, props string",
     )
     tmp = tmp_path_factory.mktemp("scd2inc")
-    key = (spark.sparkContext.applicationId, str(tmp), "events")
-    C._table_cache[key] = df
     split = (t0 + split_frac * m - dt.timedelta(seconds=30)).strftime(
         "%Y-%m-%d %H:%M:%S"
     )
-    try:
+    with plant_tables(tmp, events=df):
         full = sorted(
             tuple(r) for r in SCD.cdc_scd2_summary(spark, str(tmp)).collect()
         )
@@ -640,8 +609,6 @@ def test_scd2_incremental_equals_full_recompute(
             tuple(r)
             for r in SCD._incremental_summary(spark, str(tmp), split).collect()
         )
-    finally:
-        C._table_cache.pop(key, None)
     assert inc == full
 
 
@@ -659,11 +626,10 @@ KMV_ROWS = st.lists(
 
 @given(rows=KMV_ROWS)
 @_SETTINGS
-def test_kmv_merge_law_for_any_corpus(spark, rows):
+def test_kmv_merge_law_for_any_corpus(spark, rows, plant_tables):
     """Merged per-lang K-min sets re-minned == the direct global K-min
     set, for ANY document multiset — the algebra behind
     sketch_kmv_merge_check, checked against a pure-python model."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sketches
 
     docs = [
@@ -674,9 +640,7 @@ def test_kmv_merge_law_for_any_corpus(spark, rows):
         docs,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    key = (spark.sparkContext.applicationId, "_kmv_prop", "documents")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_kmv_prop", documents=df):
         got = sketches.sketch_kmv_merge_check(spark, "_kmv_prop").collect()
         assert [r.method for r in got] == ["direct", "merged"]
         d, m = got
@@ -692,8 +656,6 @@ def test_kmv_merge_law_for_any_corpus(spark, rows):
         )[: sketches.KMV_K]
         assert d.n_sk == len(hs)
         assert d.h_k == hs[-1]
-    finally:
-        C._table_cache.pop(key, None)
 
 
 MWU_ROWS = st.lists(
@@ -708,12 +670,11 @@ MWU_ROWS = st.lists(
 
 @given(rows=MWU_ROWS)
 @_SETTINGS
-def test_mwu_conservation_for_any_sample(spark, rows):
+def test_mwu_conservation_for_any_sample(spark, rows, plant_tables):
     """u2_a + u2_b == 2*nA*nB for ANY weekday/weekend value multiset,
     and u2_a matches the brute-force pairwise count (2*wins + ties)."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import stats
 
     events = [
@@ -732,9 +693,7 @@ def test_mwu_conservation_for_any_sample(spark, rows):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = (spark.sparkContext.applicationId, "_mwu_prop", "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_mwu_prop", events=df):
         r = stats.ab_mannwhitney_auc(spark, "_mwu_prop").collect()[0]
         a = [v for wk, v in rows if not wk]
         b = [v for wk, v in rows if wk]
@@ -744,8 +703,6 @@ def test_mwu_conservation_for_any_sample(spark, rows):
             2 if x > y else 1 if x == y else 0 for x in a for y in b
         )
         assert r.u2_a == brute_u2a
-    finally:
-        C._table_cache.pop(key, None)
 
 
 # ------------------------- r10 wave-2 models (privacy / sketch set ops /
@@ -765,13 +722,12 @@ KMVJ_ROWS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_kmv_jaccard_matches_python_model(spark, rows):
+def test_kmv_jaccard_matches_python_model(spark, rows, plant_tables):
     """For ANY corpus: every column of sketch_kmv_jaccard equals an
     independent python implementation of the merge-the-sketches
     estimator AND of the exact vocabulary Jaccard."""
     import hashlib
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import sketches
 
     docs = [
@@ -782,15 +738,11 @@ def test_kmv_jaccard_matches_python_model(spark, rows):
         docs,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    key = (spark.sparkContext.applicationId, "_kmvj_prop", "documents")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_kmvj_prop", documents=df):
         got = {
             (r.src_a, r.src_b): r
             for r in sketches.sketch_kmv_jaccard(spark, "_kmvj_prop").collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
 
     def h(term: str) -> int:
         return int(hashlib.md5(term.encode()).hexdigest()[:13], 16)
@@ -828,12 +780,11 @@ EWMA_SERIES = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_ewma_matches_python_model(spark, xs):
+def test_ewma_matches_python_model(spark, xs, plant_tables):
     """evt_ewma_daily == the brute-force integer EWMA for ANY daily
     series (one purchase event per day carrying the day's cents)."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import timeseries as TS
 
     base = dt.datetime(2020, 1, 1, 12, 0, 0)
@@ -846,12 +797,8 @@ def test_ewma_matches_python_model(spark, xs):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = (spark.sparkContext.applicationId, "_ewma_prop", "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_ewma_prop", events=df):
         got = TS.evt_ewma_daily(spark, "_ewma_prop").collect()
-    finally:
-        C._table_cache.pop(key, None)
     W = TS.EWMA_W
     assert len(got) == len(xs)
     for t, row in enumerate(got, start=1):
@@ -874,13 +821,12 @@ KN_TEXTS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_kneser_ney_is_order_invariant_and_a_probability(spark, texts):
+def test_kneser_ney_is_order_invariant_and_a_probability(spark, texts, plant_tables):
     """Kneser-Ney scores are a pure function of the corpus MULTISET
     (doc order must not matter) and every per-doc mean logprob is
     <= 0 (the smoothed P(w2|w1) never exceeds 1 — the per-context
     mass argument: sum over seen w2 of P = 1 - D*N1f/c1*(1 - sum
     Pcont(seen)) <= 1)."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.llm import lm as LM
 
     def run(order):
@@ -893,12 +839,8 @@ def test_kneser_ney_is_order_invariant_and_a_probability(spark, texts):
             "doc_id long, text string, lang string, source string,"
             " n_chars long",
         )
-        key = (spark.sparkContext.applicationId, "_kn_prop", "documents")
-        C._table_cache[key] = df
-        try:
+        with plant_tables("_kn_prop", documents=df):
             rows = LM.lm_kneser_ney_logprob(spark, "_kn_prop").collect()
-        finally:
-            C._table_cache.pop(key, None)
         return rows
 
     fwd = run(range(len(texts)))
@@ -929,12 +871,11 @@ KANON_ROWS = st.lists(
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_k_anonymity_ladder_matches_model_and_is_monotone(spark, rows):
+def test_k_anonymity_ladder_matches_model_and_is_monotone(spark, rows, plant_tables):
     """For ANY customer table: each ladder level equals a python
     recount, and generalizing (level up) never increases the
     suppression set (coarser classes are supersets, so a class under
     k at level L implies all its level-(L-1) subclasses are under k)."""
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import privacy as P
 
     cust = [
@@ -946,15 +887,11 @@ def test_k_anonymity_ladder_matches_model_and_is_monotone(spark, rows):
         "c_custkey long, c_name string, c_nationkey int, c_acctbal double,"
         " c_mktsegment string",
     )
-    key = (spark.sparkContext.applicationId, "_kanon_prop", "customer")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_kanon_prop", customer=df):
         got = {
             r.level: r
             for r in P.privacy_k_anonymity_ladder(spark, "_kanon_prop").collect()
         }
-    finally:
-        C._table_cache.pop(key, None)
 
     from collections import Counter
 
@@ -997,7 +934,7 @@ CONF_ROWS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_conformal_matches_python_model(spark, rows):
+def test_conformal_matches_python_model(spark, rows, plant_tables):
     """ml_conformal_interval's integer outputs equal an independent
     python split-conformal implementation (same md5 split, same IEEE
     slope/intercept expressions, same dollar quantization, same
@@ -1006,7 +943,6 @@ def test_conformal_matches_python_model(spark, rows):
     import hashlib
     import math
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import stats as S
 
     li = [
@@ -1021,12 +957,8 @@ def test_conformal_matches_python_model(spark, rows):
         " l_tax double, l_returnflag string, l_linestatus string,"
         " l_shipdate timestamp",
     )
-    key = (spark.sparkContext.applicationId, "_conf_prop", "lineitem")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_conf_prop", lineitem=df):
         out = S.ml_conformal_interval(spark, "_conf_prop").collect()
-    finally:
-        C._table_cache.pop(key, None)
 
     def bucket(ok: int, ln: int) -> int:
         return (
@@ -1085,13 +1017,12 @@ ISO_ROWS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_isotonic_matches_maxmin_model_and_is_monotone(spark, rows):
+def test_isotonic_matches_maxmin_model_and_is_monotone(spark, rows, plant_tables):
     """ml_isotonic_calibration == the brute-force max-min closed form
     (python triple loop over the bucket frame) and its fit is
     non-decreasing for ANY per-user (activity, converted) multiset."""
     import datetime as dt
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.operators import features as FE
 
     base = dt.datetime(2021, 1, 1)
@@ -1109,12 +1040,8 @@ def test_isotonic_matches_maxmin_model_and_is_monotone(spark, rows):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    key = (spark.sparkContext.applicationId, "_iso_prop", "events")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_iso_prop", events=df):
         got = FE.ml_isotonic_calibration(spark, "_iso_prop").collect()
-    finally:
-        C._table_cache.pop(key, None)
 
     from collections import defaultdict
 
@@ -1165,13 +1092,12 @@ NEYMAN_ROWS = st.lists(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.too_slow,
                                  HealthCheck.function_scoped_fixture])
-def test_neyman_allocation_conserves_and_matches_model(spark, rows):
+def test_neyman_allocation_conserves_and_matches_model(spark, rows, plant_tables):
     """For ANY corpus: Σ alloc == NEYMAN_TOTAL whenever any stratum
     has positive weight, and every column equals the python
     largest-remainder model."""
     import math
 
-    import sqlondataframesr_spark.catalog as C
     from sqlondataframesr_spark.llm import sampling as SA
 
     docs = [
@@ -1181,13 +1107,9 @@ def test_neyman_allocation_conserves_and_matches_model(spark, rows):
         docs,
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    key = (spark.sparkContext.applicationId, "_ney_prop", "documents")
-    C._table_cache[key] = df
-    try:
+    with plant_tables("_ney_prop", documents=df):
         got = {r.source: r
                for r in SA.sample_neyman_allocation(spark, "_ney_prop").collect()}
-    finally:
-        C._table_cache.pop(key, None)
 
     from collections import defaultdict
 

@@ -38,10 +38,12 @@ def test_fluent_vs_spark_sql(spark, sf_dir, name, oracle_rows):
     assert not problems, f"{name}: {problems}"
 
 
-def test_entry_contract(spark):
+def test_entry_contract(spark, oracle_rows):
+    """The driver's smoke check: ``entry(spark)`` is the flagship q3 at
+    sf0.001, so its rows must equal q3's oracle rows."""
     import __spark_entry__ as e
 
-    df = e.entry(spark)
-    rows = df.collect()
-    assert len(rows) >= 0
+    oracle = e.oracle_sql()["q3_top_orders_by_big_items"]
+    problems = compare_rows(*spark_rows(e.entry(spark)), *oracle_rows(e.SF0001, oracle))
+    assert not problems, problems
     assert set(e.oracle_sql()) == set(e.queries())

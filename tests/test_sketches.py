@@ -7,30 +7,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import sqlondataframesr_spark.catalog as C
 from sqlondataframesr_spark.operators import journeys, sketches, timeseries
-
-
-def seed_table_cache(spark, sf_key, tables):
-    """Serve designed frames for a pseudo sf-dir via the loader's
-    table cache (the empty-input battery's idiom, conftest-scoped)."""
-    app = spark.sparkContext.applicationId
-    for name, df in tables.items():
-        C._table_cache[(app, sf_key, name)] = df
 
 
 # ---------------------------------------------------------------- KMV
 
 
-def test_kmv_small_source_is_exact(spark):
+def test_kmv_small_source_is_exact(spark, plant_tables):
     """A source with fewer than K distinct texts: the sketch holds the
     whole distinct set, so the estimate IS the exact count and err=0."""
     rows = [(i, f"text-{i % 10}", "en", "tiny", 7) for i in range(40)]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    seed_table_cache(spark, "_kmv_tiny", {"documents": df})
-    out = sketches.sketch_kmv_distinct(spark, "_kmv_tiny").collect()
+    with plant_tables("_kmv_tiny", documents=df):
+        out = sketches.sketch_kmv_distinct(spark, "_kmv_tiny").collect()
     assert len(out) == 1
     r = out[0]
     assert r.exact_distinct == 10
@@ -100,18 +91,18 @@ def test_cms_never_underestimates(spark, sf_dir):
         assert r.cms_cnt == r.exact_cnt + r.overcount
 
 
-def test_cms_exact_on_tiny_vocab(spark):
+def test_cms_exact_on_tiny_vocab(spark, plant_tables):
     """With a vocabulary far below WIDTH, collisions are unlikely; on
     this designed 3-term corpus the sketch is exact."""
     rows = [(1, "a a b", "en", "s", 5), (2, "b c", "en", "s", 3)]
     df = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    seed_table_cache(spark, "_cms_tiny", {"documents": df})
-    out = {
-        r.term: (r.exact_cnt, r.cms_cnt)
-        for r in sketches.sketch_cms_freq_report(spark, "_cms_tiny").collect()
-    }
+    with plant_tables("_cms_tiny", documents=df):
+        out = {
+            r.term: (r.exact_cnt, r.cms_cnt)
+            for r in sketches.sketch_cms_freq_report(spark, "_cms_tiny").collect()
+        }
     assert out == {"a": (2, 2), "b": (2, 2), "c": (1, 1)}
 
 
@@ -127,7 +118,7 @@ def test_cms_probe_broadcasts_the_sketch(spark, sf_dir):
 # ---------------------------------------------------------------- ACF
 
 
-def test_acf_constant_series_with_linear_ramp(spark):
+def test_acf_constant_series_with_linear_ramp(spark, plant_tables):
     """Designed series: a pure linear ramp has strongly positive lag-1
     autocorrelation under the integer contract; verify the exact
     closed-form numbers for a tiny hand-computable series."""
@@ -141,8 +132,8 @@ def test_acf_constant_series_with_linear_ramp(spark):
         rows, "event_id long, ts string, user_id long, event_type string,"
         " value double, props string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    seed_table_cache(spark, "_acf_ramp", {"events": df})
-    out = {r.lag: r for r in timeseries.evt_daily_acf(spark, "_acf_ramp").collect()}
+    with plant_tables("_acf_ramp", events=df):
+        out = {r.lag: r for r in timeseries.evt_daily_acf(spark, "_acf_ramp").collect()}
     assert set(out) == set(range(1, timeseries.ACF_LAGS + 1))
 
     def tdiv(a: int, b: int) -> int:  # truncation toward zero (SQL div)
@@ -191,7 +182,7 @@ def test_linear_attribution_conserves_cents(spark, sf_dir):
     assert total_att == total_p
 
 
-def test_linear_attribution_designed(spark):
+def test_linear_attribution_designed(spark, plant_tables):
     """Hand-checked: one purchase of 100 cents with 3 clicks in-window
     -> 33/33/34 (remainder to the last touch); one purchase with no
     clicks -> direct."""
@@ -208,11 +199,11 @@ def test_linear_attribution_designed(spark):
         rows, "event_id long, ts string, user_id long, event_type string,"
         " value double, props string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    seed_table_cache(spark, "_attr_tiny", {"events": df})
-    out = {
-        (str(r.day), r.channel): (r.att_cents, r.n_touches)
-        for r in journeys.evt_linear_attribution(spark, "_attr_tiny").collect()
-    }
+    with plant_tables("_attr_tiny", events=df):
+        out = {
+            (str(r.day), r.channel): (r.att_cents, r.n_touches)
+            for r in journeys.evt_linear_attribution(spark, "_attr_tiny").collect()
+        }
     assert out == {
         ("2024-01-02", "click"): (100, 3),
         ("2024-01-05", "direct"): (200, 1),
@@ -222,7 +213,7 @@ def test_linear_attribution_designed(spark):
 # -------------------------------------- exact percentiles & MASE
 
 
-def test_percentiles_designed(spark):
+def test_percentiles_designed(spark, plant_tables):
     """100 purchase cents values 1..100: lower-quantile definition
     gives exactly P50=50, P90=90, P99=99."""
     import datetime as dt
@@ -235,10 +226,10 @@ def test_percentiles_designed(spark):
         rows, "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string"
     )
-    seed_table_cache(spark, "_pct_tiny", {"events": df})
-    from sqlondataframesr_spark.operators import concentration
+    with plant_tables("_pct_tiny", events=df):
+        from sqlondataframesr_spark.operators import concentration
 
-    out = concentration.evt_value_percentiles_exact(spark, "_pct_tiny").collect()
+        out = concentration.evt_value_percentiles_exact(spark, "_pct_tiny").collect()
     assert len(out) == 1
     r = out[0]
     assert (r.n, r.p50_cents, r.p90_cents, r.p99_cents) == (100, 50, 90, 99)
@@ -288,7 +279,7 @@ def test_cms_join_size_never_underestimates(spark, sf_dir):
     assert row.exact_join_size > 0  # fixture has click+purchase users
 
 
-def test_cms_join_size_exact_on_tiny_corpus(spark):
+def test_cms_join_size_exact_on_tiny_corpus(spark, plant_tables):
     """On a 3-user corpus with a sparse sketch the estimate is exact:
     user1 has 2 clicks x 1 purchase, user2 1x1, user3 purchase-only
     -> join size 3."""
@@ -309,8 +300,27 @@ def test_cms_join_size_exact_on_tiny_corpus(spark):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    seed_table_cache(spark, "_cmsjs_tiny", {"events": df})
-    row = sketches.sketch_cms_join_size(spark, "_cmsjs_tiny").collect()[0]
+    with plant_tables("_cmsjs_tiny", events=df):
+        row = sketches.sketch_cms_join_size(spark, "_cmsjs_tiny").collect()[0]
     assert row.exact_join_size == 3
     assert row.cms_join_size == 3
     assert row.overcount == 0
+
+
+def test_cms_depth_follows_the_one_geometry(monkeypatch):
+    """Every CMS oracle and Spark-SQL dual renders its depth axis from
+    ``sketches.CMS_DEPTH`` (the fluent plans read it through
+    ``cms_depth_axis``), so a geometry change moves all of them."""
+    import re
+
+    from sqlondataframesr_spark import registry
+
+    monkeypatch.setattr(sketches, "CMS_DEPTH", 5)
+    oracles, duals = registry.oracles(), registry.spark_sql()
+    names = sorted(n for n in registry.queries() if "_cms_" in n)
+    assert len(names) == 4
+    for name in names:
+        assert set(re.findall(r"\[0[\d, ]*\]", oracles[name])) == {"[0, 1, 2, 3, 4]"}, name
+        assert set(re.findall(r"array\(0[\d, ]*\)", duals[name])) == {"array(0, 1, 2, 3, 4)"}, name
+    axis = str(sketches.cms_depth_axis())
+    assert all(str(i) in axis for i in range(5))

@@ -27,6 +27,7 @@ JOIN_PROFILE_CONF = re.escape("spark.sql.join." + "preferSortMergeJoin")
 FLOAT_TOLERANCE = re.escape("math." + "isclose")
 EXACT_ENV_READ = r"""(environ\.get\(|environ\[|getenv\()\s*["']EXACT["']"""
 LOCAL_CHECKPOINT_CALL = re.escape(".local" + "Checkpoint(")
+TABLE_CACHE = r"\b" + re.escape("_table" + "_cache") + r"\b"
 TIMER_CALL = re.escape("time.perf" + "_counter")
 DUCKDB_VIEW = r"(?i)CREATE\s+(OR\s+REPLACE\s+)?VIEW\b"
 TWIN_NAME = re.compile(r"(_DUCK|_SPARK|_DUCK_SQL|_SPARK_SQL)$")
@@ -98,6 +99,18 @@ def test_local_checkpoint_only_in_materialize():
     # checkpointed RDD so release_all can free its blocks
     allowed = {os.path.join("sqlondataframesr_spark", "materialize.py")}
     assert _sites(LOCAL_CHECKPOINT_CALL, allowed) == []
+
+
+def test_table_cache_only_in_catalog_and_the_planting_fixture():
+    # tests plant frames through conftest's ``plant_tables``, which
+    # removes them again; a direct write elsewhere could leak a planted
+    # table into every later test that reads the same key
+    allowed = {
+        os.path.join("sqlondataframesr_spark", "catalog.py"),
+        os.path.join("tests", "conftest.py"),
+        os.path.join("scripts", "empty_sweep.py"),
+    }
+    assert sorted(_sites(TABLE_CACHE, allowed)) == []
 
 
 def test_no_second_float_rule():
@@ -319,3 +332,43 @@ def test_bench_tracer_counts_jobs_run_under_another_group(spark):
         assert tracer.stage_stats(group)["jobs"] == len(own) + len(other)
     finally:
         tracer.close()
+
+
+#: a copied block: this many consecutive code lines ...
+COPY_WINDOW = 6
+#: ... carrying at least this many characters without indentation
+COPY_MIN_CHARS = 150
+
+
+def _code_lines(path: str) -> list[tuple[int, str]]:
+    """(line number, text) of each line that carries code: trailing
+    whitespace stripped; blank, comment-only and bracket/quote-only
+    lines skipped. Indentation is kept, so a block pasted at another
+    depth is not a copy."""
+    with open(path, encoding="utf-8") as fh:
+        numbered = list(enumerate(fh.read().splitlines(), 1))
+    return [
+        (no, text.rstrip()) for no, text in numbered
+        if re.search(r"\w", text) and not text.lstrip().startswith("#")
+    ]
+
+
+def test_no_copied_blocks():
+    """Every sub-plan two queries share is built by one function: no
+    COPY_WINDOW-line window of package code (at least COPY_MIN_CHARS
+    characters) appears twice, in one module or across two, so a fix
+    to a shared CTE chain or fluent block cannot miss a copy."""
+    seen: dict[str, list[str]] = {}
+    for path in sorted(_py_files()):
+        rel = _rel(path)
+        if not rel.startswith("sqlondataframesr_spark" + os.sep):
+            continue
+        lines = _code_lines(path)
+        for i in range(len(lines) - COPY_WINDOW + 1):
+            window = lines[i:i + COPY_WINDOW]
+            if sum(len(text.strip()) for _, text in window) >= COPY_MIN_CHARS:
+                key = "\n".join(text for _, text in window)
+                seen.setdefault(key, []).append(f"{rel}:{window[0][0]}")
+    copies = sorted(sites for sites in seen.values() if len(sites) > 1)
+    modules = sorted({site.rsplit(":", 1)[0] for sites in copies for site in sites})
+    assert copies == [], f"{len(copies)} windows repeat across {len(modules)} modules: {copies}"
