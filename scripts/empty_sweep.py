@@ -72,7 +72,7 @@ def empty_tables(spark) -> dict:
 def main() -> int:
     from sqlondataframesr_spark.session import get_spark
 
-    spark = get_spark(app_name="empty-sweep", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="empty-sweep", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     import sqlondataframesr_spark.catalog as C

@@ -10,12 +10,12 @@ and every other value keeps its Python type, so an int never equals a
 float. Rows compare as sorted multisets; column names compare
 case-insensitively after sorting.
 
-- :func:`compare_spark_duckdb` — a Spark result vs an ANSI-SQL oracle
-  executed by DuckDB on the same parquet files.
+- A Spark result vs its DuckDB oracle: ``compare_rows(*spark_rows(df),
+  *duckdb_rows(con, oracle_sql))``, with ``con`` from
+  :func:`duckdb_connect` (the same tables as views over the same
+  parquet files), opened once per data dir by each caller.
 - :func:`compare_frames` — Spark vs Spark, e.g. a streaming or
   rewritten plan vs its batch twin.
-- :func:`spark_rows`, :func:`duckdb_rows` and :func:`duckdb_connect`
-  give scripts and tests the same row extraction and views.
 """
 
 from __future__ import annotations
@@ -92,15 +92,6 @@ def compare_rows(
         diff_r = [r for r in rc if r not in lc][:3]
         problems.append(f"value mismatch; only-left={diff_l} only-right={diff_r}")
     return problems
-
-
-def compare_spark_duckdb(df: DataFrame, oracle_sql: str, sf_dir: str) -> list[str]:
-    con = duckdb_connect(sf_dir)
-    try:
-        oracle = duckdb_rows(con, oracle_sql)
-    finally:
-        con.close()
-    return compare_rows(*spark_rows(df), *oracle)
 
 
 def compare_frames(a: DataFrame, b: DataFrame) -> list[str]:

@@ -15,7 +15,8 @@ sequential local replay of the same deterministic byte math.
 Cache discipline (VERDICT r4 item 8 applied from the start): the
 cache directory is keyed by an md5 of THIS MODULE'S SOURCE, so any
 change to the reference math can never silently reuse stale expected
-rows. Built atomically (stage + os.rename) like the SE fixture.
+rows. Built once through :func:`sqlondataframesr_spark.tmpcache.write_once`,
+like the SE fixture.
 
 The expected tables carry an ``sf_key`` column = SUM(n_chars) of the
 generating documents table; the oracle filters on the live
@@ -28,10 +29,10 @@ SPARK_GRAFT_MM_EXPECTED_SFS.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from sqlondataframesr_spark.functions.rounding import r6_py as _r6py
+from sqlondataframesr_spark.tmpcache import cache_dir, write_once
 
 #: scales the expected tables are precomputed for (the correctness
 #: gates; bench at sf0.1 never evaluates oracles)
@@ -181,8 +182,6 @@ def expected_dir() -> str:
     """Build (once per module-source version) and return the expected-
     tables directory: one parquet per featurizer, all gate scales
     concatenated, keyed by sf_key."""
-    import tempfile
-
     # Key = md5(module source + resolved sfs list + each dir's LIVE
     # sf_key): editing the reference math, changing
     # SPARK_GRAFT_MM_EXPECTED_SFS, or REGENERATING the data under an
@@ -213,38 +212,25 @@ def expected_dir() -> str:
             return "missing"
 
     keys = {sf: _data_key(sf) for sf in sfs_env.split(":")}
-    data_keys = ":".join(keys.values())
-    with open(__file__, "rb") as f:
-        ver = hashlib.md5(
-            f.read() + b":" + sfs_env.encode() + b":" + data_keys.encode()
-        ).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"sqlondataframesr_mm_expected_{ver}")
-    if os.path.isdir(d):
-        _DIR_MEMO[sfs_env] = d
-        return d
-
-    import pandas as pd
-
+    with open(__file__, encoding="utf-8") as f:
+        d = cache_dir("mm_expected", f.read(), sfs_env, ":".join(keys.values()))
     sfs = [sf for sf, k in keys.items() if k != "missing"]
     if not sfs:
         raise FileNotFoundError(
             f"expected_dir: no readable documents.parquet under any of "
             f"{sfs_env!r} (SPARK_GRAFT_MM_EXPECTED_SFS)"
         )
-    per_sf = [_expected_frames(sf) for sf in sfs]
-    stage = f"{d}.stage.{os.getpid()}"
-    os.makedirs(stage, exist_ok=True)
-    for name in per_sf[0]:
-        pd.concat([p[name] for p in per_sf], ignore_index=True).to_parquet(
-            os.path.join(stage, f"{name}.parquet"), index=False
-        )
-    try:
-        os.rename(stage, d)  # atomic; loser of a race cleans up
-    except OSError:
-        import shutil
 
-        shutil.rmtree(stage, ignore_errors=True)
-    _DIR_MEMO[sfs_env] = d
+    def build(stage: str) -> None:
+        import pandas as pd
+
+        per_sf = [_expected_frames(sf) for sf in sfs]
+        for name in per_sf[0]:
+            pd.concat([p[name] for p in per_sf], ignore_index=True).to_parquet(
+                os.path.join(stage, f"{name}.parquet"), index=False
+            )
+
+    _DIR_MEMO[sfs_env] = write_once(d, build)
     return d
 
 

@@ -139,42 +139,6 @@ def byte_histogram(media: DataFrame, buckets: int = HIST_BUCKETS) -> DataFrame:
     )
 
 
-def byte_histogram_arrow(media: DataFrame, buckets: int = HIST_BUCKETS) -> DataFrame:
-    """``mapInArrow`` twin of :func:`byte_histogram`: the UDF receives
-    raw ``pyarrow.RecordBatch`` objects — no pandas materialization at
-    all, which removes the last copy on the Python side (pandas builds
-    object arrays for binary columns; Arrow keeps the payload bytes in
-    the original buffers). Same output, pinned equal by
-    ``test_multimodal.test_arrow_twin_equals_pandas_featurizer``; the
-    production guidance is mapInArrow for byte-crunching featurizers,
-    mapInPandas where the body wants dataframe ergonomics.
-    """
-    import numpy as np
-
-    out_schema = "doc_id long, hist array<double>"
-    width = 256 // buckets
-
-    def featurize(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            doc_ids = batch.column("doc_id")
-            hists = []
-            for payload in batch.column("payload"):
-                arr = np.frombuffer(payload.as_py(), dtype=np.uint8)
-                h = np.bincount(arr // width, minlength=buckets)
-                total = h.sum()
-                hists.append((h / total if total else h).round(6).tolist())
-            yield pa.RecordBatch.from_arrays(
-                [doc_ids, pa.array(hists, type=pa.list_(pa.float64()))],
-                names=["doc_id", "hist"],
-            )
-
-    return _spread(media.select("doc_id", "payload")).mapInArrow(
-        featurize, out_schema
-    )
-
-
 def mm_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long form (doc_id, bucket, share) — posexploded so every cell
     is a scalar the driver's hasher can sort and hash (arrays are not

@@ -37,6 +37,8 @@ rounded, so Spark and DuckDB produce bit-identical doubles.
 
 from __future__ import annotations
 
+import textwrap
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
@@ -400,18 +402,24 @@ def rec_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: every blocked customer pair within ER_MAX_DISTANCE edits, as the
+#: FROM/WHERE tail of a SELECT over aliases ``a`` and ``b`` (the exact
+#: pair set the oracles, the banding report and the clusters dual share)
+_MATCH_PAIRS = f"""FROM customer a
+JOIN customer b
+  ON a.c_nationkey = b.c_nationkey
+ AND a.c_mktsegment = b.c_mktsegment
+ AND a.c_custkey < b.c_custkey
+WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_DISTANCE}"""
+
+
 ER_PAIRS_ORACLE = f"""
 SELECT a.c_custkey AS custkey_a,
        b.c_custkey AS custkey_b,
        a.c_nationkey AS nationkey,
        a.c_mktsegment AS mktsegment,
        CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS name_distance
-FROM customer a
-JOIN customer b
-  ON a.c_nationkey = b.c_nationkey
- AND a.c_mktsegment = b.c_mktsegment
- AND a.c_custkey < b.c_custkey
-WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_DISTANCE}
+{_MATCH_PAIRS}
 ORDER BY name_distance, custkey_a, custkey_b
 LIMIT {ER_TOP_K}
 """
@@ -502,12 +510,7 @@ blocked AS (
 nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_banded FROM cand),
 tm AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_true
-  FROM customer a
-  JOIN customer b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.c_mktsegment = b.c_mktsegment
-   AND a.c_custkey < b.c_custkey
-  WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_DISTANCE}
+{textwrap.indent(_MATCH_PAIRS, '  ')}
 ),
 bm AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_bm
@@ -539,12 +542,7 @@ FROM blocked CROSS JOIN nb CROSS JOIN tm CROSS JOIN bm CROSS JOIN hot
 ER_CLUSTERS_ORACLE = f"""
 WITH RECURSIVE pairs AS (
     SELECT a.c_custkey AS ka, b.c_custkey AS kb
-    FROM customer a
-    JOIN customer b
-      ON a.c_nationkey = b.c_nationkey
-     AND a.c_mktsegment = b.c_mktsegment
-     AND a.c_custkey < b.c_custkey
-    WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_DISTANCE}
+{textwrap.indent(_MATCH_PAIRS, '    ')}
 ),
 edges AS (
     SELECT ka AS src, kb AS dst FROM pairs
@@ -582,12 +580,7 @@ QUERIES = {
 _CLUSTERS_DUAL = packed_closure_sql(
     prelude=f"""pairs AS (
   SELECT a.c_custkey AS ka, b.c_custkey AS kb
-  FROM customer a
-  JOIN customer b
-    ON a.c_nationkey = b.c_nationkey
-   AND a.c_mktsegment = b.c_mktsegment
-   AND a.c_custkey < b.c_custkey
-  WHERE levenshtein(a.c_name, b.c_name) <= {ER_MAX_DISTANCE}),
+{textwrap.indent(_MATCH_PAIRS, '  ')}),
 edges AS (
   SELECT ka AS src, kb AS dst FROM pairs
   UNION ALL

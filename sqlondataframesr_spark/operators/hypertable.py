@@ -23,19 +23,18 @@ identically in both dialects.
 Cache hygiene: the materialization directory is keyed by the EVENTS
 FILE metadata (mtime+size, the load_se r8-ADVICE discipline) plus the
 materializer source — regenerated data or an algorithm edit rolls the
-key; a live directory is never rewritten (atomic rename, losers clean
-up).
+key; a live directory is never rewritten
+(:func:`sqlondataframesr_spark.tmpcache.write_once`).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
+from ..tmpcache import cache_dir, write_once
 
 #: days (calendar buckets, counting the max-ts day) served from RAW
 #: events; everything older is served from the materialized rollup
@@ -102,10 +101,9 @@ def _mat_dir(sf_dir: str) -> str:
         meta = f"{st.st_mtime_ns}:{st.st_size}"
     except OSError:
         meta = "missing"
-    ver = hashlib.md5(
-        f"{sf_dir}:{meta}:{RAW_TAIL_DAYS}:{inspect.getsource(_rollup_frame)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"sqlondataframesr_hyper_{ver}")
+    return cache_dir(
+        "hyper", sf_dir, meta, RAW_TAIL_DAYS, inspect.getsource(_rollup_frame)
+    )
 
 
 def _materialize(spark: SparkSession, sf_dir: str, split=None) -> tuple[str, "object"]:
@@ -120,9 +118,8 @@ def _materialize(spark: SparkSession, sf_dir: str, split=None) -> tuple[str, "ob
     # predicate pushes into the parquet scan / prunes date partitions —
     # a to_date(date_trunc(ts)) comparison would not
     split_ts = dt.datetime.combine(split, dt.time.min)
-    d = _mat_dir(sf_dir)
-    if not os.path.isdir(d):
-        stage = f"{d}.stage.{os.getpid()}"
+
+    def build(stage: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             _rollup_frame(ev.filter(F.col("ts") < F.lit(split_ts)))
@@ -130,13 +127,20 @@ def _materialize(spark: SparkSession, sf_dir: str, split=None) -> tuple[str, "ob
             .write.mode("overwrite")
             .parquet(stage)
         )
-        try:
-            os.rename(stage, d)  # atomic; loser of a race cleans up
-        except OSError:
-            import shutil
 
-            shutil.rmtree(stage, ignore_errors=True)
-    return d, split
+    return write_once(_mat_dir(sf_dir), build), split
+
+
+def _view(rollup: DataFrame, served_from) -> DataFrame:
+    """The view's projection of rollup rows: long counts, cents back
+    to dollars."""
+    return rollup.select(
+        "bucket_day",
+        "event_type",
+        F.col("n_events").cast("long").alias("n_events"),
+        F.round(F.col("cents").cast("double") / F.lit(100.0), 2).alias("total_value"),
+        served_from,
+    )
 
 
 def evt_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,18 +161,7 @@ def evt_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev0 = load_table(spark, sf_dir, "events")
     split_probe = _split_day(spark, sf_dir)
     if split_probe is None:  # empty hypertable: the view is empty too
-        return (
-            _rollup_frame(ev0)
-            .select(
-                "bucket_day",
-                "event_type",
-                F.col("n_events").cast("long").alias("n_events"),
-                F.round(F.col("cents").cast("double") / F.lit(100.0), 2).alias(
-                    "total_value"
-                ),
-                F.lit("raw").alias("served_from"),
-            )
-        )
+        return _view(_rollup_frame(ev0), F.lit("raw").alias("served_from"))
     d, split = _materialize(spark, sf_dir, split=split_probe)
     split_ts = dt.datetime.combine(split, dt.time.min)
     mat = spark.read.parquet(d).withColumn("served_from", F.lit("materialized"))
@@ -178,18 +171,8 @@ def evt_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail = _rollup_frame(ev.filter(F.col("ts") >= F.lit(split_ts))).withColumn(
         "served_from", F.lit("raw")
     )
-    return (
-        mat.unionByName(tail)
-        .select(
-            "bucket_day",
-            "event_type",
-            F.col("n_events").cast("long").alias("n_events"),
-            F.round(F.col("cents").cast("double") / F.lit(100.0), 2).alias(
-                "total_value"
-            ),
-            "served_from",
-        )
-        .orderBy("bucket_day", "event_type")
+    return _view(mat.unionByName(tail), "served_from").orderBy(
+        "bucket_day", "event_type"
     )
 
 

@@ -89,6 +89,19 @@ def _nation_monthly_dollars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _moment_sums(n: str) -> list:
+    """Exact BIGINT sufficient statistics of (x, y) per group: the row
+    count as ``n`` and sx, sy, sxy, sxx, syy."""
+    return [
+        F.count(F.lit(1)).cast("long").alias(n),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    ]
+
+
 def ml_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation linear revenue trend: OLS of monthly revenue (whole
     dollars) against month index, via exact sufficient statistics.
@@ -97,14 +110,7 @@ def ml_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     r2) — one row per nation, ordered by n_name.
     """
     monthly = _nation_monthly_dollars(spark, sf_dir)
-    stats = monthly.groupBy("n_name").agg(
-        F.count(F.lit(1)).cast("long").alias("n_months"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
+    stats = monthly.groupBy("n_name").agg(*_moment_sums("n_months"))
     # mirrored token-for-token in the oracle (exact ints -> IEEE ops)
     return stats.selectExpr(
         "n_name",
@@ -267,14 +273,7 @@ def ml_discount_qty_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("y") * F.col("y")).alias("syy"),
-        )
+        .agg(*_moment_sums("n_lines"))
     )
     # mirrored token-for-token in the oracle
     return stats.selectExpr(

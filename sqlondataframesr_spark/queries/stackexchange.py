@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.dialect import dual
 from ..materialize import materialize
 from ..sources.io import read_csv
+from ..tmpcache import cache_dir, write_once
 
 SCHEMAS = {
     "Users": "Id INT, DisplayName STRING, Age INT, Location STRING, Reputation INT",
@@ -546,10 +547,10 @@ TASKS = {
 # DuckDB that has only the star-schema parquet views — so the driver
 # wrappers ignore sf_dir (this workload ships its own schema) and
 # point BOTH engines at one deterministic fixture: byte-stable CSVs
-# (seed pinned, random.Random) generated under the system temp dir,
-# built atomically (generate into a staging dir, os.rename) so a
-# concurrent driver/pytest/bench process never reads a half-written
-# file. The oracle SQL is made self-contained by prefixing CTE views
+# (seed pinned, random.Random) generated under the system temp dir
+# by tmpcache.write_once, so a concurrent driver/pytest/bench process
+# never reads a half-written file. The oracle SQL is made
+# self-contained by prefixing CTE views
 # over read_csv_auto of the same CSVs — identical bytes feed both
 # engines, same differential contract as tests/test_stackexchange.py.
 
@@ -564,26 +565,14 @@ def fixture_dir(scale: float = 1.0) -> str:
     bench-time reference-magnitude fixture; the driver gate stays on
     scale=1.
     """
-    import hashlib
     import inspect
-    import tempfile
 
     # normalize scale (ADVICE r5): 100 and 100.0 must key the same
     # dir or an int/float caller regenerates an identical fixture
-    ver = hashlib.md5(
-        f"{inspect.getsource(generate_fixture)}:42:{float(scale):g}".encode()
-    ).hexdigest()[:12]
-    d = os.path.join(tempfile.gettempdir(), f"sqlondataframesr_se_fixture_{ver}")
-    if not os.path.isdir(d):
-        stage = f"{d}.stage.{os.getpid()}"
-        generate_fixture(stage, scale=scale)
-        try:
-            os.rename(stage, d)  # atomic; loser of a race cleans up
-        except OSError:
-            import shutil
-
-            shutil.rmtree(stage, ignore_errors=True)
-    return d
+    d = cache_dir(
+        "se_fixture", inspect.getsource(generate_fixture), 42, f"{float(scale):g}"
+    )
+    return write_once(d, partial(generate_fixture, scale=scale))
 
 
 #: The literal task outputs carry SQL NULLs (reference parity — the

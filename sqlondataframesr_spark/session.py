@@ -154,16 +154,14 @@ def configure(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "sqlondataframesr-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
     cpus = cpus or default_parallelism()
-    shuffle_partitions = shuffle_partitions or cpus
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )

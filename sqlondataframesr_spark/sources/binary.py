@@ -5,9 +5,9 @@ metadata extraction is all codegen over the hex string).
 
 The fixture is a deterministic set of N_FILES small binary files with
 REAL magic-number prefixes (PNG / JPEG / RIFF / MP4-ftyp) and
-md5-chained bodies — generated once under /tmp with the same
-content-hash-keyed atomic-rename cache as the StackExchange CSV
-fixture (stackexchange.fixture_dir). The DuckDB oracle reads the SAME
+md5-chained bodies — generated once under the temp dir by the same
+write-once cache as the StackExchange CSV fixture
+(:mod:`sqlondataframesr_spark.tmpcache`). The DuckDB oracle reads the SAME
 files via ``read_blob`` — a genuinely independent second engine pass
 over the bytes on disk.
 
@@ -30,11 +30,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dialect import dual
+from ..tmpcache import cache_dir, write_once
 
 #: number of fixture files (16 per media type)
 N_FILES = 64
@@ -65,28 +65,18 @@ def fixture_path() -> str:
     Keyed by the generator's source so an edit rolls the cache."""
     import inspect
 
-    ver = hashlib.md5(
-        f"{inspect.getsource(_content)}:{N_FILES}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"sqlondataframesr_blobs_{ver}")
+    return cache_dir("blobs", inspect.getsource(_content), N_FILES)
+
+
+def _write_blobs(stage: str) -> None:
+    for i in range(N_FILES):
+        with open(os.path.join(stage, f"{i:04d}.bin"), "wb") as f:
+            f.write(_content(i))
 
 
 def fixture_dir() -> str:
     """Create (once, atomically) and return the binary fixture."""
-    d = fixture_path()
-    if not os.path.isdir(d):
-        stage = f"{d}.stage.{os.getpid()}"
-        os.makedirs(stage, exist_ok=True)
-        for i in range(N_FILES):
-            with open(os.path.join(stage, f"{i:04d}.bin"), "wb") as f:
-                f.write(_content(i))
-        try:
-            os.rename(stage, d)  # atomic; loser of a race cleans up
-        except OSError:
-            import shutil
-
-            shutil.rmtree(stage, ignore_errors=True)
-    return d
+    return write_once(fixture_path(), _write_blobs)
 
 
 #: CASE over the UPPERCASE hex prefix — identical text works in both

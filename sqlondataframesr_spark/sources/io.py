@@ -2,28 +2,24 @@
 
 The reference's only source is CSV-with-inferred-schema
 (``read.csv("Users.csv")`` x7, RDataFramesSQL.Rmd:61-67) and its only
-sink is the in-memory data.frame. Spark-native equivalents, plus the
-formats a real corpus pipeline needs:
+sink is the in-memory data.frame. The package reads every other format
+with Spark's own readers (``spark.read.json/orc/text``, the
+``binaryFile`` source in sources/binary.py) and writes with
+``df.write``; this module keeps only what adds a contract of its own:
 
 - :func:`read_csv` — header + schema inference (the reference's exact
   semantics) or an explicit schema for production paths. Schema
   inference costs a full extra pass over the data — at 100 TB always
-  pass the schema.
-- :func:`read_json` — JSON-lines with explicit schema (inference on
-  JSON is even more expensive than CSV).
-- :func:`write_parquet` — the canonical at-rest format: columnar,
-  compressed, stats-bearing (min/max per row group power predicate
-  pushdown on re-read). ``partition_by`` produces
-  ``col=value/part-*.parquet`` layout → partition pruning turns
-  point/range queries on the partition key into file-listing, no scan.
-- :func:`write_csv` — interchange only; no pushdown, no types on
-  re-read without a schema. Not a 100 TB format.
-- :func:`register_csv_dir` — the sqldf-style workflow: load every
-  ``*.csv`` in a directory and register each as a temp view named
-  after the file (the analogue of the reference's 7 ``read.csv``
-  calls feeding sqldf's implicit catalog).
+  pass the schema. The sqldf-style load-every-table workflow is
+  ``queries/stackexchange.load_se``.
+- :func:`compact_parquet` — small-file compaction sized from real
+  file statuses.
+- :func:`write_bucketed` — shuffle-free joins on the bucket key.
+- :func:`write_sharded` — size-bounded training-data export.
+- :func:`write_clustered` / :func:`write_zordered` — range- and
+  Z-order-clustered layouts for footer data skipping.
 
-Scale notes: all readers produce splittable scans (CSV/JSON split by
+Scale notes: all readers produce splittable scans (CSV split by
 newline at block boundaries, parquet by row group); writers emit one
 file per task — control output file count with
 ``df.repartition(n)`` (or ``spark.sql.files.maxRecordsPerFile``)
@@ -54,45 +50,6 @@ def read_csv(
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.csv(path)
-
-
-def read_json(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """JSON-lines scan with (strongly recommended) explicit schema."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.json(path)
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "error",
-) -> None:
-    """Columnar sink; ``partition_by`` lays out ``col=value/`` dirs so
-    re-reads prune partitions before touching data."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — the other columnar at-rest format (Hive ecosystems);
-    same pushdown/pruning machinery as parquet, self-described schema."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "error") -> None:
-    df.write.mode(mode).orc(path)
 
 
 def compact_parquet(
@@ -143,64 +100,6 @@ def compact_parquet(
         out = df.repartition(n_out)
         out.write.mode(mode).parquet(dst)
     return n_out
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Raw-file ingestion via the built-in ``binaryFile`` source —
-    how image/audio/video payloads actually enter a multimodal
-    pipeline before they become the typed ``payload: binary`` column
-    (`multimodal/media.py` works on exactly that shape downstream).
-
-    Output schema (fixed by the source): path, modificationTime,
-    length, content (binary). ``glob`` filters by filename pattern
-    (``pathGlobFilter``, e.g. ``*.png``) AT THE LISTING, so excluded
-    files are never opened. Scale: each file is one row; the source
-    parallelizes over files and caps per-task bytes via
-    ``spark.sql.files.maxPartitionBytes``. Pair with a metadata
-    sidecar join (path → doc_id) rather than parsing ids out of
-    paths with UDFs.
-    """
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    return r.load(path)
-
-
-def read_text(
-    spark: SparkSession, path: str, whole: bool = False
-) -> DataFrame:
-    """Line-oriented text scan (``value: string`` per line), or whole
-    files as single rows with ``wholetext`` — the raw-corpus entry
-    point before parsing gives it a schema. Splittable per line
-    (uncompressed), so 100 TB of logs parallelizes without any layout
-    preparation."""
-    return spark.read.text(path, wholetext=whole)
-
-
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, mode: str = "error"
-) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def register_csv_dir(
-    spark: SparkSession, directory: str, **options: str
-) -> dict[str, DataFrame]:
-    """Load every ``*.csv`` in ``directory`` and register temp views
-    named after the files — the reference's load-then-query workflow
-    (7 ``read.csv`` calls + sqldf implicit catalog) in one call."""
-    import glob
-    import os
-
-    out: dict[str, DataFrame] = {}
-    for f in sorted(glob.glob(os.path.join(directory, "*.csv"))):
-        name = os.path.splitext(os.path.basename(f))[0]
-        df = read_csv(spark, f, **options)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def write_bucketed(

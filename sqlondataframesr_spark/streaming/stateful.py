@@ -5,10 +5,17 @@ declarative cases; this is the escape hatch for *imperative* per-key
 state machines — fraud counters, session enrichment, CDC merge,
 anything where the update rule is code, not an aggregate expression.
 
-Operator here: per-user running totals. State = (event count, value
-sum); each micro-batch folds its rows into the state and emits the
-updated snapshot — so the sink always holds the latest per-user
-totals (output mode "update").
+Operators here, both in output mode "update" (each micro-batch folds
+its rows into the key's state and emits the updated snapshot, so the
+sink always holds the latest per-user row):
+
+- :func:`running_user_totals` — state = (event count, value sum);
+- :func:`user_type_profile` — per-user event-type profile.
+
+Spark 4's transformWithState is not used: its Python state-server
+protocol imports ``google.protobuf``, which is not a dependency of
+this package, so an operator on it could not run where the package
+does.
 
 Mechanics worth knowing at 100 TB:
 
@@ -33,6 +40,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
+PROFILE_SCHEMA = (
+    "user_id long, n_events long, n_types long, top_type string, top_type_n long"
+)
 STATE_SCHEMA = "n long, total double"
 
 
@@ -63,18 +73,14 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def user_type_profile_gs(events: DataFrame) -> DataFrame:
-    """GroupState twin of :func:`user_type_profile`: the SAME per-user
-    event-type profile (total events, distinct types, deterministic
-    dominant type + its count) maintained with applyInPandasWithState,
-    which has no protobuf dependency — so the stream≡batch equivalence
-    of this output shape is testable on EVERY build (VERDICT r9
-    item 5: the TWS test is environment-gated; this twin is not).
+def user_type_profile(events: DataFrame) -> DataFrame:
+    """Per-user event-type profile: total events, distinct types and
+    the dominant type (max count, lexicographic tie) with its count.
+    Emits an updated snapshot for every user seen in a micro-batch.
 
     State: parallel arrays (types, counts) + total — GroupState offers
     one struct blob, so the whole profile is read-modify-written per
-    batch (the trade the TWS MapState variant avoids; same output,
-    different state-store access pattern).
+    batch; its size is O(distinct types per user).
     """
 
     def update(key, pdfs, state):
@@ -110,109 +116,8 @@ def user_type_profile_gs(events: DataFrame) -> DataFrame:
         "user_id"
     ).applyInPandasWithState(
         update,
-        outputStructType=TWS_OUTPUT_SCHEMA,
+        outputStructType=PROFILE_SCHEMA,
         stateStructType="types array<string>, counts array<long>, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x) — the successor API to
-# applyInPandasWithState: named state variables (value/list/map) with
-# per-state TTL, timers, and schema evolution, against the RocksDB
-# state store. Kept alongside the GroupState operator above so the repo
-# demonstrates BOTH stateful surfaces; new pipelines should prefer this
-# one.
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = (
-    "user_id long, n_events long, n_types long, top_type string, top_type_n long"
-)
-
-
-def _make_profile_processor():
-    """Build the StatefulProcessor class lazily (import-safe on
-    builds without the TWS API) and return an instance.
-
-    State: one MapState event_type -> count plus one ValueState total
-    event count — the "per-key profile" shape (fraud features, user
-    segmentation) that MapState exists for: per-type counts update
-    point-wise without rewriting one blob, which is exactly what the
-    RocksDB store optimizes.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTypeProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._types = handle.getMapState(
-                "type_counts", "t string", "cnt long"
-            )
-            self._total = handle.getValueState("total", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            user_id = key[0]
-            n = self._total.get()[0] if self._total.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-                for t, c in pdf["event_type"].value_counts().items():
-                    prev = self._types.getValue((t,))
-                    self._types.updateValue(
-                        (t,), (int(c) + (prev[0] if prev else 0),)
-                    )
-            self._total.update((n,))
-            counts = {k[0]: v[0] for k, v in self._types.iterator()}
-            # deterministic dominant type: max count, lexicographic tie
-            top_type = min(
-                (t for t, c in counts.items() if c == max(counts.values()))
-            )
-            yield pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "n_events": n,
-                        "n_types": len(counts),
-                        "top_type": top_type,
-                        "top_type_n": counts[top_type],
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserTypeProfile()
-
-
-def user_type_profile(events: DataFrame) -> DataFrame:
-    """Per-user event-type profile maintained with transformWithState:
-    total events, distinct types, dominant type (+its count). Emits an
-    updated snapshot for every user seen in a micro-batch.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — TWS's state backend —
-    and ``google.protobuf`` on the Python side (the TWS state-server
-    protocol, ``pyspark.sql.streaming.proto``); on builds without
-    protobuf the query fails at initialization, and the pytest
-    (`test_tws_user_type_profile_matches_batch`) skips accordingly —
-    use :func:`running_user_totals` (applyInPandasWithState) there.
-
-    Scale: identical shuffle contract to applyInPandasWithState (one
-    shuffle on user_id per batch, state co-located), but state is
-    UPDATED point-wise per event type instead of read-modify-write of
-    one tuple, and idle keys can be TTL'd per state variable.
-    """
-    return events.select("user_id", "event_type").groupBy(
-        "user_id"
-    ).transformWithStateInPandas(
-        statefulProcessor=_make_profile_processor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

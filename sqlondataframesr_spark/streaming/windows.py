@@ -60,13 +60,6 @@ def _raw_events_schema(spark: SparkSession, sf_dir: str):
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
-def _canon_ts(df: DataFrame) -> DataFrame:
-    """Canonicalize ts to session-TZ timestamp (same instant DuckDB
-    sees); delegates to the catalog's by-type canonicalizer so stream
-    and batch share one invariant."""
-    return canonicalize_ts(df)
-
-
 def _stream_dir(sf_dir: str) -> str:
     """The file stream source requires a *directory*; the testdata ships
     one parquet file per table, so expose it through a symlink dir."""
@@ -98,7 +91,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(_stream_dir(sf_dir))
     )
-    return _canon_ts(raw)
+    return canonicalize_ts(raw)
 
 
 def with_watermark(events: DataFrame, delay: str = WATERMARK_DELAY) -> DataFrame:

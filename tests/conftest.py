@@ -12,7 +12,7 @@ SF_DIR_MID = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(app_name="tests", cpus=8, shuffle_partitions=8, driver_memory="8g")
+    spark = get_spark(app_name="tests", cpus=8, driver_memory="8g")
     yield spark
 
 

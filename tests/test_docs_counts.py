@@ -58,30 +58,6 @@ def test_every_query_has_an_oracle_and_duals_are_registered_queries():
     assert set(s) <= set(q), set(s) - set(q)
 
 
-def test_tws_evidence_row_matches_environment():
-    """The TWS stream≡batch evidence row in COVERAGE.md must track the
-    environment (VERDICT r10 item 7): while google.protobuf is absent
-    the row says KNOWN-ABSENT; the moment protobuf becomes importable
-    the importorskip-gated TWS test starts executing AND this guard
-    forces the row to be flipped to EXECUTED in the same change — the
-    documentation can never silently lag the evidence."""
-    import importlib.util
-
-    try:  # find_spec raises if the parent `google` package is absent
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        has_protobuf = False
-    text = _read("COVERAGE.md")
-    assert "TWS-EVIDENCE:" in text, "COVERAGE.md lost the TWS evidence row"
-    if has_protobuf:
-        assert "TWS-EVIDENCE: EXECUTED" in text, (
-            "google.protobuf is now available: run the TWS stream≡batch "
-            "test and flip the COVERAGE.md row to TWS-EVIDENCE: EXECUTED"
-        )
-    else:
-        assert "TWS-EVIDENCE: KNOWN-ABSENT" in text
-
-
 def test_coverage_map_is_current():
     """The generated per-query gate map in COVERAGE.md must match a
     fresh regeneration from the live registry + the evidence rounds

@@ -1,4 +1,4 @@
-"""Round-trip tests for the CSV/JSON/parquet sources & sinks."""
+"""Tests for the CSV reader and the layout writers of sources/io.py."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from sqlondataframesr_spark.sources import io
 def test_csv_roundtrip_inferred_schema(spark, sf_dir, tmp_path):
     nation = load_table(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_csv")
-    io.write_csv(nation, path)
+    nation.write.option("header", "true").csv(path)
     back = io.read_csv(spark, path)
     assert not compare_frames(back, nation)
     # inference recovered the numeric key types, not strings
@@ -25,58 +25,10 @@ def test_csv_roundtrip_inferred_schema(spark, sf_dir, tmp_path):
 def test_csv_explicit_schema_roundtrip(spark, sf_dir, tmp_path):
     region = load_table(spark, sf_dir, "region")
     path = str(tmp_path / "region_csv")
-    io.write_csv(region, path)
+    region.write.option("header", "true").csv(path)
     back = io.read_csv(spark, path, schema=region.schema)
     assert not compare_frames(back, region)
     assert back.schema == region.schema
-
-
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_json")
-    docs.write.json(path)
-    back = io.read_json(spark, path, schema=docs.schema)
-    assert not compare_frames(back, docs)
-
-
-def test_partitioned_parquet_write_prunes(spark, sf_dir, tmp_path):
-    docs = load_table(spark, sf_dir, "documents")
-    path = str(tmp_path / "docs_by_lang")
-    io.write_parquet(docs, path, partition_by=["lang"])
-    # hive-style layout on disk
-    assert glob.glob(os.path.join(path, "lang=en"))
-    back = spark.read.parquet(path)
-    q = back.filter(F.col("lang") == "en").select("doc_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # partition pruning: the lang filter is satisfied by directory
-    # listing, so no per-row lang predicate survives in the scan
-    assert "PartitionFilters: [" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
-    en_ids = {r["doc_id"] for r in q.collect()}
-    expect = {r["doc_id"] for r in docs.filter("lang = 'en'").collect()}
-    assert en_ids == expect
-
-
-def test_register_csv_dir(spark, sf_dir, tmp_path):
-    for name in ("region", "nation"):
-        io.write_csv(load_table(spark, sf_dir, name), str(tmp_path / f"{name}.csv"))
-    # write_csv makes a dir of part files; register_csv_dir expects
-    # *.csv entries — the dir names end in .csv, which glob matches
-    views = io.register_csv_dir(spark, str(tmp_path))
-    assert set(views) == {"region", "nation"}
-    got = spark.sql(
-        "SELECT r.r_name, count(*) AS n FROM region r JOIN nation n"
-        " ON n.n_regionkey = r.r_regionkey GROUP BY r.r_name ORDER BY r.r_name"
-    ).collect()
-    assert len(got) == 5 and all(r["n"] == 5 for r in got)
-
-
-def test_orc_roundtrip(spark, sf_dir, tmp_path):
-    nation = load_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    io.write_orc(nation, path)
-    back = io.read_orc(spark, path)
-    assert back.schema == nation.schema
-    assert sorted(r["n_nationkey"] for r in back.collect()) == list(range(25))
 
 
 def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
@@ -118,34 +70,20 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-def test_binary_file_source_reads_payload_bytes(spark, tmp_path):
-    """binaryFile ingestion: bytes round-trip exactly, the glob filter
-    excludes non-matching files at listing time, and the output shape
-    is the multimodal payload contract (path + binary content)."""
-    payloads = {f"doc{i}.bin": bytes([i] * (10 + i)) for i in range(5)}
-    for name, blob in payloads.items():
-        (tmp_path / name).write_bytes(blob)
-    (tmp_path / "ignore.txt").write_text("not binary payload")
+def test_binary_file_source_reads_payload_bytes(spark, sf_dir):
+    """binaryFile ingestion (sources/binary.py): every fixture file is
+    listed once, with its exact byte count and the checksum of its
+    generated bytes."""
+    import hashlib
 
-    df = io.read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = {os.path.basename(r.path): bytes(r.content) for r in df.collect()}
-    assert rows == payloads
-    assert {f.name for f in df.schema.fields} == {
-        "path", "modificationTime", "length", "content"
-    }
-    # length column matches the actual byte count (usable for
-    # size-partitioning upstream of decode)
-    for r in df.collect():
-        assert r.length == len(bytes(r.content))
+    from sqlondataframesr_spark.sources import binary
 
-
-def test_text_source_lines_and_wholetext(spark, tmp_path):
-    (tmp_path / "a.txt").write_text("line1\nline2\n")
-    (tmp_path / "b.txt").write_text("line3\n")
-    lines = io.read_text(spark, str(tmp_path))
-    assert sorted(r.value for r in lines.collect()) == ["line1", "line2", "line3"]
-    whole = io.read_text(spark, str(tmp_path), whole=True)
-    assert sorted(r.value for r in whole.collect()) == ["line1\nline2\n", "line3\n"]
+    rows = binary.mm_binary_ingest(spark, sf_dir).collect()
+    blobs = [binary._content(i) for i in range(binary.N_FILES)]
+    assert [(r.file_name, r.n_bytes, r.content_md5) for r in rows] == [
+        (f"{i:04d}.bin", len(b), hashlib.md5(b.hex().upper().encode()).hexdigest())
+        for i, b in enumerate(blobs)
+    ]
 
 
 def test_compact_parquet_merges_small_files(spark, sf_dir, tmp_path):

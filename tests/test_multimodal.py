@@ -204,25 +204,6 @@ def test_audio_features_match_local_numpy(spark, sf_dir):
             assert r.clip_frac == round(float(np.mean(np.abs(pcm) >= 127.0)), 6)
 
 
-def test_arrow_twin_equals_pandas_featurizer(spark, sf_dir):
-    """mapInArrow and mapInPandas bodies of the byte-histogram
-    featurizer must produce identical rows — pinning that the
-    Arrow-native path (no pandas materialization) is a drop-in."""
-    from sqlondataframesr_spark.multimodal.media import (
-        byte_histogram,
-        byte_histogram_arrow,
-        media_frame,
-    )
-
-    media = media_frame(spark, sf_dir)
-    a = byte_histogram(media).orderBy("doc_id").collect()
-    b = byte_histogram_arrow(media).orderBy("doc_id").collect()
-    assert len(a) == len(b) > 0
-    for ra, rb in zip(a, b):
-        assert ra.doc_id == rb.doc_id
-        assert ra.hist == rb.hist
-
-
 def test_binary_fixture_is_deterministic_and_balanced():
     """The blob fixture must be bit-stable across regenerations (the
     oracle and the Spark side read it at different times) and carry

@@ -19,7 +19,7 @@ import os
 
 import pytest
 
-from sqlondataframesr_spark.check import compare_spark_duckdb
+from sqlondataframesr_spark.check import compare_rows, spark_rows
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -38,7 +38,7 @@ def skew_dir(tmp_path_factory):
 
 
 
-def test_user_event_caps_bind_on_the_bot(spark, skew_dir):
+def test_user_event_caps_bind_on_the_bot(spark, skew_dir, oracle_rows):
     """The 80-event user caps (sessionize / SCD2 / attribution) all
     bind on the planted bot (~1000 events), and each report matches
     its oracle on the skew tree."""
@@ -55,10 +55,12 @@ def test_user_event_caps_bind_on_the_bot(spark, skew_dir):
         assert r.cap_binds, name
         assert r.n_users_dropped >= 1, name
         assert r.max_user_events >= 900, name  # the bot
-        assert not compare_spark_duckdb(q[name](spark, skew_dir), o[name], skew_dir), name
+        assert not compare_rows(
+            *spark_rows(q[name](spark, skew_dir)), *oracle_rows(skew_dir, o[name])
+        ), name
 
 
-def test_basket_cap_binds_on_the_mega_basket(spark, skew_dir):
+def test_basket_cap_binds_on_the_mega_basket(spark, skew_dir, oracle_rows):
     from sqlondataframesr_spark import registry
 
     q, o = registry.queries(), registry.oracles()
@@ -66,27 +68,30 @@ def test_basket_cap_binds_on_the_mega_basket(spark, skew_dir):
     assert r.cap_binds and r.n_baskets_dropped >= 1
     assert r.max_basket_size >= 250  # the planted ~300-part basket
     # and the capped operator itself stays oracle-EXACT while binding
-    assert not compare_spark_duckdb(
-        q["basket_top_pairs_capped"](spark, skew_dir), o["basket_top_pairs_capped"], skew_dir
+    assert not compare_rows(
+        *spark_rows(q["basket_top_pairs_capped"](spark, skew_dir)),
+        *oracle_rows(skew_dir, o["basket_top_pairs_capped"]),
     )
 
 
-def test_gram_df_caps_bind_on_the_hot_phrase(spark, skew_dir):
+def test_gram_df_caps_bind_on_the_hot_phrase(spark, skew_dir, oracle_rows):
     from sqlondataframesr_spark import registry
 
     q, o = registry.queries(), registry.oracles()
     r = q["dedup_substring_cap_report"](spark, skew_dir).collect()[0]
     assert r.cap_binds and r.max_gram_df >= 100  # 100 docs share it
-    assert not compare_spark_duckdb(
-        q["dedup_substring_13gram_capped"](spark, skew_dir), o["dedup_substring_13gram_capped"], skew_dir
+    assert not compare_rows(
+        *spark_rows(q["dedup_substring_13gram_capped"](spark, skew_dir)),
+        *oracle_rows(skew_dir, o["dedup_substring_13gram_capped"]),
     )
     # the word-3-shingle DF cap binds too (same phrase, 14 shingles)
-    assert not compare_spark_duckdb(
-        q["dedup_ngram_jaccard_capped"](spark, skew_dir), o["dedup_ngram_jaccard_capped"], skew_dir
+    assert not compare_rows(
+        *spark_rows(q["dedup_ngram_jaccard_capped"](spark, skew_dir)),
+        *oracle_rows(skew_dir, o["dedup_ngram_jaccard_capped"]),
     )
 
 
-def test_capped_user_ops_stay_oracle_exact_while_binding(spark, skew_dir):
+def test_capped_user_ops_stay_oracle_exact_while_binding(spark, skew_dir, oracle_rows):
     """The point of cap-replication: with the bot present and the cap
     BINDING, the capped operators still match their oracles exactly."""
     from sqlondataframesr_spark import registry
@@ -97,7 +102,9 @@ def test_capped_user_ops_stay_oracle_exact_while_binding(spark, skew_dir):
         "cdc_scd2_summary_capped",
         "evt_linear_attribution_capped",
     ):
-        assert not compare_spark_duckdb(q[name](spark, skew_dir), o[name], skew_dir), name
+        assert not compare_rows(
+            *spark_rows(q[name](spark, skew_dir)), *oracle_rows(skew_dir, o[name])
+        ), name
 
 
 def test_dense_cluster_and_pair_cap(spark, skew_dir):

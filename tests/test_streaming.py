@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import uuid
 
-from sqlondataframesr_spark.catalog import load_table
+from sqlondataframesr_spark.catalog import canonicalize_ts, load_table
 from sqlondataframesr_spark.check import compare_frames
 from sqlondataframesr_spark.streaming import windows as W
 
@@ -202,65 +202,9 @@ def test_windowed_agg_correct_across_micro_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = W.tumbling(W.with_watermark(W._canon_ts(stream)))
+    agg = W.tumbling(W.with_watermark(canonicalize_ts(stream)))
     got = _run_stream(spark, agg)
     assert not compare_frames(got, W.tumbling(batch_events))
-
-
-def test_tws_user_type_profile_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas over availableNow: the last emitted
-    per-user profile must equal the batch aggregate (count, distinct
-    types, deterministic dominant type).
-
-    TWS's state-server protocol needs google.protobuf at runtime
-    (pyspark.sql.streaming.proto); containers without it can't run the
-    operator at all — skip rather than fail. The skip is purely
-    environmental, not a coverage hole: the SAME output contract is
-    verified on every build by test_gs_user_type_profile_matches_batch
-    below via the protobuf-free applyInPandasWithState twin
-    (user_type_profile_gs)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from sqlondataframesr_spark.streaming.stateful import user_type_profile
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _run_stream(
-            spark, user_type_profile(W.stream_events(spark, sf_dir)), mode="update"
-        )
-        rows = got.collect()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    latest = {}
-    for r in rows:  # memory sink appends per batch in order; keep last
-        latest[r["user_id"]] = (r["n_events"], r["n_types"], r["top_type"], r["top_type_n"])
-    ev = load_table(spark, sf_dir, "events")
-    per_type = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
-    batch = {
-        r["user_id"]: (r["n"], r["k"], r["top"], r["topn"])
-        for r in per_type.groupBy("user_id")
-        .agg(
-            F.sum("c").alias("n"),
-            F.count(F.lit(1)).alias("k"),
-            F.expr("min_by(event_type, struct(-c, event_type))").alias("top"),
-            F.max(F.struct(F.col("c"), F.col("event_type"))).alias("m"),
-            F.expr("max(c)").alias("topn"),
-        )
-        .collect()
-    }
-    assert set(latest) == set(batch)
-    for uid, (n, k, top, topn) in batch.items():
-        assert latest[uid] == (n, k, top, topn), (uid, latest[uid], (n, k, top, topn))
 
 
 def test_foreachbatch_incremental_dedup_keeps_first_across_batches(
@@ -362,17 +306,14 @@ def test_stream_stream_left_join_matches_batch_on_closed_horizon(spark, sf_dir):
 
 
 def test_gs_user_type_profile_matches_batch(spark, sf_dir):
-    """applyInPandasWithState twin of the TWS profile (no protobuf
-    dependency, so this runs on EVERY build — the TWS variant's test
-    above is environment-gated): the last emitted per-user profile
-    must equal the batch aggregate (count, distinct types,
-    deterministic dominant type)."""
+    """The last emitted per-user profile must equal the batch
+    aggregate (count, distinct types, deterministic dominant type)."""
     from pyspark.sql import functions as F
 
-    from sqlondataframesr_spark.streaming.stateful import user_type_profile_gs
+    from sqlondataframesr_spark.streaming.stateful import user_type_profile
 
     got = _run_stream(
-        spark, user_type_profile_gs(W.stream_events(spark, sf_dir)), mode="update"
+        spark, user_type_profile(W.stream_events(spark, sf_dir)), mode="update"
     )
     latest = {}
     for r in got.collect():  # memory sink appends per batch; keep last

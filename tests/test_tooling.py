@@ -341,14 +341,14 @@ COPY_MIN_CHARS = 150
 
 
 def _code_lines(path: str) -> list[tuple[int, str]]:
-    """(line number, text) of each line that carries code: trailing
-    whitespace stripped; blank, comment-only and bracket/quote-only
-    lines skipped. Indentation is kept, so a block pasted at another
-    depth is not a copy."""
+    """(line number, text) of each line that carries code: leading and
+    trailing whitespace stripped, so a block pasted at another depth is
+    still a copy; blank, comment-only and bracket/quote-only lines
+    skipped."""
     with open(path, encoding="utf-8") as fh:
         numbered = list(enumerate(fh.read().splitlines(), 1))
     return [
-        (no, text.rstrip()) for no, text in numbered
+        (no, text.strip()) for no, text in numbered
         if re.search(r"\w", text) and not text.lstrip().startswith("#")
     ]
 
@@ -366,7 +366,7 @@ def test_no_copied_blocks():
         lines = _code_lines(path)
         for i in range(len(lines) - COPY_WINDOW + 1):
             window = lines[i:i + COPY_WINDOW]
-            if sum(len(text.strip()) for _, text in window) >= COPY_MIN_CHARS:
+            if sum(len(text) for _, text in window) >= COPY_MIN_CHARS:
                 key = "\n".join(text for _, text in window)
                 seen.setdefault(key, []).append(f"{rel}:{window[0][0]}")
     copies = sorted(sites for sites in seen.values() if len(sites) > 1)
