@@ -550,9 +550,9 @@ TASKS = {
 # (seed pinned, random.Random) generated under the system temp dir
 # by tmpcache.write_once, so a concurrent driver/pytest/bench process
 # never reads a half-written file. The oracle SQL is made
-# self-contained by prefixing CTE views
-# over read_csv_auto of the same CSVs — identical bytes feed both
-# engines, same differential contract as tests/test_stackexchange.py.
+# self-contained by prefixing CTE views over read_csv_auto of the
+# same CSVs — identical bytes feed both engines, same differential
+# contract as tests/test_stackexchange.py.
 
 
 def fixture_dir(scale: float = 1.0) -> str:
